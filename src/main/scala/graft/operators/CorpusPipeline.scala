@@ -5,24 +5,31 @@ import org.apache.spark.sql.functions._
 
 /** End-to-end training-corpus preparation — the composition a
   * training-data owner actually runs, built only from this library's
-  * individually-verified operators:
+  * individually-verified operators. ONE stage sequence, the map →
+  * shuffle → reduce shape of a MapReduce job:
   *
-  *   1. signal pass: quality score + language ID in ONE map-only scan
-  *      (expressions fused so the corpus is read once, not per signal)
-  *   2. filter: quality floor + language allowlist (map-only)
-  *   3. dedup ladder: exact (hash groupBy) → MinHash-LSH near-dup over
-  *      the keepers → transitive chain resolution (connected
-  *      components), keeping each dup cluster's smallest doc
+  *   1. fused scan ([[fusedScan]]): quality score + language ID, the
+  *      content digest and the MinHash signature in ONE map-only pass,
+  *      filtered by the quality floor + language allowlist
+  *   2. exact dedup: a keeper window over the content digest
+  *   3. near dedup: MinHash-LSH over the keepers' signatures →
+  *      transitive chain resolution (connected components), keeping
+  *      each dup cluster's smallest doc
   *   4. benchmark decontamination: drop docs sharing ≥ k shingles with
   *      any benchmark doc (benchmark side broadcasts)
   *   5. deterministic train/val/test split (salted-hash, map-only)
   *
-  * Every stage is a declarative plan; the only wide shuffles are the
-  * ones the algorithms require (dedup signature aggregation, candidate
-  * join, component propagation over the pair set). The optional audit
-  * recounts each stage — each count is an action that re-executes its
-  * lineage, so it defaults OFF and belongs in validation runs, not the
-  * 100 TB production pass.
+  * The only wide shuffles are the ones the algorithms require (keeper
+  * window, candidate join, component propagation over the pair set).
+  * Three entry points run that sequence and differ only in where its
+  * fan-out points live:
+  *
+  *   - [[prepare]] pins them in the session (persist), for single runs;
+  *   - [[prepareStaged]] writes the stage outputs to storage and reads
+  *     them back, so a retried run resumes at the first unfinished
+  *     stage — the 100 TB shape;
+  *   - [[prepareIncrement]] prepares a new batch against an existing
+  *     corpus's signature index; only its component resolution differs.
   */
 object CorpusPipeline {
 
@@ -42,134 +49,81 @@ object CorpusPipeline {
     * `stages` carries each stage's surviving frame (input → … → clean)
     * for attrition reporting — the same objects the pipeline composed,
     * so counting them reuses the pins. */
-  case class Result(corpus: DataFrame, audit: Seq[(String, Long)],
+  case class Result(corpus: DataFrame,
       pinned: Seq[DataFrame] = Nil,
       stages: Seq[(String, DataFrame)] = Nil,
       dropSets: Seq[(String, DataFrame)] = Nil) {
     def release(): Unit = pinned.foreach(_.unpersist(false))
   }
 
-  /** Quality + language signals fused into one scan: the same
-    * expressions as TextAnalysis.quality / langId (which stay separate
-    * because each is an oracle-verified query), evaluated together so
-    * the corpus is read once. */
-  def signals(docs: DataFrame): DataFrame = {
+  /** The signal projection: the token array `tk`, the exact-dedup
+    * content digest `h`, and the quality + language signals
+    * ([[TextAnalysis.qualityScore]], [[TextAnalysis.predLang]]) over
+    * the [[TextAnalysis.signalCounts]] stage. The token array flows
+    * BETWEEN the projections as a column, so the text is tokenized
+    * exactly once; a consumer that drops `h` or `tk` never computes
+    * it. */
+  private def scored(docs: DataFrame): DataFrame = {
     import TextAnalysis._
-    val base = docs
-      .select(col("doc_id"), col("text"), tokens(col("text")).as("tk"))
-      .select(col("doc_id"), col("text"), col("tk"),
-        length(col("text")).as("nc"),
-        size(col("tk")).as("nw_raw"),
-        length(regexp_replace(col("text"), "[^a-z]", "")).as("na"),
-        length(regexp_replace(col("text"), "[^.!?,;:]", "")).as("np"),
-        hitCount(col("tk"), EnStopwords).as("h_en"),
-        hitCount(col("tk"), EsStopwords).as("h_es"),
-        hitCount(col("tk"), FrStopwords).as("h_fr"),
-        hitCount(col("tk"), DeStopwords).as("h_de"),
-        hitCount(col("tk"), ZhStopwords).as("h_zh"))
-    val nWords = greatest(col("nw_raw"), lit(1))
-    val nChars = greatest(col("nc"), lit(1))
-    base.select(
-      col("doc_id"), col("text"),
-      (col("h_en").cast("double") / nWords * 0.4
-        + least(col("na").cast("double") / nWords / 10.0, lit(1.0)) * 0.3
-        + (lit(1.0) - col("np").cast("double") / nChars) * 0.3).as("quality_score"),
-      when(col("h_en") >= greatest(col("h_es"), col("h_fr"), col("h_de"), col("h_zh")), "en")
-        .when(col("h_es") >= greatest(col("h_fr"), col("h_de"), col("h_zh")), "es")
-        .when(col("h_fr") >= greatest(col("h_de"), col("h_zh")), "fr")
-        .when(col("h_de") >= col("h_zh"), "de")
-        .otherwise("zh").as("pred_lang"))
-  }
-
-  /** ONE fused corpus scan for the whole pipeline (round 9 stage
-    * fusion): quality + language signals, the exact-dedup content
-    * digest, and the MinHash signature (LSH minhashes + distinct
-    * shingle-hash set) all emitted from a single map-only pass. The
-    * token array flows BETWEEN the projections as a column, so the
-    * text is tokenized exactly once; the quality/language filter sits
-    * between scoring and signing, so dropped rows never pay the
-    * k-hash signing. Every expression is the SAME kernel its
-    * standalone operator uses (TextAnalysis signals, md5 digest,
-    * [[Dedup.signatures]]' row-local MinHashSig), so downstream values
-    * — and every oracle — are bit-identical to the unfused stages. */
-  private[graft] def fusedScan(docs: DataFrame, cfg: Config): DataFrame = {
-    import TextAnalysis._
-    val base = docs
+    docs
       .select(col("doc_id"), col("text"), tokens(col("text")).as("tk"),
         md5(encode(col("text"), "UTF-8")).as("h"))
+      .select(Seq(col("doc_id"), col("text"), col("tk"), col("h")) ++
+        signalCounts: _*)
       .select(col("doc_id"), col("text"), col("tk"), col("h"),
-        length(col("text")).as("nc"),
-        size(col("tk")).as("nw_raw"),
-        length(regexp_replace(col("text"), "[^a-z]", "")).as("na"),
-        length(regexp_replace(col("text"), "[^.!?,;:]", "")).as("np"),
-        hitCount(col("tk"), EnStopwords).as("h_en"),
-        hitCount(col("tk"), EsStopwords).as("h_es"),
-        hitCount(col("tk"), FrStopwords).as("h_fr"),
-        hitCount(col("tk"), DeStopwords).as("h_de"),
-        hitCount(col("tk"), ZhStopwords).as("h_zh"))
-    val nWords = greatest(col("nw_raw"), lit(1))
-    val nChars = greatest(col("nc"), lit(1))
-    val scored = base.select(
-      col("doc_id"), col("text"), col("tk"), col("h"),
-      (col("h_en").cast("double") / nWords * 0.4
-        + least(col("na").cast("double") / nWords / 10.0, lit(1.0)) * 0.3
-        + (lit(1.0) - col("np").cast("double") / nChars) * 0.3).as("quality_score"),
-      when(col("h_en") >= greatest(col("h_es"), col("h_fr"), col("h_de"), col("h_zh")), "en")
-        .when(col("h_es") >= greatest(col("h_fr"), col("h_de"), col("h_zh")), "es")
-        .when(col("h_fr") >= greatest(col("h_de"), col("h_zh")), "fr")
-        .when(col("h_de") >= col("h_zh"), "de")
-        .otherwise("zh").as("pred_lang"))
-    scored
+        qualityScore.as("quality_score"), predLang.as("pred_lang"))
+  }
+
+  /** Quality + language signals in one scan: the same expressions as
+    * TextAnalysis.quality / langId (which stay separate because each is
+    * an oracle-verified query), evaluated together so the corpus is
+    * read once. */
+  def signals(docs: DataFrame): DataFrame =
+    scored(docs).select(col("doc_id"), col("text"), col("quality_score"),
+      col("pred_lang"))
+
+  /** ONE fused corpus scan for the whole pipeline: the [[scored]]
+    * signals and digest plus the MinHash signature (LSH minhashes +
+    * distinct shingle-hash set) from a single map-only pass. The
+    * quality/language filter sits between scoring and signing, so
+    * dropped rows never pay the k-hash signing. Every expression is the
+    * SAME kernel its standalone operator uses (TextAnalysis signals,
+    * md5 digest, [[Dedup.signatures]]' row-local MinHashSig), so
+    * downstream values — and every oracle — are bit-identical to the
+    * unfused stages. */
+  private def fusedScan(docs: DataFrame, cfg: Config): DataFrame =
+    scored(docs)
       .where(col("quality_score") >= cfg.minQuality &&
         (if (cfg.langs.isEmpty) lit(true) else col("pred_lang").isin(cfg.langs.toSeq: _*)))
       .select(col("doc_id"), col("text"), col("h"),
         col("quality_score"), col("pred_lang"),
         graft.functions.MinHashSig.minhashSig(col("tk"), cfg.shingleN,
           cfg.numHashes).as("s"))
-  }
 
-  /** Run the full preparation. `benchmark` is the eval set to
-    * decontaminate against (None skips the stage).
+  /** The stage sequence every entry point runs. `keep(stage, frame)`
+    * decides where a stage's output lives — pinned, written and read
+    * back, or left lazy — and returns the frame the next stage reads;
+    * it sees "quality_lang", "exact_dedup", "near_dedup" and, with a
+    * benchmark, "decontaminated". `corpusIndex` switches on the
+    * incremental component resolution of [[prepareIncrement]].
     *
-    * The pipeline reads the corpus text ONCE ([[fusedScan]]); the
-    * exact-dedup keeper is one `row_number` window over the content
-    * digest (replacing the old aggregate + join-back — one exchange
-    * instead of three), the LSH stage consumes the scan's signatures
-    * ([[Dedup.minhashLshSigned]]) instead of re-tokenizing, and
-    * decontamination explodes the scan's distinct shingle-hash set
-    * instead of re-shingling the surviving corpus.
-    *
-    * `persistIntermediates` caches the two fan-out points (the signed
-    * post-window frame feeds the keeper filter AND the attrition
-    * counts; `deduped` feeds decontamination AND the result) with
-    * evictable MEMORY_AND_DISK storage. A 100 TB deployment should
-    * instead write those stage outputs to storage
-    * (Catalog.writeChunked) and read them back; the in-session persist
-    * is for single-run use. */
-  def prepare(docs: DataFrame, benchmark: Option[DataFrame] = None,
-      cfg: Config = Config(), audit: Boolean = false,
-      persistIntermediates: Boolean = true): Result = {
+    * The exact-dedup keeper is one `row_number` window over the content
+    * digest (one exchange, not an aggregate + join-back); the LSH stage
+    * consumes the scan's signatures ([[Dedup.minhashLshSigned]]) instead
+    * of re-tokenizing, and decontamination explodes the scan's distinct
+    * shingle-hash set instead of re-shingling the surviving corpus. */
+  private def run(docs: DataFrame, benchmark: Option[DataFrame], cfg: Config,
+      corpusIndex: Option[DataFrame],
+      keep: (String, DataFrame) => DataFrame): Result = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
-    val steps = Seq.newBuilder[(String, Long)]
-    def note(name: String, df: DataFrame): DataFrame = {
-      if (audit) steps += name -> df.count()
-      df
-    }
-    val pins = Seq.newBuilder[DataFrame]
-    def pin(df: DataFrame): DataFrame =
-      if (persistIntermediates) { pins += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
-      else df
-
-    note("input", docs)
-    // one corpus read: signals + digest + signatures in the pin.
+    // one corpus read: signals + digest + signatures.
     // (A pre-scan repartition to parallelize single-split inputs was
     // measured and REJECTED: at bench SF the extra exchange + stage
     // cost more than the single-core signing it spread out, and at
     // production scale the input has more splits than cores anyway.)
-    val filtered = note("after_quality_lang", pin(fusedScan(docs, cfg)))
+    val filtered = keep("quality_lang", fusedScan(docs, cfg))
     // exact-dedup losers (every non-min doc_id of a content-hash clone
-    // cluster) rank over a TWO-COLUMN projection of the pin — the only
+    // cluster) rank over a TWO-COLUMN projection of the scan — the only
     // thing that shuffles is (doc_id, h), never text or signatures —
     // and come back as a broadcast anti-join. Losers are O(clones):
     // broadcast-sized whenever exact dedup is feasible at all.
@@ -177,23 +131,36 @@ object CorpusPipeline {
       .withColumn("__rn",
         row_number().over(Window.partitionBy(col("h")).orderBy(col("doc_id"))))
       .where(col("__rn") > 1).select(col("doc_id"))
-    val unique = note("after_exact_dedup",
+    val unique = keep("exact_dedup",
       filtered.join(broadcast(losers), Seq("doc_id"), "left_anti"))
     val sigCols = col("doc_id") +:
       (0 until cfg.numHashes).map(i =>
         element_at(col("s.mh"), i + 1).as(s"mh$i")) :+ col("s.ss").as("ss")
-    val pairs = Dedup.minhashLshSigned(
-      unique.where(col("s").isNotNull).select(sigCols: _*),
+    val signed = unique.where(col("s").isNotNull).select(sigCols: _*)
+    val pairs = Dedup.minhashLshSigned(signed,
       cfg.numHashes, cfg.bands, cfg.jaccard, cfg.maxBucket)
     // [[Dedup.applyDedupTransitive]] inlined so the DROP SET is a named
     // frame: attrition counts it directly (each stage is a subset of
     // the previous, so survivor counts are running differences) instead
     // of recounting the stacked anti-joined frames
     val comp = Dedup.connectedComponents(pairs)
-    val nearDrops = comp.where(col("id") =!= col("component"))
+    val nonMin = comp.where(col("id") =!= col("component"))
       .select(col("id").as("doc_id"))
-    val deduped = note("after_near_dedup",
-      pin(unique.join(nearDrops, Seq("doc_id"), "left_anti")))
+    val nearDrops = corpusIndex.fold(nonMin) { index =>
+      // corpus priority: a batch component touching the corpus drops
+      // ENTIRELY (its representative already lives in the corpus);
+      // unpaired docs are their own component
+      val touched = Dedup.dedupAgainstIndexSigned(index, signed,
+          cfg.numHashes, cfg.bands, cfg.jaccard, cfg.maxBucket)
+        .select(col("new_id").as("doc_id"))
+        .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
+        .select(coalesce(col("component"), col("doc_id")).as("component"))
+      nonMin
+        .unionByName(comp.join(touched, "component").select(col("id").as("doc_id")))
+        .unionByName(touched.select(col("component").as("doc_id")))
+    }
+    val deduped = keep("near_dedup",
+      unique.join(nearDrops, Seq("doc_id"), "left_anti"))
 
     val (clean, flaggedSet) = benchmark match {
       case Some(bench) =>
@@ -210,20 +177,43 @@ object CorpusPipeline {
           .agg(count(lit(1)).as("n_shared"))
           .where(col("n_shared") >= cfg.minSharedShingles)
           .select(col("doc_id"))
-        (note("after_decontamination",
-          deduped.join(flagged, Seq("doc_id"), "left_anti")), Some(flagged))
+        (keep("decontaminated", deduped.join(flagged, Seq("doc_id"), "left_anti")),
+          Some(flagged))
       case None => (deduped, None)
     }
 
     // split assignment is a pure column — no join, stays map-only
     val split = clean.withColumn("split", Sampling.splitColumn(col("doc_id")))
       .drop("h", "s")
-    Result(split, steps.result(), pins.result(), Seq(
+    Result(split, Nil, Seq(
       "input" -> docs, "quality_lang" -> filtered, "exact_dedup" -> unique,
       "near_dedup" -> deduped, "decontaminated" -> clean),
       Seq("exact_losers" -> losers, "near_drops" -> nearDrops) ++
         flaggedSet.map("contaminated" -> _))
   }
+
+  /** The in-session keeper: pins the two fan-out points (the signed
+    * scan feeds the keeper window AND the anti-join; `near_dedup` feeds
+    * decontamination AND the result) with evictable MEMORY_AND_DISK
+    * storage, and records them for [[Result.release]]. */
+  private def inSession(docs: DataFrame, benchmark: Option[DataFrame], cfg: Config,
+      corpusIndex: Option[DataFrame]): Result = {
+    val pins = Seq.newBuilder[DataFrame]
+    val r = run(docs, benchmark, cfg, corpusIndex, {
+      case ("quality_lang" | "near_dedup", df) =>
+        pins += df
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      case (_, df) => df
+    })
+    r.copy(pinned = pins.result())
+  }
+
+  /** Run the full preparation in this session. `benchmark` is the eval
+    * set to decontaminate against (None skips the stage). Call
+    * [[Result.release]] once the corpus is consumed. */
+  def prepare(docs: DataFrame, benchmark: Option[DataFrame] = None,
+      cfg: Config = Config()): Result =
+    inSession(docs, benchmark, cfg, None)
 
   /** Attrition report — "where did my data go": surviving document
     * count after each stage. One MELTED counting pass (round 14):
@@ -277,16 +267,12 @@ object CorpusPipeline {
     * through them are seen). Corpus text is never re-read; corpus
     * membership never changes.
     *
-    *   1. signal pass + quality/language filter (map-only, batch only)
-    *   2. exact dedup WITHIN the batch
-    *   3. near-dup pairs within the batch (LSH over keepers)
-    *   4. cross flags: batch keepers sharing an LSH-verified pair with
-    *      ANY corpus signature ([[Dedup.dedupAgainstIndex]])
-    *   5. component resolution with corpus priority: a batch component
-    *      touching the corpus is dropped ENTIRELY (its representative
-    *      already lives in the corpus); a batch-only component keeps
-    *      its min id
-    *   6. decontamination + split, as in [[prepare]]
+    * The batch runs the [[prepare]] sequence (one fused scan signs it
+    * exactly ONCE for both the in-batch LSH and the index probe); only
+    * component resolution differs: batch keepers sharing an
+    * LSH-verified pair with ANY corpus signature
+    * ([[Dedup.dedupAgainstIndexSigned]]) drop with their whole batch
+    * component, and a batch-only component keeps its min id.
     *
     * When batch ids are newer than all corpus ids (the production
     * invariant), the admitted set EQUALS the batch rows of a monolithic
@@ -295,112 +281,39 @@ object CorpusPipeline {
     * Sign the admitted docs ([[Dedup.buildMinhashIndex]]) and append to
     * the index to absorb the batch. */
   def prepareIncrement(newDocs: DataFrame, corpusIndex: DataFrame,
-      benchmark: Option[DataFrame] = None, cfg: Config = Config(),
-      persistIntermediates: Boolean = true): Result = {
-    import org.apache.spark.storage.StorageLevel
-    val pins = Seq.newBuilder[DataFrame]
-    def pin(df: DataFrame): DataFrame =
-      if (persistIntermediates) { pins += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
-      else df
+      benchmark: Option[DataFrame] = None, cfg: Config = Config()): Result =
+    inSession(newDocs, benchmark, cfg, Some(corpusIndex))
 
-    // the batch rides the same fused scan as [[prepare]]: signals +
-    // digest + signature in one read, the batch signed exactly ONCE
-    // (both the in-batch LSH and the index probe reuse the scan's
-    // signatures — the unfused form re-signed the batch per consumer)
-    val filtered = pin(fusedScan(newDocs, cfg))
-    val losers = filtered.select(col("doc_id"), col("h"))
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("h")).orderBy(col("doc_id"))))
-      .where(col("__rn") > 1).select(col("doc_id"))
-    val unique = pin(filtered.join(broadcast(losers), Seq("doc_id"), "left_anti"))
-    val sigCols = col("doc_id") +:
-      (0 until cfg.numHashes).map(i =>
-        element_at(col("s.mh"), i + 1).as(s"mh$i")) :+ col("s.ss").as("ss")
-    val signed = unique.where(col("s").isNotNull).select(sigCols: _*)
-    val pairs = Dedup.minhashLshSigned(signed, cfg.numHashes,
-      cfg.bands, cfg.jaccard, cfg.maxBucket)
-    val crossIds = Dedup.dedupAgainstIndexSigned(corpusIndex, signed,
-      cfg.numHashes, cfg.bands, cfg.jaccard, cfg.maxBucket)
-      .select(col("new_id").as("doc_id")).distinct()
-
-    // batch components (unpaired docs are their own component), then
-    // corpus priority: kill whole components that touch the corpus
-    val comp = Dedup.connectedComponents(pairs)
-    val compAll = unique.select(col("doc_id"))
-      .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("component"))
-    val corpusComps = compAll.join(crossIds, "doc_id")
-      .select(col("component")).distinct()
-    val keepIds = compAll
-      .join(corpusComps, Seq("component"), "left_anti")
-      .groupBy(col("component")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-    val admitted = unique.join(keepIds, "doc_id")
-
-    val clean = benchmark match {
-      case Some(bench) =>
-        // decontamination from the scan's shingle sets, as in [[prepare]]
-        val benchShingles = Dedup.hashedShingles(bench, cfg.shingleN).distinct()
-          .select(col("h").as("sh"), col("doc_id").as("bench_id"))
-        val flagged = admitted
-          .select(col("doc_id"), explode(col("s.ss")).as("sh"))
-          .join(broadcast(benchShingles), "sh")
-          .groupBy(col("doc_id"), col("bench_id"))
-          .agg(count(lit(1)).as("n_shared"))
-          .where(col("n_shared") >= cfg.minSharedShingles)
-          .select(col("doc_id"))
-        admitted.join(flagged, Seq("doc_id"), "left_anti")
-      case None => admitted
-    }
-    val split = clean.withColumn("split", Sampling.splitColumn(col("doc_id")))
-      .drop("h", "s")
-    Result(split, Nil, pins.result())
-  }
-
-  /** Storage-checkpointed, RESUMABLE preparation — the 100 TB shape.
-    * Each stage's output is written to `stageDir/<stage>` and a stage
-    * is skipped (read back instead of recomputed) when its `_SUCCESS`
-    * marker exists, so a failure at stage N restarts at stage N, not at
-    * the raw corpus. The in-session [[prepare]] is for single-run use;
-    * this variant is what a scheduler retries. Stage outputs are plain
-    * parquet — inspectable, and a natural audit trail. */
+  /** Storage-checkpointed, RESUMABLE preparation — the 100 TB shape:
+    * the [[prepare]] sequence with its stage outputs written to
+    * `stageDir/<stage>` (`unique`, `deduped`, and `clean` when a
+    * benchmark is given) and read back. A stage is skipped (read back
+    * instead of recomputed) when its `_SUCCESS` marker exists, so a
+    * failure at stage N restarts at stage N, not at the raw corpus.
+    * Stage outputs are plain parquet — inspectable, and a natural audit
+    * trail. The scan is pinned as in [[prepare]] (it feeds both sides
+    * of the `unique` stage) and released before the return. */
   def prepareStaged(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
       stageDir: String, benchmark: Option[DataFrame] = None,
       cfg: Config = Config()): DataFrame = {
     import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration
-    def done(p: String): Boolean = {
-      val m = new Path(s"$p/_SUCCESS")
-      m.getFileSystem(conf).exists(m)
-    }
-    def stage(name: String)(build: => DataFrame): DataFrame = {
-      val p = s"$stageDir/$name"
-      if (!done(p)) build.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
-
-    val unique = stage("unique") {
-      val filtered = signals(docs)
-        .where(col("quality_score") >= cfg.minQuality &&
-          (if (cfg.langs.isEmpty) lit(true) else col("pred_lang").isin(cfg.langs.toSeq: _*)))
-      val keepers = Dedup.exact(filtered).select(col("keep_id").as("doc_id"))
-      filtered.join(keepers, "doc_id")
-    }
-    val deduped = stage("deduped") {
-      val pairs = Dedup.minhashLsh(unique, cfg.shingleN, cfg.numHashes,
-        cfg.bands, cfg.jaccard, cfg.maxBucket)
-      Dedup.applyDedupTransitive(unique, pairs)
-    }
-    val clean = benchmark match {
-      case Some(bench) => stage("clean") {
-        val flagged = Dedup.contamination(deduped, bench, cfg.shingleN, cfg.minSharedShingles)
-          .select(col("doc_id")).distinct()
-        deduped.join(flagged, Seq("doc_id"), "left_anti")
-      }
-      case None => deduped
-    }
-    clean.withColumn("split", Sampling.splitColumn(col("doc_id")))
+    val dirs = Map("exact_dedup" -> "unique", "near_dedup" -> "deduped",
+      "decontaminated" -> "clean")
+    val pins = Seq.newBuilder[DataFrame]
+    val r = run(docs, benchmark, cfg, None, {
+      case (stage, df) if dirs.contains(stage) =>
+        val p = s"$stageDir/${dirs(stage)}"
+        val done = new Path(s"$p/_SUCCESS")
+        if (!done.getFileSystem(conf).exists(done))
+          df.write.mode("overwrite").parquet(p)
+        spark.read.parquet(p)
+      case (_, df) =>
+        pins += df
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    })
+    pins.result().foreach(_.unpersist(false))
+    r.corpus
   }
 
   /** PUBLISH — the dataset-release verb: [[prepare]] the corpus, give

@@ -50,28 +50,55 @@ object TextAnalysis {
     // only if they're already split into stages)
     val base = docs
       .select(col("doc_id"), col("text"), tokens(col("text")).as("tk"))
-      .select(
-        col("doc_id"),
-        length(col("text")).as("nc"),
-        size(col("tk")).as("nw_raw"),
-        length(regexp_replace(col("text"), "[^a-z]", "")).as("na"),
-        length(regexp_replace(col("text"), "[^.!?,;:]", "")).as("np"),
-        hitCount(col("tk"), EnStopwords).as("sh"))
-    val nWords = greatest(col("nw_raw"), lit(1))
-    val nChars = greatest(col("nc"), lit(1))
+      .select(col("doc_id") +: signalCounts: _*)
     base.select(
       col("doc_id"),
       col("nc").as("n_chars_text"),
       col("nw_raw").as("n_words"),
       round6(col("na").cast("double") / nWords).as("avg_word_len"),
       round6(col("np").cast("double") / nChars).as("punct_ratio"),
-      round6(col("sh").cast("double") / nWords).as("stop_ratio"),
-      round6(
-        col("sh").cast("double") / nWords * 0.4
-          + least(col("na").cast("double") / nWords / 10.0, lit(1.0)) * 0.3
-          + (lit(1.0) - col("np").cast("double") / nChars) * 0.3
-      ).as("quality_score"))
+      round6(col("h_en").cast("double") / nWords).as("stop_ratio"),
+      round6(qualityScore).as("quality_score"))
   }
+
+  /** Stage 1 of the text signals: the base counts of a row's `text`
+    * and its token array `tk` — characters `nc`, words `nw_raw`, a–z
+    * letters `na`, punctuation marks `np`, and each language's stopword
+    * hits ([[langHits]]). [[qualityScore]] and [[predLang]] read these
+    * named columns in a second projection (see [[quality]]). */
+  def signalCounts: Seq[Column] = Seq(
+    length(col("text")).as("nc"),
+    size(col("tk")).as("nw_raw"),
+    length(regexp_replace(col("text"), "[^a-z]", "")).as("na"),
+    length(regexp_replace(col("text"), "[^.!?,;:]", "")).as("np")) ++ langHits
+
+  /** Stopword hits of the token array `tk` per language, `h_en` … `h_zh`. */
+  def langHits: Seq[Column] = Seq(
+    hitCount(col("tk"), EnStopwords).as("h_en"),
+    hitCount(col("tk"), EsStopwords).as("h_es"),
+    hitCount(col("tk"), FrStopwords).as("h_fr"),
+    hitCount(col("tk"), DeStopwords).as("h_de"),
+    hitCount(col("tk"), ZhStopwords).as("h_zh"))
+
+  private def nWords: Column = greatest(col("nw_raw"), lit(1))
+  private def nChars: Column = greatest(col("nc"), lit(1))
+
+  /** The composite quality score over the [[signalCounts]] columns:
+    * stopword rate, word shape and punctuation density. */
+  def qualityScore: Column =
+    col("h_en").cast("double") / nWords * 0.4 +
+      least(col("na").cast("double") / nWords / 10.0, lit(1.0)) * 0.3 +
+      (lit(1.0) - col("np").cast("double") / nChars) * 0.3
+
+  /** Stopword-hit language ID over the [[langHits]] columns:
+    * deterministic argmax with a fixed preference cascade
+    * (en > es > fr > de > zh) on ties. */
+  def predLang: Column =
+    when(col("h_en") >= greatest(col("h_es"), col("h_fr"), col("h_de"), col("h_zh")), "en")
+      .when(col("h_es") >= greatest(col("h_fr"), col("h_de"), col("h_zh")), "es")
+      .when(col("h_fr") >= greatest(col("h_de"), col("h_zh")), "fr")
+      .when(col("h_de") >= col("h_zh"), "de")
+      .otherwise("zh")
 
   val EnStopwords: Seq[String] =
     Seq("the", "a", "of", "and", "to", "is", "in", "that", "it", "as")
@@ -84,8 +111,7 @@ object TextAnalysis {
   val ZhStopwords: Seq[String] =
     Seq("的", "是", "在", "了", "和", "有", "我", "他", "这", "中")
 
-  /** Stopword-hit language ID. Deterministic argmax with a fixed
-    * preference cascade (en > es > fr > de > zh) on ties. */
+  /** Stopword-hit language ID ([[predLang]]). */
   def langId(docs: DataFrame): DataFrame = {
     // stage 1 tokenizes ONCE and counts each language's stopword hits
     // (codegen'd, see hitCount); the argmax cascade then reads plain
@@ -93,21 +119,11 @@ object TextAnalysis {
     val base = docs
       .select(col("doc_id"), col("lang").as("declared_lang"),
         tokens(col("text")).as("tk"))
-      .select(
-        col("doc_id"), col("declared_lang"),
-        hitCount(col("tk"), EnStopwords).as("h_en"),
-        hitCount(col("tk"), EsStopwords).as("h_es"),
-        hitCount(col("tk"), FrStopwords).as("h_fr"),
-        hitCount(col("tk"), DeStopwords).as("h_de"),
-        hitCount(col("tk"), ZhStopwords).as("h_zh"))
+      .select(col("doc_id") +: col("declared_lang") +: langHits: _*)
     base.select(
       col("doc_id"), col("declared_lang"),
       col("h_en"), col("h_es"), col("h_fr"), col("h_de"), col("h_zh"),
-      when(col("h_en") >= greatest(col("h_es"), col("h_fr"), col("h_de"), col("h_zh")), "en")
-        .when(col("h_es") >= greatest(col("h_fr"), col("h_de"), col("h_zh")), "es")
-        .when(col("h_fr") >= greatest(col("h_de"), col("h_zh")), "fr")
-        .when(col("h_de") >= col("h_zh"), "de")
-        .otherwise("zh").as("pred_lang"))
+      predLang.as("pred_lang"))
   }
 
   /** Per-SOURCE corpus statistics — the ingest dashboard: document

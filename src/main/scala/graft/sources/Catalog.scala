@@ -478,12 +478,19 @@ class Catalog(spark: SparkSession, baseDir: String,
       java.nio.charset.StandardCharsets.UTF_8).trim
       .split("\n").map(_.trim).filter(_.nonEmpty)
     finally in.close()
+    // a listed segment at neither place is lost: fail with the intent
+    // (and the backup) still in place instead of dropping it silently
     names.foreach { seg =>
       val dst = new Path(live, seg)
       val src = new Path(bak, seg)
-      if (!fs.exists(dst) && fs.exists(src) && !fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"scd2Backfill($name): pull of untouched segment $seg failed")
+      if (!fs.exists(dst)) {
+        if (!fs.exists(src))
+          throw new java.io.IOException(
+            s"scd2Backfill($name): untouched segment $seg is in neither $live nor $bak")
+        if (!fs.rename(src, dst))
+          throw new java.io.IOException(
+            s"scd2Backfill($name): pull of untouched segment $seg failed")
+      }
     }
     fs.delete(intent, false): Unit
   }
@@ -1423,8 +1430,10 @@ class Catalog(spark: SparkSession, baseDir: String,
 
   /** Per-instance memo of each text index's positional grain (fixed at
     * build time; compaction preserves it) so streaming upserts don't
-    * re-probe the postings footer every microbatch. Seeded by the
-    * builders, invalidated by [[dropDerived]]. */
+    * re-probe the postings footer every microbatch. Cleared when a
+    * build starts and seeded only once its last part has committed (a
+    * failed rebuild may leave either grain live, so the next upsert
+    * re-probes the footer), invalidated by [[dropDerived]]. */
   private val textPositional =
     scala.collection.concurrent.TrieMap[String, Boolean]()
 
@@ -1449,6 +1458,7 @@ class Catalog(spark: SparkSession, baseDir: String,
     // segments behind: loadTextIndex unions every committed *_seg_b*
     // part, so stale segments would silently double-count df/dl and
     // the folded stats against the fresh base
+    textPositional.remove(name)
     val root = new Path(s"$derivedDir/$name")
     val fs = root.getFileSystem(hconf)
     if (fs.exists(root))
@@ -1464,7 +1474,6 @@ class Catalog(spark: SparkSession, baseDir: String,
     val post = (if (positional) TextAnalysis.textPostingsPositional(docs)
       else TextAnalysis.textPostings(docs))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    textPositional.put(name, positional): Unit
     try commitIndexPart(name, "postings",
       post.repartitionByRange(col("term"))
         .sortWithinPartitions(col("term")))
@@ -1477,6 +1486,7 @@ class Catalog(spark: SparkSession, baseDir: String,
     commitIndexPart(name, "dl",
       spark.read.parquet(s"$derivedDir/$name/postings")
         .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
+    textPositional.put(name, positional): Unit
   }
 
   /** O(Δ) index maintenance: ONLY the new documents are tokenized;
@@ -1685,6 +1695,7 @@ class Catalog(spark: SparkSession, baseDir: String,
       nBuckets: Int = 64, positional: Boolean = false): Unit = {
     import graft.operators.TextAnalysis
     recoverBucketedTextIndex(name)
+    textPositional.remove(name)
     textSegIds(name).foreach(id =>
       spark.sql(s"DROP TABLE IF EXISTS `${textTable(name, Some(id))}`"))
     val root = new Path(s"$derivedDir/$name")
@@ -1695,7 +1706,6 @@ class Catalog(spark: SparkSession, baseDir: String,
         .foreach(s => fs.delete(s.getPath, true))
     val post = if (positional) TextAnalysis.textPostingsPositional(docs)
       else TextAnalysis.textPostings(docs)
-    textPositional.put(name, positional): Unit
     writeBucketed(post, textTable(name), "term", nBuckets)
     // dl from the COMMITTED bucketed postings (dl = Σ tf per doc —
     // identical integer and row set): one corpus tokenize per build,
@@ -1703,6 +1713,7 @@ class Catalog(spark: SparkSession, baseDir: String,
     commitIndexPart(name, "dl",
       spark.table(textTable(name))
         .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
+    textPositional.put(name, positional): Unit
   }
 
   /** O(Δ) maintenance of the bucketed index: only the new docs are

@@ -14,10 +14,13 @@ class StagedPipelineSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-stage").toString
     val cfg = CorpusPipeline.Config(minQuality = 0.2)
 
-    val staged = CorpusPipeline.prepareStaged(spark, input, dir, bench, cfg)
-      .select($"doc_id", $"split").as[(Long, String)].collect().toSet
-    val inMem = CorpusPipeline.prepare(input, bench, cfg).corpus
-      .select($"doc_id", $"split").as[(Long, String)].collect().toSet
+    // every output column must match, not only the split assignment
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"doc_id", $"text", $"quality_score", $"pred_lang", $"split")
+        .as[(Long, String, Double, String, String)].collect().toSet
+    val staged = rows(CorpusPipeline.prepareStaged(spark, input, dir, bench, cfg))
+    val res = CorpusPipeline.prepare(input, bench, cfg)
+    val inMem = try rows(res.corpus) finally res.release()
     assert(staged == inMem)
 
     // resume: completed stage outputs are read back, not rewritten —
@@ -25,8 +28,7 @@ class StagedPipelineSpec extends SparkSpec {
     val uniqFile = new java.io.File(s"$dir/unique").listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     val mtime = uniqFile.lastModified()
-    val again = CorpusPipeline.prepareStaged(spark, input, dir, bench, cfg)
-      .select($"doc_id", $"split").as[(Long, String)].collect().toSet
+    val again = rows(CorpusPipeline.prepareStaged(spark, input, dir, bench, cfg))
     assert(again == inMem)
     assert(uniqFile.lastModified() == mtime, "completed stage was recomputed on resume")
   }
@@ -56,16 +58,16 @@ class CorpusPipelineSpec extends SparkSpec {
     val bench = docs.where($"doc_id" < 20)
     val corpus = docs.where($"doc_id" >= 20)
     val cfg = CorpusPipeline.Config(minQuality = 0.2)
-    val res = CorpusPipeline.prepare(corpus, Some(bench), cfg, audit = true)
+    val res = CorpusPipeline.prepare(corpus, Some(bench), cfg)
     val out = res.corpus
     out.cache()
 
-    // audit counts exist and never grow
-    val audit = res.audit
-    assert(audit.map(_._1) == Seq("input", "after_quality_lang",
-      "after_exact_dedup", "after_near_dedup", "after_decontamination"))
-    assert(audit.map(_._2).sliding(2).forall(p => p(1) <= p(0)))
-    assert(out.count() > 0 && out.count() == audit.last._2)
+    // stage counts exist and never grow
+    val counts = res.stages.map { case (stage, df) => stage -> df.count() }
+    assert(counts.map(_._1) == Seq("input", "quality_lang",
+      "exact_dedup", "near_dedup", "decontaminated"))
+    assert(counts.map(_._2).sliding(2).forall(p => p(1) <= p(0)))
+    assert(out.count() > 0 && out.count() == counts.last._2)
 
     // quality floor respected; split column total and rough proportions
     assert(out.where($"quality_score" < 0.2).count() == 0)
@@ -82,5 +84,6 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(Dedup.contamination(out, bench, cfg.shingleN,
       cfg.minSharedShingles).count() == 0)
     out.unpersist()
+    res.release()
   }
 }

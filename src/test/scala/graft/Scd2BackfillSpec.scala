@@ -124,4 +124,27 @@ class Scd2BackfillSpec extends SparkSpec {
       expect((1L, 10L, "u", "a"), (1L, 15L, "u", "mid"), (1L, 20L, "u", "b"),
         (2L, 5L, "u", "x"), (2L, 8L, "u", "y"), (2L, 12L, "u", "z")))
   }
+
+  test("a pulled segment lost from the backup fails recovery and keeps the intent") {
+    val cat = freshCat()
+    cat.refreshScd2Mv("m", chg((1L, 10L, "u", "a"), (1L, 20L, "u", "b"),
+      (2L, 5L, "u", "x"), (2L, 8L, "u", "y")), "k", "seq", "op", 0L)
+    cat.refreshScd2Mv("m", chg((2L, 12L, "u", "z")), "k", "seq", "op", 1L)
+    cat.scd2Backfill("m", chg((1L, 15L, "u", "mid")), "k", "seq", "op")
+    // the state a crash between the install and the pull leaves: the
+    // untouched segment parked in the backup, the pull intent pending
+    val live = new java.io.File(s"${cat.derivedDir}/m")
+    val bak = new java.io.File(s"${cat.derivedDir}/m.bak")
+    assert(bak.mkdir())
+    val seg = new java.io.File(bak, "closed_seg_b1")
+    assert(new java.io.File(live, "closed_seg_b1").renameTo(seg))
+    val intent = new java.io.File(live, "_backfill_pull")
+    java.nio.file.Files.writeString(intent.toPath, "closed_seg_b1")
+    // ... and the parked segment is then deleted from the backup
+    seg.listFiles().foreach(_.delete())
+    assert(seg.delete())
+    val err = intercept[java.io.IOException](cat.scd2MvHistory("m", "seq", "op"))
+    assert(err.getMessage.contains("closed_seg_b1"))
+    assert(intent.exists(), "the pull intent was dropped with its segment lost")
+  }
 }

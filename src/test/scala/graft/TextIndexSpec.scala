@@ -27,6 +27,21 @@ class TextIndexSpec extends SparkSpec {
       hits(TextAnalysis.bm25(docs, query)))
   }
 
+  test("a failed rebuild with the other grain leaves upserts on the live grain") {
+    val docs = Tables.documents(spark, sfDir)
+    val cat = freshCat()
+    cat.buildTextIndex("tg", docs.where(col("doc_id") % 3 =!= 0), positional = true)
+    // a non-positional rebuild whose docs throw while the postings write
+    val poisoned = docs.withColumn("text",
+      expr("CASE WHEN doc_id >= 0 THEN raise_error('poisoned doc') ELSE text END"))
+    intercept[Exception](cat.buildTextIndex("tg", poisoned))
+    cat.upsertTextIndex("tg", docs.where(col("doc_id") % 3 === 0), 1L)
+    def fields(part: String) = spark.read.parquet(s"${cat.derivedDir}/tg/$part")
+      .schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
+    assert(fields("postings").map(_._1).contains("positions"))
+    assert(fields("postings_seg_b1") == fields("postings"))
+  }
+
   test("upserted index equals the monolithic rebuild (stats fold losslessly)") {
     val docs = Tables.documents(spark, sfDir)
     val cat = freshCat()

@@ -8,6 +8,9 @@
 #      — a smoke of the driver's real gate (which runs at sf0.01) —
 #      and graft.PlanAuditSpec runs so a new driver entry can never
 #      ship with an unaudited plan shape (the round-8 failure class).
+#      A staged change to the corpus-prep operators (CorpusPipeline,
+#      TextAnalysis) runs their specs and re-drives the SparkEntry
+#      entries built on them the same way.
 #   3. The checks run against the STAGED snapshot: if any staged
 #      .scala/.sbt file also has unstaged edits, the index is
 #      materialized via git checkout-index into a temp dir and checked
@@ -50,15 +53,32 @@ echo "precommit: sbt compile..." >&2
   exit 1
 }
 
+prep_re='operators/(CorpusPipeline|TextAnalysis)\.scala'
+if grep -qE "$prep_re" <<<"$staged"; then
+  echo "precommit: corpus-prep specs..." >&2
+  (cd "$checkdir" && sbt -batch "testOnly graft.CorpusPipelineSpec graft.StagedPipelineSpec graft.PrepareIncrementSpec graft.AttritionSpec" < /dev/null) \
+      > /tmp/precommit_prep.log 2>&1 || {
+    tail -30 /tmp/precommit_prep.log >&2
+    echo "precommit: REFUSED — corpus-prep specs failed" >&2
+    exit 1
+  }
+fi
+
 # Driver-entry smoke: any query name whose SparkEntry line is in the
 # staged diff gets re-driven against the oracle, and the plan audit
 # runs over the full driver surface.
-if grep -q 'SparkEntry.scala' <<<"$staged"; then
+# Corpus-prep operator changes re-drive the entries that run them.
+if grep -qE "SparkEntry\.scala|$prep_re" <<<"$staged"; then
   # the greps legitimately match nothing when the diff only touches
   # oracle SQL bodies or comments — don't let pipefail kill the hook
   touched=$(git diff --cached -U0 -- src/main/scala/graft/SparkEntry.scala \
     | { grep -E '^[+-]' || true; } | { grep -oE '"[a-z0-9_]+" *->' || true; } \
     | tr -d '" ' | sed 's/->$//' | sort -u | paste -sd, -)
+  entries=$touched
+  if grep -qE "$prep_re" <<<"$staged"; then
+    touched=$(tr , '\n' <<<"$touched,d_corpus_prep,d_prep_attrition,t_quality,t_lang_id,d_source_stats,d_quality_stream" \
+      | sed '/^$/d' | sort -u | paste -sd, -)
+  fi
   if [[ -n "$touched" ]]; then
     echo "precommit: oracle smoke on touched entries: $touched" >&2
     out=$(mktemp -d /tmp/precommit_verify.XXXX)
@@ -85,6 +105,8 @@ if grep -q 'SparkEntry.scala' <<<"$staged"; then
       exit 1
     }
     rm -rf "$out"
+  fi
+  if [[ -n "$entries" ]]; then
     echo "precommit: plan audit (graft.PlanAuditSpec)..." >&2
     (cd "$checkdir" && sbt -batch "testOnly graft.PlanAuditSpec" < /dev/null) \
         > /tmp/precommit_audit.log 2>&1 || {

@@ -207,7 +207,6 @@ object SparkEntry {
     "e_range_join" -> ((s, d) => Events.purchaseViewsWithin(Tables.events(s, d))),
     "e_json" -> ((s, d) => Events.propsHistogram(Tables.events(s, d))),
     "e_interval_join" -> ((s, d) => Events.maintenanceWindowCounts(Tables.events(s, d))),
-    "e_interval_auto" -> ((s, d) => Events.maintenanceWindowCountsAuto(Tables.events(s, d))),
     "e_funnel" -> ((s, d) => Events.funnel(Tables.events(s, d))),
     // path mining: which event-type orders actually happen (funnel
     // checks ONE hypothesized order; this surfaces the real ones)
@@ -850,11 +849,22 @@ object SparkEntry {
     }),
     "q_salted_agg" -> ((s, d) =>
       Skew.saltedAgg(Tables.lineitem(s, d), "l_returnflag", "l_extendedprice")),
-    // measured auto-salt: preflight registers l_returnflag's skew
-    // ratio, AutoSaltRewrite salts the plain-spelled join, the plain
-    // join's oracle verifies the rewrite preserved semantics
-    "q_salted_auto" -> ((s, d) =>
-      Skew.autoSaltedFlagRevenue(Tables.lineitem(s, d))),
+    // revenue per flag label through a derived 3-value flag dimension:
+    // a hot-key join (each key owns ~1/3 of the facts), salted 8 ways;
+    // the plain join's oracle verifies the salting preserved semantics
+    "q_salted_join" -> ((s, d) => {
+      import org.apache.spark.sql.functions.{col, concat, count, lit, sum}
+      import graft.functions.Exact.cents
+      val lineitem = Tables.lineitem(s, d)
+      val li = lineitem.select(col("l_returnflag"),
+        cents(col("l_extendedprice")).as("price_c"))
+      val dim = lineitem.select(col("l_returnflag")).distinct()
+        .withColumn("flag_label", concat(lit("flag_"), col("l_returnflag")))
+      Skew.saltedJoin(li, dim, "l_returnflag", 8)
+        .groupBy(col("flag_label"))
+        .agg(count(lit(1)).as("n_lines"),
+          (sum(col("price_c")).cast("double") / 100.0).as("revenue"))
+    }),
     // E. storage engine introspection (DFS cluster-stats analog)
     "fs_stats" -> ((s, d) => new graft.sources.Catalog(s, d).rowCounts()),
     // hive-partitioned layout: the status filter is answered from the
@@ -1445,16 +1455,6 @@ object SparkEntry {
       """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n_copies
          FROM documents GROUP BY md5(text)""",
     "e_interval_join" ->
-      """WITH e AS (SELECT event_id, epoch_us(ts) AS tsu FROM events),
-         h AS (SELECT DISTINCT tsu // 3600000000 AS h FROM e
-               WHERE (tsu // 3600000000) % 7 = 0),
-         iv AS (SELECT h AS interval_id, h * 3600000000 AS s,
-                       h * 3600000000 + 900000000 AS en FROM h)
-         SELECT interval_id, count(*) AS n_events
-         FROM iv JOIN e ON tsu >= s AND tsu < en
-         GROUP BY interval_id""",
-    // the auto-rewritten naive range join computes the same thing
-    "e_interval_auto" ->
       """WITH e AS (SELECT event_id, epoch_us(ts) AS tsu FROM events),
          h AS (SELECT DISTINCT tsu // 3600000000 AS h FROM e
                WHERE (tsu // 3600000000) % 7 = 0),
@@ -2889,10 +2889,10 @@ object SparkEntry {
                           / CAST(max(CASE WHEN rn = 64 THEN h END) AS DOUBLE)
                 END AS est_parts
          FROM rp GROUP BY l_returnflag""",
-    // the auto-salted join's oracle is the PLAIN join (collapsed to the
+    // the salted join's oracle is the PLAIN join (collapsed to the
     // equivalent direct aggregate — the dim holds every flag by
-    // construction): the rewrite must be invisible in the values
-    "q_salted_auto" ->
+    // construction): the salting must be invisible in the values
+    "q_salted_join" ->
       """SELECT concat('flag_', l_returnflag) AS flag_label,
                 count(*) AS n_lines,
                 CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS revenue

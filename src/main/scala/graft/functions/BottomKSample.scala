@@ -89,5 +89,5 @@ object BottomKSample {
   // already turns `row_number() ≤ k` into a bounded PARTIAL group-limit
   // before the exchange (same O(groups×k) map-side bound), stays in
   // whole-stage codegen, and beat the typed aggregate 4× in the
-  // many-group regime. See Sampling.capPerGroup + SkewSmoke.
+  // many-group regime. See Sampling.capPerGroup.
 }

@@ -136,7 +136,9 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session extensions registering graft's native SQL functions.
+/** Session extensions registering graft's native SQL functions, its
+  * table functions and the as-of join planner strategy. No optimizer
+  * rule is injected: Spark's own optimizer plans every query.
   * Wire with `SparkSession.builder().withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -178,10 +180,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
       (exprs: Seq[Expression]) => MinHashSig(exprs)))
     ext.injectFunction((
-      new FunctionIdentifier("vector_lsh_bands"),
-      new ExpressionInfo(classOf[VectorLshBands].getName, "vector_lsh_bands"),
-      (exprs: Seq[Expression]) => VectorLshBands(exprs)))
-    ext.injectFunction((
       new FunctionIdentifier("bloom_contains"),
       new ExpressionInfo(classOf[BloomContains].getName, "bloom_contains"),
       (exprs: Seq[Expression]) => BloomContains(exprs)))
@@ -190,10 +188,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[DecayedSum].getName, "decayed_sum"),
       (exprs: Seq[Expression]) => DecayedSum(exprs(0), exprs(1))))
     TableFunctions.register(ext)
-    ext.injectOptimizerRule(session => graft.plans.ApproximateRewrite(session))
-    ext.injectOptimizerRule(session => graft.plans.RangeJoinRewrite(session))
-    ext.injectOptimizerRule(session => graft.plans.AutoLadderRewrite(session))
-    ext.injectOptimizerRule(session => graft.plans.AutoSaltRewrite(session))
     ext.injectPlannerStrategy(session => new graft.plans.AsOfJoinStrategy(session))
   }
 }

@@ -235,58 +235,20 @@ object Events {
     * overlaps, the join key is the cell, and the exact range predicate
     * filters co-partitioned rows. Shuffle is O(events + Σ span/bucket);
     * no nested loop at any scale. `intervals` needs
-    * (interval_id, start_us, end_us); events join on `tsu` (epoch µs). */
+    * (interval_id, start_us, end_us); events join on `tsu` (epoch µs).
+    * An empty or reversed interval (`start_us >= end_us`) contains no
+    * point, so it is dropped before the explode: `sequence` would
+    * otherwise build the whole DESCENDING cell range for it. */
   def intervalJoin(events: DataFrame, intervals: DataFrame,
       bucketUs: Long): DataFrame = {
     val ev = events.withColumn("cell", expr(s"tsu div $bucketUs"))
     val iv = intervals
+      .where(col("start_us") < col("end_us"))
       .withColumn("cell",
         explode(sequence(expr(s"start_us div $bucketUs"), expr(s"end_us div $bucketUs"))))
     ev.join(iv, Seq("cell"))
       .where(col("tsu") >= col("start_us") && col("tsu") < col("end_us"))
       .drop("cell")
-  }
-
-  /** [[maintenanceWindowCounts]] written as the NAIVE point-in-interval
-    * theta join — no equi key, the shape Spark alone can only plan as a
-    * nested loop — and optimized by
-    * [[graft.plans.RangeJoinRewrite]]: the DECLARED plan stays the
-    * obvious one, the EXECUTED plan is the binned equi-join. Same
-    * results as the hand-binned operator, same oracle.
-    *
-    * The enabling conf (`spark.graft.rangeJoin.bucket`) is SCOPED to
-    * this call, not left on the session: the rule reads conf at
-    * optimization time, so we set it, force optimization eagerly, put
-    * the previous value back in a finally, and return the already-
-    * rewritten logical plan (re-optimizing a rewritten plan is a no-op
-    * for this rule — the binned join carries an equality conjunct, which
-    * the rule skips). A session-level leak here would silently re-plan
-    * (or, via the maxCells guard, fail) every later wide theta join in
-    * the session just because this operator ran once. */
-  def maintenanceWindowCountsAuto(events: DataFrame,
-      bucketUs: Long = 900000000L): DataFrame = {
-    val e = events.select(col("event_id"), unix_micros(col("ts")).as("tsu"))
-    val intervals = e
-      .select(expr("tsu div 3600000000").as("h")).distinct()
-      .where(pmod(col("h"), lit(7)) === 0)
-      .select(col("h").as("interval_id"),
-        (col("h") * 3600000000L).as("start_us"),
-        (col("h") * 3600000000L + 900000000L).as("end_us"))
-    val naive = e
-      .join(intervals, col("tsu") >= col("start_us") && col("tsu") < col("end_us"))
-      .groupBy(col("interval_id"))
-      .agg(count(lit(1)).as("n_events"))
-    val spark = events.sparkSession
-    val confKey = "spark.graft.rangeJoin.bucket"
-    val previous = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, bucketUs.toString)
-    val optimized =
-      try naive.queryExecution.optimizedPlan
-      finally previous match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None => spark.conf.unset(confKey)
-      }
-    org.apache.spark.sql.graftbridge.Bridge.ofRows(spark, optimized)
   }
 
   /** Events inside deterministic "maintenance windows" (first 15 min of

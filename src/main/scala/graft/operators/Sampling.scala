@@ -233,9 +233,9 @@ object Sampling {
     * InferWindowGroupLimit rewrites rank-limit filters into a
     * WindowGroupLimit PARTIAL operator that runs BEFORE the exchange,
     * so each map task forwards at most k rows per group and a 50%-hot
-    * source ships the same bytes as a cold one (measured in SkewSmoke:
-    * 0.5 MiB shuffled for a 20M-row half-hot corpus, vs hundreds with
-    * the rule excluded). A hand-rolled bounded-heap aggregate was
+    * source ships the same bytes as a cold one (measured: 0.5 MiB
+    * shuffled for a 20M-row half-hot corpus, vs hundreds with the rule
+    * excluded). A hand-rolled bounded-heap aggregate was
     * built, measured equal here and 4× SLOWER in the many-group regime
     * (typed aggregates leave whole-stage codegen and fall back to
     * sort-based aggregation past ~128 distinct groups per task), and

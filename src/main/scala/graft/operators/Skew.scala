@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities for joins whose key distribution is heavy-
@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions._
   * runtime; saltedJoin is the explicit form for when the skew is known
   * ahead of time or AQE can't apply (e.g., aggregations after the join
   * need the salt anyway, or non-sort-merge plans).
+  * [[graft.sources.Catalog.skewCard]] measures a key's shuffle skew;
+  * the caller decides whether to salt.
   */
 object Skew {
 
@@ -45,127 +47,6 @@ object Skew {
     salted
       .join(replicated, Seq(key, "__salt"))
       .drop("__salt")
-  }
-
-  /** HOT-KEY REGISTRY feeding [[graft.plans.AutoSaltRewrite]]: the
-    * measured skew ratio per join-key column name (lower-cased),
-    * SCOPED PER SESSION — one user arming the rewrite never salts
-    * another session's joins (the registry is a weak map on the
-    * SparkSession, so it also dies with the session instead of
-    * outliving it JVM-wide). The production flow is preflight-then-
-    * plan — [[preflight]] runs the bounded
-    * [[graft.sources.Catalog.skewCard]] measurement once per key
-    * (O(nBuckets) result, one pass over the frame) and records the
-    * ratio here; the optimizer rule then salts every LATER join on
-    * that key automatically, so the decision is driven by MEASUREMENT,
-    * not by a caller hand-naming hot keys. Keys are column names
-    * because the rewrite matches join conditions, which see
-    * attributes, not tables; an optional SCOPE (an alias/table
-    * qualifier) narrows a registration to attributes actually
-    * qualified with it, for sessions where one column name spans
-    * differently-skewed tables. */
-  private val hotKeys = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, (Double, Option[String])]]()
-
-  private def registry(spark: SparkSession) = hotKeys.synchronized {
-    var m = hotKeys.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent.TrieMap[String, (Double, Option[String])]()
-      hotKeys.put(spark, m)
-    }
-    m
-  }
-
-  /** Measured skew ratio for a key column in THIS session, if
-    * preflighted — and, when the registration carried a scope, only
-    * for attributes whose qualifier includes it. */
-  def hotRatio(spark: SparkSession, keyName: String,
-      qualifier: Seq[String] = Nil): Option[Double] =
-    registry(spark).get(keyName.toLowerCase(java.util.Locale.ROOT))
-      .collect {
-        case (ratio, None) => ratio
-        case (ratio, Some(scope))
-            if qualifier.exists(_.equalsIgnoreCase(scope)) => ratio
-      }
-
-  /** Record a measured ratio (normally via [[preflight]]). */
-  def registerHot(spark: SparkSession, keyName: String, ratio: Double,
-      scope: Option[String] = None): Unit =
-    registry(spark)
-      .put(keyName.toLowerCase(java.util.Locale.ROOT), (ratio, scope)): Unit
-
-  /** Drop one recorded ratio — pair every demo/preflight with this in
-    * a finally so a measurement never outlives its use site. */
-  def unregisterHot(spark: SparkSession, keyName: String): Unit =
-    registry(spark).remove(keyName.toLowerCase(java.util.Locale.ROOT)): Unit
-
-  /** Drop this session's recorded ratios (spec hygiene / re-measure). */
-  def clearHotKeys(spark: SparkSession): Unit = registry(spark).clear()
-
-  /** Run the shuffle-skew preflight for `keyName` on `df` and register
-    * the measured ratio in `df`'s session: max-bucket/avg-bucket over
-    * `nBuckets` hash-partitions — exactly the imbalance the key's
-    * shuffle will exhibit (1.0 = even). `scope` narrows the armed
-    * rewrite to attributes qualified with the given alias/table name.
-    * Returns the ratio. */
-  def preflight(df: DataFrame, keyName: String, nBuckets: Int = 32,
-      scope: Option[String] = None): Double = {
-    val ratio = graft.sources.Catalog.skewCard(df, col(keyName), nBuckets)
-      .select("skew_ratio").head().getDouble(0)
-    registerHot(df.sparkSession, keyName, ratio, scope)
-    ratio
-  }
-
-  /** End-to-end demo of the MEASURED auto-salt flow, written as the
-    * PLAIN join (revenue per flag label through a derived 3-value flag
-    * dimension — a textbook hot-key join: each of the 3 keys owns ~⅓
-    * of the fact table, so an unsalted shuffle pins 3 reducers):
-    * [[preflight]] measures `l_returnflag`'s bucket skew (≈ 32/3 ≳ 10×
-    * on any real split), the registered ratio arms
-    * [[graft.plans.AutoSaltRewrite]], and the EXECUTED plan is the
-    * salted join — verified against the plain join's oracle, because
-    * the rewrite is semantics-preserving.
-    *
-    * Conf scoping follows `Events.maintenanceWindowCountsAuto`: set,
-    * optimize eagerly, restore in a finally, return the already-
-    * rewritten plan. `maxBroadcastBytes` is pinned to 0 (guard off)
-    * for the demo because at driver scale the 3-row dimension's file-
-    * derived size estimate is unstable across testdata regenerations —
-    * the guard's no-fire behavior is spec-pinned separately. The
-    * require() makes a silent no-fire a loud failure rather than a
-    * vacuous pass of the plain plan. */
-  def autoSaltedFlagRevenue(lineitem: DataFrame, factor: Int = 8): DataFrame = {
-    import graft.functions.Exact.cents
-    val li = lineitem.select(col("l_returnflag"),
-      cents(col("l_extendedprice")).as("price_c"))
-    val dim = lineitem.select(col("l_returnflag")).distinct()
-      .withColumn("flag_label", concat(lit("flag_"), col("l_returnflag")))
-    val plain = li.join(dim, "l_returnflag")
-      .groupBy(col("flag_label"))
-      .agg(count(lit(1)).as("n_lines"),
-        (sum(col("price_c")).cast("double") / 100.0).as("revenue"))
-    val spark = lineitem.sparkSession
-    preflight(li, "l_returnflag")
-    val scoped = Seq(
-      "spark.graft.autoSalt.factor" -> factor.toString,
-      "spark.graft.autoSalt.maxBroadcastBytes" -> "0")
-    val previous = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    val optimized =
-      try plain.queryExecution.optimizedPlan
-      finally {
-        previous.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-        // the measurement must not outlive the demo: a registration
-        // left armed would salt every later same-named join key in
-        // this session
-        unregisterHot(spark, "l_returnflag")
-      }
-    require(optimized.toString.contains("__graft_salt"),
-      "auto-salt rewrite did not fire on the measured hot key")
-    org.apache.spark.sql.graftbridge.Bridge.ofRows(spark, optimized)
   }
 
   /** Two-stage salted aggregation for skewed group keys: stage 1

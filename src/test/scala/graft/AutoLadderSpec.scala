@@ -1,105 +1,12 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
-/** The auto-ladder: (a) the opt-in [[graft.plans.AutoLadderRewrite]]
-  * optimizer rule that turns large cosine-threshold theta joins (the
-  * BNLJ all-pairs shape) into hyperplane-LSH banded equi-joins for
-  * DataFrame AND SQL users, and (b) the size-routed entry points
-  * ([[Dedup.nearDupAuto]] / [[Dedup.containmentAuto]]) that walk
-  * exact→LSH/capped ladders by corpus size. Together they retire the
-  * "quadratic formulation is still reachable at scale" caveat.
-  */
-class AutoLadderSpec extends SparkSpec {
-  import spark.implicits._
-  import graft.functions.CosineSimilarity.cosineSim
-
-  private val minBytesKey = "spark.graft.autoLadder.minBytes"
-
-  private def withAutoLadder[A](minBytes: Long)(f: => A): A = {
-    spark.conf.set(minBytesKey, minBytes.toString)
-    try f finally spark.conf.unset(minBytesKey)
-  }
-
-  /** 400 random 64-dim vectors; ids 0..19 are duplicated (scaled ×2,
-    * cosine exactly 1 and IDENTICAL sign pattern, so every LSH band
-    * matches — the rewrite can never lose them) as ids 1000..1019. */
-  private lazy val vecs: org.apache.spark.sql.DataFrame = {
-    val rng = new scala.util.Random(7)
-    val base = (0 until 400).map { i =>
-      (i.toLong, Array.fill(64)(rng.nextGaussian()))
-    }
-    val planted = base.take(20).map { case (i, v) =>
-      (1000L + i, v.map(_ * 2.0))
-    }
-    (base ++ planted).toDF("vec_id", "v")
-  }
-
-  private def thetaJoin = {
-    val a = vecs.select($"vec_id".as("id_a"), $"v".as("va"))
-    val b = vecs.select($"vec_id".as("id_b"), $"v".as("vb"))
-    a.join(b, $"id_a" < $"id_b" && cosineSim($"va", $"vb") >= 0.9)
-      .select($"id_a", $"id_b")
-  }
-
-  test("rule is inert without the conf: the theta join stays a nested loop") {
-    val plan = thetaJoin.queryExecution.executedPlan.toString
-    assert(plan.contains("NestedLoop") || plan.contains("Cartesian"), plan)
-  }
-
-  test("big cosine-threshold theta joins become banded equi-joins (no BNLJ), keeping all exact-dup pairs") {
-    val naive = thetaJoin.as[(Long, Long)].collect().toSet
-    withAutoLadder(1000L) {
-      val plan = thetaJoin.queryExecution.executedPlan.toString
-      assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
-        s"expected banded equi-join:\n$plan")
-      assert(plan.contains("Generate"), "band explode missing")
-      val ladder = thetaJoin.as[(Long, Long)].collect().toSet
-      // LSH output is a subset of the exact pair set...
-      assert(ladder.subsetOf(naive))
-      // ...and identical-direction pairs are NEVER lost
-      val planted = (0 until 20).map(i => (i.toLong, 1000L + i)).toSet
-      assert(planted.subsetOf(ladder), s"lost planted pairs: ${planted -- ladder}")
-    }
-  }
-
-  test("the SQL formulation of the same join is rewritten too") {
-    vecs.createOrReplaceTempView("autoladder_e")
-    val q = """SELECT a.vec_id AS id_a, b.vec_id AS id_b
-               FROM autoladder_e a JOIN autoladder_e b
-               ON a.vec_id < b.vec_id AND cosine_sim(a.v, b.v) >= 0.9"""
-    withAutoLadder(1000L) {
-      val df = spark.sql(q)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
-        s"SQL path not rewritten:\n$plan")
-      val planted = (0 until 20).map(i => (i.toLong, 1000L + i)).toSet
-      val got = df.as[(Long, Long)].collect().toSet
-      assert(planted.subsetOf(got))
-    }
-  }
-
-  test("a small side keeps the broadcast nested loop (the right plan there)") {
-    // threshold above both sides' size estimate → untouched
-    withAutoLadder(1L << 40) {
-      val plan = thetaJoin.queryExecution.executedPlan.toString
-      assert(plan.contains("NestedLoop") || plan.contains("Cartesian"), plan)
-    }
-  }
-
-  test("joins that already carry an equi key are left alone") {
-    val a = vecs.select($"vec_id".as("id_a"), ($"vec_id" % 7).as("ka"), $"v".as("va"))
-    val b = vecs.select($"vec_id".as("id_b"), ($"vec_id" % 7).as("kb"), $"v".as("vb"))
-    withAutoLadder(1000L) {
-      val j = a.join(b, $"ka" === $"kb" && cosineSim($"va", $"vb") >= 0.9)
-      assert(!j.queryExecution.executedPlan.toString.contains("Generate"))
-    }
-  }
-}
-
+/** The size-routed entry points ([[Dedup.nearDupAuto]] /
+  * [[Dedup.containmentAuto]] / [[Dedup.embeddingDedup]]) that walk
+  * exact→LSH/capped ladders by corpus size, so the quadratic
+  * formulation is not reachable at scale. */
 class AutoLadderRoutingSpec extends SparkSpec {
-  import graft.operators.Similarity
 
   test("nearDupAuto takes the exact arm at small size — bit-identical to ngramJaccard") {
     val docs = Tables.documents(spark, sfDir)

@@ -349,6 +349,28 @@ class IntervalJoinSpec extends SparkSpec {
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
       s"bucketed interval join must not nested-loop:\n$plan")
   }
+
+  test("reversed intervals match nothing, never materializing the descending range") {
+    val e = Seq((1L, 1500000000L)).toDF("event_id", "tsu")
+    // end 3·10⁹ µs before start: at width 1 the descending cell range
+    // would be 3·10⁹ elements, past Spark's array-size limit
+    val iv = Seq((7L, 3000000000L, 0L)).toDF("interval_id", "start_us", "end_us")
+    assert(Events.intervalJoin(e, iv, 1L).count() == 0)
+  }
+
+  test("intervals over negative epochs match the naive range join") {
+    // pre-1970 points and intervals straddling 0: `div` truncates toward
+    // zero, but points and interval ends share that one monotone cell
+    // map, so every contained point still meets its interval
+    val e = (-25L to 25L).map(t => (t, t * 7L)).toDF("event_id", "tsu")
+    val iv = Seq((1L, -100L, -30L), (2L, -40L, 40L), (3L, -9L, 1L), (4L, 30L, 200L))
+      .toDF("interval_id", "start_us", "end_us")
+    val bucketed = Events.intervalJoin(e, iv, 10L)
+      .select($"event_id", $"interval_id").as[(Long, Long)].collect().toSet
+    val naive = e.join(iv, $"tsu" >= $"start_us" && $"tsu" < $"end_us")
+      .select($"event_id", $"interval_id").as[(Long, Long)].collect().toSet
+    assert(bucketed == naive && bucketed.nonEmpty)
+  }
 }
 
 class SecondarySortSpec extends SparkSpec {

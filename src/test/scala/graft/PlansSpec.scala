@@ -4,45 +4,6 @@ import org.apache.spark.sql.functions._
 import graft.functions.TopKAggregate
 import graft.operators.Analytics
 
-class ApproximateRewriteSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("spark.graft.approx rewrites exact aggregates to sketches") {
-    val li = Tables.lineitem(spark, sfDir)
-    val exact = Analytics.distinctCounts(li).collect()
-      .map(r => r.getAs[String]("l_returnflag") -> r.getAs[Long]("n_parts")).toMap
-    spark.conf.set("spark.graft.approx", "true")
-    try {
-      val df = Analytics.distinctCounts(li)
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("approx_count_distinct"))
-      assert(!optimized.contains("count(distinct"))
-      val approx = df.collect()
-        .map(r => r.getAs[String]("l_returnflag") -> r.getAs[Long]("n_parts")).toMap
-      approx.foreach { case (k, a) =>
-        assert(math.abs(a.toDouble - exact(k)) / exact(k) < 0.1)
-      }
-    } finally spark.conf.unset("spark.graft.approx")
-  }
-
-  test("percentile rewrites to approx_percentile under the flag") {
-    spark.conf.set("spark.graft.approx", "true")
-    try {
-      val plan = Analytics.medianByStatus(Tables.orders(spark, sfDir))
-        .queryExecution.optimizedPlan.toString
-      assert(plan.contains("percentile_approx") || plan.contains("approx_percentile"))
-    } finally spark.conf.unset("spark.graft.approx")
-  }
-
-  test("flag off leaves plans exact") {
-    val plan = Analytics.distinctCounts(Tables.lineitem(spark, sfDir))
-      .queryExecution.optimizedPlan.toString
-    // exact distinct survives as the Expand + double-Aggregate rewrite
-    assert(plan.contains("Expand"))
-    assert(!plan.contains("approx_count_distinct"))
-  }
-}
-
 class TopKAggregateSpec extends SparkSpec {
   import spark.implicits._
 

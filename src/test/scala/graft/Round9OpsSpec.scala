@@ -125,9 +125,10 @@ class Round9OpsSpec extends SparkSpec {
       streaming.EventStream.topHourlyReplay(spark, sfDir, maxFilesPerTrigger = mfpt)
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getInt(3)))
         .sorted.toSeq
-    // one file per trigger (max microbatch count), the old 2-file
-    // width, and the shipped default (4) must all equal the batch rank
-    // — the handoff's ordering contract at any trigger granularity
+    // only stage 2's trigger width varies here (stage 1 is fixed at 8
+    // files): one file per stage-2 trigger, the old 2-file width, and
+    // the shipped default (4) must all equal the batch rank — the
+    // handoff's ordering contract at any stage-2 granularity
     assert(streamed(1) == batch)
     assert(streamed(2) == batch)
     assert(streamed(4) == batch)

@@ -19,6 +19,17 @@ class SkewSpec extends SparkSpec {
       plain.agg(sum($"l_quantity")).as[Double].head())
   }
 
+  test("entry: salted flag revenue equals the plain aggregate") {
+    val li = Tables.lineitem(spark, sfDir)
+    val salted = SparkEntry.queries("q_salted_join")(spark, sfDir).collect().toSet
+    val plain = li.groupBy(concat(lit("flag_"), $"l_returnflag").as("flag_label"))
+      .agg(count(lit(1)).as("n_lines"),
+        (sum(graft.functions.Exact.cents($"l_extendedprice"))
+          .cast("double") / 100.0).as("revenue"))
+      .collect().toSet
+    assert(salted.nonEmpty && salted == plain)
+  }
+
   test("saltColumn spreads fully identical duplicate rows across salts") {
     // the commonest hot-key shape: a partition full of IDENTICAL rows.
     // A content-hash salt maps them all to one salt (defeating the

@@ -3,10 +3,21 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The spec scale factor and session, defined once for every suite
+  * and for [[TestSurface]]. */
+object SparkSpec {
+  val sfDir = "/root/testdata/sf0.001"
+
+  /** The shared local session. `getOrCreate` hands every later caller
+    * the session the FIRST caller built, with that caller's config, so
+    * the master and shuffle width live only here. */
+  def session(): SparkSession = Graft.session(master = "local[4]", shufflePartitions = 4)
+}
+
 /** Shared local session for specs (reused across suites via getOrCreate). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = Graft.session(master = "local[4]", shufflePartitions = 4)
-  val sfDir = "/root/testdata/sf0.001"
+  lazy val spark: SparkSession = SparkSpec.session()
+  val sfDir: String = SparkSpec.sfDir
 
   /** Executed-plan text with the `Tables.spread` input repartition
     * lines removed. The map-only / no-shuffle contracts in the specs

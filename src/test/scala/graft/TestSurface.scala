@@ -8,12 +8,10 @@ package graft
   * budget. The frames and their plan strings are built once here and
   * shared; every assertion stays in its own suite. */
 object TestSurface {
-  val sfDir = "/root/testdata/sf0.001"
-
   lazy val frames: Seq[(String, org.apache.spark.sql.DataFrame)] = {
-    val spark = Graft.session(master = "local[4]", shufflePartitions = 4)
+    val spark = SparkSpec.session()
     SparkEntry.queries.toSeq.sortBy(_._1)
-      .map { case (n, fn) => n -> fn(spark, sfDir) }
+      .map { case (n, fn) => n -> fn(spark, SparkSpec.sfDir) }
   }
 
   lazy val sparkPlans: Seq[(String, String)] =

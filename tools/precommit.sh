@@ -10,7 +10,10 @@
 #      ship with an unaudited plan shape (the round-8 failure class).
 #      A staged change to the corpus-prep operators (CorpusPipeline,
 #      TextAnalysis) runs their specs and re-drives the SparkEntry
-#      entries built on them the same way.
+#      entries built on them the same way. A staged change under
+#      graft/plans/ or to functions/CosineSimilarity.scala (home of the
+#      GraftExtensions session extensions) also runs PlanAuditSpec:
+#      session extensions shape the plan of every driver entry.
 #   3. The checks run against the STAGED snapshot: if any staged
 #      .scala/.sbt file also has unstaged edits, the index is
 #      materialized via git checkout-index into a temp dir and checked
@@ -106,15 +109,19 @@ if grep -qE "SparkEntry\.scala|$prep_re" <<<"$staged"; then
     }
     rm -rf "$out"
   fi
-  if [[ -n "$entries" ]]; then
-    echo "precommit: plan audit (graft.PlanAuditSpec)..." >&2
-    (cd "$checkdir" && sbt -batch "testOnly graft.PlanAuditSpec" < /dev/null) \
-        > /tmp/precommit_audit.log 2>&1 || {
-      tail -30 /tmp/precommit_audit.log >&2
-      echo "precommit: REFUSED — PlanAuditSpec failed" >&2
-      exit 1
-    }
-  fi
+fi
+
+# Plan audit over the full driver surface: new or changed driver
+# entries, and anything that re-plans all of them (plans/, extensions).
+if [[ -n "${entries:-}" ]] ||
+    grep -qE 'src/main/scala/graft/plans/|functions/CosineSimilarity\.scala' <<<"$staged"; then
+  echo "precommit: plan audit (graft.PlanAuditSpec)..." >&2
+  (cd "$checkdir" && sbt -batch "testOnly graft.PlanAuditSpec" < /dev/null) \
+      > /tmp/precommit_audit.log 2>&1 || {
+    tail -30 /tmp/precommit_audit.log >&2
+    echo "precommit: REFUSED — PlanAuditSpec failed" >&2
+    exit 1
+  }
 fi
 
 echo "precommit: green" >&2

@@ -39,13 +39,6 @@ object Graft {
       // inference, where Tables.normalizeTs never runs.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.parquet.filterPushdown", "true")
-      // bucketed tables here exist FOR bucket-aware reads (the
-      // co-located fs_bucket_join layout, the term-bucketed text
-      // index): the DisableUnnecessaryBucketedScan planner rule would
-      // turn the bucketed scan off for pure-filter queries — and with
-      // it the BUCKET PRUNING (`term IN (...)` reading |terms| of B
-      // buckets) that motivates the layout at 100 TB
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
       .getOrCreate()

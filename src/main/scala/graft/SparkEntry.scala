@@ -385,12 +385,6 @@ object SparkEntry {
     // microbatch boundaries (the merge is algebraic)
     "fs_mv_stream" -> ((s, d) =>
       graft.streaming.EventStream.mvMaintenanceReplay(s, d)),
-    // the same live MV replay over the HASH-BUCKETED state layout:
-    // each microbatch merges and swaps only the gb=<i> dirs its keys
-    // hash to — O(touched) per refresh instead of O(stored keys) —
-    // and the folded state must still equal the whole-log recompute
-    "fs_mv_stream_bucketed" -> ((s, d) =>
-      graft.streaming.EventStream.mvMaintenanceReplay(s, d, bucketed = true)),
     // vocabulary/Zipf health card: exact head/tail mass, no log()
     "t_vocab_card" -> ((s, d) => TextAnalysis.vocabCard(Tables.documents(s, d))),
     // mutual-3-NN similarity graph, exact at this corpus size (the
@@ -595,23 +589,6 @@ object SparkEntry {
       TextAnalysis.bm25PhraseIndexed(cat.loadTextIndex("text_idx_pos"),
         Seq("data", "join"))
     }),
-    // the TERM-BUCKETED index layout (the 100 TB postings story):
-    // postings in a term-bucketed metastore table — literal queries
-    // bucket-prune, probe joins never reshuffle the postings side —
-    // with an O(Δ) bucketed segment upsert; same oracle as t_bm25
-    "fs_bm25_bucketed" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      val cat = new graft.sources.Catalog(s, d,
-        Some(graft.sources.Catalog.warehouseLayoutRoot(s, d)))
-      cat.dropDerived("text_idx_bkt")
-      cat.buildTextIndexBucketed("text_idx_bkt",
-        docs.where(col("doc_id") % 5 =!= 0), nBuckets = 16)
-      cat.upsertTextIndexBucketed("text_idx_bkt",
-        docs.where(col("doc_id") % 5 === 0), batchId = 1L)
-      TextAnalysis.bm25Indexed(cat.loadTextIndexBucketed("text_idx_bkt"),
-        Seq("data", "join", "scan"))
-    }),
     "t_lang_confusion" -> ((s, d) => TextAnalysis.langConfusion(Tables.documents(s, d))),
     "d_source_stats" -> ((s, d) => TextAnalysis.sourceStats(Tables.documents(s, d))),
     "t_fingerprint" -> ((s, d) => TextAnalysis.fingerprint(Tables.documents(s, d))),
@@ -715,32 +692,9 @@ object SparkEntry {
         .select(col("day"), col("n_orders"),
           (col("rev_cents").cast("double") / 100.0).as("revenue"))
     }),
-    // the same durable MV under the HASH-BUCKETED state layout
-    // (gb=<i> subdirs, intent-file install): the second refresh merges
-    // and rewrites ONLY the buckets the 10% delta's days hash to —
-    // O(touched) instead of O(stored keys) — and the stored state must
-    // still reconstruct the full aggregate (same oracle as fs_incr_agg)
-    "fs_incr_agg_bucketed" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val ord = Tables.orders(s, d)
-      def dayAgg(df: org.apache.spark.sql.DataFrame) = df
-        .groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("rev_cents"))
-      val cat = new graft.sources.Catalog(s, d,
-        Some(graft.sources.Catalog.warehouseLayoutRoot(s, d)))
-      cat.dropDerived("orders_day_b")
-      cat.refreshAggMvBucketed("orders_day_b",
-        dayAgg(ord.where(col("o_orderkey") % 10 =!= 0)), Seq("day"), 16)
-      cat.refreshAggMvBucketed("orders_day_b",
-          dayAgg(ord.where(col("o_orderkey") % 10 === 0)), Seq("day"), 16)
-        .select(col("day"), col("n_orders"),
-          (col("rev_cents").cast("double") / 100.0).as("revenue"))
-    }),
-    // the bucketed layout's READ-side payoff: a key lookup opens ONLY
-    // the buckets the probe hashes to (O(|probe|·state/B) bytes, never
-    // the whole key table) and re-joins exactly — results equal a
-    // plain filter over the full aggregate, which is the oracle
+    // a key lookup against the durable MV: the committed state joined
+    // to a broadcast probe — results equal a plain filter over the
+    // full aggregate, which is the oracle
     "fs_mv_lookup" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       import s.implicits._
@@ -748,14 +702,14 @@ object SparkEntry {
       val cat = new graft.sources.Catalog(s, d,
         Some(graft.sources.Catalog.warehouseLayoutRoot(s, d)))
       cat.dropDerived("orders_day_lkp")
-      cat.refreshAggMvBucketed("orders_day_lkp",
+      cat.refreshAggMv("orders_day_lkp",
         ord.groupBy(date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
           .agg(count(lit(1)).as("n_orders"),
             sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
               .as("rev_cents")),
-        Seq("day"), 16)
+        Seq("day"))
       val probe = Seq("1995-06-19", "2000-02-03", "1996-02-25").toDF("day")
-      cat.bucketedMvLookup("orders_day_lkp", probe, Seq("day"))
+      cat.mvState("orders_day_lkp").join(broadcast(probe), Seq("day"))
         .select(col("day"), col("n_orders"),
           (col("rev_cents").cast("double") / 100.0).as("revenue"))
     }),
@@ -904,13 +858,6 @@ object SparkEntry {
     // equal the oracle's lead() over the whole change log
     "e_scd2_stream" -> ((s, d) =>
       graft.streaming.EventStream.scd2Replay(s, d)),
-    // the SAME change log through the hash-bucketed open-state rung
-    // (20th live replay): per-microbatch open-state writes touch only
-    // the buckets the batch's keys hash to — O(touched), not O(open
-    // keys) — and the served history is identical by contract, so it
-    // shares the whole-log lead() oracle
-    "e_scd2_stream_bucketed" -> ((s, d) =>
-      graft.streaming.EventStream.scd2Replay(s, d, bucketed = true)),
     // out-of-order repair: the MV is fed everything EXCEPT a held-out
     // late slice, then scd2Backfill reconstructs the affected keys'
     // change logs from the stored history and merges the late rows —
@@ -2001,7 +1948,6 @@ object SparkEntry {
     "t_mlt" -> operators.TextAnalysis.mltOracleSql(42L),
     "fs_bm25_indexed" -> bm25Sql,
     "fs_bm25_upsert" -> bm25Sql,
-    "fs_bm25_bucketed" -> bm25Sql,
     "d_index_maint" -> bm25Sql,
     // adjacency as list_contains arithmetic over ordinality-derived
     // positions; the identical BM25 tail with the phrase pseudo-term
@@ -3310,11 +3256,6 @@ object SparkEntry {
                 CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
                   / 100.0 AS sum_value
          FROM events GROUP BY event_type""",
-    "fs_mv_stream_bucketed" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
-                CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-                  / 100.0 AS sum_value
-         FROM events GROUP BY event_type""",
     "q4_exists" ->
       """SELECT o_orderpriority, count(*) AS order_count
          FROM orders o
@@ -3682,15 +3623,8 @@ object SparkEntry {
                 CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
                   / 100.0 AS revenue
          FROM orders GROUP BY 1""",
-    // the bucketed layout must serve the identical state
-    "fs_incr_agg_bucketed" ->
-      """SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
-                CAST(count(*) AS BIGINT) AS n_orders,
-                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-                  / 100.0 AS revenue
-         FROM orders GROUP BY 1""",
     // the point lookup serves the same rows a plain filter over the
-    // full aggregate would — bucket routing moves bytes, not results
+    // full aggregate would
     "fs_mv_lookup" ->
       """SELECT strftime(o_orderdate, '%Y-%m-%d') AS day,
                 CAST(count(*) AS BIGINT) AS n_orders,
@@ -4396,8 +4330,6 @@ object SparkEntry {
     // change log: each non-error event opens a version valid until the
     // user's next event (upsert or error tombstone); unclosed = current
     "e_scd2_stream" -> scd2StreamSql,
-    // identical history from the bucketed open-state layout
-    "e_scd2_stream_bucketed" -> scd2StreamSql,
     // the REPAIRED history equals the same full-log lead(): the held-
     // out late changes are indistinguishable after the backfill
     "fs_scd2_backfill" -> scd2StreamSql,

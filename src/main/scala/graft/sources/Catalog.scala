@@ -112,284 +112,6 @@ class Catalog(spark: SparkSession, baseDir: String,
     spark.read.parquet(dir)
   }
 
-  // ──────────────────────────────────────────────────────────────────
-  // HASH-BUCKETED MV STATE — the refresh-cost fix for every rewrite-
-  // the-world rung above: [[refreshAggMv]] (and its CDC/KMV/quantile
-  // siblings) re-materializes the FULL key-grain state per refresh,
-  // which is O(stored keys) per microbatch — at 100 TB key cardinality
-  // with a minutes-scale trigger, rewriting billions of untouched keys
-  // dominates everything. Here the state lives as `gb=<i>` hash-bucket
-  // subdirs (`gb = pmod(hash(keys...), B)`, hive-style so one
-  // `spark.read.parquet(root)` still serves the whole state), a
-  // refresh merges the delta ONLY into the buckets its keys hash to,
-  // and the install swaps exactly those bucket dirs — O(touched
-  // buckets' keys + delta) compute and write, with untouched buckets'
-  // files never opened, never rewritten (their mtimes prove it in
-  // spec).
-  //
-  // DURABILITY: the staged layout is built under `<dir>/.staged/data`
-  // (dot-prefixed — invisible to every parquet read), then a 1-file
-  // `_intent` carrying the batch id is renamed into place as the
-  // COMMIT POINT, then each staged bucket dir swaps in, then the batch
-  // marker + root `_SUCCESS` land and `.staged` is deleted. A crash
-  // before the intent rename rolls BACK (live state untouched, staged
-  // debris deleted on the next touch); a crash after it rolls FORWARD
-  // ([[recoverBucketedMv]] re-runs the remaining swaps — each bucket
-  // swap is idempotent because an installed bucket's staged dir is
-  // gone). The batch-id marker is written FROM the intent during
-  // roll-forward, so exactly-once survives any crash point.
-  //
-  // MERGE CONTRACT (what makes the per-bucket swap sound): the merge
-  // is per-key and RETAINS every key it sees — counters sum, CDC keeps
-  // the latest row (tombstones included), sketch buffers keep ≤ k rows
-  // — so a touched bucket's merged output is never empty and a bucket
-  // dir missing from the staged layout is exactly an untouched bucket.
-  // B is frozen at first refresh (persisted in `_graft_buckets`);
-  // changing it would re-route keys while old buckets keep stale rows.
-
-  /** [[refreshAggMv]] with hash-bucketed state: identical contract and
-    * identical merged VALUES (the fs_incr_agg/fs_mv_stream oracles
-    * hold over either layout), refresh cost O(touched) instead of
-    * O(stored keys). */
-  def refreshAggMvBucketed(name: String, deltaAgg: DataFrame,
-      keys: Seq[String], nBuckets: Int = 32,
-      batchId: Option[Long] = None): DataFrame = {
-    val counterCols = deltaAgg.columns.filterNot(keys.contains)
-    require(counterCols.nonEmpty, s"refreshAggMvBucketed($name): no counter columns")
-    def reAgg(df: DataFrame) = df.groupBy(keys.map(col): _*)
-      .agg(sum(col(counterCols.head)).as(counterCols.head),
-        counterCols.tail.map(c => sum(col(c)).as(c)): _*)
-    refreshBucketedMv(name, deltaAgg, keys, nBuckets, batchId, reAgg)
-  }
-
-  /** [[refreshCdcMv]] with hash-bucketed state — same latest-wins,
-    * any-order merge (tombstones retained in state), O(touched)
-    * refresh. The live view is [[cdcStateBucketed]]. */
-  def refreshCdcMvBucketed(name: String, changes: DataFrame, key: String,
-      seqCol: String, opCol: String, nBuckets: Int = 32,
-      batchId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(key)).orderBy(col(seqCol).desc)
-    def latest(df: DataFrame) = df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
-    refreshBucketedMv(name, changes, Seq(key), nBuckets, batchId, latest)
-  }
-
-  /** [[refreshCdcMvBucketed]]'s queryable face: live rows only. */
-  def cdcStateBucketed(name: String, opCol: String): DataFrame =
-    bucketedMvState(name).where(col(opCol) === "u").drop(opCol)
-
-  /** [[refreshKmvMv]] with hash-bucketed state — the lossless k-minimum
-    * merge at O(touched) refresh cost. */
-  def refreshKmvMvBucketed(name: String, delta: DataFrame,
-      keys: Seq[String], hashCol: String, k: Int, nBuckets: Int = 32,
-      batchId: Option[Long] = None): DataFrame = {
-    val d = delta.select(keys.map(col) :+ col(hashCol).as("h"): _*)
-    def merge(df: DataFrame) = df.groupBy(keys.map(col): _*)
-      .agg(graft.functions.KmvSketch.kmv(col("h"), k).as("__buf"))
-      .select(keys.map(col) :+ explode(col("__buf")).as("h"): _*)
-    refreshBucketedMv(name, d, keys, nBuckets, batchId, merge)
-  }
-
-  /** [[refreshQsketchMv]] with hash-bucketed state — the lossless
-    * bottom-k merge at O(touched) refresh cost; estimates via
-    * [[qsketchMvEstimate]]'s arithmetic over [[bucketedMvState]]. */
-  def refreshQsketchMvBucketed(name: String, delta: DataFrame,
-      keys: Seq[String], hashCol: String, valueCol: String, k: Int,
-      nBuckets: Int = 32, batchId: Option[Long] = None): DataFrame = {
-    val d = delta.select(
-      keys.map(col) :+ col(hashCol).as("h") :+ col(valueCol).as("val"): _*)
-    def merge(df: DataFrame) = df.groupBy(keys.map(col): _*)
-      .agg(graft.functions.BottomKSample.bottomK(col("h"), col("val"), k)
-        .as("__buf"))
-      .select(keys.map(col) :+ explode(col("__buf")).as("p"): _*)
-      .select(keys.map(col) :+ col("p._1").as("h") :+ col("p._2").as("val"): _*)
-    refreshBucketedMv(name, d, keys, nBuckets, batchId, merge)
-  }
-
-  /** The whole bucketed state as one DataFrame (partition discovery
-    * unions the `gb=<i>` dirs; the bucket id is layout, not data, so
-    * it is dropped). Same committed-only guarantee as [[mvState]]. */
-  def bucketedMvState(name: String): DataFrame = {
-    val dir = s"$derivedDir/$name"
-    recoverBucketedMv(dir)
-    require(hasSuccess(dir), s"no committed bucketed MV state: $name")
-    spark.read.parquet(dir).drop("gb")
-  }
-
-  /** POINT LOOKUP into a bucketed MV state — the READ-side payoff of
-    * the layout: the probe's keys hash to their buckets and only those
-    * `gb=` dirs are ever opened, so a key lookup against a 100 TB
-    * state reads O(|probe buckets| · state/B) bytes instead of the
-    * whole key table (the refresh-side O(touched) argument, applied to
-    * serving). The probe is broadcast (it is a literal key set by
-    * nature) and re-joined exactly, so bucket routing moves bytes,
-    * never results — the BloomJoin discipline. Committed-only +
-    * crash-healing as [[bucketedMvState]]. */
-  def bucketedMvLookup(name: String, probe: DataFrame,
-      keys: Seq[String]): DataFrame = {
-    val dir = s"$derivedDir/$name"
-    recoverBucketedMv(dir)
-    require(hasSuccess(dir), s"no committed bucketed MV state: $name")
-    val fs = new Path(dir).getFileSystem(hconf)
-    val sidecar = new Path(dir, "_graft_buckets")
-    require(fs.exists(sidecar), s"not a bucketed MV state: $name")
-    val in = fs.open(sidecar)
-    val b = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-    finally in.close()
-    val probeKeys = probe.select(keys.map(col): _*).distinct()
-    val gbs = probeKeys
-      .select(pmod(hash(keys.map(col): _*), lit(b)).as("gb"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val paths = gbs.toSeq.map(i => s"$dir/gb=$i")
-      .filter(p => fs.exists(new Path(p)))
-    val state =
-      if (paths.isEmpty) bucketedMvState(name).limit(0)
-      else spark.read.parquet(paths: _*)
-    state.join(broadcast(probeKeys), keys)
-  }
-
-  /** The shared bucketed-refresh engine: route the delta, merge
-    * stored-touched ∪ delta at key grain, stage, intent-commit,
-    * per-bucket swap. `merge` reduces a union of state rows and delta
-    * rows to state grain and must RETAIN every key (see the merge
-    * contract above). */
-  private def refreshBucketedMv(name: String, delta: DataFrame,
-      keys: Seq[String], nBuckets: Int, batchId: Option[Long],
-      merge: DataFrame => DataFrame): DataFrame = {
-    require(nBuckets >= 1, s"nBuckets must be >= 1: $nBuckets")
-    val dir = s"$derivedDir/$name"
-    recoverBucketedMv(dir)
-    if (alreadyApplied(dir, batchId)) return bucketedMvState(name)
-    // An empty FIRST delta must not commit: partitionBy of an empty
-    // DataFrame writes no part files, so an installed dataless state
-    // would pass hasSuccess yet fail schema inference on every later
-    // read. With no state and nothing to merge there is nothing to
-    // install — return the (empty) merged shape and leave the dir
-    // uncommitted, exactly as the non-bucketed rungs never commit a
-    // dataless dir. Replaying the same empty batch is a natural no-op.
-    if (!hasSuccess(dir) && delta.isEmpty) return merge(delta)
-    val fs = new Path(dir).getFileSystem(hconf)
-    val b = frozenBuckets(dir, fs, nBuckets)
-    def gbOf(df: DataFrame) = pmod(hash(keys.map(df(_)): _*), lit(b))
-    val touched = delta.select(gbOf(delta).as("gb")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    // ONE multi-path read over the touched buckets (not a union of
-    // per-bucket relations: B separate scans made planning itself the
-    // dominant fixed cost — measured 7.4 s → well under a second)
-    val storedPaths = touched.toSeq.map(i => s"$dir/gb=$i")
-      .filter(p => fs.exists(new Path(p)))
-    val stored =
-      if (storedPaths.isEmpty) None
-      else Some(spark.read.parquet(storedPaths: _*))
-    val all = stored.map(_.unionByName(delta)).getOrElse(delta)
-    val merged = merge(all)
-    val staged = s"$dir/.staged"
-    fs.delete(new Path(staged), true)
-    merged.withColumn("gb", gbOf(merged))
-      .write.partitionBy("gb").parquet(s"$staged/data")
-    // COMMIT POINT: the intent file (batch id inside) renamed into
-    // place — everything before is roll-back, everything after is
-    // roll-forward
-    val intentTmp = new Path(s"$staged/_intent.tmp")
-    val out = fs.create(intentTmp, true)
-    try out.write(batchId.map(_.toString).getOrElse("none")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(intentTmp, new Path(s"$staged/_intent")))
-      throw new java.io.IOException(s"refreshBucketedMv($name): intent rename failed")
-    installBucketedStaged(dir, fs)
-    bucketedMvState(name)
-  }
-
-  /** Read-or-freeze the bucket count sidecar: first refresh persists
-    * `nBuckets`, every later refresh must agree (re-routing keys under
-    * live buckets would duplicate them). */
-  private def frozenBuckets(dir: String, fs: org.apache.hadoop.fs.FileSystem,
-      nBuckets: Int): Int = {
-    val p = new Path(dir, "_graft_buckets")
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val b = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-      finally in.close()
-      require(b == nBuckets,
-        s"bucketed MV at $dir was built with nBuckets=$b, got $nBuckets")
-      b
-    } else {
-      fs.mkdirs(new Path(dir))
-      val out = fs.create(p, true)
-      try out.write(nBuckets.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      nBuckets
-    }
-  }
-
-  /** Roll the staged install forward: swap every bucket dir still in
-    * the staged layout (idempotent — an already-installed bucket's
-    * staged dir is gone), then the batch marker FROM THE INTENT, root
-    * `_SUCCESS`, and staged cleanup. Called with the intent committed:
-    * either by the refresh itself or by [[recoverBucketedMv]]. */
-  private def installBucketedStaged(dir: String,
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val staged = new Path(s"$dir/.staged")
-    val data = new Path(staged, "data")
-    if (fs.exists(data))
-      fs.listStatus(data).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("gb="))
-        .foreach { s =>
-          val live = new Path(dir, s.getPath.getName)
-          fs.delete(live, true)
-          if (!fs.rename(s.getPath, live))
-            throw new java.io.IOException(
-              s"bucketed install: swap failed for ${s.getPath}")
-        }
-    val intent = new Path(staged, "_intent")
-    val in = fs.open(intent)
-    val intentBody = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-    finally in.close()
-    // Intent format: line 1 = batch id (or "none"); an optional
-    // "drop=i,j" line names touched buckets the refresh EMPTIED
-    // (SCD2's tombstone-only case — the key-retaining MV merges never
-    // produce one). Deleting a live dir is idempotent, so the drop
-    // replays with the rest of the roll-forward.
-    val lines = intentBody.split("\n").map(_.trim)
-    val idStr = lines.headOption.getOrElse("none")
-    lines.find(_.startsWith("drop=")).foreach {
-      _.stripPrefix("drop=").split(",").filter(_.nonEmpty)
-        .foreach(i => fs.delete(new Path(dir, s"gb=${i.toInt}"), true))
-    }
-    if (idStr != "none") {
-      val mTmp = new Path(dir, s"$BatchMarker.tmp")
-      val out = fs.create(mTmp, true)
-      try out.write(idStr.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      fs.delete(new Path(dir, BatchMarker), false)
-      if (!fs.rename(mTmp, new Path(dir, BatchMarker)))
-        throw new java.io.IOException("bucketed install: marker rename failed")
-    }
-    val succ = new Path(dir, "_SUCCESS")
-    if (!fs.exists(succ)) fs.create(succ, true).close()
-    fs.delete(staged, true)
-  }
-
-  /** Crash recovery for the bucketed layout: a committed `_intent`
-    * rolls the install FORWARD, staged debris without one rolls BACK
-    * (live state untouched either way — see the durability note
-    * above). Every bucketed read/refresh funnels through here, so the
-    * first touch after a crash heals the state; same
-    * reads-serialized-with-refreshes contract as [[hasSuccess]]. */
-  private def recoverBucketedMv(dir: String): Unit = {
-    val staged = new Path(s"$dir/.staged")
-    val fs = staged.getFileSystem(hconf)
-    if (!fs.exists(staged)) return
-    if (fs.exists(new Path(staged, "_intent"))) installBucketedStaged(dir, fs)
-    else fs.delete(staged, true)
-  }
-
   /** EXACTLY-ONCE guard for retried refreshes: a caller that passes the
     * engine's microbatch id (foreachBatch hands it over) makes the
     * refresh idempotent — a retry of an already-committed batch is a
@@ -568,10 +290,6 @@ class Catalog(spark: SparkSession, baseDir: String,
     recoverDirSwap(name, "open")
     val openDir = s"$derivedDir/$name/open"
     if (alreadyApplied(openDir, Some(batchId))) return
-    require(!new Path(openDir, "_graft_buckets")
-        .getFileSystem(hconf).exists(new Path(openDir, "_graft_buckets")),
-      s"refreshScd2Mv($name): open state is hash-bucketed — " +
-        "use refreshScd2MvBucketed (mixing layouts would corrupt it)")
     val all =
       if (hasSuccess(openDir))
         spark.read.parquet(openDir).unionByName(changes)
@@ -608,116 +326,6 @@ class Catalog(spark: SparkSession, baseDir: String,
     } finally stamped.unpersist(): Unit
   }
 
-  /** [[refreshScd2Mv]] with HASH-BUCKETED open state — the last MV
-    * rung still paying a full-state rewrite per refresh. Closed
-    * history was already O(Δ) (append-only segments); the open state
-    * now lays out as `gb = pmod(hash(key), B)` hive subdirs and a
-    * refresh merges and swaps ONLY the buckets the batch's keys hash
-    * to — O(touched open keys + batch) instead of O(all open keys).
-    * Same segments, same ordered-feed contract, same exactly-once
-    * marker discipline, and [[scd2MvHistory]] / [[scd2AsOf]] /
-    * [[compactScd2]] / [[scd2Backfill]] serve either layout, so the
-    * whole SCD2 verb family is layout-transparent.
-    *
-    * One semantic wrinkle the key-retaining MV merges don't have: a
-    * tombstone REMOVES its key from the open state, so a touched
-    * bucket can come out EMPTY (every open key in it closed this
-    * batch). partitionBy writes no dir for an empty bucket, and
-    * "missing from staged" must not read as "untouched" — the intent
-    * therefore carries an explicit `drop=` list of emptied buckets,
-    * and the install deletes those live dirs as part of the same
-    * idempotent roll-forward ([[installBucketedStaged]]).
-    *
-    * Crash points replay exactly as the flat rung's: the closed and
-    * tombstone segments are written before the intent commits, so a
-    * pre-intent crash rolls the staged dir back and the retry
-    * overwrites both byte-identically (same stored open buckets, same
-    * batch in); a post-intent crash rolls forward from the intent on
-    * the next touch. Layouts never mix: this rung refuses a committed
-    * flat state and [[refreshScd2Mv]] refuses a bucketed one. */
-  def refreshScd2MvBucketed(name: String, changes: DataFrame, key: String,
-      seqCol: String, opCol: String, batchId: Long,
-      nBuckets: Int = 32): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val root = s"$derivedDir/$name"
-    val openDir = s"$root/open"
-    recoverBucketedMv(openDir)
-    if (alreadyApplied(openDir, Some(batchId))) return
-    val fs = new Path(openDir).getFileSystem(hconf)
-    if (hasSuccess(openDir))
-      require(fs.exists(new Path(openDir, "_graft_buckets")),
-        s"refreshScd2MvBucketed($name): open state is flat — " +
-          "use refreshScd2Mv (mixing layouts would corrupt it)")
-    // an empty FIRST batch has nothing to commit — installing a
-    // dataless open dir would pass hasSuccess yet fail schema
-    // inference on every later read (the refreshBucketedMv rule)
-    if (!hasSuccess(openDir) && changes.isEmpty) return
-    val b = frozenBuckets(openDir, fs, nBuckets)
-    val gbOf = pmod(hash(col(key)), lit(b))
-    val touched = changes.select(gbOf.as("gb")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val storedPaths = touched.toSeq.map(i => s"$openDir/gb=$i")
-      .filter(p => fs.exists(new Path(p)))
-    val stored =
-      if (storedPaths.isEmpty) None
-      else Some(spark.read.parquet(storedPaths: _*))
-    val all = stored.map(_.unionByName(changes)).getOrElse(changes)
-    val w = Window.partitionBy(col(key)).orderBy(col(seqCol))
-    // materialized once for its four consumers (closed, tombstones,
-    // staged open write, dataless-bucket fallback) — the flat rung's
-    // argument, touched-buckets + batch bounded
-    val stamped = all.withColumn("__vt", lead(col(seqCol), 1).over(w))
-      .localCheckpoint()
-    // try/finally so an exception mid-install (e.g. the intent-rename
-    // IOException) can't leak the checkpointed blocks — the flat
-    // [[refreshScd2Mv]]'s rule
-    try {
-      val closed = stamped.where(col(opCol) === "u" && col("__vt").isNotNull)
-        .withColumnRenamed(seqCol, "valid_from")
-        .withColumnRenamed("__vt", "valid_to")
-        .drop(opCol)
-      val open = stamped.where(col(opCol) === "u" && col("__vt").isNull)
-        .drop("__vt")
-      closed.write.mode(SaveMode.Overwrite)
-        .parquet(s"$root/closed_seg_b$batchId")
-      stamped.where(col(opCol) === "d")
-        .select(col(key), col(seqCol))
-        .repartition(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$root/tombs_seg_b$batchId")
-      val staged = s"$openDir/.staged"
-      fs.delete(new Path(staged), true)
-      open.withColumn("gb", gbOf).write.partitionBy("gb")
-        .parquet(s"$staged/data")
-      def listGbs(d: Path) =
-        if (!fs.exists(d)) Set.empty[Int]
-        else fs.listStatus(d).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("gb="))
-          .map(_.getPath.getName.stripPrefix("gb=").toInt).toSet
-      var stagedGbs = listGbs(new Path(s"$staged/data"))
-      // a batch that closes EVERY open key would drop the last live
-      // bucket and leave a dataless-but-committed state (unreadable by
-      // schema inference) — keep one schema-bearing empty bucket instead
-      if (touched.nonEmpty &&
-          ((listGbs(new Path(openDir)) -- touched) ++ stagedGbs).isEmpty) {
-        open.limit(0).repartition(1)
-          .write.parquet(s"$staged/data/gb=${touched.head}")
-        stagedGbs += touched.head
-      }
-      val drops = touched.filterNot(stagedGbs)
-      val intentBody = batchId.toString +
-        (if (drops.nonEmpty) s"\ndrop=${drops.mkString(",")}" else "")
-      val intentTmp = new Path(s"$staged/_intent.tmp")
-      val out = fs.create(intentTmp, true)
-      try out.write(intentBody.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(intentTmp, new Path(s"$staged/_intent")))
-        throw new java.io.IOException(
-          s"refreshScd2MvBucketed($name): intent rename failed")
-      installBucketedStaged(openDir, fs)
-    } finally stamped.unpersist(): Unit
-  }
-
   /** Fold every committed closed segment of a [[refreshScd2Mv]] state
     * into ONE — the operational counterpart of append-only history
     * maintenance, the [[compactJoinMv]] shape: segments accumulate one
@@ -732,7 +340,6 @@ class Catalog(spark: SparkSession, baseDir: String,
     * byte-for-byte (a retried batch still no-ops after compaction). */
   def compactScd2(name: String): Unit = {
     recoverDirSwap(name, "open")
-    recoverBucketedMv(s"$derivedDir/$name/open") // torn bucketed install
     val root = new Path(s"$derivedDir/$name")
     val fs = root.getFileSystem(hconf)
     val segs = fs.listStatus(root).toSeq
@@ -792,7 +399,6 @@ class Catalog(spark: SparkSession, baseDir: String,
       seqCol: String, opCol: String): Unit = {
     recoverDirSwap(name, "open")
     val openDir = s"$derivedDir/$name/open"
-    recoverBucketedMv(openDir) // heal a torn bucketed-open install too
     require(hasSuccess(openDir), s"no committed scd2 state: $name")
     val keys = late.select(col(key)).distinct()
     // TOUCH ONLY THE DELTA (round 14): a backfill rewrites a closed
@@ -891,27 +497,7 @@ class Catalog(spark: SparkSession, baseDir: String,
     val openOut = newHist.where(col("valid_to").isNull)
       .select(Seq(col(key), col("valid_from").as(seqCol),
         lit("u").as(opCol)) ++ valueCols.map(col): _*)
-    // a backfill rewrites the whole open state, so it must PRESERVE
-    // the layout: flattening a bucketed state would orphan the live
-    // gb= dirs' replacement and break every later bucketed refresh
-    val sidecar = new Path(s"$openDir/_graft_buckets")
-    if (fs.exists(sidecar)) {
-      val in = fs.open(sidecar)
-      val b = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-      finally in.close()
-      if (openOut.isEmpty) {
-        // partitionBy of an empty frame writes no dirs at all; one
-        // schema-bearing part under gb=0 keeps the state readable
-        openOut.repartition(1).write.parquet(s"$tmp/open/gb=0")
-        fs.create(new Path(s"$tmp/open/_SUCCESS"), true).close()
-      } else
-        openOut.withColumn("gb", pmod(hash(col(key)), lit(b)))
-          .write.partitionBy("gb").parquet(s"$tmp/open")
-      org.apache.hadoop.fs.FileUtil.copy(fs, sidecar, fs,
-        new Path(s"$tmp/open/_graft_buckets"), false, hconf)
-    } else
-      writable(openOut).write.parquet(s"$tmp/open")
+    writable(openOut).write.parquet(s"$tmp/open")
     // the repaired delete audit: affected keys' deletes from the merged
     // log (late deletes included), untouched keys' audit rows verbatim
     val untouchedAudit = audit.map(_ => spark.read.parquet(tombSegs: _*)
@@ -950,7 +536,6 @@ class Catalog(spark: SparkSession, baseDir: String,
       opCol: String): DataFrame = {
     recoverDirSwap(name, "open")
     val openDir = s"$derivedDir/$name/open"
-    recoverBucketedMv(openDir) // heal a torn bucketed-open install too
     require(hasSuccess(openDir), s"no committed scd2 state: $name")
     val root = new Path(s"$derivedDir/$name")
     val fs = root.getFileSystem(hconf)
@@ -967,9 +552,7 @@ class Catalog(spark: SparkSession, baseDir: String,
     * the touched segments only. */
   private def scd2HistoryFromParts(openDir: String, segs: Seq[String],
       seqCol: String, opCol: String): DataFrame = {
-    // `gb` is bucketed-layout bookkeeping, not data (drop is a no-op
-    // on a flat state) — both layouts serve identically from here
-    val openRaw = spark.read.parquet(openDir).drop("gb")
+    val openRaw = spark.read.parquet(openDir)
     val open = openRaw
       .withColumnRenamed(seqCol, "valid_from")
       .withColumn("valid_to", lit(null).cast(openRaw.schema(seqCol).dataType))
@@ -1260,7 +843,7 @@ class Catalog(spark: SparkSession, baseDir: String,
       .filter(hasSuccess)
       .sorted
     // one multi-path read (identical writer schema per segment; the
-    // loadTextIndex / refreshBucketedMv planning-cost rationale)
+    // loadTextIndex planning-cost rationale)
     spark.read.parquet(s"$derivedDir/$name/assignments" +: segs: _*)
   }
 
@@ -1439,12 +1022,11 @@ class Catalog(spark: SparkSession, baseDir: String,
 
   /** Build and commit the index: posting lists `(doc_id, term, tf)`
     * range-clustered by term (a query-term read prunes to matching
-    * files/row groups via parquet min/max stats — at 100 TB use
-    * [[buildTextIndexBucketed]], which buckets by term instead, same
-    * read rule) and document lengths. The corpus stats `(n_docs,
-    * sum_dl)` are NOT stored: they derive at load as one aggregate
-    * over the dl union (`n_docs = count, sum_dl = Σ dl` — the
-    * identical integers the per-part fold produced), which saves one
+    * files/row groups via parquet min/max stats) and document
+    * lengths. The corpus stats `(n_docs, sum_dl)` are NOT stored:
+    * they derive at load as one aggregate over the dl union
+    * (`n_docs = count, sum_dl = Σ dl` — the identical integers the
+    * per-part fold produced), which saves one
     * write + one read-back job per build AND per upsert batch. Each
     * part is tmp-swap committed; torn parts never serve.
     * `positional = true` stores per-(doc, term) position arrays too —
@@ -1587,9 +1169,9 @@ class Catalog(spark: SparkSession, baseDir: String,
     // ONE multi-path read per part, not a union of per-segment reads:
     // every segment is written by the same writer with the same schema,
     // and N separate spark.read.parquet calls made the load's PLANNING
-    // the dominant cost (the refreshBucketedMv lesson — measured there
-    // 7.4 s → well under a second; here loadTextIndex was 1.5 s of the
-    // post-replay serve)
+    // the dominant cost (a union of per-directory reads measured 7.4 s
+    // of planning against well under a second for one multi-path read;
+    // here loadTextIndex was 1.5 s of the post-replay serve)
     def unionParts(part: String) =
       spark.read.parquet((Seq(s"$derivedDir/$name/$part") ++
         ids.map(id => s"$derivedDir/$name/${part}_seg_b$id")): _*)
@@ -1644,225 +1226,6 @@ class Catalog(spark: SparkSession, baseDir: String,
     installSwap(s"$derivedDir/$name", fs, s"compactTextIndex($name)")
   }
 
-  // ──────────────────────────────────────────────────────────────────
-  // TERM-BUCKETED text index — the 100 TB postings layout the
-  // range-clustered index's own Scaladoc promised: postings live in a
-  // metastore table BUCKETED BY term ([[writeBucketed]], the
-  // fs_bucket_join machinery), so Catalyst KNOWS the hash
-  // distribution — a literal query prunes to `SelectedBucketsCount ≤
-  // |query terms|` of the buckets (never a full listing), and a
-  // term-keyed probe JOIN needs NO Exchange on the postings side (the
-  // multi-TB side never reshuffles; only the query-term relation
-  // moves). dl stays a dir-committed part under `derivedDir/<name>`
-  // exactly as in [[buildTextIndex]] (corpus stats derive from it at
-  // load); upserts land as batch-named bucketed segment TABLES whose
-  // metastore registration is the commit gate (saveAsTable registers
-  // only after the data lands, so a torn write is invisible and the
-  // retry overwrites it verbatim). A segment id SERVES only when its
-  // table exists AND its dl dir sibling is committed — the read keys
-  // every sibling off one gate, as the dir-layout index does.
-
-  private def textTable(name: String, seg: Option[Long] = None): String = {
-    require(name.matches("[A-Za-z0-9_]+"),
-      s"bucketed index name must be [A-Za-z0-9_]+: $name")
-    s"graft_tidx_$name" + seg.map(id => s"_seg_b$id").getOrElse("")
-  }
-
-  // Segment discovery must look in the SAME database saveAsTable
-  // created the segment tables in — the session's current database,
-  // not a hardcoded "default" (a session running USE somewhere else
-  // would otherwise silently skip committed segments on read,
-  // compaction, and maintain).
-  private def textSegIds(name: String): Seq[Long] =
-    spark.sessionState.catalog
-      .listTables(spark.catalog.currentDatabase,
-        s"graft_tidx_${name}_seg_b*")
-      .map(_.table.stripPrefix(s"graft_tidx_${name}_seg_b"))
-      .flatMap(n => scala.util.Try(n.toLong).toOption)
-      .sorted
-
-  private def bucketCountOf(table: String): Int =
-    spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(s"$table is not bucketed"))
-
-  /** Build the bucketed index: postings → a term-bucketed,
-    * term-sorted metastore table; dl → a dir part. Rebuild
-    * hygiene as [[buildTextIndex]]: stale segment tables and dirs are
-    * dropped first. */
-  def buildTextIndexBucketed(name: String, docs: DataFrame,
-      nBuckets: Int = 64, positional: Boolean = false): Unit = {
-    import graft.operators.TextAnalysis
-    recoverBucketedTextIndex(name)
-    textPositional.remove(name)
-    textSegIds(name).foreach(id =>
-      spark.sql(s"DROP TABLE IF EXISTS `${textTable(name, Some(id))}`"))
-    val root = new Path(s"$derivedDir/$name")
-    val fs = root.getFileSystem(hconf)
-    if (fs.exists(root))
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.contains("_seg_b"))
-        .foreach(s => fs.delete(s.getPath, true))
-    val post = if (positional) TextAnalysis.textPostingsPositional(docs)
-      else TextAnalysis.textPostings(docs)
-    writeBucketed(post, textTable(name), "term", nBuckets)
-    // dl from the COMMITTED bucketed postings (dl = Σ tf per doc —
-    // identical integer and row set): one corpus tokenize per build,
-    // the second pass replaced by a pruned (doc_id, tf) table read
-    commitIndexPart(name, "dl",
-      spark.table(textTable(name))
-        .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
-    textPositional.put(name, positional): Unit
-  }
-
-  /** O(Δ) maintenance of the bucketed index: only the new docs are
-    * tokenized; the dl segment lands first (dir), the bucketed
-    * postings segment TABLE last — its registration gates the batch
-    * (a committed batch id no-ops; the compaction narrowing of
-    * [[compactTextIndex]] applies here identically). Segments carry
-    * the SAME bucket count as the base, so every probe join stays
-    * exchange-free per segment. */
-  def upsertTextIndexBucketed(name: String, newDocs: DataFrame,
-      batchId: Long): Unit = {
-    import graft.operators.TextAnalysis
-    recoverBucketedTextIndex(name)
-    val base = textTable(name)
-    require(spark.catalog.tableExists(base) &&
-      hasSuccess(s"$derivedDir/$name/dl"),
-      s"no committed bucketed text index to upsert: $name")
-    val segTable = textTable(name, Some(batchId))
-    if (spark.catalog.tableExists(segTable)) return // committed: no-op
-    val positional = textPositional.getOrElseUpdate(name,
-      spark.table(base).columns.contains("positions"))
-    // ONE tokenize pass per LARGE batch, lazy plan for small ones —
-    // the size-routed [[upsertTextIndex]] shape (see the rationale
-    // there, incl. the measured persist/checkpoint losses at
-    // microbatch sizes); dl derives from the postings either way
-    val postPlan = if (positional) TextAnalysis.textPostingsPositional(newDocs)
-      else TextAnalysis.textPostings(newDocs)
-    val batchBytes = newDocs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val bigBatch = batchBytes > (64L << 20) &&
-      batchBytes < spark.sessionState.conf.defaultSizeInBytes
-    val post = if (bigBatch) postPlan.localCheckpoint() else postPlan
-    // dl source routed as in [[upsertTextIndex]]
-    val dl =
-      if (bigBatch) post.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      else newDocs
-        .select(col("doc_id"), explode(TextAnalysis.tokens(col("text"))).as("term"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    try {
-      // no stats sidecar — the [[upsertTextIndex]] rationale
-      dl.write.mode(SaveMode.Overwrite)
-        .parquet(s"$derivedDir/$name/dl_seg_b$batchId")
-      writeBucketed(post, segTable, "term", bucketCountOf(base))
-    } finally if (bigBatch) post.unpersist(): Unit
-  }
-
-  /** Base table plus every COMMITTED segment table (id ≤ asOf), with
-    * the dl dir segments keyed off the SAME ids; the corpus stats
-    * derive lazily from the dl union as in [[loadTextIndex]]. Every
-    * postings scan is a bucketed-table read — literal queries
-    * bucket-prune, probe joins reshuffle only the term relation. */
-  def loadTextIndexBucketed(name: String,
-      asOf: Option[Long] = None): graft.operators.TextAnalysis.TextIndex = {
-    recoverBucketedTextIndex(name)
-    val base = textTable(name)
-    require(spark.catalog.tableExists(base) &&
-      hasSuccess(s"$derivedDir/$name/dl"),
-      s"no committed bucketed text index: $name")
-    val ids = textSegIds(name)
-      .filter(id => asOf.forall(id <= _))
-      .filter(id => hasSuccess(s"$derivedDir/$name/dl_seg_b$id"))
-    val postings = (spark.table(base) +:
-      ids.map(id => spark.table(textTable(name, Some(id)))))
-      .reduce(_ unionByName _)
-    // one multi-path read per dir part (the loadTextIndex rationale)
-    def unionDirs(part: String) =
-      spark.read.parquet((Seq(s"$derivedDir/$name/$part") ++
-        ids.map(id => s"$derivedDir/$name/${part}_seg_b$id")): _*)
-    val dl = unionDirs("dl")
-    graft.operators.TextAnalysis.TextIndex(postings, dl,
-      dl.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("sum_dl")))
-  }
-
-  /** Fold the bucketed index's segments: one re-bucketed postings
-    * table, folded dl, tombstones for the highest id (dir AND
-    * an empty segment table) so a replayed last batch still no-ops.
-    * The dir swap (folded dl + a `_compact_intent` sidecar) is
-    * the COMMIT POINT; the metastore steps after it (drop segments,
-    * install the folded table, recreate the tombstone) replay
-    * idempotently from the intent on the next touch
-    * ([[recoverBucketedTextIndex]]), so a crash anywhere leaves a
-    * state one touch away from consistent. Reads are serialized with
-    * maintenance per the MV family contract. */
-  def compactTextIndexBucketed(name: String): Unit = {
-    recoverBucketedTextIndex(name)
-    val ids = textSegIds(name)
-      .filter(id => hasSuccess(s"$derivedDir/$name/dl_seg_b$id"))
-    if (ids.isEmpty) return
-    val idx = loadTextIndexBucketed(name)
-    val base = textTable(name)
-    val nBuckets = bucketCountOf(base)
-    writeBucketed(idx.postings, s"${base}__fold", "term", nBuckets)
-    val tmp = s"$derivedDir/$name.tmp"
-    val fs = new Path(tmp).getFileSystem(hconf)
-    fs.delete(new Path(tmp), true)
-    idx.dl.write.parquet(s"$tmp/dl")
-    def tombstone(part: String, schemaOf: DataFrame): Unit =
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schemaOf.schema)
-        .repartition(1)
-        .write.parquet(s"$tmp/${part}_seg_b${ids.max}")
-    tombstone("dl", idx.dl)
-    val out = fs.create(new Path(s"$tmp/_compact_intent"), true)
-    try out.write(s"${ids.max}\n${ids.mkString(",")}"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    installSwap(s"$derivedDir/$name", fs, s"compactTextIndexBucketed($name)")
-    finishBucketedCompact(name)
-  }
-
-  /** The idempotent metastore half of the bucketed compaction, driven
-    * by the committed `_compact_intent`. */
-  private def finishBucketedCompact(name: String): Unit = {
-    val intent = new Path(s"$derivedDir/$name/_compact_intent")
-    val fs = intent.getFileSystem(hconf)
-    if (!fs.exists(intent)) return
-    val in = fs.open(intent)
-    val lines = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8).trim.split("\n")
-    finally in.close()
-    val maxId = lines(0).trim.toLong
-    val ids = lines(1).split(",").map(_.trim.toLong)
-    val base = textTable(name)
-    ids.foreach(id =>
-      spark.sql(s"DROP TABLE IF EXISTS `${textTable(name, Some(id))}`"))
-    if (spark.catalog.tableExists(s"${base}__fold")) {
-      spark.sql(s"DROP TABLE IF EXISTS `$base`")
-      spark.sql(s"ALTER TABLE `${base}__fold` RENAME TO `$base`")
-    }
-    val tomb = textTable(name, Some(maxId))
-    if (!spark.catalog.tableExists(tomb)) {
-      val schema = spark.table(base).schema
-      writeBucketed(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-        tomb, "term", bucketCountOf(base))
-    }
-    fs.delete(intent, false)
-  }
-
-  /** Heal any in-flight bucketed-index maintenance: the dir-level
-    * swap heals through [[hasSuccess]]'s `.bak` recovery (probed on
-    * `dl`), then a committed compaction intent replays its metastore
-    * half. */
-  private def recoverBucketedTextIndex(name: String): Unit = {
-    recoverDirSwap(name, "dl")
-    finishBucketedCompact(name)
-  }
-
   /** ONE operational verb for segment hygiene — the policy knob O(Δ)
     * maintenance needs so nobody schedules three compactors by hand:
     * walk the derived dir, recognize each segmented family by its
@@ -1910,12 +1273,6 @@ class Catalog(spark: SparkSession, baseDir: String,
     } else if (fs.exists(new Path(path, "open")) &&
         segCount("closed_seg_b") >= threshold) {
       compactScd2(name); Some(name)
-    } else if (!fs.exists(new Path(path, "postings")) &&
-        fs.exists(new Path(path, "dl")) &&
-        name.matches("[A-Za-z0-9_]+") &&
-        spark.catalog.tableExists(textTable(name)) &&
-        textSegIds(name).size >= threshold) {
-      compactTextIndexBucketed(name); Some(name)
     } else None
   }
 
@@ -2114,10 +1471,11 @@ class Catalog(spark: SparkSession, baseDir: String,
 
   /** Remove torn-refresh leftovers under [[derivedDir]]: `.tmp`
     * siblings (a crash between a refresh's materialize and swap) and
-    * layouts missing their `_SUCCESS` marker (an interrupted first
-    * write). Committed state is never touched. Run it only while no
-    * refresh is in flight — the same caller-serialization contract as
-    * [[refreshAggMv]]. Returns the number of directories removed. */
+    * layouts with no `_SUCCESS` marker at their root or in any direct
+    * subdirectory (an interrupted first write). Committed state is
+    * never touched. Run it only while no refresh is in flight — the
+    * same caller-serialization contract as [[refreshAggMv]]. Returns
+    * the number of directories removed. */
   def vacuumDerived(): Int = {
     val base = new Path(derivedDir)
     val fs = base.getFileSystem(hconf)
@@ -2130,10 +1488,14 @@ class Catalog(spark: SparkSession, baseDir: String,
       fs.listStatus(base).toSeq.filter(_.isDirectory).map(_.getPath)
         .filter(_.getName.endsWith(".bak"))
         .foreach(p => hasSuccess(p.toString.stripSuffix(".bak")))
+      // multi-part layouts (text and ANN indexes, SCD2 state) commit
+      // per part, so their markers sit one level down
+      def committed(p: Path) = fs.exists(new Path(p, "_SUCCESS")) ||
+        fs.listStatus(p).exists(s =>
+          s.isDirectory && fs.exists(new Path(s.getPath, "_SUCCESS")))
       val victims = fs.listStatus(base).toSeq
         .filter(_.isDirectory).map(_.getPath)
-        .filter(p => p.getName.endsWith(".tmp") ||
-          !fs.exists(new Path(p, "_SUCCESS")))
+        .filter(p => p.getName.endsWith(".tmp") || !committed(p))
       victims.foreach(p => fs.delete(p, true))
       victims.size
     }

@@ -611,27 +611,22 @@ object EventStream {
     * the always-fresh dashboard aggregate: refresh cost tracks the
     * delta, never the history. */
   def mvMaintenanceReplay(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Int = 4, bucketed: Boolean = false): DataFrame = {
+      maxFilesPerTrigger: Int = 4): DataFrame = {
     import graft.sources.Catalog
     val src = Replay.source(spark, sfDir)
     val cat = new Catalog(spark, sfDir,
       Some(Catalog.warehouseLayoutRoot(spark, sfDir)))
-    val name = if (bucketed) "events_type_mv_b" else "events_type_mv"
+    val name = "events_type_mv"
     cat.dropDerived(name)
     Replay.runForeachBatch(spark, src, maxFilesPerTrigger) { (batch, id) =>
       val delta = batch.where(col("user_id") =!= src.sentinelUser)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"),
           sum(expr("CAST(round(value * 100) AS BIGINT)")).as("value_cents"))
-      // batch id makes a retried microbatch a no-op (exactly-once);
-      // the bucketed arm drives the O(touched) hash-bucket layout
-      // through the same live stream — state values must be identical
-      if (bucketed)
-        cat.refreshAggMvBucketed(name, delta, Seq("event_type"), 8, Some(id)): Unit
-      else
-        cat.refreshAggMv(name, delta, Seq("event_type"), Some(id)): Unit
+      // batch id makes a retried microbatch a no-op (exactly-once)
+      cat.refreshAggMv(name, delta, Seq("event_type"), Some(id)): Unit
     }
-    (if (bucketed) cat.bucketedMvState(name) else cat.mvState(name))
+    cat.mvState(name)
       .select(col("event_type"), col("cnt"),
         (col("value_cents").cast("double") / 100.0).as("sum_value"))
   }
@@ -924,17 +919,12 @@ object EventStream {
     * dimension that answers "what did this row say at time t" with
     * refresh cost tracking the delta, never the accumulated history. */
   def scd2Replay(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Int = 4, bucketed: Boolean = false): DataFrame = {
+      maxFilesPerTrigger: Int = 4): DataFrame = {
     import graft.sources.Catalog
     val src = Replay.source(spark, sfDir)
     val cat = new Catalog(spark, sfDir,
       Some(Catalog.warehouseLayoutRoot(spark, sfDir)))
-    // `bucketed` drives the SAME change log through the hash-bucketed
-    // open-state rung (refreshScd2MvBucketed): identical history by
-    // contract — both layouts serve the one whole-log lead() oracle —
-    // with per-microbatch open-state writes O(touched buckets) instead
-    // of O(open keys)
-    val name = if (bucketed) "events_user_scd2_b" else "events_user_scd2"
+    val name = "events_user_scd2"
     cat.dropDerived(name)
     Replay.runForeachBatch(spark, src, maxFilesPerTrigger) { (batch, id) =>
       val changes = batch.where(col("user_id") =!= src.sentinelUser)
@@ -943,11 +933,7 @@ object EventStream {
           when(col("event_type") === "error", "d").otherwise("u").as("op"),
           col("event_type").as("last_type"),
           expr("CAST(round(value * 100) AS BIGINT)").as("value_cents"))
-      if (bucketed)
-        cat.refreshScd2MvBucketed(name, changes, "user_id", "seq", "op", id,
-          nBuckets = 8)
-      else
-        cat.refreshScd2Mv(name, changes, "user_id", "seq", "op", id)
+      cat.refreshScd2Mv(name, changes, "user_id", "seq", "op", id)
     }
     cat.scd2MvHistory(name, "seq", "op")
       .select(col("user_id"), col("last_type"),

@@ -4,134 +4,6 @@ import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
 import graft.sources.Catalog
 
-/** The term-bucketed text index: same results as the dir-layout index,
-  * plus the two plan properties that ARE the point — literal queries
-  * bucket-prune the postings scan, and a term-keyed probe join never
-  * reshuffles the postings side. */
-class BucketedTextIndexSpec extends SparkSpec {
-  import spark.implicits._
-
-  private val query = Seq("data", "join", "scan")
-
-  private def freshCat() = new Catalog(spark, sfDir,
-    Some(java.nio.file.Files.createTempDirectory("graft-btidx").toString))
-
-  private def hits(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-
-  test("bucketed indexed search equals the direct scan; upsert folds losslessly") {
-    val docs = Tables.documents(spark, sfDir)
-    val cat = freshCat()
-    cat.buildTextIndexBucketed("bt1", docs.where(col("doc_id") % 3 =!= 0),
-      nBuckets = 8)
-    cat.upsertTextIndexBucketed("bt1", docs.where(col("doc_id") % 3 === 0), 1L)
-    assert(hits(TextAnalysis.bm25Indexed(cat.loadTextIndexBucketed("bt1"), query)) ==
-      hits(TextAnalysis.bm25(docs, query)))
-    // retry of a committed batch id: no-op
-    cat.upsertTextIndexBucketed("bt1", docs.where(col("doc_id") % 3 === 0), 1L)
-    assert(hits(TextAnalysis.bm25Indexed(cat.loadTextIndexBucketed("bt1"), query)) ==
-      hits(TextAnalysis.bm25(docs, query)))
-  }
-
-  test("a literal query PRUNES the postings scan to <= |terms| buckets") {
-    val docs = Tables.documents(spark, sfDir)
-    val cat = freshCat()
-    cat.buildTextIndexBucketed("bt2", docs, nBuckets = 16)
-    val pruned = cat.loadTextIndexBucketed("bt2").postings
-      .where(col("term").isin(query: _*))
-    val plan = pruned.queryExecution.executedPlan.toString
-    val m = "SelectedBucketsCount: (\\d+) out of 16".r.findFirstMatchIn(plan)
-    assert(m.nonEmpty, s"no bucket pruning in plan:\n$plan")
-    assert(m.get.group(1).toInt <= query.size, plan)
-  }
-
-  test("a term-keyed probe join has NO Exchange on the postings side") {
-    val docs = Tables.documents(spark, sfDir)
-    val cat = freshCat()
-    cat.buildTextIndexBucketed("bt3", docs, nBuckets = 8)
-    val terms = query.toDF("term")
-    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val joined = cat.loadTextIndexBucketed("bt3").postings
-        .join(terms, "term")
-      val plan = joined.queryExecution.executedPlan.toString
-      // exactly ONE shuffle: the tiny term relation moves to the
-      // postings' bucketing; the postings scan itself never exchanges
-      val exchanges = plan.linesIterator
-        .count(_.contains("Exchange hashpartitioning"))
-      assert(exchanges == 1, s"expected 1 exchange (terms side only):\n$plan")
-      val scanLine = plan.linesIterator
-        .find(l => l.contains("FileScan") && l.contains("graft_tidx_bt3"))
-      assert(scanLine.nonEmpty, plan)
-      assert(plan.contains("SelectedBucketsCount") ||
-        plan.contains("Bucketed: true"), plan)
-    }
-  }
-
-  test("asOf serves the index as of a batch; compaction folds and keeps results") {
-    val docs = Tables.documents(spark, sfDir)
-    val cat = freshCat()
-    val base = docs.where(col("doc_id") % 3 === 1)
-    cat.buildTextIndexBucketed("bt4", base, nBuckets = 8)
-    cat.upsertTextIndexBucketed("bt4", docs.where(col("doc_id") % 3 === 2), 1L)
-    cat.upsertTextIndexBucketed("bt4", docs.where(col("doc_id") % 3 === 0), 2L)
-    assert(hits(TextAnalysis.bm25Indexed(
-        cat.loadTextIndexBucketed("bt4", asOf = Some(0L)), query)) ==
-      hits(TextAnalysis.bm25(base, query)))
-    val before = hits(TextAnalysis.bm25Indexed(cat.loadTextIndexBucketed("bt4"), query))
-    cat.compactTextIndexBucketed("bt4")
-    assert(hits(TextAnalysis.bm25Indexed(cat.loadTextIndexBucketed("bt4"), query)) ==
-      before)
-    // replay of the highest folded batch no-ops (tombstone table)
-    cat.upsertTextIndexBucketed("bt4", docs.where(col("doc_id") % 3 === 0), 2L)
-    assert(hits(TextAnalysis.bm25Indexed(cat.loadTextIndexBucketed("bt4"), query)) ==
-      before)
-    // the folded stats equal the whole-corpus aggregates
-    val st = cat.loadTextIndexBucketed("bt4").stats.collect().head
-    assert(st.getLong(0) == docs.count())
-  }
-
-  test("a torn compaction (committed intent) heals on the next touch") {
-    val docs = Tables.documents(spark, sfDir)
-    val cat = freshCat()
-    cat.buildTextIndexBucketed("bt5", docs.where(col("doc_id") % 2 === 0),
-      nBuckets = 8)
-    cat.upsertTextIndexBucketed("bt5", docs.where(col("doc_id") % 2 =!= 0), 1L)
-    val expected = hits(TextAnalysis.bm25Indexed(cat.loadTextIndexBucketed("bt5"), query))
-    cat.compactTextIndexBucketed("bt5")
-    // simulate the crash window: re-write the intent as if the dir
-    // swap committed but the metastore half never ran — the next read
-    // must replay it idempotently (drops are IF EXISTS, rename guarded)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      s"${cat.derivedDir}/bt5/_compact_intent"), "1\n1")
-    assert(hits(TextAnalysis.bm25Indexed(cat.loadTextIndexBucketed("bt5"), query)) ==
-      expected)
-    assert(!new java.io.File(s"${cat.derivedDir}/bt5/_compact_intent").exists())
-  }
-
-  test("rebuild under an existing name drops stale bucketed segments") {
-    val docs = Tables.documents(spark, sfDir)
-    val cat = freshCat()
-    cat.buildTextIndexBucketed("bt6", docs.where(col("doc_id") % 3 =!= 0),
-      nBuckets = 8)
-    cat.upsertTextIndexBucketed("bt6", docs.where(col("doc_id") % 3 === 0), 1L)
-    cat.buildTextIndexBucketed("bt6", docs, nBuckets = 8)
-    val st = cat.loadTextIndexBucketed("bt6").stats.collect().head
-    assert(st.getLong(0) == docs.count())
-    assert(hits(TextAnalysis.bm25Indexed(cat.loadTextIndexBucketed("bt6"), query)) ==
-      hits(TextAnalysis.bm25(docs, query)))
-  }
-
-  private def withSQLConf[A](pairs: (String, String)*)(f: => A): A = {
-    val conf = spark.conf
-    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try f finally olds.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-}
-
 /** Phrase-scored BM25: adjacency, not co-occurrence — the planted
   * fixture separates "new york" from "york ... new" — and the indexed
   * form equals the scan. */

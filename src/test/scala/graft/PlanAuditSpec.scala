@@ -161,11 +161,11 @@ class PlanAuditSpec extends SparkSpec {
       // metadata on both sides of every cross
       "t_bm25", "sql_bm25", "fs_bm25_indexed", "fs_bm25_upsert",
       "d_index_stream",
-      // round 12: the same BM25 stats-cross shape over the bucketed
-      // index, the auto-maintained live index, and the PHRASE forms
-      // (whose extra crosses are the ≤|phrase| per-doc position-array
-      // joins at pruned-postings grain + the 1-row stats)
-      "fs_bm25_bucketed", "d_index_maint", "t_bm25_phrase",
+      // round 12: the same BM25 stats-cross shape over the
+      // auto-maintained live index, and the PHRASE forms (whose extra
+      // crosses are the ≤|phrase| per-doc position-array joins at
+      // pruned-postings grain + the 1-row stats)
+      "d_index_maint", "t_bm25_phrase",
       "fs_bm25_phrase_idx", "sql_bm25_phrase",
       // t_mlt: the identical BM25 stats-cross — 1-row corpus stats
       // into picked-term-pruned tf grain; the query terms are

@@ -1,101 +1,44 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.operators.TextAnalysis
 import graft.sources.Catalog
 
-/** Round-13 regression pins for the round-12 advice findings: the
-  * empty-first-delta bucketed refresh (a dataless commit would pass
-  * hasSuccess yet crash schema inference on every later read), text
-  * index segment discovery under a non-default current database, and
-  * the rank-deficient PCA oracle guards. */
+/** Round-13 regression pins for the round-12 advice findings: empty
+  * deltas into the durable MV (an empty first delta leaves a readable
+  * schema-bearing state, an empty later delta is a no-op that still
+  * stamps its batch id) and the rank-deficient PCA oracle guards. */
 class Round13FixSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshCat() = new Catalog(spark, sfDir,
     Some(java.nio.file.Files.createTempDirectory("graft-r13").toString))
 
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getString(0), r.getLong(1))).toSet
+
   test("an empty FIRST delta commits nothing — no dataless state dir") {
     val cat = freshCat()
     val empty = Seq.empty[(String, Long)].toDF("k", "n")
-    val out = cat.refreshAggMvBucketed("mv", empty, Seq("k"), 8)
+    val out = cat.refreshAggMv("mv", empty, Seq("k"))
     assert(out.isEmpty && out.columns.toSeq == Seq("k", "n"))
-    // nothing installed: the state read refuses (no committed state)
-    // instead of failing schema inference over an empty dir
-    val ex = intercept[IllegalArgumentException](cat.bucketedMvState("mv"))
-    assert(ex.getMessage.contains("no committed bucketed MV state"))
-    // the stream goes on: the next real delta commits normally
-    cat.refreshAggMvBucketed("mv",
-      Seq(("a", 2L), ("b", 3L)).toDF("k", "n"), Seq("k"), 8)
-    assert(cat.bucketedMvState("mv").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet ==
-      Set(("a", 2L), ("b", 3L)))
+    // no rows, but the state reads back with its schema instead of
+    // failing schema inference over an empty dir
+    assert(cat.mvState("mv").isEmpty)
+    // the stream goes on: the next real delta serves exactly its rows
+    cat.refreshAggMv("mv", Seq(("a", 2L), ("b", 3L)).toDF("k", "n"), Seq("k"))
+    assert(rows(cat.mvState("mv")) == Set(("a", 2L), ("b", 3L)))
   }
 
   test("an empty LATER delta is a readable no-op against committed state") {
     val cat = freshCat()
-    cat.refreshAggMvBucketed("mv2", Seq(("a", 2L)).toDF("k", "n"), Seq("k"), 8)
-    val out = cat.refreshAggMvBucketed("mv2",
-      Seq.empty[(String, Long)].toDF("k", "n"), Seq("k"), 8,
-      batchId = Some(5L))
-    assert(out.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
-      Set(("a", 2L)))
+    cat.refreshAggMv("mv2", Seq(("a", 2L)).toDF("k", "n"), Seq("k"))
+    val out = cat.refreshAggMv("mv2",
+      Seq.empty[(String, Long)].toDF("k", "n"), Seq("k"), batchId = Some(5L))
+    assert(rows(out) == Set(("a", 2L)))
     // and the batch marker landed: a retry of the same id no-ops
-    val again = cat.refreshAggMvBucketed("mv2",
-      Seq(("a", 99L)).toDF("k", "n"), Seq("k"), 8, batchId = Some(5L))
-    assert(again.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
-      Set(("a", 2L)))
-  }
-
-  test("bucketed text-index segments are discovered under a non-default database") {
-    val docs = Tables.documents(spark, sfDir)
-    val query = Seq("data", "join", "scan")
-    val cat = freshCat()
-    val prev = spark.catalog.currentDatabase
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_r13_db")
-    spark.sql("USE graft_r13_db")
-    try {
-      cat.buildTextIndexBucketed("r13db",
-        docs.where(col("doc_id") % 2 === 0), nBuckets = 4)
-      // the upsert's segment table lands in graft_r13_db; discovery
-      // must look there, not in a hardcoded "default"
-      cat.upsertTextIndexBucketed("r13db",
-        docs.where(col("doc_id") % 2 === 1), 1L)
-      def hits(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(hits(TextAnalysis.bm25Indexed(
-          cat.loadTextIndexBucketed("r13db"), query)) ==
-        hits(TextAnalysis.bm25(docs, query)))
-    } finally {
-      spark.sql(s"USE $prev")
-      spark.sql("DROP DATABASE IF EXISTS graft_r13_db CASCADE")
-    }
-  }
-
-  test("bucketedMvLookup opens ONLY the probe's buckets and joins exactly") {
-    val cat = freshCat()
-    val base = (1 to 400).map(i => (s"k$i", i.toLong)).toDF("k", "n")
-    cat.refreshAggMvBucketed("mv", base, Seq("k"), 16)
-    val probe = Seq("k7", "k99").toDF("k")
-    val out = cat.bucketedMvLookup("mv", probe, Seq("k"))
-    // exact results: the probe's rows, nothing else
-    assert(out.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
-      Set(("k7", 7L), ("k99", 99L)))
-    // plan-level pin: the state scan's input files all live in the
-    // probed buckets' dirs — the other 14+ buckets are never opened
-    val probedGbs = probe
-      .select(pmod(hash(col("k")), lit(16)).cast("int")).collect()
-      .map(_.getInt(0)).toSet
-    val scanned = out.inputFiles.toSeq.filter(_.contains("gb="))
-    assert(scanned.nonEmpty)
-    scanned.foreach { f =>
-      val gb = "gb=(\\d+)".r.findFirstMatchIn(f).get.group(1).toInt
-      assert(probedGbs.contains(gb), s"lookup opened unprobed bucket: $f")
-    }
-    // a probe with no committed bucket serves an empty exact result
-    val miss = cat.bucketedMvLookup("mv",
-      Seq("never-written").toDF("k"), Seq("k"))
-    assert(miss.isEmpty && miss.columns.contains("n"))
+    val again = cat.refreshAggMv("mv2",
+      Seq(("a", 99L)).toDF("k", "n"), Seq("k"), batchId = Some(5L))
+    assert(rows(again) == Set(("a", 2L)))
+    assert(rows(cat.mvState("mv2")) == Set(("a", 2L)))
   }
 
   test("PCA oracles carry the rank-deficiency guards (structural pin)") {

@@ -66,6 +66,12 @@ class Round7OpsSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft-spec-vac").toString
     val cat = new graft.sources.Catalog(spark, root)
     cat.refreshAggMv("good", Seq(("a", 1L)).toDF("k", "n"), Seq("k"))
+    // multi-part layouts commit per part: their `_SUCCESS` markers sit
+    // one level down (postings/, dl/; open/, closed_seg_b*/)
+    cat.buildTextIndex("tidx", Seq((1L, "data join scan"), (2L, "join data"))
+      .toDF("doc_id", "text"))
+    cat.refreshScd2Mv("scd", Seq(("u1", 1L, "u", 10L), ("u1", 2L, "u", 20L))
+      .toDF("k", "seq", "op", "v"), "k", "seq", "op", 0L)
     // plant a torn refresh (.tmp sibling) and an interrupted first
     // write (dir without _SUCCESS)
     val d = new java.io.File(cat.derivedDir)
@@ -77,6 +83,8 @@ class Round7OpsSpec extends SparkSpec {
     // committed state intact and readable; second vacuum is a no-op
     assert(cat.mvState("good").collect().map(r => (r.getString(0), r.getLong(1)))
       .toSeq == Seq(("a", 1L)))
+    assert(cat.loadTextIndex("tidx").dl.count() == 2)
+    assert(cat.scd2MvHistory("scd", "seq", "op").count() == 2)
     assert(cat.vacuumDerived() == 0)
   }
 

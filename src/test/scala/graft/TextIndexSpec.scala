@@ -84,17 +84,6 @@ class TextIndexSpec extends SparkSpec {
     // folded stats equal the monolithic build's
     assert(cat.loadTextIndex("tibig").stats.collect().head ==
       mono.loadTextIndex("timono").stats.collect().head)
-    // the BUCKETED upsert takes the same size route — same fixture,
-    // same equality against its own monolithic rebuild
-    val catB = freshCat()
-    catB.buildTextIndexBucketed("tibigb", docs, nBuckets = 8)
-    catB.upsertTextIndexBucketed("tibigb", bigDocs, 1L)
-    val monoB = freshCat()
-    monoB.buildTextIndexBucketed("timonob", docs.unionByName(bigDocs),
-      nBuckets = 8)
-    assert(
-      hits(TextAnalysis.bm25Indexed(catB.loadTextIndexBucketed("tibigb"), query)) ==
-      hits(TextAnalysis.bm25Indexed(monoB.loadTextIndexBucketed("timonob"), query)))
   }
 
   test("retry of a committed batch id is a no-op; torn segment never serves") {

@@ -10,7 +10,9 @@
 #      ship with an unaudited plan shape (the round-8 failure class).
 #      A staged change to the corpus-prep operators (CorpusPipeline,
 #      TextAnalysis) runs their specs and re-drives the SparkEntry
-#      entries built on them the same way. A staged change under
+#      entries built on them the same way, and so does a staged change
+#      to sources/Catalog.scala (derived-state maintenance: MVs, text
+#      index, SCD2) for its specs and entries. A staged change under
 #      graft/plans/ or to functions/CosineSimilarity.scala (home of the
 #      GraftExtensions session extensions) also runs PlanAuditSpec:
 #      session extensions shape the plan of every driver entry.
@@ -67,11 +69,23 @@ if grep -qE "$prep_re" <<<"$staged"; then
   }
 fi
 
+catalog_re='sources/Catalog\.scala'
+if grep -qE "$catalog_re" <<<"$staged"; then
+  echo "precommit: derived-state specs..." >&2
+  (cd "$checkdir" && sbt -batch "testOnly graft.TextIndexSpec graft.AutoMaintainSpec graft.Round7OpsSpec graft.Round7bOpsSpec graft.Round9DurabilitySpec graft.Scd2BackfillSpec graft.KmvMvSpec graft.Round13FixSpec" < /dev/null) \
+      > /tmp/precommit_catalog.log 2>&1 || {
+    tail -30 /tmp/precommit_catalog.log >&2
+    echo "precommit: REFUSED — derived-state specs failed" >&2
+    exit 1
+  }
+fi
+
 # Driver-entry smoke: any query name whose SparkEntry line is in the
 # staged diff gets re-driven against the oracle, and the plan audit
 # runs over the full driver surface.
-# Corpus-prep operator changes re-drive the entries that run them.
-if grep -qE "SparkEntry\.scala|$prep_re" <<<"$staged"; then
+# Corpus-prep operator and Catalog changes re-drive the entries that
+# run them.
+if grep -qE "SparkEntry\.scala|$prep_re|$catalog_re" <<<"$staged"; then
   # the greps legitimately match nothing when the diff only touches
   # oracle SQL bodies or comments — don't let pipefail kill the hook
   touched=$(git diff --cached -U0 -- src/main/scala/graft/SparkEntry.scala \
@@ -80,6 +94,10 @@ if grep -qE "SparkEntry\.scala|$prep_re" <<<"$staged"; then
   entries=$touched
   if grep -qE "$prep_re" <<<"$staged"; then
     touched=$(tr , '\n' <<<"$touched,d_corpus_prep,d_prep_attrition,t_quality,t_lang_id,d_source_stats,d_quality_stream" \
+      | sed '/^$/d' | sort -u | paste -sd, -)
+  fi
+  if grep -qE "$catalog_re" <<<"$staged"; then
+    touched=$(tr , '\n' <<<"$touched,fs_incr_agg,fs_mv_lookup,fs_mv_stream,fs_bm25_indexed,fs_bm25_upsert,d_index_maint,e_scd2_stream,fs_scd2_backfill" \
       | sed '/^$/d' | sort -u | paste -sd, -)
   fi
   if [[ -n "$touched" ]]; then

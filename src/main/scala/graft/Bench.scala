@@ -23,7 +23,7 @@ object Bench {
       .write.format("noop").mode("overwrite").save()
     locally {
       import org.apache.spark.sql.functions._
-      val r = spark.read.parquet(s"$sfDir/region.parquet")
+      val r = Tables.region(spark, sfDir)
       r.join(broadcast(r.select(col("r_regionkey").as("k"))),
           col("r_regionkey") === col("k"))
         .select(explode(split(col("r_name"), "")).as("c"))

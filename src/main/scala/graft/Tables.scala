@@ -1,8 +1,12 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the test star schema (TPC-H-ish) + events/documents/
   * embeddings. One parquet file per table under a scale-factor dir.
@@ -10,15 +14,69 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * Spark-first analog of the reference DFS's controller file index
   * (reference: dfs/controller/fileIndex.go) — table name → storage
   * location; the parquet reader replaces chunked retrieval
-  * (reference: dfs/client/downloader.go).
+  * (reference: dfs/client/downloader.go). Like that index, it keeps
+  * what it learned about each file: a table's schema is resolved ONCE
+  * per session per file version. A bare `spark.read.parquet` infers
+  * the schema by launching a Spark job that reads the footers, so
+  * every table read paid a job before the query's own work began
+  * (30 of the 81 jobs of a traced `query_mix` run); a load through
+  * [[load]] launches none once the file is known.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private type Version = (String, Seq[(String, Long, Long)])
+  /** Inferred schemas per session, keyed by file version (see [[load]]).
+    * Weak in the session: a stopped session and its entries go away. */
+  private val schemas = new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Version, StructType]]
+
+  /** Table `name` under `sfDir` (`<sfDir>/<name>.parquet`, a file or a
+    * directory of part files), read with a schema resolved once per
+    * session and file version. The key is the path plus the sorted
+    * (path, length, modification time) of the data files Spark would
+    * read: the file itself, or every file under the directory whose
+    * relative path has no `_`- or `.`-prefixed component. A rewrite or
+    * an overwrite that writes new part files therefore gets a new key
+    * and is inferred again. The cache is per session because parquet
+    * inference reads session confs (`nanosAsLong`, `inferTimestampNTZ`).
+    *
+    * The one rewrite the key cannot see: the same path rewritten to the
+    * same length within the filesystem's modification-time granularity
+    * (1 ms on the local filesystem, 1 s on some others). Such a rewrite
+    * is read with the schema of the file it replaced. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val perSession = schemas.synchronized(
+      schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap()))
+    val key: Version = (path, dataFiles(spark, path))
+    val schema = Option(perSession.get(key)).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      perSession.put(key, inferred)
+      inferred
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The sorted (path, length, mtime) of the data files under `path`;
+    * empty when it does not exist (inference then raises Spark's own
+    * error, and nothing is cached). */
+  private def dataFiles(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = try fs.getFileStatus(p) catch { case _: FileNotFoundException => return Nil }
+    val files =
+      if (root.isFile) Iterator(root)
+      else {
+        val it = fs.listFiles(p, true)
+        val prefix = root.getPath.toString
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .filterNot(_.getPath.toString.stripPrefix(prefix).split('/')
+            .exists(c => c.startsWith("_") || c.startsWith(".")))
+      }
+    files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+  }
 
   /** Spread a SMALL-SPLIT input across the session's cores before a
     * compute-heavy stage. The local test tables are single-row-group

@@ -1529,8 +1529,9 @@ class Catalog(spark: SparkSession, baseDir: String,
       .sorted
   }
 
-  def table(name: String): DataFrame =
-    spark.read.parquet(s"$baseDir/$name.parquet")
+  /** Table `name` in the base dir, read through [[graft.Tables.load]]
+    * (schema resolved once per session and file version). */
+  def table(name: String): DataFrame = graft.Tables.load(spark, baseDir, name)
 
   def read(name: String, format: String = "parquet"): DataFrame = format match {
     case "parquet" => table(name)

@@ -12,7 +12,10 @@
 #      TextAnalysis) runs their specs and re-drives the SparkEntry
 #      entries built on them the same way, and so does a staged change
 #      to sources/Catalog.scala (derived-state maintenance: MVs, text
-#      index, SCD2) for its specs and entries. A staged change under
+#      index, SCD2) for its specs and entries, and so does a staged
+#      change to Tables.scala (the table loader every driver entry reads
+#      through: schema resolution, timestamp flavors) for its specs, the
+#      plan audit and the query_mix entries. A staged change under
 #      graft/plans/ or to functions/CosineSimilarity.scala (home of the
 #      GraftExtensions session extensions) also runs PlanAuditSpec:
 #      session extensions shape the plan of every driver entry.
@@ -80,12 +83,23 @@ if grep -qE "$catalog_re" <<<"$staged"; then
   }
 fi
 
+tables_re='graft/Tables\.scala'
+if grep -qE "$tables_re" <<<"$staged"; then
+  echo "precommit: table-loader specs..." >&2
+  (cd "$checkdir" && sbt -batch "testOnly graft.TablesSchemaSpec graft.TimestampFlavorSpec graft.TestdataContractSpec graft.PlanAuditSpec" < /dev/null) \
+      > /tmp/precommit_tables.log 2>&1 || {
+    tail -30 /tmp/precommit_tables.log >&2
+    echo "precommit: REFUSED — table-loader specs failed" >&2
+    exit 1
+  }
+fi
+
 # Driver-entry smoke: any query name whose SparkEntry line is in the
 # staged diff gets re-driven against the oracle, and the plan audit
 # runs over the full driver surface.
-# Corpus-prep operator and Catalog changes re-drive the entries that
-# run them.
-if grep -qE "SparkEntry\.scala|$prep_re|$catalog_re" <<<"$staged"; then
+# Corpus-prep operator, Catalog and Tables changes re-drive the entries
+# that run them.
+if grep -qE "SparkEntry\.scala|$prep_re|$catalog_re|$tables_re" <<<"$staged"; then
   # the greps legitimately match nothing when the diff only touches
   # oracle SQL bodies or comments — don't let pipefail kill the hook
   touched=$(git diff --cached -U0 -- src/main/scala/graft/SparkEntry.scala \
@@ -98,6 +112,10 @@ if grep -qE "SparkEntry\.scala|$prep_re|$catalog_re" <<<"$staged"; then
   fi
   if grep -qE "$catalog_re" <<<"$staged"; then
     touched=$(tr , '\n' <<<"$touched,fs_incr_agg,fs_mv_lookup,fs_mv_stream,fs_bm25_indexed,fs_bm25_upsert,d_index_maint,e_scd2_stream,fs_scd2_backfill" \
+      | sed '/^$/d' | sort -u | paste -sd, -)
+  fi
+  if grep -qE "$tables_re" <<<"$staged"; then
+    touched=$(tr , '\n' <<<"$touched,q_word_count,q_avg_by_key,q_grep,q1_agg,q3_join" \
       | sed '/^$/d' | sort -u | paste -sd, -)
   fi
   if [[ -n "$touched" ]]; then

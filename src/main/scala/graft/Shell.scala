@@ -421,7 +421,7 @@ object Shell {
           .show(truncate = false)
       case "maintain" :: rest if rest.length <= 1 =>
         // segment hygiene: compact every derived artifact at/past the
-        // threshold (ANN + text indexes, SCD2 histories)
+        // threshold (ANN + text indexes, SCD2 histories, join MVs)
         val done = cat.maintain(rest.headOption.map(_.toInt).getOrElse(8))
         println(if (done.isEmpty) "nothing to compact"
           else done.mkString("compacted: ", ", ", ""))

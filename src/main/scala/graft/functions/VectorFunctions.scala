@@ -31,23 +31,6 @@ object VectorFunctions {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
-  /** Dot product unrolled for a known dimension: plain codegen'd
-    * GetArrayItem/multiply/add chain. Faster than the HOF fold, but the
-    * expression tree grows with dim (slow codegen compile at dim ≥ 64) —
-    * the native `dot_product` expression supersedes it in hot paths. */
-  def dotFixed(a: Column, b: Column, dim: Int): Column =
-    (0 until dim)
-      .map(i => element_at(a, i + 1) * element_at(b, i + 1))
-      .reduce(_ + _)
-
   /** L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** L2 norm, unrolled fixed-dimension variant. */
-  def normFixed(a: Column, dim: Int): Column = sqrt(dotFixed(a, a, dim))
-
-  /** Cosine similarity given precomputed norms (preferred in joins — the
-    * norms are computed once per vector, not once per pair). */
-  def cosineWithNorms(dotAb: Column, normA: Column, normB: Column): Column =
-    dotAb / (normA * normB)
 }

@@ -165,35 +165,6 @@ object Bpe {
       .withColumn("n_subwords", size(col("seg")))
   }
 
-  /** Stable token ids for a learned [[vocab]]: rank by (count desc,
-    * token) — a total order, so ids are deterministic across runs and
-    * engines. The subword vocabulary is BOUNDED (≤ alphabet +
-    * nMerges entries, independent of corpus size), so collecting it is
-    * bounded metadata, like the centroid table or the importance ratio
-    * array. Id 0 is the highest-frequency subword. */
-  def vocabIds(vocab: DataFrame): Map[String, Int] = {
-    import org.apache.spark.sql.Row
-    vocab.select(col("tok"), col("n")).collect()
-      .sortBy { case Row(t: String, n: Long) => (-n, t) }
-      .zipWithIndex
-      .map { case (Row(t: String, _), i) => t -> i }
-      .toMap
-  }
-
-  /** [[encode]] to integer token ids — what a training pipeline ships:
-    * the id table rides into the plan as ONE map literal (bounded
-    * vocabulary), so this stays a MAP-ONLY projection; subwords absent
-    * from the vocabulary (new text under a frozen tokenizer) emit
-    * `unkId`. */
-  def encodeIds(docs: DataFrame, merges: Seq[(String, String)],
-      ids: Map[String, Int], unkId: Int = -1): DataFrame = {
-    val idMap = typedLit(ids)
-    encode(docs, merges)
-      .withColumn("ids",
-        transform(col("seg"), t => coalesce(element_at(idMap, t), lit(unkId))))
-      .drop("seg")
-  }
-
   /** DuckDB oracle for [[merges]]: the same rounds as chained CTEs —
     * pair counts from the current segmentation, a LIMIT-1 argmax with
     * the identical total-order tie-break, and a `list_reduce` fold

@@ -21,13 +21,10 @@ import org.apache.spark.sql.functions._
   *
   * The only wide shuffles are the ones the algorithms require (keeper
   * window, candidate join, component propagation over the pair set).
-  * Three entry points run that sequence and differ only in where its
-  * fan-out points live:
+  * Two entry points run that sequence, both pinning its fan-out points
+  * in the session:
   *
-  *   - [[prepare]] pins them in the session (persist), for single runs;
-  *   - [[prepareStaged]] writes the stage outputs to storage and reads
-  *     them back, so a retried run resumes at the first unfinished
-  *     stage — the 100 TB shape;
+  *   - [[prepare]] prepares a corpus on its own;
   *   - [[prepareIncrement]] prepares a new batch against an existing
   *     corpus's signature index; only its component resolution differs.
   */
@@ -100,12 +97,12 @@ object CorpusPipeline {
         graft.functions.MinHashSig.minhashSig(col("tk"), cfg.shingleN,
           cfg.numHashes).as("s"))
 
-  /** The stage sequence every entry point runs. `keep(stage, frame)`
-    * decides where a stage's output lives — pinned, written and read
-    * back, or left lazy — and returns the frame the next stage reads;
-    * it sees "quality_lang", "exact_dedup", "near_dedup" and, with a
-    * benchmark, "decontaminated". `corpusIndex` switches on the
-    * incremental component resolution of [[prepareIncrement]].
+  /** The stage sequence both entry points run. It pins the two fan-out
+    * points (the signed scan `quality_lang` feeds the keeper window AND
+    * the anti-join; `near_dedup` feeds decontamination AND the result)
+    * with evictable MEMORY_AND_DISK storage and records them for
+    * [[Result.release]]. `corpusIndex` switches on the incremental
+    * component resolution of [[prepareIncrement]].
     *
     * The exact-dedup keeper is one `row_number` window over the content
     * digest (one exchange, not an aggregate + join-back); the LSH stage
@@ -113,15 +110,15 @@ object CorpusPipeline {
     * of re-tokenizing, and decontamination explodes the scan's distinct
     * shingle-hash set instead of re-shingling the surviving corpus. */
   private def run(docs: DataFrame, benchmark: Option[DataFrame], cfg: Config,
-      corpusIndex: Option[DataFrame],
-      keep: (String, DataFrame) => DataFrame): Result = {
+      corpusIndex: Option[DataFrame]): Result = {
     import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // one corpus read: signals + digest + signatures.
     // (A pre-scan repartition to parallelize single-split inputs was
     // measured and REJECTED: at bench SF the extra exchange + stage
     // cost more than the single-core signing it spread out, and at
     // production scale the input has more splits than cores anyway.)
-    val filtered = keep("quality_lang", fusedScan(docs, cfg))
+    val filtered = fusedScan(docs, cfg).persist(MEMORY_AND_DISK)
     // exact-dedup losers (every non-min doc_id of a content-hash clone
     // cluster) rank over a TWO-COLUMN projection of the scan — the only
     // thing that shuffles is (doc_id, h), never text or signatures —
@@ -131,16 +128,15 @@ object CorpusPipeline {
       .withColumn("__rn",
         row_number().over(Window.partitionBy(col("h")).orderBy(col("doc_id"))))
       .where(col("__rn") > 1).select(col("doc_id"))
-    val unique = keep("exact_dedup",
-      filtered.join(broadcast(losers), Seq("doc_id"), "left_anti"))
+    val unique = filtered.join(broadcast(losers), Seq("doc_id"), "left_anti")
     val sigCols = col("doc_id") +:
       (0 until cfg.numHashes).map(i =>
         element_at(col("s.mh"), i + 1).as(s"mh$i")) :+ col("s.ss").as("ss")
     val signed = unique.where(col("s").isNotNull).select(sigCols: _*)
     val pairs = Dedup.minhashLshSigned(signed,
       cfg.numHashes, cfg.bands, cfg.jaccard, cfg.maxBucket)
-    // [[Dedup.applyDedupTransitive]] inlined so the DROP SET is a named
-    // frame: attrition counts it directly (each stage is a subset of
+    // transitive resolution (each component keeps its min id) as a
+    // named DROP SET: attrition counts it directly (each stage is a subset of
     // the previous, so survivor counts are running differences) instead
     // of recounting the stacked anti-joined frames
     val comp = Dedup.connectedComponents(pairs)
@@ -159,8 +155,8 @@ object CorpusPipeline {
         .unionByName(comp.join(touched, "component").select(col("id").as("doc_id")))
         .unionByName(touched.select(col("component").as("doc_id")))
     }
-    val deduped = keep("near_dedup",
-      unique.join(nearDrops, Seq("doc_id"), "left_anti"))
+    val deduped = unique.join(nearDrops, Seq("doc_id"), "left_anti")
+      .persist(MEMORY_AND_DISK)
 
     val (clean, flaggedSet) = benchmark match {
       case Some(bench) =>
@@ -177,35 +173,18 @@ object CorpusPipeline {
           .agg(count(lit(1)).as("n_shared"))
           .where(col("n_shared") >= cfg.minSharedShingles)
           .select(col("doc_id"))
-        (keep("decontaminated", deduped.join(flagged, Seq("doc_id"), "left_anti")),
-          Some(flagged))
+        (deduped.join(flagged, Seq("doc_id"), "left_anti"), Some(flagged))
       case None => (deduped, None)
     }
 
     // split assignment is a pure column — no join, stays map-only
     val split = clean.withColumn("split", Sampling.splitColumn(col("doc_id")))
       .drop("h", "s")
-    Result(split, Nil, Seq(
+    Result(split, Seq(filtered, deduped), Seq(
       "input" -> docs, "quality_lang" -> filtered, "exact_dedup" -> unique,
       "near_dedup" -> deduped, "decontaminated" -> clean),
       Seq("exact_losers" -> losers, "near_drops" -> nearDrops) ++
         flaggedSet.map("contaminated" -> _))
-  }
-
-  /** The in-session keeper: pins the two fan-out points (the signed
-    * scan feeds the keeper window AND the anti-join; `near_dedup` feeds
-    * decontamination AND the result) with evictable MEMORY_AND_DISK
-    * storage, and records them for [[Result.release]]. */
-  private def inSession(docs: DataFrame, benchmark: Option[DataFrame], cfg: Config,
-      corpusIndex: Option[DataFrame]): Result = {
-    val pins = Seq.newBuilder[DataFrame]
-    val r = run(docs, benchmark, cfg, corpusIndex, {
-      case ("quality_lang" | "near_dedup", df) =>
-        pins += df
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case (_, df) => df
-    })
-    r.copy(pinned = pins.result())
   }
 
   /** Run the full preparation in this session. `benchmark` is the eval
@@ -213,7 +192,7 @@ object CorpusPipeline {
     * [[Result.release]] once the corpus is consumed. */
   def prepare(docs: DataFrame, benchmark: Option[DataFrame] = None,
       cfg: Config = Config()): Result =
-    inSession(docs, benchmark, cfg, None)
+    run(docs, benchmark, cfg, None)
 
   /** Attrition report — "where did my data go": surviving document
     * count after each stage. One MELTED counting pass (round 14):
@@ -282,39 +261,7 @@ object CorpusPipeline {
     * the index to absorb the batch. */
   def prepareIncrement(newDocs: DataFrame, corpusIndex: DataFrame,
       benchmark: Option[DataFrame] = None, cfg: Config = Config()): Result =
-    inSession(newDocs, benchmark, cfg, Some(corpusIndex))
-
-  /** Storage-checkpointed, RESUMABLE preparation — the 100 TB shape:
-    * the [[prepare]] sequence with its stage outputs written to
-    * `stageDir/<stage>` (`unique`, `deduped`, and `clean` when a
-    * benchmark is given) and read back. A stage is skipped (read back
-    * instead of recomputed) when its `_SUCCESS` marker exists, so a
-    * failure at stage N restarts at stage N, not at the raw corpus.
-    * Stage outputs are plain parquet — inspectable, and a natural audit
-    * trail. The scan is pinned as in [[prepare]] (it feeds both sides
-    * of the `unique` stage) and released before the return. */
-  def prepareStaged(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-      stageDir: String, benchmark: Option[DataFrame] = None,
-      cfg: Config = Config()): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dirs = Map("exact_dedup" -> "unique", "near_dedup" -> "deduped",
-      "decontaminated" -> "clean")
-    val pins = Seq.newBuilder[DataFrame]
-    val r = run(docs, benchmark, cfg, None, {
-      case (stage, df) if dirs.contains(stage) =>
-        val p = s"$stageDir/${dirs(stage)}"
-        val done = new Path(s"$p/_SUCCESS")
-        if (!done.getFileSystem(conf).exists(done))
-          df.write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
-      case (_, df) =>
-        pins += df
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-    pins.result().foreach(_.unpersist(false))
-    r.corpus
-  }
+    run(newDocs, benchmark, cfg, Some(corpusIndex))
 
   /** PUBLISH — the dataset-release verb: [[prepare]] the corpus, give
     * it the deterministic training order/sharding, and COMMIT the

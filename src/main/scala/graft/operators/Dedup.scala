@@ -30,10 +30,6 @@ object Dedup {
       .groupBy(md5(encode(col("text"), "UTF-8")).as("h"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Distinct word n-gram shingles per doc: (doc_id, shingle). */
-  def shingles(docs: DataFrame, n: Int): DataFrame =
-    rawShingles(docs, n).distinct()
-
   /** Explode shingle POSITIONS first, then assemble each gram with
     * element_at/concat_ws — every expression here codegens. The
     * alternative (a `transform` lambda building the gram list, then
@@ -319,6 +315,25 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"),
         col("edit_dist").cast("long").as("edit_dist"))
 
+  /** One-time MinHash signature index over a corpus — the text-dedup
+    * analog of [[Similarity.buildIvfIndex]]: sign the corpus ONCE,
+    * persist the result (`Catalog.writeChunked`, or bucketed by doc_id),
+    * and run every future batch through
+    * [[CorpusPipeline.prepareIncrement]] without ever re-reading corpus
+    * text. Schema: doc_id, mh0..mh{k-1}, ss. */
+  def buildMinhashIndex(corpus: DataFrame, n: Int = 3,
+      numHashes: Int = 64): DataFrame = signatures(corpus, n, numHashes)
+
+  /** [[dedupAgainst]] probing a PREBUILT signature index with a new
+    * batch that is already signed: the corpus text is never touched
+    * (the stage-fused incremental pipeline signs the batch once in its
+    * signal scan and probes the index with the same signatures).
+    * `numHashes` and `bands` must match the index build. */
+  def dedupAgainstIndexSigned(sigIndex: DataFrame, sigNew: DataFrame,
+      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
+      maxBucket: Int = 0): DataFrame =
+    crossSetPairs(sigIndex, sigNew, numHashes, bands, threshold, maxBucket)
+
   /** Incremental near-dup: verified pairs BETWEEN a new batch and an
     * existing corpus — the daily-ingest shape. Corpus-side signatures
     * are the persisted index in production (see [[signatures]]); only
@@ -326,31 +341,6 @@ object Dedup {
     * buckets the new batch lands in, and no corpus-corpus pair is ever
     * scored. Emits (corpus_id, new_id, jaccard ≥ threshold); feed
     * new_ids into an anti-join to admit only novel documents. */
-  /** One-time MinHash signature index over a corpus — the text-dedup
-    * analog of [[Similarity.buildIvfIndex]]: sign the corpus ONCE,
-    * persist the result (`Catalog.writeChunked`, or bucketed by doc_id),
-    * and run every future batch through [[dedupAgainstIndex]] without
-    * ever re-reading corpus text. Schema: doc_id, mh0..mh{k-1}, ss. */
-  def buildMinhashIndex(corpus: DataFrame, n: Int = 3,
-      numHashes: Int = 64): DataFrame = signatures(corpus, n, numHashes)
-
-  /** [[dedupAgainst]] probing a PREBUILT signature index: the corpus
-    * text is never touched — only the new batch is signed. `n`,
-    * `numHashes`, and `bands` must match the index build. */
-  def dedupAgainstIndex(sigIndex: DataFrame, newDocs: DataFrame, n: Int = 3,
-      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
-      maxBucket: Int = 0): DataFrame =
-    crossSetPairs(sigIndex, signatures(newDocs, n, numHashes),
-      numHashes, bands, threshold, maxBucket)
-
-  /** [[dedupAgainstIndex]] with the NEW side already signed (the
-    * stage-fused incremental pipeline signs the batch once in its
-    * signal scan and probes the index with the same signatures). */
-  def dedupAgainstIndexSigned(sigIndex: DataFrame, sigNew: DataFrame,
-      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
-      maxBucket: Int = 0): DataFrame =
-    crossSetPairs(sigIndex, sigNew, numHashes, bands, threshold, maxBucket)
-
   def dedupAgainst(corpus: DataFrame, newDocs: DataFrame, n: Int = 3,
       numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
       maxBucket: Int = 0): DataFrame =
@@ -403,21 +393,6 @@ object Dedup {
       .groupBy(col("sz")).agg(
         count(lit(1)).as("n_clusters"),
         (sum(col("sz")) - count(lit(1))).as("docs_removed"))
-
-  /** Apply a near-dup pair set to a corpus: keep one representative per
-    * connected pair (drop every doc that appears as the GREATER id of a
-    * pair — with `id_a < id_b` emitted by every dedup operator here, the
-    * smallest doc of each dup chain survives). A left-anti join: one
-    * shuffle of (small) pair ids against the corpus.
-    *
-    * CORRECT ONLY for transitively-closed pair sets (what the
-    * verification-complete operators here emit on their candidates). A
-    * pair set where A~C and B~C were found but A~B was not (e.g. LSH
-    * candidates that straddle a band boundary) keeps BOTH A and B — use
-    * [[applyDedupTransitive]] there. */
-  def applyDedup(docs: DataFrame, pairs: DataFrame): DataFrame =
-    docs.join(pairs.select(col("id_b").as("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
 
   /** Connected components over a pair set (id_a, id_b) → (id, component)
     * with component = the smallest id reachable from `id`.
@@ -526,25 +501,14 @@ object Dedup {
     labels.select(col("id"), col("label").as("component"))
   }
 
-  /** [[applyDedup]] for pair sets that are NOT transitively closed:
-    * resolve components first, keep exactly each component's minimum id
-    * (plus every unpaired doc). The component table is O(paired docs) —
-    * tiny next to the corpus — so the final anti-join is one broadcast-
-    * sized pass over the corpus. */
-  def applyDedupTransitive(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val comp = connectedComponents(pairs)
-    val drop = comp.where(col("id") =!= col("component"))
-      .select(col("id").as("doc_id"))
-    docs.join(drop, Seq("doc_id"), "left_anti")
-  }
-
-  /** [[applyDedupTransitive]] with a SURVIVORSHIP POLICY: each dup
-    * cluster keeps its best document by `metric` (descending; ties →
-    * smaller doc_id) instead of the smallest id. This is what
+  /** Apply a near-dup pair set with a SURVIVORSHIP POLICY: resolve
+    * connected components, then each dup cluster keeps its best
+    * document by `metric` (descending; ties → smaller doc_id) instead
+    * of the smallest id. This is what
     * production cleaning actually wants — of a near-dup cluster, keep
     * the longest / highest-quality copy, not an arbitrary ordinal.
     *
-    * Same scale shape as the min-id variant: components over the pair
+    * Scale shape: components over the pair
     * set (O(duplicates)), then the winner per component via one
     * max-struct aggregate over PAIRED docs only — the metric values of
     * unpaired docs never shuffle — and one anti-join pass over the
@@ -579,7 +543,7 @@ object Dedup {
 
   /** Benchmark decontamination: corpus documents sharing at least
     * `minShared` distinct n-grams with any benchmark document (flag —
-    * the removal is [[applyDedup]]-shaped). The benchmark side is tiny
+    * the removal is a left-anti join on doc_id). The benchmark side is tiny
     * by nature, so its hashed shingle set broadcasts and the corpus
     * streams map-only past it; the only exchange is the per-(doc, bench)
     * overlap count. */

@@ -13,12 +13,10 @@ import org.apache.spark.sql.functions._
   *
   * Image (PNG/JPEG/BMP/GIF) and WAV-audio support ships inside the JDK
   * itself (`javax.imageio`, `javax.sound.sampled` — the `java.desktop`
-  * module), so decode, resize, perceptual hashing, and audio feature
+  * module), so decode, perceptual hashing, and audio feature
   * extraction below are genuine byte→pixels/samples transforms with
-  * zero external dependencies. Only VIDEO frame decode remains a byte-
-  * slice stand-in ([[frameSample]]) — the JDK has no video codec
-  * (re-checked round 7: still no ffmpeg/jcodec in the sandbox; JDK 17
-  * only).
+  * zero external dependencies. The JDK has no video codec, so there
+  * is no video path.
   *
   * Execution shape for all decode paths: `mapPartitions` over
   * `(doc_id, media)` pairs — the Scala analog of a batched pandas UDF.
@@ -29,28 +27,6 @@ import org.apache.spark.sql.functions._
   * parallel at any corpus size.
   */
 object Multimodal {
-
-  /** Real file ingest: a directory of media files through Spark's
-    * `binaryFile` source into the SAME media/meta schema the stub
-    * pipeline uses, so [[decodeBatched]] / [[metaExtract]]-style
-    * consumers run unchanged on actual files. The source gives
-    * distributed reads, partition pruning on path, and
-    * `pathGlobFilter` format selection for free; width/height stay null
-    * at scan time — [[decodeImages]] fills them from the actual pixels.
-    * doc_id is the path hash — deterministic across re-ingests. */
-  def ingestBinary(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
-      .select(
-        xxhash64(col("path")).as("doc_id"),
-        col("path"),
-        col("content").as("media"),
-        struct(
-          col("length").as("byte_len"),
-          regexp_extract(col("path"), "\\.([^.]+)$", 1).as("format"),
-          lit(null).cast("long").as("width"),
-          lit(null).cast("long").as("height")).as("meta"))
 
   /** Attach a fake media binary + typed metadata struct. */
   def withMedia(docs: DataFrame): DataFrame =
@@ -70,58 +46,6 @@ object Multimodal {
       md5(col("media")).as("h"),
       col("meta.width").as("width"),
       col("meta.height").as("height"))
-
-  /** Batched decode integration point — the Scala analog of a batched
-    * pandas UDF: mapPartitions hands the decoder a whole partition
-    * iterator, so expensive per-task init (codec context, model weights)
-    * is paid once per partition, not per row, and rows stream through
-    * without materializing the partition. The default decoder is the
-    * deterministic stub (byte-length arithmetic — kept as the oracle-
-    * checkable baseline); pass [[imageDecoder]] for the real JDK codec,
-    * with no change to schema or partitioning. */
-  def decodeBatched(docs: DataFrame,
-      decode: Array[Byte] => (Long, Long) = stubDecode): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // accept both shapes: already-ingested media (binaryFile path) or
-    // raw documents that still need the stub attachment
-    val withM = if (docs.columns.contains("media")) docs else withMedia(docs)
-    withM
-      .select(col("doc_id"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // per-partition init happens HERE (once), before the row loop
-        it.map { case (id, bytes) =>
-          val (w, h) = decode(bytes)
-          (id, w, h)
-        }
-      }
-      .toDF("doc_id", "dec_width", "dec_height")
-  }
-
-  /** Stand-in for a codec: derives dimensions from the payload bytes. */
-  private def stubDecode(bytes: Array[Byte]): (Long, Long) =
-    (bytes.length.toLong % 640, bytes.length.toLong % 480)
-
-  /** "Resize": proportional byte-slice of the media payload. A real
-    * implementation replaces the slice with a codec call; the schema and
-    * partition behavior stay identical. */
-  def resizeStub(docs: DataFrame, fraction: Double): DataFrame =
-    withMedia(docs).select(
-      col("doc_id"),
-      expr(s"substring(media, 1, CAST(octet_length(media) * $fraction AS INT))").as("media_small"))
-
-  /** "Frame sampling": split the payload into n equal byte slices, one
-    * row per (doc, frame). A real video pipeline swaps the byte slice
-    * for a codec frame grab; the explode shape and schema stay. */
-  def frameSample(docs: DataFrame, nFrames: Int): DataFrame =
-    withMedia(docs)
-      .withColumn("flen",
-        greatest((octet_length(col("media")) / nFrames).cast("int"), lit(1)))
-      .select(col("doc_id"), col("media"), col("flen"),
-        explode(sequence(lit(0), lit(nFrames - 1))).as("frame_no"))
-      .select(col("doc_id"), col("frame_no"),
-        expr("substring(media, frame_no * flen + 1, flen)").as("frame"))
 
   // --------------------------------------------------------------------
   // Real codecs (JDK-native: javax.imageio / javax.sound.sampled)
@@ -212,15 +136,6 @@ object Multimodal {
       .toDF("doc_id", "width", "height", "n_pixels", "ok")
   }
 
-  /** Pluggable decoder for [[decodeBatched]] backed by the real codec:
-    * `decodeBatched(docs, Multimodal.imageDecoder)` replaces the stub
-    * without touching schema or partitioning — exactly the slot the
-    * stub's contract promised. */
-  val imageDecoder: Array[Byte] => (Long, Long) = { bytes =>
-    val img = readImage(bytes)
-    if (img == null) (-1L, -1L) else (img.getWidth.toLong, img.getHeight.toLong)
-  }
-
   /** 64-bit perceptual difference hash (dHash): downscale to 9×8
     * grayscale (bilinear), emit one bit per horizontally-adjacent
     * sample comparison. Robust to re-encoding, mild noise, uniform
@@ -300,35 +215,6 @@ object Multimodal {
         bit_count(col("x.dhash").bitwiseXOR(col("y.dhash"))).as("hamming"))
       .distinct() // a pair sharing k bands appears k times
       .where(col("hamming") <= maxHamming)
-  }
-
-  /** Real image resize: decode, downscale to fit `maxDim` (aspect
-    * preserved, never upscaled), re-encode. The schema matches
-    * [[resizeStub]]'s contract with real pixels behind it. */
-  def resizeImages(media: DataFrame, maxDim: Int, format: String = "png"): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        initCodecs()
-        it.flatMap { case (id, bytes) =>
-          val img = readImage(bytes)
-          if (img == null) None
-          else {
-            val scale = math.min(1.0, maxDim.toDouble / math.max(img.getWidth, img.getHeight))
-            val (w, h) = (math.max(1, math.round(img.getWidth * scale).toInt),
-              math.max(1, math.round(img.getHeight * scale).toInt))
-            val small = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-            val g2 = small.createGraphics()
-            g2.setRenderingHint(RenderingHints.KEY_INTERPOLATION,
-              RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g2.drawImage(img, 0, 0, w, h, null)
-            g2.dispose()
-            Some((id, encodeImage(small, format), w.toLong, h.toLong))
-          }
-        }
-      }
-      .toDF("doc_id", "media_small", "width", "height")
   }
 
   /** Deterministic synthetic audio: a REAL RIFF/WAVE payload per

@@ -271,10 +271,10 @@ object Sampling {
     * [[mixtureSample]] would apply — `keep_rate = min(1, epochs)`:
     * a source whose share is under one epoch is subsampled at exactly
     * that rate, a source with epochs > 1 keeps everything and the
-    * epochs column is its repeat factor. [[planRates]] lifts the card
-    * into the literal rates map `mixtureSample` takes, which is the
-    * consistency contract (spec-asserted): the card PLANS precisely
-    * what the sampler APPLIES.
+    * epochs column is its repeat factor. The card's (source,
+    * keep_rate) pairs are the literal rates map `mixtureSample` takes,
+    * which is the consistency contract (spec-asserted): the card PLANS
+    * precisely what the sampler APPLIES.
     *
     * Same scale shape as [[epochPlan]] (one source-grain aggregate +
     * a 1-row broadcast); weights compile into the plan as a literal
@@ -301,13 +301,6 @@ object Sampling {
         (share / col("n_tokens")).as("epochs"),
         least(lit(1.0), share / col("n_tokens")).as("keep_rate"))
   }
-
-  /** The per-source rates map a [[epochPlanWeighted]] card implies —
-    * exactly the literal map [[mixtureSample]] compiles into its plan.
-    * Driver-side collect bounded by the number of sources. */
-  def planRates(card: DataFrame): Map[String, Double] =
-    card.select(col("source"), col("keep_rate")).collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
 
   /** Mixture EPOCH plan — the data card a training run is provisioned
     * from: give each source an equal share of `targetTokens` and report

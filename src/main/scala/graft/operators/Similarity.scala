@@ -22,8 +22,6 @@ import graft.functions.VectorFunctions.toDouble
   */
 object Similarity {
 
-  val Dim = 64
-
   /** The pair-scan ops spread their corpus side via
     * [[graft.Tables.spreadSmall]]: their compute is corpus×queries
     * FLOPS, which a single-split local input would pin to ONE task
@@ -65,35 +63,13 @@ object Similarity {
     * one-streaming-pass shape as [[bruteForceTopK]]: corpus streams
     * once past the broadcast query set, the threshold filter runs
     * inside the scan. Result size is data-dependent by definition —
-    * callers picking τ near 0 on a dense corpus asked for the blow-up.
-    * At corpus scale the IVF-probed sibling [[radiusSearchIvf]] applies
-    * the SAME threshold to only the probed cells. */
+    * callers picking τ near 0 on a dense corpus asked for the blow-up. */
   def radiusSearch(embeddings: DataFrame, maxQueryId: Long,
       minCos: Double): DataFrame = {
     val e = spread(prepared(embeddings))
     val q = e.where(col("vec_id") < maxQueryId)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos", cosineSim(col("qv"), col("v")))
-      .where(col("cos") >= minCos)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        graft.functions.Exact.round6(col("cos")).as("cos"))
-  }
-
-  /** IVF-probed radius search: [[radiusSearch]]'s threshold applied to
-    * the `nProbe` nearest cells only — scan cost ∝ probed fraction of
-    * the corpus, recall bounded by cell coverage exactly as in
-    * [[ivfSearch]] (the RadiusSpec pins probed ⊆ exact and measures
-    * recall on the synthetic corpus). */
-  def radiusSearchIvf(index: IvfIndex, queries: DataFrame, minCos: Double,
-      nProbe: Int = 4): DataFrame = {
-    val probed = assignCells(
-        queries.select(col("query_id"), col("qv").as("v")), index.centroids,
-        "query_id", nProbe)
-      .select(col("query_id"), col("v").as("qv"), col("cell_id").as("probe_cell"))
-    index.assignments
-      .join(broadcast(probed),
-        col("cell_id") === col("probe_cell") && col("vec_id") =!= col("query_id"))
       .withColumn("cos", cosineSim(col("qv"), col("v")))
       .where(col("cos") >= minCos)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -413,179 +389,6 @@ object Similarity {
     topKPerQuery(scored.select(col("query_id"), col("vec_id"), col("cos")), k)
   }
 
-  /** IVF-PQ index — PRODUCT quantization on top of the coarse quantizer,
-    * the published FAISS IVFPQ step past [[IvfQIndex]]'s scalar int8:
-    * the residual v − centroid is split into `m` subspaces of Dim/m
-    * coordinates, each encoded as the id of its nearest entry in a
-    * per-subspace codebook of `ksub` entries — m BYTES per vector
-    * (plus cell id and one precomputed reconstructed norm), a further
-    * ~4–8× shrink over the int8 index (dim bytes) at m = dim/8..dim/4.
-    * Codebooks are trained with the same value-verified machinery as
-    * the coarse centroids: hash-ordered seeds, Lloyd passes with
-    * fixed-point (2^30) coordinate sums so training is bit-stable
-    * across runs and partitionings.
-    *
-    * Defaults (m=32, ksub=128, 8 Lloyd passes) are tuned for the
-    * WORST-case corpus — the synthetic embeddings are near-isotropic,
-    * where PQ has no structure to exploit (measured: recall 0.91 of
-    * the int8 path at 32 bytes/vector, deterministic by the bit-stable
-    * training). Real embedding corpora concentrate on low-dim
-    * manifolds; there m=dim/4..dim/8 and fewer passes reach the same
-    * recall at 8–16 bytes — the published FAISS regime. */
-  final case class IvfPqIndex(assignments: DataFrame, centroids: DataFrame,
-      codebooks: DataFrame, m: Int, ksub: Int)
-
-  /** Build the IVF-PQ index: coarse assign → residuals → per-subspace
-    * codebook training (`cbPasses` Lloyd rounds over the m·ksub-entry
-    * codebook table, bounded metadata) → per-vector codes + the exact
-    * reconstructed norm |ĉ| (computable at build because the
-    * reconstruction is fully determined by cell + codes). Build-time
-    * array lambdas only — the search hot path is lookups and adds. */
-  def buildIvfIndexPq(embeddings: DataFrame, nCells: Int = 16, m: Int = 32,
-      ksub: Int = 128, refinePasses: Int = 1, cbPasses: Int = 8): IvfPqIndex = {
-    require(Dim % m == 0, s"m=$m must divide dim=$Dim")
-    require(ksub <= 128, s"ksub=$ksub must fit a signed byte code")
-    val e = prepared(embeddings)
-    val centroids = coarseCentroids(e, nCells, refinePasses)
-    val resid = residualsQ(e, centroids).localCheckpoint()
-    // the m sub-vectors of each residual: (vec_id, sub, rs) — scanned
-    // once per training pass plus the final coding, so pinned
-    val subs = pqSubs(resid, m).localCheckpoint()
-    def nearest(cbook: DataFrame): DataFrame = pqNearest(subs, cbook)
-    // seeds: ksub hash-ordered sub-vectors per subspace (the
-    // sampleCentroids idiom, partitioned by subspace)
-    var cb = {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("sub"))
-        .orderBy(TextAnalysis.portableHash60(col("vec_id")), col("vec_id"))
-      subs.withColumn("rn", row_number().over(w))
-        .where(col("rn") <= ksub)
-        .select(col("sub"), (col("rn") - 1).cast("int").as("code"),
-          col("rs").as("cb"))
-        .localCheckpoint()
-    }
-    val FpScale = (1L << 30).toDouble
-    for (_ <- 1 to cbPasses) {
-      // Lloyd step: fixed-point per-coordinate means per (sub, code);
-      // an entry that captures no sub-vectors disappears (as in
-      // coarseCentroids) — its members re-home next assignment
-      cb = nearest(cb)
-        .select(col("sub"), col("code"), posexplode(col("rs")).as(Seq("pos", "x")))
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(sum(round(col("x") * FpScale).cast("long")).as("sx"),
-          count(lit(1)).as("n"))
-        .groupBy(col("sub"), col("code"))
-        .agg(array_sort(collect_list(struct(col("pos"),
-          (col("sx").cast("double") / col("n") / FpScale).as("x")))).as("ps"))
-        .select(col("sub"), col("code"), col("ps.x").as("cb"))
-        .localCheckpoint()
-    }
-    IvfPqIndex(pqCode(resid, cb, m), centroids, cb, m, ksub)
-  }
-
-  /** The m sub-vectors of each residual row: (vec_id, sub, rs). */
-  private def pqSubs(resid: DataFrame, m: Int): DataFrame = {
-    val dsub = Dim / m
-    resid.select(col("vec_id"),
-      posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), j -> slice(r, j * $dsub + 1, $dsub))"))
-        .as(Seq("sub", "rs")))
-  }
-
-  /** Nearest codebook entry per (vec_id, sub): broadcast the m·ksub
-    * codebook, expand per candidate, take the (d², code) struct-min —
-    * deterministic (code ids are unique within a subspace). */
-  private def pqNearest(subs: DataFrame, cbook: DataFrame): DataFrame =
-    subs.join(broadcast(cbook), "sub")
-      .withColumn("d2",
-        dotProduct(col("rs"), col("rs"))
-          - lit(2.0) * dotProduct(col("rs"), col("cb"))
-          + dotProduct(col("cb"), col("cb")))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("d2"), col("code"), col("cb"), col("rs"))).as("best"))
-      .select(col("vec_id"), col("sub"), col("best.code").as("code"),
-        col("best.cb").as("cb"), col("best.rs").as("rs"))
-
-  /** Final PQ coding of residual rows against a (frozen or freshly
-    * trained) codebook: per vector the m codes (sub-sorted byte array)
-    * and the reconstruction ĉ = centroid + concat_j cb_j[code_j],
-    * whose exact norm ships with the assignment row. */
-  private def pqCode(resid: DataFrame, cb: DataFrame, m: Int): DataFrame = {
-    val per = pqNearest(pqSubs(resid, m), cb)
-      .groupBy(col("vec_id"))
-      .agg(array_sort(collect_list(struct(col("sub"), col("code"), col("cb")))).as("sc"))
-      .select(col("vec_id"),
-        expr("transform(sc, s -> CAST(s.code AS TINYINT))").as("codes"),
-        flatten(expr("transform(sc, s -> s.cb)")).as("rq"))
-    resid.select(col("vec_id"), col("cell_id"), col("cv"))
-      .join(per, "vec_id")
-      .withColumn("vr", zip_with(col("cv"), col("rq"), (c, r) => c + r))
-      .withColumn("rnorm", sqrt(dotProduct(col("vr"), col("vr"))))
-      .select(col("vec_id"), col("cell_id"), col("codes"), col("rnorm"))
-  }
-
-  /** PQ INDEX UPSERT: code NEW vectors against the FROZEN quantizer —
-    * centroids AND the m per-subspace codebooks, both fixed at build
-    * time. A PQ code is a pure per-vector function of (centroids,
-    * codebooks) — nearest codebook entry per residual sub-vector — so
-    * exactly as with [[assignNewQ]], old assignments ∪ (delta coded
-    * against the same frozen artifacts) equals the monolithic
-    * code-everything table, and search over the upserted index equals
-    * search over that rebuild (spec-pinned). Cost O(|delta|·m·ksub)
-    * with the codebook broadcast — the 32-byte/vector index, the only
-    * one whose STATE still fits at 100 TB, now also stays fresh at
-    * 100 TB. Residual drift degrades code quality gradually (nearest
-    * entry just gets farther); re-train on the recall/nDCG gates. */
-  def assignNewPq(newVectors: DataFrame, index: IvfPqIndex): DataFrame =
-    pqCode(residualsQ(prepared(newVectors), index.centroids),
-      index.codebooks, index.m)
-
-  /** Probe-only IVF-PQ search with ASYMMETRIC distance computation
-    * (ADC, the published FAISS form — the query is never quantized):
-    *   cos(q, ĉ) = (q·c + Σⱼ T[j][codeⱼ]) / (|q| · |ĉ|)
-    * where T[j][i] = qⱼ·cbⱼ[i] is the per-query lookup table — m·ksub
-    * dot products computed ONCE per query on the broadcast side and
-    * shipped as an int→double map. The per-pair hot path is m map
-    * lookups and adds over the byte codes: no dot product, no array
-    * allocation, and cost independent of dim (the PQ trade: per-pair
-    * work scales with m, not dim). Equal probe budget, ~4× less index
-    * state than the int8 path and ~32× less than float. */
-  def ivfSearchPq(index: IvfPqIndex, queries: DataFrame, k: Int,
-      nProbe: Int = 4): DataFrame = {
-    val m = index.m
-    val ksub = index.ksub
-    val dsub = Dim / m
-    val probed = assignCells(
-        queries.select(col("query_id"), col("qv").as("v")), index.centroids,
-        "query_id", nProbe)
-      .select(col("query_id"), col("v").as("qv"), col("cell_id").as("probe_cell"))
-      .join(broadcast(index.centroids
-        .select(col("cell_id").as("probe_cell"), col("cv"))), "probe_cell")
-      .select(col("probe_cell"), col("query_id"), col("qv"),
-        dotProduct(col("qv"), col("cv")).as("qdotc"),
-        sqrt(dotProduct(col("qv"), col("qv"))).as("qnorm"))
-    val tmaps = queries.select(col("query_id"), col("qv"))
-      .crossJoin(broadcast(index.codebooks))
-      .withColumn("tv",
-        dotProduct(expr(s"slice(qv, sub * $dsub + 1, $dsub)"), col("cb")))
-      .groupBy(col("query_id"))
-      .agg(map_from_entries(collect_list(struct(
-        (col("sub") * ksub + col("code")).cast("int").as("k"),
-        col("tv").as("v")))).as("tmap"))
-    val lookupSum = expr(
-      s"aggregate(sequence(0, ${m - 1}), CAST(0 AS DOUBLE), (acc, j) -> " +
-        s"acc + element_at(tmap, CAST(j * $ksub AS INT) + " +
-        "CAST(element_at(codes, j + 1) AS INT)))")
-    val scored = index.assignments
-      .join(broadcast(probed.join(tmaps, "query_id")),
-        col("cell_id") === col("probe_cell") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos",
-        when(col("rnorm") > 0,
-          (col("qdotc") + lookupSum) / (col("qnorm") * col("rnorm")))
-          .otherwise(lit(-2.0)))
-    topKPerQuery(scored, k)
-  }
-
   /** Mutual k-NN filter over any (query_id, neighbor_id, cos, rnk)
     * top-k table: keep the canonical pair (a < b) iff each endpoint is
     * in the OTHER's top-k — the reciprocal-neighbor criterion that
@@ -607,8 +410,8 @@ object Similarity {
     * graph-based dedup/cluster passes (and the BFS/PageRank family)
     * consume. This entry scores EXACTLY (every vector against every
     * other — the value-verifiable form; fine to ~10⁴ vectors); at
-    * corpus scale build the same top-k table with [[ivfSearch]] /
-    * [[ivfSearchPq]] over an index instead and feed it to
+    * corpus scale build the same top-k table with [[ivfSearch]]
+    * over an index instead and feed it to
     * [[mutualKnn]] — the mutual filter is identical either way. */
   def knnGraph(embeddings: DataFrame, k: Int = 3): DataFrame = {
     val e = spread(prepared(embeddings))
@@ -1227,60 +1030,6 @@ object Similarity {
     * end-to-end in SQL; integer hit counts, one exact division. A
     * params/data change that silently costs recall moves the card and
     * fails the gate loudly — measured, not assumed. */
-  /** A recall-gated search's outcome: the PASSING result set plus the
-    * escalation audit trail — one (nProbe, measured recall) entry per
-    * attempt, the evidence an operator reads when the gate fired. */
-  final case class RecallGated(result: DataFrame, trail: Seq[(Int, Double)])
-
-  /** RECALL-GATED IVF search — the AutoSalt detect→rewrite→re-verify
-    * pattern applied to ANN quality: search at `nProbe`, MEASURE
-    * recall@k of the gate queries against the exact top-k over the
-    * index's own vectors, and while the measured recall sits below
-    * `floor`, DOUBLE nProbe and re-search — up to the cell count,
-    * where probing everything makes the search exhaustive and recall
-    * 1.0 by construction, so the loop always terminates at the floor.
-    * A degraded index (stale centroids after the corpus drifted, a
-    * skewed cell layout) trips the gate instead of silently serving
-    * bad neighbors — the knob stops being the caller's guess.
-    *
-    * Cost shape: the exact baseline is ONE stream of the index
-    * vectors against the (small, broadcast) gate-query set, computed
-    * once and reused across escalations; each escalation re-probes
-    * only nProbe cells per query. At 100 TB the gate runs on a query
-    * SAMPLE at index-build/refresh time, never per production query. */
-  def ivfSearchRecallGated(index: IvfIndex, queries: DataFrame, k: Int,
-      floor: Double = 0.9, nProbe0: Int = 1): RecallGated = {
-    require(floor > 0.0 && floor <= 1.0, s"floor out of (0,1]: $floor")
-    val nCells = index.centroids.count().toInt
-    val exact = topKPerQuery(
-      index.assignments
-        .join(broadcast(queries), col("vec_id") =!= col("query_id"))
-        .withColumn("cos", cosineSim(col("qv"), col("v"))), k)
-      .select(col("query_id"), col("neighbor_id"))
-      .persist()
-    val nTrue = exact.count() // pins the baseline; denominator of every gate
-    def recallOf(res: DataFrame): Double =
-      if (nTrue == 0L) 1.0
-      else exact
-        .join(res.select(col("query_id"), col("neighbor_id"),
-          lit(1L).as("hit")), Seq("query_id", "neighbor_id"), "left")
-        .agg(coalesce(sum(col("hit")), lit(0L)).cast("double") / lit(nTrue.toDouble))
-        .head().getDouble(0)
-    var nProbe = math.max(1, nProbe0)
-    val trail = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    var res = ivfSearch(index, queries, k, nProbe)
-    var r = recallOf(res)
-    trail += ((nProbe, r))
-    while (r < floor && nProbe < nCells) {
-      nProbe = math.min(nCells, nProbe * 2)
-      res = ivfSearch(index, queries, k, nProbe)
-      r = recallOf(res)
-      trail += ((nProbe, r))
-    }
-    exact.unpersist()
-    RecallGated(res, trail.toSeq)
-  }
-
   def annRecall(embeddings: DataFrame, maxQueryId: Long = 5,
       k: Int = 10): DataFrame = {
     // empty-partition tolerance: the IVF build requires ≥1 vector to

@@ -422,43 +422,6 @@ object TextAnalysis {
         graft.functions.Exact.round6(
           col("r_sum").cast("double") / 1e6 / col("n_feats")).as("imp_score"))
 
-  /** The bucket→ratio table alone (b, r_scaled), for shipping: build
-    * it ONCE from the reference corpus + target slice, then score any
-    * other frame — batch or stream — with [[importanceScore]] without
-    * touching the corpus again. Same arithmetic as
-    * [[importanceWeights]]'s inner table. */
-  def importanceRatios(docs: DataFrame, targetPred: Column,
-      nBuckets: Int = 4096): DataFrame =
-    docs
-      .select(targetPred.as("is_target"), tokens(col("text")).as("w"))
-      .where(size(col("w")) >= 2)
-      .select(col("is_target"),
-        explode(sequence(lit(1), size(col("w")) - 1)).as("i"), col("w"))
-      .select(col("is_target"),
-        pmod(portableHash60(concat_ws(" ",
-          element_at(col("w"), col("i")),
-          element_at(col("w"), col("i") + 1))), lit(nBuckets.toLong)).as("b"))
-      .groupBy(col("b"))
-      .agg(count(lit(1)).as("n_raw"),
-        sum(when(col("is_target"), 1L).otherwise(0L)).as("n_target"))
-      .select(col("b"), expr("CAST((CAST(n_target + 1 AS DECIMAL(38,0)) * 1000000) div (n_raw + 1) AS BIGINT)").as("r_scaled"))
-
-  /** A [[importanceRatios]] frame collected to the dense nBuckets-long
-    * array [[importanceScore]] consumes. ≤nBuckets rows of BOUNDED
-    * metadata — the one permitted collect shape. Buckets the corpus
-    * never hit take the add-one-smoothed empty ratio
-    * (0+1)·10⁶ div (0+1) = 10⁶. */
-  def ratioArray(ratios: DataFrame, nBuckets: Int = 4096): Array[Long] = {
-    val arr = Array.fill(nBuckets)(1000000L)
-    ratios.select(col("b"), col("r_scaled")).collect().foreach { r =>
-      val b = r.getLong(0)
-      require(0 <= b && b < nBuckets,
-        s"ratio bucket $b outside [0, $nBuckets) — table built with a different nBuckets?")
-      arr(b.toInt) = r.getLong(1)
-    }
-    arr
-  }
-
   /** The DSIR SELECTION step: keep documents whose importance exceeds
     * the corpus mean — "select the web data that looks most like my
     * target domain". The comparison is exact cross-multiplied integer
@@ -504,33 +467,6 @@ object TextAnalysis {
     inst.join(broadcast(ratio), "b")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_feats"), sum(col("r_scaled")).as("r_sum"))
-  }
-
-  /** Score docs against a FIXED ratio table — the production gate
-    * shape: the table rides into the plan as ONE array literal
-    * (nBuckets longs), so scoring is a MAP-ONLY projection with zero
-    * joins, shuffles, or state. Works unchanged on a STREAMING frame
-    * (append mode, no watermark needed). Scoring a corpus against its
-    * own [[importanceRatios]] reproduces [[importanceWeights]] exactly
-    * (spec-asserted): every bigram's bucket has n_raw ≥ 1 there, so the
-    * smoothed-empty default is never touched. */
-  def importanceScore(docs: DataFrame, ratios: Array[Long]): DataFrame = {
-    val nBuckets = ratios.length
-    val arr = typedLit(ratios.toSeq)
-    docs
-      .select(col("doc_id"), tokens(col("text")).as("w"))
-      .where(size(col("w")) >= 2)
-      .select(col("doc_id"), (size(col("w")) - 1).cast("long").as("n_feats"),
-        aggregate(
-          transform(sequence(lit(1), size(col("w")) - 1),
-            i => element_at(arr,
-              (pmod(portableHash60(concat_ws(" ",
-                element_at(col("w"), i),
-                element_at(col("w"), i + 1))), lit(nBuckets.toLong)) + 1).cast("int"))),
-          lit(0L), (acc, x) => acc + x).as("r_sum"))
-      .select(col("doc_id"), col("n_feats"),
-        graft.functions.Exact.round6(
-          col("r_sum").cast("double") / 1e6 / col("n_feats")).as("imp_score"))
   }
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020): split each
@@ -904,25 +840,6 @@ object TextAnalysis {
     metrics.map(m => one.select(lit(m).as("metric"),
         col(m).cast("long").as("value")))
       .reduce(_ unionAll _)
-  }
-
-  /** Most-duplicated texts — "what exactly is being copied": top-k
-    * exact-duplicate groups by copy count with one sample doc id and
-    * the text head. Hash-grouped (the text itself never rides the
-    * wide shuffle — only the 16-byte digest), top-k via TakeOrdered
-    * with a total (count desc, min-id) tie order, text attached to
-    * the ≤k survivors by a hash equi-join afterwards. */
-  def topDuplicates(docs: DataFrame, k: Int = 10): DataFrame = {
-    val hashed = docs.select(col("doc_id"),
-      md5(encode(col("text"), "UTF-8")).as("h"))
-    val groups = hashed.groupBy(col("h"))
-      .agg(count(lit(1)).as("n_copies"), min(col("doc_id")).as("sample_id"))
-      .where(col("n_copies") > 1)
-      .orderBy(col("n_copies").desc, col("sample_id"))
-      .limit(k)
-    groups.join(docs.select(col("doc_id").as("sample_id"),
-        substring(col("text"), 1, 40).as("text_head")), "sample_id")
-      .select(col("sample_id"), col("n_copies"), col("text_head"))
   }
 
   /** Per-language length profile — the "are my languages comparable

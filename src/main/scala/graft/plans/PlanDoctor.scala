@@ -63,20 +63,14 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * can never drift. */
 object PlanDoctor {
 
-  /** True when the physical plan contains a cartesian product. */
-  def hasCartesian(df: DataFrame): Boolean =
-    hasCartesianPlan(df.queryExecution.sparkPlan.toString)
-
-  /** [[hasCartesian]] over an already-rendered physical-plan string
+  /** True when a rendered physical plan contains a cartesian product
     * (the whole-surface audit renders each plan once and runs every
     * check against the string). */
   private[graft] def hasCartesianPlan(sparkPlan: String): Boolean =
     sparkPlan.contains("CartesianProduct")
 
-  /** True when the physical plan contains a broadcast nested loop. */
-  def hasBnlj(df: DataFrame): Boolean =
-    hasBnljPlan(df.queryExecution.sparkPlan.toString)
-
+  /** True when a rendered physical plan contains a broadcast nested
+    * loop join. */
   private[graft] def hasBnljPlan(sparkPlan: String): Boolean =
     sparkPlan.contains("BroadcastNestedLoopJoin")
 

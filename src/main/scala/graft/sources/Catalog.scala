@@ -898,55 +898,8 @@ class Catalog(spark: SparkSession, baseDir: String,
       spark.read.parquet(s"$derivedDir/$name/scales"))
   }
 
-  /** Persist an IVF-PQ index — assignments, centroids, the m·ksub
-    * codebook table, and a 1-row meta part carrying (m, ksub) so a
-    * fresh session reconstructs the exact search geometry. */
-  def saveAnnIndexPq(name: String,
-      index: graft.operators.Similarity.IvfPqIndex): Unit = {
-    import spark.implicits._
-    commitIndexPart(name, "assignments", index.assignments)
-    commitIndexPart(name, "centroids", index.centroids)
-    commitIndexPart(name, "codebooks", index.codebooks)
-    commitIndexPart(name, "meta",
-      Seq((index.m, index.ksub)).toDF("m", "ksub"))
-  }
-
-  /** [[upsertAnnIndexQ]] for the PQ index: the delta is coded against
-    * the FROZEN centroids + codebooks (`Similarity.assignNewPq`) into
-    * an immutable batch-named segment — the 32-byte/vector index
-    * stays fresh in O(|delta|·m·ksub) without re-touching the corpus. */
-  def upsertAnnIndexPq(name: String, newVectors: DataFrame,
-      batchId: Long, check: Boolean = false): Unit = {
-    recoverIndexDir(name)
-    require(hasSuccess(s"$derivedDir/$name/centroids") &&
-      hasSuccess(s"$derivedDir/$name/codebooks") &&
-      hasSuccess(s"$derivedDir/$name/meta"),
-      s"no committed PQ ANN index to upsert: $name")
-    val segDir = s"$derivedDir/$name/assignments_seg_b$batchId"
-    if (hasSuccess(segDir)) return // retry of a committed batch: no-op
-    if (check) requireDisjoint(name, newVectors)
-    graft.operators.Similarity.assignNewPq(newVectors, loadAnnIndexPq(name))
-      .write.mode(SaveMode.Overwrite).parquet(segDir)
-  }
-
-  /** Load a committed PQ index: base + committed segments, frozen
-    * centroids/codebooks, (m, ksub) from the meta part. */
-  def loadAnnIndexPq(name: String): graft.operators.Similarity.IvfPqIndex = {
-    recoverIndexDir(name)
-    require(hasSuccess(s"$derivedDir/$name/assignments") &&
-      hasSuccess(s"$derivedDir/$name/centroids") &&
-      hasSuccess(s"$derivedDir/$name/codebooks") &&
-      hasSuccess(s"$derivedDir/$name/meta"),
-      s"no committed PQ ANN index: $name")
-    val meta = spark.read.parquet(s"$derivedDir/$name/meta").head()
-    graft.operators.Similarity.IvfPqIndex(loadAnnAssignments(name),
-      spark.read.parquet(s"$derivedDir/$name/centroids"),
-      spark.read.parquet(s"$derivedDir/$name/codebooks"),
-      meta.getInt(0), meta.getInt(1))
-  }
-
-  /** Fold every committed upsert segment of an ANN index (any flavor —
-    * float, int8, PQ: the segment convention is shared) into the base
+  /** Fold every committed upsert segment of an ANN index (float or
+    * int8: the segment convention is shared) into the base
     * assignments part — the operational counterpart of O(Δ) upserts,
     * exactly as [[compactJoinMv]] is to [[appendJoinMv]]: segments
     * accumulate one per refresh and reads pay a listing + union per
@@ -1227,10 +1180,10 @@ class Catalog(spark: SparkSession, baseDir: String,
   }
 
   /** ONE operational verb for segment hygiene — the policy knob O(Δ)
-    * maintenance needs so nobody schedules three compactors by hand:
+    * maintenance needs so nobody schedules four compactors by hand:
     * walk the derived dir, recognize each segmented family by its
     * part layout (ANN index: `centroids`; text index: `postings`;
-    * SCD2 history: `open`), and compact every artifact whose
+    * SCD2 history: `open`; join MV: `seg_*`), and compact every artifact whose
     * COMMITTED segment count reached `threshold`. Artifacts below
     * threshold are untouched (their as-of reach is preserved — the
     * documented trade of folding history is only paid when the read
@@ -1273,6 +1226,8 @@ class Catalog(spark: SparkSession, baseDir: String,
     } else if (fs.exists(new Path(path, "open")) &&
         segCount("closed_seg_b") >= threshold) {
       compactScd2(name); Some(name)
+    } else if (joinMvSegments(name).size >= threshold) {
+      compactJoinMv(name); Some(name)
     } else None
   }
 
@@ -1502,18 +1457,16 @@ class Catalog(spark: SparkSession, baseDir: String,
   }
 
   /** Hive-partitioned layout + read-back, owned by this Catalog: write
-    * `df` partitioned by `partCol` under `derivedDir/<name>` (skipped
-    * when the layout's `_SUCCESS` marker already exists — the
-    * prepareStaged resume pattern, so a fresh session reuses the
-    * on-disk layout) and return a reader over it. A filter on `partCol`
+    * `df` partitioned by `partCol` under `derivedDir/<name>`, rebuilt
+    * on every call so the layout always reflects the current `df`, and
+    * return a reader over it. A filter on `partCol`
     * against the returned frame is answered from the DIRECTORY LISTING
     * alone — `PartitionFilters` in the scan, zero non-matching files
     * opened — which is the storage-side pruning a 100 TB table lives or
     * dies by (scan cost ∝ selected partitions, not table size). */
   def partitionedLayout(df: DataFrame, name: String, partCol: String): DataFrame = {
     val dir = s"$derivedDir/$name"
-    if (!hasSuccess(dir))
-      df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(dir)
+    df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(dir)
     spark.read.parquet(dir)
   }
 
@@ -1573,17 +1526,6 @@ class Catalog(spark: SparkSession, baseDir: String,
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.mode(SaveMode.Overwrite).parquet(dest)
 
-  /** Z-order clustered write: range-partition + sort on the interleaved
-    * Morton value of two filter columns, so each output file holds a
-    * contiguous Z range — a rectangle-ish region in (x, y) space. A scan
-    * filtering on EITHER column then prunes most files from parquet
-    * min/max footers alone, which one-column sorting only provides for
-    * its leading column. The standard lakehouse layout move for 100 TB
-    * fact tables with two independent filter dimensions. */
-  def writeZOrdered(df: DataFrame, dest: String, numFiles: Int,
-      xCol: String, yCol: String): Unit =
-    writeZOrderedN(df, dest, numFiles, Seq(xCol, yCol))
-
   /** N-column Z-ordered write (see [[Catalog.zValueN]]): each file gets
     * a contiguous Z range, so min/max footer pruning works on every one
     * of the `zCols`, not just a leading sort column. */
@@ -1595,13 +1537,9 @@ class Catalog(spark: SparkSession, baseDir: String,
       .drop("_z")
       .write.mode(SaveMode.Overwrite).parquet(dest)
 
-  /** Partitioned-by write — hive-style layout for partition pruning. */
-  def writePartitioned(df: DataFrame, dest: String, partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(dest)
-
   /** ZONE MAP — a table-level min/max data-skipping index (the
     * Delta/Iceberg file-stats move, and the lakehouse complement of
-    * [[writeZOrdered]]: clustering makes per-file ranges TIGHT, the
+    * [[writeZOrderedN]]: clustering makes per-file ranges TIGHT, the
     * zone map makes them QUERYABLE without touching a footer). One
     * scan groups the table by `input_file_name()` and records each
     * data file's min/max per stats column into a `_zonemap` sidecar
@@ -1625,56 +1563,6 @@ class Catalog(spark: SparkSession, baseDir: String,
       .write.mode(SaveMode.Overwrite).parquet(s"$dest/_zonemap")
   }
 
-  /** O(Δ) APPEND under the zone map: write the delta's files into the
-    * table dir, stat ONLY the files the append created, and fold them
-    * into the sidecar. [[scanZoneMapped]]'s staleness refusal means a
-    * plain append would brick the probe path until a full
-    * [[buildZoneMap]] rescan of the whole table; this keeps the map
-    * fresh for one scan of the DELTA — the same O(Δ) contract as the
-    * MV and index upserts. Existing data files are never re-read:
-    * their stats rows ride through the sidecar rewrite verbatim (the
-    * sidecar is bounded by the table's FILE count, so the merge is a
-    * metadata-scale operation, not a data one). A crash mid-rewrite
-    * leaves no `_SUCCESS` → the probe refuses → [[buildZoneMap]]
-    * heals; the data append itself is already committed and full
-    * scans never consult the sidecar. */
-  def appendZoneMapped(delta: DataFrame, dest: String,
-      statsCols: Seq[String]): Unit = {
-    val zmDir = s"$dest/_zonemap"
-    require(hasSuccess(zmDir), s"no committed zone map under $dest")
-    def norm(u: String): String = new Path(u).toUri.getPath
-    val before = spark.read.parquet(dest).inputFiles.map(norm).toSet
-    delta.write.mode(SaveMode.Append).parquet(dest)
-    val newFiles = spark.read.parquet(dest).inputFiles
-      .filterNot(f => before(norm(f)))
-    if (newFiles.nonEmpty) {
-      val aggs = statsCols.flatMap(c =>
-        Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-      val newStats = spark.read.parquet(newFiles.toIndexedSeq: _*)
-        .groupBy(input_file_name().as("file"))
-        .agg(aggs.head, aggs.tail: _*)
-      val old = spark.read.parquet(zmDir)
-      val merged = old.collect() ++ newStats.selectExpr(old.columns: _*).collect()
-      spark.createDataFrame(
-          java.util.Arrays.asList(merged: _*), old.schema)
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(zmDir)
-    }
-  }
-
-  /** Range probe through the zone map: open ONLY the data files whose
-    * recorded [min,max] for `c` intersects [lo, hi], then apply the
-    * exact BETWEEN — skipping moves bytes, never results (the
-    * BloomJoin discipline). Sound because min/max ignore nulls and
-    * BETWEEN is null-rejecting: a file whose every `c` is null
-    * carries null stats, the intersection test is null → the file
-    * skips, and no row it holds could have passed the filter; a file
-    * mixing nulls with in-range values keeps non-null stats and is
-    * retained. The sidecar's file set must equal the dir's current
-    * data files — a rewrite without [[buildZoneMap]] fails loudly
-    * here instead of silently skipping files the stats never saw.
-    * The file-list collect is bounded by the table's FILE count (the
-    * listing any scan pays), not its rows. */
   /** Multi-column rectangle probe: a file survives only if its
     * recorded [min,max] intersects EVERY column's range — the read
     * side of [[writeZOrderedN]], where Z-clustering keeps per-file
@@ -1711,6 +1599,19 @@ class Catalog(spark: SparkSession, baseDir: String,
     }.reduce(_ && _))
   }
 
+  /** Range probe through the zone map: open ONLY the data files whose
+    * recorded [min,max] for `c` intersects [lo, hi], then apply the
+    * exact BETWEEN — skipping moves bytes, never results (the
+    * BloomJoin discipline). Sound because min/max ignore nulls and
+    * BETWEEN is null-rejecting: a file whose every `c` is null
+    * carries null stats, the intersection test is null → the file
+    * skips, and no row it holds could have passed the filter; a file
+    * mixing nulls with in-range values keeps non-null stats and is
+    * retained. The sidecar's file set must equal the dir's current
+    * data files — a rewrite without [[buildZoneMap]] fails loudly
+    * here instead of silently skipping files the stats never saw.
+    * The file-list collect is bounded by the table's FILE count (the
+    * listing any scan pays), not its rows. */
   def scanZoneMapped(dest: String, c: String, lo: Column, hi: Column): DataFrame =
     scanZoneMappedN(dest, Seq((c, lo, hi)))
 
@@ -2024,7 +1925,7 @@ object Catalog {
     * rows of `base`; unmatched update rows insert. One anti join on the
     * key — hash-partitioned both sides, no full-table rewrite logic on
     * the compute side (the storage rewrite is the caller's
-    * `writeChunked`/`writePartitioned`, which at scale should target
+    * `writeChunked` or a partitioned write, which at scale should target
     * only the partitions the update keys touch). Schemas must match by
     * name (`unionByName`). PRECONDITION: update keys must be non-null
     * and unique within the batch — a null key never anti-matches (both

@@ -2,197 +2,13 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
 
-/** Structured Streaming over the DOCUMENT ingest path — the streaming
-  * face of the dedup family. Everything here is enabled by the
-  * row-local `minhash_sig` expression ([[graft.functions.MinHashSig]]):
-  * signing a document is a map-only projection, so a stream can sign,
-  * band, and probe without any mid-stream aggregation (which append
-  * mode could not express without watermark gymnastics).
-  *
-  * The production shape: an existing corpus has a persisted signature
-  * index ([[graft.operators.Dedup.buildMinhashIndex]] →
-  * `Catalog.writeChunked`); new documents arrive as a stream; each
-  * micro-batch is signed row-locally and probed against the static
-  * index; flagged near-dups are diverted and novel docs appended — and
-  * their signatures appended to the index, keeping it current without
-  * ever re-reading corpus text.
+/** Structured Streaming over the DOCUMENT ingest path: checkpointed
+  * multi-file replays of the document table ([[Replay.docSource]]) that
+  * drive a batch-trained quality gate and keep the inverted text index
+  * fresh, each oracle-checked against the batch result it must equal.
   */
 object DocStream {
-
-  /** Map-only streaming signer: (doc_id, mh0..mh{k-1}, ss) per arriving
-    * doc with ≥ n tokens — the INCREMENTAL INDEX BUILDER, emitting
-    * exactly [[graft.operators.Dedup.buildMinhashIndex]]'s schema so the
-    * stream appends straight onto the persisted index. Pure projection
-    * (no state, no watermark); writing with a checkpoint gives
-    * exactly-once incremental index maintenance. Signatures are
-    * bit-identical to the batch signer on the same text (the expression
-    * is shared). */
-  def signStream(docs: DataFrame, n: Int = 3, numHashes: Int = 64): DataFrame = {
-    val sig = docs
-      .select(col("doc_id"), graft.functions.MinHashSig.minhashSig(
-        graft.operators.TextAnalysis.tokens(col("text")), n, numHashes).as("s"))
-      .where(col("s").isNotNull)
-    sig.select(col("doc_id") +:
-      (0 until numHashes).map(i => element_at(col("s.mh"), i + 1).as(s"mh$i")) :+
-      col("s.ss").as("ss"): _*)
-  }
-
-  /** Streaming near-dup ingest gate, PURE-STREAM form: each arriving
-    * document's band keys probe the static signature index
-    * (stream-static equi-join on (band, bh)), candidates are verified
-    * with exact Jaccard against the index's shingle sets, and flagged
-    * pairs are emitted in append mode — no watermark, no stream state.
-    *
-    * Emits (new_id, corpus_id, jaccard) AT LEAST once per flagged pair:
-    * a pair sharing several LSH bands is emitted once per matching band
-    * (deduplicating inside the stream would need stateful distinct; a
-    * gate only needs "was flagged at least once", and the exact-parity
-    * variant [[gateExactWriter]] dedups per micro-batch). `sigIndex`
-    * must come from `buildMinhashIndex` with the same n/numHashes.
-    */
-  def nearDupGate(newDocs: DataFrame, sigIndex: DataFrame, n: Int = 3,
-      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    def bandStructs = (0 until bands).map { b =>
-      val slice = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh$i"))
-      struct(lit(b).as("band"), xxhash64(slice: _*).as("bh"))
-    }
-    val probes = signStream(newDocs, n, numHashes)
-      .select(col("doc_id").as("new_id"), col("ss").as("nss"),
-        explode(array(bandStructs: _*)).as("bb"))
-      .select(col("new_id"), col("nss"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-
-    // static side: the index's band keys (re-planned per batch from the
-    // static relation) + its verification sets
-    val corpusBands = sigIndex
-      .select(col("doc_id").as("corpus_id"), col("ss").as("css"),
-        explode(array(bandStructs: _*)).as("bb"))
-      .select(col("corpus_id"), col("css"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-
-    probes.join(corpusBands, Seq("band", "bh"))
-      .withColumn("n_inter", size(array_intersect(col("nss"), col("css"))))
-      .withColumn("jaccard", col("n_inter").cast("double") /
-        (size(col("nss")) + size(col("css")) - col("n_inter")))
-      .where(col("jaccard") >= threshold)
-      .select(col("new_id"), col("corpus_id"),
-        graft.functions.Exact.round6(col("jaccard")).as("jaccard"))
-  }
-
-  /** The map-only FRONT of corpus preparation on a stream: the same
-    * fused quality+language signal expressions, quality/language
-    * filter, and deterministic split assignment that
-    * [[graft.operators.CorpusPipeline.prepare]] runs in batch — all
-    * pure projections, so they run UNCHANGED on a streaming frame with
-    * no watermark or state. This is the ingest-time filter gate; the
-    * stateful stages (dedup, components, decontamination) stay in the
-    * batch/index path ([[nearDupGate]] covers near-dup at ingest).
-    * Output equals the batch pipeline's pre-dedup stage exactly
-    * (spec-asserted). */
-  def prepStream(docs: DataFrame, minQuality: Double = 0.3,
-      langs: Set[String] = Set.empty): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    graft.operators.CorpusPipeline.signals(docs)
-      .where(col("quality_score") >= minQuality &&
-        (if (langs.isEmpty) lit(true) else col("pred_lang").isin(langs.toSeq: _*)))
-      .withColumn("split", graft.operators.Sampling.splitColumn(col("doc_id")))
-  }
-
-  /** Streaming target-domain importance gate: arriving documents are
-    * scored against a FIXED ratio table learned once from the
-    * reference corpus ([[graft.operators.TextAnalysis.importanceRatios]]
-    * → [[graft.operators.TextAnalysis.ratioArray]]) and rows below
-    * `minScore` are dropped. The table rides into the plan as one
-    * array literal, so the gate is a MAP-ONLY projection + filter —
-    * zero joins, shuffles, watermarks, or state on the stream; append
-    * mode works unchanged, and the same call scores a batch frame
-    * identically (spec-asserted). */
-  def importanceGate(docs: DataFrame, ratios: Array[Long],
-      minScore: Double = 1.0): DataFrame =
-    graft.operators.TextAnalysis.importanceScore(docs, ratios)
-      .where(org.apache.spark.sql.functions.col("imp_score") >= minScore)
-
-  /** A document held in a band bucket's state: id + verification set. */
-  case class BucketDoc(doc_id: Long, ss: Seq[Long])
-
-  /** Flagged near-dup pair (id_a < id_b). */
-  case class MutualFlag(id_a: Long, id_b: Long, jaccard: Double)
-
-  /** MUTUAL in-stream near-dup: arrivals are checked against EACH OTHER
-    * (not a static index) — the missing half of the ingest gate. Each
-    * LSH band bucket is a stateful group (`flatMapGroupsWithState`):
-    * state holds the ≤`maxBucket` (doc_id, shingle-set) pairs seen in
-    * that bucket, every arrival is exact-Jaccard-verified against them,
-    * and flagged pairs are emitted in append mode.
-    *
-    * The DISTINCT flagged pair set equals the batch
-    * [[graft.operators.Dedup.minhashLsh]] pair set over the same
-    * documents regardless of arrival order or batching (spec-asserted):
-    * any pair sharing a band meets in that band's group — whichever
-    * doc arrives second finds the first in state (or earlier in the
-    * same batch's iterator). Pairs sharing several bands are emitted
-    * once per band, like [[nearDupGate]].
-    *
-    * State is bounded by `maxBucket` docs per bucket — the same safety
-    * valve as the batch miner's bucket cap (oversized buckets are
-    * exact-dup clusters; collapse those upstream). No watermark: dedup
-    * history is the product, not transient state; cap the horizon by
-    * restarting from a fresh checkpoint per corpus epoch. */
-  def mutualNearDupStream(docs: DataFrame, n: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, threshold: Double = 0.5, maxBucket: Int = 64)(
-      implicit spark: SparkSession): org.apache.spark.sql.Dataset[MutualFlag] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val rowsPerBand = numHashes / bands
-    val bandStructs = (0 until bands).map { b =>
-      val slice = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh$i"))
-      struct(lit(b).as("band"), xxhash64(slice: _*).as("bh"))
-    }
-    signStream(docs, n, numHashes)
-      .select(col("doc_id"), col("ss"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("ss"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-      .as[(Long, Seq[Long], Int, Long)]
-      .groupByKey { case (_, _, band, bh) => (band, bh) }
-      .flatMapGroupsWithState[List[BucketDoc], MutualFlag](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, rows, state) =>
-          var st = state.getOption.getOrElse(Nil)
-          val out = List.newBuilder[MutualFlag]
-          rows.foreach { case (id, ss, _, _) =>
-            val sset = ss.toSet
-            st.foreach { prev =>
-              if (prev.doc_id != id) {
-                val inter = prev.ss.count(sset.contains)
-                val j = inter.toDouble / (prev.ss.size + sset.size - inter)
-                if (j >= threshold)
-                  out += MutualFlag(math.min(prev.doc_id, id), math.max(prev.doc_id, id),
-                    math.floor(j * 1000000.0 + 0.5) / 1000000.0)
-              }
-            }
-            if (st.size < maxBucket) st = BucketDoc(id, ss) :: st
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
-
-  /** Exact-parity gate: `foreachBatch` runs the BATCH
-    * [[graft.operators.Dedup.dedupAgainstIndex]] on each micro-batch,
-    * so every batch's flags equal the batch operator's output on the
-    * same rows exactly (deduplicated candidates, one row per flagged
-    * pair) — the standard production pattern when a stream step wants
-    * full batch semantics. `handle` receives (flags, batchId). */
-  def gateExactWriter(newDocs: DataFrame, sigIndex: DataFrame,
-      handle: (DataFrame, Long) => Unit, n: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, threshold: Double = 0.5): DataStreamWriter[Row] =
-    newDocs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        handle(graft.operators.Dedup.dedupAgainstIndex(
-          sigIndex, batch, n, numHashes, bands, threshold), id)
-      }
 
   /** ORACLE-VISIBLE streaming replay of the TRAINED quality gate —
     * the train-batch → deploy-stream split of model-based filtering:

@@ -24,14 +24,6 @@ object EventStream {
 
   case class SessionState(n: Long, startUs: Long, endUs: Long)
 
-  /** Streaming file source over a parquet events directory. */
-  def readEvents(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 4)
-      .parquet(dir)
-
   /** Watermarked SLIDING (hopping) windows — the streaming twin of
     * Events.slidingCounts: 1-hour windows every 15 minutes, each event
     * in 4 overlapping windows. State is 4× the tumbling window count,
@@ -60,76 +52,6 @@ object EventStream {
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("cnt"), col("sum_value"))
 
-  /** Watermarked per-window approximate distinct users — the KMV sketch
-    * as streaming aggregation state. A mergeable bounded buffer is
-    * exactly what incremental execution needs: each micro-batch folds
-    * its rows into ≤k longs per window, state size is k·windows, and
-    * the final estimate is identical to the batch sketch over the same
-    * data (the buffer is a pure function of the input set — the
-    * streaming-equals-batch spec asserts bit equality). */
-  def windowedDistinctUsers(events: DataFrame,
-      watermarkDelay: String = "2 hours", k: Int = 64): DataFrame = {
-    import graft.functions.KmvSketch
-    import graft.operators.TextAnalysis.portableHash60
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(udaf(KmvSketch.Kmv(k)).apply(
-        portableHash60(col("user_id"))).as("b"))
-      .select(col("window.start").as("hour_start"),
-        KmvSketch.estimate(col("b"), k).as("approx_users"))
-  }
-
-  /** Watermarked per-window value quantiles — the bottom-k sample as
-    * streaming aggregation state (see [[windowedDistinctUsers]]; same
-    * bounded-mergeable-buffer argument, so streaming output equals the
-    * batch sketch bit-for-bit). */
-  def windowedValueQuantiles(events: DataFrame,
-      watermarkDelay: String = "2 hours", k: Int = 256): DataFrame = {
-    import graft.functions.BottomKSample
-    import graft.functions.Exact.round6
-    import graft.operators.TextAnalysis.portableHash60
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(udaf(BottomKSample.BottomK(k)).apply(
-        portableHash60(col("event_id")), col("value")).as("b"))
-      .select(col("window.start").as("hour_start"),
-        round6(BottomKSample.sampleQuantile(col("b"), 0.5)).as("p50_value"))
-  }
-
-  /** Watermarked per-window top-k values — the third mergeable buffer
-    * doubling as streaming state (after KMV distinct-count and the
-    * bottom-k quantile sample): ≤k doubles per window per task, and the
-    * emitted array equals the batch `topk` over the same window's rows
-    * BIT-FOR-BIT (the buffer is a pure function of the input multiset;
-    * spec-asserted). */
-  def windowedTopValues(events: DataFrame,
-      watermarkDelay: String = "2 hours", k: Int = 5): DataFrame = {
-    import graft.functions.TopKAggregate
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(TopKAggregate.topk(col("value"), k).as("top_values"))
-      .select(col("window.start").as("hour_start"), col("top_values"))
-  }
-
-  /** Streaming exact dedup: drop duplicate event_ids within the
-    * watermark horizon — the incremental twin of Dedup.exact. State is
-    * one key per id, aged out once the watermark passes. */
-  def dedupStream(events: DataFrame, watermarkDelay: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicates("event_id")
-
-  /** Stream-static enrichment: micro-batches hash-join against a static
-    * dimension snapshot. The static side obeys the usual broadcast rules
-    * (small dim → BroadcastHashJoin per batch, no stream-side shuffle);
-    * state-free, so unbounded streams run with O(1) memory. */
-  def enriched(events: DataFrame, dim: DataFrame, eventKey: String,
-      dimKey: String): DataFrame =
-    events.join(dim, col(eventKey) === col(dimKey), "left")
-
   /** Watermarked STREAM-STREAM join: purchases matched to the same
     * user's views in the preceding `windowSec` seconds — the streaming
     * twin of Events.purchaseViewsWithin. Both sides carry watermarks and
@@ -151,58 +73,6 @@ object EventStream {
           col("v_ts") < col("p_ts"))
       .select(col("user_id"), col("purchase_id"), col("view_id"),
         col("p_ts"), col("v_ts"))
-  }
-
-  /** Exactly-once parquet sink: file sink + checkpoint (offsets + file
-    * manifest) — restart-safe without manual bookkeeping. */
-  def writeParquet(df: DataFrame, dest: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .format("parquet")
-      .option("path", dest)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .start()
-
-  /** Emitted when an incoming value fails the online z-test. */
-  case class AnomalyOut(user_id: Long, tsu: Long, value: Double)
-
-  /** Per-user moments. s/q are BigInt (encoded as Decimal(38,0)) so the
-    * z-test below stays exact at every magnitude — Σv² in int64 wraps
-    * at ~9·10¹⁸, reachable for a heavy user with large cents values. */
-  case class MomentState(n: Long, s: BigInt, q: BigInt)
-
-  /** ONLINE per-user anomaly detection — the streaming twin of
-    * `Events.anomalies`, with the same no-sqrt integer decision: each
-    * arriving value is tested as z² > k² ⟺ (n·v − S)² > k²·(n·Q − S²)
-    * against the moments of everything seen SO FAR for that user (the
-    * one-pass semantics a stream can have — batch tests against the
-    * full corpus moments), then folded into the state. State per user
-    * is three longs, forever — no watermark needed for boundedness.
-    * `minN` suppresses flags until the baseline has enough mass. */
-  def anomalyStream(events: Dataset[Event], k: Int = 3, minN: Long = 10)(
-      implicit spark: SparkSession): Dataset[AnomalyOut] = {
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[MomentState, AnomalyOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (userId, rows, state: GroupState[MomentState]) =>
-          var st = state.getOption.getOrElse(MomentState(0L, BigInt(0), BigInt(0)))
-          val out = Seq.newBuilder[AnomalyOut]
-          rows.toSeq.sortBy(_.tsu).foreach { e =>
-            val v = math.round(e.value * 100)
-            // exact 128-bit-class arithmetic, mirroring the batch
-            // operator's Decimal(38,0) decision — no silent wrap
-            val dev = BigInt(st.n) * v - st.s
-            if (st.n >= minN &&
-                dev * dev > BigInt(k.toLong * k) * (BigInt(st.n) * st.q - st.s * st.s))
-              out += AnomalyOut(userId, e.tsu, e.value)
-            st = MomentState(st.n + 1, st.s + v, st.q + BigInt(v) * v)
-          }
-          state.update(st)
-          out.result().iterator
-      }
   }
 
   /** Tagged row for [[asOfStream]]: side 0 = right ("quotes"), 1 = left

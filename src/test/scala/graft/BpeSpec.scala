@@ -130,34 +130,6 @@ class BpeSpec extends SparkSpec {
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
   }
 
-  test("token ids are stable, dense, and map back to the exact subwords") {
-    val docs = Tables.documents(spark, sfDir)
-    val learned = Bpe.merges(docs, nMerges = 4)
-      .orderBy("merge_rank").select("tok_a", "tok_b")
-      .as[(String, String)].collect().toSeq
-    val ids = Bpe.vocabIds(Bpe.vocab(docs, nMerges = 4))
-    // dense [0, V): every id once
-    assert(ids.values.toSeq.sorted == (0 until ids.size))
-    val rev = ids.map(_.swap)
-    val enc = Bpe.encodeIds(docs, learned, ids)
-    // no unknowns when encoding the training corpus; ids round-trip
-    val withSeg = Bpe.encode(docs, learned)
-      .withColumnRenamed("seg", "seg0")
-      .join(enc, Seq("doc_id", "word", "n_subwords"))
-      .limit(500).collect()
-    assert(withSeg.nonEmpty)
-    withSeg.foreach { r =>
-      val seg = r.getAs[scala.collection.Seq[String]]("seg0").toSeq
-      val idsOut = r.getAs[scala.collection.Seq[Int]]("ids").toSeq
-      assert(idsOut.forall(_ >= 0) && idsOut.map(rev) == seg)
-    }
-    // frozen tokenizer on NEW text: unseen subwords emit unkId
-    val novel = Seq((99L, "zzzz")).toDF("doc_id", "text")
-    val u = Bpe.encodeIds(novel, learned, ids, unkId = -7)
-      .select(explode($"ids")).as[Int].collect()
-    assert(u.nonEmpty && u.forall(i => i == -7 || i >= 0))
-  }
-
   test("early-stop: a fully merged vocabulary stops instead of failing") {
     val docs = Seq((1L, "ab ab ab")).toDF("doc_id", "text")
     // one possible merge (a,b); asking for 5 stops after 1

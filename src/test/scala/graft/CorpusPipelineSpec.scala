@@ -2,38 +2,6 @@ package graft
 
 import graft.operators.{CorpusPipeline, Dedup, Sampling, TextAnalysis}
 
-class StagedPipelineSpec extends SparkSpec {
-  import spark.implicits._
-  import org.apache.spark.sql.functions.col
-  import graft.operators.CorpusPipeline
-
-  test("staged pipeline matches in-session prepare and resumes from completed stages") {
-    val docs = Tables.documents(spark, sfDir)
-    val bench = Some(docs.where(col("doc_id") < 20))
-    val input = docs.where(col("doc_id") >= 20)
-    val dir = java.nio.file.Files.createTempDirectory("graft-stage").toString
-    val cfg = CorpusPipeline.Config(minQuality = 0.2)
-
-    // every output column must match, not only the split assignment
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select($"doc_id", $"text", $"quality_score", $"pred_lang", $"split")
-        .as[(Long, String, Double, String, String)].collect().toSet
-    val staged = rows(CorpusPipeline.prepareStaged(spark, input, dir, bench, cfg))
-    val res = CorpusPipeline.prepare(input, bench, cfg)
-    val inMem = try rows(res.corpus) finally res.release()
-    assert(staged == inMem)
-
-    // resume: completed stage outputs are read back, not rewritten —
-    // their files' mtimes must survive a re-run untouched
-    val uniqFile = new java.io.File(s"$dir/unique").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val mtime = uniqFile.lastModified()
-    val again = rows(CorpusPipeline.prepareStaged(spark, input, dir, bench, cfg))
-    assert(again == inMem)
-    assert(uniqFile.lastModified() == mtime, "completed stage was recomputed on resume")
-  }
-}
-
 class CorpusPipelineSpec extends SparkSpec {
   import spark.implicits._
 

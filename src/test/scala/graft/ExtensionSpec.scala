@@ -14,10 +14,8 @@ class CosineSimilaritySpec extends SparkSpec {
     val native = pairs.select(
       round(CosineSimilarity.cosineSim($"a.v", $"b.v"), 9).as("c"))
     val composed = pairs.select(
-      round(VectorFunctions.cosineWithNorms(
-        VectorFunctions.dotFixed($"a.v", $"b.v", 64),
-        VectorFunctions.normFixed($"a.v", 64),
-        VectorFunctions.normFixed($"b.v", 64)), 9).as("c"))
+      round(VectorFunctions.dot($"a.v", $"b.v") /
+        (VectorFunctions.norm($"a.v") * VectorFunctions.norm($"b.v")), 9).as("c"))
     assert(native.as[Double].collect().sorted.toSeq ==
       composed.as[Double].collect().sorted.toSeq)
   }

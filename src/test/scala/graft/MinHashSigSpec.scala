@@ -2,11 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
-import graft.streaming.DocStream
 
-/** The native row-local MinHash signer and the streaming ingest surface
-  * it enables. The load-bearing assertion is bit-identity with the
-  * independent aggregate formulation (explode → groupBy → k mins +
+/** The native row-local MinHash signer. The load-bearing assertion is
+  * bit-identity with the independent aggregate formulation (explode → groupBy → k mins +
   * collect_set) it replaced — same mh columns, same ss set — because
   * every minhash consumer (LSH, incremental dedup, the corpus pipeline)
   * inherits its correctness from that equality.
@@ -80,71 +78,6 @@ class MinHashSigSpec extends SparkSpec {
   }
 }
 
-class DocStreamSpec extends SparkSpec {
-  import spark.implicits._
-  import java.nio.file.Files
-
-  private def writeStreamSrc(df: org.apache.spark.sql.DataFrame): String = {
-    val dir = Files.createTempDirectory("graft-docstream").toString
-    df.coalesce(1).write.mode("overwrite").parquet(dir)
-    dir
-  }
-
-  test("streamed signatures equal batch index rows (incremental index build)") {
-    val d = Tables.documents(spark, sfDir).limit(50).select("doc_id", "text")
-    val src = writeStreamSrc(d)
-    val stream = spark.readStream.schema(d.schema).parquet(src)
-    val q = DocStream.signStream(stream, 3, 8)
-      .writeStream.format("memory").queryName("sig_stream").outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("sig_stream")
-      .select(col("doc_id"), col("mh0"), col("mh7"), sort_array(col("ss")).as("ss"))
-    val batch = Dedup.buildMinhashIndex(d, 3, 8)
-      .select(col("doc_id"), col("mh0"), col("mh7"), sort_array(col("ss")).as("ss"))
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
-  }
-
-  test("pure-stream near-dup gate flags the batch pair set (per-band at-least-once)") {
-    val d = Tables.documents(spark, sfDir)
-    val corpus = d.where(col("doc_id") % 2 === 0)
-    val batchNew = d.where(col("doc_id") % 2 === 1).select("doc_id", "text")
-    val index = Dedup.buildMinhashIndex(corpus).persist()
-    val src = writeStreamSrc(batchNew)
-    val stream = spark.readStream.schema(batchNew.schema).parquet(src)
-    val q = DocStream.nearDupGate(stream, index)
-      .writeStream.format("memory").queryName("gate_out").outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val flagged = spark.table("gate_out")
-      .select(col("corpus_id"), col("new_id")).distinct()
-      .as[(Long, Long)].collect().toSet
-    val expected = Dedup.dedupAgainst(corpus, batchNew)
-      .select(col("corpus_id"), col("new_id")).as[(Long, Long)].collect().toSet
-    index.unpersist()
-    assert(flagged == expected)
-  }
-
-  test("foreachBatch exact gate equals the batch operator per micro-batch") {
-    val d = Tables.documents(spark, sfDir)
-    val corpus = d.where(col("doc_id") % 2 === 0)
-    val batchNew = d.where(col("doc_id") % 2 === 1).select("doc_id", "text")
-    val index = Dedup.buildMinhashIndex(corpus).persist()
-    val src = writeStreamSrc(batchNew)
-    val stream = spark.readStream.schema(batchNew.schema).parquet(src)
-    val got = scala.collection.mutable.Set.empty[(Long, Long, Double)]
-    val q = DocStream.gateExactWriter(stream, index, (flags, _) =>
-      got.synchronized { got ++= flags.select("corpus_id", "new_id", "jaccard")
-        .as[(Long, Long, Double)].collect() })
-      .start()
-    try q.awaitTermination(120000) finally if (q.isActive) q.stop()
-    val expected = Dedup.dedupAgainstIndex(index, batchNew)
-      .select("corpus_id", "new_id", "jaccard").as[(Long, Long, Double)].collect().toSet
-    index.unpersist()
-    assert(got.toSet == expected)
-  }
-}
-
 class SimHashSigSpec extends SparkSpec {
   import spark.implicits._
 
@@ -173,31 +106,6 @@ class SimHashSigSpec extends SparkSpec {
     val plan = Dedup.simhashSignatures(Tables.documents(spark, sfDir))
       .opPlanString
     assert(!plan.contains("Exchange"), s"simhash signing must not shuffle:\n$plan")
-  }
-}
-
-class PrepStreamSpec extends SparkSpec {
-  import spark.implicits._
-  import java.nio.file.Files
-  import graft.streaming.DocStream
-
-  test("streaming prep front-end equals the batch signals+filter+split stage") {
-    val d = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-prepstream").toString
-    d.coalesce(1).write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream.schema(d.schema).parquet(dir)
-    val q = DocStream.prepStream(stream, 0.2)
-      .writeStream.format("memory").queryName("prep_stream").outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("prep_stream")
-      .select($"doc_id", functions.Exact.round6($"quality_score").as("q"),
-        $"pred_lang", $"split")
-    val batch = DocStream.prepStream(d, 0.2)
-      .select($"doc_id", functions.Exact.round6($"quality_score").as("q"),
-        $"pred_lang", $"split")
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
-    assert(batch.count() > 0)
   }
 }
 
@@ -340,7 +248,10 @@ class KeepBestSpec extends SparkSpec {
     val pairs = Dedup.ngramJaccard(d, 3, 0.5)
     val best = Dedup.applyDedupKeepBest(d, pairs, -col("doc_id"))
       .select("doc_id").as[Long].collect().toSet
-    val minId = Dedup.applyDedupTransitive(d, pairs)
+    // min-id policy: every paired doc but its component's smallest id drops
+    val losers = Dedup.connectedComponents(pairs)
+      .where(col("id") =!= col("component")).select(col("id").as("doc_id"))
+    val minId = d.join(losers, Seq("doc_id"), "left_anti")
       .select("doc_id").as[Long].collect().toSet
     assert(best == minId)
   }
@@ -369,33 +280,6 @@ class KmvJoinEstimateSpec extends SparkSpec {
     assert(r0.getDouble(2) == 0.0 && r0.getDouble(3) == 0.0)
     val r1 = Analytics.kmvJoinEstimate(a, "k", a, "k", 256).collect().head
     assert(r1.getDouble(2) == 1.0)
-  }
-}
-
-class MutualNearDupStreamSpec extends SparkSpec {
-  import spark.implicits._
-  import java.nio.file.Files
-  import graft.streaming.DocStream
-
-  test("in-stream mutual near-dup flags the batch LSH pair set across micro-batches") {
-    val d = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-mutual").toString
-    // several files so the stream processes multiple micro-batches and
-    // pairs must meet across batch boundaries via state
-    d.repartition(4).write.mode("overwrite").parquet(dir)
-    implicit val s = spark
-    val stream = spark.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = DocStream.mutualNearDupStream(stream)
-      .writeStream.format("memory").queryName("mutual_out").outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val flagged = spark.table("mutual_out")
-      .select("id_a", "id_b", "jaccard").distinct()
-      .as[(Long, Long, Double)].collect().toSet
-    val expected = graft.operators.Dedup.minhashLsh(d)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(flagged == expected && expected.nonEmpty)
   }
 }
 

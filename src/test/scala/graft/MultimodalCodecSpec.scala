@@ -37,7 +37,7 @@ class MultimodalCodecSpec extends SparkSpec {
     assert(dec.where($"n_pixels" =!= $"width" * $"height").count() == 0)
   }
 
-  test("decodeImages reads real PNG/JPEG/BMP files via ingestBinary; corrupt bytes flag ok=false") {
+  test("decodeImages reads real PNG/JPEG/BMP files from the binaryFile source; corrupt bytes flag ok=false") {
     import java.nio.file.{Files, Paths}
     val dir = Files.createTempDirectory("graft-imgs").toString
     val img = gradientImage(37, 23)
@@ -46,7 +46,9 @@ class MultimodalCodecSpec extends SparkSpec {
     ImageIO.write(img, "bmp", Paths.get(dir, "c.bmp").toFile)
     Files.write(Paths.get(dir, "broken.png"), Array.tabulate(64)(_.toByte))
 
-    val dec = Multimodal.decodeImages(Multimodal.ingestBinary(spark, dir)).collect()
+    val files = spark.read.format("binaryFile").load(dir)
+      .select(xxhash64($"path").as("doc_id"), $"content".as("media"))
+    val dec = Multimodal.decodeImages(files).collect()
     assert(dec.length == 4)
     val (good, bad) = dec.partition(_.getAs[Boolean]("ok"))
     assert(good.length == 3 && bad.length == 1)
@@ -54,12 +56,6 @@ class MultimodalCodecSpec extends SparkSpec {
       assert(r.getAs[Long]("width") == 37 && r.getAs[Long]("height") == 23)
     }
     assert(bad.head.getAs[Long]("width") == -1L)
-  }
-
-  test("decodeBatched accepts the real imageDecoder in the stub's slot") {
-    val media = Multimodal.syntheticImages(Tables.documents(spark, sfDir).limit(5))
-    val out = Multimodal.decodeBatched(media, Multimodal.imageDecoder)
-    assert(out.where($"dec_width" < 8 || $"dec_height" < 8).count() == 0)
   }
 
   test("dHash is stable under JPEG re-encode and brightness shift, far for a different image") {
@@ -119,19 +115,6 @@ class MultimodalCodecSpec extends SparkSpec {
     val expected = docs.select($"doc_id").as[Long].collect()
       .groupBy(_ / 2).values.collect { case g if g.length == 2 => (g.min, g.max) }.toSet
     assert(expected.nonEmpty && pairs == expected)
-  }
-
-  test("resizeImages downscales to fit maxDim with aspect preserved, never upscales") {
-    val media = Seq((1L, png(gradientImage(100, 60))), (2L, png(gradientImage(20, 10))))
-      .toDF("doc_id", "media")
-    val out = Multimodal.resizeImages(media, maxDim = 50).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r).toMap
-    assert(out(1L).getAs[Long]("width") == 50 && out(1L).getAs[Long]("height") == 30)
-    assert(out(2L).getAs[Long]("width") == 20 && out(2L).getAs[Long]("height") == 10)
-    // the resized payload is itself a decodable image at the new dims
-    val dec = Multimodal.decodeImages(
-      Seq((1L, out(1L).getAs[Array[Byte]]("media_small"))).toDF("doc_id", "media")).head()
-    assert(dec.getAs[Long]("width") == 50 && dec.getAs[Boolean]("ok"))
   }
 
   test("syntheticWavs decode to the exact planted format, frames, duration, and a sine RMS") {

@@ -236,28 +236,17 @@ class DriverContractSpec extends SparkSpec {
 class ApplyDedupSpec extends SparkSpec {
   import spark.implicits._
 
-  test("applyDedup leaves a corpus with no remaining near-dup pairs") {
-    val docs = Tables.documents(spark, sfDir)
-    val pairs = Dedup.ngramJaccard(docs, 3, 0.5)
-    val cleaned = Dedup.applyDedup(docs, pairs)
-    assert(cleaned.count() < docs.count())
-    // re-running detection on the cleaned corpus finds nothing
-    assert(Dedup.ngramJaccard(cleaned, 3, 0.5).count() == 0)
-    // every dup chain kept its smallest member
-    val dropped = pairs.select($"id_b").as[Long].collect().toSet
-    val kept = cleaned.select($"doc_id").as[Long].collect().toSet
-    assert(kept.intersect(dropped).isEmpty)
-  }
-
   test("connectedComponents resolves chains the pairwise rule cannot") {
     // A~C and B~C found, A~B missed (a real LSH candidate-set shape):
     // naive drop-greater-id keeps both 1 and 2; transitively they are
     // one cluster and only 1 may survive
     val pairs = Seq((1L, 3L), (2L, 3L)).toDF("id_a", "id_b")
     val docs = Seq(1L, 2L, 3L, 9L).toDF("doc_id")
-    val naive = Dedup.applyDedup(docs, pairs).as[Long].collect().toSet
+    val naive = docs.join(pairs.select($"id_b".as("doc_id")), Seq("doc_id"), "left_anti")
+      .as[Long].collect().toSet
     assert(naive == Set(1L, 2L, 9L), "naive rule under-drops here by design")
-    val resolved = Dedup.applyDedupTransitive(docs, pairs).as[Long].collect().toSet
+    val resolved = Dedup.applyDedupKeepBest(docs, pairs, -$"doc_id")
+      .as[Long].collect().toSet
     assert(resolved == Set(1L, 9L))
     val comp = Dedup.connectedComponents(pairs)
       .as[(Long, Long)].collect().toMap
@@ -308,7 +297,7 @@ class EmptyInputSpec extends SparkSpec {
     assert(graft.operators.Similarity.bruteForceTopK(noEmb, 5, 10).count() == 0)
     val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.connectedComponents(noPairs).count() == 0)
-    assert(Dedup.applyDedupTransitive(noDocs, noPairs).count() == 0)
+    assert(Dedup.applyDedupKeepBest(noDocs, noPairs, -col("doc_id")).count() == 0)
     assert(Dedup.embeddingDedup(noEmb).count() == 0)
     assert(Sampling.packSequences(noDocs).count() == 0)
     assert(Sampling.shuffleOrder(noDocs).count() == 0)
@@ -320,7 +309,6 @@ class EmptyInputSpec extends SparkSpec {
     // round-4 operators
     assert(TextAnalysis.importanceWeights(noDocs, col("lang") === "en").count() == 0)
     assert(TextAnalysis.importanceSelect(noDocs, col("lang") === "en").count() == 0)
-    assert(TextAnalysis.importanceScore(noDocs, Array.fill(16)(1000000L)).count() == 0)
     assert(graft.operators.Bpe.merges(noDocs, 4).count() == 0)
     assert(graft.operators.Bpe.vocab(noDocs, 4).count() == 0)
     assert(graft.operators.Bpe.encode(noDocs, Seq("a" -> "b")).count() == 0)

@@ -116,55 +116,4 @@ class MultimodalSpec extends SparkSpec {
     assert(out.forall(r => r.getAs[String]("h").length == 32))
     assert(out.forall(r => r.getAs[Long]("width") < 640 && r.getAs[Long]("height") < 480))
   }
-
-  test("frameSample yields n frames per doc that reassemble a prefix") {
-    val docs = Seq((1L, "abcdefghij", 10L)).toDF("doc_id", "text", "n_chars")
-    val frames = Multimodal.frameSample(docs, 5).orderBy("frame_no")
-      .select("frame").as[Array[Byte]].collect()
-    assert(frames.length == 5)
-    assert(new String(frames.flatten, "UTF-8") == "abcdefghij")
-  }
-
-  test("resizeStub truncates proportionally") {
-    val docs = Seq((1L, "0123456789", 10L)).toDF("doc_id", "text", "n_chars")
-    val b = Multimodal.resizeStub(docs, 0.5).select("media_small").as[Array[Byte]].head()
-    assert(b.length == 5)
-  }
-
-  test("decodeBatched runs the pluggable decoder once per row, batched by partition") {
-    val docs = Tables.documents(spark, sfDir)
-    val out = Multimodal.decodeBatched(docs)
-    assert(out.count() == docs.count())
-    assert(out.where($"dec_width" >= 640 || $"dec_height" >= 480).count() == 0)
-    // custom decoder slots in without schema changes
-    val custom = Multimodal.decodeBatched(docs, bytes => (1L, 2L))
-    assert(custom.where($"dec_width" =!= 1L || $"dec_height" =!= 2L).count() == 0)
-  }
-
-  test("ingestBinary reads real files into the media schema and through decodeBatched") {
-    import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft-media").toString
-    val payloads = Map("a.img" -> Array.tabulate(700)(_.toByte),
-      "b.img" -> Array.tabulate(123)(i => (i * 7).toByte),
-      "skip.txt" -> "not media".getBytes("UTF-8"))
-    payloads.foreach { case (name, bytes) =>
-      Files.write(Paths.get(dir, name), bytes)
-    }
-
-    val ingested = Multimodal.ingestBinary(spark, dir, glob = "*.img")
-    val rows = ingested.collect()
-    assert(rows.length == 2, "glob filter must drop the .txt file")
-    // exact byte round-trip + metadata from the file itself
-    rows.foreach { r =>
-      val name = r.getAs[String]("path").split('/').last
-      assert(r.getAs[Array[Byte]]("media").sameElements(payloads(name)))
-      assert(r.getAs[org.apache.spark.sql.Row]("meta").getAs[Long]("byte_len") ==
-        payloads(name).length)
-      assert(r.getAs[org.apache.spark.sql.Row]("meta").getAs[String]("format") == "img")
-    }
-    // the stub decoder consumes ingested files unchanged
-    val dec = Multimodal.decodeBatched(ingested).collect()
-    assert(dec.length == 2)
-    assert(dec.map(r => r.getAs[Long]("dec_width")).toSet == Set(700L % 640, 123L % 640))
-  }
 }

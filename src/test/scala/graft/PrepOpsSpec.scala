@@ -126,7 +126,7 @@ class DedupAgainstSpec extends SparkSpec {
     val even = docs.where($"doc_id" % 2 === 0)
     val odd = docs.where($"doc_id" % 2 === 1)
     val index = Dedup.buildMinhashIndex(even)
-    val viaIndex = Dedup.dedupAgainstIndex(index, odd)
+    val viaIndex = Dedup.dedupAgainstIndexSigned(index, Dedup.buildMinhashIndex(odd))
       .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
     val monolithic = Dedup.dedupAgainst(even, odd)
       .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq

@@ -4,14 +4,14 @@ import org.apache.spark.sql.functions._
 import graft.sources.Catalog
 import graft.operators.Similarity
 
-/** Round-11: incremental upsert for the QUANTIZED ANN indexes. The
-  * frozen-quantizer contract — centroids AND scales (int8) / codebooks
-  * (PQ) fixed at build time — makes delta encoding a pure per-vector
+/** Round-11: incremental upsert for the QUANTIZED ANN index. The
+  * frozen-quantizer contract — centroids AND int8 scales fixed at
+  * build time — makes delta encoding a pure per-vector
   * function, so the segmented index must EQUAL a monolithic
   * encode-everything pass against the same artifacts, batch boundaries
   * invisible. This closes the 100 TB argument the float-only upsert
-  * left open: the indexes small enough to still fit are now also the
-  * ones that stay fresh. */
+  * left open: the index small enough to still fit now also stays
+  * fresh. */
 class QuantUpsertSpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,23 +53,6 @@ class QuantUpsertSpec extends SparkSpec {
     assert(row.getInt(0) == 127)
   }
 
-  test("pq: upserted == monolithic code-all against the frozen codebooks") {
-    val sub = Tables.embeddings(spark, sfDir).where(col("vec_id") < 600)
-    val cat = freshCat()
-    cat.saveAnnIndexPq("pqidx", Similarity.buildIvfIndexPq(
-      sub.where(col("vec_id") % 5 =!= 0),
-      nCells = 8, m = 16, ksub = 32, cbPasses = 2))
-    cat.upsertAnnIndexPq("pqidx", sub.where(col("vec_id") % 5 === 0), 1L)
-    val up = cat.loadAnnIndexPq("pqidx")
-    assert(up.m == 16 && up.ksub == 32) // meta part round-trips
-    val rebuilt = Similarity.IvfPqIndex(Similarity.assignNewPq(sub, up),
-      up.centroids, up.codebooks, up.m, up.ksub)
-    val queries = Similarity.queryVectors(sub, 5)
-    assert(neighborSets(Similarity.ivfSearchPq(up, queries, 10)) ==
-      neighborSets(Similarity.ivfSearchPq(rebuilt, queries, 10)))
-    assert(up.assignments.count() == sub.count())
-  }
-
   test("quantized retry is a no-op; torn segment is invisible") {
     val emb = Tables.embeddings(spark, sfDir)
     val cat = freshCat()
@@ -92,9 +75,6 @@ class QuantUpsertSpec extends SparkSpec {
     val cat = freshCat()
     intercept[IllegalArgumentException] {
       cat.upsertAnnIndexQ("nope", Tables.embeddings(spark, sfDir), 1L)
-    }
-    intercept[IllegalArgumentException] {
-      cat.upsertAnnIndexPq("nope", Tables.embeddings(spark, sfDir), 1L)
     }
   }
 

@@ -73,51 +73,6 @@ class Round12AdviceSpec extends SparkSpec {
   }
 }
 
-/** Recall-gated IVF search: a degraded index trips the gate and the
-  * probe escalation restores the measured floor — the knob stops
-  * being the caller's guess. */
-class RecallGateSpec extends SparkSpec {
-  import org.apache.spark.sql.functions._
-  import graft.operators.Similarity
-
-  test("stale centroids trip the gate; escalation restores the floor") {
-    val emb = Tables.embeddings(spark, sfDir)
-    // STALE-CENTROID fixture: centroids trained on the even half,
-    // vectors in the index are the odd half — the cell layout no
-    // longer matches the data it serves
-    val even = emb.where(col("vec_id") % 2 === 0)
-    val odd = emb.where(col("vec_id") % 2 =!= 0)
-    val staleCentroids = Similarity.buildIvfIndex(even, nCells = 16).centroids
-    val index = Similarity.IvfIndex(
-      Similarity.assignNew(odd, staleCentroids), staleCentroids)
-    val queries = odd.limit(5).select(col("vec_id").as("query_id"),
-      graft.functions.VectorFunctions.toDouble(col("embedding")).as("qv"))
-    val gated = Similarity.ivfSearchRecallGated(index, queries, k = 10,
-      floor = 0.95, nProbe0 = 1)
-    // the gate FIRED (first attempt under the floor) and escalation
-    // restored it — monotone trail, floor met at the end
-    assert(gated.trail.head._2 < 0.95,
-      s"fixture not degraded enough: ${gated.trail}")
-    assert(gated.trail.size > 1)
-    assert(gated.trail.last._2 >= 0.95, gated.trail.toString)
-    // the returned result IS the passing search
-    val expected = Similarity.ivfSearch(index, queries, 10,
-      nProbe = gated.trail.last._1)
-    assert(gated.result.collect().toSet == expected.collect().toSet)
-  }
-
-  test("a healthy index at an honest nProbe passes without escalating") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val index = Similarity.buildIvfIndex(emb, nCells = 8)
-    val queries = emb.limit(3).select(col("vec_id").as("query_id"),
-      graft.functions.VectorFunctions.toDouble(col("embedding")).as("qv"))
-    val gated = Similarity.ivfSearchRecallGated(index, queries, k = 5,
-      floor = 0.5, nProbe0 = 4)
-    assert(gated.trail.head._2 >= 0.5, gated.trail.toString)
-    assert(gated.trail.size == 1)
-  }
-}
-
 /** Top-k PCA via deflation: a rank-2 corpus is recovered exactly —
   * two orthogonal unit directions with the planted energies — and the
   * third component vanishes (λ = 0 stops the card, no NaN rows). */

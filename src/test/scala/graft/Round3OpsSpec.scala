@@ -130,54 +130,6 @@ class ExactStatsSpec extends SparkSpec {
   }
 }
 
-class AnomalyStreamSpec extends SparkSpec {
-  import spark.implicits._
-  import graft.streaming.EventStream
-
-  test("online anomaly stream flags a spike after warmup, never during it") {
-    import java.nio.file.Files
-    // user 1: wild value INSIDE the warmup window (not flagged), 20
-    // stable values, a 3σ spike (flagged), more stable values
-    val rows =
-      Seq((1L, 0L, 500.0)) ++                       // warmup — suppressed
-      (1 to 20).map(i => (1L, i.toLong, 10.0)) ++
-      Seq((1L, 21L, 1000.0)) ++                     // the spike
-      (22 to 25).map(i => (1L, i.toLong, 10.0))
-    val batch = rows.toDF("user_id", "tsu", "value")
-    val srcDir = Files.createTempDirectory("graft-anom-src").toString
-    batch.coalesce(1).write.mode("overwrite").parquet(srcDir)
-    implicit val s = spark
-    val events = spark.readStream.schema(batch.schema).parquet(srcDir)
-      .as[EventStream.Event]
-    val q = EventStream.anomalyStream(events)
-      .writeStream.format("memory").queryName("anom_out").outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.table("anom_out").select($"tsu", $"value")
-      .as[(Long, Double)].collect().toSet
-    assert(got == Set((21L, 1000.0)))
-  }
-
-  test("anomaly state is three longs per user regardless of history length") {
-    // semantic proxy for O(1) state: replaying 10x more history emits
-    // the same flags (state folds, never accumulates rows)
-    import java.nio.file.Files
-    val rows = (1 to 200).map(i => (2L, i.toLong, 10.0)) :+ (2L, 201L, 800.0)
-    val batch = rows.toDF("user_id", "tsu", "value")
-    val srcDir = Files.createTempDirectory("graft-anom2-src").toString
-    batch.coalesce(1).write.mode("overwrite").parquet(srcDir)
-    implicit val s = spark
-    val events = spark.readStream.schema(batch.schema).parquet(srcDir)
-      .as[EventStream.Event]
-    val q = EventStream.anomalyStream(events)
-      .writeStream.format("memory").queryName("anom2_out").outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.table("anom2_out").select($"tsu").as[Long].collect().toSet
-    assert(got == Set(201L))
-  }
-}
-
 class SpanDedupSpec extends SparkSpec {
   import spark.implicits._
 

@@ -36,42 +36,6 @@ class ImportanceWeightsSpec extends SparkSpec {
     assert(scored.count() == docs.where(size(TextAnalysis.tokens($"text")) >= 2).count())
   }
 
-  test("fixed-table scorer reproduces importanceWeights on the source corpus") {
-    val docs = Tables.documents(spark, sfDir)
-    val ratios = TextAnalysis.ratioArray(
-      TextAnalysis.importanceRatios(docs, col("lang") === "en"))
-    val scored = TextAnalysis.importanceScore(docs, ratios)
-    val full = TextAnalysis.importanceWeights(docs, col("lang") === "en")
-    assert(scored.exceptAll(full).isEmpty && full.exceptAll(scored).isEmpty)
-    // and the scorer is map-only: no exchange anywhere in its plan
-    val plan = scored.opPlanString
-    assert(!plan.contains("Exchange"), s"fixed-table scoring must not shuffle:\n$plan")
-  }
-
-  test("streaming importance gate equals the batch gate under batching") {
-    import java.nio.file.Files
-    import graft.streaming.DocStream
-    val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text", $"lang")
-    val ratios = TextAnalysis.ratioArray(
-      TextAnalysis.importanceRatios(docs, col("lang") === "en"))
-    // gate at the corpus median score so both sides of the gate are hit
-    val cut = TextAnalysis.importanceScore(docs, ratios)
-      .stat.approxQuantile("imp_score", Array(0.5), 0.0).head
-    val dir = Files.createTempDirectory("graft-impgate").toString
-    docs.repartition(4).write.mode("overwrite").parquet(dir) // several files → several batches
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = DocStream.importanceGate(stream, ratios, minScore = cut)
-      .writeStream.format("memory").queryName("imp_gate").outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("imp_gate")
-    val batch = DocStream.importanceGate(docs, ratios, minScore = cut)
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
-    assert(batch.count() > 0 && batch.count() < docs.count(),
-      "the gate must pass some docs and drop some docs")
-  }
-
   test("importanceSelect keeps exactly the above-corpus-mean documents") {
     val docs = Tables.documents(spark, sfDir)
     val scored = TextAnalysis.importanceWeights(docs, col("lang") === "en")

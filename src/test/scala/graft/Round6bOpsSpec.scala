@@ -251,9 +251,10 @@ class Round6bOpsSpec extends SparkSpec {
     assert(got.toSeq == Seq(
       ("s1", 2L, 6L, 1.0, 2.0, 2.0 / 6.0, 2.0 / 6.0),
       ("s2", 1L, 2L, 3.0, 6.0, 3.0, 1.0)))
-    // consistency contract: the lifted rates map is bit-identical to
-    // the hand-computed literals mixtureSample would be configured with
-    val rates = graft.operators.Sampling.planRates(card)
+    // consistency contract: the card's keep_rate column is bit-identical
+    // to the hand-computed literals mixtureSample would be configured with
+    val rates = card.select("source", "keep_rate").as[(String, Double)]
+      .collect().toMap
     assert(rates == Map("s1" -> 2.0 / 6.0, "s2" -> 1.0))
     // and applying them: the epochs>1 source keeps every row (rate 1.0
     // admits any hash draw), the subsampled source keeps a subset

@@ -51,7 +51,6 @@ class Round7bEmptyInputSpec extends SparkSpec {
     assert(TextAnalysis.sourceDiversity(docs).count() == 0)
     assert(TextAnalysis.sourceOverlap(docs).count() == 0)
     assert(TextAnalysis.langProfile(docs).count() == 0)
-    assert(TextAnalysis.topDuplicates(docs).count() == 0)
     // all-aggregate cards emit their single row with zero/null stats
     assert(TextAnalysis.datasheet(docs).count() == 10)
     val gaps = Analytics.reorderGaps(orders).collect()

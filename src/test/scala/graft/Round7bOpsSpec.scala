@@ -162,21 +162,6 @@ class Round7bOpsSpec extends SparkSpec {
     assert(got.toSeq == Seq((0L, 1L, 1.0), (0L, 3L, 0.8)))
   }
 
-  test("radiusSearchIvf is a subset of exact radius with decent recall") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val exact = Similarity.radiusSearch(emb, 5L, 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val idx = Similarity.buildIvfIndex(emb)
-    val queries = emb.where(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"),
-        graft.functions.VectorFunctions.toDouble(col("embedding")).as("qv"))
-    val probed = Similarity.radiusSearchIvf(idx, queries, 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(probed.subsetOf(exact))
-    assert(exact.nonEmpty && probed.size * 2 >= exact.size,
-      s"recall ${probed.size}/${exact.size}")
-  }
-
   test("refreshCdcMv state is batch-order independent and durable") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-spec-cdc").toString
@@ -423,11 +408,11 @@ class Round7bOpsSpec extends SparkSpec {
     val idx = graft.operators.Dedup.buildMinhashIndex(docs)
     new graft.sources.Catalog(spark, root).saveDerived("sig_index", idx)
     val loaded = new graft.sources.Catalog(spark, root).loadDerived("sig_index")
-    val batch = docs.limit(50)
-      .withColumn("doc_id", col("doc_id") + 1000000L)
-    val live = graft.operators.Dedup.dedupAgainstIndex(idx, batch)
+    val batch = graft.operators.Dedup.buildMinhashIndex(docs.limit(50)
+      .withColumn("doc_id", col("doc_id") + 1000000L))
+    val live = graft.operators.Dedup.dedupAgainstIndexSigned(idx, batch)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val disk = graft.operators.Dedup.dedupAgainstIndex(loaded, batch)
+    val disk = graft.operators.Dedup.dedupAgainstIndexSigned(loaded, batch)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(live.nonEmpty && disk == live)
     intercept[IllegalArgumentException] {
@@ -636,17 +621,6 @@ class Round7bOpsSpec extends SparkSpec {
     val hot = ((1L to 100L) ++ Seq.fill(900)(7L)).toDF("k")
     val h = graft.sources.Catalog.skewCard(hot, col("k")).collect().head
     assert(h.getDouble(4) > 10.0) // 900 of 1000 rows share one bucket
-  }
-
-  test("topDuplicates ranks dup groups by copies, singletons excluded") {
-    import spark.implicits._
-    val docs = Seq((1L, "aaa"), (2L, "aaa"), (3L, "aaa"),
-      (4L, "bbb"), (5L, "bbb"), (6L, "unique"))
-      .toDF("doc_id", "text")
-    val got = graft.operators.TextAnalysis.topDuplicates(docs, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      .sortBy(-_._2)
-    assert(got.toSeq == Seq((1L, 3L, "aaa"), (4L, 2L, "bbb")))
   }
 
   test("langProfile: exact mean and discrete median per language") {

@@ -126,6 +126,24 @@ class Round9DurabilitySpec extends SparkSpec {
       dim, Seq("k"), Some(4L)).count() == 4)
   }
 
+  test("maintain folds a join MV at its segment threshold, not below it") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-jmvmaint").toString
+    val cat = new graft.sources.Catalog(spark, root)
+    val dim = Seq((1L, "x"), (2L, "y")).toDF("k", "name")
+    (1L to 3L).foreach(b =>
+      cat.appendJoinMv("jv", Seq((b % 2 + 1, b * 10)).toDF("k", "v"), dim, Seq("k"), Some(b)))
+    val before = cat.readJoinMv("jv").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
+    assert(cat.maintain(threshold = 4).isEmpty)
+    assert(cat.joinMvSegments("jv").size == 3)
+    assert(cat.maintain(threshold = 3) == Seq("jv"))
+    assert(cat.joinMvSegments("jv") == Seq("seg_b3"))
+    val after = cat.readJoinMv("jv").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
+    assert(after == before)
+  }
+
   test("appendJoinMv: a fresh Catalog instance resumes from disk alone") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-jmvres").toString

@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.{Analytics, Skew}
-import graft.streaming.EventStream
 
 class SkewSpec extends SparkSpec {
   import spark.implicits._
@@ -100,24 +98,5 @@ class SketchSpec extends SparkSpec {
         s"approx median $m outside exact rank band [$lo, $hi] " +
           s"for ${r.getAs[String]("l_returnflag")}")
     }
-  }
-}
-
-class DedupStreamSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("streaming dedup drops duplicate event_ids within the watermark") {
-    val batch = Tables.events(spark, sfDir).limit(200)
-    val doubled = batch.unionAll(batch) // every id twice
-    val srcDir = Files.createTempDirectory("graft-dedup-src").toString
-    doubled.write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream.schema(doubled.schema).parquet(srcDir)
-    val q = EventStream.dedupStream(stream)
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table("dedup_out")
-    assert(out.count() == batch.count())
-    assert(out.groupBy("event_id").count().where($"count" > 1).count() == 0)
   }
 }

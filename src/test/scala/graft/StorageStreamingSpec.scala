@@ -29,11 +29,11 @@ class CatalogSpec extends SparkSpec {
     assert(files >= back.count() / 500) // chunk bound respected
   }
 
-  test("writePartitioned enables partition pruning") {
-    val dest = Files.createTempDirectory("graft-part").toString + "/orders"
-    val cat = new Catalog(spark, sfDir)
-    cat.writePartitioned(cat.table("orders"), dest, Seq("o_orderstatus"))
-    val pruned = spark.read.parquet(dest).where($"o_orderstatus" === "F")
+  test("partitionedLayout enables partition pruning") {
+    val cat = new Catalog(spark, sfDir,
+      Some(Files.createTempDirectory("graft-part").toString))
+    val pruned = cat.partitionedLayout(cat.table("orders"), "orders", "o_orderstatus")
+      .where($"o_orderstatus" === "F")
     val plan = pruned.queryExecution.executedPlan.toString
     assert(pruned.count() > 0)
     assert(!plan.contains("o_orderstatus") || plan.contains("PartitionFilters"))
@@ -64,7 +64,8 @@ class EventStreamSpec extends SparkSpec {
     // stream from a re-written copy (normalized µs timestamps)
     val srcDir = Files.createTempDirectory("graft-stream-src").toString
     batch.write.mode("overwrite").parquet(srcDir)
-    val stream = EventStream.readEvents(spark, srcDir, batch.schema)
+    val stream = spark.readStream.schema(batch.schema)
+      .option("maxFilesPerTrigger", 4).parquet(srcDir)
     val q = EventStream.windowedCounts(stream)
       .writeStream.format("memory").queryName("wc_out").outputMode("append")
       .start()
@@ -87,7 +88,8 @@ class EventStreamSpec extends SparkSpec {
     val batch = Tables.events(spark, sfDir)
     val srcDir = Files.createTempDirectory("graft-sliding-src").toString
     batch.write.mode("overwrite").parquet(srcDir)
-    val stream = EventStream.readEvents(spark, srcDir, batch.schema)
+    val stream = spark.readStream.schema(batch.schema)
+      .option("maxFilesPerTrigger", 4).parquet(srcDir)
     val q = EventStream.slidingCountsStream(stream)
       .writeStream.format("memory").queryName("sliding_out").outputMode("append")
       .start()
@@ -128,7 +130,8 @@ class EventStreamSpec extends SparkSpec {
     batch.write.mode("overwrite").parquet(srcDir)
     val replay = spark.read.parquet(srcDir)
 
-    val stream = EventStream.readEvents(spark, srcDir, replay.schema)
+    val stream = spark.readStream.schema(replay.schema)
+      .option("maxFilesPerTrigger", 4).parquet(srcDir)
     val q = EventStream.purchaseViewJoin(stream, 600)
       .writeStream.format("memory").queryName("ssj_out").outputMode("append")
       .start()
@@ -253,34 +256,6 @@ class AsOfStreamSpec extends SparkSpec {
   }
 }
 
-class StreamEnrichSinkSpec extends SparkSpec {
-  import spark.implicits._
-  import java.nio.file.Files
-
-  test("stream-static enrichment matches the batch join, exactly-once to parquet") {
-    val batch = Tables.events(spark, sfDir)
-    val dim = Tables.customer(spark, sfDir)
-      .select($"c_custkey", $"c_mktsegment")
-    val srcDir = Files.createTempDirectory("graft-enrich-src").toString
-    batch.write.mode("overwrite").parquet(srcDir)
-
-    val stream = EventStream.readEvents(spark, srcDir, batch.schema)
-    val enriched = EventStream.enriched(stream, dim, "user_id", "c_custkey")
-      .select($"event_id", $"user_id", $"c_mktsegment")
-
-    val outDir = Files.createTempDirectory("graft-enrich-out").toString + "/data"
-    val ckpt = Files.createTempDirectory("graft-enrich-ckpt").toString
-    val q = EventStream.writeParquet(enriched, outDir, ckpt)
-    try q.processAllAvailable() finally q.stop()
-
-    val streamed = spark.read.parquet(outDir)
-    val expected = batch.join(dim, $"user_id" === $"c_custkey", "left")
-    assert(streamed.count() == expected.count())
-    assert(streamed.where($"c_mktsegment".isNull).count() ==
-      expected.where($"c_mktsegment".isNull).count())
-  }
-}
-
 class StreamRestartSpec extends SparkSpec {
   import spark.implicits._
   import java.nio.file.Files
@@ -294,8 +269,10 @@ class StreamRestartSpec extends SparkSpec {
     // first half of the input arrives
     val Array(h1, h2) = batch.randomSplit(Array(0.5, 0.5), seed = 7)
     h1.write.mode("append").parquet(srcDir)
-    def start() = EventStream.writeParquet(
-      spark.readStream.schema(batch.schema).parquet(srcDir), outDir, ckpt)
+    def start() = spark.readStream.schema(batch.schema).parquet(srcDir)
+      .writeStream.format("parquet")
+      .option("path", outDir).option("checkpointLocation", ckpt)
+      .start()
     val q1 = start()
     try q1.processAllAvailable() finally q1.stop()
     val afterFirst = spark.read.parquet(outDir).count()

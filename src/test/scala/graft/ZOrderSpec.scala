@@ -15,11 +15,11 @@ class ZOrderSpec extends SparkSpec {
     assert(out == Seq(0L, 1L, 2L, 15L, 25L))
   }
 
-  test("writeZOrdered produces disjoint, internally-sorted Z ranges per file") {
+  test("writeZOrderedN produces disjoint, internally-sorted Z ranges per file") {
     val cat = new Catalog(spark, sfDir)
     val li = Tables.lineitem(spark, sfDir)
     val dest = "/tmp/graft_zorder_test"
-    cat.writeZOrdered(li, dest, 8, "l_partkey", "l_suppkey")
+    cat.writeZOrderedN(li, dest, 8, Seq("l_partkey", "l_suppkey"))
     val back = spark.read.parquet(dest)
     assert(back.count() == li.count())
     // per-file z min/max: ranges must not overlap across files

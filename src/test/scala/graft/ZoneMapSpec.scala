@@ -92,42 +92,6 @@ class ZoneMapSpec extends SparkSpec {
     assert(expect.getLong(0) > 0)
   }
 
-  test("appendZoneMapped keeps the map fresh for one delta scan; a raw append refuses") {
-    val cat = mkCat
-    val dest = java.nio.file.Files.createTempDirectory("graft-zm-app").toString
-    (1 to 100).map(i => (i.toLong, "base")).toDF("k", "src")
-      .repartition(4).write.mode("overwrite").parquet(dest)
-    cat.buildZoneMap(dest, Seq("k"))
-
-    // a raw append bricks the probe path loudly, not silently
-    (201L to 210L).map((_, "raw")).toDF("k", "src")
-      .write.mode("append").parquet(dest)
-    assert(intercept[IllegalArgumentException] {
-      cat.scanZoneMapped(dest, "k", lit(1L), lit(10L))
-    }.getMessage.contains("stale"))
-    cat.buildZoneMap(dest, Seq("k")) // heal, then test the O(Δ) path
-
-    cat.appendZoneMapped(
-      (301L to 310L).map((_, "delta")).toDF("k", "src").coalesce(1),
-      dest, Seq("k"))
-    // probe the delta's range: only its file opens
-    val hit = cat.scanZoneMapped(dest, "k", lit(301L), lit(310L))
-    assert(hit.count() == 10)
-    assert(hit.inputFiles.length == 1, "delta probe must open only the delta file")
-    assert(hit.select($"src").distinct().as[String].collect().toSeq == Seq("delta"))
-    // probe the base range: delta files must NOT open
-    val base = cat.scanZoneMapped(dest, "k", lit(1L), lit(10L))
-    assert(base.count() == 10)
-    assert(base.select($"src").distinct().as[String].collect().toSeq == Seq("base"))
-    // the folded sidecar equals a from-scratch rebuild
-    val folded = spark.read.parquet(s"$dest/_zonemap")
-      .orderBy($"file").collect().toSeq
-    cat.buildZoneMap(dest, Seq("k"))
-    val rebuilt = spark.read.parquet(s"$dest/_zonemap")
-      .orderBy($"file").collect().toSeq
-    assert(folded == rebuilt)
-  }
-
   test("a stale zone map refuses to serve after a data rewrite") {
     val cat = mkCat
     val dest = java.nio.file.Files.createTempDirectory("graft-zm-stale").toString

@@ -19,7 +19,12 @@
 #      graft/plans/ or to functions/CosineSimilarity.scala (home of the
 #      GraftExtensions session extensions) also runs PlanAuditSpec:
 #      session extensions shape the plan of every driver entry.
-#   3. The checks run against the STAGED snapshot: if any staged
+#   3. A staged src/main Scala file runs the reachability check
+#      (tools/reach.py, no JVM): every member of src/main must be named
+#      outside its own body by src/main or perfbench/src, so surface
+#      that only its specs call cannot land. tools/test_reach.py runs
+#      beside it.
+#   4. The checks run against the STAGED snapshot: if any staged
 #      .scala/.sbt file also has unstaged edits, the index is
 #      materialized via git checkout-index into a temp dir and checked
 #      there, so partial staging cannot sneak a non-compiling tree in.
@@ -53,6 +58,16 @@ if [[ -n "$unstaged" ]] && grep -qFxf <(echo "$unstaged") <<<"$staged"; then
   trap 'rm -rf "$checkdir"' EXIT
 fi
 
+if grep -qE '^src/main/.*\.scala$' <<<"$staged"; then
+  echo "precommit: reachability check..." >&2
+  python3 tools/test_reach.py > /tmp/precommit_reach.log 2>&1 &&
+    python3 tools/reach.py "$checkdir" >> /tmp/precommit_reach.log 2>&1 || {
+    tail -30 /tmp/precommit_reach.log >&2
+    echo "precommit: REFUSED — unreached members in src/main (tools/reach.py)" >&2
+    exit 1
+  }
+fi
+
 echo "precommit: sbt compile..." >&2
 (cd "$checkdir" && sbt -batch compile < /dev/null) \
     > /tmp/precommit_compile.log 2>&1 || {
@@ -64,7 +79,7 @@ echo "precommit: sbt compile..." >&2
 prep_re='operators/(CorpusPipeline|TextAnalysis)\.scala'
 if grep -qE "$prep_re" <<<"$staged"; then
   echo "precommit: corpus-prep specs..." >&2
-  (cd "$checkdir" && sbt -batch "testOnly graft.CorpusPipelineSpec graft.StagedPipelineSpec graft.PrepareIncrementSpec graft.AttritionSpec" < /dev/null) \
+  (cd "$checkdir" && sbt -batch "testOnly graft.CorpusPipelineSpec graft.PrepareIncrementSpec graft.AttritionSpec" < /dev/null) \
       > /tmp/precommit_prep.log 2>&1 || {
     tail -30 /tmp/precommit_prep.log >&2
     echo "precommit: REFUSED — corpus-prep specs failed" >&2
@@ -75,7 +90,7 @@ fi
 catalog_re='sources/Catalog\.scala'
 if grep -qE "$catalog_re" <<<"$staged"; then
   echo "precommit: derived-state specs..." >&2
-  (cd "$checkdir" && sbt -batch "testOnly graft.TextIndexSpec graft.AutoMaintainSpec graft.Round7OpsSpec graft.Round7bOpsSpec graft.Round9DurabilitySpec graft.Scd2BackfillSpec graft.KmvMvSpec graft.Round13FixSpec" < /dev/null) \
+  (cd "$checkdir" && sbt -batch "testOnly graft.TextIndexSpec graft.AutoMaintainSpec graft.Round7OpsSpec graft.Round7bOpsSpec graft.Round9DurabilitySpec graft.Scd2BackfillSpec graft.KmvMvSpec graft.Round13FixSpec graft.PartitionedLayoutSpec" < /dev/null) \
       > /tmp/precommit_catalog.log 2>&1 || {
     tail -30 /tmp/precommit_catalog.log >&2
     echo "precommit: REFUSED — derived-state specs failed" >&2
@@ -111,7 +126,7 @@ if grep -qE "SparkEntry\.scala|$prep_re|$catalog_re|$tables_re" <<<"$staged"; th
       | sed '/^$/d' | sort -u | paste -sd, -)
   fi
   if grep -qE "$catalog_re" <<<"$staged"; then
-    touched=$(tr , '\n' <<<"$touched,fs_incr_agg,fs_mv_lookup,fs_mv_stream,fs_bm25_indexed,fs_bm25_upsert,d_index_maint,e_scd2_stream,fs_scd2_backfill" \
+    touched=$(tr , '\n' <<<"$touched,fs_incr_agg,fs_mv_lookup,fs_mv_stream,fs_bm25_indexed,fs_bm25_upsert,d_index_maint,e_scd2_stream,fs_scd2_backfill,fs_partition_prune" \
       | sed '/^$/d' | sort -u | paste -sd, -)
   fi
   if grep -qE "$tables_re" <<<"$staged"; then

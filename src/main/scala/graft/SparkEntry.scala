@@ -679,7 +679,7 @@ object SparkEntry {
       // DURABLE MV refresh under the Catalog-owned warehouse layout (the
       // testdata base dir is read-only): drop → refresh(90% batch) →
       // refresh(10% delta). The second refresh resumes from the state the
-      // first COMMITTED TO DISK (_SUCCESS-marked parquet, no in-process
+      // first COMMITTED TO DISK (a manifest over parquet, no in-process
       // cache), so this drives the full store→resume→merge→write-back
       // path every run; the leading drop makes the gate idempotent.
       val cat = new graft.sources.Catalog(s, d,

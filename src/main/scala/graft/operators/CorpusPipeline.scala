@@ -270,8 +270,8 @@ object CorpusPipeline {
     * (per-shard doc/token/char/source census), `/datasheet` (the
     * integer corpus card), `/contract` (text-nonempty + unique-id
     * violations — a publisher gates on max == 0). Everything rides
-    * [[graft.sources.Catalog.saveDerived]]'s tmp-swap + `_SUCCESS`,
-    * so a torn publish never serves and a FRESH session reads the
+    * [[graft.sources.Catalog.saveDerived]]'s manifest commit, so a
+    * torn publish never serves and a FRESH session reads the
     * release from disk alone. Returns the release summary as an
     * integer (metric, value) card. */
   def publish(cat: graft.sources.Catalog, docs: DataFrame, dest: String,

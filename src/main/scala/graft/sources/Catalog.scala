@@ -37,50 +37,82 @@ class Catalog(spark: SparkSession, baseDir: String,
 
   private def hconf = spark.sparkContext.hadoopConfiguration
 
-  /** Committed-state probe, SELF-HEALING for interrupted swaps: a
-    * [[commitSwap]] that crashed between "rename live aside" and
-    * "install tmp" leaves the committed state at `<dir>.bak` — without
-    * recovery the next refresh would see no `_SUCCESS` and silently
-    * re-seed the MV from its delta alone, dropping all accumulated
-    * history with no error. Every read path funnels through here, so
-    * the first touch after a torn swap restores the backup (and a
-    * leftover backup from a COMPLETED install is just deleted).
-    *
-    * Because this recovery is DESTRUCTIVE (it deletes and renames), it
-    * extends the caller-serialization contract: reads of a derived
-    * name must be serialized with refreshes of the SAME name — a read
-    * racing an in-flight [[commitSwap]] could restore the backup
-    * inside the writer's rename gap, failing the writer's install
-    * rename. The single scheduler that owns a name's refresh cadence
-    * owns its reads too; distinct names stay independent. */
-  private def hasSuccess(dir: String): Boolean = {
-    val live = new Path(dir)
-    val fs = live.getFileSystem(hconf)
-    def committed(p: Path) = fs.exists(new Path(p, "_SUCCESS"))
-    val bak = new Path(s"$dir.bak")
-    if (fs.exists(bak)) {
-      if (committed(live)) fs.delete(bak, true) // install done, cleanup torn
-      else if (committed(bak)) {                // install torn: restore
-        fs.delete(live, true)
-        if (!fs.rename(bak, live))
-          throw new java.io.IOException(s"swap recovery failed for $dir")
-      }
-    }
-    committed(live)
+  /** Spark's `_SUCCESS` commit marker — the commit of the plain layouts
+    * (zone maps, partitioned and snapshot layouts) that carry no
+    * manifest. */
+  private def hasSuccess(dir: Path): Boolean =
+    dir.getFileSystem(hconf).exists(new Path(dir, "_SUCCESS"))
+
+  // ──────────────────────────────────────────────────────────────────
+  // DERIVED STATE. Every family below — the single-table states (the
+  // MVs and saveDerived), the ANN and text indexes, SCD2 history and
+  // the join MV — commits through ONE protocol ([[StateDir]]): data
+  // lands in directories that are written once and never rewritten,
+  // and a numbered manifest under `<name>/_manifest` lists each part's
+  // schema and live files, the family, its metadata and the high-water
+  // mark of applied batch ids. A commit publishes the next manifest
+  // atomically and only then deletes what it no longer lists; a read
+  // takes the highest manifest and touches only the files it lists.
+  //
+  // EXACTLY-ONCE is one monotone rule for every family: a batch id at
+  // or below the mark is a no-op (Structured Streaming's foreachBatch
+  // ids strictly increase, and a restart replays at most the last
+  // uncommitted one). A build or save starts with no mark.
+  //
+  // CONCURRENCY CONTRACT: reads and writes of one name are serialized
+  // by the caller (the scheduler that owns the refresh cadence) — two
+  // concurrent refreshes would each merge against the same pre-state,
+  // and a read racing a commit could list files the commit is about to
+  // delete. Distinct names are independent.
+
+  private val Table = "table"
+  private val Ann = "ann"
+  private val Text = "text"
+  private val Scd2 = "scd2"
+  private val Join = "join"
+
+  private def stateDir(name: String) =
+    new StateDir(spark, new Path(s"$derivedDir/$name"))
+
+  /** The committed state `name` of `family`, or an IllegalArgumentException
+    * naming `what` — an uncommitted or torn state never serves. */
+  private def committed(name: String, family: String,
+      what: String): (StateDir, Manifest) = {
+    val st = stateDir(name)
+    val m = st.latest.filter(_.family == family)
+    require(m.isDefined, s"no committed $what: $name")
+    (st, m.get)
+  }
+
+  /** The shared body of every single-table MV refresh: unless
+    * `batchId` is already applied, commit `merge(stored state)` as the
+    * state's next version, then return the committed state. The merge
+    * plan reads the previous version's files and writes a fresh
+    * directory, so it never consumes its own output. */
+  private def refreshTable(name: String, batchId: Option[Long])(
+      merge: Option[DataFrame] => DataFrame): DataFrame = {
+    val st = stateDir(name)
+    val prev = st.latest.filter(_.family == Table)
+    if (!batchId.exists(id => prev.exists(_.applied(id))))
+      st.commit(Manifest(Table, batchId.orElse(prev.flatMap(_.mark)),
+        Map("data" -> st.write(merge(prev.map(m => st.read(m.parts("data")))),
+          s"data_v${st.next}"))))
+    mvState(name)
+  }
+
+  /** A committed single-table state (an MV or a [[saveDerived]] table). */
+  private def tableState(name: String, what: String): DataFrame = {
+    val (st, m) = committed(name, Table, what)
+    st.read(m.parts("data"))
   }
 
   /** Durable incremental aggregate maintenance (materialized-view
-    * refresh). MV state is plain parquet at `derivedDir/<name>` with
-    * Spark's `_SUCCESS` commit marker; each refresh merges `deltaAgg`
-    * into the stored state by re-aggregating their union on `keys` and
-    * WRITES THE MERGED STATE BACK (materialize to a `.tmp` sibling,
-    * then swap — the merge plan reads the live dir, so an in-place
-    * overwrite would consume its own output), so state accumulates
-    * across refreshes and a FRESH session resumes from disk alone: no
-    * process-local cache exists. A torn refresh (crash between delete
-    * and rename) leaves no `_SUCCESS` at the live path and the `.tmp`
-    * state intact for manual recovery; a crash before the delete leaves
-    * the previous committed state untouched.
+    * refresh). Each refresh merges `deltaAgg` into the stored state by
+    * re-aggregating their union on `keys` and commits the merged state
+    * as the MV's next version, so state accumulates across refreshes
+    * and a FRESH session resumes from disk alone: no process-local
+    * cache exists. A crash at any step leaves the previous version
+    * committed and readable.
     *
     * Correct for exactly the algebraic aggregates (counts, integer
     * sums) whose partial states combine by summation — which is why
@@ -90,131 +122,19 @@ class Catalog(spark: SparkSession, baseDir: String,
     * O(|stored keys| + |delta|), independent of history size, and the
     * history itself is never re-read.
     *
-    * CONCURRENCY CONTRACT: refreshes of one MV name must be serialized
-    * by the caller (the scheduler that owns the refresh cadence) — two
-    * concurrent refreshes would each merge against the same pre-state
-    * and the second swap would silently drop the first delta. Distinct
-    * names are independent. */
+    * A caller that passes the engine's microbatch id (foreachBatch
+    * hands it over) makes the refresh idempotent: a retry of an
+    * applied batch is a no-op instead of the classic at-least-once
+    * double-count. Refreshes of one name are serialized by the caller. */
   def refreshAggMv(name: String, deltaAgg: DataFrame, keys: Seq[String],
       batchId: Option[Long] = None): DataFrame = {
-    val dir = s"$derivedDir/$name"
     val counterCols = deltaAgg.columns.filterNot(keys.contains)
     require(counterCols.nonEmpty, s"refreshAggMv($name): no counter columns")
-    if (alreadyApplied(dir, batchId)) return spark.read.parquet(dir)
-    def reAgg(df: DataFrame) = df.groupBy(keys.map(col): _*)
-      .agg(sum(col(counterCols.head)).as(counterCols.head),
-        counterCols.tail.map(c => sum(col(c)).as(c)): _*)
-    val merged =
-      if (hasSuccess(dir))
-        reAgg(spark.read.parquet(dir).unionByName(deltaAgg))
-      else reAgg(deltaAgg)
-    commitSwap(dir, merged, batchId, s"refreshAggMv($name)")
-    spark.read.parquet(dir)
-  }
-
-  /** EXACTLY-ONCE guard for retried refreshes: a caller that passes the
-    * engine's microbatch id (foreachBatch hands it over) makes the
-    * refresh idempotent — a retry of an already-committed batch is a
-    * no-op, because the applied id travels INSIDE the committed state
-    * dir (an `_`-prefixed sidecar the parquet reader ignores) and swaps
-    * atomically with it. Without this, a foreachBatch retry after a
-    * sink failure would merge the same delta twice — the classic
-    * at-least-once double-count. Monotone contract: batch ids must not
-    * decrease across successful refreshes (Structured Streaming's are
-    * strictly increasing). */
-  private def alreadyApplied(dir: String, batchId: Option[Long]): Boolean =
-    batchId.exists { id =>
-      hasSuccess(dir) && {
-        val m = new Path(s"$dir/$BatchMarker")
-        val fs = m.getFileSystem(hconf)
-        fs.exists(m) && {
-          val in = fs.open(m)
-          val last = try new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-          finally in.close()
-          last >= id
-        }
-      }
+    refreshTable(name, batchId) { stored =>
+      stored.fold(deltaAgg)(_.unionByName(deltaAgg)).groupBy(keys.map(col): _*)
+        .agg(sum(col(counterCols.head)).as(counterCols.head),
+          counterCols.tail.map(c => sum(col(c)).as(c)): _*)
     }
-
-  private val BatchMarker = "_graft_last_batch"
-
-  /** Materialize `merged` into `dir.tmp`, stamp the batch marker, then
-    * atomically swap into `dir` (shared by both MV flavors). */
-  private def commitSwap(dir: String, merged: DataFrame,
-      batchId: Option[Long], what: String): Unit = {
-    val live = new Path(dir)
-    val tmp = new Path(s"$dir.tmp")
-    val fs = live.getFileSystem(hconf)
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    batchId.foreach { id =>
-      val out = fs.create(new Path(tmp, BatchMarker), true)
-      try out.write(id.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    installSwap(dir, fs, what)
-  }
-
-  /** Crash-recoverable install of `<dir>.tmp` over `<dir>`: park the
-    * committed live state at `.bak` BEFORE installing tmp (a crash in
-    * the gap leaves `.bak` committed, which [[hasSuccess]] restores on
-    * the next touch), and delete the backup only once the new state is
-    * in place. The old shape — delete(live) then rename — had a window
-    * where NO committed state existed and a crash silently reset the
-    * state to its next delta. Shared by [[commitSwap]] and
-    * [[saveAnnIndex]] so every derived-state install recovers the same
-    * way. */
-  private def installSwap(dir: String, fs: org.apache.hadoop.fs.FileSystem,
-      what: String, keepBak: Boolean = false): Unit = {
-    val live = new Path(dir)
-    val tmp = new Path(s"$dir.tmp")
-    val bak = new Path(s"$dir.bak")
-    fs.delete(bak, true)
-    if (fs.exists(live) && !fs.rename(live, bak))
-      throw new java.io.IOException(s"$what: backup rename failed")
-    if (!fs.rename(tmp, live))
-      throw new java.io.IOException(s"$what: swap rename failed")
-    // keepBak: the installed dir carries a `_backfill_pull` intent that
-    // pulls untouched segments back OUT of the backup (scd2Backfill's
-    // touch-only-the-delta install); the caller deletes the backup
-    // after the pull completes
-    if (!keepBak) fs.delete(bak, true)
-  }
-
-  /** The idempotent second half of [[scd2Backfill]]'s targeted
-    * install: segments the backfill did NOT touch are pulled back from
-    * the swap backup by rename (byte-identical, mtimes preserved — a
-    * multi-TB history is never rewritten for a few late keys). Driven
-    * by the `_backfill_pull` intent the tmp dir carried through the
-    * swap; replayed from [[recoverDirSwap]] before any backup cleanup,
-    * so a crash anywhere leaves a state one touch away from
-    * consistent. */
-  private def finishBackfillPull(name: String): Unit = {
-    val live = new Path(s"$derivedDir/$name")
-    val fs = live.getFileSystem(hconf)
-    val intent = new Path(live, "_backfill_pull")
-    if (!fs.exists(intent)) return
-    val bak = new Path(s"$derivedDir/$name.bak")
-    val in = fs.open(intent)
-    val names = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-      .split("\n").map(_.trim).filter(_.nonEmpty)
-    finally in.close()
-    // a listed segment at neither place is lost: fail with the intent
-    // (and the backup) still in place instead of dropping it silently
-    names.foreach { seg =>
-      val dst = new Path(live, seg)
-      val src = new Path(bak, seg)
-      if (!fs.exists(dst)) {
-        if (!fs.exists(src))
-          throw new java.io.IOException(
-            s"scd2Backfill($name): untouched segment $seg is in neither $live nor $bak")
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(
-            s"scd2Backfill($name): pull of untouched segment $seg failed")
-      }
-    }
-    fs.delete(intent, false): Unit
   }
 
   /** Durable CDC (change-data-capture) view maintenance — the
@@ -229,22 +149,18 @@ class Catalog(spark: SparkSession, baseDir: String,
     * there correctness needs batch order to follow seq order. Caller
     * contract: `seqCol` values are unique per key (a (key, seq) tie has
     * no defined winner), and refreshes of one name are serialized, as
-    * with [[refreshAggMv]]. Same `_SUCCESS`-committed tmp-swap
-    * durability; refresh cost O(|stored keys| + |batch|). The
-    * LIVE VIEW of the state is `cdcState(name)` — upserts only. */
+    * with [[refreshAggMv]], whose commit and batch-id rule it shares;
+    * refresh cost O(|stored keys| + |batch|). The LIVE VIEW of the
+    * state is `cdcState(name)` — upserts only. */
   def refreshCdcMv(name: String, changes: DataFrame, key: String,
       seqCol: String, opCol: String, batchId: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val dir = s"$derivedDir/$name"
-    if (alreadyApplied(dir, batchId)) return spark.read.parquet(dir)
-    val all =
-      if (hasSuccess(dir)) spark.read.parquet(dir).unionByName(changes)
-      else changes
     val w = Window.partitionBy(col(key)).orderBy(col(seqCol).desc)
-    val merged = all.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
-    commitSwap(dir, merged, batchId, s"refreshCdcMv($name)")
-    spark.read.parquet(dir)
+    refreshTable(name, batchId) { stored =>
+      stored.fold(changes)(_.unionByName(changes))
+        .withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1).drop("__rn")
+    }
   }
 
   /** The queryable face of a [[refreshCdcMv]] state: live rows only
@@ -257,12 +173,12 @@ class Catalog(spark: SparkSession, baseDir: String,
     * re-windowing the full change log: per refresh, versions the batch
     * CLOSES land as an immutable `closed_seg_b<id>` segment (the
     * [[appendJoinMv]] append-only convention — history is written once
-    * and never rewritten), while each key's still-OPEN version rides in
-    * a small tmp-swap state (live-key population, the dimension size
-    * class). Refresh cost is O(|open keys| + |batch|) compute and
-    * O(|closed in batch|) write — independent of history size, which is
-    * the 100 TB point: a year of version history costs the year's
-    * closed-version bytes exactly once.
+    * and never rewritten), while each key's still-OPEN version is a
+    * small part rewritten per refresh (live-key population, the
+    * dimension size class). Refresh cost is O(|open keys| + |batch|)
+    * compute and O(|closed in batch|) write — independent of history
+    * size, which is the 100 TB point: a year of version history costs
+    * the year's closed-version bytes exactly once.
     *
     * Mechanics: the stored open versions re-enter the lead() window as
     * pseudo-changes at their original sequence, so a change in this
@@ -277,25 +193,21 @@ class Catalog(spark: SparkSession, baseDir: String,
     * sequence — a late change would need to REWRITE closed segments.
     * Event-time-ordered sources (the Replay source, any watermarked
     * handoff) satisfy this by construction; out-of-order backfills
-    * route through the batch [[scd2History]] rebuild instead.
+    * route through [[scd2Backfill]] instead.
     *
-    * EXACTLY-ONCE: the open state's batch marker gates the whole
-    * refresh; the segment is written before the open swap, so a crash
-    * between them replays into a byte-identical overwrite (same open
-    * state + same batch in, deterministic out), and a retry after the
-    * swap no-ops. Caller-serialization per name as with every MV. */
+    * One manifest commit publishes the closed segment, the delete
+    * audit and the new open part together; a batch id at or below the
+    * state's mark is a no-op. Caller-serialization per name as with
+    * every MV. */
   def refreshScd2Mv(name: String, changes: DataFrame, key: String,
       seqCol: String, opCol: String, batchId: Long): Unit = {
     import org.apache.spark.sql.expressions.Window
-    recoverDirSwap(name, "open")
-    val openDir = s"$derivedDir/$name/open"
-    if (alreadyApplied(openDir, Some(batchId))) return
-    val all =
-      if (hasSuccess(openDir))
-        spark.read.parquet(openDir).unionByName(changes)
-      else changes
+    val st = stateDir(name)
+    val prev = st.latest.filter(_.family == Scd2)
+    if (prev.exists(_.applied(batchId))) return
+    val all = prev.fold(changes)(m => st.read(m.parts("open")).unionByName(changes))
     val w = Window.partitionBy(col(key)).orderBy(col(seqCol))
-    // three consumers (closed segment, tombstone audit, open swap) —
+    // three consumers (closed segment, delete audit, open part) —
     // materialized once so the stored-state union + lead() window runs
     // one time per refresh, not three (state+batch bounded, the same
     // rows the refresh rewrites anyway)
@@ -308,66 +220,40 @@ class Catalog(spark: SparkSession, baseDir: String,
     val open = stamped.where(col(opCol) === "u" && col("__vt").isNull)
       .drop("__vt")
     try {
-      closed.write.mode(SaveMode.Overwrite)
-        .parquet(s"$derivedDir/$name/closed_seg_b$batchId")
+      val closedSeg = st.write(closed, s"closed_seg_b$batchId")
       // the DELETE AUDIT part: every tombstone's (key, seq), because the
       // version rows alone cannot encode a delete that deleted nothing
       // (a d on an already-tombstoned key) — and [[scd2Backfill]] must
       // replay even those when a late upsert lands a span under one.
-      // repartition(1): always ≥ 1 schema-bearing file, and a batch's
-      // deletes fit one file by nature. Written before the open swap,
-      // same retry-overwrite argument as the closed segment.
-      stamped.where(col(opCol) === "d")
-        .select(col(key), col(seqCol))
-        .repartition(1)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$derivedDir/$name/tombs_seg_b$batchId")
-      commitSwap(openDir, open, Some(batchId), s"refreshScd2Mv($name)")
+      // repartition(1): a batch's deletes fit one file by nature.
+      val tombsSeg = st.write(stamped.where(col(opCol) === "d")
+        .select(col(key), col(seqCol)).repartition(1), s"tombs_seg_b$batchId")
+      def grown(part: String, seg: Part) = prev.fold(seg)(_.parts(part) ++ seg)
+      st.commit(Manifest(Scd2, Some(batchId), Map(
+        "open" -> st.write(open, s"open_v${st.next}"),
+        "closed" -> grown("closed", closedSeg),
+        "tombs" -> grown("tombs", tombsSeg))))
     } finally stamped.unpersist(): Unit
   }
 
-  /** Fold every committed closed segment of a [[refreshScd2Mv]] state
-    * into ONE — the operational counterpart of append-only history
-    * maintenance, the [[compactJoinMv]] shape: segments accumulate one
-    * per refresh, reads pay a listing + union per segment until
-    * someone compacts. The new layout (open state copied, closed
-    * history as a single `closed_seg_b<maxId>`) is built in
-    * `<name>.tmp` and installed by the crash-recoverable dir swap —
-    * no readable state ever holds the fold AND the old segments, and
-    * a torn install heals from `.bak` on the next touch
-    * ([[recoverDirSwap]]). Exactly-once is unaffected: the refresh
-    * gate is the OPEN state's batch marker, which the copy preserves
-    * byte-for-byte (a retried batch still no-ops after compaction). */
+  /** Fold every closed segment of a [[refreshScd2Mv]] state into ONE
+    * — the operational counterpart of append-only history maintenance,
+    * the [[compactJoinMv]] shape: segments accumulate one per refresh,
+    * reads pay a union per segment until someone compacts. The fold
+    * (and the folded delete audit) are written to fresh directories and
+    * one manifest swaps them in for the segments; the open part stays
+    * listed as it is, and so does the batch-id mark, so a replayed
+    * batch still no-ops after compaction. */
   def compactScd2(name: String): Unit = {
-    recoverDirSwap(name, "open")
-    val root = new Path(s"$derivedDir/$name")
-    val fs = root.getFileSystem(hconf)
-    val segs = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("closed_seg_b"))
-      .map(_.getPath.getName)
-      .filter(n => hasSuccess(s"$derivedDir/$name/$n"))
-      .sortBy(n => n.stripPrefix("closed_seg_b").toLong)
-    if (segs.size < 2) return // nothing to fold
-    val tmp = s"$derivedDir/$name.tmp"
-    fs.delete(new Path(tmp), true)
-    spark.read.parquet(segs.map(n => s"$derivedDir/$name/$n"): _*)
-      .write.parquet(s"$tmp/${segs.last}")
-    // the delete-audit parts fold the same way (they are the closed
-    // history's tombstone sidecar — dropping them would re-lose the
-    // no-op deletes scd2Backfill exists to replay)
-    val tombs = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("tombs_seg_b"))
-      .map(_.getPath.toString).filter(hasSuccess).sorted
-    if (tombs.nonEmpty)
-      spark.read.parquet(tombs: _*)
-        .repartition(1)
-        .write.parquet(s"$tmp/tombs_seg_b${segs.last.stripPrefix("closed_seg_b")}")
-    // the open state copies with its batch marker intact: read+write
-    // would drop the `_`-prefixed sidecar, so copy files verbatim
-    org.apache.hadoop.fs.FileUtil.copy(fs,
-      new Path(s"$derivedDir/$name/open"), fs, new Path(s"$tmp/open"),
-      false, hconf)
-    installSwap(s"$derivedDir/$name", fs, s"compactScd2($name)")
+    val (st, m) = committed(name, Scd2, "scd2 state")
+    val closed = m.parts("closed")
+    if (closed.segments.size < 2) return // nothing to fold
+    val v = st.next
+    st.commit(m.copy(parts = m.parts ++ Map(
+      "closed" -> st.write(st.read(closed), s"closed_v$v"),
+      // the delete-audit parts fold the same way (dropping them would
+      // re-lose the no-op deletes scd2Backfill exists to replay)
+      "tombs" -> st.write(st.read(m.parts("tombs")).repartition(1), s"tombs_v$v"))))
   }
 
   /** OUT-OF-ORDER BACKFILL — the repair verb for the one contract
@@ -380,96 +266,62 @@ class Catalog(spark: SparkSession, baseDir: String,
     * (deletes stay recoverable precisely because tombstones close
     * without opening). The batch [[scd2History]] re-derives those
     * keys' histories over reconstructed ∪ late; every other key's
-    * rows copy through untouched. Installed as a compact-shaped
-    * atomic dir swap (a backfill also compacts — same fold, same
-    * [[recoverDirSwap]] healing), with the open state's batch marker
-    * copied verbatim so the ordered stream resumes exactly where it
-    * left off and a replayed last batch still no-ops.
+    * rows copy through untouched. Committed like a compaction: the
+    * repaired segment, open part and delete audit are fresh
+    * directories one manifest publishes, and the batch-id mark carries
+    * over, so the ordered stream resumes exactly where it left off and
+    * a replayed last batch still no-ops.
     *
     * Cost: O(affected keys' history) compute, O(TOUCHED segments)
-    * rewrite bytes — a closed segment holding no affected key is
-    * preserved IN PLACE (pulled back out of the swap backup by rename:
-    * byte-identical files, mtimes untouched), so repairing a few late
-    * keys never rewrites a multi-TB history. The price of repairing
-    * append-only storage is paid only when late data actually arrives;
-    * the streaming refresh path stays O(Δ). Caller contract: `late`
-    * carries exactly the change schema (key, seq, op, values),
-    * (key, seq) unique across late ∪ applied. */
+    * rewrite bytes — a closed segment holding no affected key simply
+    * stays listed (its files are never touched), so repairing a few
+    * late keys never rewrites a multi-TB history. The price of
+    * repairing append-only storage is paid only when late data
+    * actually arrives; the streaming refresh path stays O(Δ). Caller
+    * contract: `late` carries exactly the change schema (key, seq, op,
+    * values), (key, seq) unique across late ∪ applied. */
   def scd2Backfill(name: String, late: DataFrame, key: String,
       seqCol: String, opCol: String): Unit = {
-    recoverDirSwap(name, "open")
-    val openDir = s"$derivedDir/$name/open"
-    require(hasSuccess(openDir), s"no committed scd2 state: $name")
+    val (st, m) = committed(name, Scd2, "scd2 state")
     val keys = late.select(col(key)).distinct()
-    // TOUCH ONLY THE DELTA (round 14): a backfill rewrites a closed
-    // segment only when an affected key's rows actually live in it.
-    // One pruned (key, file) scan of the closed history semi-joined to
-    // the late keys finds the touched segments; every other segment is
-    // PRESERVED IN PLACE — pulled back out of the swap backup by
-    // rename via the `_backfill_pull` intent, byte-identical, mtimes
-    // untouched — so the rewrite bytes are O(touched segments), not
-    // O(history). The repair itself only ever needed the touched rows:
-    // an affected key's complete history lives in touched segments ∪
-    // open by definition.
-    val rootPath = new Path(s"$derivedDir/$name")
-    val fsRoot = rootPath.getFileSystem(hconf)
-    val allSegs = fsRoot.listStatus(rootPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("closed_seg_b"))
-      .filter(s => hasSuccess(s.getPath.toString))
-      .flatMap(s => scala.util.Try(
-        s.getPath.getName.stripPrefix("closed_seg_b").toLong).toOption
-        .map(id => id -> s.getPath.getName))
-      .sortBy(_._1)
-    val touchedNames0: Set[String] =
-      if (allSegs.isEmpty) Set.empty
-      else spark.read
-        .parquet(allSegs.map(s => s"$derivedDir/$name/${s._2}"): _*)
-        .select(col(key), input_file_name().as("__f"))
-        .join(broadcast(keys), Seq(key))
-        .select(col("__f")).distinct().collect()
-        .map(r => new Path(r.getString(0)).getParent.getName).toSet
-    // fold-id safety: the replacement segment reuses the highest
-    // TOUCHED id; when no segment is touched but segments exist, adopt
-    // the highest-id one so the fold id never collides with a
-    // preserved segment's name
-    val touchedNames =
-      if (touchedNames0.isEmpty && allSegs.nonEmpty)
-        touchedNames0 + allSegs.last._2
-      else touchedNames0
-    val untouchedNames = allSegs.map(_._2).filterNot(touchedNames)
-    val touchedPaths = allSegs.collect {
-      case (_, n) if touchedNames(n) => s"$derivedDir/$name/$n"
-    }
-    val hist = scd2HistoryFromParts(openDir, touchedPaths, seqCol, opCol)
+    // TOUCH ONLY THE DELTA: one pruned (key, file) scan of the closed
+    // history semi-joined to the late keys finds the segments holding
+    // affected keys. The repair only ever needs those rows: an affected
+    // key's complete history lives in touched segments ∪ open.
+    val closed = m.parts("closed")
+    val touched = st.read(closed)
+      .select(col(key), input_file_name().as("__f"))
+      .join(broadcast(keys), Seq(key))
+      .select(col("__f")).distinct().collect()
+      .map(r => new Path(r.getString(0)).getParent.getName).toSet
+    val (hit, kept) = closed.segments.partition(s => touched(s.dir))
+    val hist = scd2HistoryFromParts(st.read(m.parts("open")),
+      if (hit.isEmpty) None else Some(st.read(closed.copy(segments = hit))),
+      seqCol, opCol)
     val valueCols = hist.columns
       .filterNot(Seq(key, "valid_from", "valid_to", "is_current").contains)
     // three consumers (upserts + both sides of the inferred-tombstone
-    // anti-join) — materialized once so the stored history (closed
-    // segments ∪ open) is listed and scanned one time, bounded by the
-    // late keys' own history
+    // anti-join) — materialized once so the stored history (touched
+    // segments ∪ open) is scanned one time, bounded by the late keys'
+    // own history
     val affected = hist.join(broadcast(keys), Seq(key)).localCheckpoint()
     val upserts = affected.select(
       Seq(col(key), col("valid_from").as(seqCol), lit("u").as(opCol)) ++
         valueCols.map(col): _*)
     // tombstones come from TWO sources, deduped on (key, seq): inferred
     // (a closed version's valid_to no successor opens at was closed by
-    // a d) and the delete-audit parts — the audit is what preserves
-    // NO-OP deletes (a d on an already-tombstoned key), which leave no
-    // trace in the version rows yet must still close a span when a
-    // late upsert lands under them; inference keeps pre-audit states
-    // repairable for the deletes that did close something
-    val tombSegs = fsRoot.listStatus(rootPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("tombs_seg_b"))
-      .map(_.getPath.toString).filter(hasSuccess).sorted
+    // a d) and the delete audit — the audit is what preserves NO-OP
+    // deletes (a d on an already-tombstoned key), which leave no trace
+    // in the version rows yet must still close a span when a late
+    // upsert lands under them
+    val tombs = st.read(m.parts("tombs"))
     val inferred = affected.where(col("valid_to").isNotNull)
       .select(col(key), col("valid_to").as(seqCol))
       .join(affected.select(col(key), col("valid_from").as(seqCol)),
         Seq(key, seqCol), "left_anti")
-    val audit =
-      if (tombSegs.isEmpty) None
-      else Some(spark.read.parquet(tombSegs: _*).join(broadcast(keys), Seq(key)))
-    val tombstones = audit.fold(inferred)(a =>
-        inferred.unionByName(a.select(col(key), col(seqCol)))).distinct()
+    val tombstones = inferred
+      .unionByName(tombs.join(broadcast(keys), Seq(key)).select(col(key), col(seqCol)))
+      .distinct()
       .select(Seq(col(key), col(seqCol), lit("d").as(opCol)) ++
         valueCols.map(c => lit(null).cast(hist.schema(c).dataType).as(c)): _*)
     val merged = upserts.unionByName(tombstones)
@@ -477,89 +329,47 @@ class Catalog(spark: SparkSession, baseDir: String,
     val fixed = Catalog.scd2History(merged, key, seqCol, opCol)
     // unaffected keys' rows WITHIN the touched segments (and open) —
     // they must ride into the replacement segment; unaffected keys in
-    // PRESERVED segments never enter the plan at all
+    // kept segments never enter the plan at all
     val untouched = hist.join(broadcast(keys), Seq(key), "left_anti")
-    // materialize BEFORE the swap: newHist still references the live
-    // dirs the install is about to rename away
     val newHist = untouched
       .unionByName(fixed.select(untouched.columns.map(col): _*))
       .localCheckpoint()
-    val fs = fsRoot
-    val segId = (allSegs.collect { case (id, n) if touchedNames(n) => id }
-      :+ 0L).max
-    val tmp = s"$derivedDir/$name.tmp"
-    fs.delete(new Path(tmp), true)
-    // empty frames re-partition to 1 so a schema-bearing part file
-    // always lands (the compactAnnIndex tombstone rule)
-    def writable(df: DataFrame) = if (df.isEmpty) df.repartition(1) else df
-    writable(newHist.where(col("valid_to").isNotNull).drop("is_current"))
-      .write.parquet(s"$tmp/closed_seg_b$segId")
-    val openOut = newHist.where(col("valid_to").isNull)
-      .select(Seq(col(key), col("valid_from").as(seqCol),
-        lit("u").as(opCol)) ++ valueCols.map(col): _*)
-    writable(openOut).write.parquet(s"$tmp/open")
+    val v = st.next
     // the repaired delete audit: affected keys' deletes from the merged
     // log (late deletes included), untouched keys' audit rows verbatim
-    val untouchedAudit = audit.map(_ => spark.read.parquet(tombSegs: _*)
-      .join(broadcast(keys), Seq(key), "left_anti"))
-    val newAudit = merged.where(col(opCol) === "d").select(col(key), col(seqCol))
-    untouchedAudit.fold(newAudit)(_ unionByName newAudit)
-      .repartition(1)
-      .write.parquet(s"$tmp/tombs_seg_b$segId")
-    val mSrc = new Path(s"$openDir/$BatchMarker")
-    if (fs.exists(mSrc))
-      org.apache.hadoop.fs.FileUtil.copy(fs, mSrc, fs,
-        new Path(s"$tmp/open/$BatchMarker"), false, hconf)
-    if (untouchedNames.nonEmpty) {
-      // the pull intent rides the swap inside the installed dir, so a
-      // crash anywhere replays it from recoverDirSwap before the
-      // backup (still holding the untouched segments) is dropped
-      val out = fs.create(new Path(s"$tmp/_backfill_pull"), true)
-      try out.write(untouchedNames.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      installSwap(s"$derivedDir/$name", fs, s"scd2Backfill($name)",
-        keepBak = true)
-      finishBackfillPull(name)
-      fs.delete(new Path(s"$derivedDir/$name.bak"), true): Unit
-    } else
-      installSwap(s"$derivedDir/$name", fs, s"scd2Backfill($name)")
+    val audit = tombs.join(broadcast(keys), Seq(key), "left_anti")
+      .unionByName(merged.where(col(opCol) === "d").select(col(key), col(seqCol)))
+    st.commit(m.copy(parts = Map(
+      "closed" -> (closed.copy(segments = kept) ++ st.write(
+        newHist.where(col("valid_to").isNotNull).drop("is_current"), s"closed_v$v")),
+      "open" -> st.write(newHist.where(col("valid_to").isNull)
+        .select(Seq(col(key), col("valid_from").as(seqCol), lit("u").as(opCol)) ++
+          valueCols.map(col): _*), s"open_v$v"),
+      "tombs" -> st.write(audit.repartition(1), s"tombs_v$v"))))
   }
 
   /** The full version history of a [[refreshScd2Mv]] state: every
-    * committed closed segment plus the open versions (valid_to null,
-    * is_current true) — column-for-column the batch [[scd2History]]
-    * over the same (ordered) change log, which is what the
-    * e_scd2_stream oracle and the invariance spec verify. Torn
-    * segments (no `_SUCCESS`) never serve, as in the join-MV family. */
+    * closed segment plus the open versions (valid_to null, is_current
+    * true) — column-for-column the batch [[scd2History]] over the same
+    * (ordered) change log, which is what the e_scd2_stream oracle and
+    * the invariance spec verify. */
   def scd2MvHistory(name: String, seqCol: String,
       opCol: String): DataFrame = {
-    recoverDirSwap(name, "open")
-    val openDir = s"$derivedDir/$name/open"
-    require(hasSuccess(openDir), s"no committed scd2 state: $name")
-    val root = new Path(s"$derivedDir/$name")
-    val fs = root.getFileSystem(hconf)
-    val segs = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("closed_seg_"))
-      .map(_.getPath.toString)
-      .filter(hasSuccess)
-      .sorted
-    scd2HistoryFromParts(openDir, segs, seqCol, opCol)
+    val (st, m) = committed(name, Scd2, "scd2 state")
+    scd2HistoryFromParts(st.read(m.parts("open")),
+      Some(st.read(m.parts("closed"))), seqCol, opCol)
   }
 
-  /** [[scd2MvHistory]]'s assembly over an EXPLICIT closed-segment list
-    * — the hook [[scd2Backfill]] uses to build its repair plan from
-    * the touched segments only. */
-  private def scd2HistoryFromParts(openDir: String, segs: Seq[String],
+  /** [[scd2MvHistory]]'s assembly over an EXPLICIT closed history —
+    * the hook [[scd2Backfill]] uses to build its repair plan from the
+    * touched segments only. */
+  private def scd2HistoryFromParts(openRaw: DataFrame, closed: Option[DataFrame],
       seqCol: String, opCol: String): DataFrame = {
-    val openRaw = spark.read.parquet(openDir)
     val open = openRaw
       .withColumnRenamed(seqCol, "valid_from")
       .withColumn("valid_to", lit(null).cast(openRaw.schema(seqCol).dataType))
       .drop(opCol)
-    val closedAll =
-      if (segs.isEmpty) None else Some(spark.read.parquet(segs: _*))
-    closedAll.map(_.unionByName(open)).getOrElse(open)
+    closed.map(_.unionByName(open)).getOrElse(open)
       .withColumn("is_current", col("valid_to").isNull)
   }
 
@@ -581,23 +391,19 @@ class Catalog(spark: SparkSession, baseDir: String,
     * costs k longs per segment, not a year of customer ids. The merge
     * runs through [[graft.functions.KmvSketch.Kmv]]'s bounded
     * mergeable buffer (map-side combine ships ≤ k longs per key per
-    * task) and explodes back to rows for the swap. `hashCol` must be
+    * task) and explodes back to rows for the commit. `hashCol` must be
     * uniform on [0, 2⁶⁰) — use `TextAnalysis.portableHash60`, which
     * keeps the whole state engine-portable (the DuckDB oracle rebuilds
-    * it with md5 + row_number). Same exactly-once `batchId` guard and
+    * it with md5 + row_number). Same exactly-once `batchId` rule and
     * caller-serialization contract as [[refreshAggMv]]. */
   def refreshKmvMv(name: String, delta: DataFrame, keys: Seq[String],
       hashCol: String, k: Int, batchId: Option[Long] = None): DataFrame = {
-    val dir = s"$derivedDir/$name"
-    if (alreadyApplied(dir, batchId)) return spark.read.parquet(dir)
     val d = delta.select(keys.map(col) :+ col(hashCol).as("h"): _*)
-    val all =
-      if (hasSuccess(dir)) spark.read.parquet(dir).unionByName(d) else d
-    val merged = all.groupBy(keys.map(col): _*)
-      .agg(graft.functions.KmvSketch.kmv(col("h"), k).as("__buf"))
-      .select(keys.map(col) :+ explode(col("__buf")).as("h"): _*)
-    commitSwap(dir, merged, batchId, s"refreshKmvMv($name)")
-    spark.read.parquet(dir)
+    refreshTable(name, batchId) { stored =>
+      stored.fold(d)(_.unionByName(d)).groupBy(keys.map(col): _*)
+        .agg(graft.functions.KmvSketch.kmv(col("h"), k).as("__buf"))
+        .select(keys.map(col) :+ explode(col("__buf")).as("h"): _*)
+    }
   }
 
   /** Distinct-count estimates from a [[refreshKmvMv]] state: per key,
@@ -606,10 +412,8 @@ class Catalog(spark: SparkSession, baseDir: String,
     * keeps exactly the k smallest, h₍ₖ₎ is simply max(h). The
     * expression shape mirrors `KmvSketch.estimate` (and the oracle SQL)
     * so the double arithmetic is bit-identical cross-engine. */
-  def kmvMvEstimate(name: String, keys: Seq[String], k: Int): DataFrame = {
-    require(hasSuccess(s"$derivedDir/$name"),
-      s"no committed kmv state: $name")
-    spark.read.parquet(s"$derivedDir/$name")
+  def kmvMvEstimate(name: String, keys: Seq[String], k: Int): DataFrame =
+    tableState(name, "kmv state")
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n"), max(col("h")).as("__hk"))
       .select(keys.map(col) :+
@@ -617,7 +421,6 @@ class Catalog(spark: SparkSession, baseDir: String,
         when(col("__n") < k, col("__n").cast("double"))
           .otherwise(lit((k - 1).toDouble) * lit(1152921504606846976.0) /
             col("__hk").cast("double")).as("est"): _*)
-  }
 
   /** Durable QUANTILE-sketch MV — the third sketch-MV rung beside the
     * counter MV ([[refreshAggMv]]), the distinct rung ([[refreshKmvMv]])
@@ -635,23 +438,19 @@ class Catalog(spark: SparkSession, baseDir: String,
     * State: plain parquet at (keys, h, val) grain, ≤ k rows per key
     * regardless of history — "p50/p95 per segment over a year" costs
     * k pairs per segment, not a year of values. Same exactly-once
-    * batch-id guard and caller-serialization contract as every MV. */
+    * batch-id rule and caller-serialization contract as every MV. */
   def refreshQsketchMv(name: String, delta: DataFrame, keys: Seq[String],
       hashCol: String, valueCol: String, k: Int,
       batchId: Option[Long] = None): DataFrame = {
-    val dir = s"$derivedDir/$name"
-    if (alreadyApplied(dir, batchId)) return spark.read.parquet(dir)
     val d = delta.select(
       keys.map(col) :+ col(hashCol).as("h") :+ col(valueCol).as("val"): _*)
-    val all =
-      if (hasSuccess(dir)) spark.read.parquet(dir).unionByName(d) else d
-    val merged = all.groupBy(keys.map(col): _*)
-      .agg(graft.functions.BottomKSample.bottomK(col("h"), col("val"), k)
-        .as("__buf"))
-      .select(keys.map(col) :+ explode(col("__buf")).as("p"): _*)
-      .select(keys.map(col) :+ col("p._1").as("h") :+ col("p._2").as("val"): _*)
-    commitSwap(dir, merged, batchId, s"refreshQsketchMv($name)")
-    spark.read.parquet(dir)
+    refreshTable(name, batchId) { stored =>
+      stored.fold(d)(_.unionByName(d)).groupBy(keys.map(col): _*)
+        .agg(graft.functions.BottomKSample.bottomK(col("h"), col("val"), k)
+          .as("__buf"))
+        .select(keys.map(col) :+ explode(col("__buf")).as("p"): _*)
+        .select(keys.map(col) :+ col("p._1").as("h") :+ col("p._2").as("val"): _*)
+    }
   }
 
   /** The MEMBERSHIP rung of the sketch-MV family (counters / KMV
@@ -662,32 +461,25 @@ class Catalog(spark: SparkSession, baseDir: String,
     * bit-identical to one pass over everything
     * ([[graft.operators.BloomJoin.wordDelta]] is the mergeable
     * buffer) — and uniquely in the family even a double-applied delta
-    * could not corrupt it; the batch marker still gates for
+    * could not corrupt it; the batch-id rule still applies for
     * uniformity. At 100 TB this is the always-current "have we
     * ingested this id" gate: ≤ m/64 longs of state, refresh cost
     * tracks the delta, and the read side prefilters every incremental
     * batch through [[graft.operators.BloomJoin.antiJoin]]'s bypass. */
   def refreshBloomMv(name: String, deltaWords: DataFrame,
-      batchId: Option[Long] = None): DataFrame = {
-    val dir = s"$derivedDir/$name"
-    if (alreadyApplied(dir, batchId)) return spark.read.parquet(dir)
-    def reAgg(df: DataFrame) =
-      df.groupBy(col("w")).agg(expr("bit_or(b)").as("b"))
-    val merged =
-      if (hasSuccess(dir)) reAgg(spark.read.parquet(dir).unionByName(deltaWords))
-      else reAgg(deltaWords)
-    commitSwap(dir, merged, batchId, s"refreshBloomMv($name)")
-    spark.read.parquet(dir)
-  }
+      batchId: Option[Long] = None): DataFrame =
+    refreshTable(name, batchId) { stored =>
+      stored.fold(deltaWords)(_.unionByName(deltaWords))
+        .groupBy(col("w")).agg(expr("bit_or(b)").as("b"))
+    }
 
   /** The folded bitset as the probe-side array
     * ([[graft.operators.BloomJoin.mightContain]]'s input) — ≤ m/64
     * rows collected, the same driver bound every bloom build accepts. */
   def bloomMvBits(name: String, mBits: Int): Array[Long] = {
     require(mBits > 0 && mBits % 64 == 0, s"mBits must be a positive multiple of 64: $mBits")
-    require(hasSuccess(s"$derivedDir/$name"), s"no committed bloom state: $name")
     val arr = new Array[Long](mBits / 64)
-    spark.read.parquet(s"$derivedDir/$name").collect()
+    tableState(name, "bloom state").collect()
       .foreach(r => arr(r.getInt(0)) = r.getLong(1))
     arr
   }
@@ -700,9 +492,7 @@ class Catalog(spark: SparkSession, baseDir: String,
       k: Int): DataFrame = {
     import graft.functions.BottomKSample._
     import graft.functions.Exact.round6
-    require(hasSuccess(s"$derivedDir/$name"),
-      s"no committed qsketch state: $name")
-    spark.read.parquet(s"$derivedDir/$name")
+    tableState(name, "qsketch state")
       .groupBy(keys.map(col): _*)
       .agg(bottomK(col("h"), col("val"), k).as("b"))
       .select(keys.map(col) :+
@@ -712,266 +502,164 @@ class Catalog(spark: SparkSession, baseDir: String,
   }
 
   /** Commit ANY derived table as Catalog-owned durable state — the
-    * generic form of the MV/ANN persistence: tmp-swap + `_SUCCESS`, a
-    * fresh session reads it back with [[loadDerived]]. The production
-    * home for prebuilt indexes (e.g. `Dedup.buildMinhashIndex`
-    * signatures — sign the corpus once, dedup every future batch
-    * against the stored index without touching corpus text again). */
-  def saveDerived(name: String, df: DataFrame): Unit =
-    commitSwap(s"$derivedDir/$name", df, None, s"saveDerived($name)")
-
-  /** Read a [[saveDerived]]-committed table (throws when uncommitted —
-    * a torn save never serves). */
-  def loadDerived(name: String): DataFrame = {
-    require(hasSuccess(s"$derivedDir/$name"), s"no committed derived table: $name")
-    spark.read.parquet(s"$derivedDir/$name")
+    * generic form of the MV persistence (same commit, no batch id);
+    * a fresh session reads it back with [[loadDerived]]. The
+    * production home for prebuilt indexes (e.g.
+    * `Dedup.buildMinhashIndex` signatures — sign the corpus once,
+    * dedup every future batch against the stored index without
+    * touching corpus text again). */
+  def saveDerived(name: String, df: DataFrame): Unit = {
+    val st = stateDir(name)
+    st.commit(Manifest(Table, None, Map("data" -> st.write(df, s"data_v${st.next}"))))
   }
+
+  /** Read a [[saveDerived]]-committed table (throws when nothing is
+    * committed — a torn save never serves). */
+  def loadDerived(name: String): DataFrame = tableState(name, "derived table")
 
   /** Persist an IVF ANN index as Catalog-owned durable state — the
     * "index once, query many" production shape: assignments and
-    * centroids land `_SUCCESS`-committed under `derivedDir/<name>` via
-    * the same tmp-swap as [[refreshAggMv]], so a FRESH session serves
-    * queries from disk alone, paying neither the k-means pass nor the
-    * assignment scan again (at 100 TB the build is a batch job; the
-    * query service only ever calls [[loadAnnIndex]]). */
+    * centroids commit together under `derivedDir/<name>`, so a FRESH
+    * session serves queries from disk alone, paying neither the
+    * k-means pass nor the assignment scan again (at 100 TB the build is
+    * a batch job; the query service only ever calls [[loadAnnIndex]]).
+    * A save replaces any earlier index of the name and starts with no
+    * batch-id mark. */
   def saveAnnIndex(name: String,
-      index: graft.operators.Similarity.IvfIndex): Unit = {
-    commitIndexPart(name, "assignments", index.assignments)
-    commitIndexPart(name, "centroids", index.centroids)
+      index: graft.operators.Similarity.IvfIndex): Unit =
+    saveIndex(name, "assignments" -> index.assignments,
+      "centroids" -> index.centroids)
+
+  /** Persist an int8-residual IVF index ([[graft.operators.Similarity
+    * .IvfQIndex]]) — three parts committed together: assignments,
+    * centroids, and the per-cell residual SCALES. The scales are part
+    * of the frozen quantizer exactly like the centroids: without them
+    * an upsert could not encode deltas bit-identically to the build. */
+  def saveAnnIndexQ(name: String,
+      index: graft.operators.Similarity.IvfQIndex): Unit =
+    saveIndex(name, "assignments" -> index.assignments,
+      "centroids" -> index.centroids, "scales" -> index.scales)
+
+  private def saveIndex(name: String, parts: (String, DataFrame)*): Unit = {
+    val st = stateDir(name)
+    st.commit(Manifest(Ann, None, parts.map { case (p, df) =>
+      p -> st.write(df, s"${p}_v${st.next}") }.toMap))
   }
 
   /** INCREMENTAL ANN index maintenance — new vectors join a committed
     * index WITHOUT a rebuild: the delta is assigned against the
     * FROZEN centroid table (`Similarity.assignNew` — map-only, the
     * FAISS `add()` shape) and lands as a NEW immutable segment
-    * (`assignments_seg_b<id>`), the [[appendJoinMv]] convention: the
-    * batch id IS the segment name, so a retried batch finds its
-    * `_SUCCESS` and no-ops (exactly-once with no cross-file marker),
-    * a torn write is invisible to [[loadAnnIndex]] and overwritten by
-    * the retry. Refresh cost O(|delta|) in compute AND write,
-    * independent of index size — at 100 TB the index stays fresh
-    * without re-touching the corpus. Because assignment is a pure
-    * function of the frozen centroids, search over the segmented
-    * index EQUALS search over a monolithic rebuild against the same
-    * centroids (spec + the s_ann_upsert oracle pin this). Delta ids
-    * must be new — see [[requireDisjoint]]; `check = true` enforces. */
+    * (`assignments_seg_b<id>`), the [[appendJoinMv]] convention; a
+    * batch id at or below the index's mark is a no-op. Refresh cost
+    * O(|delta|) in compute AND write, independent of index size — at
+    * 100 TB the index stays fresh without re-touching the corpus.
+    * Because assignment is a pure function of the frozen centroids,
+    * search over the segmented index EQUALS search over a monolithic
+    * rebuild against the same centroids (spec + the s_ann_upsert
+    * oracle pin this). Delta ids must be new — see
+    * [[requireDisjoint]]; `check = true` enforces. */
   def upsertAnnIndex(name: String, newVectors: DataFrame,
       batchId: Long, check: Boolean = false): Unit = {
-    recoverIndexDir(name)
-    require(hasSuccess(s"$derivedDir/$name/centroids"),
-      s"no committed ANN index to upsert: $name")
-    val segDir = s"$derivedDir/$name/assignments_seg_b$batchId"
-    if (hasSuccess(segDir)) return // retry of a committed batch: no-op
-    if (check) requireDisjoint(name, newVectors)
-    val centroids = spark.read.parquet(s"$derivedDir/$name/centroids")
-    graft.operators.Similarity.assignNew(newVectors, centroids)
-      .write.mode(SaveMode.Overwrite).parquet(segDir)
+    val (st, m) = committed(name, Ann, "ANN index to upsert")
+    appendAssignments(name, st, m, newVectors, batchId, check)(
+      graft.operators.Similarity.assignNew(newVectors, st.read(m.parts("centroids"))))
   }
+
+  /** INCREMENTAL upsert for the QUANTIZED index — [[upsertAnnIndex]]'s
+    * segment convention applied to the index that still FITS at
+    * 100 TB (~dim+16 bytes/vector): the delta is encoded against the
+    * FROZEN centroids AND scales (`Similarity.assignNewQ` — codes are a
+    * pure per-vector function of both) and lands as an immutable
+    * `assignments_seg_b<id>` segment, so segmented search equals a
+    * monolithic encode-all rebuild (the s_ann_upsert_q oracle + spec
+    * pin it). Same batch-id rule and [[requireDisjoint]] contract as
+    * the float path. */
+  def upsertAnnIndexQ(name: String, newVectors: DataFrame,
+      batchId: Long, check: Boolean = false): Unit = {
+    val (st, m) = committed(name, Ann, "quantized ANN index to upsert")
+    require(m.parts.contains("scales"), s"no committed quantized ANN index to upsert: $name")
+    appendAssignments(name, st, m, newVectors, batchId, check)(
+      graft.operators.Similarity.assignNewQ(newVectors,
+        st.read(m.parts("centroids")), st.read(m.parts("scales"))))
+  }
+
+  private def appendAssignments(name: String, st: StateDir, m: Manifest,
+      newVectors: DataFrame, batchId: Long, check: Boolean)(
+      assigned: => DataFrame): Unit =
+    if (!m.applied(batchId)) {
+      if (check) requireDisjoint(name, st.read(m.parts("assignments")), newVectors)
+      st.commit(m.copy(mark = Some(batchId), parts = m.parts + ("assignments" ->
+        (m.parts("assignments") ++ st.write(assigned, s"assignments_seg_b$batchId")))))
+    }
 
   /** DISJOINTNESS CONTRACT shared by every index upsert: `vec_id`s in
     * `newVectors` must not already exist in the committed index or in
-    * any earlier segment — the segment convention dedups BATCHES (a
-    * retried batch id no-ops on its `_SUCCESS`), never ROWS, so
-    * re-upserting live ids under a NEW batch id lands duplicate index
-    * entries and the search returns duplicate neighbors. The check is
-    * one anti-join of the (small) delta against the assignment ids —
-    * opt-in via `check = true` on the upsert verbs because at 100 TB
-    * it re-reads the full id column per refresh; the production
-    * pipeline makes ids disjoint by construction (append-only corpora
-    * name new rows with new ids) and turns the check on in staging. */
-  private def requireDisjoint(name: String, newVectors: DataFrame): Unit = {
+    * any earlier segment — the batch-id rule dedups BATCHES, never
+    * ROWS, so re-upserting live ids under a NEW batch id lands
+    * duplicate index entries and the search returns duplicate
+    * neighbors. The check is one anti-join of the (small) delta against
+    * the assignment ids — opt-in via `check = true` on the upsert verbs
+    * because at 100 TB it re-reads the full id column per refresh; the
+    * production pipeline makes ids disjoint by construction
+    * (append-only corpora name new rows with new ids) and turns the
+    * check on in staging. */
+  private def requireDisjoint(name: String, indexed: DataFrame,
+      newVectors: DataFrame): Unit = {
     val dup = newVectors.select(col("vec_id"))
-      .join(loadAnnAssignments(name).select(col("vec_id")), Seq("vec_id"))
+      .join(indexed.select(col("vec_id")), Seq("vec_id"))
       .limit(1).count()
     require(dup == 0L,
       s"upsert into $name: delta contains vec_ids already indexed " +
         "(segments dedup batches, not rows — see the disjointness contract)")
   }
 
-  /** Dir-level torn-swap recovery for the multi-part index layout:
-    * [[compactAnnIndex]] swaps the WHOLE index dir, so its backup
-    * lives at `<name>.bak` where the part-level [[hasSuccess]] never
-    * looks. Every index entry point calls this first — a crash inside
-    * the compaction's install gap heals on the next touch, exactly as
-    * part-level swaps heal through hasSuccess. */
-  private def recoverIndexDir(name: String): Unit =
-    recoverDirSwap(name, "assignments")
-
-  /** The dir-level recovery itself, parameterized by the part whose
-    * `_SUCCESS` proves the layout committed ("assignments" for the
-    * index family, "open" for the SCD2 family). */
-  private def recoverDirSwap(name: String, probePart: String): Unit = {
-    val live = new Path(s"$derivedDir/$name")
-    val fs = live.getFileSystem(hconf)
-    val bak = new Path(s"$derivedDir/$name.bak")
-    if (fs.exists(bak)) {
-      if (fs.exists(new Path(s"$derivedDir/$name/$probePart/_SUCCESS"))) {
-        // install completed; finish a pending backfill pull BEFORE the
-        // backup is dropped — the untouched segments still live there
-        finishBackfillPull(name)
-        fs.delete(bak, true) // bak is leftover
-      } else if (fs.exists(new Path(s"$derivedDir/$name.bak/$probePart/_SUCCESS"))) {
-        fs.delete(live, true) // install torn: the backup is the truth
-        if (!fs.rename(bak, live))
-          throw new java.io.IOException(s"dir swap recovery failed: $name")
-      } else fs.delete(bak, true) // debris from no committed state
-    }
+  /** Load a [[saveAnnIndex]]-committed index: the base assignments plus
+    * every committed upsert segment, and the frozen centroids (throws
+    * when nothing is committed — a torn save never serves). */
+  def loadAnnIndex(name: String): graft.operators.Similarity.IvfIndex = {
+    val (st, m) = committed(name, Ann, "ANN index")
+    graft.operators.Similarity.IvfIndex(st.read(m.parts("assignments")),
+      st.read(m.parts("centroids")))
   }
 
-  /** Base assignments plus every COMMITTED upsert segment — the
-    * append-only read rule shared by [[loadAnnIndex]] and its
-    * quantized siblings. A torn segment (no `_SUCCESS`) is skipped.
-    * `asOf` is the index's TIME TRAVEL, free because segments are
-    * batch-named: only segments with id ≤ asOf serve, so "search the
-    * index as it stood after batch b" is a listing filter — no
-    * snapshot copies, the exact analog of the storage family's
-    * versioned snapshots. (Compaction folds segments into the base,
-    * so as-of reads only reach back to the last compaction — the
-    * documented trade of folding history.) */
-  private def loadAnnAssignments(name: String,
-      asOf: Option[Long] = None): DataFrame = {
-    val root = new Path(s"$derivedDir/$name")
-    val fs = root.getFileSystem(hconf)
-    val segs = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("assignments_seg_"))
-      .filter(s => asOf.forall { b =>
-        val n = s.getPath.getName.stripPrefix("assignments_seg_b")
-        scala.util.Try(n.toLong).toOption.exists(_ <= b)
-      })
-      .map(_.getPath.toString)
-      .filter(hasSuccess)
-      .sorted
-    // one multi-path read (identical writer schema per segment; the
-    // loadTextIndex planning-cost rationale)
-    spark.read.parquet(s"$derivedDir/$name/assignments" +: segs: _*)
+  /** Load a committed quantized index: base + upsert segments, the
+    * frozen centroids and scales. */
+  def loadAnnIndexQ(name: String): graft.operators.Similarity.IvfQIndex = {
+    val (st, m) = committed(name, Ann, "quantized ANN index")
+    require(m.parts.contains("scales"), s"no committed quantized ANN index: $name")
+    graft.operators.Similarity.IvfQIndex(st.read(m.parts("assignments")),
+      st.read(m.parts("centroids")), st.read(m.parts("scales")))
   }
 
-  /** Persist an int8-residual IVF index ([[graft.operators.Similarity
-    * .IvfQIndex]]) — three `_SUCCESS`-committed parts: assignments,
-    * centroids, and the per-cell residual SCALES. The scales are part
-    * of the frozen quantizer exactly like the centroids: without them
-    * an upsert could not encode deltas bit-identically to the build. */
-  def saveAnnIndexQ(name: String,
-      index: graft.operators.Similarity.IvfQIndex): Unit = {
-    commitIndexPart(name, "assignments", index.assignments)
-    commitIndexPart(name, "centroids", index.centroids)
-    commitIndexPart(name, "scales", index.scales)
-  }
-
-  /** INCREMENTAL upsert for the QUANTIZED index — [[upsertAnnIndex]]'s
-    * exactly-once segment convention applied to the index that still
-    * FITS at 100 TB (~dim+16 bytes/vector): the delta is encoded
-    * against the FROZEN centroids AND scales
-    * (`Similarity.assignNewQ` — codes are a pure per-vector function
-    * of both) and lands as an immutable `assignments_seg_b<id>`
-    * segment, so segmented search equals a monolithic encode-all
-    * rebuild (the s_ann_upsert_q oracle + spec pin it). Same
-    * batch-id/`_SUCCESS` retry semantics and [[requireDisjoint]]
-    * contract as the float path. */
-  def upsertAnnIndexQ(name: String, newVectors: DataFrame,
-      batchId: Long, check: Boolean = false): Unit = {
-    recoverIndexDir(name)
-    require(hasSuccess(s"$derivedDir/$name/centroids") &&
-      hasSuccess(s"$derivedDir/$name/scales"),
-      s"no committed quantized ANN index to upsert: $name")
-    val segDir = s"$derivedDir/$name/assignments_seg_b$batchId"
-    if (hasSuccess(segDir)) return // retry of a committed batch: no-op
-    if (check) requireDisjoint(name, newVectors)
-    graft.operators.Similarity.assignNewQ(newVectors,
-        spark.read.parquet(s"$derivedDir/$name/centroids"),
-        spark.read.parquet(s"$derivedDir/$name/scales"))
-      .write.mode(SaveMode.Overwrite).parquet(segDir)
-  }
-
-  /** Load a committed quantized index: base + committed segments, the
-    * frozen centroids and scales. Torn parts never serve. */
-  def loadAnnIndexQ(name: String,
-      asOf: Option[Long] = None): graft.operators.Similarity.IvfQIndex = {
-    recoverIndexDir(name)
-    require(hasSuccess(s"$derivedDir/$name/assignments") &&
-      hasSuccess(s"$derivedDir/$name/centroids") &&
-      hasSuccess(s"$derivedDir/$name/scales"),
-      s"no committed quantized ANN index: $name")
-    graft.operators.Similarity.IvfQIndex(loadAnnAssignments(name, asOf),
-      spark.read.parquet(s"$derivedDir/$name/centroids"),
-      spark.read.parquet(s"$derivedDir/$name/scales"))
-  }
-
-  /** Fold every committed upsert segment of an ANN index (float or
-    * int8: the segment convention is shared) into the base
-    * assignments part — the operational counterpart of O(Δ) upserts,
-    * exactly as [[compactJoinMv]] is to [[appendJoinMv]]: segments
-    * accumulate one per refresh and reads pay a listing + union per
-    * segment until someone compacts. The merged table installs over
-    * the base via the crash-recoverable tmp-swap; the old segments are
-    * then replaced by ONE empty `_SUCCESS`-committed segment carrying
-    * the HIGHEST applied batch name, so a retry of the latest batch
-    * still finds its marker and no-ops (zero rows contributed) — the
-    * exactly-once guarantee survives the compaction, as in the join-MV
-    * family. Torn compactions never lose the index: the swap parks the
-    * old base at `.bak` until the new one is committed, and segment
-    * deletion happens only after the install. */
+  /** Fold every upsert segment of an ANN index (float or int8: the
+    * segment convention is shared) into one base assignments part —
+    * the operational counterpart of O(Δ) upserts, exactly as
+    * [[compactJoinMv]] is to [[appendJoinMv]]: segments accumulate one
+    * per refresh and reads pay a union per segment until someone
+    * compacts. The fold is written to a fresh directory and one
+    * manifest swaps it in for the segments; the quantizer parts
+    * (centroids, scales) stay listed as they are, and so does the
+    * batch-id mark, so a replay of ANY folded batch still no-ops. */
   def compactAnnIndex(name: String): Unit = {
-    recoverIndexDir(name)
-    val root = new Path(s"$derivedDir/$name")
-    val fs = root.getFileSystem(hconf)
-    val segs = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("assignments_seg_b"))
-      .map(_.getPath.getName)
-      .filter(n => hasSuccess(s"$derivedDir/$name/$n"))
-      .sortBy(n => n.stripPrefix("assignments_seg_b").toLong)
-    if (segs.isEmpty) return
-    val merged = loadAnnAssignments(name)
-    // build the ENTIRE new layout in <name>.tmp — folded assignments,
-    // the small quantizer parts copied verbatim, and the empty
-    // max-batch tombstone — then one atomic install: there is never a
-    // readable state where the fold and the segments coexist
-    val tmp = s"$derivedDir/$name.tmp"
-    fs.delete(new Path(tmp), true)
-    merged.write.parquet(s"$tmp/assignments")
-    fs.listStatus(root).toSeq
-      .filter { s =>
-        val n = s.getPath.getName
-        // quantizer parts only: assignments are the fold, segments are
-        // folded, and torn .tmp/.bak debris never copies forward
-        s.isDirectory && !n.startsWith("assignments") &&
-          !n.endsWith(".tmp") && !n.endsWith(".bak")
-      }
-      .foreach { part =>
-        spark.read.parquet(part.getPath.toString)
-          .write.parquet(s"$tmp/${part.getPath.getName}")
-      }
-    // repartition(1): an empty frame still writes ONE schema-bearing
-    // part file, so the tombstone segment reads back as 0 rows instead
-    // of failing schema inference
-    spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], merged.schema)
-      .repartition(1)
-      .write.parquet(s"$tmp/${segs.last}")
-    installSwap(s"$derivedDir/$name", fs, s"compactAnnIndex($name)")
+    val (st, m) = committed(name, Ann, "ANN index")
+    val assignments = m.parts("assignments")
+    if (assignments.segments.size > 1)
+      st.commit(m.copy(parts = m.parts + ("assignments" ->
+        st.write(st.read(assignments), s"assignments_v${st.next}"))))
   }
 
   // ──────────────────────────────────────────────────────────────────
   // Durable INVERTED TEXT INDEX — BM25's prepared artifact, the ANN
   // index family's conventions applied to lexical retrieval: build
-  // once, query many; O(Δ) batch-named upsert segments (exactly-once =
-  // the segment name); compaction by atomic dir swap; `asOf` time
-  // travel for free. The ranking-relevant difference from the ANN
-  // family: BM25's idf/avgdl depend on GLOBAL corpus stats, which
-  // derive at load from the dl union (counts are algebraic — the fold
-  // is lossless) and every search scores against the folded totals,
-  // which is why an upserted index EQUALS a monolithic rebuild exactly.
-
-  /** Per-instance memo of each text index's positional grain (fixed at
-    * build time; compaction preserves it) so streaming upserts don't
-    * re-probe the postings footer every microbatch. Cleared when a
-    * build starts and seeded only once its last part has committed (a
-    * failed rebuild may leave either grain live, so the next upsert
-    * re-probes the footer), invalidated by [[dropDerived]]. */
-  private val textPositional =
-    scala.collection.concurrent.TrieMap[String, Boolean]()
+  // once, query many; O(Δ) batch-named upsert segments under the
+  // batch-id rule; compaction by manifest. The ranking-relevant
+  // difference from the ANN family: BM25's idf/avgdl depend on GLOBAL
+  // corpus stats, which derive at load from the dl union (counts are
+  // algebraic — the fold is lossless) and every search scores against
+  // the folded totals, which is why an upserted index EQUALS a
+  // monolithic rebuild exactly. The positional grain is fixed at build
+  // time and rides in the manifest, so an upsert never probes a footer.
 
   /** Build and commit the index: posting lists `(doc_id, term, tf)`
     * range-clustered by term (a query-term read prunes to matching
@@ -980,8 +668,9 @@ class Catalog(spark: SparkSession, baseDir: String,
     * they derive at load as one aggregate over the dl union
     * (`n_docs = count, sum_dl = Σ dl` — the identical integers the
     * per-part fold produced), which saves one
-    * write + one read-back job per build AND per upsert batch. Each
-    * part is tmp-swap committed; torn parts never serve.
+    * write + one read-back job per build AND per upsert batch. Both
+    * parts commit in one manifest, replacing any earlier index of the
+    * name with its segments; a build starts with no batch-id mark.
     * `positional = true` stores per-(doc, term) position arrays too —
     * bag-of-words reads are unchanged, phrase queries
     * ([[graft.operators.TextAnalysis.bm25PhraseIndexed]]) become
@@ -989,17 +678,8 @@ class Catalog(spark: SparkSession, baseDir: String,
   def buildTextIndex(name: String, docs: DataFrame,
       positional: Boolean = false): Unit = {
     import graft.operators.TextAnalysis
-    // a REBUILD under an existing name must not leave prior upsert
-    // segments behind: loadTextIndex unions every committed *_seg_b*
-    // part, so stale segments would silently double-count df/dl and
-    // the folded stats against the fresh base
-    textPositional.remove(name)
-    val root = new Path(s"$derivedDir/$name")
-    val fs = root.getFileSystem(hconf)
-    if (fs.exists(root))
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.contains("_seg_b"))
-        .foreach(s => fs.delete(s.getPath, true))
+    val st = stateDir(name)
+    val v = st.next
     // ONE corpus tokenize per build: the postings aggregate is pinned
     // lazily (persist) across its two consumers — repartitionByRange's
     // range-boundary SAMPLE job and the write itself each computed the
@@ -1009,45 +689,35 @@ class Catalog(spark: SparkSession, baseDir: String,
     val post = (if (positional) TextAnalysis.textPostingsPositional(docs)
       else TextAnalysis.textPostings(docs))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try commitIndexPart(name, "postings",
-      post.repartitionByRange(col("term"))
-        .sortWithinPartitions(col("term")))
-    finally post.unpersist(): Unit
-    // dl derives from the COMMITTED postings (dl = Σ tf per doc — the
+    val postings =
+      try st.write(post.repartitionByRange(col("term"))
+        .sortWithinPartitions(col("term")), s"postings_v$v")
+      finally post.unpersist(): Unit
+    // dl derives from the written postings (dl = Σ tf per doc — the
     // identical integer to counting the doc's tokens, and the identical
     // row set: a doc appears iff it has ≥1 token): the second corpus
     // pass is a pruned (doc_id, tf) read of the just-written columnar
     // postings
-    commitIndexPart(name, "dl",
-      spark.read.parquet(s"$derivedDir/$name/postings")
-        .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
-    textPositional.put(name, positional): Unit
+    val dl = st.write(st.read(postings)
+      .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")), s"dl_v$v")
+    st.commit(Manifest(Text, None, Map("postings" -> postings, "dl" -> dl),
+      Map("positional" -> positional.toString)))
   }
 
   /** O(Δ) index maintenance: ONLY the new documents are tokenized;
     * their postings and lengths land as batch-named segments
-    * (`*_seg_b<id>`). Write order is dl → postings LAST: the
-    * postings marker gates the whole batch, so parts a crash strands
-    * are overwritten verbatim by the retry and a committed batch id
-    * no-ops. Disjointness contract as [[upsertAnnIndex]]: segments
-    * dedup BATCHES, never rows — re-upserting live doc_ids under a new
-    * batch id double-counts them in df/dl and skews every score. */
+    * (`*_seg_b<id>`) that one manifest publishes together; a batch id
+    * at or below the index's mark is a no-op. Disjointness contract as
+    * [[upsertAnnIndex]]: the batch-id rule dedups BATCHES, never rows —
+    * re-upserting live doc_ids under a new batch id double-counts them
+    * in df/dl and skews every score. */
   def upsertTextIndex(name: String, newDocs: DataFrame, batchId: Long): Unit = {
-    recoverDirSwap(name, "postings")
-    require(hasSuccess(s"$derivedDir/$name/postings") &&
-      hasSuccess(s"$derivedDir/$name/dl"),
-      s"no committed text index to upsert: $name")
-    val segDir = s"$derivedDir/$name/postings_seg_b$batchId"
-    if (hasSuccess(segDir)) return // retry of a committed batch: no-op
+    val (st, m) = committed(name, Text, "text index to upsert")
+    if (m.applied(batchId)) return
     import graft.operators.TextAnalysis
     // segment postings match the base's grain: positional bases get
-    // positional segments (the union must be schema-stable). The grain
-    // is FIXED at build time, so the footer probe is memoized per
-    // catalog instance — a streaming drive was otherwise paying a
-    // listing + footer read on every microbatch.
-    val positional = textPositional.getOrElseUpdate(name,
-      spark.read.parquet(s"$derivedDir/$name/postings")
-        .columns.contains("positions"))
+    // positional segments (the union must be schema-stable)
+    val positional = m.meta("positional").toBoolean
     // ONE tokenize pass per LARGE batch: the postings aggregate is
     // materialized (localCheckpoint — bounded by the batch) so dl
     // (= Σ tf per doc, the identical integer and row set), the
@@ -1081,121 +751,68 @@ class Catalog(spark: SparkSession, baseDir: String,
       // no stats sidecar: (n_docs, sum_dl) derive from the dl union at
       // load, so each batch pays exactly TWO write jobs (dl, postings)
       // instead of three writes plus a dl read-back
-      dl.write.mode(SaveMode.Overwrite)
-        .parquet(s"$derivedDir/$name/dl_seg_b$batchId")
+      val dlSeg = st.write(dl, s"dl_seg_b$batchId")
       // term clustering size-routed like the tokenize: a big batch is
       // range-partitioned (the sampling job is amortized), a small one
       // writes a single term-sorted file — same clustered-read
       // property, no per-microbatch range-sampling pass (which was a
       // third tokenize of the batch)
-      (if (bigBatch) post.repartitionByRange(col("term")) else post.coalesce(1))
-        .sortWithinPartitions(col("term"))
-        .write.mode(SaveMode.Overwrite).parquet(segDir)
+      val postSeg = st.write(
+        (if (bigBatch) post.repartitionByRange(col("term")) else post.coalesce(1))
+          .sortWithinPartitions(col("term")), s"postings_seg_b$batchId")
+      st.commit(m.copy(mark = Some(batchId), parts = Map(
+        "postings" -> (m.parts("postings") ++ postSeg),
+        "dl" -> (m.parts("dl") ++ dlSeg))))
     } finally if (bigBatch) post.unpersist(): Unit
   }
 
-  /** Base parts plus every COMMITTED upsert segment; the 1-row corpus
+  /** The committed index: base parts plus every upsert segment, read
+    * from the files the manifest lists with their stored schemas — no
+    * listing, no schema inference, no Spark job. The 1-row corpus
     * stats BM25 scores against derive LAZILY from the dl union
     * (`n_docs = count, sum_dl = Σ dl` — the identical integers the
-    * stored per-part fold used to produce, over the identical rows).
-    * `asOf` = the same free time travel as [[loadAnnIndex]]: only
-    * segments with id ≤ asOf serve. A torn segment (postings without
-    * `_SUCCESS`) is invisible, and its earlier-written dl sibling
-    * with it — the read keys every sibling off the postings
-    * marker. */
-  def loadTextIndex(name: String,
-      asOf: Option[Long] = None): graft.operators.TextAnalysis.TextIndex = {
-    recoverDirSwap(name, "postings")
-    require(hasSuccess(s"$derivedDir/$name/postings") &&
-      hasSuccess(s"$derivedDir/$name/dl"),
-      s"no committed text index: $name")
-    val root = new Path(s"$derivedDir/$name")
-    val fs = root.getFileSystem(hconf)
-    val ids = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("postings_seg_b"))
-      .map(_.getPath.getName.stripPrefix("postings_seg_b"))
-      .flatMap(n => scala.util.Try(n.toLong).toOption)
-      .filter(id => asOf.forall(id <= _))
-      .filter(id => hasSuccess(s"$derivedDir/$name/postings_seg_b$id"))
-      .sorted
-    // ONE multi-path read per part, not a union of per-segment reads:
-    // every segment is written by the same writer with the same schema,
-    // and N separate spark.read.parquet calls made the load's PLANNING
-    // the dominant cost (a union of per-directory reads measured 7.4 s
-    // of planning against well under a second for one multi-path read;
-    // here loadTextIndex was 1.5 s of the post-replay serve)
-    def unionParts(part: String) =
-      spark.read.parquet((Seq(s"$derivedDir/$name/$part") ++
-        ids.map(id => s"$derivedDir/$name/${part}_seg_b$id")): _*)
-    val dl = unionParts("dl")
+    * stored per-part fold used to produce, over the identical rows). */
+  def loadTextIndex(name: String): graft.operators.TextAnalysis.TextIndex = {
+    val (st, m) = committed(name, Text, "text index")
+    val dl = st.read(m.parts("dl"))
     graft.operators.TextAnalysis.TextIndex(
-      unionParts("postings"), dl,
+      st.read(m.parts("postings")), dl,
       dl.agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).as("sum_dl")))
   }
 
   /** Segment compaction for the text index — [[compactAnnIndex]]'s
-    * fold applied to the two-part layout: folded postings/dl and
-    * EMPTY tombstone segments (both parts) named for the highest
-    * applied batch so exactly-once survives the fold; one atomic dir
-    * swap installs it all.
-    *
-    * EXACTLY-ONCE NARROWING (shared with [[compactAnnIndex]]): only
-    * the HIGHEST folded batch id keeps its tombstone, so only a
-    * replay of that LAST batch no-ops after compaction — a replay of
-    * an EARLIER folded id would pass [[upsertTextIndex]]'s gate and
-    * double-count. Checkpointed streams satisfy this by construction
-    * (a restart replays at most the last uncommitted batch, and batch
-    * ids are monotone); a driver that can re-submit arbitrary
-    * historical batches must keep its own applied-id ledger or skip
-    * compaction. */
+    * fold applied to the two-part layout: folded postings (range-
+    * clustered by term again) and dl are written to fresh directories
+    * and one manifest swaps them in for the base and its segments,
+    * which are deleted once it commits. The batch-id mark carries
+    * over, so a replay of ANY folded batch still no-ops. */
   def compactTextIndex(name: String): Unit = {
-    recoverDirSwap(name, "postings")
-    val root = new Path(s"$derivedDir/$name")
-    val fs = root.getFileSystem(hconf)
-    val segs = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("postings_seg_b"))
-      .map(_.getPath.getName.stripPrefix("postings_seg_b"))
-      .flatMap(n => scala.util.Try(n.toLong).toOption)
-      .filter(id => hasSuccess(s"$derivedDir/$name/postings_seg_b$id"))
-      .sorted
-    if (segs.isEmpty) return
-    val idx = loadTextIndex(name)
-    val tmp = s"$derivedDir/$name.tmp"
-    fs.delete(new Path(tmp), true)
-    idx.postings.repartitionByRange(col("term"))
-      .sortWithinPartitions(col("term")).write.parquet(s"$tmp/postings")
-    idx.dl.write.parquet(s"$tmp/dl")
-    def tombstone(part: String, schemaOf: DataFrame): Unit =
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schemaOf.schema)
-        .repartition(1)
-        .write.parquet(s"$tmp/${part}_seg_b${segs.last}")
-    tombstone("postings", idx.postings)
-    tombstone("dl", idx.dl)
-    installSwap(s"$derivedDir/$name", fs, s"compactTextIndex($name)")
+    val (st, m) = committed(name, Text, "text index")
+    if (m.parts("postings").segments.size < 2) return
+    val v = st.next
+    st.commit(m.copy(parts = Map(
+      "postings" -> st.write(st.read(m.parts("postings"))
+        .repartitionByRange(col("term")).sortWithinPartitions(col("term")),
+        s"postings_v$v"),
+      "dl" -> st.write(st.read(m.parts("dl")), s"dl_v$v"))))
   }
 
   /** ONE operational verb for segment hygiene — the policy knob O(Δ)
     * maintenance needs so nobody schedules four compactors by hand:
-    * walk the derived dir, recognize each segmented family by its
-    * part layout (ANN index: `centroids`; text index: `postings`;
-    * SCD2 history: `open`; join MV: `seg_*`), and compact every artifact whose
-    * COMMITTED segment count reached `threshold`. Artifacts below
-    * threshold are untouched (their as-of reach is preserved — the
-    * documented trade of folding history is only paid when the read
-    * tax is real). Returns the names compacted; call it from the
-    * refresh scheduler's idle slot. */
+    * walk the derived dir, read each state's family and segment count
+    * from its manifest (ANN index: assignments segments; text index:
+    * postings segments; SCD2 history: closed segments; join MV: all
+    * segments), and compact every artifact whose segment count reached
+    * `threshold`. Artifacts below threshold are untouched. Returns the
+    * names compacted; call it from the refresh scheduler's idle slot. */
   def maintain(threshold: Int = 8): Seq[String] = {
     require(threshold >= 2, s"maintain threshold must be >= 2: $threshold")
     val root = new Path(derivedDir)
     val fs = root.getFileSystem(hconf)
     if (!fs.exists(root)) return Seq.empty
     fs.listStatus(root).toSeq.filter(_.isDirectory)
-      .flatMap(d => maintainDir(d.getPath, threshold))
+      .flatMap(d => maintainState(d.getPath.getName, threshold))
   }
 
   /** [[maintain]] scoped to ONE artifact — the form a streaming drive
@@ -1205,164 +822,86 @@ class Catalog(spark: SparkSession, baseDir: String,
     * scheduler. Returns whether a compaction ran. */
   def maintainOne(name: String, threshold: Int = 8): Boolean = {
     require(threshold >= 2, s"maintain threshold must be >= 2: $threshold")
-    val p = new Path(s"$derivedDir/$name")
-    val fs = p.getFileSystem(hconf)
-    fs.exists(p) && maintainDir(p, threshold).nonEmpty
+    maintainState(name, threshold).nonEmpty
   }
 
-  private def maintainDir(path: Path, threshold: Int): Option[String] = {
-    val fs = path.getFileSystem(hconf)
-    val name = path.getName
-    def segCount(prefix: String) = fs.listStatus(path).count(s =>
-      s.isDirectory && s.getPath.getName.startsWith(prefix) &&
-        hasSuccess(s.getPath.toString))
-    if (name.endsWith(".tmp") || name.endsWith(".bak")) None
-    else if (fs.exists(new Path(path, "centroids")) &&
-        segCount("assignments_seg_b") >= threshold) {
-      compactAnnIndex(name); Some(name)
-    } else if (fs.exists(new Path(path, "postings")) &&
-        segCount("postings_seg_b") >= threshold) {
-      compactTextIndex(name); Some(name)
-    } else if (fs.exists(new Path(path, "open")) &&
-        segCount("closed_seg_b") >= threshold) {
-      compactScd2(name); Some(name)
-    } else if (joinMvSegments(name).size >= threshold) {
-      compactJoinMv(name); Some(name)
-    } else None
-  }
+  /** Per segmented family: the part whose segments count, how many of
+    * its directories are a base rather than a segment, and the
+    * compactor. */
+  private val segmented: Map[String, (String, Int, String => Unit)] = Map(
+    Ann -> (("assignments", 1, compactAnnIndex _)),
+    Text -> (("postings", 1, compactTextIndex _)),
+    Scd2 -> (("closed", 0, compactScd2 _)),
+    Join -> (("seg", 0, n => compactJoinMv(n): Unit)))
 
-  /** One `_SUCCESS`-committed part of a multi-part index layout (the
-    * [[saveAnnIndex]] family's shared tmp-swap). */
-  private def commitIndexPart(name: String, part: String,
-      df: DataFrame): Unit = {
-    val dir = s"$derivedDir/$name/$part"
-    val fs = new Path(dir).getFileSystem(hconf)
-    df.write.mode(SaveMode.Overwrite).parquet(s"$dir.tmp")
-    installSwap(dir, fs, s"saveAnnIndex($name/$part)")
-  }
-
-  /** Load a [[saveAnnIndex]]-committed index (throws when either half
-    * is missing its `_SUCCESS` marker — a torn save never serves).
-    * Assignments are the base table plus every COMMITTED upsert
-    * segment; a torn segment (no `_SUCCESS`) is skipped — the
-    * append-only read rule shared with the join-MV family. */
-  def loadAnnIndex(name: String,
-      asOf: Option[Long] = None): graft.operators.Similarity.IvfIndex = {
-    recoverIndexDir(name)
-    require(hasSuccess(s"$derivedDir/$name/assignments") &&
-      hasSuccess(s"$derivedDir/$name/centroids"),
-      s"no committed ANN index: $name")
-    graft.operators.Similarity.IvfIndex(loadAnnAssignments(name, asOf),
-      spark.read.parquet(s"$derivedDir/$name/centroids"))
-  }
+  private def maintainState(name: String, threshold: Int): Option[String] =
+    stateDir(name).latest.flatMap(m => segmented.get(m.family).collect {
+      case (part, base, compact)
+          if m.parts(part).segments.size - base >= threshold =>
+        compact(name); name
+    })
 
   /** APPEND-ONLY incremental JOIN view: each refresh joins the fact
     * DELTA against the dimension and lands the result as a NEW
-    * immutable `_SUCCESS`-committed segment under
-    * `derivedDir/<name>/seg_*` — the view is never rewritten (contrast
-    * [[refreshAggMv]], which must re-merge counters), so refresh cost
-    * is O(|Δfact ⋈ dim|) in compute AND write, independent of view
-    * size — the only append shape that survives a 100 TB view.
-    * Correct for exactly the append-only-fact × refresh-time-fixed-
-    * dimension case (the ΔA⋈B term of the delta-join identity; a
-    * mutating dimension or retracting fact needs the CDC/upsert paths).
+    * immutable segment under `derivedDir/<name>` (`seg_b<id>`, or
+    * `seg_v<version>` without a batch id) — the view is never
+    * rewritten (contrast [[refreshAggMv]], which must re-merge
+    * counters), so refresh cost is O(|Δfact ⋈ dim|) in compute AND
+    * write, independent of view size — the only append shape that
+    * survives a 100 TB view. Correct for exactly the
+    * append-only-fact × refresh-time-fixed-dimension case (the ΔA⋈B
+    * term of the delta-join identity; a mutating dimension or
+    * retracting fact needs the CDC/upsert paths).
     *
-    * EXACTLY-ONCE: the batch id IS the segment name (`seg_b<id>`) — a
-    * retry of a committed batch finds its segment's `_SUCCESS` and
-    * no-ops; a torn write (no `_SUCCESS`) is invisible to readers and
-    * overwritten by the retry. No cross-file marker to race: the
-    * parquet commit protocol is the whole transaction. Without a
-    * batch id, segments are ordinals with no idempotence claim.
-    * Same serialization contract as [[refreshAggMv]] per name. */
+    * EXACTLY-ONCE: a batch id at or below the view's mark is a no-op;
+    * a torn append is invisible (no manifest lists it) and the retry
+    * replaces it. Without a batch id every call appends. Same
+    * serialization contract as [[refreshAggMv]] per name. */
   def appendJoinMv(name: String, factDelta: DataFrame, dim: DataFrame,
       keys: Seq[String], batchId: Option[Long] = None): DataFrame = {
-    val dir = s"$derivedDir/$name"
-    val fs = new Path(dir).getFileSystem(hconf)
-    val segName = batchId.map(id => s"seg_b$id")
-      .getOrElse(s"seg_${joinMvSegments(name).size + 1}")
-    val segPath = new Path(s"$dir/$segName")
-    if (!fs.exists(new Path(segPath, "_SUCCESS"))) {
-      fs.delete(segPath, true) // torn-retry debris, never committed
-      factDelta.join(dim, keys)
-        .write.mode(SaveMode.ErrorIfExists).parquet(segPath.toString)
-      // outer-level marker: the layout reads as committed to
-      // vacuumDerived (the snapshot-family convention)
-      fs.create(new Path(dir, "_SUCCESS"), true).close()
+    val st = stateDir(name)
+    val prev = st.latest.filter(_.family == Join)
+    if (!batchId.exists(id => prev.exists(_.applied(id)))) {
+      val seg = st.write(factDelta.join(dim, keys),
+        batchId.fold(s"seg_v${st.next}")(id => s"seg_b$id"))
+      st.commit(Manifest(Join, batchId.orElse(prev.flatMap(_.mark)),
+        Map("seg" -> prev.fold(seg)(_.parts("seg") ++ seg))))
     }
     readJoinMv(name)
   }
 
-  /** Fold every committed [[appendJoinMv]] segment into ONE — the
-    * operational counterpart of append-only maintenance (segments
-    * accumulate one per refresh; reads pay a file-listing + union per
-    * segment until someone compacts). The new single-segment layout is
-    * built in `<dir>.tmp` and installed by the shared crash-recoverable
-    * swap, so a torn compaction never loses the view.
-    *
-    * Exactly-once across the compaction: the merged segment KEEPS the
-    * highest applied batch name (`seg_b<maxId>`), so a retry of the
-    * LATEST batch still finds its `_SUCCESS` and no-ops — the only
-    * retry that can occur under the monotone-batch-id contract
-    * ([[alreadyApplied]]'s note; Structured Streaming replays only the
-    * last uncommitted batch). Compaction itself must be serialized
-    * with refreshes of the name, like every other mutation. */
+  /** Fold every [[appendJoinMv]] segment into ONE — the operational
+    * counterpart of append-only maintenance (segments accumulate one
+    * per refresh; reads pay a union per segment until someone
+    * compacts). The fold is written to a fresh directory and one
+    * manifest swaps it in for the segments, so a torn compaction never
+    * loses the view, and the batch-id mark carries over: a replay of
+    * ANY folded batch still no-ops. Compaction itself must be
+    * serialized with refreshes of the name, like every other mutation. */
   def compactJoinMv(name: String): DataFrame = {
-    val segs = joinMvSegments(name)
-    require(segs.nonEmpty, s"no committed join-MV segments: $name")
-    if (segs.size > 1) {
-      val dir = s"$derivedDir/$name"
-      val fs = new Path(dir).getFileSystem(hconf)
-      val maxB = segs.filter(_.startsWith("seg_b")).map(_.drop(5).toLong)
-        .maxOption
-      val segName = maxB.map(id => s"seg_b$id").getOrElse("seg_1")
-      fs.delete(new Path(s"$dir.tmp"), true)
-      readJoinMv(name)
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir.tmp/$segName")
-      fs.create(new Path(s"$dir.tmp/_SUCCESS"), true).close()
-      installSwap(dir, fs, s"compactJoinMv($name)")
-    }
+    val (st, m) = committed(name, Join, "join-MV segments")
+    val segs = m.parts("seg")
+    if (segs.segments.size > 1)
+      st.commit(m.copy(parts = Map("seg" -> st.write(st.read(segs), s"seg_v${st.next}"))))
     readJoinMv(name)
-  }
-
-  /** Committed segments of an [[appendJoinMv]] view, sorted. */
-  def joinMvSegments(name: String): Seq[String] = {
-    val outer = new Path(s"$derivedDir/$name")
-    val fs = outer.getFileSystem(hconf)
-    if (!fs.exists(outer)) Seq.empty
-    else fs.listStatus(outer).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("seg_"))
-      .filter(s => fs.exists(new Path(outer, s"$s/_SUCCESS")))
-      .sorted
   }
 
   /** Union read of every committed [[appendJoinMv]] segment (throws
-    * when none exist — a torn-only view never serves). */
+    * when nothing is committed — a torn-only view never serves). */
   def readJoinMv(name: String): DataFrame = {
-    val segs = joinMvSegments(name)
-    require(segs.nonEmpty, s"no committed join-MV segments: $name")
-    spark.read.parquet(segs.map(s => s"$derivedDir/$name/$s"): _*)
+    val (st, m) = committed(name, Join, "join-MV segments")
+    st.read(m.parts("seg"))
   }
 
-  /** Current committed MV state (throws if [[refreshAggMv]] has never
-    * committed `name`). */
-  def mvState(name: String): DataFrame = {
-    require(hasSuccess(s"$derivedDir/$name"), s"no committed MV state: $name")
-    spark.read.parquet(s"$derivedDir/$name")
-  }
+  /** Current committed MV state (throws if no refresh has committed
+    * `name`). */
+  def mvState(name: String): DataFrame = tableState(name, "MV state")
 
-  /** Drop derived state `name` (MV or partitioned layout). Returns
-    * whether it existed. */
+  /** Drop derived state `name` (any family, or a partitioned layout).
+    * Returns whether it existed. */
   def dropDerived(name: String): Boolean = {
-    textPositional.remove(name)
     val p = new Path(s"$derivedDir/$name")
-    val fs = p.getFileSystem(hconf)
-    fs.delete(new Path(s"$derivedDir/$name.tmp"), true)
-    // drop the swap backup too: a committed `.bak` parked by a torn
-    // [[installSwap]] would otherwise RESURRECT the dropped state on
-    // the next [[hasSuccess]] touch — and its batch marker would make
-    // [[alreadyApplied]] skip a fresh replay's lower batch ids
-    fs.delete(new Path(s"$derivedDir/$name.bak"), true)
-    fs.delete(p, true)
+    p.getFileSystem(hconf).delete(p, true)
   }
 
   /** SNAPSHOT a table state into the Catalog-owned versioned layout
@@ -1424,36 +963,32 @@ class Catalog(spark: SparkSession, baseDir: String,
       coalesce(sum(when(keep, 0L).otherwise(1L)), lit(0L)).as("n_purged"))
   }
 
-  /** Remove torn-refresh leftovers under [[derivedDir]]: `.tmp`
-    * siblings (a crash between a refresh's materialize and swap) and
-    * layouts with no `_SUCCESS` marker at their root or in any direct
-    * subdirectory (an interrupted first write). Committed state is
-    * never touched. Run it only while no refresh is in flight — the
-    * same caller-serialization contract as [[refreshAggMv]]. Returns
-    * the number of directories removed. */
+  /** Remove what no commit published under [[derivedDir]]: a state
+    * directory with no manifest (an interrupted first commit) is
+    * deleted, and in a committed state every manifest but the highest
+    * and every directory it does not list (an interrupted later
+    * commit). Plain committed layouts — a `_SUCCESS` at their root
+    * ([[partitionedLayout]], `snap_*`, zone-mapped dirs) — are kept, a
+    * directory holding states below it (a `publish` release) is
+    * vacuumed inside, and any other directory is debris. Committed
+    * state is never touched. Run it only while no refresh is in flight
+    * — the same caller-serialization contract as [[refreshAggMv]].
+    * Returns the number of directories removed. */
   def vacuumDerived(): Int = {
     val base = new Path(derivedDir)
     val fs = base.getFileSystem(hconf)
-    if (!fs.exists(base)) 0
-    else {
-      // apply swap recovery FIRST: a committed `.bak` parked by a torn
-      // install restores to its live sibling (or is deleted when the
-      // live install completed) — after which any `.bak` still present
-      // is uncommitted debris the `_SUCCESS` rule below removes
-      fs.listStatus(base).toSeq.filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.endsWith(".bak"))
-        .foreach(p => hasSuccess(p.toString.stripSuffix(".bak")))
-      // multi-part layouts (text and ANN indexes, SCD2 state) commit
-      // per part, so their markers sit one level down
-      def committed(p: Path) = fs.exists(new Path(p, "_SUCCESS")) ||
-        fs.listStatus(p).exists(s =>
-          s.isDirectory && fs.exists(new Path(s.getPath, "_SUCCESS")))
-      val victims = fs.listStatus(base).toSeq
-        .filter(_.isDirectory).map(_.getPath)
-        .filter(p => p.getName.endsWith(".tmp") || !committed(p))
-      victims.foreach(p => fs.delete(p, true))
-      victims.size
-    }
+    def subdirs(p: Path) = fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+    def isState(p: Path) = fs.exists(new Path(p, StateDir.Log))
+    def holdsState(p: Path): Boolean = isState(p) || subdirs(p).exists(holdsState)
+    def drop(p: Path) = { fs.delete(p, true); 1 }
+    def vacuum(p: Path): Int =
+      if (isState(p)) {
+        val st = new StateDir(spark, p)
+        if (st.latest.isDefined) st.sweep() else drop(p)
+      } else if (hasSuccess(p)) 0
+      else if (subdirs(p).exists(holdsState)) subdirs(p).map(vacuum).sum
+      else drop(p)
+    if (!fs.exists(base)) 0 else subdirs(base).map(vacuum).sum
   }
 
   /** Hive-partitioned layout + read-back, owned by this Catalog: write
@@ -1575,7 +1110,7 @@ class Catalog(spark: SparkSession, baseDir: String,
       ranges: Seq[(String, Column, Column)]): DataFrame = {
     require(ranges.nonEmpty, "rectangle probe needs at least one range")
     val zmDir = s"$dest/_zonemap"
-    require(hasSuccess(zmDir), s"no committed zone map under $dest")
+    require(hasSuccess(new Path(zmDir)), s"no committed zone map under $dest")
     // input_file_name() and DataFrame.inputFiles render the same file
     // with different scheme spellings (file:/// vs file:/) — compare
     // scheme-independent absolute paths.
@@ -1921,17 +1456,6 @@ object Catalog {
     } yield shiftleft(shiftright(c, i).bitwiseAND(1), i * n + j)).reduce(_ + _)
   }
 
-  /** MERGE/upsert (latest-wins): rows of `updates` replace same-key
-    * rows of `base`; unmatched update rows insert. One anti join on the
-    * key — hash-partitioned both sides, no full-table rewrite logic on
-    * the compute side (the storage rewrite is the caller's
-    * `writeChunked` or a partitioned write, which at scale should target
-    * only the partitions the update keys touch). Schemas must match by
-    * name (`unionByName`). PRECONDITION: update keys must be non-null
-    * and unique within the batch — a null key never anti-matches (both
-    * the stale base row and the update row would survive), and two
-    * updates for one key both land (no within-batch ordering exists to
-    * pick a winner; dedupe upstream where one is defined). */
   /** Apply a CDC batch LATEST-WINS-BY-SEQUENCE — [[upsert]] extended
     * with deletes and within-batch ordering, i.e. the change-log apply
     * every lakehouse MERGE runs: per key only the highest-`seqCol`
@@ -1952,6 +1476,17 @@ object Catalog {
       .unionByName(upserts)
   }
 
+  /** MERGE/upsert (latest-wins): rows of `updates` replace same-key
+    * rows of `base`; unmatched update rows insert. One anti join on the
+    * key — hash-partitioned both sides, no full-table rewrite logic on
+    * the compute side (the storage rewrite is the caller's
+    * `writeChunked` or a partitioned write, which at scale should target
+    * only the partitions the update keys touch). Schemas must match by
+    * name (`unionByName`). PRECONDITION: update keys must be non-null
+    * and unique within the batch — a null key never anti-matches (both
+    * the stale base row and the update row would survive), and two
+    * updates for one key both land (no within-batch ordering exists to
+    * pick a winner; dedupe upstream where one is defined). */
   def upsert(base: DataFrame, updates: DataFrame, key: String): DataFrame =
     updates.unionByName(
       base.join(updates.select(col(key)), Seq(key), "left_anti"))
@@ -1998,12 +1533,18 @@ object Catalog {
 
   /** A writable Catalog layout root for a READ-ONLY base dir: derived
     * state lands under the session's warehouse dir, namespaced by the
-    * base dir so two Catalogs over different data never collide. The
-    * warehouse is the engine-owned location (the analog of the
-    * reference controller's own index storage) — durable across
-    * sessions, unlike a shutdown-cleaned temp dir. */
+    * SHA-256 of the base dir's qualified path so two Catalogs over
+    * different data never collide. The warehouse is the engine-owned
+    * location (the analog of the reference controller's own index
+    * storage) — durable across sessions, unlike a shutdown-cleaned temp
+    * dir. */
   def warehouseLayoutRoot(spark: SparkSession, baseDir: String): String = {
     val wh = spark.conf.get("spark.sql.warehouse.dir")
-    s"$wh/graft_derived/${java.lang.Integer.toHexString(baseDir.hashCode)}"
+    val base = new Path(baseDir)
+    val qualified = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(base).toString
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(qualified.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    s"$wh/graft_derived/${digest.map(b => f"$b%02x").mkString}"
   }
 }

@@ -37,7 +37,7 @@ object DocStream {
     * index is built EMPTY and every document arrives as stream data —
     * each microbatch upserts as a committed segment
     * ([[graft.sources.Catalog.upsertTextIndex]]: O(batch) tokenize,
-    * exactly-once = the segment name), the corpus stats fold
+    * a replayed batch id is a no-op), the corpus stats fold
     * losslessly, so the post-run search EQUALS the whole-corpus
     * direct scan — the oracle is literally t_bm25's SQL. The
     * production shape: corpus drops land continuously, retrieval
@@ -62,9 +62,8 @@ object DocStream {
         // when the committed segment count reaches the threshold —
         // a live index no longer accumulates segments unboundedly
         // waiting for an operator. Safe mid-stream: foreachBatch
-        // serializes it with the upserts, the fold keeps the highest
-        // batch id's tombstone, and a checkpointed restart replays at
-        // most that id (the documented compaction narrowing).
+        // serializes it with the upserts, and the fold keeps the index's
+        // batch-id mark, so a restart's replay stays a no-op.
         autoMaintainAt.foreach(t => cat.maintainOne(name, t): Unit)
     }
     TextAnalysis.bm25Indexed(cat.loadTextIndex(name),

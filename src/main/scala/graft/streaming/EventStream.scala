@@ -471,7 +471,7 @@ object EventStream {
     * (count, value-cents) materialized view through `foreachBatch` →
     * [[graft.sources.Catalog.refreshAggMv]]. Every microbatch is
     * pre-aggregated to MV grain (map-side combinable — only ≤|types|
-    * rows reach the refresh) and merged into the `_SUCCESS`-committed
+    * rows reach the refresh) and merged into the manifest-committed
     * state; because the merge is algebraic, the FINAL STATE is
     * independent of microbatch boundaries (spec-pinned at
     * maxFilesPerTrigger 1 vs the default) and equals the batch

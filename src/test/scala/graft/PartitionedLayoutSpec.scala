@@ -46,4 +46,12 @@ class PartitionedLayoutSpec extends SparkSpec {
         .dropDerived("orders_by_status")
     }
   }
+
+  test("warehouseLayoutRoot keeps base dirs whose String hash codes collide apart") {
+    assert("/data/Aa".hashCode == "/data/BB".hashCode)
+    assert(Catalog.warehouseLayoutRoot(spark, "/data/Aa") !=
+      Catalog.warehouseLayoutRoot(spark, "/data/BB"))
+    assert(Catalog.warehouseLayoutRoot(spark, "/data/Aa") ==
+      Catalog.warehouseLayoutRoot(spark, "/data/Aa"))
+  }
 }

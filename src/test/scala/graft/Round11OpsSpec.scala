@@ -272,8 +272,8 @@ class QsketchMvSpec extends SparkSpec {
 /** Round-11: segment COMPACTION for the upserted index and SCD2
   * families — the operational counterpart of O(Δ) maintenance. The
   * fold must be invisible to readers (same search results, same
-  * history), built in a `.tmp` layout and installed atomically, with
-  * the latest batch's exactly-once marker surviving the fold. */
+  * history), published by one manifest, with the batch-id mark
+  * surviving the fold. */
 class SegmentCompactionSpec extends SparkSpec {
   import spark.implicits._
   import org.apache.spark.sql.functions._
@@ -307,12 +307,13 @@ class SegmentCompactionSpec extends SparkSpec {
     val idx1 = cat.loadAnnIndex("idx")
     assert(idx1.assignments.count() == nBefore)
     assert(neighborSets(Similarity.ivfSearch(idx1, queries, 10)) == before)
-    // one empty tombstone segment carrying the highest batch name
-    assert(segNames(cat, "idx", "assignments_seg_") ==
-      Seq("assignments_seg_b2"))
-    // a retry of the folded latest batch finds its marker and no-ops
-    cat.upsertAnnIndex("idx", emb.limit(7), 2L)
-    assert(cat.loadAnnIndex("idx").assignments.count() == nBefore)
+    // the folded segments are gone; no empty segment stands in for them
+    assert(segNames(cat, "idx", "assignments_seg_").isEmpty)
+    // a replay of either folded batch is at or below the mark: no-op
+    Seq(1L, 2L).foreach { b =>
+      cat.upsertAnnIndex("idx", emb.limit(7), b)
+      assert(cat.loadAnnIndex("idx").assignments.count() == nBefore)
+    }
     // compacting a compacted index is a no-op... and idempotent
     cat.compactAnnIndex("idx")
     assert(cat.loadAnnIndex("idx").assignments.count() == nBefore)
@@ -347,29 +348,14 @@ class SegmentCompactionSpec extends SparkSpec {
     val before = cat.scd2MvHistory("h", "seq", "op").collect().toSet
     assert(segNames(cat, "h", "closed_seg_").size == 3)
     cat.compactScd2("h")
-    assert(segNames(cat, "h", "closed_seg_") == Seq("closed_seg_b2"))
+    assert(segNames(cat, "h", "closed_").size == 1)
     assert(cat.scd2MvHistory("h", "seq", "op").collect().toSet == before)
-    // the open state's batch marker survived the copy: retry no-ops
+    // the batch-id mark survived the fold: retry no-ops
     cat.refreshScd2Mv("h", ch.limit(2), "k", "seq", "op", 2L)
     assert(cat.scd2MvHistory("h", "seq", "op").collect().toSet == before)
     // nothing left to fold: second compaction is a no-op
     cat.compactScd2("h")
     assert(cat.scd2MvHistory("h", "seq", "op").collect().toSet == before)
-  }
-
-  test("ANN as-of read: batch-named segments give free index time travel") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val cat = freshCat()
-    val base = emb.where(col("vec_id") % 5 === 1)
-    cat.saveAnnIndex("idx", Similarity.buildIvfIndex(base))
-    cat.upsertAnnIndex("idx", emb.where(col("vec_id") % 5 === 2), 1L)
-    cat.upsertAnnIndex("idx", emb.where(col("vec_id") % 5 === 3), 2L)
-    val nBase = base.count()
-    val nB1 = emb.where(col("vec_id") % 5 === 2).count()
-    val nB2 = emb.where(col("vec_id") % 5 === 3).count()
-    assert(cat.loadAnnIndex("idx", asOf = Some(0L)).assignments.count() == nBase)
-    assert(cat.loadAnnIndex("idx", asOf = Some(1L)).assignments.count() == nBase + nB1)
-    assert(cat.loadAnnIndex("idx").assignments.count() == nBase + nB1 + nB2)
   }
 
   test("graft_doctor TVF: lint from SQL, composable, empty when clean") {

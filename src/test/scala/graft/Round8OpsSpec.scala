@@ -141,44 +141,6 @@ class Round8OpsSpec extends SparkSpec {
     }
   }
 
-  // ---------------------------------------------------------- swap durability
-
-  test("commitSwap: a torn swap restores from .bak instead of re-seeding") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-swapbak").toString
-    val cat = new graft.sources.Catalog(spark, root)
-    cat.refreshAggMv("mv", Seq(("a", 10L)).toDF("k", "n"), Seq("k"))
-    // simulate a crash in the swap window: live was renamed aside, tmp
-    // never installed — the committed state sits at <dir>.bak only
-    val live = java.nio.file.Paths.get(s"${cat.derivedDir}/mv")
-    java.nio.file.Files.move(live,
-      java.nio.file.Paths.get(s"${cat.derivedDir}/mv.bak"))
-    // the old delete-then-rename shape would now silently re-seed from
-    // the delta alone (a=1); recovery must restore the backup first so
-    // the delta MERGES onto history (a=11)
-    val got = cat.refreshAggMv("mv", Seq(("a", 1L)).toDF("k", "n"), Seq("k"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(got.toSeq == Seq(("a", 11L)))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"${cat.derivedDir}/mv.bak")))
-  }
-
-  test("commitSwap: a stale .bak beside a committed install is cleaned up") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-swapbak2").toString
-    val cat = new graft.sources.Catalog(spark, root)
-    cat.refreshAggMv("mv", Seq(("a", 10L)).toDF("k", "n"), Seq("k"))
-    // crash AFTER install but before backup cleanup: live is committed,
-    // a leftover .bak (with the older state) still exists
-    val bak = java.nio.file.Paths.get(s"${cat.derivedDir}/mv.bak")
-    java.nio.file.Files.createDirectories(bak)
-    java.nio.file.Files.createFile(bak.resolve("_SUCCESS"))
-    val got = cat.refreshAggMv("mv", Seq(("a", 1L)).toDF("k", "n"), Seq("k"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    assert(got.toSeq == Seq(("a", 11L))) // live state won, not the stale bak
-    assert(!java.nio.file.Files.exists(bak))
-  }
-
   // --------------------------------------------------------- cdc seq ordering
 
   test("refreshCdcMv: struct (us, eid) sequence pins same-microsecond ties") {

@@ -108,43 +108,17 @@ class Scd2BackfillSpec extends SparkSpec {
     val before = seg1.listFiles().map(f => f.getName -> f.lastModified()).toMap
     assert(before.nonEmpty)
     // late key-1 change: seg b0 (holds key 1) is rewritten, seg b1 is
-    // NOT — its files survive the install byte-for-byte, mtimes intact
+    // NOT — it stays listed, its files byte-for-byte, mtimes intact
     cat.scd2Backfill("m", chg((1L, 15L, "u", "mid")), "k", "seq", "op")
     assert(histSet(cat.scd2MvHistory("m", "seq", "op")) ==
       expect((1L, 10L, "u", "a"), (1L, 15L, "u", "mid"), (1L, 20L, "u", "b"),
         (2L, 5L, "u", "x"), (2L, 8L, "u", "y"), (2L, 12L, "u", "z")))
     val after = seg1.listFiles().map(f => f.getName -> f.lastModified()).toMap
     assert(after == before, s"untouched segment rewritten: $before -> $after")
-    // no backup or pull intent left behind
-    assert(!new java.io.File(s"${cat.derivedDir}/m.bak").exists())
-    assert(!new java.io.File(s"${cat.derivedDir}/m/_backfill_pull").exists())
     // and the preserved layout still compacts + replays cleanly
     cat.compactScd2("m")
     assert(histSet(cat.scd2MvHistory("m", "seq", "op")) ==
       expect((1L, 10L, "u", "a"), (1L, 15L, "u", "mid"), (1L, 20L, "u", "b"),
         (2L, 5L, "u", "x"), (2L, 8L, "u", "y"), (2L, 12L, "u", "z")))
-  }
-
-  test("a pulled segment lost from the backup fails recovery and keeps the intent") {
-    val cat = freshCat()
-    cat.refreshScd2Mv("m", chg((1L, 10L, "u", "a"), (1L, 20L, "u", "b"),
-      (2L, 5L, "u", "x"), (2L, 8L, "u", "y")), "k", "seq", "op", 0L)
-    cat.refreshScd2Mv("m", chg((2L, 12L, "u", "z")), "k", "seq", "op", 1L)
-    cat.scd2Backfill("m", chg((1L, 15L, "u", "mid")), "k", "seq", "op")
-    // the state a crash between the install and the pull leaves: the
-    // untouched segment parked in the backup, the pull intent pending
-    val live = new java.io.File(s"${cat.derivedDir}/m")
-    val bak = new java.io.File(s"${cat.derivedDir}/m.bak")
-    assert(bak.mkdir())
-    val seg = new java.io.File(bak, "closed_seg_b1")
-    assert(new java.io.File(live, "closed_seg_b1").renameTo(seg))
-    val intent = new java.io.File(live, "_backfill_pull")
-    java.nio.file.Files.writeString(intent.toPath, "closed_seg_b1")
-    // ... and the parked segment is then deleted from the backup
-    seg.listFiles().foreach(_.delete())
-    assert(seg.delete())
-    val err = intercept[java.io.IOException](cat.scd2MvHistory("m", "seq", "op"))
-    assert(err.getMessage.contains("closed_seg_b1"))
-    assert(intent.exists(), "the pull intent was dropped with its segment lost")
   }
 }

@@ -6,7 +6,7 @@ import graft.sources.Catalog
 
 /** The durable inverted text index: indexed search equals the direct
   * scan, upserted equals monolithic (stats fold losslessly), the
-  * segment conventions (retry no-op, torn segment invisible, asOf,
+  * segment conventions (retry no-op, torn segment invisible,
   * compaction) hold exactly as in the ANN family. */
 class TextIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -36,10 +36,13 @@ class TextIndexSpec extends SparkSpec {
       expr("CASE WHEN doc_id >= 0 THEN raise_error('poisoned doc') ELSE text END"))
     intercept[Exception](cat.buildTextIndex("tg", poisoned))
     cat.upsertTextIndex("tg", docs.where(col("doc_id") % 3 === 0), 1L)
-    def fields(part: String) = spark.read.parquet(s"${cat.derivedDir}/tg/$part")
-      .schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
-    assert(fields("postings").map(_._1).contains("positions"))
-    assert(fields("postings_seg_b1") == fields("postings"))
+    // the upserted segment carries positions: phrase search over the
+    // whole index equals the direct scan
+    val idx = cat.loadTextIndex("tg")
+    assert(idx.postings.columns.contains("positions"))
+    assert(idx.postings.where(col("positions").isNull).isEmpty)
+    assert(TextAnalysis.bm25PhraseIndexed(idx, Seq("data", "join"), 5).collect().toSeq ==
+      TextAnalysis.bm25Phrase(docs, Seq("data", "join"), 5).collect().toSeq)
   }
 
   test("upserted index equals the monolithic rebuild (stats fold losslessly)") {
@@ -94,25 +97,15 @@ class TextIndexSpec extends SparkSpec {
     val before = hits(TextAnalysis.bm25Indexed(cat.loadTextIndex("ti"), query))
     cat.upsertTextIndex("ti", docs.where(col("doc_id") % 3 === 0), 1L) // retry
     assert(hits(TextAnalysis.bm25Indexed(cat.loadTextIndex("ti"), query)) == before)
-    // torn: a postings segment without _SUCCESS is invisible, as are
-    // its earlier-written dl/stats siblings
+    // torn: segments a crashed upsert left behind, which no manifest
+    // lists, are invisible
     val root = new java.io.File(s"${cat.derivedDir}/ti")
-    new java.io.File(root, "postings_seg_b2").mkdirs()
-    new java.io.File(root, "dl_seg_b2").mkdirs()
-    new java.io.File(root, "stats_seg_b2").mkdirs()
+    Seq("postings_seg_b2", "dl_seg_b2").foreach { d =>
+      val torn = new java.io.File(root, d)
+      assert(torn.mkdirs())
+      java.nio.file.Files.writeString(torn.toPath.resolve("part-junk.parquet"), "junk")
+    }
     assert(hits(TextAnalysis.bm25Indexed(cat.loadTextIndex("ti"), query)) == before)
-  }
-
-  test("asOf reads the index as it stood after a batch") {
-    val docs = Tables.documents(spark, sfDir)
-    val cat = freshCat()
-    val base = docs.where(col("doc_id") % 3 =!= 0)
-    cat.buildTextIndex("ti", base)
-    cat.upsertTextIndex("ti", docs.where(col("doc_id") % 3 === 0), 1L)
-    assert(hits(TextAnalysis.bm25Indexed(cat.loadTextIndex("ti", asOf = Some(0L)), query)) ==
-      hits(TextAnalysis.bm25(base, query)))
-    assert(hits(TextAnalysis.bm25Indexed(cat.loadTextIndex("ti", asOf = Some(1L)), query)) ==
-      hits(TextAnalysis.bm25(docs, query)))
   }
 
   test("compaction folds segments, keeps results, survives a retried batch") {
@@ -124,9 +117,10 @@ class TextIndexSpec extends SparkSpec {
     val before = hits(TextAnalysis.bm25Indexed(cat.loadTextIndex("ti"), query))
     cat.compactTextIndex("ti")
     assert(hits(TextAnalysis.bm25Indexed(cat.loadTextIndex("ti"), query)) == before)
-    // the tombstone keeps the highest applied batch visible: a replayed
-    // batch 2 must no-op, not double-count df/dl
+    // the batch-id mark survives the fold: a replay of either folded
+    // batch must no-op, not double-count df/dl
     cat.upsertTextIndex("ti", docs.where(col("doc_id") % 3 === 0), 2L)
+    cat.upsertTextIndex("ti", docs.where(col("doc_id") % 3 === 2), 1L)
     assert(hits(TextAnalysis.bm25Indexed(cat.loadTextIndex("ti"), query)) == before)
     // idempotent re-compaction
     cat.compactTextIndex("ti")
@@ -160,7 +154,7 @@ class TextIndexSpec extends SparkSpec {
     def segs(name: String, p: String) =
       new java.io.File(s"${cat.derivedDir}/$name").listFiles()
         .count(f => f.isDirectory && f.getName.startsWith(p))
-    assert(segs("ti", "postings_seg_b") == 1) // the tombstone only
+    assert(segs("ti", "postings_seg_b") == 0) // folded and deleted
     assert(segs("h", "closed_seg_b") == 1)    // untouched
     assert(cat.maintain(threshold = 3).isEmpty) // idempotent at rest
   }

@@ -11,8 +11,10 @@
 #      A staged change to the corpus-prep operators (CorpusPipeline,
 #      TextAnalysis) runs their specs and re-drives the SparkEntry
 #      entries built on them the same way, and so does a staged change
-#      to sources/Catalog.scala (derived-state maintenance: MVs, text
-#      index, SCD2) for its specs and entries, and so does a staged
+#      to sources/Catalog.scala or sources/Manifest.scala (derived-state
+#      maintenance: MVs, text index, SCD2, and their one commit
+#      protocol) for its specs — the crash-point enumeration
+#      (graft.CrashPointSpec) among them — and entries, and so does a staged
 #      change to Tables.scala (the table loader every driver entry reads
 #      through: schema resolution, timestamp flavors) for its specs, the
 #      plan audit and the query_mix entries. A staged change under
@@ -87,10 +89,10 @@ if grep -qE "$prep_re" <<<"$staged"; then
   }
 fi
 
-catalog_re='sources/Catalog\.scala'
+catalog_re='sources/(Catalog|Manifest)\.scala'
 if grep -qE "$catalog_re" <<<"$staged"; then
   echo "precommit: derived-state specs..." >&2
-  (cd "$checkdir" && sbt -batch "testOnly graft.TextIndexSpec graft.AutoMaintainSpec graft.Round7OpsSpec graft.Round7bOpsSpec graft.Round9DurabilitySpec graft.Scd2BackfillSpec graft.KmvMvSpec graft.Round13FixSpec graft.PartitionedLayoutSpec" < /dev/null) \
+  (cd "$checkdir" && sbt -batch "testOnly graft.TextIndexSpec graft.AutoMaintainSpec graft.Round7OpsSpec graft.Round7bOpsSpec graft.Round9DurabilitySpec graft.Scd2BackfillSpec graft.KmvMvSpec graft.Round13FixSpec graft.PartitionedLayoutSpec graft.CrashPointSpec" < /dev/null) \
       > /tmp/precommit_catalog.log 2>&1 || {
     tail -30 /tmp/precommit_catalog.log >&2
     echo "precommit: REFUSED — derived-state specs failed" >&2

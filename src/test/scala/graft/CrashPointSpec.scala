@@ -15,7 +15,7 @@ import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Similarity, TextAnalysis}
+import graft.operators.Similarity
 import graft.sources.Catalog
 
 /** Test-only filesystem for crash-point enumeration: the local
@@ -158,7 +158,7 @@ class CrashPointSpec extends SparkSpec {
   /** A state as its readers see it, or `<absent>` when nothing is
     * committed under the name. */
   private def state(read: => Seq[String]): Seq[String] =
-    try read catch { case e: IllegalArgumentException => Seq("<absent>") }
+    try read catch { case _: IllegalArgumentException => Seq("<absent>") }
 
   private def textState(c: Catalog, n: String) = state {
     val i = c.loadTextIndex(n)

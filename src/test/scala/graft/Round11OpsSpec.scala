@@ -307,7 +307,7 @@ class SegmentCompactionSpec extends SparkSpec {
     val idx1 = cat.loadAnnIndex("idx")
     assert(idx1.assignments.count() == nBefore)
     assert(neighborSets(Similarity.ivfSearch(idx1, queries, 10)) == before)
-    // the folded segments are gone; no empty segment stands in for them
+    // the folded segments are deleted once the compaction commits
     assert(segNames(cat, "idx", "assignments_seg_").isEmpty)
     // a replay of either folded batch is at or below the mark: no-op
     Seq(1L, 2L).foreach { b =>

@@ -150,12 +150,14 @@ object Analytics {
   /** Fixed-width numeric histogram: floor-division binning (engine-exact
     * — one double division + floor, no rounding boundary) then a count
     * per bin. The binning is a map-only projection; one aggregate. */
-  def priceHistogram(orders: DataFrame, binWidth: Double = 10000.0): DataFrame =
+  def priceHistogram(orders: DataFrame): DataFrame = {
+    val binWidth = 10000.0
     orders
       .select(floor(col("o_totalprice") / binWidth).cast("long").as("bin"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("cnt"))
       .select((col("bin") * binWidth).as("bin_low"), col("cnt"))
+  }
 
   /** Full outer join of two per-nation aggregates — rows survive from
     * BOTH sides when the other has no match (coalesced keys, zeroed
@@ -272,12 +274,12 @@ object Analytics {
     * interpolation step verbatim instead of trusting an opaque sketch.
     * Same scale shape as before: ≤ k longs (+ k (hash, value) pairs)
     * per group per task ride the shuffle. */
-  def sketchSummary(lineitem: DataFrame, k: Int = 512,
-      kq: Int = 256): DataFrame = {
+  def sketchSummary(lineitem: DataFrame): DataFrame = {
     import graft.functions.KmvSketch._
     import graft.functions.BottomKSample._
     import graft.functions.Exact.round6
     import TextAnalysis.portableHash60
+    val (k, kq) = (512, 256)
     val h = portableHash60(col("l_orderkey"), lit("-"), col("l_linenumber"))
     lineitem
       .groupBy(col("l_returnflag"))
@@ -354,9 +356,10 @@ object Analytics {
     * Emits the k-th smallest hash (the sketch's whole state boundary)
     * and the estimate, both value-verified against a DuckDB window
     * mirror. */
-  def kmvSummary(lineitem: DataFrame, k: Int = 64): DataFrame = {
+  def kmvSummary(lineitem: DataFrame): DataFrame = {
     import graft.functions.KmvSketch._
     import TextAnalysis.portableHash60
+    val k = 64
     lineitem
       .groupBy(col("l_returnflag"))
       .agg(
@@ -414,10 +417,11 @@ object Analytics {
     * Same scale shape: two bounded-buffer sketch aggregations + a 1×1
     * join. */
   def kmvSetOps(left: DataFrame, leftKey: String,
-      right: DataFrame, rightKey: String, k: Int = 256): DataFrame = {
+      right: DataFrame, rightKey: String): DataFrame = {
     import graft.functions.KmvSketch._
     import graft.functions.Exact.round6
     import TextAnalysis.portableHash60
+    val k = 256
     val ba = left.agg(kmv(portableHash60(col(leftKey)), k).as("ba"))
     val bb = right.agg(kmv(portableHash60(col(rightKey)), k).as("bb"))
     val withU = ba.join(bb)
@@ -531,7 +535,7 @@ object Analytics {
     * global top-k plans as TakeOrderedAndProject (bounded heaps) with a
     * total-order tiebreak on the key. */
   def returnedTopCustomers(lineitem: DataFrame, orders: DataFrame,
-      customer: DataFrame, k: Int = 20): DataFrame = {
+      customer: DataFrame): DataFrame = {
     import graft.functions.Exact.cents
     lineitem.where(col("l_returnflag") === "R")
       .join(orders, col("l_orderkey") === col("o_orderkey"))
@@ -540,7 +544,7 @@ object Analytics {
       .agg((sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount"))))
         .cast("double") / 100.0).as("revenue"))
       .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(k)
+      .limit(20)
   }
 
   /** Correlated-scalar-subquery shape (TPC-H Q17): lineitems whose
@@ -686,15 +690,14 @@ object Analytics {
   }
 
   /** EXISTS-subquery shape (TPC-H Q4): orders counted by priority when
-    * at least one of their lineitems shipped more than `lateDays` after
+    * at least one of their lineitems shipped more than 30 days after
     * the order date. The EXISTS decorrelates to a LEFT-SEMI hash join
     * on the order key (the date predicate rides the join as a
     * co-partitioned filter, µs-integer comparison) — per order the semi
     * join emits at most one row, so the aggregate input is bounded by
     * the order count at any scale. */
-  def latePriorityCounts(orders: DataFrame, lineitem: DataFrame,
-      lateDays: Int = 30): DataFrame = {
-    val lateUs = lateDays * 86400000000L
+  def latePriorityCounts(orders: DataFrame, lineitem: DataFrame): DataFrame = {
+    val lateUs = 30 * 86400000000L
     // date columns are parquet TIMESTAMP_NTZ; unix_micros needs an
     // instant — the NTZ→LTZ cast interprets the wall clock in the
     // session zone (pinned UTC), exactly DuckDB's epoch_us on a naive
@@ -726,19 +729,18 @@ object Analytics {
 
   /** Scalar-subquery + anti-join shape (TPC-H Q22): per-nation count
     * and total balance of customers whose balance is strictly above the
-    * average positive balance and who placed no order since `cutoff`
+    * average positive balance and who placed no order since 1999
     * (lapsed high-value accounts). The average is never materialized as
     * a double: the comparison is cross-multiplied in integer cents
     * (bal·n > Σbal) so the threshold is engine-exact. The 1-row
     * aggregate broadcasts; the anti join is a hash join on custkey with
     * the date filter pushed into the orders scan. */
-  def idleRichCustomers(customer: DataFrame, orders: DataFrame,
-      cutoff: String = "1999-01-01 00:00:00"): DataFrame = {
+  def idleRichCustomers(customer: DataFrame, orders: DataFrame): DataFrame = {
     val posStats = customer.where(col("c_acctbal") > 0)
       .agg(sum(cents(col("c_acctbal"))).as("pos_cents"),
         count(lit(1)).as("pos_n"))
     val recent = orders
-      .where(col("o_orderdate") >= lit(cutoff).cast("timestamp_ntz"))
+      .where(col("o_orderdate") >= lit("1999-01-01 00:00:00").cast("timestamp_ntz"))
       .select(col("o_custkey").as("c_custkey"))
     customer
       .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
@@ -756,8 +758,7 @@ object Analytics {
     * fact-fact shuffle is lineitem⋈orders on orderkey; supplier,
     * customer, and both nation→region dim chains broadcast, and the
     * ship-date filter pushes into the lineitem scan. */
-  def q7Volume(spark: SparkSession, dir: String,
-      suppRegion: String = "EUROPE", custRegion: String = "ASIA"): DataFrame = {
+  def q7Volume(spark: SparkSession, dir: String): DataFrame = {
     val nation = Tables.nation(spark, dir)
     val region = Tables.region(spark, dir)
     def nationsOf(rName: String, out: String) = nation
@@ -765,11 +766,11 @@ object Analytics {
         col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey"), col("n_name").as(out))
     val supp = Tables.supplier(spark, dir)
-      .join(broadcast(nationsOf(suppRegion, "supp_nation")),
+      .join(broadcast(nationsOf("EUROPE", "supp_nation")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("supp_nation"))
     val cust = Tables.customer(spark, dir)
-      .join(broadcast(nationsOf(custRegion, "cust_nation")),
+      .join(broadcast(nationsOf("ASIA", "cust_nation")),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("cust_nation"))
     Tables.lineitem(spark, dir)
@@ -788,17 +789,15 @@ object Analytics {
     * region, by order year. Both sides of the ratio are exact integer
     * cents, so the division (identical longs on both engines) is
     * deterministic; the result is scaled-floor rounded. */
-  def q8MarketShare(spark: SparkSession, dir: String,
-      custRegion: String = "AMERICA", suppRegion: String = "EUROPE",
-      pType: String = "STANDARD"): DataFrame = {
+  def q8MarketShare(spark: SparkSession, dir: String): DataFrame = {
     val nation = Tables.nation(spark, dir)
     val region = Tables.region(spark, dir)
     val custNations = nation
-      .join(region.where(col("r_name") === custRegion),
+      .join(region.where(col("r_name") === "AMERICA"),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey").as("cn_key"))
     val suppNations = nation
-      .join(region.where(col("r_name") === suppRegion),
+      .join(region.where(col("r_name") === "EUROPE"),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey").as("sn_key"))
     val supp = Tables.supplier(spark, dir)
@@ -808,7 +807,7 @@ object Analytics {
       .join(broadcast(custNations), col("c_nationkey") === col("cn_key"))
       .select(col("c_custkey"))
     Tables.lineitem(spark, dir)
-      .join(broadcast(Tables.part(spark, dir).where(col("p_type") === pType)
+      .join(broadcast(Tables.part(spark, dir).where(col("p_type") === "STANDARD")
         .select(col("p_partkey"))), col("l_partkey") === col("p_partkey"))
       .join(Tables.orders(spark, dir)
         .where(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -849,11 +848,11 @@ object Analytics {
     * map-side-combined per-order aggregate BEFORE any dimension join,
     * so only qualifying orders (a tiny fraction) reach the join;
     * quantities are integral doubles, summed exactly. */
-  def q18LargeOrders(spark: SparkSession, dir: String, minQty: Long = 250): DataFrame = {
+  def q18LargeOrders(spark: SparkSession, dir: String): DataFrame = {
     val bigOrders = Tables.lineitem(spark, dir)
       .groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity")).cast("long").as("sum_qty"))
-      .where(col("sum_qty") > minQty)
+      .where(col("sum_qty") > 250L)
     Tables.orders(spark, dir)
       .join(bigOrders, col("o_orderkey") === col("l_orderkey"))
       .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
@@ -944,10 +943,9 @@ object Analytics {
     * double division. The only fact-fact shuffle is lineitem⋈orders;
     * the name-filtered part table and the supplier→nation chain
     * broadcast. */
-  def q9ProfitByNation(spark: SparkSession, dir: String,
-      namePattern: String = "bolt"): DataFrame = {
+  def q9ProfitByNation(spark: SparkSession, dir: String): DataFrame = {
     val part = Tables.part(spark, dir)
-      .where(col("p_name").contains(namePattern))
+      .where(col("p_name").contains("bolt"))
       .select(col("p_partkey"), col("p_retailprice"))
     val supp = Tables.supplier(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)),
@@ -977,14 +975,13 @@ object Analytics {
     * supplier/nation join on the tiny qualifying set. The DuckDB oracle
     * uses the EXISTS formulation, so the rewrite is equivalence-checked
     * per round. */
-  def q21WaitingSuppliers(spark: SparkSession, dir: String,
-      nationName: String = "NATION_3", lateDays: Int = 90): DataFrame = {
+  def q21WaitingSuppliers(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .join(Tables.orders(spark, dir).where(col("o_orderstatus") === "F")
         .select(col("o_orderkey"), col("o_orderdate")),
         col("l_orderkey") === col("o_orderkey"))
       .withColumn("is_late",
-        col("l_shipdate") > col("o_orderdate") + expr(s"INTERVAL $lateDays DAYS"))
+        col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"))
     // two-level instead of countDistinct×2: the double-distinct plan
     // Expands every row 3-way before the shuffle; pre-aggregating to
     // (order, supplier) grain first is map-side combinable and ships
@@ -1002,7 +999,7 @@ object Analytics {
       .where(col("n_supp") >= 2 && col("n_late_supp") === 1)
     val suppInNation = Tables.supplier(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)
-        .where(col("n_name") === nationName)),
+        .where(col("n_name") === "NATION_3")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("s_name"))
     perOrder
@@ -1025,20 +1022,18 @@ object Analytics {
     * left to Catalyst (auto-broadcast under threshold, shuffle join
     * beyond — the supplier table is region-fraction-sized, so a forced
     * hint would be wrong at extreme SF). */
-  def q2MinCostSupplier(spark: SparkSession, dir: String,
-      regionName: String = "EUROPE", partType: String = "LARGE",
-      maxSize: Int = 10): DataFrame = {
+  def q2MinCostSupplier(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val euro = Tables.supplier(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)
         .join(broadcast(Tables.region(spark, dir)
-          .where(col("r_name") === regionName)),
+          .where(col("r_name") === "EUROPE")),
           col("n_regionkey") === col("r_regionkey"))),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("s_name"), col("s_acctbal"),
         col("n_name").as("nation"))
     val parts = Tables.part(spark, dir)
-      .where(col("p_type") === partType && col("p_size") <= maxSize)
+      .where(col("p_type") === "LARGE" && col("p_size") <= 10)
       .select(col("p_partkey"), col("p_name"))
     val pairCost = Tables.lineitem(spark, dir)
       .groupBy(col("l_partkey"), col("l_suppkey"))
@@ -1056,7 +1051,7 @@ object Analytics {
   }
 
   /** TPC-H Q11-style important stock (adapted: part "value" held by a
-    * nation's suppliers is the exact-cents sum of their traded line
+    * NATION_3's suppliers is the exact-cents sum of their traded line
     * prices): parts whose value exceeds `permil`/1000 of the nation's
     * total. The scalar-subquery threshold never becomes a double — the
     * comparison is cross-multiplied in integer cents
@@ -1064,11 +1059,11 @@ object Analytics {
     * boundary. One fact shuffle on partkey after a broadcast
     * supplier-filter semi join; the 1-row grand total broadcasts into
     * the part-grain frame (the q_abc shape). */
-  def q11ImportantStock(spark: SparkSession, dir: String,
-      nationName: String = "NATION_3", permil: Int = 1): DataFrame = {
+  def q11ImportantStock(spark: SparkSession, dir: String): DataFrame = {
+    val permil = 1
     val suppN = Tables.supplier(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)
-        .where(col("n_name") === nationName)),
+        .where(col("n_name") === "NATION_3")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"))
     val vals = Tables.lineitem(spark, dir)
@@ -1085,7 +1080,7 @@ object Analytics {
 
   /** TPC-H Q20-style potential part promotion (adapted: no partsupp
     * availqty, so "excess availability" is a pair whose ALL-TIME traded
-    * quantity exceeds twice its `promoYear` shipments — most of the
+    * quantity exceeds twice its 1997 shipments — most of the
     * relationship's volume sits outside the promo year): the distinct
     * suppliers holding such a pair for a name-matched part, with their
     * nation. Quantities are integral in this schema, summed as longs —
@@ -1095,10 +1090,9 @@ object Analytics {
     * with a conditional sum (availability and promo-year shipments from
     * the SAME scan — no lineitem self-join), then a distinct over the
     * tiny qualifying set and broadcast name joins. */
-  def q20PotentialPromo(spark: SparkSession, dir: String,
-      namePattern: String = "bolt", promoYear: Int = 1997): DataFrame = {
+  def q20PotentialPromo(spark: SparkSession, dir: String): DataFrame = {
     val parts = Tables.part(spark, dir)
-      .where(col("p_name").contains(namePattern))
+      .where(col("p_name").contains("bolt"))
       .select(col("p_partkey"))
     val suppNation = Tables.supplier(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)),
@@ -1110,7 +1104,7 @@ object Analytics {
         "left_semi")
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(sum(col("l_quantity").cast("long")).as("avail"),
-        sum(when(year(col("l_shipdate")) === promoYear,
+        sum(when(year(col("l_shipdate")) === 1997,
           col("l_quantity").cast("long")).otherwise(0L)).as("shipped"))
       .where(col("shipped") > 0 && col("avail") > col("shipped") * 2)
       .select(col("l_suppkey")).distinct()
@@ -1191,9 +1185,9 @@ object Analytics {
     * ordered scan, state bounded by the densest 30-day span per
     * customer. µs-integer order key keeps the frame arithmetic
     * engine-exact. */
-  def trailingSpend(orders: DataFrame, days: Int = 30): DataFrame = {
+  def trailingSpend(orders: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spanUs = days * 86400000000L
+    val spanUs = 30 * 86400000000L
     val w = Window.partitionBy(col("o_custkey")).orderBy(col("odu"))
       .rangeBetween(-spanUs, Window.currentRow)
     orders
@@ -1451,8 +1445,7 @@ object Analytics {
     * item counts are a groupBy over the same scan, and the basket total
     * is a 1-row broadcast. Per-pair cost is two broadcast-sized joins
     * on part grain — never a second pass over the fact table. */
-  def basketRules(lineitem: DataFrame, minSupport: Long = 2L,
-      maxBasket: Int = 1000): DataFrame = {
+  def basketRules(lineitem: DataFrame, minSupport: Long = 2L): DataFrame = {
     // ONE materialized (order, part, bsz) frame feeds the item counts,
     // the basket total AND the pair mine (identical rows to the plain
     // distinct — bsz is just along for the ride)
@@ -1460,7 +1453,7 @@ object Analytics {
     val itemCnt = sized.groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("icnt"))
     val nBaskets = sized.agg(countDistinct(col("l_orderkey")).as("nb"))
-    val pairs = basketPairsFrom(sized, minSupport, maxBasket)
+    val pairs = basketPairsFrom(sized, minSupport, 1000)
       .where(col("p1") =!= lit(-1L))
     pairs
       .join(itemCnt.select(col("l_partkey").as("p1"), col("icnt").as("c1")), "p1")
@@ -1476,8 +1469,8 @@ object Analytics {
   /** ABC / Pareto inventory classification of parts by revenue —
     * "which 20% of the catalog is 80% of the money". Class boundaries
     * are defined at the REVENUE-VALUE grain: a part is class A when the
-    * top-down cumulative revenue through its value block is ≤ `aPct`%
-    * of total, B through `bPct`%, else C — so tied parts always share a
+    * top-down cumulative revenue through its value block is ≤ 80 %
+    * of total, B through 95 %, else C — so tied parts always share a
     * class and the result is order-independent (a rank-grain cutoff
     * would split ties by an arbitrary tiebreak). The top-down
     * cumulative comes from [[Cumulative.runningSum]] over the
@@ -1485,8 +1478,7 @@ object Analytics {
     * partition ever holds the part table; comparisons are integer
     * cross-multiplies (100·D ≤ pct·T) — no division anywhere. Output:
     * one row per class with part count, revenue, and exact share. */
-  def abcClassification(lineitem: DataFrame, aPct: Int = 80,
-      bPct: Int = 95): DataFrame = {
+  def abcClassification(lineitem: DataFrame): DataFrame = {
     val rev = lineitem.groupBy(col("l_partkey"))
       .agg(sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
         .as("r"))
@@ -1502,8 +1494,8 @@ object Analytics {
     scanned.crossJoin(broadcast(tot))
       .withColumn("d_desc", col("t") - col("s_asc") + col("mass"))
       .withColumn("abc_class",
-        when(col("d_desc") * 100 <= col("t") * aPct, "A")
-          .when(col("d_desc") * 100 <= col("t") * bPct, "B")
+        when(col("d_desc") * 100 <= col("t") * 80, "A")
+          .when(col("d_desc") * 100 <= col("t") * 95, "B")
           .otherwise("C"))
       .groupBy(col("abc_class"))
       .agg(sum(col("cnt")).as("n_parts"),

@@ -196,15 +196,14 @@ object AsOfJoin {
 
   /** [[purchaseAttribution]] with a STALENESS TOLERANCE (pandas
     * `merge_asof(tolerance=…)` semantics): a prior view counts only if
-    * it is within `toleranceUs` of the purchase; staler matches become
+    * it is within an hour of the purchase; staler matches become
     * NULL, exactly like no-match. Same single-shuffle running-max plan
     * — the tolerance is one extra map-side conditional on the carried
     * value, not a second window or join. */
-  def purchaseAttributionTol(events: DataFrame,
-      toleranceUs: Long = 3600L * 1000000L): DataFrame =
+  def purchaseAttributionTol(events: DataFrame): DataFrame =
     purchaseAttribution(events)
       .select(col("user_id"), col("purchase_us"),
-        when(col("last_view_us") >= col("purchase_us") - toleranceUs,
+        when(col("last_view_us") >= col("purchase_us") - 3600L * 1000000L,
           col("last_view_us")).as("last_view_us"))
 
   /** Forward attribution: each view gets the timestamp of the user's

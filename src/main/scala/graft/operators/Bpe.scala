@@ -202,7 +202,7 @@ object Bpe {
 
   /** DuckDB oracle for [[vocab]]: the same chained rounds, final
     * segmentation exploded and counted. */
-  def vocabOracleSql(nMerges: Int, eow: Boolean = false): String = {
+  def vocabOracleSql(nMerges: Int): String = {
     val rounds = (1 to nMerges).map { r =>
       s"""p$r AS (SELECT t.a, t.b, sum(cnt) AS n FROM seg${r - 1},
          unnest(list_transform(generate_series(1, len(seg) - 1),
@@ -217,7 +217,7 @@ object Bpe {
          FROM seg${r - 1}, b$r)"""
     }.mkString(",\n       ")
     s"""WITH $wordsCte,
-       ${seg0Cte(eow)},
+       ${seg0Cte(false)},
        $rounds
        SELECT tok, CAST(sum(cnt) AS BIGINT) AS n FROM seg$nMerges, unnest(seg) AS u(tok) GROUP BY 1"""
   }

@@ -27,6 +27,9 @@ import org.apache.spark.sql.functions._
   */
 object Cumulative {
 
+  /** Value buckets per group of every running form. */
+  private val Buckets = 128
+
   /** Append `outCol` = Σ cnt over rows of the same group with value ≤
     * this row's value (inclusive running sum in value order). `vc` must
     * have one row per (group, value) — the caller's value-count
@@ -39,7 +42,7 @@ object Cumulative {
     * min == max (zero-width buckets); route it to bucket 1 — the
     * single-row case the offset cumsum handles trivially. */
   def runningSum(vc: DataFrame, groupCols: Seq[String], valueCol: String,
-      cntCol: String, outCol: String, nBuckets: Int = 128): DataFrame = {
+      cntCol: String, outCol: String, nBuckets: Int = Buckets): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val g = groupCols.map(col)
     val v = col(valueCol).cast("double")
@@ -76,7 +79,7 @@ object Cumulative {
     * the rank prefix) pays one scan instead of k. Semantics per column
     * are exactly [[runningSum]]'s. */
   def runningSums(vc: DataFrame, groupCols: Seq[String], valueCol: String,
-      cntOutPairs: Seq[(String, String)], nBuckets: Int = 128): DataFrame = {
+      cntOutPairs: Seq[(String, String)]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val g = groupCols.map(col)
     val v = col(valueCol).cast("double")
@@ -86,7 +89,7 @@ object Cumulative {
       .withColumn("__bk",
         when(col("__bmin") === col("__bmax"), lit(1))
           .otherwise(width_bucket(v, col("__bmin"), col("__bmax"),
-            lit(nBuckets))))
+            lit(Buckets))))
       .drop("__bmin", "__bmax")
     val inBucket = Window
       .partitionBy(g :+ col("__bk"): _*)
@@ -124,7 +127,7 @@ object Cumulative {
     * is exactly the empty-prefix semantics. `vc` must have one row per
     * (group, value). */
   def runningMin(vc: DataFrame, groupCols: Seq[String], valueCol: String,
-      mCol: String, outCol: String, nBuckets: Int = 128): DataFrame = {
+      mCol: String, outCol: String, nBuckets: Int = Buckets): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val g = groupCols.map(col)
     val v = col(valueCol).cast("double")

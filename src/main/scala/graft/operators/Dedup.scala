@@ -24,6 +24,13 @@ import graft.functions.VectorFunctions
   */
 object Dedup {
 
+  /** The MinHash/LSH defaults every near-dup form shares: word n-gram
+    * width, signature length, LSH bands and the Jaccard cutoff. */
+  private val ShingleN = 3
+  private val NumHashes = 64
+  private val Bands = 16
+  private val JaccardThreshold = 0.5
+
   /** Exact dedup: content hash → keeper (min doc_id) + multiplicity. */
   def exact(docs: DataFrame): DataFrame =
     docs
@@ -61,7 +68,8 @@ object Dedup {
   /** Exact n-gram Jaccard near-dup pairs via a shingle inverted index.
     * The self-join on shingle is the candidate generator; count/union
     * arithmetic is all-integer so the Jaccard double is engine-exact. */
-  def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.5): DataFrame = {
+  def ngramJaccard(docs: DataFrame, n: Int = ShingleN,
+      threshold: Double = JaccardThreshold): DataFrame = {
     // long-hash shingles: the inverted-index self-join shuffles 8-byte keys
     // instead of n-word strings (same pair set modulo 64-bit collisions).
     // The distinct-shingle frame fans out three ways (sizes aggregate +
@@ -98,7 +106,7 @@ object Dedup {
     * path; at corpus scale generate candidates first (LSH over the
     * small side's shingles, or [[exact]] ladder) and verify with this
     * formula — the arithmetic is all-integer either way. */
-  def containmentPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.6): DataFrame =
+  def containmentPairs(docs: DataFrame, n: Int = ShingleN, threshold: Double = 0.6): DataFrame =
     containmentPairsImpl(docs, n, threshold, maxBucket = 0)
 
   private def containmentPairsImpl(docs: DataFrame, n: Int, threshold: Double,
@@ -155,16 +163,15 @@ object Dedup {
     * output schema either way (id_a, id_b, jaccard ≥ threshold); the
     * LSH arm's recall is the quantified trade
     * ([[graft.MinhashRecallSpec]] pins it in the hard regime). */
-  def nearDupAuto(docs: DataFrame, n: Int = 3, threshold: Double = 0.5,
-      exactMaxRows: Long = 10000, maxBucket: Int = 1000): DataFrame =
+  def nearDupAuto(docs: DataFrame, n: Int = ShingleN,
+      threshold: Double = JaccardThreshold, exactMaxRows: Long = 10000): DataFrame =
     if (atMost(docs, "doc_id", exactMaxRows)) ngramJaccard(docs, n, threshold)
-    else minhashLsh(docs, n, numHashes = 64, bands = 16,
-      threshold = threshold, maxBucket = maxBucket)
+    else minhashLsh(docs, n, threshold = threshold, maxBucket = 1000)
 
   /** Containment twin of [[nearDupAuto]]: exact [[containmentPairs]]
     * below `exactMaxRows`, the capped-posting-list form above it (see
     * [[containmentPairsImpl]] for the recall contract). */
-  def containmentAuto(docs: DataFrame, n: Int = 3, threshold: Double = 0.6,
+  def containmentAuto(docs: DataFrame, n: Int = ShingleN, threshold: Double = 0.6,
       exactMaxRows: Long = 10000, maxBucket: Int = 1000): DataFrame =
     if (atMost(docs, "doc_id", exactMaxRows)) containmentPairs(docs, n, threshold)
     else containmentPairsImpl(docs, n, threshold, maxBucket)
@@ -234,8 +241,9 @@ object Dedup {
   }
 
   def minhashLsh(
-      docs: DataFrame, n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5, maxBucket: Int = 0): DataFrame =
+      docs: DataFrame, n: Int = ShingleN, numHashes: Int = NumHashes,
+      bands: Int = Bands, threshold: Double = JaccardThreshold,
+      maxBucket: Int = 0): DataFrame =
     minhashLshSigned(signatures(docs, n, numHashes), numHashes, bands,
       threshold, maxBucket)
 
@@ -246,8 +254,8 @@ object Dedup {
     * values are the row-local [[signatures]] kernel's, so the pair set
     * (and every downstream oracle) is identical to the unfused form. */
   def minhashLshSigned(
-      sig: DataFrame, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5, maxBucket: Int = 0): DataFrame = {
+      sig: DataFrame, numHashes: Int = NumHashes, bands: Int = Bands,
+      threshold: Double = JaccardThreshold, maxBucket: Int = 0): DataFrame = {
     val rowsPerBand = numHashes / bands
     val bandedAll = bandKeys(sig, bands, rowsPerBand)
     // the bucket-size window partitions exactly like the self-join below,
@@ -303,10 +311,9 @@ object Dedup {
     * one task. The 3-arg form returns −1 above the threshold, which is
     * exactly the rows the 2-arg form's `≤ maxDist` filter dropped —
     * results identical, oracle unchanged. */
-  def fuzzyDedup(docs: DataFrame, maxDist: Int = 8, n: Int = 3,
-      numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5): DataFrame =
-    minhashLsh(docs, n, numHashes, bands, threshold)
+  def fuzzyDedup(docs: DataFrame): DataFrame = {
+    val maxDist = 8
+    minhashLsh(docs)
       .join(docs.select(col("doc_id").as("id_a"), col("text").as("__ta")), "id_a")
       .join(docs.select(col("doc_id").as("id_b"), col("text").as("__tb")), "id_b")
       .where(abs(length(col("__ta")) - length(col("__tb"))) <= maxDist)
@@ -314,6 +321,7 @@ object Dedup {
       .where(col("edit_dist") >= 0)
       .select(col("id_a"), col("id_b"), col("jaccard"),
         col("edit_dist").cast("long").as("edit_dist"))
+  }
 
   /** One-time MinHash signature index over a corpus — the text-dedup
     * analog of [[Similarity.buildIvfIndex]]: sign the corpus ONCE,
@@ -321,8 +329,8 @@ object Dedup {
     * and run every future batch through
     * [[CorpusPipeline.prepareIncrement]] without ever re-reading corpus
     * text. Schema: doc_id, mh0..mh{k-1}, ss. */
-  def buildMinhashIndex(corpus: DataFrame, n: Int = 3,
-      numHashes: Int = 64): DataFrame = signatures(corpus, n, numHashes)
+  def buildMinhashIndex(corpus: DataFrame, n: Int = ShingleN,
+      numHashes: Int = NumHashes): DataFrame = signatures(corpus, n, numHashes)
 
   /** [[dedupAgainst]] probing a PREBUILT signature index with a new
     * batch that is already signed: the corpus text is never touched
@@ -330,8 +338,8 @@ object Dedup {
     * signal scan and probes the index with the same signatures).
     * `numHashes` and `bands` must match the index build. */
   def dedupAgainstIndexSigned(sigIndex: DataFrame, sigNew: DataFrame,
-      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
-      maxBucket: Int = 0): DataFrame =
+      numHashes: Int = NumHashes, bands: Int = Bands,
+      threshold: Double = JaccardThreshold, maxBucket: Int = 0): DataFrame =
     crossSetPairs(sigIndex, sigNew, numHashes, bands, threshold, maxBucket)
 
   /** Incremental near-dup: verified pairs BETWEEN a new batch and an
@@ -341,11 +349,11 @@ object Dedup {
     * buckets the new batch lands in, and no corpus-corpus pair is ever
     * scored. Emits (corpus_id, new_id, jaccard ≥ threshold); feed
     * new_ids into an anti-join to admit only novel documents. */
-  def dedupAgainst(corpus: DataFrame, newDocs: DataFrame, n: Int = 3,
-      numHashes: Int = 64, bands: Int = 16, threshold: Double = 0.5,
+  def dedupAgainst(corpus: DataFrame, newDocs: DataFrame,
       maxBucket: Int = 0): DataFrame =
-    crossSetPairs(signatures(corpus, n, numHashes),
-      signatures(newDocs, n, numHashes), numHashes, bands, threshold, maxBucket)
+    crossSetPairs(signatures(corpus, ShingleN, NumHashes),
+      signatures(newDocs, ShingleN, NumHashes), NumHashes, Bands,
+      JaccardThreshold, maxBucket)
 
   private def crossSetPairs(sigC: DataFrame, sigN: DataFrame,
       numHashes: Int, bands: Int, threshold: Double,
@@ -425,7 +433,7 @@ object Dedup {
       case _ =>
     }
 
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
+  def connectedComponents(pairs: DataFrame,
       localMaxPairs: Long = 1000000L): DataFrame = {
     // symmetric expansion via explode, NOT unionAll of two selects: a
     // union executes the (potentially expensive — minhashLsh) pair DAG
@@ -476,7 +484,7 @@ object Dedup {
       .localCheckpoint(true)
     var converged = false
     var i = 0
-    while (!converged && i < maxIter) {
+    while (!converged && i < 25) {
       val nbrMin = edges
         .join(labels.select(col("id").as("dst"), col("label").as("dlabel")), "dst")
         .groupBy(col("src").as("id")).agg(min(col("dlabel")).as("nmin"))
@@ -535,10 +543,9 @@ object Dedup {
     * pays O(cluster²) candidate pairs inside every clone bucket, while
     * keepers-only LSH sees each cluster once (measured 30× on a 95%-dup
     * corpus; see PLANS.md scale smoke). Pairs are over keeper ids. */
-  def nearDupPipeline(docs: DataFrame, n: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, threshold: Double = 0.5, maxBucket: Int = 0): DataFrame = {
+  def nearDupPipeline(docs: DataFrame): DataFrame = {
     val keepers = exact(docs).select(col("keep_id").as("doc_id"))
-    minhashLsh(docs.join(keepers, "doc_id"), n, numHashes, bands, threshold, maxBucket)
+    minhashLsh(docs.join(keepers, "doc_id"))
   }
 
   /** Benchmark decontamination: corpus documents sharing at least
@@ -547,7 +554,7 @@ object Dedup {
     * by nature, so its hashed shingle set broadcasts and the corpus
     * streams map-only past it; the only exchange is the per-(doc, bench)
     * overlap count. */
-  def contamination(corpus: DataFrame, benchmark: DataFrame, n: Int = 3,
+  def contamination(corpus: DataFrame, benchmark: DataFrame, n: Int = ShingleN,
       minShared: Long = 3): DataFrame = {
     val c = hashedShingles(corpus, n).distinct()
     val b = hashedShingles(benchmark, n).distinct()
@@ -570,7 +577,7 @@ object Dedup {
     * attach each frequent hash's phrase text. The corpus is scanned
     * twice, but scan is the cheap resource at 100 TB; shuffled bytes are
     * the expensive one. */
-  def boilerplate(docs: DataFrame, n: Int = 3, minDocs: Long = 3): DataFrame = {
+  def boilerplate(docs: DataFrame, n: Int = ShingleN, minDocs: Long = 3): DataFrame = {
     val freq = hashedShingles(docs, n).distinct()
       .groupBy(col("h"))
       .agg(count(lit(1)).as("n_docs"))
@@ -642,8 +649,7 @@ object Dedup {
     * past the broadcast side inside whole-stage codegen) — no driver
     * collect, no per-pair expression-tree overhead.
     */
-  def embeddingNearDup(embeddings: DataFrame, threshold: Double = 0.4,
-      dim: Int = 64): DataFrame = {
+  def embeddingNearDup(embeddings: DataFrame, threshold: Double = 0.4): DataFrame = {
     import graft.functions.CosineSimilarity.cosineSim
     val e0 = embeddings
       .select(col("vec_id"), VectorFunctions.toDouble(col("embedding")).as("v"))
@@ -687,8 +693,11 @@ object Dedup {
     }
   }
 
+  /** Span width of [[spanDedup]] and its removal twin [[scrubSpans]]. */
+  private val SpanTokens = 8
+
   /** Span-level (sub-document) exact dedup — the C4-style pass that
-    * document-level dedup misses: fixed `spanTokens`-token windows
+    * document-level dedup misses: fixed 8-token windows
     * (stride = span, no overlap) are hashed, the global first
     * occurrence of each span hash is the lexicographically smallest
     * (doc_id, span_id), and every later occurrence counts as a
@@ -702,7 +711,7 @@ object Dedup {
     * occurrence is a min-struct aggregate, and the dup flags come from
     * re-joining on the hash (co-partitioned with the aggregate). Both
     * sides of the verdict stay O(total spans), never O(text). */
-  def spanDedup(docs: DataFrame, spanTokens: Int = 8): DataFrame = {
+  def spanDedup(docs: DataFrame): DataFrame = {
     // (doc_id, span_id) order packed into one BIGINT so "first
     // occurrence" is a plain min() on any engine (span_id is bounded by
     // the per-doc token count; 10⁹ slots/doc means no real document can
@@ -712,14 +721,14 @@ object Dedup {
       .withColumn("n", size(col("tk")))
       .where(col("n") > 0)
       .withColumn("span_id", explode(sequence(lit(0L),
-        expr(s"CAST((n + $spanTokens - 1) div $spanTokens AS BIGINT)") - 1)))
+        expr(s"CAST((n + $SpanTokens - 1) div $SpanTokens AS BIGINT)") - 1)))
       .select(col("doc_id"), col("span_id"),
         // 1e9 span slots per doc (8e9 tokens at the default span width)
         // — wide enough that no real document can collide into the next
         // doc_id's ord range; doc_ids stay safe below ~9.2e9
         (col("doc_id") * 1000000000L + col("span_id")).as("ord"),
         TextAnalysis.portableHash60(
-          concat_ws(" ", slice(col("tk"), (col("span_id") * spanTokens + 1).cast("int"), lit(spanTokens))))
+          concat_ws(" ", slice(col("tk"), (col("span_id") * SpanTokens + 1).cast("int"), lit(SpanTokens))))
           .as("h"))
     val firstSeen = spans.groupBy(col("h")).agg(min(col("ord")).as("first_ord"))
     spans.join(firstSeen, "h")
@@ -745,17 +754,17 @@ object Dedup {
     * corpus; no window). Docs whose every span was seen earlier
     * elsewhere come out empty (n_spans_kept = 0, text_clean = '') but
     * are KEPT, so attrition stays auditable downstream. */
-  def scrubSpans(docs: DataFrame, spanTokens: Int = 8): DataFrame = {
+  def scrubSpans(docs: DataFrame): DataFrame = {
     val spans = docs
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("tk"))
       .withColumn("n", size(col("tk")))
       .where(col("n") > 0)
       .withColumn("span_id", explode(sequence(lit(0L),
-        expr(s"CAST((n + $spanTokens - 1) div $spanTokens AS BIGINT)") - 1)))
+        expr(s"CAST((n + $SpanTokens - 1) div $SpanTokens AS BIGINT)") - 1)))
       .select(col("doc_id"), col("span_id"),
         (col("doc_id") * 1000000000L + col("span_id")).as("ord"),
         concat_ws(" ", slice(col("tk"),
-          (col("span_id") * spanTokens + 1).cast("int"), lit(spanTokens))).as("txt"))
+          (col("span_id") * SpanTokens + 1).cast("int"), lit(SpanTokens))).as("txt"))
       .withColumn("h", TextAnalysis.portableHash60(col("txt")))
     val firstSeen = spans.groupBy(col("h")).agg(min(col("ord")).as("first_ord"))
     // collect_list skips nulls, so conditioning INSIDE the aggregate
@@ -779,9 +788,9 @@ object Dedup {
     * the exploded pair endpoints; all comparisons run on the ROUNDED
     * jaccard (what [[ngramJaccard]] emits), which the oracle mirrors.
     * Output is one bounded summary row. */
-  def dedupSweep(docs: DataFrame, n: Int = 3,
-      thresholds: Seq[Double] = Seq(0.25, 0.5, 0.75)): DataFrame = {
-    val pairs = ngramJaccard(docs, n, thresholds.min).localCheckpoint()
+  def dedupSweep(docs: DataFrame): DataFrame = {
+    val thresholds = Seq(0.25, 0.5, 0.75)
+    val pairs = ngramJaccard(docs, threshold = thresholds.min).localCheckpoint()
     def pct(t: Double): String = math.round(t * 100).toString
     val pairCols = thresholds.map(t =>
       sum(when(col("jaccard") >= t, 1L).otherwise(0L)).as(s"n_pairs_${pct(t)}"))
@@ -808,7 +817,7 @@ object Dedup {
     * so it measures the exact objects the oracle measures. Three
     * aggregates over the shingle stream, all keyed by source — linear,
     * shuffle bounded by distinct shingles per source. */
-  def redundancy(docs: DataFrame, n: Int = 3): DataFrame = {
+  def redundancy(docs: DataFrame, n: Int = ShingleN): DataFrame = {
     val src = docs.select(col("doc_id"), col("source"))
     val occ = rawShingles(docs, n).join(src, "doc_id")
       .localCheckpoint() // three grains scan it

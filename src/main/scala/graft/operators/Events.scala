@@ -14,6 +14,17 @@ import graft.functions.Exact._
   */
 object Events {
 
+  /** The inactivity gap that closes a session, in minutes: every batch
+    * sessionizer here and the streaming one in
+    * [[graft.streaming.EventStream]] split on it. */
+  private[graft] val SessionGapMinutes = 30
+  private val SessionGapUs = SessionGapMinutes * 60L * 1000000L
+  /** Attribution lookback of [[attributionCard]] and
+    * [[multiTouchAttribution]], in days. */
+  private val LookbackDays = 7
+  /** The default path of [[funnelSteps]] and [[funnelRates]]. */
+  private val FunnelSteps = Seq("signup", "view", "click", "purchase")
+
   /** 1-hour tumbling-window counts/sums per event type. Uses Spark's
     * `window()` — at scale this is a single hash aggregate (window start
     * is a derived column, not a blow-up). */
@@ -26,16 +37,15 @@ object Events {
         col("event_type"), col("cnt"), col("sum_value"))
 
   /** SLIDING (hopping) windows — 1-hour windows every 15 minutes, so
-    * each event lands in windowMin/slideMin = 4 overlapping windows.
+    * each event lands in 60/15 = 4 overlapping windows.
     * Spark's `window(ts, win, slide)` expands the factor-of-4 row
     * multiplication map-side before the one aggregate shuffle (shuffle
     * volume is windows×groups partials, not exploded events). The
     * DuckDB mirror generates the same 4 window starts per event with
     * integer µs arithmetic. */
-  def slidingCounts(events: DataFrame, windowMin: Int = 60,
-      slideMin: Int = 15): DataFrame =
+  def slidingCounts(events: DataFrame): DataFrame =
     events
-      .groupBy(window(col("ts"), s"$windowMin minutes", s"$slideMin minutes").as("w"),
+      .groupBy(window(col("ts"), "60 minutes", "15 minutes").as("w"),
         col("event_type"))
       .agg(count(lit(1)).as("cnt"), moneySum(col("value")).as("sum_value"))
       .select(
@@ -47,10 +57,9 @@ object Events {
     * first (partial-aggregates map-side, shuffle carries pairs not
     * events), then a plain count per window — never a countDistinct
     * buffer over the exploded event stream. */
-  def slidingDistinctUsers(events: DataFrame, windowMin: Int = 60,
-      slideMin: Int = 15): DataFrame =
+  def slidingDistinctUsers(events: DataFrame): DataFrame =
     events
-      .select(window(col("ts"), s"$windowMin minutes", s"$slideMin minutes").as("w"),
+      .select(window(col("ts"), "60 minutes", "15 minutes").as("w"),
         col("user_id"))
       .distinct()
       .groupBy(date_format(col("w.start"), "yyyy-MM-dd HH:mm").as("win_start"))
@@ -58,14 +67,13 @@ object Events {
 
   /** 30-minute-gap sessionization: lag + cumulative-sum session ids, then
     * per-session stats. One shuffle on user_id; both windows share it. */
-  def sessionize(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    val gapMicros = gapMinutes * 60L * 1000000L
+  def sessionize(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("tsu"))
     val withGap = events
       .select(col("user_id"), col("value"), unix_micros(col("ts")).as("tsu"))
       .withColumn("prev", lag(col("tsu"), 1).over(byUser))
       .withColumn("is_new",
-        when(col("prev").isNull || col("tsu") - col("prev") > gapMicros, 1L).otherwise(0L))
+        when(col("prev").isNull || col("tsu") - col("prev") > SessionGapUs, 1L).otherwise(0L))
       .withColumn("session_id", sum(col("is_new")).over(
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     withGap
@@ -84,14 +92,13 @@ object Events {
     * rides the two-level [[Cumulative.runningSum]] scan at the
     * distinct-boundary grain — no global window holds the boundary
     * stream; earliest time at the peak reported (ties stated). */
-  def peakConcurrency(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    val gapMicros = gapMinutes * 60L * 1000000L
+  def peakConcurrency(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("tsu"))
     val sess = events
       .select(col("user_id"), unix_micros(col("ts")).as("tsu"))
       .withColumn("prev", lag(col("tsu"), 1).over(byUser))
       .withColumn("is_new",
-        when(col("prev").isNull || col("tsu") - col("prev") > gapMicros, 1L)
+        when(col("prev").isNull || col("tsu") - col("prev") > SessionGapUs, 1L)
           .otherwise(0L))
       .withColumn("session_id", sum(col("is_new")).over(
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -118,11 +125,11 @@ object Events {
     * when the next event is AT or after gap (window end is exclusive),
     * where the composition uses strictly-greater. Emits per-session
     * stats without a session ordinal (window identity replaces it). */
-  def sessionizeBuiltin(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
+  def sessionizeBuiltin(events: DataFrame): DataFrame = {
     import graft.functions.Exact.moneySum
     events
       .select(col("user_id"), col("ts"), col("value"), unix_micros(col("ts")).as("tsu"))
-      .groupBy(col("user_id"), session_window(col("ts"), s"$gapMinutes minutes"))
+      .groupBy(col("user_id"), session_window(col("ts"), s"$SessionGapMinutes minutes"))
       .agg(count(lit(1)).as("n_events"), moneySum(col("value")).as("sum_value"),
         (max(col("tsu")) - min(col("tsu"))).as("duration_us"))
       .select(col("user_id"), col("n_events"), col("sum_value"), col("duration_us"))
@@ -133,10 +140,10 @@ object Events {
     * partition merged on the driver (k·partitions rows), never a global
     * sort, at any scale. Ties break on (user_id, session_id) so the
     * selected set is a total order both engines agree on. */
-  def topSessions(events: DataFrame, k: Int = 20): DataFrame =
+  def topSessions(events: DataFrame): DataFrame =
     sessionize(events)
       .orderBy(col("sum_value").desc, col("user_id"), col("session_id"))
-      .limit(k)
+      .limit(20)
 
   /** TOP SESSION PATHS — path mining over the sessionized stream: each
     * session collapses to its ordered event-type string ("view>view>
@@ -153,8 +160,7 @@ object Events {
     * co-partitioned after the first shuffle), the path table is
     * session grain, and sort+limit plans as TakeOrderedAndProject —
     * a bounded heap per partition, never a global sort. */
-  def topPaths(events: DataFrame, gapUs: Long = 1800000000L,
-      k: Int = 15): DataFrame = {
+  def topPaths(events: DataFrame, k: Int = 15): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = events.select(col("user_id"), col("event_id"),
       col("event_type"), unix_micros(col("ts")).as("tsu"))
@@ -162,7 +168,7 @@ object Events {
       .orderBy(col("tsu"), col("event_id"))
     val s = e.withColumn("prev", lag(col("tsu"), 1).over(w))
       .withColumn("is_new", when(col("prev").isNull ||
-        col("tsu") - col("prev") > gapUs, 1L).otherwise(0L))
+        col("tsu") - col("prev") > SessionGapUs, 1L).otherwise(0L))
       .withColumn("session_id", sum(col("is_new")).over(w))
     val paths = s.groupBy(col("user_id"), col("session_id"))
       .agg(array_join(transform(
@@ -254,8 +260,7 @@ object Events {
   /** Events inside deterministic "maintenance windows" (first 15 min of
     * every 7th hour) counted per window — exercises [[intervalJoin]]
     * end-to-end with intervals derived from the data itself. */
-  def maintenanceWindowCounts(events: DataFrame,
-      bucketUs: Long = 900000000L): DataFrame = {
+  def maintenanceWindowCounts(events: DataFrame): DataFrame = {
     val e = events.select(col("event_id"), unix_micros(col("ts")).as("tsu"))
     val intervals = e
       .select(expr("tsu div 3600000000").as("h")).distinct()
@@ -263,7 +268,7 @@ object Events {
       .select(col("h").as("interval_id"),
         (col("h") * 3600000000L).as("start_us"),
         (col("h") * 3600000000L + 900000000L).as("end_us"))
-    intervalJoin(e, intervals, bucketUs)
+    intervalJoin(e, intervals, 900000000L)
       .groupBy(col("interval_id"))
       .agg(count(lit(1)).as("n_events"))
   }
@@ -299,9 +304,8 @@ object Events {
     * 100 TB the width of this query is the user count, not the event
     * count. Users who never reach step 1 are absent; later nulls mean
     * the funnel stopped there. */
-  def funnel(events: DataFrame,
-      steps: Seq[String] = Seq("view", "click", "purchase")): DataFrame = {
-    require(steps.length == 3, "funnel is three-step")
+  def funnel(events: DataFrame): DataFrame = {
+    val steps = Seq("view", "click", "purchase")
     val e = events.select(col("user_id"), col("event_type"),
       unix_micros(col("ts")).as("tsu"))
     val s1 = e.where(col("event_type") === steps(0))
@@ -326,7 +330,7 @@ object Events {
     * user who completed step 1, with `first_<step>` columns null-padded
     * past the deepest step reached. */
   def funnelSteps(events: DataFrame,
-      steps: Seq[String] = Seq("signup", "view", "click", "purchase")): DataFrame = {
+      steps: Seq[String] = FunnelSteps): DataFrame = {
     require(steps.length >= 2, "funnelSteps needs at least two steps")
     val e = events.select(col("user_id"), col("event_type"),
       unix_micros(col("ts")).as("tsu"))
@@ -432,8 +436,8 @@ object Events {
     * previous step (step 1 converts from itself = 1.0). One aggregate
     * over the funnel's user-grain output — k counts, k−1 closing
     * divisions. */
-  def funnelRates(events: DataFrame,
-      steps: Seq[String] = Seq("signup", "view", "click", "purchase")): DataFrame = {
+  def funnelRates(events: DataFrame): DataFrame = {
+    val steps = FunnelSteps
     val f = funnelSteps(events, steps)
     val agg = f.agg(
       count(col(s"first_${steps.head}")).as("__n0"),
@@ -464,7 +468,8 @@ object Events {
     * ~3·10⁹), i.e. beyond any per-user event stream; the DuckDB oracle
     * mirrors this with HUGEINT so both engines agree at every
     * magnitude instead of one wrapping while the other raises. */
-  def anomalies(events: DataFrame, k: Int = 3): DataFrame = {
+  def anomalies(events: DataFrame): DataFrame = {
+    val k = 3L
     val e = events.select(col("user_id"), col("event_id"), cents(col("value")).as("v"))
     val vD = col("v").cast("decimal(38,0)")
     val stats = e.groupBy(col("user_id"))
@@ -474,7 +479,7 @@ object Events {
     val dev = col("n") * vD - col("sv")
     e.join(stats, "user_id")
       .where(dev * dev >
-        lit(k.toLong * k) * (col("n") * col("q") - col("sv") * col("sv")))
+        lit(k * k) * (col("n") * col("q") - col("sv") * col("sv")))
       .select(col("user_id"), col("event_id"),
         (col("v").cast("double") / 100.0).as("value"))
   }
@@ -817,8 +822,7 @@ object Events {
     * (tsu, event_id) order, so the NFA simulation is two window
     * columns + a filter — no per-user iteration, no state store.
     * Output per user: episode count, total and mean duration. */
-  def matchEpisodes(events: DataFrame, open: String = "signup",
-      close: String = "purchase", fail: String = "error"): DataFrame = {
+  def matchEpisodes(events: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("tsu"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -826,10 +830,10 @@ object Events {
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("tsu"), col("event_id"))
       .withColumn("last_open",
-        max(when(col("event_type") === open, col("tsu"))).over(w))
+        max(when(col("event_type") === "signup", col("tsu"))).over(w))
       .withColumn("last_fail",
-        max(when(col("event_type") === fail, col("tsu"))).over(w))
-      .where(col("event_type") === close && col("last_open").isNotNull &&
+        max(when(col("event_type") === "error", col("tsu"))).over(w))
+      .where(col("event_type") === "purchase" && col("last_open").isNotNull &&
         (col("last_fail").isNull || col("last_fail") < col("last_open")))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_episodes"),
@@ -847,7 +851,8 @@ object Events {
     * buffers cap at k per task — shuffle O(groups·k), NO per-type rank
     * window over the corpus), and rows at the threshold all survive
     * (ties-included top-3, ≡ rank() ≤ 3). */
-  def deseasonOutliers(events: DataFrame, k: Int = 3): DataFrame = {
+  def deseasonOutliers(events: DataFrame): DataFrame = {
+    val k = 3
     val e = events.select(col("event_type"), col("event_id"),
       unix_micros(col("ts")).as("tsu"), cents(col("value")).as("v"))
       .withColumn("how", expr("(tsu div 3600000000) % 168"))
@@ -926,7 +931,7 @@ object Events {
   }
 
   /** Exact autocorrelation of the gap-filled hourly event-count series
-    * at lags 1..`maxLag` — the seasonality probe read before choosing a
+    * at lags 1..6 — the seasonality probe read before choosing a
     * deseason period or forecast baseline. Silent gaps COUNT: missing
     * hours enter as zeros (the hour grid is a calendar-bounded
     * sequence, never fact-grain), exactly as [[gapFillForward]] models
@@ -943,9 +948,9 @@ object Events {
     *
     * Shape at scale: one hash aggregate collapses the fact table to
     * hour grain; everything after runs on the bounded series (two
-    * 1-row broadcast moments, a ≤maxLag× explode, one equi-join on the
+    * 1-row broadcast moments, a ≤6× explode, one equi-join on the
     * shifted hour). */
-  def acf(events: DataFrame, maxLag: Int = 6): DataFrame = {
+  def acf(events: DataFrame): DataFrame = {
     val hourly = events
       .groupBy(expr("unix_micros(ts) div 3600000000").as("hr"))
       .agg(count(lit(1)).as("x"))
@@ -961,7 +966,7 @@ object Events {
     val den = y.agg(
       sum(col("y").cast("decimal(19,0)") * col("y")).as("den"))
     y.select(col("hr"), col("y"),
-        explode(expr(s"sequence(1, $maxLag)")).as("lg"))
+        explode(expr("sequence(1, 6)")).as("lg"))
       .join(y.select((col("hr")).as("hr2"), col("y").as("y2")),
         col("hr") + col("lg") === col("hr2"))
       .groupBy(col("lg"))
@@ -994,7 +999,7 @@ object Events {
     * under max(), so there is no IGNORE-NULLS ordering to disagree on;
     * a click and a view in the same microsecond resolve to the higher
     * code (view) in both engines by the same integer max. */
-  def attributionCard(events: DataFrame, lookbackDays: Int = 7): DataFrame = {
+  def attributionCard(events: DataFrame, lookbackDays: Int = LookbackDays): DataFrame = {
     val lookbackUs = lookbackDays * 86400000000L
     val u = events
       .filter(col("event_type").isin("click", "view", "purchase"))
@@ -1049,8 +1054,8 @@ object Events {
     * then two windows PARTITIONED BY PURCHASE (per-purchase touch
     * count is bounded by one user's lookback-window activity — never
     * corpus grain), then a ≤3-row channel aggregate. */
-  def multiTouchAttribution(events: DataFrame, lookbackDays: Int = 7): DataFrame = {
-    val lookbackUs = lookbackDays * 86400000000L
+  def multiTouchAttribution(events: DataFrame): DataFrame = {
+    val lookbackUs = LookbackDays * 86400000000L
     val p = events.filter(col("event_type") === "purchase")
       .select(col("user_id").as("pu"), unix_micros(col("ts")).as("ptsu"),
         col("event_id").as("pid"),

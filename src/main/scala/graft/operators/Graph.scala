@@ -227,7 +227,7 @@ object Graph {
     * appears in `nodes` (both routes then emit exactly the reachable
     * subset). */
   def shortestPaths(edges: DataFrame, nodes: DataFrame, sourceExpr: DataFrame,
-      fanout: Int = 3, maxHops: Int = Int.MaxValue,
+      fanout: Int = BackboneFanout, maxHops: Int = Int.MaxValue,
       localMaxEdges: Long = 10000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byW = Window.partitionBy(col("src"))
@@ -303,6 +303,9 @@ object Graph {
       .withColumnRenamed("node", "n_name")
   }
 
+  /** Out-neighbors per node the shortest-path backbones keep by default. */
+  private val BackboneFanout = 3
+
   /** Each node's top-`fanout` out-neighbors by weight (ties by dst
     * name) — the same backbone [[shortestPaths]] traverses, exposed so
     * [[kCore]] peels the identical graph. The row_number window
@@ -322,8 +325,8 @@ object Graph {
     * multi-source generalization of [[shortestPaths]], keyed by
     * (src_node, node) instead of node. Same contract: run TO
     * CONVERGENCE (a round that settles no new pair ends the loop) with
-    * `maxHops` as a cap, over the top-`fanout` backbone. Same size
-    * routing: the backbone is aggregate-grain (≤ |nodes|·fanout rows),
+    * `maxHops` as a cap, over the top-3 backbone. Same size
+    * routing: the backbone is aggregate-grain (≤ |nodes|·3 rows),
     * so below `localMaxEdges` one bounded collect and a driver BFS per
     * source replaces |V| rounds of job scheduling; past it the
     * distributed form relaxes every source SIMULTANEOUSLY — each round
@@ -336,9 +339,8 @@ object Graph {
     * Returns (src_node, node, hops) for reachable pairs, hops ≥ 0
     * (the 0-row is the source itself). */
   def allPairsHops(edges: DataFrame, nodes: DataFrame,
-      fanout: Int = 3, maxHops: Int = Int.MaxValue,
-      localMaxEdges: Long = 10000L): DataFrame = {
-    val sedges = topKBackbone(edges, fanout).localCheckpoint()
+      maxHops: Int = Int.MaxValue, localMaxEdges: Long = 10000L): DataFrame = {
+    val sedges = topKBackbone(edges, BackboneFanout).localCheckpoint()
     // the driver route collects BOTH the backbone and the node list and
     // materializes all reachable pairs driver-side, so gate on whichever
     // is larger — a sparse graph with a huge (mostly isolated) node list

@@ -21,9 +21,9 @@ object MapReduceOps {
     * partial (map-side) aggregation before the single shuffle, so shuffle
     * volume is O(distinct words), not O(tokens) — critical at 100 TB.
     */
-  def wordCount(docs: DataFrame, textCol: String = "text"): DataFrame =
+  def wordCount(docs: DataFrame): DataFrame =
     docs
-      .select(explode(split(col(textCol), "\\s+")).as("word"))
+      .select(explode(split(col("text"), "\\s+")).as("word"))
       .where(col("word") =!= "")
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))

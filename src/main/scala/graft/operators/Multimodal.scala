@@ -221,7 +221,8 @@ object Multimodal {
     * document — 16-bit signed PCM mono sine wave, frame count derived
     * from `n_chars` (oracle-predictable), frequency from the text hash.
     * Written by the JDK's own WAVE encoder. */
-  def syntheticWavs(docs: DataFrame, sampleRate: Int = 8000): DataFrame = {
+  def syntheticWavs(docs: DataFrame): DataFrame = {
+    val sampleRate = 8000
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("doc_id"),

@@ -42,6 +42,8 @@ object QualityModel {
   /** Learning rate: fixed, part of the op's contract (the oracle
     * replays the same constant). */
   private val Lr = 0.5
+  /** Full-batch steps every card and the scorer train with. */
+  private val Iters = 3
   private val NanoScale = 1.0e9
 
   /** Per-doc features, each an exact-integer pair divided ONCE (the
@@ -123,10 +125,10 @@ object QualityModel {
   /** Train and return the model card: one (term, value) row per weight
     * plus the training accuracy and document count, values
     * 6-decimal-floored like every other card. */
-  def trainCard(docs: DataFrame, iters: Int = 3): DataFrame = {
+  def trainCard(docs: DataFrame): DataFrame = {
     import graft.functions.Exact.round6
     val feats = features(docs).persist()
-    val w = train(feats, iters)
+    val w = train(feats, Iters)
     val pFinal = sig(zOf(w))
     feats.agg(
         (sum(when((pFinal >= 0.5) === (col("y") === 1.0), 1L).otherwise(0L)).cast("double")
@@ -156,8 +158,8 @@ object QualityModel {
   /** Train on the corpus, then score it: the composed keep/drop gate.
     * Training happens at DataFrame-construction time (bounded driver
     * loop); the returned plan is the map-only scorer. */
-  def trainAndScore(docs: DataFrame, iters: Int = 3): DataFrame =
-    score(docs, train(features(docs).persist(), iters))
+  def trainAndScore(docs: DataFrame): DataFrame =
+    score(docs, train(features(docs).persist(), Iters))
 
   /** ROC-AUC for the trained classifier — [[calibrationCard]] asks
     * "is the score a rate", this asks "does it RANK": the probability
@@ -170,10 +172,10 @@ object QualityModel {
     * 6-decimal score — one global sort of doc grain (the same cost
     * class as q_sort; at 100 TB pre-aggregate to distinct scores
     * first, which the 10⁶-point score grid bounds). */
-  def aucCard(docs: DataFrame, iters: Int = 3): DataFrame = {
+  def aucCard(docs: DataFrame): DataFrame = {
     import graft.functions.Exact.round6
     val feats = features(docs).persist()
-    val w = train(feats, iters)
+    val w = train(feats, Iters)
     val scored = feats.select(col("y"), round6(sig(zOf(w))).as("p"))
     // distinct-score grain first (bounded by the 10⁶-point score
     // grid), then the audited bucket-monotone running sum — never a
@@ -213,10 +215,10 @@ object QualityModel {
     * bucket; beyond that, pre-scale q to a 10³ grid (same card, 3
     * fewer exact decimals). One aggregate at bucket grain — the card
     * costs a feature scan, map-side combinable all the way. */
-  def calibrationCard(docs: DataFrame, iters: Int = 3): DataFrame = {
+  def calibrationCard(docs: DataFrame): DataFrame = {
     import graft.functions.Exact.round6
     val feats = features(docs).persist()
-    val w = train(feats, iters)
+    val w = train(feats, Iters)
     val scored = feats.select(col("y"), round6(sig(zOf(w))).as("p"))
     scored
       .select(col("y"), floor(col("p") * 1000000.0 + 0.5).cast("long").as("q"))

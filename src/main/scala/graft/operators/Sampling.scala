@@ -30,12 +30,12 @@ object Sampling {
   def hashSplit(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), splitColumn(col("doc_id")).as("split"))
 
-  /** Deterministic 25% sample within each stratum ('4'/16 = 0.25); the
+  /** Deterministic 25% sample within each language ('4'/16 = 0.25); the
     * stratum is part of the salt so strata sample independently. */
-  def stratifiedSample(docs: DataFrame, stratum: String = "lang"): DataFrame =
+  def stratifiedSample(docs: DataFrame): DataFrame =
     docs
-      .where(saltedHex(col("doc_id"), concat(lit(":sample:"), col(stratum)), 1) < "4")
-      .select(col("doc_id"), col(stratum))
+      .where(saltedHex(col("doc_id"), concat(lit(":sample:"), col("lang")), 1) < "4")
+      .select(col("doc_id"), col("lang"))
 
   /** Weighted Bernoulli sample: keep each row with probability
     * weight/max(weight) — the "sample good documents more" primitive
@@ -74,13 +74,13 @@ object Sampling {
     * prunes to (id, source). Sources absent from `rates` keep
     * `defaultRate`. */
   def mixtureSample(docs: DataFrame, rates: Map[String, Double],
-      sourceCol: String = "source", defaultRate: Double = 1.0): DataFrame = {
+      defaultRate: Double = 1.0): DataFrame = {
     val rate = rates.foldLeft(lit(defaultRate)) { case (acc, (src, r)) =>
-      when(col(sourceCol) === src, lit(r)).otherwise(acc)
+      when(col("source") === src, lit(r)).otherwise(acc)
     }
     val draw = orderHash(col("doc_id"), ":mix").cast("double") /
       lit(1152921504606846976.0)
-    docs.select(col("doc_id"), col(sourceCol))
+    docs.select(col("doc_id"), col("source"))
       .where(draw < rate)
   }
 
@@ -120,23 +120,21 @@ object Sampling {
     * corpus and cut every `budget` tokens". seq_id = offset div budget;
     * consecutive seq_ids are contiguous token ranges, so a writer can
     * partition by seq_id and stream sequences out. */
-  def packSequences(docs: DataFrame, budget: Long = 2048,
-      salt: String = ":pack"): DataFrame = {
+  def packSequences(docs: DataFrame, budget: Long = 2048): DataFrame = {
     val sized = docs.select(col("doc_id"),
       size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
-    prefixSum(sized, "doc_id", "n_tokens", salt)
+    prefixSum(sized, "doc_id", "n_tokens", ":pack")
       .select(col("doc_id"), col("n_tokens"), col("global_start"),
         expr(s"global_start div $budget").as("seq_id"))
   }
 
   /** Deterministic seeded global shuffle for training order: a dense
-    * 0-based position in md5(id+salt) order, plus the shard it lands
+    * 0-based position in md5(id + ":shuffle") order, plus the shard it lands
     * in at `shardSize` rows per shard. Same two-level prefix-sum —
     * no single-partition row_number over the corpus. */
-  def shuffleOrder(docs: DataFrame, shardSize: Long = 1000,
-      salt: String = ":shuffle"): DataFrame = {
+  def shuffleOrder(docs: DataFrame, shardSize: Long = 1000): DataFrame = {
     val ones = docs.select(col("doc_id"), lit(1L).as("one"))
-    prefixSum(ones, "doc_id", "one", salt)
+    prefixSum(ones, "doc_id", "one", ":shuffle")
       .select(col("doc_id"), col("global_start").as("pos"),
         expr(s"global_start div $shardSize").as("shard"))
   }
@@ -153,14 +151,14 @@ object Sampling {
     * consumer reads slot order — gaps are harmless and deterministic).
     * Scale shape: two prefix-sum scans + a union; nothing global. */
   def interleave(a: DataFrame, b: DataFrame, ratioA: Int = 3,
-      ratioB: Int = 1, salt: String = ":shuffle"): DataFrame = {
+      ratioB: Int = 1): DataFrame = {
     require(ratioA > 0 && ratioB > 0, "interleave ratios must be positive")
     val period = (ratioA + ratioB).toLong
-    val sa = shuffleOrder(a, salt = salt)
+    val sa = shuffleOrder(a)
       .select(col("doc_id"), lit("a").as("side"),
         (expr(s"pos div $ratioA") * period +
           pmod(col("pos"), lit(ratioA.toLong))).as("slot"))
-    val sb = shuffleOrder(b, salt = salt)
+    val sb = shuffleOrder(b)
       .select(col("doc_id"), lit("b").as("side"),
         (expr(s"pos div $ratioB") * period + ratioA +
           pmod(col("pos"), lit(ratioB.toLong))).as("slot"))
@@ -193,27 +191,24 @@ object Sampling {
   /** Temperature-scaled stratum rebalancing — the multilingual-LM
     * "alpha sampling" knob (sample stratum i with probability ∝
     * pᵢ^α instead of its natural share pᵢ), realized as a per-row
-    * Bernoulli keep with rate (n_min/nᵢ)^(1-α): the rarest stratum
-    * keeps everything, a stratum 10× larger keeps √(1/10) ≈ 32% at
-    * the default α = 0.5 — flattening the mix toward uniform without
+    * Bernoulli keep with rate (n_min/nᵢ)^(1-α) at α = 0.5 per
+    * language: the rarest language keeps everything, one 10× larger
+    * keeps √(1/10) ≈ 32% — flattening the mix toward uniform without
     * upsampling (no row is duplicated, so downstream dedup/packing
     * stay exact).
     *
-    * Cross-engine exactness holds at α = 0.5 because the rate is then
+    * Cross-engine exactness holds because the rate is
     * sqrt(n_min/nᵢ) and IEEE-754 requires sqrt and divide to be
-    * correctly rounded — the same double on every engine. Other α go
-    * through pow(), which is only 1-ulp-accurate and may differ across
-    * libm builds; use them for real runs, not oracle comparisons.
+    * correctly rounded — the same double on every engine.
     *
     * Scale shape: one 2-column count aggregate, a ≤|strata|-row
     * broadcast back, and a map-only filter — the 100 TB corpus is
     * scanned once and never shuffled. */
-  def temperatureSample(docs: DataFrame, alpha: Double = 0.5,
-      stratumCol: String = "lang"): DataFrame = {
+  def temperatureSample(docs: DataFrame): DataFrame = {
+    val stratumCol = "lang"
     val counts = docs.groupBy(col(stratumCol)).agg(count(lit(1)).as("n_stratum"))
     val nMin = counts.agg(min(col("n_stratum")).as("n_min"))
-    val ratio = col("n_min").cast("double") / col("n_stratum").cast("double")
-    val rate = if (alpha == 0.5) sqrt(ratio) else pow(ratio, 1.0 - alpha)
+    val rate = sqrt(col("n_min").cast("double") / col("n_stratum").cast("double"))
     val draw = orderHash(col("doc_id"), ":temp").cast("double") /
       lit(1152921504606846976.0)
     docs.select(col("doc_id"), col(stratumCol))
@@ -223,7 +218,7 @@ object Sampling {
       .select(col("doc_id"), col(stratumCol))
   }
 
-  /** Per-group cap: keep at most k docs per group, chosen by smallest
+  /** Per-source cap: keep at most k docs per source, chosen by smallest
     * salted hash — i.e. a uniform without-replacement draw of k per
     * group, deterministic under re-runs and engine swaps. The
     * "no source dominates the mix" guard that runs right before
@@ -241,15 +236,14 @@ object Sampling {
     * sort-based aggregation past ~128 distinct groups per task), and
     * deleted — the built-in plan IS the bounded top-k, spec-pinned via
     * the WindowGroupLimit node in `Round4SamplingSpec`. */
-  def capPerGroup(docs: DataFrame, k: Int,
-      groupCol: String = "source"): DataFrame = {
+  def capPerGroup(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val h = orderHash(col("doc_id"), ":cap")
-    docs.select(col(groupCol), h.as("h"), col("doc_id"))
+    docs.select(col("source"), h.as("h"), col("doc_id"))
       .withColumn("rn", row_number().over(
-        Window.partitionBy(col(groupCol)).orderBy(col("h"), col("doc_id"))))
+        Window.partitionBy(col("source")).orderBy(col("h"), col("doc_id"))))
       .where(col("rn") <= k)
-      .select(col("doc_id"), col(groupCol))
+      .select(col("doc_id"), col("source"))
   }
 
   /** LEAKAGE-SAFE split: near-duplicate documents must land in the
@@ -282,9 +276,8 @@ object Sampling {
     * emitted double is a correctly-rounded function of exact integers
     * — engine-identical. */
   def epochPlanWeighted(docs: DataFrame, targetTokens: Long = 1000000L,
-      weights: Map[String, Double] = Map.empty,
-      defaultWeight: Double = 1.0): DataFrame = {
-    val w = weights.foldLeft(lit(defaultWeight)) { case (acc, (src, x)) =>
+      weights: Map[String, Double] = Map.empty): DataFrame = {
+    val w = weights.foldLeft(lit(1.0)) { case (acc, (src, x)) =>
       when(col("source") === src, lit(x)).otherwise(acc)
     }
     val inv = docs
@@ -367,8 +360,8 @@ object Sampling {
     * boundaries are the hex prefixes at i·256/k (k=5 → '33' '66' '99'
     * 'cc': 51/51/51/51/52 of 256 — deterministic, approximately equal,
     * and literally mirrorable in any engine with md5). */
-  def kfoldLeakSafe(docs: DataFrame, pairs: DataFrame, k: Int = 5): DataFrame = {
-    require(k >= 2 && k <= 256, "kfoldLeakSafe: k in [2, 256]")
+  def kfoldLeakSafe(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val k = 5
     val comp = graft.operators.Dedup.connectedComponents(pairs)
     val rooted = docs.join(comp, docs("doc_id") === comp("id"), "left")
       .select(docs("doc_id"),

@@ -196,10 +196,9 @@ object Similarity {
     * [[ivfSearch]]. Rebuilding the assignment per query batch (what a
     * monolithic IVF call does) costs more than brute force until the
     * query count is large; the index is what makes IVF pay at scale. */
-  def buildIvfIndex(embeddings: DataFrame, nCells: Int = 16,
-      refinePasses: Int = 1): IvfIndex = {
+  def buildIvfIndex(embeddings: DataFrame, nCells: Int = 16): IvfIndex = {
     val e = prepared(embeddings)
-    val centroids = coarseCentroids(e, nCells, refinePasses)
+    val centroids = coarseCentroids(e, nCells)
     IvfIndex(assignCells(e, centroids, "vec_id", 1), centroids)
   }
 
@@ -292,10 +291,9 @@ object Similarity {
     * BUILD-TIME only (one pass at index construction, the price FAISS
     * pays too); the SEARCH path below stays on native codegen'd
     * expressions. */
-  def buildIvfIndexQ(embeddings: DataFrame, nCells: Int = 16,
-      refinePasses: Int = 1): IvfQIndex = {
+  def buildIvfIndexQ(embeddings: DataFrame, nCells: Int = 16): IvfQIndex = {
     val e = prepared(embeddings)
-    val centroids = coarseCentroids(e, nCells, refinePasses)
+    val centroids = coarseCentroids(e, nCells)
     val resid = residualsQ(e, centroids)
     val scales = residScalesQ(resid)
     IvfQIndex(encodeQ(resid, scales), centroids, scales)
@@ -430,9 +428,9 @@ object Similarity {
     * pair carries its exact cosine, so results are a subset of
     * Dedup.embeddingNearDup at the same threshold. */
   def semanticDedup(embeddings: DataFrame, threshold: Double = 0.4,
-      nCells: Int = 16, refinePasses: Int = 1): DataFrame = {
+      nCells: Int = 16): DataFrame = {
     val e = prepared(embeddings)
-    val assigned = assignCells(e, coarseCentroids(e, nCells, refinePasses), "vec_id", 1)
+    val assigned = assignCells(e, coarseCentroids(e, nCells), "vec_id", 1)
     // intra-cell pair scoring: the self-join key is the cell, so the
     // cross product never leaves a cell
     assigned.as("a")
@@ -446,10 +444,10 @@ object Similarity {
 
   /** LSH-bucketed ANN: queries score only vectors in their own bucket.
     * Approximate by construction (recall < 1 across bucket boundaries);
-    * nPlanes trades recall vs bucket size. */
-  def lshAnn(embeddings: DataFrame, maxQueryId: Long, k: Int, nPlanes: Int = 4,
-      dim: Int = 64): DataFrame = {
-    val e = prepared(embeddings).withColumn("bucket", lshBucket(col("v"), nPlanes, dim))
+    * four 64-dimensional hyperplanes: more planes trade recall for
+    * smaller buckets. */
+  def lshAnn(embeddings: DataFrame, maxQueryId: Long, k: Int): DataFrame = {
+    val e = prepared(embeddings).withColumn("bucket", lshBucket(col("v"), 4, 64))
     val q = e.where(col("vec_id") < maxQueryId)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("bucket").as("qbucket"))
@@ -468,10 +466,9 @@ object Similarity {
     * replayed round by round in the DuckDB mirror ([[kmeansOracleSql]]),
     * making this the third iteratively-fitted, value-verified model
     * after BPE (8 greedy rounds) and the 1-pass IVF quantizer. */
-  def kmeansCentroids(embeddings: DataFrame, nCells: Int = 8,
-      refinePasses: Int = 2): DataFrame = {
+  def kmeansCentroids(embeddings: DataFrame, nCells: Int = 8): DataFrame = {
     val e = prepared(embeddings)
-    val cents = coarseCentroids(e, nCells, refinePasses)
+    val cents = coarseCentroids(e, nCells, KmeansPasses)
     val members = assignCells(e, cents, "vec_id", 1)
       .groupBy(col("cell_id")).agg(count(lit(1)).as("n_members"))
     cents.join(members, Seq("cell_id"), "left")
@@ -828,12 +825,15 @@ object Similarity {
          $joins"""
   }
 
+  /** Lloyd passes of [[kmeansCentroids]] and its mirror. */
+  private val KmeansPasses = 2
+
   /** DuckDB mirror for [[kmeansCentroids]]: seeds → `refinePasses` ×
     * (assign + fixed-point mean) → final assignment counts, generated
     * CTE-per-pass like the BPE oracle. Arithmetic is operand-for-operand
     * the Spark side's (md5-derived seed order, 2^30 scaled-long sums,
     * cosine with smallest-cell tie-break). */
-  def kmeansOracleSql(nCells: Int = 8, refinePasses: Int = 2): String = {
+  def kmeansOracleSql(nCells: Int = 8, refinePasses: Int = KmeansPasses): String = {
     def assignCte(name: String, from: String) =
       s"""$name AS (SELECT vec_id, v, cell_id FROM (
             SELECT e.vec_id, e.v, c.cell_id,
@@ -965,10 +965,9 @@ object Similarity {
   /** Driver entry: DBSCAN of the embedding corpus under cos ≥ τ, pair
     * mine via the size-routed [[graft.operators.Dedup.embeddingDedup]]
     * ladder (exact at this surface; SemDeDup cells past it). */
-  def dbscanEmbeddings(embeddings: DataFrame, minCos: Double = 0.4,
-      minPts: Int = 3): DataFrame =
+  def dbscanEmbeddings(embeddings: DataFrame, minPts: Int = 3): DataFrame =
     dbscan(embeddings.select(col("vec_id")),
-      graft.operators.Dedup.embeddingDedup(embeddings, minCos)
+      graft.operators.Dedup.embeddingDedup(embeddings)
         .select(col("id_a"), col("id_b")),
       minPts)
 
@@ -1030,8 +1029,8 @@ object Similarity {
     * end-to-end in SQL; integer hit counts, one exact division. A
     * params/data change that silently costs recall moves the card and
     * fails the gate loudly — measured, not assumed. */
-  def annRecall(embeddings: DataFrame, maxQueryId: Long = 5,
-      k: Int = 10): DataFrame = {
+  def annRecall(embeddings: DataFrame): DataFrame = {
+    val (maxQueryId, k) = (5L, 10)
     // empty-partition tolerance: the IVF build requires ≥1 vector to
     // seed centroids; a recall card over nothing is the empty card
     if (embeddings.isEmpty) {
@@ -1230,31 +1229,31 @@ object Similarity {
     * are 6-decimal-floored BEFORE ranking so the argmax replays
     * identically in any engine; ties break by neighbor id. */
   def mmrRerank(embeddings: DataFrame, maxQueryId: Long = 5,
-      kCand: Int = 10, kOut: Int = 5,
-      lam: Double = 0.7, lamC: Double = 0.3): DataFrame =
+      kCand: Int = 10, kOut: Int = 5): DataFrame =
     mmrRerankFrom(
       bruteForceTopK(embeddings, maxQueryId, kCand)
         .select(col("query_id"), col("neighbor_id"), col("cos").as("rel")),
-      embeddings, kOut, lam, lamC)
+      embeddings, kOut)
 
   /** The 100× form of [[mmrRerank]]: candidates from the IVF index
     * scan instead of the exact pass — same greedy, same bounded
     * per-query rerank; only the candidate source pays corpus cost. */
-  def mmrRerankIvf(embeddings: DataFrame, maxQueryId: Long = 5,
-      kCand: Int = 10, kOut: Int = 5): DataFrame =
+  def mmrRerankIvf(embeddings: DataFrame): DataFrame =
     mmrRerankFrom(
-      ivfAnn(embeddings, maxQueryId, kCand)
+      ivfAnn(embeddings, 5, 10)
         .select(col("query_id"), col("neighbor_id"), col("cos").as("rel")),
-      embeddings, kOut, 0.7, 0.3)
+      embeddings)
 
   /** Greedy MMR over an arbitrary candidate table (query_id,
     * neighbor_id, rel) — the rerank is candidate-source-agnostic:
     * exact top-k, IVF, or any external retriever feed the same
-    * selection. */
+    * selection. λ = 0.7 and its complement 0.3 are separate literals
+    * (see [[mmrRerank]]). */
   def mmrRerankFrom(candidates: DataFrame, embeddings: DataFrame,
-      kOut: Int = 5, lam: Double = 0.7, lamC: Double = 0.3): DataFrame = {
+      kOut: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.Exact.round6
+    val (lam, lamC) = (0.7, 0.3)
     val cand = candidates.localCheckpoint() // referenced by every step
     val e = prepared(embeddings)
     val ce = cand.join(e, col("neighbor_id") === col("vec_id"))

@@ -51,17 +51,16 @@ object Skew {
 
   /** Two-stage salted aggregation for skewed group keys: stage 1
     * aggregates (key, salt) partials so a hot key's rows spread over
-    * `saltFactor` reducers; stage 2 combines the ≤ saltFactor partials
+    * 8 reducers; stage 2 combines the ≤ 8 partials
     * per key. Count and integer-cents sum combine exactly, so the
     * result is identical to the unsalted aggregate under any salt —
     * which is what its oracle (a plain GROUP BY) verifies. Spark's own
     * partial aggregation usually makes this unnecessary; the explicit
     * form is for skew that survives map-side combine (many partitions
     * all feeding one hot reducer key). */
-  def saltedAgg(df: DataFrame, key: String, valueCol: String,
-      saltFactor: Int = 8): DataFrame = {
+  def saltedAgg(df: DataFrame, key: String, valueCol: String): DataFrame = {
     import graft.functions.Exact.cents
-    df.withColumn("__salt", saltColumn(saltFactor))
+    df.withColumn("__salt", saltColumn(8))
       .groupBy(col(key), col("__salt"))
       .agg(count(lit(1)).as("pc"), sum(cents(col(valueCol))).as("ps"))
       .groupBy(col(key))

@@ -223,17 +223,16 @@ object TextAnalysis {
     "\\+?[0-9][0-9() -]{6,}[0-9]" -> "<PHONE>",
     "[0-9]+" -> "<NUM>")
 
-  /** Apply redaction rules in order — one chained, codegen'd
+  /** Apply [[PiiRules]] in order — one chained, codegen'd
     * regexp_replace pipeline, map-only over the corpus. */
-  def redactColumn(c: Column, rules: Seq[(String, String)] = PiiRules): Column =
-    rules.foldLeft(c) { case (acc, (pat, tag)) => regexp_replace(acc, pat, tag) }
+  def redactColumn(c: Column): Column =
+    PiiRules.foldLeft(c) { case (acc, (pat, tag)) => regexp_replace(acc, pat, tag) }
 
   /** Redaction pass over a keyed text column: redacted text plus the
     * redaction count (tags emitted), the audit number a compliance
     * pipeline wants per document. No shuffle. */
-  def redact(df: DataFrame, id: String, text: String,
-      rules: Seq[(String, String)] = PiiRules): DataFrame = {
-    val red = redactColumn(col(text), rules)
+  def redact(df: DataFrame, id: String, text: String): DataFrame = {
+    val red = redactColumn(col(text))
     df.select(col(id), red.as("redacted"),
       size(regexp_extract_all(red, lit("<[A-Z]+>"), lit(0))).cast("long")
         .as("n_redactions"))
@@ -325,9 +324,9 @@ object TextAnalysis {
     * arithmetic — no float chunk counts), slice the token array per
     * chunk. Emits the chunk's token count and content hash; sliced
     * text never rides a shuffle. */
-  def chunk(docs: DataFrame, chunkSize: Int = 64, overlap: Int = 16): DataFrame = {
+  def chunk(docs: DataFrame): DataFrame = {
+    val (chunkSize, overlap) = (64, 16)
     val stride = chunkSize - overlap
-    require(stride > 0, "overlap must be smaller than chunkSize")
     docs.select(col("doc_id"), tokens(col("text")).as("tk"))
       .withColumn("n", size(col("tk")))
       .where(col("n") > 0)
@@ -416,7 +415,7 @@ object TextAnalysis {
     * the SAME aggregation (a conditional sum), so the target slice
     * costs no second scan. No text ever rides an exchange. */
   def importanceWeights(docs: DataFrame, targetPred: Column,
-      nBuckets: Int = 4096): DataFrame =
+      nBuckets: Int = ImportanceBuckets): DataFrame =
     importanceWeightsRaw(docs, targetPred, nBuckets)
       .select(col("doc_id"), col("n_feats"),
         graft.functions.Exact.round6(
@@ -431,9 +430,8 @@ object TextAnalysis {
     * cannot wrap — no double average is ever formed, so both engines
     * agree at every boundary. Plan shape = [[importanceWeights]] plus
     * ONE extra 1-row aggregate broadcast. */
-  def importanceSelect(docs: DataFrame, targetPred: Column,
-      nBuckets: Int = 4096): DataFrame = {
-    val perDoc = importanceWeightsRaw(docs, targetPred, nBuckets)
+  def importanceSelect(docs: DataFrame, targetPred: Column): DataFrame = {
+    val perDoc = importanceWeightsRaw(docs, targetPred, ImportanceBuckets)
     // sum IN decimal, not cast-after-sum: Σr_sum ≈ 10⁶·total bigrams
     // wraps int64 near ~10 TB of text if accumulated as long
     val totals = perDoc.agg(
@@ -449,6 +447,9 @@ object TextAnalysis {
 
   /** [[importanceWeights]] before the final score projection: per-doc
     * exact (n_feats, r_sum) longs. */
+  /** Hash buckets of [[importanceWeights]] and [[importanceSelect]]. */
+  private val ImportanceBuckets = 4096
+
   private def importanceWeightsRaw(docs: DataFrame, targetPred: Column,
       nBuckets: Int): DataFrame = {
     val inst = docs
@@ -480,7 +481,7 @@ object TextAnalysis {
     * scores per language — never a full-corpus window); equal scores
     * land in the same bucket by construction, and every comparison is
     * on doubles both engines derive identically from exact integers. */
-  def ccnetBuckets(docs: DataFrame, minCount: Long = 2): DataFrame = {
+  def ccnetBuckets(docs: DataFrame): DataFrame = {
     // the scored relation feeds the value-count table, the per-lang
     // totals AND the final assignment — materialized once
     // (localCheckpoint, the pcaSolve pattern), the LM-score subtree
@@ -490,7 +491,7 @@ object TextAnalysis {
     // checkpoint tradeoffs apply: the call is eager, the blocks live
     // until the returned plan is GC'd, lineage is not recomputable
     // under executor loss
-    val scored = lmScore(docs, minCount)
+    val scored = lmScore(docs)
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
       .select(col("doc_id"), col("lang"), col("lm_score"))
       .localCheckpoint()
@@ -517,7 +518,7 @@ object TextAnalysis {
     * rules are omitted: this corpus carries no newlines); every
     * threshold compares CROSS-MULTIPLIED INTEGERS, never a double
     * ratio, so each boolean is engine-exact:
-    *  - word count within [minWords, maxWords];
+    *  - word count within [minWords, 100000];
     *  - mean word length within [3, 10] chars (3·nw ≤ Σlen ≤ 10·nw);
     *  - symbol-to-word ratio below 10% (10·(#'#' + #'...') < nw);
     *  - >80% of words contain a letter (5·nAlpha > 4·nw);
@@ -525,7 +526,6 @@ object TextAnalysis {
     * Map-only projection (one pass, no shuffle); `pass` is the
     * conjunction. */
   def gopherRules(docs: DataFrame, minWords: Int = 50,
-      maxWords: Int = 100000,
       stops: Seq[String] =
         Seq("the", "be", "to", "of", "and", "that", "have", "with"))
       : DataFrame = {
@@ -543,7 +543,7 @@ object TextAnalysis {
           .as("nstop"))
     base.select(
       col("doc_id"),
-      col("nw").between(minWords, maxWords).as("r_word_count"),
+      col("nw").between(minWords, 100000).as("r_word_count"),
       (col("swl") >= col("nw") * 3 && col("swl") <= col("nw") * 10)
         .as("r_mean_word_len"),
       (col("nsym") * 10 < col("nw")).as("r_symbol_ratio"),
@@ -674,11 +674,12 @@ object TextAnalysis {
     * shifts rides every row. Everything here is sketch-grain (≤ k
     * rows per cohort — metadata, never data): the always-fresh
     * "did the value distribution move" gate at 100 TB costs exactly
-    * what the sketch MV already paid. */
-  def decileShiftCard(sample: DataFrame, cohortCol: String,
-      refCohort: Long = 0L, curCohort: Long = 1L): DataFrame = {
+    * what the sketch MV already paid. Cohort 0 is the reference,
+    * cohort 1 the current one. */
+  def decileShiftCard(sample: DataFrame, cohortCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.Exact.round6
+    val (refCohort, curCohort) = (0L, 1L)
     val s = sample.select(col(cohortCol).cast("long").as("c"), col("val"))
     val n = s.groupBy(col("c")).agg(count(lit(1)).as("n"))
     val nRef = n.where(col("c") === refCohort).select(col("n").as("n_ref"))
@@ -746,7 +747,7 @@ object TextAnalysis {
     * counts, two closing divisions, and the flag compares the ROUNDED
     * ratio (the cross-engine comparison idiom) — emitted as 0/1. Pure
     * map-only scan. */
-  def codeSignals(docs: DataFrame, symThreshold: Double = 0.01): DataFrame = {
+  def codeSignals(docs: DataFrame): DataFrame = {
     import graft.functions.Exact.round6
     val base = docs.select(col("doc_id"),
       greatest(length(col("text")), lit(1)).as("nc"),
@@ -755,7 +756,7 @@ object TextAnalysis {
     base.select(col("doc_id"),
       round6(col("sym").cast("double") / col("nc")).as("sym_ratio"),
       round6(col("dig").cast("double") / col("nc")).as("digit_ratio"),
-      when(round6(col("sym").cast("double") / col("nc")) >= symThreshold, 1L)
+      when(round6(col("sym").cast("double") / col("nc")) >= 0.01, 1L)
         .otherwise(0L).as("is_code"))
   }
 
@@ -920,16 +921,24 @@ object TextAnalysis {
     * closing floor). Ranking ties break on doc_id; the rank key is the
     * ROUNDED score, so a last-ulp ln() divergence cannot reorder the
     * top-k across engines. */
-  def bm25(docs: DataFrame, query: Seq[String], k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def bm25(docs: DataFrame, query: Seq[String], k: Int = Bm25K): DataFrame = {
     require(query.nonEmpty, "bm25: empty query")
     val toks = docs.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
     val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val tf = toks.where(col("term").isin(query: _*))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-    bm25From(tf, dl, stats, query, k, k1, b)
+    bm25From(tf, dl, stats, query, k, Bm25K1, Bm25B)
   }
+
+  /** BM25's defaults, shared by every scoring form and its DuckDB
+    * mirror: the hit count, term-frequency saturation `k1` and length
+    * normalisation `b`. */
+  private val Bm25K = 10
+  private val Bm25K1 = 1.2
+  private val Bm25B = 0.75
+  /** Query terms [[moreLikeThis]] and [[mltOracleSql]] pick by default. */
+  private val MltTopTerms = 8
 
   /** MORE-LIKE-THIS — rank the rest of the corpus by similarity to ONE
     * document, with the query DERIVED FROM THE DOCUMENT ITSELF (the
@@ -949,8 +958,8 @@ object TextAnalysis {
     * VARCHAR collation share (Scala's default String sort is UTF-16
     * code-unit order, which diverges on supplementary-plane
     * characters — so the sort here is explicit). */
-  def moreLikeThis(docs: DataFrame, queryDocId: Long, topTerms: Int = 8,
-      k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def moreLikeThis(docs: DataFrame, queryDocId: Long,
+      topTerms: Int = MltTopTerms, k: Int = Bm25K): DataFrame = {
     require(topTerms >= 1, s"moreLikeThis: topTerms must be >= 1: $topTerms")
     val toks = docs.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
     val qterms = toks.where(col("doc_id") === queryDocId)
@@ -977,7 +986,7 @@ object TextAnalysis {
     import scala.math.Ordering.Implicits.seqOrdering
     val utf8 = picked.sortBy(
       _.getBytes(java.nio.charset.StandardCharsets.UTF_8).map(_ & 0xff).toSeq)
-    bm25(docs.where(col("doc_id") =!= queryDocId), utf8, k, k1, b)
+    bm25(docs.where(col("doc_id") =!= queryDocId), utf8, k)
   }
 
   /** DuckDB mirror for [[moreLikeThis]]: the term pick (same idf over
@@ -988,8 +997,7 @@ object TextAnalysis {
     * literal 0.0, and `x + 0.0 = x` exactly for the strictly positive
     * BM25 parts, so the present-only sequential sum is the identical
     * double. */
-  def mltOracleSql(queryDocId: Long, topTerms: Int = 8, k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75): String =
+  def mltOracleSql(queryDocId: Long): String =
     s"""WITH toks AS (SELECT doc_id, word AS term
              FROM (SELECT doc_id, unnest(regexp_split_to_array(text, '\\s+')) AS word
                    FROM documents)
@@ -1007,23 +1015,23 @@ object TextAnalysis {
                          / (CAST(df AS DOUBLE) + 0.5) + 1.0)
                         * CAST(qtf AS DOUBLE) AS w
                FROM qt JOIN dfq USING (term), rstats)
-             ORDER BY w DESC, term ASC LIMIT $topTerms),
+             ORDER BY w DESC, term ASC LIMIT $MltTopTerms),
          tf AS (SELECT doc_id, term, count(*) AS tf
                 FROM rest JOIN picked USING (term) GROUP BY doc_id, term),
          dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
          parts AS (SELECT tf.doc_id, tf.term,
                 ln((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
                    / (CAST(df AS DOUBLE) + 0.5) + 1.0)
-                * (CAST(tf AS DOUBLE) * ($k1 + 1.0))
-                / (CAST(tf AS DOUBLE) + $k1 * ((1.0 - $b)
-                   + $b * (CAST(dl AS DOUBLE)
+                * (CAST(tf AS DOUBLE) * ($Bm25K1 + 1.0))
+                / (CAST(tf AS DOUBLE) + $Bm25K1 * ((1.0 - $Bm25B)
+                   + $Bm25B * (CAST(dl AS DOUBLE)
                            / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))))) AS part
            FROM tf JOIN dft USING (term) JOIN rdl USING (doc_id), rstats),
          sc AS (SELECT doc_id,
                 list_reduce(list(part ORDER BY term), (a, b) -> a + b) AS s0
            FROM parts GROUP BY doc_id)
          SELECT doc_id, floor(s0 * 1000000.0 + 0.5) / 1000000.0 AS score
-         FROM sc ORDER BY score DESC, doc_id LIMIT $k"""
+         FROM sc ORDER BY score DESC, doc_id LIMIT $Bm25K"""
 
   /** Posting-list grain for the durable index: `(doc_id, term, tf)` —
     * identical to [[bm25]]'s tf aggregate WITHOUT the query-term
@@ -1040,11 +1048,10 @@ object TextAnalysis {
     * corpus stats are stored artifacts — per query the corpus is
     * never re-tokenized; cost is postings-of-terms, not corpus scan.
     * Same scoring tail as the direct form, so results are EQUAL. */
-  def bm25Indexed(idx: TextIndex, query: Seq[String], k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def bm25Indexed(idx: TextIndex, query: Seq[String], k: Int = Bm25K): DataFrame = {
     require(query.nonEmpty, "bm25Indexed: empty query")
     bm25From(idx.postings.where(col("term").isin(query: _*)),
-      idx.dl, idx.stats, query, k, k1, b)
+      idx.dl, idx.stats, query, k, Bm25K1, Bm25B)
   }
 
   /** A committed inverted text index's three parts: posting lists
@@ -1076,8 +1083,7 @@ object TextAnalysis {
     * the adjacency fold is integer, the scoring tail is [[bm25]]'s
     * (fixed-order, 6-decimal-floored rank key), so the DuckDB
     * list_contains mirror ([[bm25PhraseOracleSql]]) hash-matches. */
-  def bm25Phrase(docs: DataFrame, phrase: Seq[String], k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def bm25Phrase(docs: DataFrame, phrase: Seq[String], k: Int = Bm25K): DataFrame = {
     require(phrase.size >= 2, "bm25Phrase: a phrase needs >= 2 terms")
     val toks = docs.select(col("doc_id"),
       posexplode(tokens(col("text"))).as(Seq("pos", "term")))
@@ -1087,7 +1093,7 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("term"))
       .agg(sort_array(collect_list(col("pos"))).as("positions"))
     bm25From(phraseTf(pos, phrase), dl, stats,
-      Seq(phrase.mkString(" ")), k, k1, b)
+      Seq(phrase.mkString(" ")), k, Bm25K1, Bm25B)
   }
 
   /** [[bm25Phrase]] served from a POSITIONAL index
@@ -1095,15 +1101,15 @@ object TextAnalysis {
     * `positional = true`): the adjacency check runs over ≤|phrase|
     * stored posting reads — the corpus is never re-tokenized. Equal to
     * the direct scan exactly (same fold, same tail). */
-  def bm25PhraseIndexed(idx: TextIndex, phrase: Seq[String], k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def bm25PhraseIndexed(idx: TextIndex, phrase: Seq[String],
+      k: Int = Bm25K): DataFrame = {
     require(phrase.size >= 2, "bm25PhraseIndexed: a phrase needs >= 2 terms")
     require(idx.postings.columns.contains("positions"),
       "bm25PhraseIndexed: index is not positional (rebuild with positional = true)")
     bm25From(
       phraseTf(idx.postings.where(col("term").isin(phrase.distinct: _*))
         .select(col("doc_id"), col("term"), col("positions")), phrase),
-      idx.dl, idx.stats, Seq(phrase.mkString(" ")), k, k1, b)
+      idx.dl, idx.stats, Seq(phrase.mkString(" ")), k, Bm25K1, Bm25B)
   }
 
   /** The adjacency fold shared by the scan and indexed phrase forms:
@@ -1130,8 +1136,7 @@ object TextAnalysis {
   /** DuckDB mirror for [[bm25Phrase]]: positions from the
     * generate_series/list_extract tokenization, adjacency as
     * list_contains arithmetic, the identical BM25 tail. */
-  def bm25PhraseOracleSql(phrase: Seq[String], k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75): String = {
+  def bm25PhraseOracleSql(phrase: Seq[String]): String = {
     require(phrase.size >= 2)
     val pcts = phrase.distinct.map { t =>
       val a = alias(t)
@@ -1162,16 +1167,16 @@ object TextAnalysis {
          parts AS (SELECT tfp.doc_id, tfp.term,
                 ln((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
                    / (CAST(df AS DOUBLE) + 0.5) + 1.0)
-                * (CAST(tf AS DOUBLE) * ($k1 + 1.0))
-                / (CAST(tf AS DOUBLE) + $k1 * ((1.0 - $b)
-                   + $b * (CAST(dl AS DOUBLE)
+                * (CAST(tf AS DOUBLE) * ($Bm25K1 + 1.0))
+                / (CAST(tf AS DOUBLE) + $Bm25K1 * ((1.0 - $Bm25B)
+                   + $Bm25B * (CAST(dl AS DOUBLE)
                            / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))))) AS part
            FROM tfp JOIN dft USING (term) JOIN dl USING (doc_id), stats),
          sc AS (SELECT doc_id,
                 coalesce(max(CASE WHEN term = '$ph' THEN part END), 0.0) AS s0
            FROM parts GROUP BY doc_id)
          SELECT doc_id, floor(s0 * 1000000.0 + 0.5) / 1000000.0 AS score
-         FROM sc ORDER BY score DESC, doc_id LIMIT $k"""
+         FROM sc ORDER BY score DESC, doc_id LIMIT $Bm25K"""
   }
 
   private def alias(term: String): String =

@@ -558,11 +558,12 @@ class Catalog(spark: SparkSession, baseDir: String,
     * search over the segmented index EQUALS search over a monolithic
     * rebuild against the same centroids (spec + the s_ann_upsert
     * oracle pin this). Delta ids must be new — see
-    * [[requireDisjoint]]; `check = true` enforces. */
+    * [[requireDisjoint]]; [[upsertAnnIndexQ]]'s `check = true`
+    * enforces it. */
   def upsertAnnIndex(name: String, newVectors: DataFrame,
-      batchId: Long, check: Boolean = false): Unit = {
+      batchId: Long): Unit = {
     val (st, m) = committed(name, Ann, "ANN index to upsert")
-    appendAssignments(name, st, m, newVectors, batchId, check)(
+    appendAssignments(name, st, m, newVectors, batchId, false)(
       graft.operators.Similarity.assignNew(newVectors, st.read(m.parts("centroids"))))
   }
 
@@ -1371,13 +1372,14 @@ object Catalog {
 
   /** Hash-partition skew PREFLIGHT card — "will this key shuffle
     * evenly" answered before the shuffle is paid: rows bucketed by the
-    * engine-portable hash mod `nBuckets`, then one bounded aggregate of
+    * engine-portable hash mod 32, then one bounded aggregate of
     * bucket sizes with the skew ratio (max/avg — 1.0 is perfectly even;
     * feed anything ugly to `Skew.saltedJoin`). The hash is
     * `portable_hash60` (md5-prefix), so the whole card replays in any
     * engine — a diagnostic whose own numbers can't be engine artifacts. */
-  def skewCard(df: DataFrame, key: Column, nBuckets: Int = 32): DataFrame = {
+  def skewCard(df: DataFrame, key: Column): DataFrame = {
     import graft.functions.Exact.round6
+    val nBuckets = 32
     val b = pmod(graft.operators.TextAnalysis.portableHash60(key),
       lit(nBuckets.toLong))
     df.groupBy(b.as("bucket")).agg(count(lit(1)).as("n"))
@@ -1422,18 +1424,17 @@ object Catalog {
         max(col("v")).as("hi"))
   }
 
-  /** Morton/Z-value of two integer columns: the low `bits` bits of each,
+  /** Morton/Z-value of two integer columns: the low 16 bits of each,
     * interleaved (x even positions, y odd). Bit shifts and masks only —
     * portable to any engine — and the disjoint bit positions make `+`
     * equal to OR, so the whole value is one codegen'd arithmetic
     * expression. */
-  def zValue(x: Column, y: Column, bits: Int = 16): Column =
-    zValueN(Seq(x, y), bits)
+  def zValue(x: Column, y: Column): Column = zValueN(Seq(x, y))
 
   /** N-column Morton/Z-value: bit `i` of column `j` lands at position
     * `i·N + j`, the round-robin interleave that generalizes the 2-dim
     * layout above (j = 0 even positions, j = 1 odd). Same portability
-    * arguments; `bits · N` must fit a signed long. With the low `bits`
+    * arguments; 16·N bits must fit a signed long. With the low 16
     * bits of every column riding the value, a range-partitioned sort on
     * it gives every file a contiguous Z range — a hyper-rectangle-ish
     * region of the N-dim key space — so a filter on ANY of the N
@@ -1442,7 +1443,8 @@ object Catalog {
     * More dimensions dilute per-dimension locality (each column's bits
     * are N positions apart), so keep N to the 2–4 filter dimensions
     * that matter. */
-  def zValueN(cols: Seq[Column], bits: Int = 16): Column = {
+  def zValueN(cols: Seq[Column]): Column = {
+    val bits = 16
     val n = cols.length
     require(n >= 1, "zValueN needs at least one column")
     require(bits * n <= 63, s"bits ($bits) × columns ($n) must fit a signed long")

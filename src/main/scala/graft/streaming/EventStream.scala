@@ -28,10 +28,9 @@ object EventStream {
     * Events.slidingCounts: 1-hour windows every 15 minutes, each event
     * in 4 overlapping windows. State is 4× the tumbling window count,
     * still bounded by the watermark horizon. */
-  def slidingCountsStream(events: DataFrame,
-      watermarkDelay: String = "2 hours"): DataFrame =
+  def slidingCountsStream(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "60 minutes", "15 minutes").as("w"),
         col("event_type"))
       .agg(count(lit(1)).as("cnt"),
@@ -43,9 +42,9 @@ object EventStream {
     * twin of Events.tumblingHourly. State is bounded by the watermark:
     * windows older than (max event time − delay) are finalized and
     * dropped. */
-  def windowedCounts(events: DataFrame, watermarkDelay: String = "2 hours"): DataFrame =
+  def windowedCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("cnt"),
         graft.functions.Exact.moneySum(col("value")).as("sum_value"))
@@ -59,14 +58,13 @@ object EventStream {
     * buffered state is evicted as the watermark advances: unbounded
     * streams, bounded state. Matches are emitted as soon as both sides
     * arrive (inner join), no watermark wait. */
-  def purchaseViewJoin(events: DataFrame, windowSec: Long = 600,
-      watermarkDelay: String = "1 hour"): DataFrame = {
+  def purchaseViewJoin(events: DataFrame, windowSec: Long = 600): DataFrame = {
     val purchases = events.where(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", watermarkDelay)
+      .withWatermark("p_ts", "1 hour")
     val views = events.where(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"), col("ts").as("v_ts"))
-      .withWatermark("v_ts", watermarkDelay)
+      .withWatermark("v_ts", "1 hour")
     purchases.join(views,
         col("user_id") === col("v_user") &&
           col("v_ts") >= col("p_ts") - expr(s"INTERVAL $windowSec SECONDS") &&
@@ -175,9 +173,10 @@ object EventStream {
     * flatMapGroupsWithState + event-time timeout — the streaming twin of
     * Events.sessionize. Sessions close when the watermark passes the gap
     * after their last event; state per user is O(1). */
-  def sessionize(events: Dataset[Event], gapMinutes: Int = 30)(
+  def sessionize(events: Dataset[Event])(
       implicit spark: SparkSession): Dataset[SessionOut] = {
     import spark.implicits._
+    val gapMinutes = graft.operators.Events.SessionGapMinutes
     val gapUs = gapMinutes * 60L * 1000000L
 
     events
@@ -229,13 +228,12 @@ object EventStream {
     * event_type; the timeout is clamped above the current watermark
     * (an input row whose hour is already old must still register a
     * legal timeout). */
-  def hourlyTopK(counts: DataFrame, k: Int = 3,
-      watermarkDelay: String = "2 hours")(
+  def hourlyTopK(counts: DataFrame, k: Int = 3)(
       implicit spark: SparkSession): Dataset[TopKOut] = {
     import spark.implicits._
     counts
       .select(col("hour_start"), col("event_type"), col("cnt"))
-      .withWatermark("hour_start", watermarkDelay)
+      .withWatermark("hour_start", "2 hours")
       .as[(java.sql.Timestamp, String, Long)]
       .groupByKey(_._1.getTime)
       .flatMapGroupsWithState[TopKState, TopKOut](
@@ -269,7 +267,7 @@ object EventStream {
     * window never finalizes), so stage 2 gets its own far-future
     * watermark pusher appended with newest mtime = last trigger. */
   def topHourlyReplay(spark: SparkSession, sfDir: String,
-      k: Int = 3, maxFilesPerTrigger: Int = 4): DataFrame = {
+      maxFilesPerTrigger: Int = 4): DataFrame = {
     implicit val s: SparkSession = spark
     import spark.implicits._
     val src = Replay.source(spark, sfDir)
@@ -305,7 +303,7 @@ object EventStream {
     val (handoff, schema) =
       Replay.orderedHandoff(stage1, "hour_start", sentinel)
     Replay.runFrom(spark, handoff, schema, maxFilesPerTrigger) { counts =>
-      hourlyTopK(counts, k).toDF()
+      hourlyTopK(counts).toDF()
     }
       .where(col("hr") <= src.maxTsu / 3600000000L)
       .select(col("hr"), col("event_type"), col("cnt"), col("rnk"))
@@ -318,8 +316,7 @@ object EventStream {
     * arrived (the watermark only bounds state eviction), so the replayed
     * output is the complete pair set regardless of the sentinel (a lone
     * view joins nothing; filtered anyway). */
-  def purchaseViewJoinReplay(spark: SparkSession, sfDir: String,
-      windowSec: Long = 3600): DataFrame = {
+  def purchaseViewJoinReplay(spark: SparkSession, sfDir: String): DataFrame = {
     val src = Replay.source(spark, sfDir)
     // the two-sided join is the costliest replay (both sides keep
     // keyed state per microbatch); 8 files/trigger keeps it a genuine
@@ -328,7 +325,7 @@ object EventStream {
     // a bench-cost knob
     Replay.run(spark, src, maxFilesPerTrigger = 8) { stream =>
       purchaseViewJoin(stream.select(col("event_id"), col("user_id"),
-        col("event_type"), col("ts")), windowSec)
+        col("event_type"), col("ts")), 3600)
     }
       .where(col("user_id") =!= src.sentinelUser)
       .select(col("user_id"), col("purchase_id"), col("view_id"),
@@ -379,12 +376,11 @@ object EventStream {
     * ≤delay-late sources). State is bounded: live keys span only the
     * watermark horizon. The watermark column (`hr`) is part of the key,
     * which is what lets the state store evict by event time. */
-  def dedupKeysStream(events: DataFrame,
-      watermarkDelay: String = "2 hours"): DataFrame =
+  def dedupKeysStream(events: DataFrame): DataFrame =
     events
       .select(col("user_id"), col("event_type"),
         date_trunc("hour", col("ts")).as("hr"))
-      .withWatermark("hr", watermarkDelay)
+      .withWatermark("hr", "2 hours")
       .dropDuplicates("user_id", "event_type", "hr")
 
   /** ORACLE-VISIBLE streaming replay of [[dedupKeysStream]]: the
@@ -615,15 +611,14 @@ object EventStream {
     * is the point: at 100 TB the numeric drift gate costs what the
     * already-live sketch MV pays, and because the fold is lossless the
     * card equals the whole-log rebuild exactly (the oracle). */
-  def numericDriftReplay(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Int = 4): DataFrame = {
+  def numericDriftReplay(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.Catalog
     import graft.operators.TextAnalysis
     val src = Replay.source(spark, sfDir)
     val cat = new Catalog(spark, sfDir,
       Some(Catalog.warehouseLayoutRoot(spark, sfDir)))
     cat.dropDerived("events_drift_num")
-    Replay.runForeachBatch(spark, src, maxFilesPerTrigger) { (batch, id) =>
+    Replay.runForeachBatch(spark, src) { (batch, id) =>
       val delta = batch.where(col("user_id") =!= src.sentinelUser)
         .select(pmod(col("user_id"), lit(2L)).as("cohort"),
           TextAnalysis.portableHash60(col("event_id")).as("h"),
@@ -647,8 +642,7 @@ object EventStream {
     * NOT IN over the whole log — which the oracle checks, so a fold
     * that ever DROPPED a bit (a false negative) would fail the gate,
     * not just waste bytes. */
-  def bloomMaintenanceReplay(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Int = 4): DataFrame = {
+  def bloomMaintenanceReplay(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.Catalog
     import graft.operators.BloomJoin
     val mBits = 1 << 20
@@ -656,7 +650,7 @@ object EventStream {
     val cat = new Catalog(spark, sfDir,
       Some(Catalog.warehouseLayoutRoot(spark, sfDir)))
     cat.dropDerived("events_bloom_mv")
-    Replay.runForeachBatch(spark, src, maxFilesPerTrigger) { (batch, id) =>
+    Replay.runForeachBatch(spark, src) { (batch, id) =>
       val delta = BloomJoin.wordDelta(
         batch.where(col("user_id") =!= src.sentinelUser)
           .select(col("event_id")), col("event_id"), mBits, 4)
@@ -687,9 +681,7 @@ object EventStream {
     * operator's window order — the replay equals the batch card
     * exactly (spec + shared oracle). No timeout: state is bounded by
     * the user population, the dimension-table size class. */
-  def matchEpisodeStream(events: Dataset[MatchEvent],
-      open: String = "signup", close: String = "purchase",
-      fail: String = "error")(
+  def matchEpisodeStream(events: Dataset[MatchEvent])(
       implicit spark: SparkSession): Dataset[EpisodeOut] = {
     import spark.implicits._
     events.groupByKey(_.user_id)
@@ -699,9 +691,9 @@ object EventStream {
           var st = state.getOption.getOrElse(MatchState(-1L, -1L))
           val out = Seq.newBuilder[EpisodeOut]
           rows.toSeq.sortBy(r => (r.tsu, r.event_id)).foreach { r =>
-            if (r.event_type == open) st = st.copy(lastOpen = r.tsu)
-            else if (r.event_type == fail) st = st.copy(lastFail = r.tsu)
-            else if (r.event_type == close && st.lastOpen >= 0 &&
+            if (r.event_type == "signup") st = st.copy(lastOpen = r.tsu)
+            else if (r.event_type == "error") st = st.copy(lastFail = r.tsu)
+            else if (r.event_type == "purchase" && st.lastOpen >= 0 &&
               st.lastFail < st.lastOpen)
               out += EpisodeOut(userId, st.lastOpen, r.tsu)
           }

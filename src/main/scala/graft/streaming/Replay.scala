@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.StructType
   * carrying earlier events would silently drop them as late data and
   * the replay would no longer equal its batch oracle (latent break the
   * moment the source outgrows one trigger). The replay source is
-  * therefore written `repartitionByRange(nFiles, tsu)` with file
+  * therefore written `repartitionByRange(8, tsu)` with file
   * modification times REWRITTEN to ascend with the range ordinal:
   * trigger order == file order == event-time order by construction, so
   * no event ever arrives below the watermark, at ANY
@@ -70,7 +70,7 @@ object Replay {
   }
 
   /** Build (once per JVM per sfDir) the ordered replay source. */
-  def source(spark: SparkSession, sfDir: String, nFiles: Int = 8): Source =
+  def source(spark: SparkSession, sfDir: String): Source =
     sources.getOrElseUpdate(sfDir, synchronized {
       import spark.implicits._
       val batch = graft.Tables.events(spark, sfDir)
@@ -79,31 +79,39 @@ object Replay {
       val (maxTsu, maxUser) = batch
         .agg(max(col("tsu")), max(col("user_id"))).as[(Long, Long)].head()
       val dir = root.resolve(s"src-${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}")
-      batch.repartitionByRange(nFiles, col("tsu"))
-        .sortWithinPartitions(col("tsu"))
-        .write.mode("overwrite").parquet(dir.toString)
-      // part-NNNNN name order == range ordinal order; rewrite mtimes to
-      // ascend with it (all strictly in the past so the sentinel file
-      // below is the unambiguous newest)
-      val now = System.currentTimeMillis()
-      val parts = dir.toFile.listFiles()
-        .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        Files.setLastModifiedTime(f.toPath,
-          FileTime.fromMillis(now - (parts.length - i) * 2000L)): Unit
-      }
       val sentinelUser = maxUser + 1L
       val sentTsu = maxTsu + 6L * 3600L * 1000000L
-      Seq((-1L, sentinelUser, "view", 0.0, sentTsu))
+      val sentinel = Seq((-1L, sentinelUser, "view", 0.0, sentTsu))
         .toDF("event_id", "user_id", "event_type", "value", "tsu")
         .withColumn("ts", timestamp_micros(col("tsu")))
-        .write.mode("append").parquet(dir.toString)
-      dir.toFile.listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.lastModified() >= now)
-        .foreach(f => Files.setLastModifiedTime(f.toPath,
-          FileTime.fromMillis(now + 60000L)): Unit)
+      writeOrdered(batch, "tsu", sentinel, 8, dir)
       Source(dir.toString, batch.schema, maxTsu, sentinelUser)
     })
+
+  /** Write `df` into `dir` as an event-time-ORDERED file feed:
+    * `nFiles` files range-partitioned and sorted on `tsCol`, their
+    * mtimes rewritten to ascend with the range ordinal (part-NNNNN
+    * name order), all strictly in the past, then `sentinel` appended
+    * as the unambiguous newest file. A FileStreamSource then feeds the
+    * ranges in event-time order and the sentinel last. */
+  private def writeOrdered(df: DataFrame, tsCol: String, sentinel: DataFrame,
+      nFiles: Int, dir: Path): Unit = {
+    df.repartitionByRange(nFiles, col(tsCol))
+      .sortWithinPartitions(col(tsCol))
+      .write.mode("overwrite").parquet(dir.toString)
+    val now = System.currentTimeMillis()
+    val parts = dir.toFile.listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    parts.zipWithIndex.foreach { case (f, i) =>
+      Files.setLastModifiedTime(f.toPath,
+        FileTime.fromMillis(now - (parts.length - i) * 2000L)): Unit
+    }
+    sentinel.coalesce(1).write.mode("append").parquet(dir.toString)
+    dir.toFile.listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.lastModified() >= now)
+      .foreach(f => Files.setLastModifiedTime(f.toPath,
+        FileTime.fromMillis(now + 60000L)): Unit)
+  }
 
   /** Run one checkpointed file-to-file replay of `build(stream)` over
     * the shared source and read the sink back as a batch DataFrame.
@@ -140,10 +148,9 @@ object Replay {
     * source pays 32 near-empty state commits per operator per trigger —
     * measured 2.8× the whole stream-stream replay (8.4 s → 3.0 s on
     * identical 32-core hardware) — while the SAME bytes-derived formula
-    * gives a 100 TB source thousands of partitions. Overridable with
-    * SPARK_GRAFT_STREAM_SHUFFLE for deployments that know better; the
-    * 32768 cap bounds the per-trigger fixed cost at any size (beyond
-    * it, grow bytes-per-partition, the guide's 100 MB–1 GB window).
+    * gives a 100 TB source thousands of partitions. The 32768 cap
+    * bounds the per-trigger fixed cost at any size (beyond it, grow
+    * bytes-per-partition, the guide's 100 MB–1 GB window).
     * Source bytes resolve through the Hadoop FileSystem API, so the
     * formula holds for hdfs://, s3a://, and file: URIs alike (a plain
     * java.io.File would read 0 bytes for any non-local path and pin 1
@@ -151,21 +158,17 @@ object Replay {
     * the filesystem cannot see falls back to the session's current
     * shuffle-partition setting instead of defaulting to 1. */
   private[graft] def streamShufflePartitions(spark: SparkSession,
-      srcDir: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map { v =>
-      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, got: $v"))
-    }.getOrElse {
-      val target = 64L * 1024 * 1024
-      val p = new org.apache.hadoop.fs.Path(srcDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p))
-        spark.sessionState.conf.numShufflePartitions
-      else {
-        val bytes = fs.getContentSummary(p).getLength
-        math.max(1L, math.min((bytes + target - 1) / target, 32768L)).toInt
-      }
+      srcDir: String): Int = {
+    val target = 64L * 1024 * 1024
+    val p = new org.apache.hadoop.fs.Path(srcDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p))
+      spark.sessionState.conf.numShufflePartitions
+    else {
+      val bytes = fs.getContentSummary(p).getLength
+      math.max(1L, math.min((bytes + target - 1) / target, 32768L)).toInt
     }
+  }
 
   /** [[runFrom]] returning the SINK DIRECTORY instead of reading it
     * back — the hook for CHAINED streaming jobs (stage 2 streams from
@@ -232,8 +235,8 @@ object Replay {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Materialize a mid-pipeline handoff as an event-time-ORDERED plain
-    * file feed for the next chained stream: range-partitioned on
-    * `tsCol` with ascending mtimes (trigger order == event-time order,
+    * file feed for the next chained stream: four files range-partitioned
+    * on `tsCol` with ascending mtimes (trigger order == event-time order,
     * the [[source]] recipe), plus `sentinel` as the newest file — the
     * next stage's watermark pusher. Needed because a STREAMING SINK
     * carries a `_spark_metadata` log: a FileStreamSource pointed at it
@@ -241,38 +244,23 @@ object Replay {
     * sentinel) are INVISIBLE — the handoff must be re-materialized
     * into a log-free dir before the next stream can consume it with
     * its own sentinel. */
-  def orderedHandoff(df: DataFrame, tsCol: String, sentinel: DataFrame,
-      nFiles: Int = 4): (String, StructType) = {
+  def orderedHandoff(df: DataFrame, tsCol: String,
+      sentinel: DataFrame): (String, StructType) = {
     val dir = root.resolve(s"handoff-${runCounter.incrementAndGet()}")
-    df.repartitionByRange(nFiles, col(tsCol))
-      .sortWithinPartitions(col(tsCol))
-      .write.mode("overwrite").parquet(dir.toString)
-    val now = System.currentTimeMillis()
-    val parts = dir.toFile.listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      Files.setLastModifiedTime(f.toPath,
-        FileTime.fromMillis(now - (parts.length - i) * 2000L)): Unit
-    }
-    sentinel.coalesce(1).write.mode("append").parquet(dir.toString)
-    dir.toFile.listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.lastModified() >= now)
-      .foreach(f => Files.setLastModifiedTime(f.toPath,
-        FileTime.fromMillis(now + 60000L)): Unit)
+    writeOrdered(df, tsCol, sentinel, 4, dir)
     (dir.toString, df.schema)
   }
 
-  /** Build (once per JVM per sfDir) a multi-file documents replay
+  /** Build (once per JVM per sfDir) a six-file documents replay
     * source for the STATELESS document-gate replays. No ordering, no
     * sentinel: a map/filter stream has no watermark to feed, any file
     * order replays to the same multiset. */
-  def docSource(spark: SparkSession, sfDir: String,
-      nFiles: Int = 6): (String, StructType) =
+  def docSource(spark: SparkSession, sfDir: String): (String, StructType) =
     docSources.getOrElseUpdate(sfDir, synchronized {
       val batch = graft.Tables.documents(spark, sfDir)
       val dir = root.resolve(
         s"docsrc-${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}")
-      batch.repartition(nFiles)
+      batch.repartition(6)
         .write.mode("overwrite").parquet(dir.toString)
       (dir.toString, batch.schema)
     })

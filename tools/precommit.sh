@@ -21,11 +21,16 @@
 #      graft/plans/ or to functions/CosineSimilarity.scala (home of the
 #      GraftExtensions session extensions) also runs PlanAuditSpec:
 #      session extensions shape the plan of every driver entry.
-#   3. A staged src/main Scala file runs the reachability check
-#      (tools/reach.py, no JVM): every member of src/main must be named
-#      outside its own body by src/main or perfbench/src, so surface
-#      that only its specs call cannot land. tools/test_reach.py runs
-#      beside it.
+#   3. A staged src/main or src/test Scala file, or a staged
+#      tools/reach.py or tools/test_reach.py, runs the reachability
+#      check (tools/reach.py, no JVM): every member of src/main must be
+#      named outside its own body by src/main or perfbench/src, so
+#      surface that only its specs call cannot land, and every
+#      default-valued parameter of a src/main def must be set by some
+#      call in src/main, perfbench/src or src/test. Specs count as
+#      setters, so deleting a spec's override can newly flag a
+#      parameter. tools/test_reach.py runs beside it. A commit that
+#      touches only those two tools stops there, without a JVM.
 #   4. The checks run against the STAGED snapshot: if any staged
 #      .scala/.sbt file also has unstaged edits, the index is
 #      materialized via git checkout-index into a temp dir and checked
@@ -44,7 +49,8 @@ fi
 staged=$(git diff --cached --name-only)
 
 # Doc-only commits don't need a JVM.
-if ! grep -qE '\.(scala|sbt)$' <<<"$staged"; then
+code_re='\.(scala|sbt)$|^tools/(test_)?reach\.py$'
+if ! grep -qE "$code_re" <<<"$staged"; then
   exit 0
 fi
 
@@ -52,7 +58,7 @@ fi
 # is NOT the snapshot being committed — materialize the index and run
 # every check from there instead.
 checkdir="."
-unstaged=$(git diff --name-only | grep -E '\.(scala|sbt)$' || true)
+unstaged=$(git diff --name-only | grep -E "$code_re" || true)
 if [[ -n "$unstaged" ]] && grep -qFxf <(echo "$unstaged") <<<"$staged"; then
   checkdir=$(mktemp -d /tmp/precommit_index.XXXX)
   echo "precommit: partial staging detected — checking index snapshot at $checkdir" >&2
@@ -60,14 +66,19 @@ if [[ -n "$unstaged" ]] && grep -qFxf <(echo "$unstaged") <<<"$staged"; then
   trap 'rm -rf "$checkdir"' EXIT
 fi
 
-if grep -qE '^src/main/.*\.scala$' <<<"$staged"; then
+if grep -qE '^src/(main|test)/.*\.scala$|^tools/(test_)?reach\.py$' <<<"$staged"; then
   echo "precommit: reachability check..." >&2
-  python3 tools/test_reach.py > /tmp/precommit_reach.log 2>&1 &&
-    python3 tools/reach.py "$checkdir" >> /tmp/precommit_reach.log 2>&1 || {
+  python3 "$checkdir/tools/test_reach.py" > /tmp/precommit_reach.log 2>&1 &&
+    python3 "$checkdir/tools/reach.py" "$checkdir" >> /tmp/precommit_reach.log 2>&1 || {
     tail -30 /tmp/precommit_reach.log >&2
-    echo "precommit: REFUSED — unreached members in src/main (tools/reach.py)" >&2
+    echo "precommit: REFUSED — unreached members or unset parameters in src/main (tools/reach.py)" >&2
     exit 1
   }
+fi
+
+if ! grep -qE '\.(scala|sbt)$' <<<"$staged"; then
+  echo "precommit: green" >&2
+  exit 0
 fi
 
 echo "precommit: sbt compile..." >&2

@@ -7,32 +7,43 @@ import graft.sources.Catalog
 
 /** Interactive client shell — the analog of the reference DFS CLI
   * (reference: dfs/client/cli.go ls/upload/download/stats loop), with
-  * SQL as the query surface instead of job submission, plus
-  * PROCEDURE-STYLE verbs for the production data-prep ladder (the
-  * analog of the reference CLI's job submission): an operator a SQL
+  * SQL as the query surface and `run <entry>` as the job submission:
+  * the reference client names a canned job together with a data dir,
+  * and here the canned jobs are the driver entries
+  * ([[SparkEntry.queries]]) over the shell's dir. The other verbs act
+  * on a user-named table or on the Catalog's state: an operator a SQL
   * string can't express — multi-stage, stateful, writes a table — runs
-  * as one shell verb over registered tables and lands back in the
-  * catalog as a registered table.
+  * as one verb over registered tables and lands back in the catalog as
+  * a registered table or view.
   *
   * Commands:
-  *   ls                      list tables in the data dir
-  *   stats                   per-table rows + bytes (footer metadata)
-  *   nodes                   executor stats
+  *   ls | stats | nodes      tables, per-table rows + bytes, executor stats
   *   download <tbl> <dir>    reassemble a table to one local file
   *   delete <tbl>            drop a table's files
-  *   prep <src> <dest>       full corpus preparation (quality/lang →
-  *                           exact dedup → near-dup → split) of table
-  *                           <src>, written + registered as <dest>
+  *   run [entry]             show driver entry <entry> over the data dir;
+  *                           with no argument, list the entry names
+  *   prep <src> <dest>       full corpus preparation of table <src>,
+  *                           written + registered as <dest>
   *   index <src> <dest>      MinHash signature index over <src>
   *   prep_incr <new> <index> <dest>
   *                           incremental prep of batch <new> against
   *                           signature index <index>
-  *   neardup <src> [t]       near-dup pairs of <src> at threshold t
-  *                           (default 0.5) via the size-routed ladder,
-  *                           registered as view <src>_neardups
-  *   help                    this text
+  *   neardup | bpe | buckets | kmeans | ann <src> [n]
+  *                           register an operator's output over <src>
+  *                           as the view <src>_<suffix>
+  *   publish <src> <dest>    prep → shard → committed release
+  *   analyze | skew | histogram | ttl <tbl> ...
+  *                           column profile, key skew, equi-depth
+  *                           histogram, retention purge
+  *   vacuum | maintain [segs] clean up and compact the derived state
+  *   explain | doctor | doctor! <sql>
+  *                           physical plan, plan lint, gating plan lint
+  *   help                    the verb list
   *   exit | quit             leave
-  *   anything else           executed as Spark SQL over the registered tables
+  *   anything else           executed as Spark SQL over the registered
+  *                           tables; the graft_* table functions
+  *                           (e.g. graft_bm25(dir, terms)) reach the
+  *                           operators that take free-form arguments
   *
   * Usage: runMain graft.Shell [dataDir]
   */
@@ -55,31 +66,18 @@ object Shell {
     line.split("\\s+").toList match {
       case ("exit" | "quit") :: Nil => return false
       case "help" :: Nil =>
-        println("ls | stats | nodes | download <tbl> <dir> | delete <tbl> | " +
+        println("ls | stats | nodes | download <tbl> <dir> | delete <tbl> | run [entry] | " +
           "prep <src> <dest> | index <src> <dest> | prep_incr <new> <index> <dest> | " +
           "neardup <src> [t] | bpe <src> [n] | buckets <src> | kmeans <src> [k] | " +
-          "ann <src> [k] | pagerank [iters] | triangles | degrees | bfs | " +
-          "gini | audit | vacuum | analyze <tbl> [cols...] | abc | rfm | " +
-          "benford | changepoints | publish <src> <dest> | " +
-          "explain <sql> | doctor <sql> | doctor! <sql> (nonzero exit on errors) | " +
-          "skew <tbl> <col> | histogram <tbl> <col> | " +
-          "kcore [k] | cc | lpa [rounds] | jaccard | dbscan [minPts] | silhouette | " +
-          "silhouette_centroid | chi2 | " +
-          "acf | dedup_eval | drawdown | ttl <tbl> <col> <micros> | " +
-          "quality_model | quality_scores | attribution [days] | " +
-          "token_budget [tokens] | mmr [k] | ttest | anova | survival | " +
-          "mwu [typeA typeB] | attribution_multi | harmonic | ndcg | " +
-          "kanon [k] | paths [k] | contract | drift | bm25 <terms...> | " +
-          "phrase <t1> <t2> [...] | pca [k] | " +
-          "calibration | maintain [segs] | hardneg [k] | " +
-          "zonemap <lo> <hi> (yyyy-mm-dd shipdate probe) | " +
-          "exit | <sql>  (SQL reaches the operator TVFs too: " +
-          "graft_asof(dir) graft_dedup_minhash(dir[,bands]) " +
-          "graft_mmr(dir[,maxq]) graft_funnel(dir) graft_kanon(dir[,k]) " +
-          "graft_hard_negatives(dir[,k]) " +
-          "graft_prep_attrition(dir[,bench[,minq]]) graft_contract(dir) " +
-          "graft_doctor(sql) graft_drift(dir) graft_bm25(dir,query[,k]) " +
-          "graft_bm25_phrase(dir,phrase[,k]))")
+          "ann <src> [k] | publish <src> <dest> | analyze <tbl> [cols...] | " +
+          "skew <tbl> <col> | histogram <tbl> <col> | ttl <tbl> <col> <micros> | " +
+          "vacuum | maintain [segs] | explain <sql> | doctor <sql> | doctor! <sql> | " +
+          "exit | <sql> (graft_* table functions too, e.g. graft_bm25(dir, terms))")
+      case "run" :: Nil => SparkEntry.queries.keys.toSeq.sorted.foreach(println)
+      case "run" :: entry :: Nil => SparkEntry.queries.get(entry) match {
+        case Some(q) => q(spark, dir).show(50, truncate = false)
+        case None => println(s"no such entry: $entry")
+      }
       case "ls" :: Nil => cat.list().foreach(println)
       case "stats" :: Nil => cat.stats().show(100, truncate = false)
       case "nodes" :: Nil => cat.executorStats().show(100, truncate = false)
@@ -140,34 +138,6 @@ object Shell {
           .createOrReplaceTempView(view)
         spark.table(view).orderBy("query_id", "rnk").show(20, truncate = false)
         println(s"registered $view")
-      case "pagerank" :: rest if rest.length <= 1 =>
-        // rank the nation trade network (fixed-point, deterministic)
-        val iters = rest.headOption.map(_.toInt).getOrElse(3)
-        val view = "nation_pagerank"
-        operators.Graph.nationPagerank(spark, dir, iters)
-          .createOrReplaceTempView(view)
-        spark.table(view).orderBy(org.apache.spark.sql.functions.col("rank").desc)
-          .show(10, truncate = false)
-        println(s"registered $view")
-      case "triangles" :: Nil =>
-        operators.Graph.nationTriangles(spark, dir).show(truncate = false)
-      case "degrees" :: Nil =>
-        operators.Graph.nationDegrees(spark, dir)
-          .orderBy(org.apache.spark.sql.functions.col("out_w").desc)
-          .show(25, truncate = false)
-      case "bfs" :: Nil =>
-        operators.Graph.nationShortestPaths(spark, dir)
-          .orderBy("hops", "n_name").show(25, truncate = false)
-      case "gini" :: Nil =>
-        // the skew data-card: per-nation spend inequality
-        operators.Analytics.giniSpend(spark, dir)
-          .orderBy(org.apache.spark.sql.functions.col("gini").desc)
-          .show(25, truncate = false)
-      case "audit" :: Nil =>
-        // ingest gate: referential integrity + watermark lateness
-        operators.Analytics.integrityAudit(spark, dir).show(truncate = false)
-        operators.Events.latenessAudit(Tables.events(spark, dir))
-          .orderBy("event_type").show(truncate = false)
       case "vacuum" :: Nil =>
         // torn-refresh cleanup of the Catalog's derived layouts
         println(s"vacuumed ${cat.vacuumDerived()} uncommitted derived dirs")
@@ -181,118 +151,12 @@ object Shell {
             f.dataType == org.apache.spark.sql.types.FloatType)
           .map(_.name).toList
         Catalog.analyzeColumns(df, cols).show(100, truncate = false)
-      case "abc" :: Nil =>
-        operators.Analytics.abcClassification(Tables.lineitem(spark, dir))
-          .orderBy("abc_class").show(truncate = false)
-      case "rfm" :: Nil =>
-        operators.Analytics.rfmSegments(Tables.orders(spark, dir))
-          .orderBy("segment").show(truncate = false)
-      case "benford" :: Nil =>
-        operators.Analytics.benfordCard(Tables.orders(spark, dir))
-          .orderBy("digit").show(truncate = false)
-      case "changepoints" :: Nil =>
-        operators.Events.cusumChangePoint(Tables.events(spark, dir))
-          .orderBy("event_type").show(truncate = false)
       case "publish" :: src :: dest :: Nil =>
         // end-to-end release: prep → shard → committed shards +
         // manifest/datasheet/contract sidecars under the Catalog
         operators.CorpusPipeline.publish(cat, cat.table(src), dest)
           .show(truncate = false)
         println(s"published $src -> ${cat.derivedDir}/$dest")
-      case "kcore" :: rest if rest.length <= 1 =>
-        // cohesive backbone: k-core peel of the trade network
-        val k = rest.headOption.map(_.toInt).getOrElse(3)
-        operators.Graph.kCore(
-            operators.Graph.topKBackbone(
-              operators.Graph.tradeEdges(spark, dir), 3),
-            k = k, coalesceTo = Some(1))
-          .orderBy(org.apache.spark.sql.functions.col("core_deg").desc,
-            org.apache.spark.sql.functions.col("node"))
-          .show(25, truncate = false)
-      case "cc" :: Nil =>
-        // reachability read: who trades with whom, transitively
-        operators.Graph.nationComponents(spark, dir)
-          .orderBy("component", "n_name").show(25, truncate = false)
-      case "lpa" :: rest if rest.length <= 1 =>
-        // community read: who CLUSTERS with whom (denser than reachable)
-        val rounds = rest.headOption.map(_.toInt).getOrElse(4)
-        operators.Graph.labelPropagation(
-            operators.Graph.topKBackbone(
-              operators.Graph.tradeEdges(spark, dir), 3),
-            rounds = rounds, coalesceTo = Some(1))
-          .orderBy("community", "node").show(25, truncate = false)
-      case "jaccard" :: Nil =>
-        // link prediction: unlinked nation pairs with the most shared
-        // trade partners first
-        operators.Graph.nationJaccard(spark, dir)
-          .where(!org.apache.spark.sql.functions.col("linked"))
-          .orderBy(org.apache.spark.sql.functions.col("jac").desc,
-            org.apache.spark.sql.functions.col("node_a"))
-          .show(10, truncate = false)
-      case "dbscan" :: rest if rest.length <= 1 =>
-        val minPts = rest.headOption.map(_.toInt).getOrElse(3)
-        operators.Similarity.dbscanEmbeddings(
-            Tables.embeddings(spark, dir), minPts = minPts)
-          .groupBy("role").count().orderBy("role").show(truncate = false)
-      case (v @ ("silhouette" | "silhouette_centroid")) :: Nil =>
-        // per-label mean silhouette (display only — the per-vector
-        // card is the oracle-checked object); the centroid verb is the
-        // linear corpus-scale rung
-        (if (v == "silhouette_centroid")
-          operators.Similarity.silhouetteCentroid(Tables.embeddings(spark, dir))
-        else operators.Similarity.silhouette(Tables.embeddings(spark, dir)))
-          .groupBy("label")
-          .agg(org.apache.spark.sql.functions.round(
-            org.apache.spark.sql.functions.avg("sil"), 4).as("mean_sil"),
-            org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("n"))
-          .orderBy("label").show(truncate = false)
-      case "chi2" :: Nil =>
-        operators.Analytics.chiSquareCard(Tables.orders(spark, dir))
-          .orderBy("o_orderstatus", "o_orderpriority").show(truncate = false)
-      case "drawdown" :: Nil =>
-        // worst peak-to-trough spenders first — the risk-read ordering
-        operators.Analytics.maxDrawdown(Tables.orders(spark, dir))
-          .orderBy(org.apache.spark.sql.functions.col("max_drawdown").desc,
-            org.apache.spark.sql.functions.col("o_custkey"))
-          .show(10, truncate = false)
-      case "acf" :: Nil =>
-        operators.Events.acf(Tables.events(spark, dir))
-          .orderBy("lg").show(truncate = false)
-      case "survival" :: Nil =>
-        // churn read: how fast do reorder intervals die off
-        operators.Analytics.kaplanMeier(Tables.orders(spark, dir))
-          .orderBy("t_days").show(15, truncate = false)
-      case "anova" :: Nil =>
-        operators.Analytics.anovaCard(Tables.events(spark, dir))
-          .show(truncate = false)
-      case "mwu" :: rest =>
-        // nonparametric read: is click engagement stochastically
-        // larger than view (rank-based, no normality assumption)
-        val ta = rest.headOption.getOrElse("click")
-        val tb = rest.drop(1).headOption.getOrElse("view")
-        if (rest.length > 2) println("usage: mwu [typeA typeB]")
-        else if (ta == tb) println(
-          s"mwu needs two distinct event types, got '$ta' twice")
-        else operators.Analytics
-          .mannWhitneyU(Tables.events(spark, dir), ta, tb)
-          .show(truncate = false)
-      case "attribution_multi" :: Nil =>
-        // budget read: channel credit under linear + U-shaped schemes
-        // (compare against last-touch from the `attribution` verb)
-        operators.Events.multiTouchAttribution(Tables.events(spark, dir))
-          .orderBy("channel").show(truncate = false)
-      case "harmonic" :: Nil =>
-        // centrality read: who sits closest to everyone in the trade
-        // backbone (defined even where the graph is disconnected)
-        operators.Graph.nationHarmonic(spark, dir)
-          .orderBy(org.apache.spark.sql.functions.col("harmonic").desc,
-            org.apache.spark.sql.functions.col("n_name"))
-          .show(25, truncate = false)
-      case "ttest" :: Nil =>
-        // A/B read: which channel pairs differ significantly on value
-        operators.Analytics.welchTTest(Tables.events(spark, dir))
-          .orderBy("type_a", "type_b").show(truncate = false)
       case "doctor" :: rest if rest.nonEmpty =>
         // plan lint, nothing executed: the pre-commit scale audit for
         // YOUR query — cartesian/BNLJ/unpartitioned-window/1-task sinks
@@ -312,71 +176,6 @@ object Shell {
           strictDoctorFailed = true
           println(s"doctor!: $errs error-severity finding(s) - exit will be nonzero")
         } else println("doctor!: plan passes the gate")
-      case "kanon" :: rest if rest.length <= 1 =>
-        // release-governance read: how much of the corpus hides in
-        // QI classes of >= k, and the l-diversity floor
-        val k = rest.headOption.map(_.toInt).getOrElse(5)
-        operators.TextAnalysis.kAnonymityCard(Tables.documents(spark, dir), k)
-          .show(truncate = false)
-      case "paths" :: rest if rest.length <= 1 =>
-        // which event-type orders actually happen, by session count
-        val k = rest.headOption.map(_.toInt).getOrElse(15)
-        operators.Events.topPaths(Tables.events(spark, dir), k = k)
-          .show(k, truncate = false)
-      case "ndcg" :: Nil =>
-        // rank-aware index quality: where do the true neighbors land
-        operators.Similarity.ndcgCard(Tables.embeddings(spark, dir))
-          .orderBy("query_id").show(truncate = false)
-      case "mmr" :: rest if rest.length <= 1 =>
-        // diversified neighbor read: redundant near-dups demoted
-        val k = rest.headOption.map(_.toInt).getOrElse(5)
-        operators.Similarity.mmrRerank(Tables.embeddings(spark, dir), kOut = k)
-          .orderBy("query_id", "pick").show(5 * k, truncate = false)
-      case "hardneg" :: rest if rest.length <= 1 =>
-        // contrastive-training mining: highest-similarity WRONG-label
-        // neighbors — what the loss learns most from
-        val k = rest.headOption.map(_.toInt).getOrElse(10)
-        operators.Similarity.hardNegatives(Tables.embeddings(spark, dir), 5, k)
-          .orderBy("query_id", "rnk").show(5 * k, truncate = false)
-      case "zonemap" :: lo :: hi :: Nil =>
-        // file-skipping demo: shipdate-sorted lineitem + min/max
-        // sidecar, then the probe reports bytes routing (files
-        // opened vs total) alongside the answer
-        import org.apache.spark.sql.functions.{col, count, lit, sum}
-        val dest = s"${cat.derivedDir}/lineitem_zm_shell"
-        cat.writeSorted(Tables.lineitem(spark, dir), dest, 16, "l_shipdate")
-        cat.buildZoneMap(dest, Seq("l_shipdate"))
-        val probe = cat.scanZoneMapped(dest, "l_shipdate",
-          lit(lo).cast("timestamp"), lit(hi).cast("timestamp"))
-        val total = spark.read.parquet(dest).inputFiles.length
-        println(s"zone map opened ${probe.inputFiles.length} of $total files")
-        probe.agg(count(lit(1)).as("rows"),
-            sum(col("l_quantity")).as("sum_qty"))
-          .show(truncate = false)
-      case "quality_model" :: Nil =>
-        // the distilled gopher gate: weights + training accuracy
-        operators.QualityModel.trainCard(Tables.documents(spark, dir))
-          .show(truncate = false)
-      case "quality_scores" :: Nil =>
-        // soft keep-scores, worst documents first (the drop review)
-        operators.QualityModel.trainAndScore(Tables.documents(spark, dir))
-          .orderBy("p_keep", "doc_id").show(10, truncate = false)
-      case "attribution" :: rest if rest.length <= 1 =>
-        val days = rest.headOption.map(_.toInt).getOrElse(7)
-        operators.Events.attributionCard(Tables.events(spark, dir), days)
-          .orderBy("channel").show(truncate = false)
-      case "token_budget" :: rest if rest.length <= 1 =>
-        // best-first budget fill; show the cut boundary (last docs in)
-        val budget = rest.headOption.map(_.toLong).getOrElse(12000L)
-        operators.Sampling.tokenBudget(Tables.documents(spark, dir), budget)
-          .orderBy(org.apache.spark.sql.functions.col("cum_tokens").desc)
-          .show(10, truncate = false)
-      case "dedup_eval" :: Nil =>
-        operators.Dedup.dedupEval(
-          operators.Dedup.minhashLsh(Tables.documents(spark, dir), 3, 64, 16, 0.5)
-            .select("id_a", "id_b"),
-          operators.Dedup.ngramJaccard(Tables.documents(spark, dir), 3, 0.5)
-            .select("id_a", "id_b")).show(truncate = false)
       case "ttl" :: tbl :: col :: micros :: Nil =>
         // retention purge: keep rows with <col> ≥ the µs cutoff; the
         // kept slice lands as a new snapshot version of snap_<tbl>_ttl
@@ -387,38 +186,6 @@ object Shell {
         println(s"snapshot versions: ${cat.snapshotVersions(s"${tbl}_ttl")}")
       case "explain" :: rest if rest.nonEmpty =>
         spark.sql(rest.mkString(" ")).explain("formatted")
-      case "contract" :: Nil =>
-        // ingest-gate read: every rule's violation count (0 = holds)
-        Catalog.ordersContractCard(spark, dir)
-          .orderBy("rule").show(truncate = false)
-      case "drift" :: Nil =>
-        // did the corpus mix move between the two snapshot halves?
-        import org.apache.spark.sql.functions.{col, expr, lit, pmod}
-        val docs = Tables.documents(spark, dir)
-        operators.TextAnalysis.driftCard(
-          docs.where(pmod(col("doc_id"), lit(2L)) === 0),
-          docs.where(pmod(col("doc_id"), lit(2L)) === 1),
-          Seq("lang" -> col("lang"), "source" -> col("source"),
-            "len_bucket" -> expr("n_chars div 500")))
-          .show(truncate = false)
-      case "bm25" :: terms if terms.nonEmpty =>
-        // lexical top-10 for the typed query terms
-        operators.TextAnalysis.bm25(Tables.documents(spark, dir), terms)
-          .show(truncate = false)
-      case "phrase" :: terms if terms.size >= 2 =>
-        // phrase-scored top-10: the terms must be ADJACENT in the doc
-        operators.TextAnalysis.bm25Phrase(Tables.documents(spark, dir), terms)
-          .show(truncate = false)
-      case "pca" :: rest if rest.size <= 1 =>
-        // top-k principal directions (collapse check): one row per
-        // (component, coordinate), lambda = the direction's energy
-        val k = rest.headOption.map(_.toInt).getOrElse(2)
-        operators.Similarity.pcaComponents(Tables.embeddings(spark, dir), k)
-          .show(k * 64, truncate = false)
-      case "calibration" :: Nil =>
-        // is the quality score a rate? decile reliability + Brier
-        operators.QualityModel.calibrationCard(Tables.documents(spark, dir))
-          .show(truncate = false)
       case "maintain" :: rest if rest.length <= 1 =>
         // segment hygiene: compact every derived artifact at/past the
         // threshold (ANN + text indexes, SCD2 histories, join MVs)

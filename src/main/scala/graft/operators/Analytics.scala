@@ -1958,8 +1958,8 @@ object Analytics {
               + seb * seb / (col("nb") - 1).cast("double")))).as("df"))
   }
 
-  /** Mann-Whitney U (Wilcoxon rank-sum) between two event types'
-    * values — the NONPARAMETRIC sibling of [[welchTTest]] (rank-based,
+  /** Mann-Whitney U (Wilcoxon rank-sum) between the click and the
+    * view values — the NONPARAMETRIC sibling of [[welchTTest]] (rank-based,
     * so a heavy-tailed or ordinal metric needs no normality
     * assumption). Tie-aware: every computation runs at DISTINCT-VALUE
     * grain with midranks, the textbook tie correction
@@ -1979,11 +1979,8 @@ object Analytics {
     * distinct-value table ever exists; degenerate inputs (an empty
     * group, or every value tied → σ² = 0) report NULL rather than
     * dividing by zero. */
-  def mannWhitneyU(events: DataFrame, typeA: String = "click",
-      typeB: String = "view"): DataFrame = {
-    require(typeA != typeB,
-      s"mannWhitneyU needs two DISTINCT event types, got '$typeA' twice " +
-        "(each row would count in both groups, inflating every rank)")
+  def mannWhitneyU(events: DataFrame): DataFrame = {
+    val (typeA, typeB) = ("click", "view")
     val v = expr("CAST(round(value * 100) AS BIGINT)")
     val vc = events
       .filter(col("event_type").isin(typeA, typeB))

@@ -147,7 +147,7 @@ object Events {
 
   /** TOP SESSION PATHS — path mining over the sessionized stream: each
     * session collapses to its ordered event-type string ("view>view>
-    * purchase"), then a global count-per-path top-k. The product-
+    * purchase"), then a global count-per-path top-15. The product-
     * analytics read next to [[funnel]] (which checks ONE hypothesized
     * order; paths SURFACE the orders that actually happen).
     *
@@ -160,7 +160,7 @@ object Events {
     * co-partitioned after the first shuffle), the path table is
     * session grain, and sort+limit plans as TakeOrderedAndProject —
     * a bounded heap per partition, never a global sort. */
-  def topPaths(events: DataFrame, k: Int = 15): DataFrame = {
+  def topPaths(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = events.select(col("user_id"), col("event_id"),
       col("event_type"), unix_micros(col("ts")).as("tsu"))
@@ -177,7 +177,7 @@ object Events {
         x => x.getField("event_type")), ">").as("path"))
     paths.groupBy(col("path")).agg(count(lit(1)).as("n_sessions"))
       .orderBy(col("n_sessions").desc, col("path"))
-      .limit(k)
+      .limit(15)
   }
 
   /** Hourly resample with gap fill: per user, a dense hour grid from
@@ -999,8 +999,8 @@ object Events {
     * under max(), so there is no IGNORE-NULLS ordering to disagree on;
     * a click and a view in the same microsecond resolve to the higher
     * code (view) in both engines by the same integer max. */
-  def attributionCard(events: DataFrame, lookbackDays: Int = LookbackDays): DataFrame = {
-    val lookbackUs = lookbackDays * 86400000000L
+  def attributionCard(events: DataFrame): DataFrame = {
+    val lookbackUs = LookbackDays * 86400000000L
     val u = events
       .filter(col("event_type").isin("click", "view", "purchase"))
       .select(

@@ -130,9 +130,9 @@ object Graph {
   }
 
   /** Driver entry: PageRank of the nation trade network. */
-  def nationPagerank(spark: SparkSession, dir: String, iters: Int = 3): DataFrame = {
+  def nationPagerank(spark: SparkSession, dir: String): DataFrame = {
     val nodes = Tables.nation(spark, dir).select(col("n_name").as("node"))
-    pagerank(tradeEdges(spark, dir), nodes, iters, coalesceTo = Some(1))
+    pagerank(tradeEdges(spark, dir), nodes, 3, coalesceTo = Some(1))
       .withColumnRenamed("node", "n_name")
   }
 

@@ -168,25 +168,27 @@ object Sampling {
   /** Shard MANIFEST — the data card a packed dataset ships with: for
     * each shard of [[shuffleOrder]]'s deterministic assignment, the
     * doc/token/char totals, source diversity, and the position range
-    * proving the shard is a contiguous slice of the global order. All
-    * exact integer aggregates (one hash aggregation keyed on ≤
-    * ⌈N/shardSize⌉ shards after the shuffle's own prefix-sum); the
-    * audit a consumer runs BEFORE training to catch truncated uploads,
-    * skewed source mix, or token-budget drift — per shard, without
-    * scanning shard contents. */
-  def shardManifest(docs: DataFrame, shardSize: Long = 1000): DataFrame =
-    docs
-      .select(col("doc_id"), col("source"), col("n_chars").cast("long").as("nc"),
-        size(TextAnalysis.tokens(col("text"))).cast("long").as("toks"))
-      .join(shuffleOrder(docs, shardSize).select(col("doc_id"), col("pos"), col("shard")),
-        "doc_id")
-      .groupBy(col("shard"))
+    * proving the shard is a contiguous slice of the global order. The
+    * shuffle's prefix sum runs over the audited columns themselves, so
+    * nothing joins back on `doc_id`; then one hash aggregation keyed on
+    * ≤ ⌈N/shardSize⌉ shards, all exact integer aggregates. The audit a
+    * consumer runs BEFORE training to catch truncated uploads, skewed
+    * source mix, or token-budget drift — per shard, without scanning
+    * shard contents. */
+  def shardManifest(docs: DataFrame, shardSize: Long = 1000): DataFrame = {
+    val audited = docs.select(col("doc_id"), col("source"),
+      col("n_chars").cast("long").as("nc"),
+      size(TextAnalysis.tokens(col("text"))).cast("long").as("toks"),
+      lit(1L).as("one"))
+    prefixSum(audited, "doc_id", "one", ":shuffle")
+      .groupBy(expr(s"global_start div $shardSize").as("shard"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("toks")).as("n_tokens"),
         sum(col("nc")).as("n_chars"),
         countDistinct(col("source")).as("n_sources"),
-        min(col("pos")).as("pos_lo"),
-        max(col("pos")).as("pos_hi"))
+        min(col("global_start")).as("pos_lo"),
+        max(col("global_start")).as("pos_hi"))
+  }
 
   /** Temperature-scaled stratum rebalancing — the multilingual-LM
     * "alpha sampling" knob (sample stratum i with probability ∝

@@ -965,11 +965,11 @@ object Similarity {
   /** Driver entry: DBSCAN of the embedding corpus under cos ≥ τ, pair
     * mine via the size-routed [[graft.operators.Dedup.embeddingDedup]]
     * ladder (exact at this surface; SemDeDup cells past it). */
-  def dbscanEmbeddings(embeddings: DataFrame, minPts: Int = 3): DataFrame =
+  def dbscanEmbeddings(embeddings: DataFrame): DataFrame =
     dbscan(embeddings.select(col("vec_id")),
       graft.operators.Dedup.embeddingDedup(embeddings)
         .select(col("id_a"), col("id_b")),
-      minPts)
+      3)
 
   /** HARD-NEGATIVE MINING for contrastive training — per query vector,
     * the top-k most-similar vectors carrying a DIFFERENT label. High

@@ -38,21 +38,21 @@ class Catalog(spark: SparkSession, baseDir: String,
   private def hconf = spark.sparkContext.hadoopConfiguration
 
   /** Spark's `_SUCCESS` commit marker — the commit of the plain layouts
-    * (zone maps, partitioned and snapshot layouts) that carry no
-    * manifest. */
+    * (zone maps and partitioned layouts) that carry no manifest. */
   private def hasSuccess(dir: Path): Boolean =
     dir.getFileSystem(hconf).exists(new Path(dir, "_SUCCESS"))
 
   // ──────────────────────────────────────────────────────────────────
   // DERIVED STATE. Every family below — the single-table states (the
-  // MVs and saveDerived), the ANN and text indexes, SCD2 history and
-  // the join MV — commits through ONE protocol ([[StateDir]]): data
-  // lands in directories that are written once and never rewritten,
-  // and a numbered manifest under `<name>/_manifest` lists each part's
-  // schema and live files, the family, its metadata and the high-water
-  // mark of applied batch ids. A commit publishes the next manifest
-  // atomically and only then deletes what it no longer lists; a read
-  // takes the highest manifest and touches only the files it lists.
+  // MVs and saveDerived), the ANN and text indexes, SCD2 history, the
+  // join MV and the snapshots — commits through ONE protocol
+  // ([[StateDir]]): data lands in directories that are written once and
+  // never rewritten, and a numbered manifest under `<name>/_manifest`
+  // lists each part's schema and live files, the family, its metadata
+  // and the high-water mark of applied batch ids. A commit publishes the
+  // next manifest atomically and only then deletes what it no longer
+  // lists; a read takes the highest manifest and touches only the files
+  // it lists.
   //
   // EXACTLY-ONCE is one monotone rule for every family: a batch id at
   // or below the mark is a no-op (Structured Streaming's foreachBatch
@@ -70,6 +70,7 @@ class Catalog(spark: SparkSession, baseDir: String,
   private val Text = "text"
   private val Scd2 = "scd2"
   private val Join = "join"
+  private val Snap = "snapshot"
 
   private def stateDir(name: String) =
     new StateDir(spark, new Path(s"$derivedDir/$name"))
@@ -906,44 +907,38 @@ class Catalog(spark: SparkSession, baseDir: String,
   }
 
   /** SNAPSHOT a table state into the Catalog-owned versioned layout
-    * `derivedDir/snap_<name>/v<N>` — append-only time travel for
-    * derived datasets (the audit answer to "what did the corpus look
-    * like when we trained?"): each snapshot is an immutable
-    * `_SUCCESS`-committed parquet dir and versions only ever grow.
-    * An outer-level `_SUCCESS` marker makes the `snap_<name>` family
-    * read as committed to [[vacuumDerived]] (which judges
-    * `derivedDir`'s direct children); an interrupted snapshot write
-    * leaves a version dir without its own marker, which
-    * [[snapshotVersions]] skips. Returns the new version number. */
+    * `derivedDir/snap_<name>` — append-only time travel for derived
+    * datasets (the audit answer to "what did the corpus look like when
+    * we trained?"). Each version is an immutable part `v<N>` of the
+    * state's manifest, so a version is readable exactly when the
+    * commit that added it published, and versions only ever grow.
+    * Returns the new version number. */
   def snapshot(name: String, df: DataFrame): Int = {
-    val outer = new Path(s"$derivedDir/snap_$name")
-    val fs = outer.getFileSystem(hconf)
-    val next = snapshotVersions(name).lastOption.getOrElse(0) + 1
-    df.write.mode(SaveMode.ErrorIfExists).parquet(s"$outer/v$next")
-    // outer-level marker so vacuumDerived sees a committed layout
-    fs.create(new Path(outer, "_SUCCESS"), true).close()
+    val st = stateDir(s"snap_$name")
+    val parts = snapshotParts(st)
+    val next = versions(parts).lastOption.getOrElse(0) + 1
+    st.commit(Manifest(Snap, None, parts + (s"v$next" -> st.write(df, s"v$next"))))
     next
   }
 
+  private def snapshotParts(st: StateDir): Map[String, Part] =
+    st.latest.filter(_.family == Snap).fold(Map.empty[String, Part])(_.parts)
+
+  private def versions(parts: Map[String, Part]): Seq[Int] =
+    parts.keys.map(_.drop(1).toInt).toSeq.sorted
+
   /** Committed snapshot versions of `name`, ascending. */
-  def snapshotVersions(name: String): Seq[Int] = {
-    val outer = new Path(s"$derivedDir/snap_$name")
-    val fs = outer.getFileSystem(hconf)
-    if (!fs.exists(outer)) Seq.empty
-    else fs.listStatus(outer).toSeq.map(_.getPath.getName)
-      .filter(_.matches("v[0-9]+"))
-      .map(_.drop(1).toInt)
-      .filter(v => fs.exists(new Path(outer, s"v$v/_SUCCESS")))
-      .sorted
-  }
+  def snapshotVersions(name: String): Seq[Int] =
+    versions(snapshotParts(stateDir(s"snap_$name")))
 
   /** Read snapshot `version` of `name` (default: latest). */
   def readSnapshot(name: String, version: Int = -1): DataFrame = {
-    val vs = snapshotVersions(name)
-    require(vs.nonEmpty, s"no snapshots of $name")
-    val v = if (version < 0) vs.last
-    else { require(vs.contains(version), s"no snapshot v$version of $name"); version }
-    spark.read.parquet(s"$derivedDir/snap_$name/v$v")
+    val st = stateDir(s"snap_$name")
+    val parts = snapshotParts(st)
+    require(parts.nonEmpty, s"no snapshots of $name")
+    val v = if (version < 0) versions(parts).last else version
+    require(parts.contains(s"v$v"), s"no snapshot v$v of $name")
+    st.read(parts(s"v$v"))
   }
 
   /** Retention (TTL) purge — the GDPR/data-lifecycle verb: persist the
@@ -969,7 +964,7 @@ class Catalog(spark: SparkSession, baseDir: String,
     * deleted, and in a committed state every manifest but the highest
     * and every directory it does not list (an interrupted later
     * commit). Plain committed layouts — a `_SUCCESS` at their root
-    * ([[partitionedLayout]], `snap_*`, zone-mapped dirs) — are kept, a
+    * ([[partitionedLayout]], zone-mapped dirs) — are kept, a
     * directory holding states below it (a `publish` release) is
     * vacuumed inside, and any other directory is debris. Committed
     * state is never touched. Run it only while no refresh is in flight
@@ -1354,12 +1349,11 @@ object Catalog {
   }
 
   /** The orders ingest-gate demo contract — the canned rule set shared
-    * by the fs_contract driver row, the graft_contract TVF and the
-    * Shell's audit read: three predicate rules in one shared scan, a
-    * key-uniqueness rule, and a customer foreign key (broadcast
-    * anti-join at dimension scale). Scala callers compose their OWN
-    * rules with [[contractCard]]; this is the SQL surface's one-call
-    * form. */
+    * by the fs_contract driver row and the graft_contract TVF: three
+    * predicate rules in one shared scan, a key-uniqueness rule, and a
+    * customer foreign key (broadcast anti-join at dimension scale).
+    * Scala callers compose their OWN rules with [[contractCard]]; this
+    * is the SQL surface's one-call form. */
   def ordersContractCard(spark: SparkSession, dir: String): DataFrame =
     contractCard(graft.Tables.orders(spark, dir),
       predicates = Seq(

@@ -103,10 +103,12 @@ object CrashFs {
   * Every write verb runs once to count its mutating filesystem calls,
   * then once per crash point from the same on-disk pre-state: a fresh
   * Catalog must then read exactly the pre-state or the post-state,
-  * issuing no mutating call, and a retry must reach the post-state
-  * exactly once. Every call the Catalog makes itself is a crash point;
-  * of Spark's writer calls, every [[sparkStride]]-th one is (the first
-  * included). */
+  * issuing no mutating call; a [[Catalog.vacuumDerived]] of that
+  * on-disk state must leave each state as it read or at the
+  * post-state; and a retry must reach the post-state exactly once.
+  * Every call the Catalog makes itself is a crash point; of Spark's
+  * writer calls, every [[sparkStride]]-th one is (the first included),
+  * and so is its last `create`, the `_SUCCESS` marker of a write. */
 class CrashPointSpec extends SparkSpec {
   import spark.implicits._
 
@@ -175,6 +177,11 @@ class CrashPointSpec extends SparkSpec {
   private def scdState(c: Catalog, n: String) =
     state(rows(c.scd2MvHistory(n, "seq", "op")))
   private def joinState(c: Catalog, n: String) = state(rows(c.readJoinMv(n)))
+  private def snapState(c: Catalog, n: String) = state {
+    val vs = c.snapshotVersions(n)
+    require(vs.nonEmpty, s"no snapshots of $n")
+    vs.flatMap(v => s"v$v" +: rows(c.readSnapshot(n, v)))
+  }
 
   /** Directory names up to two levels under the derived dir. */
   private def layout(c: Catalog): Seq[String] = {
@@ -297,6 +304,16 @@ class CrashPointSpec extends SparkSpec {
         quiesce(); CrashFs.arm(None) },
       c => c.vacuumDerived(),
       c => Seq(state(rows(c.mvState("mv"))), layout(c))),
+    Verb("snapshot",
+      c => c.snapshot("s", agg(1)),
+      c => c.snapshot("s", agg(2)),
+      c => Seq(snapState(c, "s")),
+      retryAfterCommit = false),
+    Verb("retentionPurge",
+      _ => (),
+      c => c.retentionPurge("s", agg(2), col("n") > 1L),
+      c => Seq(snapState(c, "s")),
+      retryAfterCommit = false),
     Verb("dropDerived",
       c => c.refreshAggMv("mv", agg(1), keys, Some(1L)),
       c => c.dropDerived("mv"),
@@ -359,10 +376,12 @@ class CrashPointSpec extends SparkSpec {
     v.run(catalogAt(root))
     val nCatalog = CrashFs.calls(spark = false)
     val nSpark = CrashFs.calls(spark = true)
+    val nMarker = CrashFs.calls(spark = true, "create")
     val post = readFresh(v, root, failures, "post-state")
     assert((pre != post) == v.visible, s"${v.name}: pre-state $pre, post-state $post")
     val points = (1 to nCatalog).map(CrashFs.Point(spark = false, _)) ++
-      (1 to nSpark by sparkStride).map(CrashFs.Point(spark = true, _))
+      (1 to nSpark by sparkStride).map(CrashFs.Point(spark = true, _)) ++
+      (if (nMarker > 0) Seq(CrashFs.Point(spark = true, nMarker, "create")) else Nil)
     points.foreach { pt =>
       deleteTree(root); copyTree(snap, root)
       CrashFs.arm(Some(pt))
@@ -377,6 +396,17 @@ class CrashPointSpec extends SparkSpec {
               failures += s"$at: state $i is neither the pre- nor the post-state: " +
                 got(i).take(4).mkString("; ")
           }
+          val torn = Files.createTempDirectory(s"graft-crash-${v.name}-torn")
+          copyTree(root, torn)
+          CrashFs.arm(None)
+          Try { catalogAt(torn).vacuumDerived(); readFresh(v, torn, failures, at) }.fold(
+            e => failures += s"$at: vacuum or read after it threw $e",
+            swept => got.indices.foreach { i =>
+              if (swept(i) != got(i) && swept(i) != post(i))
+                failures += s"$at: a vacuum changed state $i to " +
+                  swept(i).take(4).mkString("; ")
+            })
+          deleteTree(torn)
           if (v.retryAfterCommit || got == pre) {
             CrashFs.arm(None)
             Try(v.run(catalogAt(root))).fold(

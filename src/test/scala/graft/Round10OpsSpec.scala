@@ -272,17 +272,15 @@ class Round10ShellSpec extends SparkSpec {
   test("round-10 shell verbs execute against a registered data dir") {
     val cat = new Catalog(spark, sfDir,
       Some(java.nio.file.Files.createTempDirectory("graft-sh10").toString))
-    assert(Shell.execute("kanon", spark, cat, sfDir))
-    assert(Shell.execute("kanon 3", spark, cat, sfDir))
-    assert(Shell.execute("paths 5", spark, cat, sfDir))
-    assert(Shell.execute("ndcg", spark, cat, sfDir))
+    assert(Shell.execute("run d_kanon", spark, cat, sfDir))
+    assert(Shell.execute("run e_paths", spark, cat, sfDir))
+    assert(Shell.execute("run s_ndcg", spark, cat, sfDir))
     assert(Shell.execute("doctor SELECT 1 AS one", spark, cat, sfDir))
-    // the SQL catch-all reaches the operator TVFs
+    // the SQL catch-all reaches the operator TVFs, literal arguments too
     assert(Shell.execute(
       s"SELECT count(*) AS n FROM graft_kanon('$sfDir')", spark, cat, sfDir))
-    // bad arity prints usage instead of dying
-    assert(Shell.execute("mwu a b c", spark, cat, sfDir))
-    assert(Shell.execute("mwu click click", spark, cat, sfDir))
+    assert(Shell.execute(
+      s"SELECT count(*) AS n FROM graft_kanon('$sfDir', 3)", spark, cat, sfDir))
   }
 }
 

@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.sources.Catalog
 
 /** The shell's procedure verbs must run the PRODUCTION prep path over a
   * registered corpus end-to-end: prepare → written + registered table →
   * SQL over the result; signature index → incremental prep against it;
-  * the near-dup ladder as a queryable view. This is the interactive
-  * client's analog of the reference CLI's job submission — the one verb
-  * surface plain SQL can't express. */
+  * the near-dup ladder as a queryable view — the verb surface plain SQL
+  * can't express. `run <entry>`, the analog of the reference CLI's job
+  * submission, must show any driver entry over the shell's data dir. */
 class ShellProcedureSpec extends SparkSpec {
   import spark.implicits._
 
@@ -68,18 +67,38 @@ class ShellProcedureSpec extends SparkSpec {
     assert(!Shell.execute("exit", spark, cat, dir))
   }
 
-  test("graph verbs rank and census the trade network from the shell") {
-    // read-only verbs over the star-schema dir itself
+  /** What `line` prints, after checking the session goes on. */
+  private def printed(line: String, cat: Catalog, dir: String): String = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(assert(Shell.execute(line, spark, cat, dir)))
+    out.toString("UTF-8")
+  }
+
+  /** `run <entry>` shows the entry's frame: every column in the header. */
+  private def runs(cat: Catalog, dir: String, entries: String*): Unit =
+    entries.foreach { e =>
+      val shown = printed(s"run $e", cat, dir)
+      SparkEntry.queries(e)(spark, dir).columns.foreach(c =>
+        assert(shown.contains(s"|$c"), s"run $e printed no column $c:\n$shown"))
+    }
+
+  test("run with no entry lists every driver entry by name") {
     val cat = new Catalog(spark, sfDir)
-    assert(Shell.execute("pagerank 2", spark, cat, sfDir))
-    val pr = spark.table("nation_pagerank")
-    assert(pr.count() == 25)
-    assert(pr.agg(sum("rank_scaled")).head().getLong(0) <= graft.operators.Graph.Scale)
-    assert(Shell.execute("triangles", spark, cat, sfDir))
-    assert(Shell.execute("degrees", spark, cat, sfDir))
-    assert(Shell.execute("bfs", spark, cat, sfDir))
-    assert(Shell.execute("gini", spark, cat, sfDir))
-    assert(Shell.execute("audit", spark, cat, sfDir))
+    assert(printed("run", cat, sfDir).linesIterator.toSeq ==
+      SparkEntry.queries.keys.toSeq.sorted)
+  }
+
+  test("run with an unknown entry says so and the session goes on") {
+    val cat = new Catalog(spark, sfDir)
+    assert(printed("run no_such_entry", cat, sfDir).trim == "no such entry: no_such_entry")
+    assert(printed("run q1_agg", cat, sfDir).contains("|l_returnflag"))
+  }
+
+  test("graph verbs rank and census the trade network from the shell") {
+    // driver entries over the star-schema dir itself
+    val cat = new Catalog(spark, sfDir)
+    runs(cat, sfDir, "g_pagerank", "g_triangles", "g_degree", "g_bfs", "q_gini",
+      "q_integrity", "e_late_audit")
     assert(Shell.execute("vacuum", spark, cat, sfDir))
   }
 
@@ -87,22 +106,13 @@ class ShellProcedureSpec extends SparkSpec {
     val cat = new Catalog(spark, sfDir)
     assert(Shell.execute("analyze lineitem l_orderkey l_returnflag", spark, cat, sfDir))
     assert(Shell.execute("analyze nation", spark, cat, sfDir))
-    assert(Shell.execute("abc", spark, cat, sfDir))
-    assert(Shell.execute("rfm", spark, cat, sfDir))
-    assert(Shell.execute("benford", spark, cat, sfDir))
-    assert(Shell.execute("changepoints", spark, cat, sfDir))
+    runs(cat, sfDir, "q_abc", "q_rfm", "q_benford", "e_cusum")
   }
 
   test("round-7c verbs: kcore/jaccard/dbscan/silhouette/chi2/acf/ttl") {
     val cat = new Catalog(spark, sfDir)
-    assert(Shell.execute("kcore", spark, cat, sfDir))
-    assert(Shell.execute("jaccard", spark, cat, sfDir))
-    assert(Shell.execute("dbscan", spark, cat, sfDir))
-    assert(Shell.execute("silhouette", spark, cat, sfDir))
-    assert(Shell.execute("chi2", spark, cat, sfDir))
-    assert(Shell.execute("acf", spark, cat, sfDir))
-    assert(Shell.execute("dedup_eval", spark, cat, sfDir))
-    assert(Shell.execute("drawdown", spark, cat, sfDir))
+    runs(cat, sfDir, "g_kcore", "g_jaccard", "s_dbscan", "s_silhouette", "q_chi2",
+      "e_acf", "d_dedup_eval", "q_drawdown")
     // ttl writes a snapshot — run it against a writable copy
     val dir = java.nio.file.Files.createTempDirectory("graft-shell-ttl").toString
     Tables.orders(spark, sfDir).write.parquet(s"$dir/orders.parquet")
@@ -115,31 +125,23 @@ class ShellProcedureSpec extends SparkSpec {
 
   test("round-9 verbs: quality/attribution/token_budget/mmr/ttest/anova") {
     val cat = new Catalog(spark, sfDir)
-    assert(Shell.execute("quality_model", spark, cat, sfDir))
-    assert(Shell.execute("quality_scores", spark, cat, sfDir))
-    assert(Shell.execute("attribution 7", spark, cat, sfDir))
-    assert(Shell.execute("token_budget 5000", spark, cat, sfDir))
-    assert(Shell.execute("mmr 3", spark, cat, sfDir))
-    assert(Shell.execute("ttest", spark, cat, sfDir))
-    assert(Shell.execute("anova", spark, cat, sfDir))
-    assert(Shell.execute("survival", spark, cat, sfDir))
-    assert(Shell.execute("mwu", spark, cat, sfDir))
-    assert(Shell.execute("mwu click error", spark, cat, sfDir))
-    assert(Shell.execute("attribution_multi", spark, cat, sfDir))
-    assert(Shell.execute("harmonic", spark, cat, sfDir))
+    runs(cat, sfDir, "t_quality_model", "t_quality_scores", "e_attribution",
+      "p_token_budget", "s_mmr", "q_ttest", "q_anova", "q_survival", "q_mwu",
+      "e_attribution_multi", "g_harmonic")
   }
 
   test("round-12 verbs: phrase / pca run from the shell") {
     val cat = new Catalog(spark, sfDir)
-    assert(Shell.execute("phrase data join", spark, cat, sfDir))
-    assert(Shell.execute("pca 2", spark, cat, sfDir))
+    // free-text arguments go through the SQL table functions
+    assert(printed(s"SELECT * FROM graft_bm25_phrase('$sfDir', 'data join')",
+      cat, sfDir).contains("|doc_id"))
+    runs(cat, sfDir, "s_pca_k")
   }
 
   test("round-13 verbs: hardneg / zonemap run from the shell") {
     val cat = new Catalog(spark, sfDir,
       Some(java.nio.file.Files.createTempDirectory("graft-shell-zm").toString))
-    assert(Shell.execute("hardneg 3", spark, cat, sfDir))
-    assert(Shell.execute("zonemap 1996-01-01 1996-06-30", spark, cat, sfDir))
+    runs(cat, sfDir, "s_hard_negatives", "fs_zonemap")
   }
 
   test("publish and explain verbs run from the shell") {

@@ -21,6 +21,10 @@
 #      graft/plans/ or to functions/CosineSimilarity.scala (home of the
 #      GraftExtensions session extensions) also runs PlanAuditSpec:
 #      session extensions shape the plan of every driver entry.
+#      A staged Shell.scala runs the Shell's specs (graft.ShellProcedureSpec,
+#      graft.Round10ShellSpec, and graft.PlanDoctorSpec for `doctor!`),
+#      and a staged functions/TableFunctions.scala runs the SQL table
+#      function spec (graft.SqlFrontDoorSpec).
 #   3. A staged src/main or src/test Scala file, or a staged
 #      tools/reach.py or tools/test_reach.py, runs the reachability
 #      check (tools/reach.py, no JVM): every member of src/main must be
@@ -107,6 +111,28 @@ if grep -qE "$catalog_re" <<<"$staged"; then
       > /tmp/precommit_catalog.log 2>&1 || {
     tail -30 /tmp/precommit_catalog.log >&2
     echo "precommit: REFUSED — derived-state specs failed" >&2
+    exit 1
+  }
+fi
+
+shell_re='graft/Shell\.scala'
+if grep -qE "$shell_re" <<<"$staged"; then
+  echo "precommit: shell specs..." >&2
+  (cd "$checkdir" && sbt -batch "testOnly graft.ShellProcedureSpec graft.Round10ShellSpec graft.PlanDoctorSpec" < /dev/null) \
+      > /tmp/precommit_shell.log 2>&1 || {
+    tail -30 /tmp/precommit_shell.log >&2
+    echo "precommit: REFUSED — shell specs failed" >&2
+    exit 1
+  }
+fi
+
+tvf_re='functions/TableFunctions\.scala'
+if grep -qE "$tvf_re" <<<"$staged"; then
+  echo "precommit: SQL table function specs..." >&2
+  (cd "$checkdir" && sbt -batch "testOnly graft.SqlFrontDoorSpec" < /dev/null) \
+      > /tmp/precommit_tvf.log 2>&1 || {
+    tail -30 /tmp/precommit_tvf.log >&2
+    echo "precommit: REFUSED — SQL table function specs failed" >&2
     exit 1
   }
 fi

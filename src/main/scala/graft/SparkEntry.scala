@@ -181,10 +181,6 @@ object SparkEntry {
     "e_sessionize" -> ((s, d) => Events.sessionize(Tables.events(s, d))),
     // the stateful streaming sessionizer as a real checkpointed run
     "e_session_stream" -> ((s, d) => streaming.EventStream.sessionizeReplay(s, d)),
-    // identical replay under the RocksDB state store (the 100 TB
-    // session-state deployment shape); same oracle as e_session_stream
-    "e_session_rocksdb" ->
-      ((s, d) => streaming.EventStream.sessionizeReplayRocksDb(s, d)),
     // the CMS sketch maintained AS a streaming MV: per-microbatch
     // d x w counter deltas folded by refreshAggMv == the batch sketch
     "e_cms_stream" ->
@@ -197,13 +193,11 @@ object SparkEntry {
     "e_lead_lag" -> ((s, d) => Events.interEventGaps(Tables.events(s, d))),
     "e_user_stats" -> ((s, d) => Events.userStats(Tables.events(s, d))),
     "e_asof" -> ((s, d) => AsOfJoin.purchaseAttribution(Tables.events(s, d))),
-    "e_asof_exec" -> ((s, d) => AsOfJoin.purchaseAttributionExec(Tables.events(s, d))),
     // a REAL streaming run (file source → watermarked flatMapGroupsWithState
     // → checkpointed parquet sink), read back for the batch oracle compare
     "e_asof_stream" -> ((s, d) => streaming.EventStream.purchaseAttributionReplay(s, d)),
     "e_asof_tol" -> ((s, d) => AsOfJoin.purchaseAttributionTol(Tables.events(s, d))),
     "e_asof_fwd" -> ((s, d) => AsOfJoin.viewNextPurchase(Tables.events(s, d))),
-    "e_asof_fwd_exec" -> ((s, d) => AsOfJoin.viewNextPurchaseExec(Tables.events(s, d))),
     "e_range_join" -> ((s, d) => Events.purchaseViewsWithin(Tables.events(s, d))),
     "e_json" -> ((s, d) => Events.propsHistogram(Tables.events(s, d))),
     "e_interval_join" -> ((s, d) => Events.maintenanceWindowCounts(Tables.events(s, d))),
@@ -1209,20 +1203,6 @@ object SparkEntry {
                                   ROWS UNBOUNDED PRECEDING) AS next_purchase_us
            FROM u)
          SELECT user_id, tsu AS view_us, next_purchase_us FROM w WHERE is_v = 1""",
-    // the forward-mode custom physical operator: identical result
-    "e_asof_fwd_exec" ->
-      """WITH u AS (
-           SELECT user_id, epoch_us(ts) AS tsu,
-                  CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END AS p_ts,
-                  CASE WHEN event_type = 'view' THEN 1 ELSE 0 END AS is_v,
-                  CASE WHEN event_type = 'purchase' THEN 0 ELSE 1 END AS ord
-           FROM events WHERE event_type IN ('view', 'purchase')),
-         w AS (
-           SELECT user_id, tsu, is_v,
-                  min(p_ts) OVER (PARTITION BY user_id ORDER BY tsu DESC, ord
-                                  ROWS UNBOUNDED PRECEDING) AS next_purchase_us
-           FROM u)
-         SELECT user_id, tsu AS view_us, next_purchase_us FROM w WHERE is_v = 1""",
     "e_asof" -> asOfSql,
     // the streaming replay finalizes every real event (sentinel-driven
     // watermark), so the batch as-of oracle checks it exactly
@@ -1255,20 +1235,6 @@ object SparkEntry {
          SELECT user_id, tsu AS purchase_us,
                 CASE WHEN last_view_us >= tsu - 3600000000 THEN last_view_us END AS last_view_us
          FROM w WHERE is_p = 1""",
-    // the custom physical as-of operator computes the identical result
-    "e_asof_exec" ->
-      """WITH u AS (
-           SELECT user_id, epoch_us(ts) AS tsu,
-                  CASE WHEN event_type = 'view' THEN epoch_us(ts) END AS view_ts,
-                  CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_p,
-                  CASE WHEN event_type = 'view' THEN 0 ELSE 1 END AS ord
-           FROM events WHERE event_type IN ('view', 'purchase')),
-         w AS (
-           SELECT user_id, tsu, is_p,
-                  max(view_ts) OVER (PARTITION BY user_id ORDER BY tsu, ord
-                                     ROWS UNBOUNDED PRECEDING) AS last_view_us
-           FROM u)
-         SELECT user_id, tsu AS purchase_us, last_view_us FROM w WHERE is_p = 1""",
     // hopping windows: win = 4 x slide exactly, so every event lands in
     // precisely 4 windows — generate the 4 starts with integer µs math
     "e_sliding" ->
@@ -1380,10 +1346,23 @@ object SparkEntry {
     // the streaming sessionizer's closed-session multiset equals the
     // batch sessionization (sentinel-driven watermark closes every
     // real session); same lag/cumsum mirror, grouped without session_id
-    "e_session_stream" -> sessionStreamSql,
-    // same sessions, RocksDB state store: the provider changes where
-    // state lives, never what it holds
-    "e_session_rocksdb" -> sessionStreamSql,
+    "e_session_stream" ->
+      """WITH g AS (
+           SELECT user_id, epoch_us(ts) AS tsu,
+                  lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)) AS prev
+           FROM events),
+         s AS (
+           SELECT user_id, tsu,
+                  CASE WHEN prev IS NULL OR tsu - prev > 1800000000 THEN 1 ELSE 0 END AS is_new
+           FROM g),
+         t AS (
+           SELECT user_id, tsu,
+                  CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu
+                                         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+           FROM s)
+         SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+                min(tsu) AS start_us, max(tsu) AS end_us
+         FROM t GROUP BY user_id, session_id""",
     // inner stream-stream join emits every pair once both sides arrive,
     // so the replay equals the plain batch theta join
     "e_ssjoin_stream" ->
@@ -5527,28 +5506,6 @@ object SparkEntry {
                        + (h95 - lo95) * (list_extract(vals, hi95 + 1) - list_extract(vals, lo95 + 1)))
                       * 1000000 + 0.5) / 1000000 AS p95_est
          FROM q2"""
-
-  /** Closed-session multiset of the streaming sessionizer (shared by
-    * e_session_stream and its RocksDB-state-store twin
-    * e_session_rocksdb): the batch lag/cumsum sessionization, grouped
-    * without session_id. */
-  private val sessionStreamSql: String =
-    """WITH g AS (
-           SELECT user_id, epoch_us(ts) AS tsu,
-                  lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)) AS prev
-           FROM events),
-         s AS (
-           SELECT user_id, tsu,
-                  CASE WHEN prev IS NULL OR tsu - prev > 1800000000 THEN 1 ELSE 0 END AS is_new
-           FROM g),
-         t AS (
-           SELECT user_id, tsu,
-                  CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu
-                                         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-           FROM s)
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-                min(tsu) AS start_us, max(tsu) AS end_us
-         FROM t GROUP BY user_id, session_id"""
 
   /** As-of purchase attribution (shared by e_asof and its SQL-front-door
     * twin sql_asof — graft_asof resolves to the same plan). */

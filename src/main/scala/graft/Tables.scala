@@ -27,7 +27,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private type Version = (String, Seq[(String, Long, Long)])
+  /** A table's file version: its path plus the sorted (path, length,
+    * modification time) of its data files (see [[load]]). */
+  private[graft] type Version = (String, Seq[(String, Long, Long)])
   /** Inferred schemas per session, keyed by file version (see [[load]]).
     * Weak in the session: a stopped session and its entries go away. */
   private val schemas = new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Version, StructType]]
@@ -50,13 +52,21 @@ object Tables {
     val path = s"$sfDir/$name.parquet"
     val perSession = schemas.synchronized(
       schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap()))
-    val key: Version = (path, dataFiles(spark, path))
+    val key = version(spark, sfDir, name)
     val schema = Option(perSession.get(key)).getOrElse {
       val inferred = spark.read.parquet(path).schema
       perSession.put(key, inferred)
       inferred
     }
     spark.read.schema(schema).parquet(path)
+  }
+
+  /** The file version of table `name` under `sfDir`: the key of
+    * [[load]]'s schema cache and of the replay sources built from the
+    * table (`streaming.Replay`). */
+  private[graft] def version(spark: SparkSession, sfDir: String, name: String): Version = {
+    val path = s"$sfDir/$name.parquet"
+    (path, dataFiles(spark, path))
   }
 
   /** The sorted (path, length, mtime) of the data files under `path`;

@@ -136,9 +136,9 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session extensions registering graft's native SQL functions, its
-  * table functions and the as-of join planner strategy. No optimizer
-  * rule is injected: Spark's own optimizer plans every query.
+/** Session extensions registering graft's native SQL functions and its
+  * table functions. No optimizer rule or planner strategy is
+  * injected: Spark's own optimizer and planner plan every query.
   * Wire with `SparkSession.builder().withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -188,6 +188,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[DecayedSum].getName, "decayed_sum"),
       (exprs: Seq[Expression]) => DecayedSum(exprs(0), exprs(1))))
     TableFunctions.register(ext)
-    ext.injectPlannerStrategy(session => new graft.plans.AsOfJoinStrategy(session))
   }
 }

@@ -26,8 +26,7 @@ object DocStream {
     import graft.operators.QualityModel
     val docs = graft.Tables.documents(spark, sfDir)
     val w = QualityModel.train(QualityModel.features(docs).persist(), 3)
-    val (dir, schema) = Replay.docSource(spark, sfDir)
-    Replay.runFrom(spark, dir, schema, maxFilesPerTrigger = 2) { stream =>
+    Replay.run(spark, Replay.docSource(spark, sfDir), maxFilesPerTrigger = 2) { stream =>
       QualityModel.score(stream, w).where(col("p_keep") >= 0.5)
     }
   }
@@ -54,8 +53,7 @@ object DocStream {
       Some(Catalog.warehouseLayoutRoot(spark, sfDir)))
     cat.dropDerived(name)
     cat.buildTextIndex(name, graft.Tables.documents(spark, sfDir).limit(0))
-    val (dir, schema) = Replay.docSource(spark, sfDir)
-    Replay.runForeachBatchFrom(spark, dir, schema, maxFilesPerTrigger) {
+    Replay.runForeachBatch(spark, Replay.docSource(spark, sfDir), maxFilesPerTrigger) {
       (batch, id) =>
         cat.upsertTextIndex(name, batch, id)
         // AUTO-MAINTAIN: compaction triggered from INSIDE the drive

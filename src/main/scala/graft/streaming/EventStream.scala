@@ -85,20 +85,21 @@ object EventStream {
   case class AsOfJoined(user_id: Long, left_us: Long, left_value: Double,
       asof_right_us: Option[Long], asof_right_value: Option[Double])
 
-  /** STREAM-STREAM AS-OF JOIN — the watermarked twin of
-    * [[graft.operators.AsOfJoin.asOf]]/`AsOfJoinExec`: each left event
-    * is joined to the same key's LATEST right event at-or-before its
-    * timestamp. Structured Streaming's built-in stream-stream join can
-    * only bound the match by a time interval; "the latest prior" needs
-    * ordered state, so this is flatMapGroupsWithState:
+  /** STREAM-STREAM AS-OF JOIN — the watermarked twin of the batch
+    * as-of join ([[graft.operators.AsOfJoin.purchaseAttribution]]):
+    * each left event is joined to the same key's LATEST right event
+    * at-or-before its timestamp. Structured Streaming's built-in
+    * stream-stream join can only bound the match by a time interval;
+    * "the latest prior" needs ordered state, so this is
+    * flatMapGroupsWithState:
     *
     *  - both streams are tagged and unioned (one watermark, one
     *    shuffle on the key — the same single-exchange lower bound the
     *    batch operator pays);
     *  - events at-or-below the watermark are FINAL: they are processed
     *    in (event time, side) order — rights fold into a running
-    *    lexicographic (ts, value) max, exactly the batch operator's
-    *    struct-max carry, and each left emits once with the carry at
+    *    lexicographic (ts, value) max, the batch window's running-max
+    *    carry, and each left emits once with the carry at
     *    its timestamp;
     *  - newer events wait in the per-key buffer (bounded by the
     *    watermark horizon) with an event-time timeout at the earliest
@@ -300,9 +301,8 @@ object EventStream {
     val sentinel = Seq((new java.sql.Timestamp(sentinelHrUs / 1000L),
         "view", 0L, 0.0))
       .toDF("hour_start", "event_type", "cnt", "sum_value")
-    val (handoff, schema) =
-      Replay.orderedHandoff(stage1, "hour_start", sentinel)
-    Replay.runFrom(spark, handoff, schema, maxFilesPerTrigger) { counts =>
+    val handoff = Replay.orderedHandoff(stage1, "hour_start", sentinel)
+    Replay.run(spark, handoff, maxFilesPerTrigger) { counts =>
       hourlyTopK(counts).toDF()
     }
       .where(col("hr") <= src.maxTsu / 3600000000L)
@@ -409,25 +409,11 @@ object EventStream {
     * (user, n_events, start, end) multiset therefore equals the batch
     * sessionization's — which the oracle mirrors with the lag/cumsum
     * SQL. */
-  def sessionizeReplay(spark: SparkSession, sfDir: String): DataFrame =
-    sessionizeReplayWith(spark, sfDir, stateStoreProvider = None)
-
-  /** [[sessionizeReplay]] under Spark's ROCKSDB state store — the
-    * 100 TB deployment shape: session state lives on executor local
-    * disk (incremental-checkpointed to the checkpoint location)
-    * instead of the default in-memory HDFS-backed map, so state size
-    * is bounded by disk, not heap. The provider changes WHERE state
-    * lives, never WHAT it holds — this replay runs against the exact
-    * e_session_stream oracle to pin that. */
-  def sessionizeReplayRocksDb(spark: SparkSession, sfDir: String): DataFrame =
-    sessionizeReplayWith(spark, sfDir, Some(Replay.RocksDbProvider))
-
-  private def sessionizeReplayWith(spark: SparkSession, sfDir: String,
-      stateStoreProvider: Option[String]): DataFrame = {
+  def sessionizeReplay(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     implicit val s: SparkSession = spark
     val src = Replay.source(spark, sfDir)
-    Replay.run(spark, src, stateStoreProvider = stateStoreProvider) { stream =>
+    Replay.run(spark, src) { stream =>
       sessionize(stream.select(col("user_id"), col("tsu"), col("value"))
         .as[Event]).toDF()
     }

@@ -100,7 +100,7 @@ class BloomJoinSpec extends SparkSpec {
 
   test("bloom MV: folded word deltas are bit-identical to the one-pass build") {
     val cat = new graft.sources.Catalog(spark, sfDir,
-      Some(java.nio.file.Files.createTempDirectory("graft-bloom").toString))
+      Some(tempDir("graft-bloom").toString))
     val keys = Tables.lineitem(spark, sfDir).select(col("l_orderkey"))
     val m = 1 << 14
     cat.refreshBloomMv("b",

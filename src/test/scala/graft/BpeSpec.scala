@@ -115,7 +115,7 @@ class BpeSpec extends SparkSpec {
     val plan = Bpe.encode(docs, learned).opPlanString
     assert(!plan.contains("Exchange"), s"encode must not shuffle:\n$plan")
     // and the same call tokenizes a stream (append mode, no state)
-    val dir = Files.createTempDirectory("graft-bpe-stream").toString
+    val dir = tempDir("graft-bpe-stream").toString
     docs.repartition(3).write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)

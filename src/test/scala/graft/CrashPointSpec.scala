@@ -340,14 +340,6 @@ class CrashPointSpec extends SparkSpec {
     } finally s.close()
   }
 
-  private def deleteTree(p: JPath): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[JPath]())
-        .forEach(q => Files.delete(q))
-      finally s.close()
-    }
-
   private def catalogAt(root: JPath) =
     new Catalog(spark, sfDir, Some(s"${CrashFs.scheme}://$root"))
 
@@ -365,8 +357,8 @@ class CrashPointSpec extends SparkSpec {
   /** Every failed check of `v`'s enumeration, one line each. */
   private def enumerate(v: Verb): Seq[String] = {
     val t0 = System.nanoTime()
-    val root = Files.createTempDirectory(s"graft-crash-${v.name}")
-    val snap = Files.createTempDirectory(s"graft-crash-${v.name}-pre")
+    val root = tempDir(s"graft-crash-${v.name}")
+    val snap = tempDir(s"graft-crash-${v.name}-pre")
     val failures = collection.mutable.Buffer.empty[String]
     CrashFs.arm(None)
     v.setup(catalogAt(root))
@@ -396,7 +388,7 @@ class CrashPointSpec extends SparkSpec {
               failures += s"$at: state $i is neither the pre- nor the post-state: " +
                 got(i).take(4).mkString("; ")
           }
-          val torn = Files.createTempDirectory(s"graft-crash-${v.name}-torn")
+          val torn = tempDir(s"graft-crash-${v.name}-torn")
           copyTree(root, torn)
           CrashFs.arm(None)
           Try { catalogAt(torn).vacuumDerived(); readFresh(v, torn, failures, at) }.fold(
@@ -434,8 +426,8 @@ class CrashPointSpec extends SparkSpec {
   }
 
   test("a torn compactJoinMv keeps every row through the next append and a vacuum") {
-    val root = Files.createTempDirectory("graft-crash-jvtorn")
-    val snap = Files.createTempDirectory("graft-crash-jvtorn-pre")
+    val root = tempDir("graft-crash-jvtorn")
+    val snap = tempDir("graft-crash-jvtorn-pre")
     CrashFs.arm(None)
     (1L to 3L).foreach(b => catalogAt(root).appendJoinMv("jv", fact(b), dim, keys, Some(b)))
     copyTree(root, snap)
@@ -461,7 +453,7 @@ class CrashPointSpec extends SparkSpec {
   private def replaysNoOp(name: String, build: Catalog => Unit,
       upsert: (Catalog, Long) => Unit, compact: Catalog => Unit,
       read: Catalog => Seq[String]): Unit = {
-    val root = Files.createTempDirectory(s"graft-replay-$name")
+    val root = tempDir(s"graft-replay-$name")
     CrashFs.arm(None)
     val cat = catalogAt(root)
     build(cat)
@@ -501,7 +493,7 @@ class CrashPointSpec extends SparkSpec {
 
   test("loadTextIndex starts no Spark job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val root = Files.createTempDirectory("graft-crash-nojob")
+    val root = tempDir("graft-crash-nojob")
     CrashFs.arm(None)
     val cat = catalogAt(root)
     cat.buildTextIndex("ti", texts(0))

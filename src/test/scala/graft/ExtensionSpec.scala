@@ -115,16 +115,23 @@ class NearestCellsSpec extends SparkSpec {
 class AsOfJoinSpec extends SparkSpec {
   import spark.implicits._
 
-  test("asOf attaches latest right payload at-or-before left ts") {
-    val trades = Seq((1L, 10L, "t1"), (1L, 20L, "t2"), (2L, 15L, "t3"))
-      .toDF("k", "ts", "trade")
-    val quotes = Seq((1L, 5L, 100.0), (1L, 10L, 101.0), (1L, 18L, 102.0), (2L, 20L, 103.0))
-      .toDF("k", "qts", "px")
-    val out = AsOfJoin.asOf(trades, quotes, "k", "ts", "qts", Seq("px"))
-      .select($"trade", $"asof_px").as[(String, Option[Double])].collect().toMap
-    assert(out("t1").contains(101.0)) // quote at exactly ts=10 included
-    assert(out("t2").contains(102.0))
-    assert(out("t3").isEmpty)         // no quote at-or-before 15 for key 2
+  /** Hand-built edge cases (epoch µs): user 1 has a view and a purchase
+    * at the same µs (20) and a view after its last purchase; user 2's
+    * only view comes after its only purchase; user 3's only purchase
+    * comes after its only view; clicks take no part. */
+  private lazy val edgeEvents = Seq(
+    (1L, "view", 10L), (1L, "view", 20L), (1L, "purchase", 20L),
+    (1L, "click", 25L), (1L, "purchase", 30L), (1L, "view", 40L),
+    (2L, "purchase", 5L), (2L, "view", 15L),
+    (3L, "view", 50L), (3L, "purchase", 60L))
+    .toDF("user_id", "event_type", "tsu")
+    .select($"user_id", $"event_type", timestamp_micros($"tsu").as("ts"))
+
+  test("purchaseAttribution: same-instant view counts, no prior view is null") {
+    val out = AsOfJoin.purchaseAttribution(edgeEvents)
+      .as[(Long, Long, Option[Long])].collect().toSet
+    assert(out == Set((1L, 20L, Some(20L)), (1L, 30L, Some(20L)),
+      (2L, 5L, None), (3L, 60L, Some(50L))))
   }
 
   test("purchaseAttribution: every purchase's last view is at-or-before it") {
@@ -133,16 +140,11 @@ class AsOfJoinSpec extends SparkSpec {
     assert(out.where($"last_view_us" > $"purchase_us").count() == 0)
   }
 
-  test("asOfForward attaches earliest right payload at-or-after left ts") {
-    val trades = Seq((1L, 10L, "t1"), (1L, 20L, "t2"), (2L, 15L, "t3"))
-      .toDF("k", "ts", "trade")
-    val quotes = Seq((1L, 5L, 100.0), (1L, 10L, 101.0), (1L, 18L, 102.0), (2L, 9L, 103.0))
-      .toDF("k", "qts", "px")
-    val out = AsOfJoin.asOfForward(trades, quotes, "k", "ts", "qts", Seq("px"))
-      .select($"trade", $"asofnext_px").as[(String, Option[Double])].collect().toMap
-    assert(out("t1").contains(101.0)) // quote at exactly ts=10 included
-    assert(out("t2").isEmpty)         // no quote at-or-after ts=20 for key 1
-    assert(out("t3").isEmpty)         // key 2's only quote is before 15
+  test("viewNextPurchase: same-instant purchase counts, no later purchase is null") {
+    val out = AsOfJoin.viewNextPurchase(edgeEvents)
+      .as[(Long, Long, Option[Long])].collect().toSet
+    assert(out == Set((1L, 10L, Some(20L)), (1L, 20L, Some(20L)),
+      (1L, 40L, None), (2L, 15L, None), (3L, 50L, Some(60L))))
   }
 
   test("viewNextPurchase: every view's next purchase is at-or-after it") {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.Catalog
 
@@ -11,7 +10,7 @@ import graft.sources.Catalog
 class KmvMvSpec extends SparkSpec {
 
   private def freshCat(): Catalog = new Catalog(spark, sfDir,
-    Some(Files.createTempDirectory("graft-kmvmv").toString))
+    Some(tempDir("graft-kmvmv").toString))
 
   private def hashed = Tables.lineitem(spark, sfDir)
     .select(col("l_returnflag"),

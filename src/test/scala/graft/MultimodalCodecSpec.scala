@@ -39,7 +39,7 @@ class MultimodalCodecSpec extends SparkSpec {
 
   test("decodeImages reads real PNG/JPEG/BMP files from the binaryFile source; corrupt bytes flag ok=false") {
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft-imgs").toString
+    val dir = tempDir("graft-imgs").toString
     val img = gradientImage(37, 23)
     ImageIO.write(img, "png", Paths.get(dir, "a.png").toFile)
     ImageIO.write(img, "jpg", Paths.get(dir, "b.jpg").toFile)

@@ -12,7 +12,7 @@ class PartitionedLayoutSpec extends SparkSpec {
   import spark.implicits._
 
   test("fs_partition_prune follows a rewritten orders table") {
-    val dir = Files.createTempDirectory("graft-layout").toString
+    val dir = tempDir("graft-layout").toString
     Files.list(Paths.get(sfDir)).forEach(p => Files.copy(p, Paths.get(dir, p.getFileName.toString)))
     val entry = SparkEntry.queries("fs_partition_prune")
     def rows(df: org.apache.spark.sql.DataFrame) =

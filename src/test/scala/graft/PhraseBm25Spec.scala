@@ -51,7 +51,7 @@ class PhraseBm25Spec extends SparkSpec {
   test("indexed phrase search equals the direct scan on the real corpus") {
     val docs = Tables.documents(spark, sfDir)
     val cat = new Catalog(spark, sfDir,
-      Some(java.nio.file.Files.createTempDirectory("graft-phrase").toString))
+      Some(tempDir("graft-phrase").toString))
     cat.buildTextIndex("pt", docs, positional = true)
     def hits(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -78,11 +78,10 @@ class AutoMaintainSpec extends SparkSpec {
     import graft.streaming.Replay
     val threshold = 3
     val cat = new Catalog(spark, sfDir,
-      Some(java.nio.file.Files.createTempDirectory("graft-automnt").toString))
+      Some(tempDir("graft-automnt").toString))
     val docs = Tables.documents(spark, sfDir)
     cat.dropDerived("am")
     cat.buildTextIndex("am", docs.limit(0))
-    val (dir, schema) = Replay.docSource(spark, sfDir)
     var maxSeen = 0
     var lastId = -1L
     // every commit deletes the segments its manifest no longer lists
@@ -91,7 +90,7 @@ class AutoMaintainSpec extends SparkSpec {
       root.listFiles().count(f => f.isDirectory &&
         f.getName.startsWith("postings_seg_b"))
     }
-    Replay.runForeachBatchFrom(spark, dir, schema, maxFilesPerTrigger = 1) {
+    Replay.runForeachBatch(spark, Replay.docSource(spark, sfDir), maxFilesPerTrigger = 1) {
       (batch, id) =>
         cat.upsertTextIndex("am", batch, id)
         cat.maintainOne("am", threshold): Unit
@@ -132,7 +131,7 @@ class DecileShiftSpec extends SparkSpec {
       TextAnalysis.portableHash60(col("event_id")).as("h"),
       col("value").as("val"), col("event_id"))
     val cat = new Catalog(spark, sfDir,
-      Some(java.nio.file.Files.createTempDirectory("graft-dshift").toString))
+      Some(tempDir("graft-dshift").toString))
     (0 until 3).foreach { b =>
       cat.refreshQsketchMv("inc", ev.where(pmod(col("event_id"), lit(3)) === b),
         Seq("cohort"), "h", "val", 256)

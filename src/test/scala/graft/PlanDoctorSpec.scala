@@ -105,7 +105,7 @@ class PlanDoctorSpec extends SparkSpec {
 
   test("doctor! latches the CI-gate flag on errors only") {
     val cat = new graft.sources.Catalog(spark, sfDir,
-      Some(java.nio.file.Files.createTempDirectory("graft-doc").toString))
+      Some(tempDir("graft-doc").toString))
     spark.range(100000000L).toDF("x").createOrReplaceTempView("doc_a")
     spark.range(100000000L).toDF("y").createOrReplaceTempView("doc_b")
     Shell.strictDoctorFailed = false

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
 
@@ -46,7 +44,7 @@ class QualityRulesSpec extends SparkSpec {
     val plan = TextAnalysis.gopherRules(docs, stops = TextAnalysis.EnStopwords)
       .opPlanString
     assert(!plan.contains("Exchange"), s"rules must not shuffle:\n$plan")
-    val dir = Files.createTempDirectory("graft-gopher-stream").toString
+    val dir = tempDir("graft-gopher-stream").toString
     val src = docs.select($"doc_id", $"text")
     src.repartition(3).write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(src.schema)

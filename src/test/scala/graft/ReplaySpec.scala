@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Events
 import graft.streaming.{EventStream, Replay}
 
 /** The shared replay source must make streaming output independent of
@@ -46,16 +50,38 @@ class ReplaySpec extends SparkSpec {
     assert(sentRows == 1L)
     assert(spark.read.parquet(newest.getAbsolutePath)
       .agg(max(col("user_id"))).as[Long].head() == a.sentinelUser)
+
+    // the cache key is the events file's version, not the dir: a
+    // rewritten events.parquet is replayed afresh, never from the old
+    // copy (the replay and the batch window share the e_tumbling oracle)
+    val dir = tempDir("graft-replay-rewrite")
+    val events = dir.resolve("events.parquet")
+    Files.copy(Paths.get(sfDir, "events.parquet"), events)
+    def multiset(df: DataFrame) = df
+      .select("hour_start", "event_type", "cnt", "sum_value")
+      .collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+    def replayed = multiset(EventStream.tumblingCountsReplay(spark, dir.toString))
+    def batch = multiset(Events.tumblingHourly(Tables.events(spark, dir.toString)))
+    val before = replayed
+    assert(before == batch)
+    val subset = dir.resolve("subset")
+    spark.read.parquet(events.toString).where(col("user_id") % 2 === 0)
+      .coalesce(1).write.parquet(subset.toString)
+    val part = subset.toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, events, StandardCopyOption.REPLACE_EXISTING)
+    val after = replayed
+    assert(after != before)
+    assert(after == batch)
   }
 
   test("state partition count derives from source bytes, not core count") {
     // a megabytes-scale local source gets the few partitions its bytes
     // justify; the same formula scales linearly with bytes and caps at
     // 32768 (beyond the cap, bytes-per-partition grows instead)
-    val dir = java.nio.file.Files.createTempDirectory("replay-parts-spec")
+    val dir = tempDir("replay-parts-spec")
     def fileOf(bytes: Int): Unit = {
       val f = dir.resolve(s"part-${bytes}")
-      java.nio.file.Files.write(f, new Array[Byte](bytes)): Unit
+      Files.write(f, new Array[Byte](bytes)): Unit
     }
     assert(Replay.streamShufflePartitions(spark, dir.toString) == 1) // empty dir
     fileOf(1 << 20)
@@ -65,7 +91,7 @@ class ReplaySpec extends SparkSpec {
     fileOf(1) // 64 MiB + 1 byte
     assert(Replay.streamShufflePartitions(spark, dir.toString) == 2)
     dir.toFile.listFiles().foreach(_.delete())
-    java.nio.file.Files.delete(dir)
+    Files.delete(dir)
     // a path the filesystem cannot see falls back to the session's
     // shuffle-partition setting, never to a silent 1 (the Hadoop-FS
     // resolution also covers hdfs://s3a:// sources, unlike java.io)

@@ -1,36 +1,47 @@
 package graft
 
-import graft.streaming.{EventStream, Replay}
+import graft.streaming.EventStream
 
-/** RocksDB state store for the stateful replays: the provider changes
-  * WHERE streaming state lives (executor local disk, incremental-
-  * checkpointed) — never WHAT it holds. Pins (a) the RocksDB
-  * sessionization replay emits exactly the default-provider multiset,
-  * (b) the conf is scoped to the replay (no session leak), and (c) the
-  * run really used RocksDB (its working dir appears under the
-  * checkpoint's state path via the provider's own layout). */
+/** RocksDB state store for the stateful replays: a deployment picks it
+  * with Spark's own `spark.sql.streaming.stateStore.providerClass` on
+  * its session, and the provider changes WHERE streaming state lives
+  * (executor local disk, incremental-checkpointed) — never WHAT it
+  * holds. Pins (a) the sessionization replay under RocksDB emits
+  * exactly the default-provider multiset and (b) the run really used
+  * RocksDB (its custom state metrics appear in the query's progress). */
 class RocksDbStateSpec extends SparkSpec {
 
-  test("sessionize replay under RocksDB == default provider, no conf leak") {
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
+  private val confKey = "spark.sql.streaming.stateStore.providerClass"
+
+  /** `body` with the session's state-store provider set to RocksDB,
+    * the previous setting restored afterwards. */
+  private def underRocksDb[T](body: => T): T = {
     val before = spark.conf.getOption(confKey)
-    val rocks = EventStream.sessionizeReplayRocksDb(spark, sfDir)
-      .collect().toSet
-    assert(spark.conf.getOption(confKey) == before, "conf leaked")
-    val default = EventStream.sessionizeReplay(spark, sfDir)
-      .collect().toSet
+    spark.conf.set(confKey,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally before match {
+      case Some(v) => spark.conf.set(confKey, v)
+      case None => spark.conf.unset(confKey)
+    }
+  }
+
+  private def multiset(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+
+  test("sessionize replay under RocksDB == default provider") {
+    val rocks = underRocksDb(multiset(EventStream.sessionizeReplay(spark, sfDir)))
+    val default = multiset(EventStream.sessionizeReplay(spark, sfDir))
     assert(rocks == default)
     assert(rocks.nonEmpty)
   }
 
   test("the RocksDB provider is actually engaged for the run") {
-    // run a tiny stateful replay and capture the provider from the
-    // query's own progress/metrics surface: RocksDB reports its
-    // distinctive customMetrics (rocksdbGetLatency etc.) which the
-    // default HDFS-backed provider never emits
-    import org.apache.spark.sql.functions._
-    val src = Replay.source(spark, sfDir)
-    var sawRocks = false
+    // capture the provider from the query's own progress/metrics
+    // surface: RocksDB reports its distinctive customMetrics
+    // (rocksdbGetLatency etc.) which the default HDFS-backed provider
+    // never emits
+    @volatile var sawRocks = false
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._
       override def onQueryStarted(e: QueryStartedEvent): Unit = ()
@@ -41,7 +52,7 @@ class RocksDbStateSpec extends SparkSpec {
     }
     spark.streams.addListener(listener)
     try {
-      EventStream.sessionizeReplayRocksDb(spark, sfDir).collect()
+      underRocksDb(EventStream.sessionizeReplay(spark, sfDir).collect())
       // progress events are async; poke until the listener saw one
       var waited = 0
       while (!sawRocks && waited < 50) { Thread.sleep(200); waited += 1 }

@@ -110,7 +110,7 @@ class AnnUpsertSpec extends SparkSpec {
   import graft.operators.Similarity
 
   private def freshCat() = new Catalog(spark, sfDir,
-    Some(java.nio.file.Files.createTempDirectory("graft-annup").toString))
+    Some(tempDir("graft-annup").toString))
 
   private def neighborSets(df: org.apache.spark.sql.DataFrame) =
     df.select(col("query_id"), col("neighbor_id"), col("rnk"))
@@ -271,7 +271,7 @@ class TopPathsSpec extends SparkSpec {
 class Round10ShellSpec extends SparkSpec {
   test("round-10 shell verbs execute against a registered data dir") {
     val cat = new Catalog(spark, sfDir,
-      Some(java.nio.file.Files.createTempDirectory("graft-sh10").toString))
+      Some(tempDir("graft-sh10").toString))
     assert(Shell.execute("run d_kanon", spark, cat, sfDir))
     assert(Shell.execute("run e_paths", spark, cat, sfDir))
     assert(Shell.execute("run s_ndcg", spark, cat, sfDir))

@@ -16,7 +16,7 @@ class QuantUpsertSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshCat() = new Catalog(spark, sfDir,
-    Some(java.nio.file.Files.createTempDirectory("graft-qup").toString))
+    Some(tempDir("graft-qup").toString))
 
   private def neighborSets(df: org.apache.spark.sql.DataFrame) =
     df.select(col("query_id"), col("neighbor_id"), col("rnk"))
@@ -137,7 +137,7 @@ class Scd2MvSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
 
   private def freshCat() = new Catalog(spark, sfDir,
-    Some(java.nio.file.Files.createTempDirectory("graft-scd2mv").toString))
+    Some(tempDir("graft-scd2mv").toString))
 
   // an upsert chain, a tombstone, a re-creation, and two quiet keys
   private def changes = Seq(
@@ -210,7 +210,7 @@ class QsketchMvSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
 
   private def freshCat() = new Catalog(spark, sfDir,
-    Some(java.nio.file.Files.createTempDirectory("graft-qskmv").toString))
+    Some(tempDir("graft-qskmv").toString))
 
   private def priced = Tables.lineitem(spark, sfDir)
     .select(col("l_returnflag"),
@@ -279,7 +279,7 @@ class SegmentCompactionSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
 
   private def freshCat() = new Catalog(spark, sfDir,
-    Some(java.nio.file.Files.createTempDirectory("graft-cmp").toString))
+    Some(tempDir("graft-cmp").toString))
 
   private def neighborSets(df: org.apache.spark.sql.DataFrame) =
     df.select(col("query_id"), col("neighbor_id"), col("rnk"))

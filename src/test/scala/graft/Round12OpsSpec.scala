@@ -35,7 +35,7 @@ class Round12AdviceSpec extends SparkSpec {
   test("rebuilding a text index under an existing name drops stale segments") {
     val docs = Tables.documents(spark, sfDir)
     val cat = new Catalog(spark, sfDir,
-      Some(java.nio.file.Files.createTempDirectory("graft-r12ti").toString))
+      Some(tempDir("graft-r12ti").toString))
     val query = Seq("data", "join", "scan")
     cat.buildTextIndex("ti", docs.where(col("doc_id") % 3 =!= 0))
     cat.upsertTextIndex("ti", docs.where(col("doc_id") % 3 === 0), 1L)

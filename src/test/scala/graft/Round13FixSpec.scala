@@ -10,7 +10,7 @@ class Round13FixSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshCat() = new Catalog(spark, sfDir,
-    Some(java.nio.file.Files.createTempDirectory("graft-r13").toString))
+    Some(tempDir("graft-r13").toString))
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getString(0), r.getLong(1))).toSet

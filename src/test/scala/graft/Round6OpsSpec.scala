@@ -239,7 +239,7 @@ class Round6OpsSpec extends SparkSpec {
   }
 
   test("partitionedLayout answers the partition filter from the listing") {
-    val root = java.nio.file.Files.createTempDirectory("graft-spec-layout").toString
+    val root = tempDir("graft-spec-layout").toString
     val v = new graft.sources.Catalog(spark, sfDir, Some(root))
       .partitionedLayout(Tables.orders(spark, sfDir), "orders-spec", "o_orderstatus")
     val pruned = v.where(col("o_orderstatus") === "F")

@@ -124,7 +124,7 @@ class Round6bOpsSpec extends SparkSpec {
 
   test("refreshAggMv accumulates durable state a fresh session resumes from") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-spec-mv").toString
+    val root = tempDir("graft-spec-mv").toString
     val cat = new graft.sources.Catalog(spark, root)
     val batch1 = Seq(("d1", 2L, 100L), ("d2", 1L, 50L)).toDF("day", "n", "c")
     val got1 = cat.refreshAggMv("orders_day", batch1, Seq("day"))

@@ -63,7 +63,7 @@ class Round7OpsSpec extends SparkSpec {
 
   test("vacuumDerived removes torn state, never committed state") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-spec-vac").toString
+    val root = tempDir("graft-spec-vac").toString
     val cat = new graft.sources.Catalog(spark, root)
     cat.refreshAggMv("good", Seq(("a", 1L)).toDF("k", "n"), Seq("k"))
     // multi-part layouts commit per part: their `_SUCCESS` markers sit
@@ -136,7 +136,7 @@ class Round7OpsSpec extends SparkSpec {
 
   test("snapshots are append-only versioned time travel, vacuum-safe") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-spec-snap").toString
+    val root = tempDir("graft-spec-snap").toString
     val cat = new graft.sources.Catalog(spark, root)
     assert(cat.snapshotVersions("corpus").isEmpty)
     assert(cat.snapshot("corpus", Seq((1L, "a")).toDF("id", "t")) == 1)

@@ -164,7 +164,7 @@ class Round7bOpsSpec extends SparkSpec {
 
   test("refreshCdcMv state is batch-order independent and durable") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-spec-cdc").toString
+    val root = tempDir("graft-spec-cdc").toString
     val cat = new graft.sources.Catalog(spark, root)
     // key 1: newer upsert applied FIRST, older delete second — the
     // stored sequence must keep the upsert. key 2: newer tombstone
@@ -286,7 +286,7 @@ class Round7bOpsSpec extends SparkSpec {
   }
 
   test("saveAnnIndex: a fresh session serves identical results from disk") {
-    val root = java.nio.file.Files.createTempDirectory("graft-spec-ann").toString
+    val root = tempDir("graft-spec-ann").toString
     val emb = Tables.embeddings(spark, sfDir)
     val built = Similarity.buildIvfIndex(emb)
     val queries = emb.where(col("vec_id") < 5)
@@ -307,7 +307,7 @@ class Round7bOpsSpec extends SparkSpec {
 
   test("refreshAggMv retracts: a negative-counter correction delta lands exactly") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-spec-retr").toString
+    val root = tempDir("graft-spec-retr").toString
     val cat = new graft.sources.Catalog(spark, root)
     cat.refreshAggMv("mv", Seq(("a", 5L, 100L), ("b", 2L, 40L))
       .toDF("k", "cnt", "sum_v"), Seq("k"))
@@ -385,7 +385,7 @@ class Round7bOpsSpec extends SparkSpec {
 
   test("refreshAggMv with a batch id is exactly-once under retries") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-spec-eo").toString
+    val root = tempDir("graft-spec-eo").toString
     val cat = new graft.sources.Catalog(spark, root)
     val d1 = Seq(("a", 1L)).toDF("k", "n")
     cat.refreshAggMv("mv", d1, Seq("k"), Some(0L))
@@ -403,7 +403,7 @@ class Round7bOpsSpec extends SparkSpec {
   }
 
   test("saveDerived/loadDerived: the minhash index survives a fresh session") {
-    val root = java.nio.file.Files.createTempDirectory("graft-spec-sig").toString
+    val root = tempDir("graft-spec-sig").toString
     val docs = Tables.documents(spark, sfDir)
     val idx = graft.operators.Dedup.buildMinhashIndex(docs)
     new graft.sources.Catalog(spark, root).saveDerived("sig_index", idx)
@@ -465,7 +465,7 @@ class Round7bOpsSpec extends SparkSpec {
   }
 
   test("publish commits a complete, internally-consistent release") {
-    val root = java.nio.file.Files.createTempDirectory("graft-spec-pub").toString
+    val root = tempDir("graft-spec-pub").toString
     val docs = Tables.documents(spark, sfDir)
     val cat = new graft.sources.Catalog(spark, root)
     val summary = graft.operators.CorpusPipeline.publish(cat, docs, "rel1", 100)

@@ -162,7 +162,7 @@ class Round7cOpsSpec extends SparkSpec {
   test("retentionPurge: audit card is exact, pre-purge state stays readable") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-spec-ttl").toString
+    val root = tempDir("graft-spec-ttl").toString
     val cat = new graft.sources.Catalog(spark, root)
     val t = Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L)).toDF("id", "age")
     // purge age > 25 → keeps {1,2}; card 2/2; snapshot v1 = kept slice

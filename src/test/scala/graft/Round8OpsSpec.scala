@@ -145,7 +145,7 @@ class Round8OpsSpec extends SparkSpec {
 
   test("refreshCdcMv: struct (us, eid) sequence pins same-microsecond ties") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-cdctie").toString
+    val root = tempDir("graft-cdctie").toString
     val cat = new graft.sources.Catalog(spark, root)
     def change(us: Long, eid: Long, v: Long) =
       Seq((1L, us, eid, "u", v)).toDF("user_id", "us", "eid", "op", "v")

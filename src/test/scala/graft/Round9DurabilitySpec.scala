@@ -20,7 +20,7 @@ class Round9DurabilitySpec extends SparkSpec {
 
   test("appendJoinMv: a retried batch id appends nothing (exactly-once)") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-jmv").toString
+    val root = tempDir("graft-jmv").toString
     val cat = new graft.sources.Catalog(spark, root)
     val dim = Seq((1L, "x"), (2L, "y")).toDF("k", "name")
     val d1 = Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
@@ -37,7 +37,7 @@ class Round9DurabilitySpec extends SparkSpec {
 
   test("appendJoinMv: a torn segment is invisible and the retry heals it") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-jmvtorn").toString
+    val root = tempDir("graft-jmvtorn").toString
     val cat = new graft.sources.Catalog(spark, root)
     val dim = Seq((1L, "x")).toDF("k", "name")
     cat.appendJoinMv("jv", Seq((1L, 10L)).toDF("k", "v"), dim, Seq("k"), Some(1L))
@@ -56,7 +56,7 @@ class Round9DurabilitySpec extends SparkSpec {
 
   test("compactJoinMv: folds segments, keeps rows, preserves latest-batch no-op") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-jmvcomp").toString
+    val root = tempDir("graft-jmvcomp").toString
     val cat = new graft.sources.Catalog(spark, root)
     val dim = Seq((1L, "x"), (2L, "y")).toDF("k", "name")
     cat.appendJoinMv("jv", Seq((1L, 10L)).toDF("k", "v"), dim, Seq("k"), Some(1L))
@@ -79,7 +79,7 @@ class Round9DurabilitySpec extends SparkSpec {
 
   test("maintain folds a join MV at its segment threshold, not below it") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-jmvmaint").toString
+    val root = tempDir("graft-jmvmaint").toString
     val cat = new graft.sources.Catalog(spark, root)
     val dim = Seq((1L, "x"), (2L, "y")).toDF("k", "name")
     (1L to 3L).foreach(b =>
@@ -97,7 +97,7 @@ class Round9DurabilitySpec extends SparkSpec {
 
   test("appendJoinMv: a fresh Catalog instance resumes from disk alone") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-jmvres").toString
+    val root = tempDir("graft-jmvres").toString
     val dim = Seq((1L, "x")).toDF("k", "name")
     new graft.sources.Catalog(spark, root)
       .appendJoinMv("jv", Seq((1L, 10L)).toDF("k", "v"), dim, Seq("k"), Some(1L))

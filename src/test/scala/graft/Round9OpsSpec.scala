@@ -143,7 +143,7 @@ class Round9OpsSpec extends SparkSpec {
     val (mn, mx) = counts.agg(min(unix_micros(col("hour_start"))),
       max(unix_micros(col("hour_start")))).as[(Long, Long)].head()
     val cutUs = mn + (mx - mn) * 6 / 10
-    val root = java.nio.file.Files.createTempDirectory("graft-topk-restart")
+    val root = tempDir("graft-topk-restart")
     val (srcDir, out, ckpt) =
       (s"$root/src", s"$root/out", s"$root/ckpt")
     // the first 60% of hours arrive, one ordered file

@@ -11,7 +11,7 @@ class Scd2BackfillSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshCat() = new Catalog(spark, sfDir,
-    Some(java.nio.file.Files.createTempDirectory("graft-bkf").toString))
+    Some(tempDir("graft-bkf").toString))
 
   private def chg(rows: (Long, Long, String, String)*) =
     rows.toDF("k", "seq", "op", "v")

@@ -12,7 +12,7 @@ class ShellProcedureSpec extends SparkSpec {
   import spark.implicits._
 
   test("shell prep/index/prep_incr/neardup run end-to-end over a registered corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-shell").toString
+    val dir = tempDir("graft-shell").toString
     Tables.documents(spark, sfDir).write.parquet(s"$dir/documents.parquet")
     val cat = new Catalog(spark, dir)
     cat.registerAll()
@@ -114,7 +114,7 @@ class ShellProcedureSpec extends SparkSpec {
     runs(cat, sfDir, "g_kcore", "g_jaccard", "s_dbscan", "s_silhouette", "q_chi2",
       "e_acf", "d_dedup_eval", "q_drawdown")
     // ttl writes a snapshot — run it against a writable copy
-    val dir = java.nio.file.Files.createTempDirectory("graft-shell-ttl").toString
+    val dir = tempDir("graft-shell-ttl").toString
     Tables.orders(spark, sfDir).write.parquet(s"$dir/orders.parquet")
     val wcat = new Catalog(spark, dir)
     wcat.registerAll()
@@ -140,12 +140,12 @@ class ShellProcedureSpec extends SparkSpec {
 
   test("round-13 verbs: hardneg / zonemap run from the shell") {
     val cat = new Catalog(spark, sfDir,
-      Some(java.nio.file.Files.createTempDirectory("graft-shell-zm").toString))
+      Some(tempDir("graft-shell-zm").toString))
     runs(cat, sfDir, "s_hard_negatives", "fs_zonemap")
   }
 
   test("publish and explain verbs run from the shell") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-shell-pub").toString
+    val dir = tempDir("graft-shell-pub").toString
     Tables.documents(spark, sfDir).write.parquet(s"$dir/documents.parquet")
     val cat = new Catalog(spark, dir)
     cat.registerAll()

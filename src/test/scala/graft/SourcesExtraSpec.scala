@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.sources.Catalog
@@ -30,7 +29,7 @@ class FormatRoundTripSpec extends SparkSpec {
   import spark.implicits._
 
   test("csv, json, and orc round-trip through Catalog.read") {
-    val dir = Files.createTempDirectory("graft-fmt").toString
+    val dir = tempDir("graft-fmt").toString
     val cat = new Catalog(spark, dir)
     val df = Tables.nation(spark, sfDir)
     df.coalesce(1).write.option("header", "true").csv(s"$dir/nation.csv")
@@ -49,7 +48,7 @@ class FormatRoundTripSpec extends SparkSpec {
   }
 
   test("text format reads lines") {
-    val dir = Files.createTempDirectory("graft-txt").toString
+    val dir = tempDir("graft-txt").toString
     val cat = new Catalog(spark, dir)
     Tables.documents(spark, sfDir).select($"text")
       .coalesce(1).write.text(s"$dir/docs.txt")
@@ -62,7 +61,7 @@ class CatalogVerbsSpec extends SparkSpec {
   import spark.implicits._
 
   test("delete removes a table from the listing; download reassembles one file") {
-    val dir = Files.createTempDirectory("graft-verbs").toString
+    val dir = tempDir("graft-verbs").toString
     val cat = new Catalog(spark, dir)
     Tables.nation(spark, sfDir).write.parquet(s"$dir/nation.parquet")
     Tables.region(spark, sfDir).write.parquet(s"$dir/region.parquet")
@@ -80,7 +79,7 @@ class CatalogVerbsSpec extends SparkSpec {
   }
 
   test("stats reads row counts from footers, matching actual counts") {
-    val dir = Files.createTempDirectory("graft-stats").toString
+    val dir = tempDir("graft-stats").toString
     val cat = new Catalog(spark, dir)
     Tables.nation(spark, sfDir).write.parquet(s"$dir/nation.parquet")
     assert(cat.stats().where($"tbl" === "nation").select($"n_rows").as[Long].head() ==
@@ -92,7 +91,7 @@ class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
   test("compact merges many small files without losing rows") {
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = tempDir("graft-compact").toString
     val cat = new Catalog(spark, dir)
     val events = Tables.events(spark, sfDir)
     events.repartition(16).write.parquet(s"$dir/frag")
@@ -177,7 +176,7 @@ class SortedWriteSpec extends SparkSpec {
   import spark.implicits._
 
   test("writeSorted produces range-ordered, internally-sorted files") {
-    val dir = Files.createTempDirectory("graft-sorted").toString + "/li"
+    val dir = tempDir("graft-sorted").toString + "/li"
     val cat = new Catalog(spark, sfDir)
     cat.writeSorted(
       cat.table("lineitem").select($"l_extendedprice", $"l_orderkey"),

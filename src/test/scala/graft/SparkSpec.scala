@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{Args, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The spec scale factor and session, defined once for every suite
@@ -18,6 +21,29 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session()
   val sfDir: String = SparkSpec.sfDir
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temp directory named `<prefix><random>`, deleted with
+    * everything under it when the suite has run. */
+  def tempDir(prefix: String): Path = {
+    val p = Files.createTempDirectory(prefix)
+    tempDirs.add(p)
+    p
+  }
+
+  /** Delete `p` and everything under it; a missing `p` is a no-op. */
+  def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try s.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(q => Files.delete(q))
+      finally s.close()
+    }
+
+  override def run(testName: Option[String], args: Args): Status =
+    try super.run(testName, args)
+    finally tempDirs.forEach(p => deleteTree(p))
 
   /** Executed-plan text with the `Tables.spread` input repartition
     * lines removed. The map-only / no-shuffle contracts in the specs

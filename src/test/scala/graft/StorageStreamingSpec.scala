@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.Catalog
 import graft.streaming.EventStream
@@ -19,7 +18,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("writeChunked bounds records per file (chunkinator analog)") {
-    val dest = Files.createTempDirectory("graft-chunks").toString + "/li"
+    val dest = tempDir("graft-chunks").toString + "/li"
     val cat = new Catalog(spark, sfDir)
     cat.writeChunked(cat.table("lineitem"), dest, maxRecordsPerFile = 500,
       numChunks = Some(4))
@@ -31,7 +30,7 @@ class CatalogSpec extends SparkSpec {
 
   test("partitionedLayout enables partition pruning") {
     val cat = new Catalog(spark, sfDir,
-      Some(Files.createTempDirectory("graft-part").toString))
+      Some(tempDir("graft-part").toString))
     val pruned = cat.partitionedLayout(cat.table("orders"), "orders", "o_orderstatus")
       .where($"o_orderstatus" === "F")
     val plan = pruned.queryExecution.executedPlan.toString
@@ -62,7 +61,7 @@ class EventStreamSpec extends SparkSpec {
   test("windowedCounts over a streaming file source matches batch totals") {
     val batch = Tables.events(spark, sfDir)
     // stream from a re-written copy (normalized µs timestamps)
-    val srcDir = Files.createTempDirectory("graft-stream-src").toString
+    val srcDir = tempDir("graft-stream-src").toString
     batch.write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", 4).parquet(srcDir)
@@ -86,7 +85,7 @@ class EventStreamSpec extends SparkSpec {
 
   test("sliding windows stream watermarked and agree with batch totals") {
     val batch = Tables.events(spark, sfDir)
-    val srcDir = Files.createTempDirectory("graft-sliding-src").toString
+    val srcDir = tempDir("graft-sliding-src").toString
     batch.write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", 4).parquet(srcDir)
@@ -109,7 +108,7 @@ class EventStreamSpec extends SparkSpec {
   test("stateful sessionizer emits sessions closed by the watermark") {
     val batch = Tables.events(spark, sfDir)
       .select($"user_id", unix_micros($"ts").as("tsu"), $"value")
-    val srcDir = Files.createTempDirectory("graft-sess-src").toString
+    val srcDir = tempDir("graft-sess-src").toString
     batch.write.mode("overwrite").parquet(srcDir)
     implicit val s = spark
     val events = spark.readStream.schema(batch.schema).parquet(srcDir)
@@ -126,7 +125,7 @@ class EventStreamSpec extends SparkSpec {
 
   test("stream-stream purchase-view join matches the batch pair set") {
     val batch = Tables.events(spark, sfDir)
-    val srcDir = Files.createTempDirectory("graft-ssjoin-src").toString
+    val srcDir = tempDir("graft-ssjoin-src").toString
     batch.write.mode("overwrite").parquet(srcDir)
     val replay = spark.read.parquet(srcDir)
 
@@ -171,7 +170,7 @@ class AsOfStreamSpec extends SparkSpec {
   private def runScenario(name: String, files: Int, perTrigger: Int): Seq[(Long, Long, Option[Long])] = {
     implicit val s = spark
     val batch = normalized
-    val srcDir = java.nio.file.Files.createTempDirectory(s"graft-asof-$name").toString
+    val srcDir = tempDir(s"graft-asof-$name").toString
     batch.repartition(files).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", perTrigger).parquet(srcDir)
@@ -199,7 +198,7 @@ class AsOfStreamSpec extends SparkSpec {
     val batch = normalized
     val cuts = batch.stat.approxQuantile("tsu", Array(0.25, 0.5, 0.75), 0.0)
     val bounds = (Seq(Long.MinValue) ++ cuts.map(_.toLong) :+ Long.MaxValue).sliding(2).toSeq
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-asof-incr").toString
+    val srcDir = tempDir("graft-asof-incr").toString
     // empty seed so the stream can start before the first chunk lands
     batch.limit(0).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(batch.schema)
@@ -262,9 +261,9 @@ class StreamRestartSpec extends SparkSpec {
 
   test("restart from checkpoint resumes exactly-once (no loss, no dup)") {
     val batch = Tables.events(spark, sfDir).select($"event_id", $"user_id", $"value")
-    val srcDir = Files.createTempDirectory("graft-restart-src").toString
-    val outDir = Files.createTempDirectory("graft-restart-out").toString + "/data"
-    val ckpt = Files.createTempDirectory("graft-restart-ckpt").toString
+    val srcDir = tempDir("graft-restart-src").toString
+    val outDir = tempDir("graft-restart-out").toString + "/data"
+    val ckpt = tempDir("graft-restart-ckpt").toString
 
     // first half of the input arrives
     val Array(h1, h2) = batch.randomSplit(Array(0.5, 0.5), seed = 7)

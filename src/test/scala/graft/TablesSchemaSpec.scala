@@ -52,7 +52,7 @@ class TablesSchemaSpec extends SparkSpec {
 
   /** Write `df` as ONE parquet file at `file` (the fixture layout). */
   private def writeFile(df: DataFrame, file: Path): Unit = {
-    val tmp = Files.createTempDirectory("graft-tables-write")
+    val tmp = tempDir("graft-tables-write")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Files.list(tmp).iterator().asScala
       .find(p => p.getFileName.toString.startsWith("part-")).get
@@ -68,7 +68,7 @@ class TablesSchemaSpec extends SparkSpec {
   }
 
   test("a rewritten table file is inferred again: an added column shows") {
-    val dir = Files.createTempDirectory("graft-tables-rewrite")
+    val dir = tempDir("graft-tables-rewrite")
     writeFile(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir.resolve("t.parquet"))
     assert(Tables.load(spark, dir.toString, "t").columns.toSeq == Seq("k", "v"))
     writeFile(Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("k", "v", "w"), dir.resolve("t.parquet"))
@@ -80,7 +80,7 @@ class TablesSchemaSpec extends SparkSpec {
   test("flipping events.ts from NTZ to UTC-adjusted still yields the same TIMESTAMP values") {
     val micros = (0 until 24).map(i => 1700000000000000L + i * 600000000L + i * 31L)
     val base = micros.toDF("us").withColumn("user_id", $"us" % 3)
-    val dir = Files.createTempDirectory("graft-tables-tsflip")
+    val dir = tempDir("graft-tables-tsflip")
     val file = dir.resolve("events.parquet")
     def eventsMicros(): Seq[Long] = {
       val ev = Tables.events(spark, dir.toString)
@@ -98,7 +98,7 @@ class TablesSchemaSpec extends SparkSpec {
   }
 
   test("overwriting an uploaded directory through writeChunked shows the new schema") {
-    val base = Files.createTempDirectory("graft-tables-upload").toString
+    val base = tempDir("graft-tables-upload").toString
     val cat = new Catalog(spark, base)
     val dest = s"$base/up.parquet"
     cat.writeChunked(Seq((1L, "x")).toDF("k", "v"), dest, maxRecordsPerFile = 1L)
@@ -122,7 +122,7 @@ class TablesSchemaSpec extends SparkSpec {
     // two part files with different columns: without schema merging the
     // schema comes from one file, with it from both — a session conf
     // parquet inference reads, like nanosAsLong and inferTimestampNTZ
-    val dir = Files.createTempDirectory("graft-tables-sessions")
+    val dir = tempDir("graft-tables-sessions")
     val table = dir.resolve("m.parquet")
     Seq((1L, "b")).toDF("a", "b").write.parquet(table.resolve("x=1").toString)
     Seq((2L, "c")).toDF("a", "c").write.parquet(table.resolve("x=2").toString)

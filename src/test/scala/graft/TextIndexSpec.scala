@@ -14,7 +14,7 @@ class TextIndexSpec extends SparkSpec {
   private val query = Seq("data", "join", "scan")
 
   private def freshCat() = new Catalog(spark, sfDir,
-    Some(java.nio.file.Files.createTempDirectory("graft-tidx").toString))
+    Some(tempDir("graft-tidx").toString))
 
   private def hits(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -71,7 +71,7 @@ class TextIndexSpec extends SparkSpec {
     // token count stays tiny, so only the route changes, not the load
     val rnd = new scala.util.Random(7)
     val pad = rnd.alphanumeric.take(1 << 20).mkString
-    val bigDir = java.nio.file.Files.createTempDirectory("tidx-big").toString
+    val bigDir = tempDir("tidx-big").toString
     (0 until 80).map(i =>
       (100000L + i, if (i < 3) s"data join scan doc$i" else s"$pad$i"))
       .toDF("doc_id", "text")

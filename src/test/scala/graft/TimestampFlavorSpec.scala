@@ -28,7 +28,7 @@ class TimestampFlavorSpec extends SparkSpec {
     (0 until 48).map(i => 1700000000000000L + i * 300000000L + i * 137L)
 
   private def writeFlavor(flavor: String): String = {
-    val dir = Files.createTempDirectory(s"graft-tsflavor-$flavor").toString
+    val dir = tempDir(s"graft-tsflavor-$flavor").toString
     val df = flavor match {
       case "ns-long" =>
         // nanosAsLong reads TIMESTAMP(NANOS) parquet as a plain long of
@@ -87,7 +87,7 @@ class TimestampFlavorSpec extends SparkSpec {
     // it over the inference conf.)
     // byte-copy the raw file into a dir (file streaming source wants a
     // directory; a Spark rewrite would replace the footer we're testing)
-    val dir = Files.createTempDirectory("graft-tsflavor-driver").toString
+    val dir = tempDir("graft-tsflavor-driver").toString
     Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       java.nio.file.Paths.get(dir, "events.parquet"))
     val batchSchema = spark.read.parquet(dir).schema

@@ -13,7 +13,7 @@ class ZoneMapSpec extends SparkSpec {
 
   test("range probe opens only intersecting files and equals the plain filter") {
     val cat = mkCat
-    val dest = java.nio.file.Files.createTempDirectory("graft-zm").toString
+    val dest = tempDir("graft-zm").toString
     val li = Tables.lineitem(spark, sfDir)
     cat.writeSorted(li, dest, 8, "l_shipdate")
     cat.buildZoneMap(dest, Seq("l_shipdate"))
@@ -37,7 +37,7 @@ class ZoneMapSpec extends SparkSpec {
 
   test("all-null-stats files skip; mixed null files are retained; sidecar invisible to data reads") {
     val cat = mkCat
-    val dest = java.nio.file.Files.createTempDirectory("graft-zm-null").toString
+    val dest = tempDir("graft-zm-null").toString
     // three range partitions → three files: grp 1 all-null v, grp 2
     // mixes nulls with in-range values, grp 3 out-of-range values
     val df = (
@@ -66,7 +66,7 @@ class ZoneMapSpec extends SparkSpec {
 
   test("2-D rectangle probe on a Z-ordered layout skips more than either 1-D probe") {
     val cat = mkCat
-    val dest = java.nio.file.Files.createTempDirectory("graft-zm-2d").toString
+    val dest = tempDir("graft-zm-2d").toString
     // two independent uniform dimensions (the ZOrderNSpec rationale:
     // lineitem's key columns correlate, useless for a skipping measure)
     val df = spark.range(100000).select(
@@ -94,7 +94,7 @@ class ZoneMapSpec extends SparkSpec {
 
   test("a stale zone map refuses to serve after a data rewrite") {
     val cat = mkCat
-    val dest = java.nio.file.Files.createTempDirectory("graft-zm-stale").toString
+    val dest = tempDir("graft-zm-stale").toString
     (1 to 100).map(i => (i.toLong, i.toString)).toDF("k", "s")
       .repartition(4).write.mode("overwrite").parquet(dest)
     cat.buildZoneMap(dest, Seq("k"))

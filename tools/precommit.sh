@@ -24,7 +24,11 @@
 #      A staged Shell.scala runs the Shell's specs (graft.ShellProcedureSpec,
 #      graft.Round10ShellSpec, and graft.PlanDoctorSpec for `doctor!`),
 #      and a staged functions/TableFunctions.scala runs the SQL table
-#      function spec (graft.SqlFrontDoorSpec).
+#      function spec (graft.SqlFrontDoorSpec). A staged streaming/*.scala
+#      or operators/AsOfJoin.scala (the replays and the batch as-of join
+#      they are checked against) runs graft.ReplaySpec,
+#      graft.RocksDbStateSpec, graft.StorageStreamingSpec and
+#      graft.AsOfJoinSpec, and re-drives the as-of and streaming entries.
 #   3. A staged src/main or src/test Scala file, or a staged
 #      tools/reach.py or tools/test_reach.py, runs the reachability
 #      check (tools/reach.py, no JVM): every member of src/main must be
@@ -137,6 +141,17 @@ if grep -qE "$tvf_re" <<<"$staged"; then
   }
 fi
 
+stream_re='graft/streaming/[^/]*\.scala|operators/AsOfJoin\.scala'
+if grep -qE "$stream_re" <<<"$staged"; then
+  echo "precommit: streaming and as-of specs..." >&2
+  (cd "$checkdir" && sbt -batch "testOnly graft.ReplaySpec graft.RocksDbStateSpec graft.StorageStreamingSpec graft.AsOfJoinSpec" < /dev/null) \
+      > /tmp/precommit_stream.log 2>&1 || {
+    tail -30 /tmp/precommit_stream.log >&2
+    echo "precommit: REFUSED — streaming and as-of specs failed" >&2
+    exit 1
+  }
+fi
+
 tables_re='graft/Tables\.scala'
 if grep -qE "$tables_re" <<<"$staged"; then
   echo "precommit: table-loader specs..." >&2
@@ -151,9 +166,9 @@ fi
 # Driver-entry smoke: any query name whose SparkEntry line is in the
 # staged diff gets re-driven against the oracle, and the plan audit
 # runs over the full driver surface.
-# Corpus-prep operator, Catalog and Tables changes re-drive the entries
-# that run them.
-if grep -qE "SparkEntry\.scala|$prep_re|$catalog_re|$tables_re" <<<"$staged"; then
+# Corpus-prep operator, Catalog, streaming/as-of and Tables changes
+# re-drive the entries that run them.
+if grep -qE "SparkEntry\.scala|$prep_re|$catalog_re|$stream_re|$tables_re" <<<"$staged"; then
   # the greps legitimately match nothing when the diff only touches
   # oracle SQL bodies or comments — don't let pipefail kill the hook
   touched=$(git diff --cached -U0 -- src/main/scala/graft/SparkEntry.scala \
@@ -166,6 +181,10 @@ if grep -qE "SparkEntry\.scala|$prep_re|$catalog_re|$tables_re" <<<"$staged"; th
   fi
   if grep -qE "$catalog_re" <<<"$staged"; then
     touched=$(tr , '\n' <<<"$touched,fs_incr_agg,fs_mv_lookup,fs_mv_stream,fs_bm25_indexed,fs_bm25_upsert,d_index_maint,e_scd2_stream,fs_scd2_backfill,fs_partition_prune" \
+      | sed '/^$/d' | sort -u | paste -sd, -)
+  fi
+  if grep -qE "$stream_re" <<<"$staged"; then
+    touched=$(tr , '\n' <<<"$touched,e_asof,e_asof_tol,e_asof_fwd,e_asof_stream,sql_asof,e_session_stream,e_tumbling_stream,d_quality_stream,d_index_stream" \
       | sed '/^$/d' | sort -u | paste -sd, -)
   fi
   if grep -qE "$tables_re" <<<"$staged"; then

@@ -54,10 +54,6 @@ ALLOW = {
         "test-only reference that pins the native portable_hash60 bit for bit",
     "TextAnalysis.aggRepetition":
         "test-only reference that pins the native repetition_stats bit for bit",
-    "AsOfJoin.asOf":
-        "test-only reference the as-of join exec is compared against",
-    "AsOfJoin.asOfForward":
-        "test-only reference the as-of join exec is compared against",
     "PlanDoctor.hasCartesianPlan":
         "test-only plan predicate the plan audit asserts with",
     "PlanDoctor.hasBnljPlan":

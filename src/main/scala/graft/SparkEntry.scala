@@ -481,9 +481,9 @@ object SparkEntry {
       val dest = s"${cat.derivedDir}/lineitem_zm"
       cat.writeSorted(Tables.lineitem(s, d), dest, 16, "l_shipdate")
       cat.buildZoneMap(dest, Seq("l_shipdate"))
-      cat.scanZoneMapped(dest, "l_shipdate",
+      cat.scanZoneMappedN(dest, Seq(("l_shipdate",
           lit("1996-01-01").cast("timestamp"),
-          lit("1996-06-30").cast("timestamp"))
+          lit("1996-06-30").cast("timestamp"))))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("cnt"),
           expr("CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0")
@@ -831,7 +831,7 @@ object SparkEntry {
     "fs_zorder" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
-        graft.sources.Catalog.zValue(col("l_partkey"), col("l_suppkey")).as("z"))
+        graft.sources.Catalog.zValueN(Seq(col("l_partkey"), col("l_suppkey"))).as("z"))
     }),
     "q_abc" -> ((s, d) => Analytics.abcClassification(Tables.lineitem(s, d))),
     "q_benford" -> ((s, d) => Analytics.benfordCard(Tables.orders(s, d))),

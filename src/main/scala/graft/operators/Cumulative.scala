@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Scale-safe cumulative scans over per-group VALUE-COUNT tables.
@@ -30,20 +31,16 @@ object Cumulative {
   /** Value buckets per group of every running form. */
   private val Buckets = 128
 
-  /** Append `outCol` = Σ cnt over rows of the same group with value ≤
-    * this row's value (inclusive running sum in value order). `vc` must
-    * have one row per (group, value) — the caller's value-count
-    * aggregate guarantees that, which is also what makes the in-bucket
-    * `orderBy(value)` a total order. Exact: bucketing only RE-PARTITIONS
-    * the scan; every count flows through integer sums, so the result is
-    * bit-identical to the single-window form.
-    *
-    * Degenerate guard: a group whose values are all equal has
-    * min == max (zero-width buckets); route it to bucket 1 — the
-    * single-row case the offset cumsum handles trivially. */
-  def runningSum(vc: DataFrame, groupCols: Seq[String], valueCol: String,
-      cntCol: String, outCol: String, nBuckets: Int = Buckets): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  /** The bucket prelude every running form shares: `vc` joined to its
+    * per-group value min/max and given `__bk` = the value's
+    * `width_bucket` between them — bucket 1 for a group whose values
+    * are all equal (min == max: zero-width buckets, the single-row
+    * case the offset scan handles trivially) — plus the in-bucket
+    * window (group and bucket, value order, rows from the bucket's
+    * first through `inBucketEnd` relative to the current one) and the
+    * offset window over the group's earlier buckets. */
+  private def bucketed(vc: DataFrame, groupCols: Seq[String], valueCol: String,
+      nBuckets: Int, inBucketEnd: Long): (DataFrame, WindowSpec, WindowSpec) = {
     val g = groupCols.map(col)
     val v = col(valueCol).cast("double")
     val bounds = vc.groupBy(g: _*)
@@ -57,9 +54,24 @@ object Cumulative {
     val inBucket = Window
       .partitionBy(g :+ col("__bk"): _*)
       .orderBy(col(valueCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      .rowsBetween(Window.unboundedPreceding, inBucketEnd)
     val offW = Window.partitionBy(g: _*).orderBy(col("__bk"))
       .rowsBetween(Window.unboundedPreceding, -1)
+    (base, inBucket, offW)
+  }
+
+  /** Append `outCol` = Σ cnt over rows of the same group with value ≤
+    * this row's value (inclusive running sum in value order). `vc` must
+    * have one row per (group, value) — the caller's value-count
+    * aggregate guarantees that, which is also what makes the in-bucket
+    * `orderBy(value)` a total order. Exact: bucketing only RE-PARTITIONS
+    * the scan; every count flows through integer sums, so the result is
+    * bit-identical to the single-window form. */
+  def runningSum(vc: DataFrame, groupCols: Seq[String], valueCol: String,
+      cntCol: String, outCol: String, nBuckets: Int = Buckets): DataFrame = {
+    val g = groupCols.map(col)
+    val (base, inBucket, offW) =
+      bucketed(vc, groupCols, valueCol, nBuckets, Window.currentRow)
     val offsets = base.groupBy(g :+ col("__bk"): _*)
       .agg(sum(col(cntCol)).as("__bt"))
       .withColumn("__boff", coalesce(sum(col("__bt")).over(offW), lit(0L)))
@@ -80,23 +92,9 @@ object Cumulative {
     * are exactly [[runningSum]]'s. */
   def runningSums(vc: DataFrame, groupCols: Seq[String], valueCol: String,
       cntOutPairs: Seq[(String, String)]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val g = groupCols.map(col)
-    val v = col(valueCol).cast("double")
-    val bounds = vc.groupBy(g: _*)
-      .agg(min(v).as("__bmin"), max(v).as("__bmax"))
-    val base = vc.join(broadcast(bounds), groupCols)
-      .withColumn("__bk",
-        when(col("__bmin") === col("__bmax"), lit(1))
-          .otherwise(width_bucket(v, col("__bmin"), col("__bmax"),
-            lit(Buckets))))
-      .drop("__bmin", "__bmax")
-    val inBucket = Window
-      .partitionBy(g :+ col("__bk"): _*)
-      .orderBy(col(valueCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offW = Window.partitionBy(g: _*).orderBy(col("__bk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+    val (base, inBucket, offW) =
+      bucketed(vc, groupCols, valueCol, Buckets, Window.currentRow)
     val offsets = base.groupBy(g :+ col("__bk"): _*)
       .agg(sum(col(cntOutPairs.head._1)).as(s"__bt0"),
         cntOutPairs.tail.zipWithIndex.map { case ((c, _), i) =>
@@ -128,23 +126,9 @@ object Cumulative {
     * (group, value). */
   def runningMin(vc: DataFrame, groupCols: Seq[String], valueCol: String,
       mCol: String, outCol: String, nBuckets: Int = Buckets): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val g = groupCols.map(col)
-    val v = col(valueCol).cast("double")
-    val bounds = vc.groupBy(g: _*)
-      .agg(min(v).as("__bmin"), max(v).as("__bmax"))
-    val base = vc.join(broadcast(bounds), groupCols)
-      .withColumn("__bk",
-        when(col("__bmin") === col("__bmax"), lit(1))
-          .otherwise(width_bucket(v, col("__bmin"), col("__bmax"),
-            lit(nBuckets))))
-      .drop("__bmin", "__bmax")
-    val inBucket = Window
-      .partitionBy(g :+ col("__bk"): _*)
-      .orderBy(col(valueCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offW = Window.partitionBy(g: _*).orderBy(col("__bk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+    val (base, inBucket, offW) =
+      bucketed(vc, groupCols, valueCol, nBuckets, -1)
     val offsets = base.groupBy(g :+ col("__bk"): _*)
       .agg(min(col(mCol)).as("__bt"))
       .withColumn("__boff", min(col("__bt")).over(offW))

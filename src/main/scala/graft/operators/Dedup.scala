@@ -149,6 +149,9 @@ object Dedup {
     * at most `maxRows + 1` ids, so the routing decision is O(maxRows)
     * on any input — it never scans a 100 TB corpus to decide. */
   private def atMost(df: DataFrame, idCol: String, maxRows: Long): Boolean = {
+    // clamp: maxRows near/above Int.MaxValue must not wrap the limit()
+    // argument negative; a bound that high means the caller explicitly
+    // wants the exact path regardless
     val probeCap = math.min(maxRows, (Int.MaxValue - 1).toLong).toInt + 1
     df.select(col(idCol)).limit(probeCap).count() <= maxRows
   }
@@ -678,12 +681,8 @@ object Dedup {
     * price that makes 100 TB feasible). */
   def embeddingDedup(embeddings: DataFrame, threshold: Double = 0.4,
       exactMaxRows: Long = 10000): DataFrame = {
-    // clamp: exactMaxRows near/above Int.MaxValue must not wrap the
-    // limit() argument negative; a threshold that high means the caller
-    // explicitly wants the exact path regardless
-    val probeCap = math.min(exactMaxRows, (Int.MaxValue - 1).toLong).toInt + 1
-    val probe = embeddings.select(col("vec_id")).limit(probeCap).count()
-    if (probe <= exactMaxRows) embeddingNearDup(embeddings, threshold)
+    if (atMost(embeddings, "vec_id", exactMaxRows))
+      embeddingNearDup(embeddings, threshold)
     else {
       // full count only on the scale path (parquet counts are footer
       // metadata; next to the dedup itself this is noise) to size cells

@@ -65,24 +65,32 @@ object Events {
       .groupBy(date_format(col("w.start"), "yyyy-MM-dd HH:mm").as("win_start"))
       .agg(count(lit(1)).as("n_users"))
 
-  /** 30-minute-gap sessionization: lag + cumulative-sum session ids, then
-    * per-session stats. One shuffle on user_id; both windows share it. */
-  def sessionize(events: DataFrame): DataFrame = {
+  /** Session ids by the 30-minute gap: per user in `tsu` order, an
+    * event opens a new session when it is the user's first or follows
+    * the previous one by more than the gap, and `session_id` is the
+    * running count of openings (lag + cumulative sum; one shuffle on
+    * user_id, both windows share it). Appends `prev`, `is_new` and
+    * `session_id` to `e`, which carries `user_id` and `tsu`. */
+  private def withSessionIds(e: DataFrame): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("tsu"))
-    val withGap = events
-      .select(col("user_id"), col("value"), unix_micros(col("ts")).as("tsu"))
-      .withColumn("prev", lag(col("tsu"), 1).over(byUser))
+    e.withColumn("prev", lag(col("tsu"), 1).over(byUser))
       .withColumn("is_new",
-        when(col("prev").isNull || col("tsu") - col("prev") > SessionGapUs, 1L).otherwise(0L))
+        when(col("prev").isNull || col("tsu") - col("prev") > SessionGapUs, 1L)
+          .otherwise(0L))
       .withColumn("session_id", sum(col("is_new")).over(
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    withGap
+  }
+
+  /** 30-minute-gap sessionization: [[withSessionIds]], then
+    * per-session stats. */
+  def sessionize(events: DataFrame): DataFrame =
+    withSessionIds(events
+        .select(col("user_id"), col("value"), unix_micros(col("ts")).as("tsu")))
       .groupBy(col("user_id"), col("session_id"))
       .agg(
         count(lit(1)).as("n_events"),
         moneySum(col("value")).as("sum_value"),
         (max(col("tsu")) - min(col("tsu"))).as("duration_us"))
-  }
 
   /** Peak session CONCURRENCY — the sweep-line classic ("how many
     * sessions were open at the worst moment", the capacity-planning
@@ -93,15 +101,8 @@ object Events {
     * distinct-boundary grain — no global window holds the boundary
     * stream; earliest time at the peak reported (ties stated). */
   def peakConcurrency(events: DataFrame): DataFrame = {
-    val byUser = Window.partitionBy(col("user_id")).orderBy(col("tsu"))
-    val sess = events
-      .select(col("user_id"), unix_micros(col("ts")).as("tsu"))
-      .withColumn("prev", lag(col("tsu"), 1).over(byUser))
-      .withColumn("is_new",
-        when(col("prev").isNull || col("tsu") - col("prev") > SessionGapUs, 1L)
-          .otherwise(0L))
-      .withColumn("session_id", sum(col("is_new")).over(
-        byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val sess = withSessionIds(events
+        .select(col("user_id"), unix_micros(col("ts")).as("tsu")))
       .groupBy(col("user_id"), col("session_id"))
       .agg(min(col("tsu")).as("s"), max(col("tsu")).as("e"))
     val deltas = sess.select(col("s").as("t"), lit(1L).as("d"))
@@ -294,41 +295,25 @@ object Events {
         moneySum(col("value")).as("sum_value"),
         date_format(min(col("ts")), "yyyy-MM-dd HH:mm:ss").as("first_seen"))
 
-  /** Ordered conversion funnel: per user, the FIRST step-1 event, the
-    * first step-2 event strictly AFTER it, and the first step-3 event
-    * strictly after that — the strict-sequence semantics ("a click only
-    * counts if it followed the view that preceded it") that a naive
-    * per-type min gets wrong. Three per-user aggregates chained by
-    * equi-joins on user_id: after the first shuffle everything is
-    * co-partitioned, and each stage's state is one row per user — at
-    * 100 TB the width of this query is the user count, not the event
-    * count. Users who never reach step 1 are absent; later nulls mean
-    * the funnel stopped there. */
-  def funnel(events: DataFrame): DataFrame = {
-    val steps = Seq("view", "click", "purchase")
-    val e = events.select(col("user_id"), col("event_type"),
-      unix_micros(col("ts")).as("tsu"))
-    val s1 = e.where(col("event_type") === steps(0))
-      .groupBy(col("user_id")).agg(min(col("tsu")).as("t1"))
-    val s2 = e.where(col("event_type") === steps(1))
-      .join(s1, "user_id").where(col("tsu") > col("t1"))
-      .groupBy(col("user_id")).agg(min(col("tsu")).as("t2"))
-    val s3 = e.where(col("event_type") === steps(2))
-      .join(s2, "user_id").where(col("tsu") > col("t2"))
-      .groupBy(col("user_id")).agg(min(col("tsu")).as("t3"))
-    s1.join(s2, Seq("user_id"), "left")
-      .join(s3, Seq("user_id"), "left")
-      .select(col("user_id"), col("t1").as("first_view"),
-        col("t2").as("first_click"), col("t3").as("first_purchase"))
-  }
+  /** Ordered conversion funnel view → click → purchase: per user, the
+    * FIRST view, the first click strictly AFTER it, and the first
+    * purchase strictly after that — [[funnelSteps]] at those three
+    * steps, as `first_view`, `first_click`, `first_purchase`. */
+  def funnel(events: DataFrame): DataFrame =
+    funnelSteps(events, Seq("view", "click", "purchase"))
 
-  /** Generalized k-step funnel — [[funnel]]'s earliest-completion
-    * semantics at any depth: step i's first qualifying time is the min
-    * event time strictly after step i−1's, built by folding one
-    * filtered aggregate per step (k broadcast-friendly user-grain
-    * joins, never a window over the event stream). Output: one row per
-    * user who completed step 1, with `first_<step>` columns null-padded
-    * past the deepest step reached. */
+  /** Ordered k-step conversion funnel with earliest-completion
+    * semantics: step i's first qualifying time is the min event time
+    * strictly AFTER step i−1's — the strict-sequence semantics ("a
+    * click only counts if it followed the view that preceded it") that
+    * a naive per-type min gets wrong. Built by folding one filtered
+    * per-user aggregate per step, chained by equi-joins on user_id:
+    * after the first shuffle everything is co-partitioned, each
+    * stage's state is one row per user, and no window runs over the
+    * event stream — the width of this query is the user count, not the
+    * event count. Output: one row per user who reached step 1, with
+    * `first_<step>` columns (µs) null-padded past the deepest step
+    * reached. */
   def funnelSteps(events: DataFrame,
       steps: Seq[String] = FunnelSteps): DataFrame = {
     require(steps.length >= 2, "funnelSteps needs at least two steps")

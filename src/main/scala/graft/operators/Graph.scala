@@ -45,6 +45,30 @@ object Graph {
     }
   }
 
+  /** Materialize one iteration input (localCheckpoint, the BPE/kmeans
+    * iteration idiom): without the lineage cut every iteration's plan
+    * re-derives the whole edge pipeline — repeated fact scans and a
+    * plan tree that grows with the iteration count. Per-iteration
+    * state is node/edge-AGGREGATE grain; a caller that knows the graph
+    * is tiny (the 25-nation instance) pins it to one partition (32×
+    * fewer tasks per iteration); a large graph passes None and keeps
+    * the default parallelism. */
+  private def pin(df: DataFrame, coalesceTo: Option[Int]): DataFrame =
+    coalesceTo.map(df.coalesce).getOrElse(df).localCheckpoint()
+
+  /** The undirected view of a directed edge table: each edge once as
+    * (a = least, b = greatest) endpoint, self-loops dropped. */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.where(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+
+  /** Both directions of an [[undirected]] view as (x, nbr) rows. */
+  private def neighbours(und: DataFrame): DataFrame =
+    und.select(col("a").as("x"), col("b").as("nbr"))
+      .union(und.select(col("b").as("x"), col("a").as("nbr")))
+
   /** Nation-level trade edges: (src = supplier nation, dst = customer
     * nation, w = line items shipped). lineitem⋈orders is the ONLY
     * fact-fact shuffle; supplier/customer/nation dim chains broadcast.
@@ -90,26 +114,16 @@ object Graph {
     * total ≤ SCALE. */
   def pagerank(edges: DataFrame, nodes: DataFrame, iters: Int = 3,
       coalesceTo: Option[Int] = None): DataFrame = {
-    // materialize the per-iteration inputs ONCE (localCheckpoint, the
-    // BPE/kmeans iteration idiom): without the lineage cut every
-    // iteration's plan re-derives the whole edge pipeline — repeated
-    // fact scans and a plan tree that grows with the iteration count.
-    // Per-iteration state is node/edge-AGGREGATE grain; a caller that
-    // knows the graph is tiny (the 25-nation instance) pins it to one
-    // partition (32× fewer tasks per iteration); a large graph passes
-    // None and keeps the default parallelism.
-    def pin(df: DataFrame): DataFrame =
-      coalesceTo.map(df.coalesce).getOrElse(df).localCheckpoint()
     val n1 = nodes.agg(count(lit(1)).as("n_nodes"))
     val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("ow"))
     val e = pin(edges.join(outw, "src")
-      .select(col("src"), col("dst"), col("w"), col("ow")))
+      .select(col("src"), col("dst"), col("w"), col("ow")), coalesceTo)
     val maxW = e.agg(coalesce(max(col("w")), lit(0L))).head.getLong(0)
     require(maxW <= WeightLimit,
       s"pagerank: max edge weight $maxW overflows the rank*w 63-bit headroom " +
         s"(limit $WeightLimit); run the edges through Graph.prescaleWeights " +
         "first - only w/outw ratios matter")
-    val nodesN = pin(nodes.crossJoin(broadcast(n1)))
+    val nodesN = pin(nodes.crossJoin(broadcast(n1)), coalesceTo)
     var ranks = nodesN
       .select(col("node"), expr(s"CAST($Scale AS BIGINT) div n_nodes").as("rank"))
     for (_ <- 1 to iters) {
@@ -121,7 +135,8 @@ object Graph {
         .join(contrib, col("node") === col("dst"), "left")
         .select(col("node"),
           expr(s"(($Scale div 100) * 15) div n_nodes" +
-            s" + (85 * coalesce(contrib, CAST(0 AS BIGINT))) div 100").as("rank")))
+            s" + (85 * coalesce(contrib, CAST(0 AS BIGINT))) div 100").as("rank")),
+        coalesceTo)
       prev.unpersist()
     }
     ranks
@@ -145,11 +160,7 @@ object Graph {
     * re-expressed as joins Catalyst can reorder. Output is one
     * summary row. */
   def triangleCensus(edges: DataFrame): DataFrame = {
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint() // scanned three times below
+    val und = undirected(edges).localCheckpoint() // scanned three times below
     val nNodes = und.select(col("a").as("x"))
       .union(und.select(col("b").as("x"))).distinct().count()
     val nEdges = und.count()
@@ -196,121 +207,14 @@ object Graph {
       .withColumnRenamed("node", "n_name")
   }
 
-  /** Single-source shortest paths (hop count) by synchronous distance
-    * relaxation, run TO CONVERGENCE: the loop stops the first round
-    * that settles no new node (one bounded count per round on the
-    * already-checkpointed distance table — in unit-hop BFS a node is
-    * settled at its exact distance the first round it is reached, so
-    * a stationary settled count means every further round is a no-op),
-    * with `maxHops` as a CONTRACT CAP rather than the stop criterion.
-    * A 100×-diameter graph therefore relaxes fully under the default
-    * instead of silently truncating at a fixed depth; callers whose
-    * oracle replays a bounded recursion pin the cap (the driver entry
-    * passes 8 to match its `WITH RECURSIVE … WHERE d < 8` replay, and
-    * converges inside it). Each round is the scalable frontier shape —
-    * settled distances ⋈ edges on src, one min aggregate on dst, one
-    * outer join back — with the iteration inputs `localCheckpoint`ed
-    * (the pagerank/BPE idiom) so the plan does not re-derive the edge
-    * pipeline per round. After k rounds every node whose true distance
-    * is ≤ k is settled at its exact distance — the same contract as a
-    * depth-bounded recursive traversal: deliberately different
-    * formulations, same mathematical object.
-    *
-    * The graph is first SPARSIFIED to each node's top-`fanout`
-    * neighbors by weight (ties by name) — the nation trade graph is
-    * near-complete, so unsparsified BFS would trivially answer 1
-    * everywhere; the top-k backbone is also the shape a real corpus
-    * similarity graph is pruned to before traversal. The row_number
-    * window partitions on src over ≤|nodes| rows per partition — the
-    * edge table is aggregate-grain, never fact-grain, so the window is
-    * bounded no matter the SF. PRECONDITION: every edge endpoint
-    * appears in `nodes` (both routes then emit exactly the reachable
-    * subset). */
-  def shortestPaths(edges: DataFrame, nodes: DataFrame, sourceExpr: DataFrame,
-      fanout: Int = BackboneFanout, maxHops: Int = Int.MaxValue,
-      localMaxEdges: Long = 10000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byW = Window.partitionBy(col("src"))
-      .orderBy(col("w").desc, col("dst"))
-    val sedges = edges.where(col("src") =!= col("dst"))
-      .withColumn("__rn", row_number().over(byW))
-      .where(col("__rn") <= fanout)
-      .select(col("src"), col("dst"))
-      .localCheckpoint()
-    // SIZE-ROUTED (the connectedComponents ladder): the sparsified edge
-    // table is aggregate-grain — ≤ |nodes|·fanout rows by construction.
-    // Below localMaxEdges a driver BFS replaces 8 synchronous
-    // relaxation JOBS (each an eager checkpoint round-trip — measured
-    // ~0.4 s/round of pure scheduling at nation grain) with one
-    // bounded collect; past it the distributed relaxation below runs
-    // unchanged on a graph of any size. Both routes compute the same
-    // object: min-hop distances capped at maxHops.
-    if (sedges.count() <= localMaxEdges) {
-      val adj = sedges.collect()
-        .map(r => (r.getString(0), r.getString(1)))
-        .groupBy(_._1).map { case (s, a) => (s, a.map(_._2)) }
-      val src = sourceExpr.collect().head.getString(0)
-      val dist = scala.collection.mutable.LinkedHashMap(src -> 0L)
-      var frontier = Seq(src)
-      var d = 0L
-      while (frontier.nonEmpty && d < maxHops) {
-        d += 1
-        frontier = frontier.flatMap(u => adj.getOrElse(u, Array.empty[String]))
-          .distinct.filterNot(dist.contains)
-        frontier.foreach(v => dist(v) = d)
-      }
-      val spark = edges.sparkSession
-      import spark.implicits._
-      return dist.toSeq.toDF("node", "hops")
-    }
-    var dist = nodes.crossJoin(broadcast(sourceExpr))
-      .select(col("node"),
-        when(col("node") === col("__src"), lit(0L)).as("hops"))
-      .localCheckpoint()
-    var settled = dist.where(col("hops").isNotNull).count() // the source
-    var round = 0
-    var converged = false
-    while (!converged && round < maxHops) {
-      round += 1
-      val relaxed = sedges
-        .join(dist.where(col("hops").isNotNull), col("src") === col("node"))
-        .groupBy(col("dst")).agg(min(col("hops") + 1L).as("nh"))
-      val prev = dist
-      dist = prev
-        .join(relaxed, col("node") === col("dst"), "left")
-        .select(col("node"),
-          when(col("hops").isNull, col("nh"))
-            .when(col("nh").isNull, col("hops"))
-            .otherwise(least(col("hops"), col("nh"))).as("hops"))
-        .localCheckpoint()
-      val s2 = dist.where(col("hops").isNotNull).count()
-      prev.unpersist()
-      converged = s2 == settled // no new node settled: frontier exhausted
-      settled = s2
-    }
-    dist.where(col("hops").isNotNull)
-  }
-
-  /** Driver entry: hop distances from the alphabetically-first nation
-    * over the top-3-partner trade backbone. The hop cap stays at 8 to
-    * match the oracle's `WHERE d < 8` bounded recursion; the 25-node
-    * backbone converges well inside it. */
-  def nationShortestPaths(spark: SparkSession, dir: String): DataFrame = {
-    val nat = Tables.nation(spark, dir)
-    val nodes = nat.select(col("n_name").as("node"))
-    val source = nat.agg(min(col("n_name")).as("__src"))
-    shortestPaths(tradeEdges(spark, dir), nodes, source, maxHops = 8)
-      .withColumnRenamed("node", "n_name")
-  }
-
-  /** Out-neighbors per node the shortest-path backbones keep by default. */
-  private val BackboneFanout = 3
-
   /** Each node's top-`fanout` out-neighbors by weight (ties by dst
-    * name) — the same backbone [[shortestPaths]] traverses, exposed so
-    * [[kCore]] peels the identical graph. The row_number window
-    * partitions on src over an AGGREGATE-grain edge table (≤ |nodes|
-    * rows per partition), so it is bounded at any SF. */
+    * name), self-loops dropped — the backbone the nation traversal and
+    * community entries run on: the trade network is near-complete, so
+    * unsparsified BFS would trivially answer 1 everywhere, and the
+    * top-k backbone is also the shape a real corpus similarity graph
+    * is pruned to before traversal. The row_number window partitions
+    * on src over an AGGREGATE-grain edge table (≤ |nodes| rows per
+    * partition), so it is bounded at any SF. */
   def topKBackbone(edges: DataFrame, fanout: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byW = Window.partitionBy(col("src"))
@@ -321,35 +225,40 @@ object Graph {
       .select(col("src"), col("dst"))
   }
 
-  /** ALL-PAIRS hop distances over the sparsified backbone — the
-    * multi-source generalization of [[shortestPaths]], keyed by
-    * (src_node, node) instead of node. Same contract: run TO
-    * CONVERGENCE (a round that settles no new pair ends the loop) with
-    * `maxHops` as a cap, over the top-3 backbone. Same size
-    * routing: the backbone is aggregate-grain (≤ |nodes|·3 rows),
-    * so below `localMaxEdges` one bounded collect and a driver BFS per
-    * source replaces |V| rounds of job scheduling; past it the
-    * distributed form relaxes every source SIMULTANEOUSLY — each round
-    * is one settled ⋈ edges equi-join on the edge src plus one
+  /** Hop distances from every `sources` node over the directed graph
+    * `edges` (src, dst), by synchronous relaxation run TO CONVERGENCE:
+    * the loop stops the first round that settles no new (source, node)
+    * pair, with `maxHops` as a CONTRACT CAP rather than the stop
+    * criterion — callers whose oracle replays a bounded recursion pin
+    * it (the driver entries pass 8 to match their `WITH RECURSIVE …
+    * WHERE d < 8` replay, and converge inside it). In unit-hop BFS a
+    * pair is settled at its exact distance the first round it is
+    * reached, so after k rounds every pair whose true distance is ≤ k
+    * is exact — the contract of a depth-bounded recursive traversal.
+    * One source gives single-source shortest paths.
+    *
+    * SIZE-ROUTED (the connectedComponents ladder): at or below
+    * `localMaxEdges` — gated on the larger of the edge and source
+    * counts, since the driver route collects both and materializes
+    * every reachable pair — one bounded collect and a driver BFS per
+    * source replace the rounds of job scheduling (each an eager
+    * checkpoint round-trip, ~0.4 s a round at nation grain); past it
+    * the distributed form relaxes every source SIMULTANEOUSLY — each
+    * round is one frontier ⋈ edges equi-join on the edge src plus one
     * (src_node, dst) min-aggregate, so the round count is the graph
-    * DIAMETER, not |V|·diameter (the win over calling shortestPaths
-    * per source). State is O(reachable pairs) — at aggregate grain by
-    * construction, never fact grain.
+    * DIAMETER, not |sources|·diameter. State is O(reachable pairs).
     *
     * Returns (src_node, node, hops) for reachable pairs, hops ≥ 0
-    * (the 0-row is the source itself). */
-  def allPairsHops(edges: DataFrame, nodes: DataFrame,
+    * (the 0-row is the source itself); `sources` has one `node`
+    * column. */
+  def allPairsHops(edges: DataFrame, sources: DataFrame,
       maxHops: Int = Int.MaxValue, localMaxEdges: Long = 10000L): DataFrame = {
-    val sedges = topKBackbone(edges, BackboneFanout).localCheckpoint()
-    // the driver route collects BOTH the backbone and the node list and
-    // materializes all reachable pairs driver-side, so gate on whichever
-    // is larger — a sparse graph with a huge (mostly isolated) node list
-    // must still take the distributed route
-    if (math.max(sedges.count(), nodes.count()) <= localMaxEdges) {
+    val sedges = edges.select(col("src"), col("dst")).localCheckpoint()
+    if (math.max(sedges.count(), sources.count()) <= localMaxEdges) {
       val adj = sedges.collect()
         .map(r => (r.getString(0), r.getString(1)))
         .groupBy(_._1).map { case (s, a) => (s, a.map(_._2)) }
-      val srcs = nodes.collect().map(_.getString(0))
+      val srcs = sources.collect().map(_.getString(0))
       val spark = edges.sparkSession
       import spark.implicits._
       return srcs.toSeq.flatMap { src =>
@@ -366,10 +275,9 @@ object Graph {
         dist.toSeq.map { case (n, h) => (src, n, h) }
       }.toDF("src_node", "node", "hops")
     }
-    // distributed: settled pairs grow monotonically; in unit-hop BFS a
-    // pair is settled at its exact distance the first round it appears,
-    // so the anti-join keeps first-reach = min-hop
-    var settled = nodes
+    // distributed: settled pairs grow monotonically, so the anti-join
+    // keeps first-reach = min-hop
+    var settled = sources
       .select(col("node").as("src_node"), col("node"), lit(0L).as("hops"))
       .localCheckpoint()
     var round = 0
@@ -397,6 +305,16 @@ object Graph {
     settled
   }
 
+  /** Driver entry: hop distances from the alphabetically-first nation
+    * over the top-3-partner trade backbone. The hop cap stays at 8 to
+    * match the oracle's `WHERE d < 8` bounded recursion; the 25-node
+    * backbone converges well inside it. */
+  def nationShortestPaths(spark: SparkSession, dir: String): DataFrame = {
+    val source = Tables.nation(spark, dir).agg(min(col("n_name")).as("node"))
+    allPairsHops(topKBackbone(tradeEdges(spark, dir), 3), source, maxHops = 8)
+      .select(col("node").as("n_name"), col("hops"))
+  }
+
   /** Harmonic centrality of the nation trade backbone: for each node,
     * Σ over the OTHER reachable nodes of 1/hops — the centrality that
     * stays defined on disconnected graphs (unreachable contributes 0,
@@ -409,7 +327,8 @@ object Graph {
   def nationHarmonic(spark: SparkSession, dir: String): DataFrame = {
     val nat = Tables.nation(spark, dir)
     val nodes = nat.select(col("n_name").as("node"))
-    val d = allPairsHops(tradeEdges(spark, dir), nodes, maxHops = 8)
+    val d = allPairsHops(topKBackbone(tradeEdges(spark, dir), 3), nodes,
+      maxHops = 8)
     val scores = d.where(col("hops") > 0L)
       .groupBy(col("src_node"))
       .agg(count(lit(1)).as("nr"),
@@ -433,13 +352,9 @@ object Graph {
     * instance (the nation network) asks for its quadratic output
     * explicitly. */
   def neighborJaccard(edges: DataFrame): DataFrame = {
-    val und = edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint() // scanned four times below (nbrs ×2, degs, edge flag)
-    val nbrs = und.select(col("a").as("x"), col("b").as("nbr"))
-      .union(und.select(col("b").as("x"), col("a").as("nbr")))
+    // scanned four times below (nbrs ×2, degs, edge flag)
+    val und = undirected(edges).localCheckpoint()
+    val nbrs = neighbours(und)
     val degs = nbrs.groupBy(col("x")).agg(count(lit(1)).as("deg"))
     val common = nbrs.as("n1")
       .join(nbrs.as("n2"),
@@ -487,14 +402,9 @@ object Graph {
     * for tiny graphs. */
   def kCore(edges: DataFrame, k: Int = 3, maxRounds: Int = Int.MaxValue,
       coalesceTo: Option[Int] = None): DataFrame = {
-    def pin(df: DataFrame): DataFrame =
-      coalesceTo.map(df.coalesce).getOrElse(df).localCheckpoint()
-    val und = pin(edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct())
+    val und = pin(undirected(edges), coalesceTo)
     var alive = pin(und.select(col("a").as("x"))
-      .union(und.select(col("b").as("x"))).distinct())
+      .union(und.select(col("b").as("x"))).distinct(), coalesceTo)
     var nAlive = alive.count()
     var round = 0
     var converged = false
@@ -507,7 +417,7 @@ object Graph {
         .union(live.select(col("b").as("x")))
         .groupBy(col("x")).agg(count(lit(1)).as("deg"))
       val prev = alive
-      alive = pin(deg.where(col("deg") >= k).select(col("x")))
+      alive = pin(deg.where(col("deg") >= k).select(col("x")), coalesceTo)
       val n2 = alive.count() // survivors only shrink: equal count = equal set
       prev.unpersist()
       converged = n2 == nAlive
@@ -556,16 +466,9 @@ object Graph {
     * dominates). */
   def connectedComponents(edges: DataFrame, maxRounds: Int = Int.MaxValue,
       coalesceTo: Option[Int] = None): DataFrame = {
-    def pin(df: DataFrame): DataFrame =
-      coalesceTo.map(df.coalesce).getOrElse(df).localCheckpoint()
-    val und = pin(edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct())
-    val nbrs = pin(und.select(col("a").as("x"), col("b").as("nbr"))
-      .union(und.select(col("b").as("x"), col("a").as("nbr"))))
+    val nbrs = pin(neighbours(pin(undirected(edges), coalesceTo)), coalesceTo)
     var comp = pin(nbrs.select(col("x")).distinct()
-      .select(col("x"), col("x").as("c")))
+      .select(col("x"), col("x").as("c")), coalesceTo)
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
@@ -574,7 +477,7 @@ object Graph {
       comp = pin(comp
         .union(nbrs.join(comp.select(col("x").as("nbr"), col("c")), "nbr")
           .select(col("x"), col("c")))
-        .groupBy(col("x")).agg(min(col("c")).as("c")))
+        .groupBy(col("x")).agg(min(col("c")).as("c")), coalesceTo)
       // monotone: labels only decrease, so any change shows up as a
       // strict inequality — one bounded node-grain count
       val changed = comp.join(prev.select(col("x"), col("c").as("pc")), "x")
@@ -615,16 +518,9 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int = 4,
       coalesceTo: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def pin(df: DataFrame): DataFrame =
-      coalesceTo.map(df.coalesce).getOrElse(df).localCheckpoint()
-    val und = pin(edges.where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct())
-    val nbrs = pin(und.select(col("a").as("x"), col("b").as("nbr"))
-      .union(und.select(col("b").as("x"), col("a").as("nbr"))))
+    val nbrs = pin(neighbours(pin(undirected(edges), coalesceTo)), coalesceTo)
     var lab = pin(nbrs.select(col("x")).distinct()
-      .select(col("x"), col("x").as("lbl")))
+      .select(col("x"), col("x").as("lbl")), coalesceTo)
     val w = Window.partitionBy(col("x"))
       .orderBy(col("n").desc, col("lbl"))
     for (_ <- 1 to rounds) {
@@ -634,7 +530,7 @@ object Graph {
         .groupBy(col("x"), col("lbl")).agg(count(lit(1)).as("n"))
         .withColumn("rn", row_number().over(w))
         .where(col("rn") === 1)
-        .select(col("x"), col("lbl")))
+        .select(col("x"), col("lbl")), coalesceTo)
       prev.unpersist()
     }
     lab.select(col("x").as("node"), col("lbl").as("community"))

@@ -259,8 +259,9 @@ object Sampling {
     * root at themselves — so no mined pair ever straddles a split
     * boundary, and the 80/10/10 proportions hold at component grain.
     * Cost on top of the pair mine: one components pass + one join. */
-  /** WEIGHTED mixture epoch plan — [[epochPlan]] with target mixture
-    * WEIGHTS instead of the degenerate equal share: source i gets
+  /** WEIGHTED mixture epoch plan — the budgeting arithmetic behind
+    * weighted mixtures (`p_mix` applies such rates row-wise; this PLANS
+    * them from the measured token inventory): source i gets
     * `targetTokens · wᵢ / Σw` (Σw over the sources actually present,
     * so absent map entries never skew the shares), reported with the
     * epochs that share buys AND the implied per-source keep rate
@@ -272,11 +273,10 @@ object Sampling {
     * which is the consistency contract (spec-asserted): the card PLANS
     * precisely what the sampler APPLIES.
     *
-    * Same scale shape as [[epochPlan]] (one source-grain aggregate +
-    * a 1-row broadcast); weights compile into the plan as a literal
-    * CASE. Small-integer weights keep Σw exact in doubles, so every
-    * emitted double is a correctly-rounded function of exact integers
-    * — engine-identical. */
+    * One source-grain aggregate + a 1-row broadcast; weights compile
+    * into the plan as a literal CASE. Small-integer weights keep Σw
+    * exact in doubles, so every emitted double is a correctly-rounded
+    * function of exact integers — engine-identical. */
   def epochPlanWeighted(docs: DataFrame, targetTokens: Long = 1000000L,
       weights: Map[String, Double] = Map.empty): DataFrame = {
     val w = weights.foldLeft(lit(1.0)) { case (acc, (src, x)) =>
@@ -298,28 +298,16 @@ object Sampling {
   }
 
   /** Mixture EPOCH plan — the data card a training run is provisioned
-    * from: give each source an equal share of `targetTokens` and report
-    * how many EPOCHS of that source the share buys (epochs > 1 ⇒ the
-    * source must be oversampled/repeated; ≪ 1 ⇒ it is subsampled).
-    * This is the budgeting arithmetic behind weighted mixtures
-    * (`p_mix` applies such rates row-wise; this PLANS them from the
-    * measured token inventory; [[epochPlanWeighted]] is the
-    * non-degenerate form). One aggregate at source grain + a 1-row
-    * count broadcast; epochs/share are single divisions of exact
-    * integers — engine-identical doubles. */
-  def epochPlan(docs: DataFrame, targetTokens: Long = 1000000L): DataFrame = {
-    val inv = docs
-      .select(col("source"),
-        size(TextAnalysis.tokens(col("text"))).cast("long").as("t"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("t")).as("n_tokens"))
-    val nSrc = inv.agg(count(lit(1)).as("n_sources"))
-    inv.crossJoin(broadcast(nSrc))
-      .select(col("source"), col("n_docs"), col("n_tokens"),
-        (lit(targetTokens).cast("double") / col("n_sources")).as("share_tokens"),
-        (lit(targetTokens).cast("double") / col("n_sources") / col("n_tokens"))
-          .as("epochs"))
-  }
+    * from: each source gets an equal share of `targetTokens`, and the
+    * card reports how many EPOCHS of that source the share buys
+    * (epochs > 1 ⇒ the source must be oversampled/repeated; ≪ 1 ⇒ it
+    * is subsampled). [[epochPlanWeighted]] with every weight 1,
+    * without its `weight` and `keep_rate` columns: Σw is then the
+    * exact source count, so each double is the same correctly-rounded
+    * quotient of exact integers as a plain division by it. */
+  def epochPlan(docs: DataFrame, targetTokens: Long = 1000000L): DataFrame =
+    epochPlanWeighted(docs, targetTokens)
+      .select("source", "n_docs", "n_tokens", "share_tokens", "epochs")
 
   /** Curriculum phases data card — quality-quartile provisioning for
     * curriculum training (feed cleaner text later, or earlier —

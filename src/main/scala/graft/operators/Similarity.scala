@@ -478,11 +478,17 @@ object Similarity {
         graft.functions.Exact.round6(col("x")).as("x"))
   }
 
-  /** Top PRINCIPAL DIRECTION of the embedding corpus by power
-    * iteration — the structure read the clustering family lacks:
-    * "which single axis explains the most (uncentered) variance, and
-    * how strong is it" — embedding-collapse showing up as one
-    * dominant λ is the classic training-corpus pathology check.
+  /** Top PRINCIPAL DIRECTION of the embedding corpus — "which single
+    * axis explains the most (uncentered) variance, and how strong is
+    * it": [[pcaComponents]] at k = 1 without its `component` column. */
+  def pcaTopComponent(embeddings: DataFrame): DataFrame =
+    pcaComponents(embeddings, k = 1).drop("component")
+
+  /** TOP-K principal subspace by power iteration WITH DEFLATION — the
+    * structure read the clustering family lacks: embedding collapse
+    * showing up as one dominant λ is the classic training-corpus
+    * pathology check, and the k directions are the visualization
+    * basis. The vector length d is read from the corpus.
     *
     * Engine-exact by the k-means recipe: the per-coordinate
     * accumulation `w_j = Σ_i x_ij·(x_i·v)` uses fixed-point 2³⁰
@@ -490,69 +496,39 @@ object Similarity {
     * SEQUENTIAL left-to-right folds (DuckDB's list_dot_product and
     * the native dot_product walk the array identically — the proven
     * kmeans bridge), v₀ = 1/√d everywhere, and each iteration's
-    * normalized v returns through the driver as d literals — so the
-    * whole iteration replays in DuckDB CTE-per-pass
-    * ([[pcaOracleSql]]) and every loading hash-matches.
+    * normalized v returns through the driver as d literals. After
+    * each converged direction v the corpus is deflated (x ← x −
+    * (x·v)·v, a zip_with projection — no shuffle), and `x_j − dot·v_j`
+    * is the identical IEEE expression shape on both engines — so
+    * [[pcaOracleSql]] (k = 1) and [[pcaKOracleSql]] replay every pass
+    * and every deflation CTE-for-CTE, and all k·d loadings hash-match.
+    *
+    * The deflated corpus is MATERIALIZED via `localCheckpoint` before
+    * the next solve. The checkpoint is load-bearing, not a cache hint:
+    * left as a lazy plan, Catalyst's projection collapse inlines each
+    * prior deflation layer into the dot product AND all d zip_with
+    * lanes of the next, so plan size (and evaluation cost) grows
+    * multiplicatively per component — measured 2748 s for k=4 at
+    * sf0.1 vs ~1 s for the single component; checkpointed, it is
+    * ~4 s. The stored rows are the same IEEE doubles the lazy plan
+    * would compute, so oracle exactness is untouched.
     *
     * Scale shape: one corpus scan per iteration, map-side-combined to
     * d fixed-point rows, d longs to the driver — the PageRank cost
-    * profile with d instead of nodes. Fixed-point sums are exact to
+    * profile with d instead of nodes — so the card is O(k·iters)
+    * scans plus k−1 deflation passes. Fixed-point sums are exact to
     * ~2⁵³⁻³⁷ ≈ 6·10⁴ rows per unit value-scale here; widen to
     * decimal(38) past ~10⁸ rows (the mwu precedent). Sign is the
-    * iteration's own (deterministic on both engines). */
-  def pcaTopComponent(embeddings: DataFrame, iters: Int = 3,
-      dim: Int = 64): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val e = prepared(embeddings)
-    if (!pcaDimGuard(e, dim, "pcaTopComponent"))
-      return Seq.empty[(Long, Double, Double, Long)]
-        .toDF("pos", "loading", "lambda", "n_vectors")
-    val (v, lambda) = powerIterate(e, iters, dim)
-    // an all-zero corpus accumulates w = 0 → λ = 0 and v would be
-    // 0/0 NaN loadings: the honest card is EMPTY, not NaN rows
-    if (lambda == 0.0)
-      return Seq.empty[(Long, Double, Double, Long)]
-        .toDF("pos", "loading", "lambda", "n_vectors")
-    val n = e.count()
-    def r6(x: Double) = math.floor(x * 1000000.0 + 0.5) / 1000000.0
-    v.toSeq.zipWithIndex
-      .map { case (x, p) => (p.toLong, r6(x), r6(lambda), n) }
-      .toDF("pos", "loading", "lambda", "n_vectors")
-  }
-
-  /** TOP-K principal subspace by power iteration WITH DEFLATION — the
-    * collapse-pathology and visualization read [[pcaTopComponent]]'s
-    * single direction can't serve: after each converged direction v,
-    * the corpus is deflated (x ← x − (x·v)·v, a zip_with projection
-    * — no shuffle) and MATERIALIZED via `localCheckpoint` before the
-    * next solve. The checkpoint is load-bearing, not a cache hint:
-    * left as a lazy plan, Catalyst's projection collapse inlines each
-    * prior deflation layer into the dot product AND all `dim`
-    * zip_with lanes of the next, so plan size (and evaluation cost)
-    * grows multiplicatively per component — measured 2748 s for k=4
-    * at sf0.1 vs ~1 s for the single component; checkpointed, it is
-    * ~4 s. Pinned, component c costs the same `iters` corpus scans as
-    * the first plus one deflation pass, so the whole card is
-    * O(k·iters) scans, each map-side-combined to d fixed-point rows.
-    * The stored rows are the same IEEE doubles the lazy plan would
-    * compute, so oracle exactness is untouched.
+    * iteration's own (deterministic on both engines).
     *
-    * Engine-exactness inherits [[pcaTopComponent]]'s recipe wholesale
-    * (fixed-point 2³⁰ scaled-long coordinate sums, sequential
-    * list-ordered dots, v back as d literals per pass) PLUS the
-    * deflation arithmetic `x_j − dot·v_j` being the identical IEEE
-    * expression shape on both engines — [[pcaKOracleSql]] replays
-    * every pass and every deflation CTE-for-CTE, so all k·d loadings
-    * hash-match.
-    *
-    * A corpus of rank r < k stops after r components: the deflated
-    * residuals of an exactly-degenerate corpus sit at ~1e-16, far
-    * below the 2⁻³⁰ fixed-point grid, so the accumulated w is all
-    * zeros, λ = 0 exactly, and the card ends — deterministically on
-    * both engines (the rank-2 fixture spec pins this). */
-  def pcaComponents(embeddings: DataFrame, k: Int = 4, iters: Int = 3,
-      dim: Int = 64): DataFrame = {
+    * An empty corpus gives an empty card, and so does an all-zero one
+    * (w = 0 → λ = 0; its v would be 0/0 NaN loadings). A corpus of
+    * rank r < k stops after r components: the deflated residuals of
+    * an exactly-degenerate corpus sit at ~1e-16, far below the 2⁻³⁰
+    * fixed-point grid, so the accumulated w is all zeros, λ = 0
+    * exactly, and the card ends — deterministically on both engines
+    * (the rank-2 fixture spec pins this). */
+  def pcaComponents(embeddings: DataFrame, k: Int = 4, iters: Int = 3): DataFrame = {
     require(k >= 1, s"pcaComponents: k must be >= 1: $k")
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -560,7 +536,7 @@ object Similarity {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Double, Double, Long)]
     def r6(x: Double) = math.floor(x * 1000000.0 + 0.5) / 1000000.0
-    if (pcaDimGuard(e, dim, "pcaComponents")) {
+    pcaDim(e).foreach { dim =>
       val n = e.count()
       pcaSolve(e, k, iters, dim).zipWithIndex.foreach {
         case ((v, lambda), i) =>
@@ -622,18 +598,18 @@ object Similarity {
     * columns on BOTH engines (a dead direction is the zero vector;
     * dot against it is +0.0, and floor(0.5)/10⁶ = 0.0), keeping the
     * schema stable across ranks. */
-  def pcaProject(embeddings: DataFrame, k: Int = 4, iters: Int = 3,
-      dim: Int = 64): DataFrame = {
+  def pcaProject(embeddings: DataFrame, k: Int = 4, iters: Int = 3): DataFrame = {
     require(k >= 1, s"pcaProject: k must be >= 1: $k")
     val spark = embeddings.sparkSession
     import spark.implicits._
     val e = prepared(embeddings)
-    if (!pcaDimGuard(e, dim, "pcaProject")) {
+    val dim = pcaDim(e)
+    if (dim.isEmpty) {
       val empty = Seq.empty[Long].toDF("vec_id")
       return (1 to k).foldLeft(empty)((d, c) =>
         d.withColumn(s"pc$c", lit(0.0)))
     }
-    val comps = pcaSolve(e, k, iters, dim)
+    val comps = pcaSolve(e, k, iters, dim.get)
     def r6(x: Column) = floor(x * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
     val coordCols = (1 to k).map { c =>
       if (c <= comps.size) {
@@ -644,21 +620,11 @@ object Similarity {
     e.select(col("vec_id") +: coordCols: _*)
   }
 
-  /** First-row length check shared by the PCA entries: an EMPTY corpus
-    * returns false (callers emit the empty card), a corpus whose
-    * vectors disagree with `dim` fails fast — a smaller `dim` would
-    * crash the driver-side `w(pos)` write, a larger one silently
-    * zero-pads and diverges from the oracle's list_extract nulls. */
-  private def pcaDimGuard(e: DataFrame, dim: Int, what: String): Boolean = {
-    val first = e.select(size(col("v")).as("n")).limit(1).collect()
-    if (first.isEmpty) false
-    else {
-      val actual = first.head.getInt(0)
-      require(actual == dim,
-        s"$what: dim=$dim but embeddings have length $actual")
-      true
-    }
-  }
+  /** The vector length the PCA entries iterate over, read from the
+    * first row; None for an EMPTY corpus (callers emit the empty
+    * card). */
+  private def pcaDim(e: DataFrame): Option[Int] =
+    e.select(size(col("v"))).limit(1).collect().headOption.map(_.getInt(0))
 
   /** The shared power-iteration loop over a (possibly deflated)
     * corpus plan: `iters` × (fixed-point accumulate, sequential norm,

@@ -1081,7 +1081,7 @@ class Catalog(spark: SparkSession, baseDir: String,
     * footers; the sidecar is one bounded table). Build cost is one
     * pass over the table, paid at write time alongside the layout
     * itself; rebuilding after a data rewrite is the caller's contract,
-    * and [[scanZoneMapped]] REFUSES a stale sidecar (file-set
+    * and [[scanZoneMappedN]] REFUSES a stale sidecar (file-set
     * mismatch) rather than serving from it. */
   def buildZoneMap(dest: String, statsCols: Seq[String]): Unit = {
     require(statsCols.nonEmpty, "zone map needs at least one stats column")
@@ -1094,14 +1094,24 @@ class Catalog(spark: SparkSession, baseDir: String,
       .write.mode(SaveMode.Overwrite).parquet(s"$dest/_zonemap")
   }
 
-  /** Multi-column rectangle probe: a file survives only if its
-    * recorded [min,max] intersects EVERY column's range — the read
-    * side of [[writeZOrderedN]], where Z-clustering keeps per-file
-    * ranges tight on ALL interleaved dimensions at once, so a 2-D
-    * rectangle skips files neither 1-D probe could (their
-    * intersection shrinks multiplicatively). Same soundness argument
-    * per column as [[scanZoneMapped]]; the exact conjunction is
-    * re-applied after routing. */
+  /** Range probe through the zone map: open ONLY the data files whose
+    * recorded [min,max] intersects EVERY column's [lo, hi], then apply
+    * the exact BETWEEN conjunction — skipping moves bytes, never
+    * results (the BloomJoin discipline). One range is the plain 1-D
+    * probe of a sorted layout; several are the read side of
+    * [[writeZOrderedN]], where Z-clustering keeps per-file ranges tight
+    * on ALL interleaved dimensions at once, so a 2-D rectangle skips
+    * files neither 1-D probe could (their intersection shrinks
+    * multiplicatively). Sound because min/max ignore nulls and
+    * BETWEEN is null-rejecting: a file whose every value of a column
+    * is null carries null stats, the intersection test is null → the
+    * file skips, and no row it holds could have passed the filter; a
+    * file mixing nulls with in-range values keeps non-null stats and
+    * is retained. The sidecar's file set must equal the dir's current
+    * data files — a rewrite without [[buildZoneMap]] fails loudly
+    * here instead of silently skipping files the stats never saw.
+    * The file-list collect is bounded by the table's FILE count (the
+    * listing any scan pays), not its rows. */
   def scanZoneMappedN(dest: String,
       ranges: Seq[(String, Column, Column)]): DataFrame = {
     require(ranges.nonEmpty, "rectangle probe needs at least one range")
@@ -1129,22 +1139,6 @@ class Catalog(spark: SparkSession, baseDir: String,
       col(c).between(lo, hi)
     }.reduce(_ && _))
   }
-
-  /** Range probe through the zone map: open ONLY the data files whose
-    * recorded [min,max] for `c` intersects [lo, hi], then apply the
-    * exact BETWEEN — skipping moves bytes, never results (the
-    * BloomJoin discipline). Sound because min/max ignore nulls and
-    * BETWEEN is null-rejecting: a file whose every `c` is null
-    * carries null stats, the intersection test is null → the file
-    * skips, and no row it holds could have passed the filter; a file
-    * mixing nulls with in-range values keeps non-null stats and is
-    * retained. The sidecar's file set must equal the dir's current
-    * data files — a rewrite without [[buildZoneMap]] fails loudly
-    * here instead of silently skipping files the stats never saw.
-    * The file-list collect is bounded by the table's FILE count (the
-    * listing any scan pays), not its rows. */
-  def scanZoneMapped(dest: String, c: String, lo: Column, hi: Column): DataFrame =
-    scanZoneMappedN(dest, Seq((c, lo, hi)))
 
   /** Bucketed managed table: co-locates rows by join key so repeated
     * joins/aggregations on that key skip the exchange entirely — the
@@ -1418,19 +1412,15 @@ object Catalog {
         max(col("v")).as("hi"))
   }
 
-  /** Morton/Z-value of two integer columns: the low 16 bits of each,
-    * interleaved (x even positions, y odd). Bit shifts and masks only —
-    * portable to any engine — and the disjoint bit positions make `+`
-    * equal to OR, so the whole value is one codegen'd arithmetic
-    * expression. */
-  def zValue(x: Column, y: Column): Column = zValueN(Seq(x, y))
-
-  /** N-column Morton/Z-value: bit `i` of column `j` lands at position
-    * `i·N + j`, the round-robin interleave that generalizes the 2-dim
-    * layout above (j = 0 even positions, j = 1 odd). Same portability
-    * arguments; 16·N bits must fit a signed long. With the low 16
-    * bits of every column riding the value, a range-partitioned sort on
-    * it gives every file a contiguous Z range — a hyper-rectangle-ish
+  /** N-column Morton/Z-value: bit `i` of column `j` (its low 16 bits)
+    * lands at position `i·N + j`, the round-robin interleave (two
+    * columns: the first at even positions, the second at odd). Bit
+    * shifts and masks only — portable to any engine — and the
+    * disjoint bit positions make `+` equal to OR, so the whole value
+    * is one codegen'd arithmetic expression; 16·N bits must fit a
+    * signed long. With the low 16 bits of every column riding the
+    * value, a range-partitioned sort on it gives every file a
+    * contiguous Z range — a hyper-rectangle-ish
     * region of the N-dim key space — so a filter on ANY of the N
     * columns prunes most files from parquet min/max footers alone,
     * which a lexicographic sort only provides for its leading column.

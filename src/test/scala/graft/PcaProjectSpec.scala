@@ -14,7 +14,7 @@ class PcaProjectSpec extends SparkSpec {
       (1L, Seq(10.0f, 0.0f, 0.0f)), (2L, Seq(-20.0f, 0.0f, 0.0f)),
       (3L, Seq(0.0f, 5.0f, 0.0f)), (4L, Seq(0.0f, -15.0f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val rows = Similarity.pcaProject(emb, k = 3, iters = 40, dim = 3)
+    val rows = Similarity.pcaProject(emb, k = 3, iters = 40)
       .orderBy("vec_id").collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L, 4L))
     // the axes snap exactly (the PcaKSpec argument), so pc1 = ±x,

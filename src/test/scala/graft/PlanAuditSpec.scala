@@ -44,17 +44,14 @@ class PlanAuditSpec extends SparkSpec {
     //    into the per-doc frame (same shape as p_wsample's max)
     //  - e_late_audit: the 1-row user-id-bounds aggregate broadcast
     //    into the events scan (the width_bucket banding input)
-    //  - g_bfs: the 1-row source-node aggregate broadcast into the
-    //    node list at initialization
     //  - t_keyword_topk: rides t_tfidf's 1-row corpus count
     //  - d_dedup_sweep: the 1×1 cross of the pair-grain and doc-grain
     //    summary aggregates (one bounded output row)
     //  - d_drift_ks: the 1-row (n_a, n_b) totals aggregate broadcast
     //    into the distinct-value frame before the argmax
-    //  - p_epoch_plan: the 1-row source-count aggregate broadcast into
-    //    the ≤|sources|-row inventory
-    //  - p_epoch_weighted: the same shape with the 1-row Σw aggregate
-    //    instead of the source count
+    //  - p_epoch_weighted: the 1-row Σw aggregate broadcast into the
+    //    ≤|sources|-row inventory; p_epoch_plan is its unit-weight
+    //    projection
     //  - p_curriculum: the 1-row quartile-cutoffs aggregate broadcast
     //    into the quality scan
     //  - t_vocab_card: the 1×1 cross of the vocabulary-stats and
@@ -66,7 +63,7 @@ class PlanAuditSpec extends SparkSpec {
     val allowed = Set("t_tfidf", "p_wsample", "d_corpus_prep",
       "s_ann_brute", "d_dedup_embed", "q_moving_avg", "q22_idle",
       "q_kmv_join", "d_select_target", "p_temperature",
-      "e_late_audit", "g_bfs", "t_keyword_topk", "d_dedup_sweep",
+      "e_late_audit", "t_keyword_topk", "d_dedup_sweep",
       "d_drift_ks", "p_epoch_plan", "p_epoch_weighted",
       "p_curriculum", "t_vocab_card", "s_knn_graph",
       // q_kmv_setops: q_kmv_join's 1x1 single-row sketch cross, plus

@@ -111,7 +111,7 @@ class PcaSpec extends SparkSpec {
     val emb = Seq(
       (1L, Seq(3.0f, 4.0f)), (2L, Seq(6.0f, 8.0f)), (3L, Seq(-3.0f, -4.0f)))
       .toDF("vec_id", "embedding")
-    val card = graft.operators.Similarity.pcaTopComponent(emb, iters = 3, dim = 2)
+    val card = graft.operators.Similarity.pcaTopComponent(emb)
       .orderBy("pos").collect()
     val loadings = card.map(_.getDouble(1))
     val lambda = card.head.getDouble(2)

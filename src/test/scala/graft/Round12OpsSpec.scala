@@ -52,24 +52,14 @@ class Round12AdviceSpec extends SparkSpec {
 
   test("pca: empty corpus yields an empty card, not NaN loadings") {
     val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
-    assert(Similarity.pcaTopComponent(empty, dim = 4).count() == 0L)
-    assert(Similarity.pcaComponents(empty, k = 2, dim = 4).count() == 0L)
+    assert(Similarity.pcaTopComponent(empty).count() == 0L)
+    assert(Similarity.pcaComponents(empty, k = 2).count() == 0L)
   }
 
   test("pca: all-zero corpus yields an empty card (lambda = 0)") {
     val zeros = Seq((1L, Seq(0.0f, 0.0f)), (2L, Seq(0.0f, 0.0f)))
       .toDF("vec_id", "embedding")
-    assert(Similarity.pcaTopComponent(zeros, dim = 2).count() == 0L)
-  }
-
-  test("pca: dim disagreeing with the vectors fails fast") {
-    val emb = Seq((1L, Seq(1.0f, 2.0f, 3.0f))).toDF("vec_id", "embedding")
-    intercept[IllegalArgumentException] {
-      Similarity.pcaTopComponent(emb, dim = 2)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.pcaComponents(emb, k = 1, dim = 5)
-    }
+    assert(Similarity.pcaTopComponent(zeros).count() == 0L)
   }
 }
 
@@ -88,7 +78,7 @@ class PcaKSpec extends SparkSpec {
     // 40 iterations: contamination decays (λ2/λ1)^t = 2^-40, far below
     // the 2^-30 fixed-point grid — the accumulated cross-terms round
     // to exactly 0 and the direction SNAPS to the axis
-    val card = Similarity.pcaComponents(emb, k = 3, iters = 40, dim = 3)
+    val card = Similarity.pcaComponents(emb, k = 3, iters = 40)
       .orderBy("component", "pos").collect()
     // exactly 2 components × 3 positions — deflation exhausts rank 2
     assert(card.length == 6, s"got ${card.length} rows")

@@ -27,20 +27,19 @@ class Round6bOpsSpec extends SparkSpec {
       ("d", 0L, 0L, 0L, 0L)))
   }
 
-  test("shortestPaths prunes to top-fanout edges and settles exact hop counts") {
+  test("allPairsHops from one source over topKBackbone prunes to top-fanout edges and settles exact hop counts") {
     import spark.implicits._
     // fanout=1 keeps only a→c (w 9 beats w 5); path to b is a→c→b
     val edges = edgesDf(Seq(("a", "b", 5L), ("a", "c", 9L), ("c", "b", 1L),
       ("d", "d", 7L))) // self-loop must be ignored
-    val nodes = Seq("a", "b", "c", "d").toDF("node")
-    val source = Seq("a").toDF("__src")
+    val source = Seq("a").toDF("node")
     // both ladder rungs must produce the same distances: the driver
     // BFS (default route at this size) and the forced distributed
     // relaxation (the 100 TB path)
     for (localMax <- Seq(10000L, 0L)) {
-      val got = Graph.shortestPaths(edges, nodes, source, fanout = 1,
+      val got = Graph.allPairsHops(Graph.topKBackbone(edges, 1), source,
           maxHops = 4, localMaxEdges = localMax)
-        .orderBy("node")
+        .select("node", "hops").orderBy("node")
         .collect().map(r => (r.getString(0), r.getLong(1)))
       // d is unreachable → absent, not infinite
       assert(got.toSeq == Seq(("a", 0L), ("b", 2L), ("c", 1L)),

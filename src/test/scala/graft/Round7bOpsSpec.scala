@@ -335,6 +335,9 @@ class Round7bOpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0),
         (1 to 3).map(i => if (r.isNullAt(i)) -1L else r.getLong(i)))).toMap
     assert(gen == fixed && gen.size == 3)
+    // u1's steps land at 1, 2 and 3 s past the hour, in µs
+    val t0 = ts(1).getTime * 1000L
+    assert(gen(1L) == Seq(t0, t0 + 1000000L, t0 + 2000000L))
     assert(gen(2L).tail.forall(_ == -1L))
     // u3's click precedes its view: step 1 set, steps 2-3 empty
     assert(gen(3L).head > 0 && gen(3L).tail.forall(_ == -1L))

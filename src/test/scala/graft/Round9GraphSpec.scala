@@ -30,17 +30,16 @@ class Round9GraphSpec extends SparkSpec {
     assert(Graph.kCore(path24, k = 2, maxRounds = 8).count() > 0L)
   }
 
-  test("shortestPaths: relaxes a 20-hop path fully on both routes") {
+  test("allPairsHops from one source: relaxes a 20-hop path fully on both routes") {
     import spark.implicits._
     val edges = (0 until 20).flatMap(i =>
         Seq((f"n$i%02d", f"n${i + 1}%02d", 1L),
           (f"n${i + 1}%02d", f"n$i%02d", 1L)))
       .toDF("src", "dst", "w")
-    val nodes = (0 to 20).map(i => f"n$i%02d").toDF("node")
-    val source = nodes.agg(min(col("node")).as("__src"))
+    val source = Seq("n00").toDF("node")
     for (localMax <- Seq(10000L, 0L)) { // driver BFS route, then distributed
-      val got = Graph.shortestPaths(edges, nodes, source,
-          localMaxEdges = localMax)
+      val got = Graph.allPairsHops(edges, source, localMaxEdges = localMax)
+        .select(col("node"), col("hops"))
         .orderBy(col("node")).collect()
         .map(r => (r.getString(0), r.getLong(1)))
       assert(got.length == 21, s"route localMax=$localMax lost nodes")
@@ -49,15 +48,14 @@ class Round9GraphSpec extends SparkSpec {
     }
   }
 
-  test("shortestPaths: the hop cap still truncates when pinned") {
+  test("allPairsHops from one source: the hop cap still truncates when pinned") {
     import spark.implicits._
     val edges = (0 until 20).flatMap(i =>
         Seq((f"n$i%02d", f"n${i + 1}%02d", 1L),
           (f"n${i + 1}%02d", f"n$i%02d", 1L)))
       .toDF("src", "dst", "w")
-    val nodes = (0 to 20).map(i => f"n$i%02d").toDF("node")
-    val source = nodes.agg(min(col("node")).as("__src"))
-    val got = Graph.shortestPaths(edges, nodes, source, maxHops = 8,
+    val source = Seq("n00").toDF("node")
+    val got = Graph.allPairsHops(edges, source, maxHops = 8,
         localMaxEdges = 0L)
       .agg(max(col("hops"))).collect()(0).getLong(0)
     assert(got == 8L)

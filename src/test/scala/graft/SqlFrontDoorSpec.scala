@@ -43,9 +43,9 @@ class SqlFrontDoorSpec extends SparkSpec {
 
   test("graft_funnel(dir) == Events.funnel and composes under SQL") {
     val sql = spark.sql(
-      s"SELECT count(*) AS n FROM graft_funnel('$sfDir') WHERE t3 IS NOT NULL")
+      s"SELECT count(*) AS n FROM graft_funnel('$sfDir') WHERE first_purchase IS NOT NULL")
     val scala_ = operators.Events.funnel(Tables.events(spark, sfDir))
-      .where("t3 IS NOT NULL").count()
+      .where("first_purchase IS NOT NULL").count()
     assert(sql.head().getLong(0) == scala_)
   }
 

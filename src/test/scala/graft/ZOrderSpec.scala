@@ -10,7 +10,7 @@ class ZOrderSpec extends SparkSpec {
   test("zValue interleaves bits (hand-checked values)") {
     val out = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 3L), (5L, 2L))
       .toDF("x", "y")
-      .select(Catalog.zValue($"x", $"y").as("z")).as[Long].collect().toSeq
+      .select(Catalog.zValueN(Seq($"x", $"y")).as("z")).as[Long].collect().toSeq
     // (1,0)->1; (0,1)->2; (3,3)->15; (5,2): x bits 101 -> 1,0,16; y bits 010 -> 8 => 25
     assert(out == Seq(0L, 1L, 2L, 15L, 25L))
   }
@@ -24,7 +24,7 @@ class ZOrderSpec extends SparkSpec {
     assert(back.count() == li.count())
     // per-file z min/max: ranges must not overlap across files
     val ranges = back
-      .withColumn("z", Catalog.zValue($"l_partkey", $"l_suppkey"))
+      .withColumn("z", Catalog.zValueN(Seq($"l_partkey", $"l_suppkey")))
       .withColumn("f", input_file_name())
       .groupBy($"f").agg(min($"z").as("lo"), max($"z").as("hi"))
       .orderBy($"lo")
@@ -43,9 +43,12 @@ class ZOrderNSpec extends SparkSpec {
 
   test("zValueN generalizes the 2-dim interleave exactly") {
     val df = Seq((5L, 2L), (3L, 3L), (12345L, 678L)).toDF("x", "y")
-    val both = df.select(Catalog.zValue($"x", $"y").as("z2"),
-      Catalog.zValueN(Seq($"x", $"y")).as("zn")).as[(Long, Long)].collect()
-    both.foreach { case (z2, zn) => assert(z2 == zn) }
+    // the 2-dim interleave bit by bit: x's bit i at 2i, y's at 2i + 1
+    def z2(x: Long, y: Long): Long = (0 until 16).map(i =>
+      (((x >> i) & 1L) << (2 * i)) | (((y >> i) & 1L) << (2 * i + 1))).sum
+    val both = df.select($"x", $"y", Catalog.zValueN(Seq($"x", $"y")).as("zn"))
+      .as[(Long, Long, Long)].collect()
+    both.foreach { case (x, y, zn) => assert(zn == z2(x, y), s"($x, $y)") }
     // 3-dim hand check: (1,1,1) -> bits 0,1,2 set = 7; (2,0,1): x bit1 ->
     // pos 3, z bit0 -> pos 2 => 8 + 4 = 12
     val out3 = Seq((1L, 1L, 1L), (2L, 0L, 1L)).toDF("a", "b", "c")

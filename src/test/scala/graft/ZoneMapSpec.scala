@@ -20,7 +20,7 @@ class ZoneMapSpec extends SparkSpec {
 
     val lo = lit("1996-01-01").cast("timestamp")
     val hi = lit("1996-03-31").cast("timestamp")
-    val pruned = cat.scanZoneMapped(dest, "l_shipdate", lo, hi)
+    val pruned = cat.scanZoneMappedN(dest, Seq(("l_shipdate", lo, hi)))
     val total = spark.read.parquet(dest).inputFiles.length
     val opened = pruned.inputFiles.length
     assert(total == 8, s"expected 8 data files, saw $total")
@@ -51,7 +51,7 @@ class ZoneMapSpec extends SparkSpec {
     assert(spark.read.parquet(dest).count() == before,
       "_zonemap sidecar must be invisible to plain data reads")
 
-    val pruned = cat.scanZoneMapped(dest, "v", lit(40L), lit(60L))
+    val pruned = cat.scanZoneMappedN(dest, Seq(("v", lit(40L), lit(60L))))
     // only grp 2's file can hold matches: grp 1 has null stats, grp 3 is out of range
     assert(pruned.inputFiles.length == 1,
       s"expected exactly the mixed file, saw ${pruned.inputFiles.length}")
@@ -59,7 +59,7 @@ class ZoneMapSpec extends SparkSpec {
     assert(pruned.count() == 5)
 
     // a probe matching nothing serves empty WITH schema, opening no data files
-    val none = cat.scanZoneMapped(dest, "v", lit(-100L), lit(-50L))
+    val none = cat.scanZoneMappedN(dest, Seq(("v", lit(-100L), lit(-50L))))
     assert(none.count() == 0)
     assert(none.columns.toSeq == spark.read.parquet(dest).columns.toSeq)
   }
@@ -78,8 +78,8 @@ class ZoneMapSpec extends SparkSpec {
 
     val rect = cat.scanZoneMappedN(dest,
       Seq(("x", lit(100L), lit(200L)), ("y", lit(100L), lit(200L))))
-    val xOnly = cat.scanZoneMapped(dest, "x", lit(100L), lit(200L))
-    val yOnly = cat.scanZoneMapped(dest, "y", lit(100L), lit(200L))
+    val xOnly = cat.scanZoneMappedN(dest, Seq(("x", lit(100L), lit(200L))))
+    val yOnly = cat.scanZoneMappedN(dest, Seq(("y", lit(100L), lit(200L))))
     assert(rect.inputFiles.length < xOnly.inputFiles.length,
       s"rectangle (${rect.inputFiles.length} files) should beat the x slab (${xOnly.inputFiles.length})")
     assert(rect.inputFiles.length < yOnly.inputFiles.length,
@@ -102,11 +102,11 @@ class ZoneMapSpec extends SparkSpec {
     (1 to 100).map(i => (i.toLong, i.toString)).toDF("k", "s")
       .repartition(2).write.mode("overwrite").parquet(dest)
     val err = intercept[IllegalArgumentException] {
-      cat.scanZoneMapped(dest, "k", lit(1L), lit(10L))
+      cat.scanZoneMappedN(dest, Seq(("k", lit(1L), lit(10L))))
     }
     assert(err.getMessage.contains("stale"))
     // rebuild heals it
     cat.buildZoneMap(dest, Seq("k"))
-    assert(cat.scanZoneMapped(dest, "k", lit(1L), lit(10L)).count() == 10)
+    assert(cat.scanZoneMappedN(dest, Seq(("k", lit(1L), lit(10L)))).count() == 10)
   }
 }

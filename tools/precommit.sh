@@ -29,6 +29,16 @@
 #      they are checked against) runs graft.ReplaySpec,
 #      graft.RocksDbStateSpec, graft.StorageStreamingSpec and
 #      graft.AsOfJoinSpec, and re-drives the as-of and streaming entries.
+#      A staged operators/Graph.scala, Events.scala, Similarity.scala,
+#      Sampling.scala or Cumulative.scala (the general operators that the
+#      specialised funnel, hop-distance, PCA, epoch-plan and running-scan
+#      entries call) runs the specs covering those calls (graft.Round6bOpsSpec,
+#      graft.Round7bOpsSpec, graft.Round9GraphSpec, graft.Round9bOpsSpec,
+#      graft.PcaSpec, graft.PcaKSpec, graft.Round12AdviceSpec,
+#      graft.PcaProjectSpec, graft.CumulativeSpec,
+#      graft.CumulativePropertySpec, graft.SqlFrontDoorSpec) and re-drives
+#      the g_*, e_funnel*, e_concurrency, e_sessionize, s_pca* and p_epoch*
+#      entries.
 #   3. A staged src/main or src/test Scala file, or a staged
 #      tools/reach.py or tools/test_reach.py, runs the reachability
 #      check (tools/reach.py, no JVM): every member of src/main must be
@@ -152,6 +162,17 @@ if grep -qE "$stream_re" <<<"$staged"; then
   }
 fi
 
+ops_re='operators/(Graph|Events|Similarity|Sampling|Cumulative)\.scala'
+if grep -qE "$ops_re" <<<"$staged"; then
+  echo "precommit: graph, event, PCA, sampling and cumulative specs..." >&2
+  (cd "$checkdir" && sbt -batch "testOnly graft.Round6bOpsSpec graft.Round7bOpsSpec graft.Round9GraphSpec graft.Round9bOpsSpec graft.PcaSpec graft.PcaKSpec graft.Round12AdviceSpec graft.PcaProjectSpec graft.CumulativeSpec graft.CumulativePropertySpec graft.SqlFrontDoorSpec" < /dev/null) \
+      > /tmp/precommit_ops.log 2>&1 || {
+    tail -30 /tmp/precommit_ops.log >&2
+    echo "precommit: REFUSED — graph, event, PCA, sampling and cumulative specs failed" >&2
+    exit 1
+  }
+fi
+
 tables_re='graft/Tables\.scala'
 if grep -qE "$tables_re" <<<"$staged"; then
   echo "precommit: table-loader specs..." >&2
@@ -166,9 +187,10 @@ fi
 # Driver-entry smoke: any query name whose SparkEntry line is in the
 # staged diff gets re-driven against the oracle, and the plan audit
 # runs over the full driver surface.
-# Corpus-prep operator, Catalog, streaming/as-of and Tables changes
-# re-drive the entries that run them.
-if grep -qE "SparkEntry\.scala|$prep_re|$catalog_re|$stream_re|$tables_re" <<<"$staged"; then
+# Corpus-prep operator, Catalog, streaming/as-of, graph/event/PCA/
+# sampling/cumulative operator and Tables changes re-drive the entries
+# that run them.
+if grep -qE "SparkEntry\.scala|$prep_re|$catalog_re|$stream_re|$ops_re|$tables_re" <<<"$staged"; then
   # the greps legitimately match nothing when the diff only touches
   # oracle SQL bodies or comments — don't let pipefail kill the hook
   touched=$(git diff --cached -U0 -- src/main/scala/graft/SparkEntry.scala \
@@ -185,6 +207,10 @@ if grep -qE "SparkEntry\.scala|$prep_re|$catalog_re|$stream_re|$tables_re" <<<"$
   fi
   if grep -qE "$stream_re" <<<"$staged"; then
     touched=$(tr , '\n' <<<"$touched,e_asof,e_asof_tol,e_asof_fwd,e_asof_stream,sql_asof,e_session_stream,e_tumbling_stream,d_quality_stream,d_index_stream" \
+      | sed '/^$/d' | sort -u | paste -sd, -)
+  fi
+  if grep -qE "$ops_re" <<<"$staged"; then
+    touched=$(tr , '\n' <<<"$touched,g_pagerank,g_triangles,g_degree,g_bfs,g_harmonic,g_jaccard,g_kcore,g_cc,g_lpa,e_funnel,e_funnel_steps,e_funnel_rates,e_concurrency,e_sessionize,s_pca,s_pca_k,s_pca_project,p_epoch_plan,p_epoch_weighted" \
       | sed '/^$/d' | sort -u | paste -sd, -)
   fi
   if grep -qE "$tables_re" <<<"$staged"; then

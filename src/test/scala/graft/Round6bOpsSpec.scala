@@ -27,8 +27,10 @@ class Round6bOpsSpec extends SparkSpec {
       ("d", 0L, 0L, 0L, 0L)))
   }
 
-  test("allPairsHops from one source over topKBackbone prunes to top-fanout edges and settles exact hop counts") {
+  test("shortestPaths prunes to top-fanout edges and settles exact hop counts") {
     import spark.implicits._
+    // single-source shortest paths: allPairsHops seeded with one source
+    // over the top-fanout backbone
     // fanout=1 keeps only a→c (w 9 beats w 5); path to b is a→c→b
     val edges = edgesDf(Seq(("a", "b", 5L), ("a", "c", 9L), ("c", "b", 1L),
       ("d", "d", 7L))) // self-loop must be ignored

@@ -319,7 +319,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d)
       val res = CorpusPipeline.prepare(
         docs.where(col("doc_id") >= 20), Some(docs.where(col("doc_id") < 20)),
-        CorpusPipeline.Config(minQuality = 0.2))
+        minQuality = 0.2)
       res.corpus.select(col("doc_id"),
         graft.functions.Exact.round6(col("quality_score")).as("quality_score"),
         col("pred_lang"), col("split"))
@@ -343,7 +343,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d)
       CorpusPipeline.attrition(
         docs.where(col("doc_id") >= 20), Some(docs.where(col("doc_id") < 20)),
-        CorpusPipeline.Config(minQuality = 0.2))
+        minQuality = 0.2)
     }),
     "p_split" -> ((s, d) => Sampling.hashSplit(Tables.documents(s, d))),
     "p_sample" -> ((s, d) => Sampling.stratifiedSample(Tables.documents(s, d))),
@@ -4993,8 +4993,6 @@ object SparkEntry {
     "sql_hard_negatives" -> hardNegSql,
   )
 
-  /** Shared by d_containment and d_containment_auto (the routed entry
-    * takes the exact arm at driver scale). */
   /** Shared feature frame for the t_quality_model / t_quality_scores
     * oracles: label = the Gopher five-rule verdict (all-integer
     * comparisons — the t_gopher_rules oracle text), features are
@@ -5250,6 +5248,8 @@ object SparkEntry {
                       * 1000000.0 + 0.5) / 1000000.0 AS brier
          FROM g"""
 
+  /** Shared by d_containment and d_containment_auto (the routed entry
+    * takes the exact arm at driver scale). */
   private val containmentSql: String =
     """WITH tok AS (SELECT doc_id,
            list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS w FROM documents),
@@ -5607,15 +5607,6 @@ object SparkEntry {
     s"""WITH ${ivfChainSqlFrom("vec_id % 5 <> 0")}
          SELECT query_id, neighbor_id, floor(cos * 1000000 + 0.5) / 1000000 AS cos, rnk FROM r WHERE rnk <= 10"""
 
-  /** The QUANTIZED upsert oracle — the full frozen-quantizer contract
-    * replayed in SQL: centroids trained on the 80% base (the shared
-    * core chain), per-cell int8 residual scales frozen from the BASE
-    * rows only, every vector (base + delta) coded against those frozen
-    * artifacts with the same clamp (`greatest/least ±127`), and the
-    * asymmetric search (q·c + s·(q·code)) / (|q|·|reconstruction|)
-    * mirrored term by term. list() aggregates rebuild coordinate lists
-    * in pos order so every dot product sums in the SAME index order as
-    * the Spark side — bit-identical doubles, not approximately-equal. */
   /** The quantized-search chain (int8 encode against the quantizer
     * trained on `baseWhere` rows, asymmetric-distance probe, ranked
     * candidates in `rq`) — shared by the upsert oracle (base = 80%)
@@ -5659,6 +5650,15 @@ object SparkEntry {
                                           ORDER BY cos DESC, neighbor_id) AS rnk
                 FROM scoredq)"""
 
+  /** The QUANTIZED upsert oracle — the full frozen-quantizer contract
+    * replayed in SQL: centroids trained on the 80% base (the shared
+    * core chain), per-cell int8 residual scales frozen from the BASE
+    * rows only, every vector (base + delta) coded against those frozen
+    * artifacts with the same clamp (`greatest/least ±127`), and the
+    * asymmetric search (q·c + s·(q·code)) / (|q|·|reconstruction|)
+    * mirrored term by term. list() aggregates rebuild coordinate lists
+    * in pos order so every dot product sums in the SAME index order as
+    * the Spark side — bit-identical doubles, not approximately-equal. */
   private val ivfUpsertQSql: String =
     s"""WITH ${ivfQChainSqlFrom("vec_id % 5 <> 0")}
          SELECT query_id, neighbor_id,

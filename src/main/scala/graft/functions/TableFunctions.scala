@@ -152,7 +152,7 @@ object TableFunctions {
           Some(docs.where(col("doc_id") < bound)))
         else (docs, None)
       graft.operators.CorpusPipeline.attrition(corpus, bench,
-        graft.operators.CorpusPipeline.Config(minQuality = minQ))
+        minQuality = minQ)
     }
     tvf(ext, "graft_contract",
       "graft_contract(dir) - the orders ingest-gate contract card over " +

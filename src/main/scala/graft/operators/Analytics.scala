@@ -1792,22 +1792,6 @@ object Analytics {
           .as("contrib"))
   }
 
-  /** Welch two-sample t card for every pair of event types — the A/B
-    * significance primitive (does channel a's value differ from b's,
-    * without assuming equal variances?). Exactness recipe (the q_chi2 /
-    * e_acf class): per-group moments are INTEGER-EXACT — n, Σv (cents,
-    * long), Σv² (Decimal(38,0): v² ≤ 1e14 × 1e6 rows ≈ 1e20 of the 38
-    * digits) — the variance numerator n·Q − S² stays decimal-exact, and
-    * each of mean / s² / t / df is a fixed SHAPE of double ops both
-    * engines replay identically (one division for s², sqrt for t,
-    * Welch–Satterthwaite for df). n < 2 on either side, or two
-    * zero-variance groups, have no t to report: stated NULL, never an
-    * ANSI divide error or an Infinity in the hash.
-    *
-    * Scale shape: one map-side-combinable moments aggregate collapses
-    * the fact table to |types| rows; the pair frame is a bounded
-    * self-cross of that card (the q_kmv_join class of 1-row-aggregate
-    * nested-loop joins — ≤|types|² metadata rows, never the corpus). */
   /** Kaplan–Meier survival curve over customer REORDER gaps — the
     * churn/survival read ("what fraction of reorder intervals survive
     * past t days?"): every consecutive order pair contributes an
@@ -1920,6 +1904,22 @@ object Analytics {
         between / (between + within))).as("eta_sq"))
   }
 
+  /** Welch two-sample t card for every pair of event types — the A/B
+    * significance primitive (does channel a's value differ from b's,
+    * without assuming equal variances?). Exactness recipe (the q_chi2 /
+    * e_acf class): per-group moments are INTEGER-EXACT — n, Σv (cents,
+    * long), Σv² (Decimal(38,0): v² ≤ 1e14 × 1e6 rows ≈ 1e20 of the 38
+    * digits) — the variance numerator n·Q − S² stays decimal-exact, and
+    * each of mean / s² / t / df is a fixed SHAPE of double ops both
+    * engines replay identically (one division for s², sqrt for t,
+    * Welch–Satterthwaite for df). n < 2 on either side, or two
+    * zero-variance groups, have no t to report: stated NULL, never an
+    * ANSI divide error or an Infinity in the hash.
+    *
+    * Scale shape: one map-side-combinable moments aggregate collapses
+    * the fact table to |types| rows; the pair frame is a bounded
+    * self-cross of that card (the q_kmv_join class of 1-row-aggregate
+    * nested-loop joins — ≤|types|² metadata rows, never the corpus). */
   def welchTTest(events: DataFrame): DataFrame = {
     import graft.functions.Exact.round6
     val v = expr("CAST(round(value * 100) AS BIGINT)")

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *
   *   1. fused scan ([[fusedScan]]): quality score + language ID, the
   *      content digest and the MinHash signature in ONE map-only pass,
-  *      filtered by the quality floor + language allowlist
+  *      filtered by the quality floor `minQuality`
   *   2. exact dedup: a keeper window over the content digest
   *   3. near dedup: MinHash-LSH over the keepers' signatures →
   *      transitive chain resolution (connected components), keeping
@@ -18,6 +18,10 @@ import org.apache.spark.sql.functions._
   *   4. benchmark decontamination: drop docs sharing ≥ k shingles with
   *      any benchmark doc (benchmark side broadcasts)
   *   5. deterministic train/val/test split (salted-hash, map-only)
+  *
+  * Every stage but the quality floor runs at [[Dedup]]'s defaults: its
+  * MinHash shape, [[Dedup.minhashLshSigned]]'s uncapped buckets and
+  * [[Dedup.contamination]]'s shared-shingle floor.
   *
   * The only wide shuffles are the ones the algorithms require (keeper
   * window, candidate join, component propagation over the pair set).
@@ -29,16 +33,6 @@ import org.apache.spark.sql.functions._
   *     corpus's signature index; only its component resolution differs.
   */
 object CorpusPipeline {
-
-  case class Config(
-      minQuality: Double = 0.3,
-      langs: Set[String] = Set.empty, // empty = keep every language
-      shingleN: Int = 3,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      jaccard: Double = 0.5,
-      maxBucket: Int = 0,
-      minSharedShingles: Long = 3)
 
   /** `release()` unpersists the pinned intermediates — call it once the
     * corpus has been written out (or fully consumed). Without it a
@@ -82,20 +76,19 @@ object CorpusPipeline {
   /** ONE fused corpus scan for the whole pipeline: the [[scored]]
     * signals and digest plus the MinHash signature (LSH minhashes +
     * distinct shingle-hash set) from a single map-only pass. The
-    * quality/language filter sits between scoring and signing, so
+    * quality filter sits between scoring and signing, so
     * dropped rows never pay the k-hash signing. Every expression is the
     * SAME kernel its standalone operator uses (TextAnalysis signals,
     * md5 digest, [[Dedup.signatures]]' row-local MinHashSig), so
     * downstream values — and every oracle — are bit-identical to the
     * unfused stages. */
-  private def fusedScan(docs: DataFrame, cfg: Config): DataFrame =
+  private def fusedScan(docs: DataFrame, minQuality: Double): DataFrame =
     scored(docs)
-      .where(col("quality_score") >= cfg.minQuality &&
-        (if (cfg.langs.isEmpty) lit(true) else col("pred_lang").isin(cfg.langs.toSeq: _*)))
+      .where(col("quality_score") >= minQuality)
       .select(col("doc_id"), col("text"), col("h"),
         col("quality_score"), col("pred_lang"),
-        graft.functions.MinHashSig.minhashSig(col("tk"), cfg.shingleN,
-          cfg.numHashes).as("s"))
+        graft.functions.MinHashSig.minhashSig(col("tk"), Dedup.ShingleN,
+          Dedup.NumHashes).as("s"))
 
   /** The stage sequence both entry points run. It pins the two fan-out
     * points (the signed scan `quality_lang` feeds the keeper window AND
@@ -109,8 +102,8 @@ object CorpusPipeline {
     * consumes the scan's signatures ([[Dedup.minhashLshSigned]]) instead
     * of re-tokenizing, and decontamination explodes the scan's distinct
     * shingle-hash set instead of re-shingling the surviving corpus. */
-  private def run(docs: DataFrame, benchmark: Option[DataFrame], cfg: Config,
-      corpusIndex: Option[DataFrame]): Result = {
+  private def run(docs: DataFrame, benchmark: Option[DataFrame],
+      minQuality: Double, corpusIndex: Option[DataFrame]): Result = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // one corpus read: signals + digest + signatures.
@@ -118,7 +111,7 @@ object CorpusPipeline {
     // measured and REJECTED: at bench SF the extra exchange + stage
     // cost more than the single-core signing it spread out, and at
     // production scale the input has more splits than cores anyway.)
-    val filtered = fusedScan(docs, cfg).persist(MEMORY_AND_DISK)
+    val filtered = fusedScan(docs, minQuality).persist(MEMORY_AND_DISK)
     // exact-dedup losers (every non-min doc_id of a content-hash clone
     // cluster) rank over a TWO-COLUMN projection of the scan — the only
     // thing that shuffles is (doc_id, h), never text or signatures —
@@ -129,12 +122,8 @@ object CorpusPipeline {
         row_number().over(Window.partitionBy(col("h")).orderBy(col("doc_id"))))
       .where(col("__rn") > 1).select(col("doc_id"))
     val unique = filtered.join(broadcast(losers), Seq("doc_id"), "left_anti")
-    val sigCols = col("doc_id") +:
-      (0 until cfg.numHashes).map(i =>
-        element_at(col("s.mh"), i + 1).as(s"mh$i")) :+ col("s.ss").as("ss")
-    val signed = unique.where(col("s").isNotNull).select(sigCols: _*)
-    val pairs = Dedup.minhashLshSigned(signed,
-      cfg.numHashes, cfg.bands, cfg.jaccard, cfg.maxBucket)
+    val signed = Dedup.unpackSignatures(unique, Dedup.NumHashes)
+    val pairs = Dedup.minhashLshSigned(signed)
     // transitive resolution (each component keeps its min id) as a
     // named DROP SET: attrition counts it directly (each stage is a subset of
     // the previous, so survivor counts are running differences) instead
@@ -146,8 +135,7 @@ object CorpusPipeline {
       // corpus priority: a batch component touching the corpus drops
       // ENTIRELY (its representative already lives in the corpus);
       // unpaired docs are their own component
-      val touched = Dedup.dedupAgainstIndexSigned(index, signed,
-          cfg.numHashes, cfg.bands, cfg.jaccard, cfg.maxBucket)
+      val touched = Dedup.dedupAgainstIndexSigned(index, signed)
         .select(col("new_id").as("doc_id"))
         .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
         .select(coalesce(col("component"), col("doc_id")).as("component"))
@@ -164,14 +152,14 @@ object CorpusPipeline {
         // the same values Dedup.contamination derives by re-shingling
         val corpusShingles = deduped
           .select(col("doc_id"), explode(col("s.ss")).as("sh"))
-        val benchShingles = Dedup.hashedShingles(bench, cfg.shingleN).distinct()
+        val benchShingles = Dedup.hashedShingles(bench, Dedup.ShingleN).distinct()
           .select(col("h").as("sh"), col("doc_id").as("bench_id"))
         // no distinct: left_anti below is duplicate-insensitive, and
         // the extra exchange buys nothing
         val flagged = corpusShingles.join(broadcast(benchShingles), "sh")
           .groupBy(col("doc_id"), col("bench_id"))
           .agg(count(lit(1)).as("n_shared"))
-          .where(col("n_shared") >= cfg.minSharedShingles)
+          .where(col("n_shared") >= Dedup.MinShared)
           .select(col("doc_id"))
         (deduped.join(flagged, Seq("doc_id"), "left_anti"), Some(flagged))
       case None => (deduped, None)
@@ -191,8 +179,8 @@ object CorpusPipeline {
     * set to decontaminate against (None skips the stage). Call
     * [[Result.release]] once the corpus is consumed. */
   def prepare(docs: DataFrame, benchmark: Option[DataFrame] = None,
-      cfg: Config = Config()): Result =
-    run(docs, benchmark, cfg, None)
+      minQuality: Double = 0.3): Result =
+    run(docs, benchmark, minQuality, None)
 
   /** Attrition report — "where did my data go": surviving document
     * count after each stage. One MELTED counting pass (round 14):
@@ -209,10 +197,10 @@ object CorpusPipeline {
     * id), flagged ⊆ deduped's ids. Collected eagerly so the pins can
     * be released before the 5-literal-row result escapes. */
   def attrition(docs: DataFrame, benchmark: Option[DataFrame] = None,
-      cfg: Config = Config()): DataFrame = {
+      minQuality: Double = 0.3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val r = prepare(docs, benchmark, cfg)
+    val r = prepare(docs, benchmark, minQuality)
     try {
       val drops = r.dropSets.toMap
       val filtered = r.stages.toMap.apply("quality_lang")
@@ -260,8 +248,8 @@ object CorpusPipeline {
     * Sign the admitted docs ([[Dedup.buildMinhashIndex]]) and append to
     * the index to absorb the batch. */
   def prepareIncrement(newDocs: DataFrame, corpusIndex: DataFrame,
-      benchmark: Option[DataFrame] = None, cfg: Config = Config()): Result =
-    run(newDocs, benchmark, cfg, Some(corpusIndex))
+      benchmark: Option[DataFrame] = None, minQuality: Double = 0.3): Result =
+    run(newDocs, benchmark, minQuality, Some(corpusIndex))
 
   /** PUBLISH — the dataset-release verb: [[prepare]] the corpus, give
     * it the deterministic training order/sharding, and COMMIT the

@@ -18,18 +18,36 @@ import graft.functions.VectorFunctions
   *  - ngramJaccard: exact pairwise on shingle inverted index — quadratic
   *    in bucket size; used standalone only at small scale, otherwise as
   *    the verifier behind LSH candidates.
-  *  - simhash: 64-bit signature + 16-bit band self-join, hamming verify.
+  *  - simhash: 60-bit signature, 4×15-bit band self-join, hamming verify
+  *    ([[hammingPairs]], shared with the image dHash near-dup).
   *  - embeddingNearDup: cosine threshold pairs; quadratic baseline, with
   *    Similarity.semanticDedup (cell-bounded) as the scale path.
   */
 object Dedup {
 
   /** The MinHash/LSH defaults every near-dup form shares: word n-gram
-    * width, signature length, LSH bands and the Jaccard cutoff. */
-  private val ShingleN = 3
-  private val NumHashes = 64
+    * width, signature length, LSH bands and the Jaccard cutoff, plus the
+    * shared-shingle floor of benchmark decontamination. */
+  private[operators] val ShingleN = 3
+  private[operators] val NumHashes = 64
   private val Bands = 16
   private val JaccardThreshold = 0.5
+  private[operators] val MinShared = 3L
+
+  /** Hot-bucket cap: drop every row whose `keys` group holds more than
+    * `maxBucket` rows (`maxBucket <= 0` keeps all). A bucket of b rows
+    * contributes O(b²) pairs to the self-join on `keys` that follows, and
+    * at corpus scale one hot bucket (a boilerplate shingle, a surviving
+    * dup cluster) turns into the whole job. The window partitions exactly
+    * like that join, so the cap costs no extra exchange (ReuseExchange). */
+  private def capBuckets(df: DataFrame, maxBucket: Int, keys: Column*): DataFrame =
+    if (maxBucket <= 0) df
+    else {
+      import org.apache.spark.sql.expressions.Window
+      df.withColumn("bsz", count(lit(1)).over(Window.partitionBy(keys: _*)))
+        .where(col("bsz") <= maxBucket)
+        .drop("bsz")
+    }
 
   /** Exact dedup: content hash → keeper (min doc_id) + multiplicity. */
   def exact(docs: DataFrame): DataFrame =
@@ -65,34 +83,47 @@ object Dedup {
       .select(col("doc_id"), explode(graft.functions.ShingleHashes.shingleHashes(
         TextAnalysis.tokens(col("text")), n)).as("h"))
 
-  /** Exact n-gram Jaccard near-dup pairs via a shingle inverted index.
-    * The self-join on shingle is the candidate generator; count/union
-    * arithmetic is all-integer so the Jaccard double is engine-exact. */
-  def ngramJaccard(docs: DataFrame, n: Int = ShingleN,
-      threshold: Double = JaccardThreshold): DataFrame = {
-    // long-hash shingles: the inverted-index self-join shuffles 8-byte keys
-    // instead of n-word strings (same pair set modulo 64-bit collisions).
-    // The distinct-shingle frame fans out three ways (sizes aggregate +
-    // both sides of the self-join); localCheckpoint pins it once so the
-    // tokenize+shingle+hash+distinct lineage runs once, not three times —
-    // the same fan-out pinning CorpusPipeline does, in the eager
-    // lineage-truncating form a lazily-returned DataFrame needs (blocks
-    // are freed by the context cleaner when the frame is dropped).
+  /** Shingle-overlap counts, the inverted-index kernel of [[ngramJaccard]]
+    * and [[containmentPairs]]: (id_a < id_b, n_inter, sz_a, sz_b) for
+    * every doc pair sharing a hashed shingle, with each doc's distinct
+    * shingle count. The self-join on shingle is the candidate generator;
+    * long-hash shingles make it shuffle 8-byte keys instead of n-word
+    * strings (same pair set modulo 64-bit collisions). The distinct
+    * shingle frame fans out three ways (sizes aggregate + both sides of
+    * the self-join); localCheckpoint pins it once so the
+    * tokenize+shingle+hash+distinct lineage runs once, not three times
+    * (blocks are freed by the context cleaner when the frame is dropped).
+    *
+    * `maxBucket` > 0 drops posting lists longer than that before the
+    * join ([[capBuckets]]): pairs that RELY on hot shingles under-count
+    * their intersection (the recall trade of the capped ladder), while
+    * pairs sharing any uncapped shingle keep their TRUE set sizes — the
+    * sizes come from the uncapped frame. */
+  private def shingleOverlaps(docs: DataFrame, n: Int, maxBucket: Int): DataFrame = {
     val sh = hashedShingles(docs, n).distinct().localCheckpoint()
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val inter = sh.as("a")
-      .join(sh.as("b"),
+    val posting = capBuckets(sh, maxBucket, col("h"))
+    posting.as("a")
+      .join(posting.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("n_inter"))
-    inter
       .join(sizes.as("sa"), col("id_a") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("id_b") === col("sb.doc_id"))
+      .select(col("id_a"), col("id_b"), col("n_inter"),
+        col("sa.sz").as("sz_a"), col("sb.sz").as("sz_b"))
+  }
+
+  /** Exact n-gram Jaccard near-dup pairs via a shingle inverted index
+    * ([[shingleOverlaps]]); count/union arithmetic is all-integer so the
+    * Jaccard double is engine-exact. */
+  def ngramJaccard(docs: DataFrame, n: Int = ShingleN,
+      threshold: Double = JaccardThreshold): DataFrame =
+    shingleOverlaps(docs, n, maxBucket = 0)
       .withColumn("jaccard",
-        col("n_inter").cast("double") / (col("sa.sz") + col("sb.sz") - col("n_inter")))
+        col("n_inter").cast("double") / (col("sz_a") + col("sz_b") - col("n_inter")))
       .where(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), graft.functions.Exact.round6(col("jaccard")).as("jaccard"))
-  }
 
   /** Containment near-dup pairs: |A∩B| / min(|A|,|B|) ≥ threshold over
     * shingle sets. Containment catches the asymmetric shape symmetric
@@ -101,49 +132,22 @@ object Dedup {
     * but containment ≈ 1. The quote/boilerplate/wrapped-repost pass of
     * a training-data pipeline filters on this, not Jaccard.
     *
-    * Same inverted-index shape (and scale class) as [[ngramJaccard]]:
+    * Same inverted-index kernel (and scale class) as [[ngramJaccard]]:
     * quadratic per shingle bucket, so it is the verifier / small-scale
-    * path; at corpus scale generate candidates first (LSH over the
-    * small side's shingles, or [[exact]] ladder) and verify with this
-    * formula — the arithmetic is all-integer either way. */
+    * path; at corpus scale [[containmentAuto]] caps hot posting lists
+    * (`maxBucket`, see [[shingleOverlaps]]). The arithmetic is
+    * all-integer either way. */
   def containmentPairs(docs: DataFrame, n: Int = ShingleN, threshold: Double = 0.6): DataFrame =
-    containmentPairsImpl(docs, n, threshold, maxBucket = 0)
+    containment(shingleOverlaps(docs, n, maxBucket = 0), threshold)
 
-  private def containmentPairsImpl(docs: DataFrame, n: Int, threshold: Double,
-      maxBucket: Int): DataFrame = {
-    // pinned once for the three-way fan-out — see [[ngramJaccard]]
-    val sh = hashedShingles(docs, n).distinct().localCheckpoint()
-    // TRUE set sizes from the uncapped frame — the cap below only trims
-    // candidate generation, never a kept pair's denominator
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    // optional hot-shingle cap: a shingle shared by B docs contributes
-    // O(B²) candidate pairs; at corpus scale boilerplate grams turn one
-    // hot posting list into the whole job. Dropping lists larger than
-    // maxBucket under-counts intersections that RELY on hot grams (the
-    // documented recall trade of the capped ladder) — pairs sharing any
-    // uncapped gram still verify with their full true sizes.
-    val posting =
-      if (maxBucket <= 0) sh
-      else {
-        import org.apache.spark.sql.expressions.Window
-        sh.withColumn("bsz", count(lit(1)).over(Window.partitionBy(col("h"))))
-          .where(col("bsz") <= maxBucket)
-          .drop("bsz")
-      }
-    val inter = posting.as("a")
-      .join(posting.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.as("sa"), col("id_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("id_b") === col("sb.doc_id"))
+  /** The containment ratio and cutoff over [[shingleOverlaps]] rows. */
+  private def containment(overlaps: DataFrame, threshold: Double): DataFrame =
+    overlaps
       .withColumn("containment",
-        col("n_inter").cast("double") / least(col("sa.sz"), col("sb.sz")))
+        col("n_inter").cast("double") / least(col("sz_a"), col("sz_b")))
       .where(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"),
         graft.functions.Exact.round6(col("containment")).as("containment"))
-  }
 
   /** Bounded size probe shared by the auto-ladder entry points: counts
     * at most `maxRows + 1` ids, so the routing decision is O(maxRows)
@@ -173,28 +177,12 @@ object Dedup {
 
   /** Containment twin of [[nearDupAuto]]: exact [[containmentPairs]]
     * below `exactMaxRows`, the capped-posting-list form above it (see
-    * [[containmentPairsImpl]] for the recall contract). */
+    * [[shingleOverlaps]] for the recall contract). */
   def containmentAuto(docs: DataFrame, n: Int = ShingleN, threshold: Double = 0.6,
       exactMaxRows: Long = 10000, maxBucket: Int = 1000): DataFrame =
-    if (atMost(docs, "doc_id", exactMaxRows)) containmentPairs(docs, n, threshold)
-    else containmentPairsImpl(docs, n, threshold, maxBucket)
+    containment(shingleOverlaps(docs, n,
+      if (atMost(docs, "doc_id", exactMaxRows)) 0 else maxBucket), threshold)
 
-  /** MinHash + LSH banding near-dup detection — the 100 TB path.
-    *
-    * k seeded xxhash64 functions over the shingle set → k-wide signature;
-    * signatures are cut into `bands` bands whose hash is the LSH bucket
-    * key; docs sharing any band bucket become candidates; candidates are
-    * verified with exact Jaccard (array_intersect on collected shingle
-    * sets). Everything before verification is linear in corpus size.
-    */
-  /** @param maxBucket when > 0, LSH buckets larger than this are dropped
-    *   before the candidate self-join. A bucket of b docs contributes
-    *   O(b²) candidate pairs, and at corpus scale the heavy tail of
-    *   near-identical clusters (the thing exact dedup removes) turns one
-    *   hot bucket into the whole job's runtime. Oversized buckets are by
-    *   construction exact-dup clusters — run [[exact]] first and near-dup
-    *   only the keepers (the documented scale ladder), with the cap as
-    *   the safety valve against clusters that survive. */
   /** MinHash signature table: doc_id, mh0..mh{k-1}, ss (verification
     * shingle-hash set). Computed ROW-LOCALLY by the native codegen'd
     * `minhash_sig` expression ([[graft.functions.MinHashSig]]): the
@@ -207,17 +195,21 @@ object Dedup {
     * incremental deployment this table is the INDEX: persist it once
     * (e.g. Catalog.writeBucketed on doc_id) and only new batches are
     * ever re-signed. */
-  private def signatures(docs: DataFrame, n: Int, numHashes: Int): DataFrame = {
+  private def signatures(docs: DataFrame, n: Int, numHashes: Int): DataFrame =
     // the k-hash signing is the heavy map stage of the whole minhash
     // family — spread a single-split input so it runs on every core
-    val sig = graft.Tables.spreadSmall(docs, "doc_id")
+    unpackSignatures(graft.Tables.spreadSmall(docs, "doc_id")
       .select(col("doc_id"), graft.functions.MinHashSig.minhashSig(
-        TextAnalysis.tokens(col("text")), n, numHashes).as("s"))
-      .where(col("s").isNotNull)
-    sig.select(col("doc_id") +:
+        TextAnalysis.tokens(col("text")), n, numHashes).as("s")), numHashes)
+
+  /** The signature table's columns (doc_id, mh0..mh{k-1}, ss) from a
+    * frame carrying the `minhash_sig` struct as `s`; rows without a
+    * signature (fewer than n tokens) drop. */
+  private[operators] def unpackSignatures(signed: DataFrame,
+      numHashes: Int): DataFrame =
+    signed.where(col("s").isNotNull).select(col("doc_id") +:
       (0 until numHashes).map(i => element_at(col("s.mh"), i + 1).as(s"mh$i")) :+
       col("s.ss").as("ss"): _*)
-  }
 
   /** The aggregate formulation [[signatures]] replaced — exploded
     * shingles, groupBy(doc_id), k min() aggregates + collect_set. Kept
@@ -234,7 +226,11 @@ object Dedup {
 
   /** Band keys: (doc_id, band, bh) — one hash of each band's minhash
     * slice (column order is fixed). */
-  private def bandKeys(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
+  private def bandKeys(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    require(bands >= 1 && numHashes % bands == 0,
+      s"bands must divide the $numHashes minhashes, one of " +
+        s"${(1 to numHashes).filter(numHashes % _ == 0).mkString(", ")}: got $bands")
+    val rowsPerBand = numHashes / bands
     val bandStructs = (0 until bands).map { b =>
       val slice = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh$i"))
       struct(lit(b).as("band"), xxhash64(slice: _*).as("bh"))
@@ -243,6 +239,25 @@ object Dedup {
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
   }
 
+  /** MinHash + LSH banding near-dup detection — the 100 TB path.
+    *
+    * k seeded xxhash64 functions over the shingle set → k-wide signature;
+    * signatures are cut into `bands` bands whose hash is the LSH bucket
+    * key; docs sharing any band bucket become candidates; candidates are
+    * verified with exact Jaccard (array_intersect on collected shingle
+    * sets). Everything before verification is linear in corpus size.
+    * `bands` must divide `numHashes` (every minhash lands in exactly one
+    * band); any other count is an IllegalArgumentException naming the
+    * accepted values.
+    *
+    * @param maxBucket when > 0, LSH buckets larger than this are dropped
+    *   before the candidate self-join. A bucket of b docs contributes
+    *   O(b²) candidate pairs, and at corpus scale the heavy tail of
+    *   near-identical clusters (the thing exact dedup removes) turns one
+    *   hot bucket into the whole job's runtime. Oversized buckets are by
+    *   construction exact-dup clusters — run [[exact]] first and near-dup
+    *   only the keepers (the documented scale ladder), with the cap as
+    *   the safety valve against clusters that survive. */
   def minhashLsh(
       docs: DataFrame, n: Int = ShingleN, numHashes: Int = NumHashes,
       bands: Int = Bands, threshold: Double = JaccardThreshold,
@@ -258,36 +273,33 @@ object Dedup {
     * (and every downstream oracle) is identical to the unfused form. */
   def minhashLshSigned(
       sig: DataFrame, numHashes: Int = NumHashes, bands: Int = Bands,
-      threshold: Double = JaccardThreshold, maxBucket: Int = 0): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val bandedAll = bandKeys(sig, bands, rowsPerBand)
-    // the bucket-size window partitions exactly like the self-join below,
-    // so the cap costs no extra exchange (ReuseExchange)
-    val banded =
-      if (maxBucket <= 0) bandedAll
-      else {
-        import org.apache.spark.sql.expressions.Window
-        bandedAll
-          .withColumn("bsz",
-            count(lit(1)).over(Window.partitionBy(col("band"), col("bh"))))
-          .where(col("bsz") <= maxBucket)
-          .drop("bsz")
-      }
+      threshold: Double = JaccardThreshold, maxBucket: Int = 0): DataFrame =
+    bandPairs(sig, sig, numHashes, bands, threshold, maxBucket, _ < _)
 
-    val candidates = banded.as("x")
-      .join(banded.as("y"),
+  /** Verified MinHash pairs (id_a from `sigA`, id_b from `sigB`,
+    * jaccard ≥ threshold): the band-key candidate join plus exact-Jaccard
+    * verify that within-set ([[minhashLshSigned]]: both sides the same
+    * frame, `pair` = id_a < id_b) and cross-set
+    * ([[dedupAgainstIndexSigned]]: every candidate pair) dedup share.
+    * Both sides' buckets are capped ([[capBuckets]]) — a dup cluster
+    * concentrated on either side blows the join up just the same.
+    * Verification touches candidates only (long-set intersection; each
+    * sets side is already hash-partitioned by doc_id from the signature
+    * stage — Catalyst reuses that exchange). */
+  private def bandPairs(sigA: DataFrame, sigB: DataFrame, numHashes: Int,
+      bands: Int, threshold: Double, maxBucket: Int,
+      pair: (Column, Column) => Column): DataFrame = {
+    def banded(sig: DataFrame) =
+      capBuckets(bandKeys(sig, numHashes, bands), maxBucket, col("band"), col("bh"))
+    val candidates = banded(sigA).as("x")
+      .join(banded(sigB).as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
+          pair(col("x.doc_id"), col("y.doc_id")))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .distinct()
-
-    // exact-Jaccard verification, candidates only (long-set intersection;
-    // the sets side is already hash-partitioned by doc_id from the
-    // signature aggregation — Catalyst reuses that exchange)
-    val sets = sig.select(col("doc_id"), col("ss"))
     candidates
-      .join(sets.as("sa"), col("id_a") === col("sa.doc_id"))
-      .join(sets.as("sb"), col("id_b") === col("sb.doc_id"))
+      .join(sigA.select(col("doc_id"), col("ss")).as("sa"), col("id_a") === col("sa.doc_id"))
+      .join(sigB.select(col("doc_id"), col("ss")).as("sb"), col("id_b") === col("sb.doc_id"))
       .withColumn("n_inter", size(array_intersect(col("sa.ss"), col("sb.ss"))))
       .withColumn("jaccard",
         col("n_inter").cast("double") /
@@ -338,12 +350,13 @@ object Dedup {
   /** [[dedupAgainst]] probing a PREBUILT signature index with a new
     * batch that is already signed: the corpus text is never touched
     * (the stage-fused incremental pipeline signs the batch once in its
-    * signal scan and probes the index with the same signatures).
-    * `numHashes` and `bands` must match the index build. */
+    * signal scan and probes the index with the same signatures). The
+    * index must be built with the default signature shape. */
   def dedupAgainstIndexSigned(sigIndex: DataFrame, sigNew: DataFrame,
-      numHashes: Int = NumHashes, bands: Int = Bands,
-      threshold: Double = JaccardThreshold, maxBucket: Int = 0): DataFrame =
-    crossSetPairs(sigIndex, sigNew, numHashes, bands, threshold, maxBucket)
+      maxBucket: Int = 0): DataFrame =
+    bandPairs(sigIndex, sigNew, NumHashes, Bands, JaccardThreshold, maxBucket,
+      (_, _) => lit(true))
+      .select(col("id_a").as("corpus_id"), col("id_b").as("new_id"), col("jaccard"))
 
   /** Incremental near-dup: verified pairs BETWEEN a new batch and an
     * existing corpus — the daily-ingest shape. Corpus-side signatures
@@ -354,45 +367,8 @@ object Dedup {
     * new_ids into an anti-join to admit only novel documents. */
   def dedupAgainst(corpus: DataFrame, newDocs: DataFrame,
       maxBucket: Int = 0): DataFrame =
-    crossSetPairs(signatures(corpus, ShingleN, NumHashes),
-      signatures(newDocs, ShingleN, NumHashes), NumHashes, Bands,
-      JaccardThreshold, maxBucket)
-
-  private def crossSetPairs(sigC: DataFrame, sigN: DataFrame,
-      numHashes: Int, bands: Int, threshold: Double,
-      maxBucket: Int): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    // same safety valve as minhashLsh: a surviving dup cluster of B
-    // corpus docs × b matching batch docs is a B·b candidate blow-up
-    // per band without the cap — applied to BOTH sides, because a dup
-    // cluster concentrated in the new batch blows up just the same
-    def capBuckets(bk: DataFrame): DataFrame =
-      if (maxBucket <= 0) bk
-      else {
-        import org.apache.spark.sql.expressions.Window
-        bk.withColumn("bsz",
-            count(lit(1)).over(Window.partitionBy(col("band"), col("bh"))))
-          .where(col("bsz") <= maxBucket)
-          .drop("bsz")
-      }
-    val bN = capBuckets(bandKeys(sigN, bands, rowsPerBand))
-      .select(col("doc_id").as("new_id"), col("band"), col("bh"))
-    val bC = capBuckets(bandKeys(sigC, bands, rowsPerBand))
-    val candidates = bC
-      .join(bN, Seq("band", "bh"))
-      .select(col("doc_id").as("corpus_id"), col("new_id")).distinct()
-    candidates
-      .join(sigC.select(col("doc_id"), col("ss").as("sa")),
-        col("corpus_id") === col("doc_id")).drop("doc_id")
-      .join(sigN.select(col("doc_id"), col("ss").as("sb")),
-        col("new_id") === col("doc_id")).drop("doc_id")
-      .withColumn("n_inter", size(array_intersect(col("sa"), col("sb"))))
-      .withColumn("jaccard", col("n_inter").cast("double") /
-        (size(col("sa")) + size(col("sb")) - col("n_inter")))
-      .where(col("jaccard") >= threshold)
-      .select(col("corpus_id"), col("new_id"),
-        graft.functions.Exact.round6(col("jaccard")).as("jaccard"))
-  }
+    dedupAgainstIndexSigned(signatures(corpus, ShingleN, NumHashes),
+      signatures(newDocs, ShingleN, NumHashes), maxBucket)
 
   /** Dup-cluster size distribution — the audit view of a dedup run:
     * how many clusters of each size exist and how many docs each size
@@ -404,6 +380,18 @@ object Dedup {
       .groupBy(col("sz")).agg(
         count(lit(1)).as("n_clusters"),
         (sum(col("sz")) - count(lit(1))).as("docs_removed"))
+
+  /** Release the blocks behind a localCheckpoint'd dataset. Checkpointed
+    * RDDs are NOT tracked by the CacheManager, so `clearCache()` never
+    * frees them — an iterative operator that checkpoints per round MUST
+    * release superseded rounds itself or it leaks one full state table
+    * per iteration (measured: a re-run of the corpus pipeline in one
+    * JVM went 10.8 s → 34.9 s from the accumulated pins). */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectLeaves().foreach {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
+      case _ =>
+    }
 
   /** Connected components over a pair set (id_a, id_b) → (id, component)
     * with component = the smallest id reachable from `id`.
@@ -424,18 +412,6 @@ object Dedup {
     * O(duplicates), vastly smaller than the corpus, and for the common
     * case the iterative loop's per-round jobs cost more than the whole
     * graph. Same ladder shape as [[embeddingDedup]]. */
-  /** Release the blocks behind a localCheckpoint'd dataset. Checkpointed
-    * RDDs are NOT tracked by the CacheManager, so `clearCache()` never
-    * frees them — an iterative operator that checkpoints per round MUST
-    * release superseded rounds itself or it leaks one full state table
-    * per iteration (measured: a re-run of the corpus pipeline in one
-    * JVM went 10.8 s → 34.9 s from the accumulated pins). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ =>
-    }
-
   def connectedComponents(pairs: DataFrame,
       localMaxPairs: Long = 1000000L): DataFrame = {
     // symmetric expansion via explode, NOT unionAll of two selects: a
@@ -552,20 +528,19 @@ object Dedup {
   }
 
   /** Benchmark decontamination: corpus documents sharing at least
-    * `minShared` distinct n-grams with any benchmark document (flag —
+    * [[MinShared]] distinct word 3-grams with any benchmark document (flag —
     * the removal is a left-anti join on doc_id). The benchmark side is tiny
     * by nature, so its hashed shingle set broadcasts and the corpus
     * streams map-only past it; the only exchange is the per-(doc, bench)
     * overlap count. */
-  def contamination(corpus: DataFrame, benchmark: DataFrame, n: Int = ShingleN,
-      minShared: Long = 3): DataFrame = {
-    val c = hashedShingles(corpus, n).distinct()
-    val b = hashedShingles(benchmark, n).distinct()
+  def contamination(corpus: DataFrame, benchmark: DataFrame): DataFrame = {
+    val c = hashedShingles(corpus, ShingleN).distinct()
+    val b = hashedShingles(benchmark, ShingleN).distinct()
       .select(col("h"), col("doc_id").as("bench_id"))
     c.join(broadcast(b), "h")
       .groupBy(col("doc_id"), col("bench_id"))
       .agg(count(lit(1)).as("n_shared"))
-      .where(col("n_shared") >= minShared)
+      .where(col("n_shared") >= MinShared)
   }
 
   /** Boilerplate phrase mining: n-gram phrases appearing in at least
@@ -622,23 +597,43 @@ object Dedup {
     sig.select(col("doc_id"), fp.as("simhash"))
   }
 
-  /** SimHash near-dup pairs: 4×15-bit band self-join (a pair within
-    * hamming distance 3 of 60 bits must agree exactly on ≥1 of the 4
-    * bands — pigeonhole — so banding loses nothing vs all-pairs), then
-    * exact hamming verify. */
-  def simhashNearDup(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val sig = simhashSignatures(docs)
-    val chunked = sig.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(c => struct(lit(c).as("c"),
-        shiftright(col("simhash"), 15 * c).bitwiseAND(lit(0x7FFFL)).as("ck"))): _*)).as("band"))
-      .select(col("doc_id"), col("simhash"), col("band.c"), col("band.ck"))
-    chunked.as("x")
-      .join(chunked.as("y"),
-        col("x.c") === col("y.c") && col("x.ck") === col("y.ck") &&
+  /** SimHash near-dup pairs: [[hammingPairs]] over 4×15-bit bands of
+    * the 60-bit signature (a pair within hamming distance 3 of 60 bits
+    * must agree exactly on ≥1 of the 4 bands — pigeonhole — so banding
+    * loses nothing vs all-pairs). */
+  def simhashNearDup(docs: DataFrame, maxHamming: Int = 3): DataFrame =
+    hammingPairs(simhashSignatures(docs), "simhash", 15, maxHamming)
+      .withColumn("hamming", col("hamming").cast("long"))
+
+  /** Banded-Hamming pair miner over (doc_id, `hashCol`: bigint)
+    * signatures — the one kernel behind text SimHash
+    * ([[simhashNearDup]]) and image dHash ([[Multimodal.imageNearDup]])
+    * near-dup: cut the hash into four `bandBits`-wide bands, self-join on
+    * (band, value), verify candidates with the exact Hamming distance
+    * (`bit_count(x ^ y)`, codegen'd, an INT). By the pigeonhole
+    * principle a pair within Hamming distance 3 ALWAYS shares at least
+    * one intact band, so at that threshold the banding is exhaustive,
+    * not approximate — while the join only ever touches bucket
+    * collisions, never all pairs. A persisted signature table probes
+    * without re-signing (the build-once/probe-many shape of
+    * [[buildMinhashIndex]]). The pigeonhole partitioning of
+    * Hamming-distance similarity joins over MapReduce (EDBT 2015). */
+  def hammingPairs(sig: DataFrame, hashCol: String, bandBits: Int,
+      maxHamming: Int): DataFrame = {
+    val bandStructs = (0 until 4).map { b =>
+      struct(lit(b).as("band"), shiftrightunsigned(col(hashCol), b * bandBits)
+        .bitwiseAND(lit((1L << bandBits) - 1)).as("bh"))
+    }
+    val banded = sig
+      .select(col("doc_id"), col(hashCol).as("hv"), explode(array(bandStructs: _*)).as("bb"))
+      .select(col("doc_id"), col("hv"), col("bb.band").as("band"), col("bb.bh").as("bh"))
+    banded.as("x")
+      .join(banded.as("y"),
+        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long").as("hamming"))
-      .distinct()
+        bit_count(col("x.hv").bitwiseXOR(col("y.hv"))).as("hamming"))
+      .distinct() // a pair sharing k bands appears k times
       .where(col("hamming") <= maxHamming)
   }
 
@@ -695,26 +690,17 @@ object Dedup {
   /** Span width of [[spanDedup]] and its removal twin [[scrubSpans]]. */
   private val SpanTokens = 8
 
-  /** Span-level (sub-document) exact dedup — the C4-style pass that
-    * document-level dedup misses: fixed 8-token windows
-    * (stride = span, no overlap) are hashed, the global first
-    * occurrence of each span hash is the lexicographically smallest
-    * (doc_id, span_id), and every later occurrence counts as a
-    * duplicate. Output is the per-document audit a cleaning pipeline
-    * filters on: span count, duplicated-span count, duplicated
-    * fraction.
-    *
-    * Scale shape: span TEXT never shuffles — spans collapse to a
-    * 60-bit portable hash in the scan projection, the one wide
-    * exchange carries (hash, doc_id, span_id) triples, first
-    * occurrence is a min-struct aggregate, and the dup flags come from
-    * re-joining on the hash (co-partitioned with the aggregate). Both
-    * sides of the verdict stay O(total spans), never O(text). */
-  def spanDedup(docs: DataFrame): DataFrame = {
-    // (doc_id, span_id) order packed into one BIGINT so "first
-    // occurrence" is a plain min() on any engine (span_id is bounded by
-    // the per-doc token count; 10⁹ slots/doc means no real document can
-    // collide into a neighboring doc's range)
+  /** The span prelude [[spanDedup]] and [[scrubSpans]] share: each
+    * document's fixed 8-token windows (stride = span, no overlap) as
+    * (h, doc_id, span_id, ord, txt, first_ord) rows. `h` is the span's
+    * 60-bit portable hash, `ord` packs (doc_id, span_id) into one BIGINT
+    * so "first occurrence" is a plain min() on any engine, and
+    * `first_ord` is the global first occurrence of `h` — a span is a
+    * duplicate iff `ord` ≠ `first_ord`. The wide exchanges key on the
+    * hash (the first-seen aggregate and the re-join on it are
+    * co-partitioned); span text rides them only for a consumer that
+    * reads `txt`. */
+  private def spansFirstSeen(docs: DataFrame): DataFrame = {
     val spans = docs
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("tk"))
       .withColumn("n", size(col("tk")))
@@ -726,17 +712,32 @@ object Dedup {
         // — wide enough that no real document can collide into the next
         // doc_id's ord range; doc_ids stay safe below ~9.2e9
         (col("doc_id") * 1000000000L + col("span_id")).as("ord"),
-        TextAnalysis.portableHash60(
-          concat_ws(" ", slice(col("tk"), (col("span_id") * SpanTokens + 1).cast("int"), lit(SpanTokens))))
-          .as("h"))
+        concat_ws(" ", slice(col("tk"),
+          (col("span_id") * SpanTokens + 1).cast("int"), lit(SpanTokens))).as("txt"))
+      .withColumn("h", TextAnalysis.portableHash60(col("txt")))
     val firstSeen = spans.groupBy(col("h")).agg(min(col("ord")).as("first_ord"))
     spans.join(firstSeen, "h")
+  }
+
+  /** Span-level (sub-document) exact dedup — the C4-style pass that
+    * document-level dedup misses: over [[spansFirstSeen]], every span
+    * after the global first occurrence of its hash (the
+    * lexicographically smallest (doc_id, span_id)) counts as a
+    * duplicate. Output is the per-document audit a cleaning pipeline
+    * filters on: span count, duplicated-span count, duplicated
+    * fraction.
+    *
+    * Scale shape: span TEXT never shuffles — spans collapse to a
+    * 60-bit portable hash in the scan projection, the one wide
+    * exchange carries (hash, doc_id, span_id) triples. Both sides of
+    * the verdict stay O(total spans), never O(text). */
+  def spanDedup(docs: DataFrame): DataFrame =
+    spansFirstSeen(docs)
       .withColumn("is_dup", (col("ord") =!= col("first_ord")).cast("long"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_spans"), sum(col("is_dup")).as("n_dup_spans"))
       .withColumn("dup_frac", graft.functions.Exact.round6(
         col("n_dup_spans").cast("double") / col("n_spans")))
-  }
 
   /** The REMOVAL twin of [[spanDedup]] — C4/CCNet-style scrubbing:
     * every span whose hash was seen earlier in the global (doc_id,
@@ -753,23 +754,11 @@ object Dedup {
     * corpus; no window). Docs whose every span was seen earlier
     * elsewhere come out empty (n_spans_kept = 0, text_clean = '') but
     * are KEPT, so attrition stays auditable downstream. */
-  def scrubSpans(docs: DataFrame): DataFrame = {
-    val spans = docs
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("tk"))
-      .withColumn("n", size(col("tk")))
-      .where(col("n") > 0)
-      .withColumn("span_id", explode(sequence(lit(0L),
-        expr(s"CAST((n + $SpanTokens - 1) div $SpanTokens AS BIGINT)") - 1)))
-      .select(col("doc_id"), col("span_id"),
-        (col("doc_id") * 1000000000L + col("span_id")).as("ord"),
-        concat_ws(" ", slice(col("tk"),
-          (col("span_id") * SpanTokens + 1).cast("int"), lit(SpanTokens))).as("txt"))
-      .withColumn("h", TextAnalysis.portableHash60(col("txt")))
-    val firstSeen = spans.groupBy(col("h")).agg(min(col("ord")).as("first_ord"))
+  def scrubSpans(docs: DataFrame): DataFrame =
     // collect_list skips nulls, so conditioning INSIDE the aggregate
     // (not a row filter) is what keeps fully-scrubbed docs in the
     // output with an empty kept-array instead of dropping their group
-    spans.join(firstSeen, "h")
+    spansFirstSeen(docs)
       .groupBy(col("doc_id"))
       .agg(collect_list(when(col("ord") === col("first_ord"),
         struct(col("span_id"), col("txt")))).as("kept"))
@@ -777,7 +766,6 @@ object Dedup {
         size(col("kept")).cast("long").as("n_spans_kept"),
         concat_ws(" ", transform(array_sort(col("kept")), x => x.getField("txt")))
           .as("text_clean"))
-  }
 
   /** Near-dup threshold SWEEP: the data-card a pipeline owner reads to
     * pick the dedup threshold — pair and affected-doc counts at several

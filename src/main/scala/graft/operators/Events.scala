@@ -152,7 +152,10 @@ object Events {
     * analytics read next to [[funnel]] (which checks ONE hypothesized
     * order; paths SURFACE the orders that actually happen).
     *
-    * Determinism is the whole trick: within-session order is pinned by
+    * Determinism is the whole trick: session ids come from
+    * [[withSessionIds]], which gives same-microsecond events the same
+    * session whatever order they take (they are 0 µs apart, so none of
+    * them opens a session); within-session order is pinned by
     * (tsu, event_id) — same-microsecond events would otherwise make
     * the path string engine-dependent — via `array_sort` over
     * (tsu, event_id, type) structs (struct ordering = field order);
@@ -162,16 +165,9 @@ object Events {
     * session grain, and sort+limit plans as TakeOrderedAndProject —
     * a bounded heap per partition, never a global sort. */
   def topPaths(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = events.select(col("user_id"), col("event_id"),
-      col("event_type"), unix_micros(col("ts")).as("tsu"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("tsu"), col("event_id"))
-    val s = e.withColumn("prev", lag(col("tsu"), 1).over(w))
-      .withColumn("is_new", when(col("prev").isNull ||
-        col("tsu") - col("prev") > SessionGapUs, 1L).otherwise(0L))
-      .withColumn("session_id", sum(col("is_new")).over(w))
-    val paths = s.groupBy(col("user_id"), col("session_id"))
+    val paths = withSessionIds(events.select(col("user_id"), col("event_id"),
+        col("event_type"), unix_micros(col("ts")).as("tsu")))
+      .groupBy(col("user_id"), col("session_id"))
       .agg(array_join(transform(
         array_sort(collect_list(struct(col("tsu"), col("event_id"),
           col("event_type")))),

@@ -183,39 +183,14 @@ object Multimodal {
       .toDF("doc_id", "width", "height", "dhash")
   }
 
-  /** Image near-dup pairs via banded dHash — the same LSH shape as
-    * [[Dedup.simhashNearDup]]: cut the 64-bit hash into four 16-bit
-    * bands, self-join on (band, value), verify candidates with the
-    * exact Hamming distance (`bit_count(x ^ y)`, codegen'd). By the
-    * pigeonhole principle a pair within Hamming distance 3 ALWAYS
-    * shares at least one intact band, so at the default threshold the
-    * banding is exhaustive, not approximate — while the join only ever
-    * touches bucket collisions, never all pairs. */
+  /** Image near-dup pairs via banded dHash — [[Dedup.hammingPairs]],
+    * the same banded-Hamming miner as [[Dedup.simhashNearDup]], over
+    * the 64-bit hash cut into four 16-bit bands: by the pigeonhole
+    * principle a pair within Hamming distance 3 ALWAYS shares at least
+    * one intact band, so at the default threshold the banding is
+    * exhaustive, not approximate. */
   def imageNearDup(media: DataFrame, maxHamming: Int = 3): DataFrame =
-    nearDupFromSignatures(imageSignatures(media), maxHamming)
-
-  /** Band join + Hamming verify over precomputed (doc_id, dhash)
-    * signatures — split out so the banding guarantee is testable on
-    * planted hashes and so a persisted signature table can be probed
-    * without re-decoding (the build-once/probe-many production shape,
-    * mirroring [[Dedup.buildMinhashIndex]]). */
-  def nearDupFromSignatures(sig: DataFrame, maxHamming: Int): DataFrame = {
-    val bandStructs = (0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("dhash"), b * 16).bitwiseAND(lit(0xffffL)).as("bh"))
-    }
-    val banded = sig
-      .select(col("doc_id"), col("dhash"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("dhash"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-    banded.as("x")
-      .join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
-        bit_count(col("x.dhash").bitwiseXOR(col("y.dhash"))).as("hamming"))
-      .distinct() // a pair sharing k bands appears k times
-      .where(col("hamming") <= maxHamming)
-  }
+    Dedup.hammingPairs(imageSignatures(media), "dhash", 16, maxHamming)
 
   /** Deterministic synthetic audio: a REAL RIFF/WAVE payload per
     * document — 16-bit signed PCM mono sine wave, frame count derived

@@ -248,17 +248,6 @@ object Sampling {
       .select(col("doc_id"), col("source"))
   }
 
-  /** LEAKAGE-SAFE split: near-duplicate documents must land in the
-    * same train/val/test side, or held-out eval silently scores on
-    * paraphrases of training data — the contamination bug a 100 TB
-    * pipeline ships without noticing (same failure class
-    * `d_contamination` measures after the fact; this prevents it at
-    * split time). Assignment hashes each near-dup COMPONENT's root
-    * instead of the doc id: pair-connected docs share the root
-    * (transitively, via [[Dedup.connectedComponents]]), singletons
-    * root at themselves — so no mined pair ever straddles a split
-    * boundary, and the 80/10/10 proportions hold at component grain.
-    * Cost on top of the pair mine: one components pass + one join. */
   /** WEIGHTED mixture epoch plan — the budgeting arithmetic behind
     * weighted mixtures (`p_mix` applies such rates row-wise; this PLANS
     * them from the measured token inventory): source i gets
@@ -364,6 +353,17 @@ object Sampling {
     rooted.withColumn("fold", fold.cast("int"))
   }
 
+  /** LEAKAGE-SAFE split: near-duplicate documents must land in the
+    * same train/val/test side, or held-out eval silently scores on
+    * paraphrases of training data — the contamination bug a 100 TB
+    * pipeline ships without noticing (same failure class
+    * `d_contamination` measures after the fact; this prevents it at
+    * split time). Assignment hashes each near-dup COMPONENT's root
+    * instead of the doc id: pair-connected docs share the root
+    * (transitively, via [[Dedup.connectedComponents]]), singletons
+    * root at themselves — so no mined pair ever straddles a split
+    * boundary, and the 80/10/10 proportions hold at component grain.
+    * Cost on top of the pair mine: one components pass + one join. */
   def leakSafeSplit(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val comp = graft.operators.Dedup.connectedComponents(pairs)
     docs.join(comp, docs("doc_id") === comp("id"), "left")

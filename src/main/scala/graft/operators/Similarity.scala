@@ -130,27 +130,37 @@ object Similarity {
       df.select(col(idCol), col("v"), explode(cells).as("cell_id"))
   }
 
+  /** Per-group mean vector of rows (`key`, v): (`key`, cv, n), n the
+    * group's row count. The mean is computed by dimension (posexplode +
+    * two-level aggregate), so shuffle volume is groups×dim per upstream
+    * partition, never the corpus. Coordinate sums use fixed-point longs
+    * (2^30 scale) — order-independent addition keeps the means
+    * bit-identical across runs and engine-exact, which double summation
+    * would not. The one centroid fit of k-means ([[coarseCentroids]]),
+    * the nearest-centroid classifier ([[centroidClassify]]) and the
+    * simplified silhouette ([[silhouetteCentroid]]). */
+  private def meanVectors(rows: DataFrame, key: String): DataFrame = {
+    val Scale = (1L << 30).toDouble
+    rows.select(col(key), posexplode(col("v")).as(Seq("pos", "x")))
+      .groupBy(col(key), col("pos"))
+      .agg(sum(round(col("x") * Scale).cast("long")).as("sx"), count(lit(1)).as("n"))
+      .groupBy(col(key))
+      .agg(array_sort(collect_list(struct(col("pos"),
+        (col("sx").cast("double") / col("n") / Scale).as("x")))).as("ps"),
+        max(col("n")).as("n"))
+      .select(col(key), col("ps.x").as("cv"), col("n"))
+  }
+
   /** Coarse centroids: hash-ordered seed sample plus `refinePasses`
     * k-means (Lloyd) passes. Each pass is assign-nearest + per-cell
-    * mean; the mean is computed by dimension (posexplode + two-level
-    * aggregate), so shuffle volume is nCells×dim per upstream partition,
-    * never the corpus. Coordinate sums use fixed-point longs (2^30
-    * scale) — order-independent addition keeps refined centroids
-    * bit-identical across runs, which double summation would not.
-    * A seed cell that captures no vectors disappears (its would-be
-    * members re-home to surviving cells on the next assignment). */
+    * [[meanVectors]]. A seed cell that captures no vectors disappears
+    * (its would-be members re-home to surviving cells on the next
+    * assignment). */
   def coarseCentroids(e: DataFrame, nCells: Int, refinePasses: Int = 1): DataFrame = {
-    val Scale = (1L << 30).toDouble
     var cents = sampleCentroids(e, nCells)
     for (_ <- 1 to refinePasses) {
-      cents = assignCells(e, cents, "vec_id", 1)
-        .select(col("cell_id"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cell_id"), col("pos"))
-        .agg(sum(round(col("x") * Scale).cast("long")).as("sx"), count(lit(1)).as("n"))
-        .groupBy(col("cell_id"))
-        .agg(array_sort(collect_list(struct(col("pos"),
-          (col("sx").cast("double") / col("n") / Scale).as("x")))).as("ps"))
-        .select(col("cell_id"), col("ps.x").as("cv"))
+      cents = meanVectors(assignCells(e, cents, "vec_id", 1), "cell_id")
+        .select(col("cell_id"), col("cv"))
     }
     // materialize eagerly: the result is ≤nCells rows, but its LINEAGE
     // holds a full-corpus assignment per refinement pass — and a consumer
@@ -163,24 +173,15 @@ object Similarity {
 
   /** IVF (inverted-file) ANN: a coarse quantizer of ≤nCells centroids
     * partitions the corpus; queries probe only the nProbe nearest cells.
-    * All stages are linear: assignment is a broadcast join against the
+    * One build ([[buildIvfIndex]]) and one probe ([[ivfSearch]]) over
+    * the query rows (vec_id < maxQueryId) of the same table. All stages
+    * are linear: assignment is a map-only projection against the
     * centroid set, search touches ~(nProbe/nCells) of the corpus per
-    * query. The probe side's cell key is RENAMED (`probe_cell`) — the
-    * corpus and queries share centroid lineage, and a same-name join
-    * would build a trivially-true single-exprId predicate. */
+    * query. */
   def ivfAnn(embeddings: DataFrame, maxQueryId: Long, k: Int,
-      nCells: Int = 16, nProbe: Int = 4, refinePasses: Int = 1): DataFrame = {
-    val e = prepared(embeddings)
-    val centroids = coarseCentroids(e, nCells, refinePasses)
-    val corpus = assignCells(e, centroids, "vec_id", 1)
-    val queries = assignCells(e.where(col("vec_id") < maxQueryId), centroids, "vec_id", nProbe)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("cell_id").as("probe_cell"))
-    val scored = corpus
-      .join(broadcast(queries),
-        col("cell_id") === col("probe_cell") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos", cosineSim(col("qv"), col("v")))
-    topKPerQuery(scored, k)
-  }
+      nCells: Int = 16, nProbe: Int = 4, refinePasses: Int = 1): DataFrame =
+    ivfSearch(buildIvfIndex(embeddings, nCells, refinePasses),
+      queryVectors(embeddings, maxQueryId), k, nProbe)
 
   /** A persisted IVF index is BOTH tables: the per-vector cell
     * assignments and the centroid set itself. Carrying centroids
@@ -196,9 +197,10 @@ object Similarity {
     * [[ivfSearch]]. Rebuilding the assignment per query batch (what a
     * monolithic IVF call does) costs more than brute force until the
     * query count is large; the index is what makes IVF pay at scale. */
-  def buildIvfIndex(embeddings: DataFrame, nCells: Int = 16): IvfIndex = {
+  def buildIvfIndex(embeddings: DataFrame, nCells: Int = 16,
+      refinePasses: Int = 1): IvfIndex = {
     val e = prepared(embeddings)
-    val centroids = coarseCentroids(e, nCells)
+    val centroids = coarseCentroids(e, nCells, refinePasses)
     IvfIndex(assignCells(e, centroids, "vec_id", 1), centroids)
   }
 
@@ -221,7 +223,10 @@ object Similarity {
   /** Probe-only IVF search against a prebuilt index: queries are scored
     * against the (tiny, broadcast) centroid set to pick nProbe cells,
     * then join only those cells' vectors. The corpus is never re-scored.
-    * `queries` needs (query_id, qv: array<double>). */
+    * `queries` needs (query_id, qv: array<double>). The probe side's
+    * cell key is RENAMED (`probe_cell`) — corpus and queries share
+    * centroid lineage, and a same-name join would build a trivially-true
+    * single-exprId predicate. */
   def ivfSearch(index: IvfIndex, queries: DataFrame, k: Int,
       nProbe: Int = 4): DataFrame = {
     val probed = assignCells(
@@ -847,28 +852,12 @@ object Similarity {
     * stream the corpus once; only the bounded centroid table ever
     * reaches the driver. */
   def centroidClassify(embeddings: DataFrame): DataFrame = {
-    import graft.functions.NearestCells.nearestCells
-    val Scale = (1L << 30).toDouble
-    val e = embeddings.select(col("vec_id"),
-      col("label").cast("long").as("label"),
+    val e = embeddings.select(col("label").cast("long").as("label"),
       toDouble(col("embedding")).as("v"))
-    val cents = e
-      .select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("label"), col("pos"))
-      .agg(sum(round(col("x") * Scale).cast("long")).as("sx"), count(lit(1)).as("n"))
-      .groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(col("pos"),
-        (col("sx").cast("double") / col("n") / Scale).as("x")))).as("ps"))
-      .select(col("label").as("cell_id"), col("ps.x").as("cv"))
-    // bounded metadata: nClasses rows (the class alphabet), same class
-    // of collect as the IVF centroid set
-    val rows = cents.collect()
-    require(rows.nonEmpty, "no labeled rows to fit on")
-    val ids = rows.map(_.getLong(0))
-    val cvs = rows.map(_.getSeq[Double](1).toArray)
-    e.select(col("label"),
-        element_at(nearestCells(col("v"), ids, cvs, 1), 1).as("pred_label"))
-      .groupBy(col("label"), col("pred_label"))
+    // classes as cells: the fitted centroid of label L is cell L
+    val cents = meanVectors(e, "label").select(col("label").as("cell_id"), col("cv"))
+    assignCells(e, cents, "label", 1)
+      .groupBy(col("label"), col("cell_id").as("pred_label"))
       .agg(count(lit(1)).as("n"))
   }
 
@@ -1147,18 +1136,10 @@ object Similarity {
     * ties pin to the smallest label. Singleton clusters take the
     * textbook s = 0 (matching [[silhouette]]'s convention). */
   def silhouetteCentroid(embeddings: DataFrame): DataFrame = {
-    val Scale = (1L << 30).toDouble
     val e = spread(embeddings.select(col("vec_id"),
       col("label").cast("long").as("label"), toDouble(col("embedding")).as("v")))
-    val cents = e
-      .select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("label"), col("pos"))
-      .agg(sum(round(col("x") * Scale).cast("long")).as("sx"), count(lit(1)).as("n"))
-      .groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(col("pos"),
-        (col("sx").cast("double") / col("n") / Scale).as("x")))).as("ps"),
-        max(col("n")).as("cn"))
-      .select(col("label").as("clabel"), col("ps.x").as("cv"), col("cn"))
+    val cents = meanVectors(e, "label")
+      .select(col("label").as("clabel"), col("cv"), col("n").as("cn"))
     val d = e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("label"), col("clabel"), col("cn"),
         (lit(1000000L) -

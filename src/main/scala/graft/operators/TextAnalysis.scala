@@ -445,11 +445,11 @@ object TextAnalysis {
           col("r_sum").cast("double") / 1e6 / col("n_feats")).as("imp_score"))
   }
 
-  /** [[importanceWeights]] before the final score projection: per-doc
-    * exact (n_feats, r_sum) longs. */
   /** Hash buckets of [[importanceWeights]] and [[importanceSelect]]. */
   private val ImportanceBuckets = 4096
 
+  /** [[importanceWeights]] before the final score projection: per-doc
+    * exact (n_feats, r_sum) longs. */
   private def importanceWeightsRaw(docs: DataFrame, targetPred: Column,
       nBuckets: Int): DataFrame = {
     val inst = docs
@@ -856,14 +856,6 @@ object TextAnalysis {
           .as("median_chars"))
   }
 
-  /** Pairwise source VOCABULARY overlap — which sources are telling
-    * the same stories (feeds mixture weighting and contamination
-    * triage before any pairwise doc compare). Exact Jaccard between
-    * the sources' distinct word sets: one distinct (source, word)
-    * scan, a word-keyed self-join whose per-word fan-out is bounded by
-    * |sources|² (never the corpus), canonical a<b orientation.
-    * Output ≤ C(|sources|,2) rows with both set sizes, the
-    * intersection, and one closing division. */
   /** K-ANONYMITY governance card — the re-identification read a
     * training-data release needs next to [[piiAudit]]'s find-and-count:
     * rows are grouped into EQUIVALENCE CLASSES by quasi-identifier
@@ -1268,6 +1260,14 @@ object TextAnalysis {
           .as("top_shift"))
   }
 
+  /** Pairwise source VOCABULARY overlap — which sources are telling
+    * the same stories (feeds mixture weighting and contamination
+    * triage before any pairwise doc compare). Exact Jaccard between
+    * the sources' distinct word sets: one distinct (source, word)
+    * scan, a word-keyed self-join whose per-word fan-out is bounded by
+    * |sources|² (never the corpus), canonical a<b orientation.
+    * Output ≤ C(|sources|,2) rows with both set sizes, the
+    * intersection, and one closing division. */
   def sourceOverlap(docs: DataFrame): DataFrame = {
     import graft.functions.Exact.round6
     val sw = docs.select(col("source"), explode(tokens(col("text"))).as("w"))

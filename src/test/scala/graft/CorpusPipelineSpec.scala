@@ -25,8 +25,7 @@ class CorpusPipelineSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     val bench = docs.where($"doc_id" < 20)
     val corpus = docs.where($"doc_id" >= 20)
-    val cfg = CorpusPipeline.Config(minQuality = 0.2)
-    val res = CorpusPipeline.prepare(corpus, Some(bench), cfg)
+    val res = CorpusPipeline.prepare(corpus, Some(bench), minQuality = 0.2)
     val out = res.corpus
     out.cache()
 
@@ -45,12 +44,10 @@ class CorpusPipelineSpec extends SparkSpec {
 
     // no exact duplicates survive
     assert(Dedup.exact(out).where($"n_copies" > 1).count() == 0)
-    // no near-dup pairs at the configured threshold survive
-    assert(Dedup.minhashLsh(out, cfg.shingleN, cfg.numHashes, cfg.bands,
-      cfg.jaccard).count() == 0)
+    // no near-dup pairs at the pipeline's (the defaults') threshold survive
+    assert(Dedup.minhashLsh(out).count() == 0)
     // nothing contaminated survives
-    assert(Dedup.contamination(out, bench, cfg.shingleN,
-      cfg.minSharedShingles).count() == 0)
+    assert(Dedup.contamination(out, bench).count() == 0)
     out.unpersist()
     res.release()
   }

@@ -195,8 +195,7 @@ class AttritionSpec extends SparkSpec {
     val d = Tables.documents(spark, sfDir)
     val corpus = d.where(col("doc_id") >= 20)
     val bench = Some(d.where(col("doc_id") < 20))
-    val cfg = CorpusPipeline.Config(minQuality = 0.2)
-    val rows = CorpusPipeline.attrition(corpus, bench, cfg)
+    val rows = CorpusPipeline.attrition(corpus, bench, minQuality = 0.2)
       .as[(String, Long)].collect().toMap
     val order = Seq("input", "quality_lang", "exact_dedup", "near_dedup", "decontaminated")
     assert(rows.keySet == order.toSet)
@@ -204,7 +203,7 @@ class AttritionSpec extends SparkSpec {
     assert(counts.zip(counts.tail).forall { case (a, b) => a >= b },
       s"stage survivors must be monotone non-increasing: $counts")
     assert(counts.head == corpus.count())
-    val r = CorpusPipeline.prepare(corpus, bench, cfg)
+    val r = CorpusPipeline.prepare(corpus, bench, minQuality = 0.2)
     try assert(counts.last == r.corpus.count()) finally r.release()
   }
 }
@@ -295,21 +294,20 @@ class PrepareIncrementSpec extends SparkSpec {
     val cut = 300L
     val corpus = all.where(col("doc_id") < cut)
     val batch = all.where(col("doc_id") >= cut)
-    val cfg = CorpusPipeline.Config(minQuality = 0.2)
+    val minQuality = 0.2
 
     // the index covers the FULL pre-dedup corpus (quality-filtered),
     // so chains through corpus-dropped docs are still seen
     val corpusFiltered = CorpusPipeline.signals(corpus)
-      .where(col("quality_score") >= cfg.minQuality)
-    val index = Dedup.buildMinhashIndex(corpusFiltered,
-      cfg.shingleN, cfg.numHashes).persist()
+      .where(col("quality_score") >= minQuality)
+    val index = Dedup.buildMinhashIndex(corpusFiltered, 3, 64).persist()
 
-    val inc = CorpusPipeline.prepareIncrement(batch, index, Some(bench), cfg)
+    val inc = CorpusPipeline.prepareIncrement(batch, index, Some(bench), minQuality)
     val incIds = inc.corpus.select("doc_id").as[Long].collect().toSet
     inc.release()
     index.unpersist()
 
-    val mono = CorpusPipeline.prepare(all, Some(bench), cfg)
+    val mono = CorpusPipeline.prepare(all, Some(bench), minQuality)
     val monoBatchIds = mono.corpus.select("doc_id").as[Long]
       .collect().toSet.filter(_ >= cut)
     mono.release()

@@ -5,7 +5,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 
 import org.apache.spark.sql.functions._
-import graft.operators.Multimodal
+import graft.operators.{Dedup, Multimodal}
 
 /** The REAL codec paths: JDK ImageIO / WAV decode against genuine
   * payloads — synthetic PNGs with known dimensions, structured images
@@ -94,7 +94,7 @@ class MultimodalCodecSpec extends SparkSpec {
       (4L, flip(2, 18, 34, 50)),  // hamming 4 — one flip in EVERY band
       (5L, ~base)                 // hamming 64
     ).toDF("doc_id", "dhash")
-    val pairs = Multimodal.nearDupFromSignatures(sig, maxHamming = 3)
+    val pairs = Dedup.hammingPairs(sig, "dhash", 16, maxHamming = 3)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     // every pair within hamming 3 is found (pigeonhole: ≤3 flips leave a band intact)
     assert(pairs == Set((1L, 2L), (1L, 3L)))

@@ -26,6 +26,18 @@ class SqlFrontDoorSpec extends SparkSpec {
     assert(rows(sql) == rows(scala_))
   }
 
+  test("graft_dedup_minhash(dir, bands) rejects bands that do not divide the 64 minhashes") {
+    for (bands <- Seq(0, -1, 7, 100)) {
+      val e = intercept[Exception] {
+        spark.sql(s"SELECT * FROM graft_dedup_minhash('$sfDir', $bands)").collect()
+      }
+      val bad = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case x: IllegalArgumentException => x.getMessage }
+      assert(bad.exists(_.contains("1, 2, 4, 8, 16, 32, 64: got " + bands)),
+        s"bands = $bands: $e")
+    }
+  }
+
   test("graft_mmr(dir, k) forwards the literal arg") {
     val sql = spark.sql(s"SELECT * FROM graft_mmr('$sfDir', 3)")
     val scala_ = operators.Similarity.mmrRerank(
@@ -73,7 +85,7 @@ class SqlFrontDoorSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
     val scala_ = operators.CorpusPipeline.attrition(
       docs.where(col("doc_id") >= 20), Some(docs.where(col("doc_id") < 20)),
-      operators.CorpusPipeline.Config(minQuality = 0.2))
+      minQuality = 0.2)
     assert(rows(sql) == rows(scala_))
     // no-benchmark form: 5 stages still reported (decontamination is a
     // pass-through when there is nothing to decontaminate against)

@@ -74,31 +74,27 @@ MODIFIERS = re.compile(
     r"abstract)\b(?:\[[^\]]*\])?\s*|@[A-Za-z_][\w.]*(?:\([^)]*\))?\s*)*$")
 
 
-def strip_comments(text):
-    """Replace comments with spaces (newlines kept); strings stay intact."""
-    out, i, n = [], 0, len(text)
+def comments(text):
+    """Yield (start, end) of each comment; strings are skipped."""
+    i, n = 0, len(text)
     while i < n:
         if text.startswith('"""', i):
             j = text.find('"""', i + 3)
             j = n if j < 0 else j + 3
             while j < n and text[j] == '"':
                 j += 1
-            out.append(text[i:j])
             i = j
         elif text[i] == '"':
             j = i + 1
             while j < n and text[j] not in '"\n':
                 j += 2 if text[j] == "\\" else 1
-            out.append(text[i:j + 1])
             i = j + 1
         elif text[i] == "'" and re.match(r"'(\\.|[^\\'\n])'", text[i:i + 4]):
-            m = re.match(r"'(\\.|[^\\'\n])'", text[i:i + 4])
-            out.append(m.group(0))
-            i += len(m.group(0))
+            i += len(re.match(r"'(\\.|[^\\'\n])'", text[i:i + 4]).group(0))
         elif text.startswith("//", i):
             j = text.find("\n", i)
             j = n if j < 0 else j
-            out.append(" " * (j - i))
+            yield i, j
             i = j
         elif text.startswith("/*", i):
             depth, j = 1, i + 2
@@ -109,11 +105,20 @@ def strip_comments(text):
                     depth, j = depth - 1, j + 2
                 else:
                     j += 1
-            out.append(re.sub(r"[^\n]", " ", text[i:j]))
+            yield i, j
             i = j
         else:
-            out.append(text[i])
             i += 1
+
+
+def strip_comments(text):
+    """Replace comments with spaces (newlines kept); strings stay intact."""
+    out, last = [], 0
+    for a, b in comments(text):
+        out.append(text[last:a])
+        out.append(re.sub(r"[^\n]", " ", text[a:b]))
+        last = b
+    out.append(text[last:])
     return "".join(out)
 
 
@@ -465,6 +470,30 @@ def unset_params(root):
     return sorted(out, key=lambda m: (m["path"], m["line"], m["param"]))
 
 
+def stacked_docs(root):
+    """Doc comments followed by nothing but whitespace and then another
+    doc comment. Scala attaches only the second to the member below, so
+    the first documents nothing and its def ships undocumented."""
+    out = []
+    for d in SOURCE_DIRS:
+        base = os.path.join(root, d)
+        for dirpath, _, names in os.walk(base):
+            for f in sorted(names):
+                if not f.endswith(".scala"):
+                    continue
+                p = os.path.join(dirpath, f)
+                with open(p, encoding="utf-8") as fh:
+                    text = fh.read()
+                docs = [(a, b) for a, b in comments(text)
+                        if text.startswith("/**", a)
+                        and not text.startswith("/**/", a)]
+                for (a, b), (c, _) in zip(docs, docs[1:]):
+                    if not text[b:c].strip():
+                        out.append({"path": os.path.relpath(p, root),
+                                    "line": text.count("\n", 0, a) + 1})
+    return sorted(out, key=lambda m: (m["path"], m["line"]))
+
+
 def main(argv):
     root = argv[1] if len(argv) > 1 else os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "..")
@@ -474,12 +503,19 @@ def main(argv):
     unset = unset_params(root)
     for m in unset:
         print(f"{m['path']}:{m['line']} {m['qual']}({m['param']})")
+    stacked = stacked_docs(root)
+    for m in stacked:
+        print(f"{m['path']}:{m['line']} doc comment on top of another")
     if dead:
         print(f"reach: {len(dead)} unreached member(s)", file=sys.stderr)
     if unset:
         print(f"reach: {len(unset)} default-valued parameter(s) no call sets",
               file=sys.stderr)
-    return 1 if dead or unset else 0
+    if stacked:
+        print(f"reach: {len(stacked)} doc comment(s) stacked on another "
+              "(only the last one documents the member below)",
+              file=sys.stderr)
+    return 1 if dead or unset or stacked else 0
 
 
 if __name__ == "__main__":

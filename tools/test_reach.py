@@ -212,5 +212,35 @@ class UnsetParamsTest(unittest.TestCase):
                          + ":3 Ops.f(y)")
 
 
+class StackedDocTest(unittest.TestCase):
+
+    def stacked(self, body):
+        root = tree({"src/main/scala/a/Ops.scala": body})
+        return [m["line"] for m in reach.stacked_docs(root)]
+
+    def test_doc_on_top_of_another_doc_is_flagged(self):
+        self.assertEqual(self.stacked("""
+            object Ops {
+              /** Lost: Scala attaches only the doc below. */
+
+              /** Kept. */
+              def f(x: Int): Int = x
+            }
+            """), [3])
+
+    def test_docs_with_code_between_and_docs_in_strings_are_not(self):
+        self.assertEqual(self.stacked("""
+            object Ops {
+              /** One. */
+              def f(x: Int): Int = x
+              /** Two. */
+              val s = "/** not a doc */ /** nor this */"
+              /**/
+              /** Three. */
+              def g(x: Int): Int = x
+            }
+            """), [])
+
+
 if __name__ == "__main__":
     unittest.main()

@@ -114,8 +114,9 @@ object Similarity {
     * class as the LSH hyperplanes) is collected once and baked into the
     * native `nearest_cells` expression, so assignment is one codegen'd
     * scan with zero shuffle and zero join. Ties break to the smallest
-    * cell_id. The collect reads ≤nCells rows from an already
-    * materialized table (see [[coarseCentroids]]), not a corpus scan. */
+    * cell_id. The collect reads ≤nCells rows: for IVF from an already
+    * materialized table (see [[coarseCentroids]]), not a corpus scan;
+    * for [[centroidClassify]] the collect runs its fit aggregate. */
   private def assignCells(df: DataFrame, centroids: DataFrame, idCol: String,
       take: Int): DataFrame = {
     import graft.functions.NearestCells.nearestCells

@@ -300,7 +300,7 @@ class PrepareIncrementSpec extends SparkSpec {
     // so chains through corpus-dropped docs are still seen
     val corpusFiltered = CorpusPipeline.signals(corpus)
       .where(col("quality_score") >= minQuality)
-    val index = Dedup.buildMinhashIndex(corpusFiltered, 3, 64).persist()
+    val index = Dedup.buildMinhashIndex(corpusFiltered).persist()
 
     val inc = CorpusPipeline.prepareIncrement(batch, index, Some(bench), minQuality)
     val incIds = inc.corpus.select("doc_id").as[Long].collect().toSet

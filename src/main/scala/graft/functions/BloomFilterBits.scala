@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit, typedlit, xxhash64}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType}
@@ -37,10 +34,9 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType
   * Registered as SQL `bloom_contains(h1, h2, bits, k)` via
   * [[GraftExtensions]].
   */
-case class BloomContains(children: Seq[Expression]) extends Expression {
+case class BloomContains(children: Seq[Expression]) extends NativeKernel {
 
   override def dataType: DataType = BooleanType
-  override def nullable: Boolean = children(0).nullable || children(1).nullable
   override def foldable: Boolean = children.forall(_.foldable)
   override def prettyName: String = "bloom_contains"
 
@@ -65,33 +61,13 @@ case class BloomContains(children: Seq[Expression]) extends Expression {
     children(3).eval().asInstanceOf[Int]
   @transient private lazy val mBits: Long = bits.length.toLong * 64L
 
-  override def eval(input: InternalRow): Any = {
-    val h1v = children(0).eval(input)
-    if (h1v == null) return null
-    val h2v = children(1).eval(input)
-    if (h2v == null) return null
-    BloomContains.probe(bits, mBits, kProbes,
-      h1v.asInstanceOf[Long], h2v.asInstanceOf[Long])
-  }
+  override protected def rowInputs: Seq[Expression] = children.take(2)
+  override protected def kernelName: String = "member"
+  override protected def callKernel(in: Seq[Any]): Any =
+    member(in(0).asInstanceOf[Long], in(1).asInstanceOf[Long])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bitsRef = ctx.addReferenceObj("bloomBits", bits, "long[]")
-    val h1c = children(0).genCode(ctx)
-    val h2c = children(1).genCode(ctx)
-    val kernel = ctx.addReferenceObj("bloomKernel", BloomContains,
-      BloomContains.getClass.getName)
-    ev.copy(code =
-      code"""
-        ${h1c.code}
-        ${h2c.code}
-        boolean ${ev.isNull} = ${h1c.isNull} || ${h2c.isNull};
-        boolean ${ev.value} = false;
-        if (!${ev.isNull}) {
-          ${ev.value} = $kernel.probe($bitsRef, ${mBits}L, $kProbes,
-            ${h1c.value}, ${h2c.value});
-        }
-      """)
-  }
+  /** Whether the key hashed to (h1, h2) may be in the constant bitset. */
+  def member(h1: Long, h2: Long): Boolean = BloomContains.probe(bits, mBits, kProbes, h1, h2)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
@@ -103,9 +79,8 @@ object BloomContains {
     * h1 + i·h2 gives k distinct probe sequences from two hash jobs. */
   val Seed2: Long = 0x9E3779B97F4A7C15L
 
-  /** The shared probe kernel (interpreted eval + codegen both land
-    * here): k double-hashed positions, all bits must be set. Both
-    * hashes reduce mod m BEFORE combining — `(h1' + i·h2') mod m` with
+  /** The probe kernel behind [[BloomContains.member]]: k double-hashed
+    * positions, all bits must be set. Both hashes reduce mod m BEFORE combining — `(h1' + i·h2') mod m` with
     * h1', h2' < m never overflows (k ≤ 16, m ≤ 2³¹), and insertion
     * ([[graft.operators.BloomJoin.buildBits]]) uses the identical
     * mod-first form, so ANSI mode stays happy on both paths and the

@@ -4,43 +4,41 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 import org.apache.spark.sql.SparkSessionExtensions
 
+import scala.reflect.ClassTag
+
 /** Native Catalyst expression: cosine similarity of two array<double>
-  * vectors in a single pass (dot and both norms in one loop).
+  * vectors of equal length in a single pass (dot and both norms in one
+  * loop). Vectors of different lengths throw, naming both lengths, as
+  * DuckDB's `list_cosine_similarity` does.
   *
-  * A custom Expression with `doGenCode` stays inside whole-stage codegen
-  * — the generated Java loops over the two `ArrayData` without boxing or
-  * per-element Expression dispatch, which is the fastest scoring path
-  * short of mapPartitions, while remaining a first-class Column usable
-  * in any plan (joins, windows, filters). Registered as SQL function
+  * The loop is the Scala kernel `cosine`; interpreted `eval` and the
+  * generated code both call it through the [[NativeKernel]] stub, so
+  * scoring stays inside whole-stage codegen with no per-element
+  * Expression dispatch while remaining a first-class Column usable in
+  * any plan (joins, windows, filters). Registered as SQL function
   * `cosine_sim` via [[GraftExtensions]].
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeKernel {
 
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim expects (array<double>, array<double>), " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    CosineSimilarity.checkVectors("cosine_sim", left, right)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  override protected def rowInputs: Seq[Expression] = children
+  override protected def kernelName: String = "cosine"
+  override protected def callKernel(in: Seq[Any]): Any =
+    cosine(in(0).asInstanceOf[ArrayData], in(1).asInstanceOf[ArrayData])
+
+  def cosine(x: ArrayData, y: ArrayData): Double = {
+    val n = CosineSimilarity.sameLength("cosine_sim", x, y)
     var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
     while (i < n) {
       val xv = x.getDouble(i); val yv = y.getDouble(i)
@@ -49,27 +47,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
     dot / (math.sqrt(nx) * math.sqrt(ny))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = $a.getDouble($i);
-         |  double $yv = $b.getDouble($i);
-         |  $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -83,53 +60,56 @@ object CosineSimilarity {
 
   /** Native dot product (see [[DotProduct]]). */
   def dotProduct(a: Column, b: Column): Column = call_function("dot_product", a, b)
-}
 
-/** Native Catalyst expression: dot product of two array<double> vectors.
-  * Same design as [[CosineSimilarity]] — a tight generated loop instead
-  * of a dim-unrolled expression tree, so plans stay small and codegen
-  * compiles fast at any dimension. Registered as SQL `dot_product`.
-  */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = {
+  /** Both arguments of `fn` must be array<double>. */
+  private[functions] def checkVectors(fn: String, left: Expression,
+      right: Expression): TypeCheckResult = {
     val ok = Seq(left, right).forall(_.dataType match {
       case ArrayType(DoubleType, _) => true
       case _ => false
     })
     if (ok) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"dot_product expects (array<double>, array<double>), " +
+      s"$fn expects (array<double>, array<double>), " +
         s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  /** The common length of `fn`'s two vectors; throws when they differ. */
+  private[functions] def sameLength(fn: String, x: ArrayData, y: ArrayData): Int = {
+    val n = x.numElements()
+    if (n != y.numElements()) throw new IllegalArgumentException(
+      s"$fn: vector lengths differ ($n vs ${y.numElements()})")
+    n
+  }
+}
+
+/** Native Catalyst expression: dot product of two array<double> vectors
+  * of equal length. Same design as [[CosineSimilarity]] — one Scala
+  * kernel loop called through the [[NativeKernel]] stub instead of a
+  * dim-unrolled expression tree, so plans stay small and codegen
+  * compiles fast at any dimension; different lengths throw. Registered
+  * as SQL `dot_product`.
+  */
+case class DotProduct(left: Expression, right: Expression)
+    extends BinaryExpression with NativeKernel {
+
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    CosineSimilarity.checkVectors("dot_product", left, right)
+
+  override protected def rowInputs: Seq[Expression] = children
+  override protected def kernelName: String = "dot"
+  override protected def callKernel(in: Seq[Any]): Any =
+    dot(in(0).asInstanceOf[ArrayData], in(1).asInstanceOf[ArrayData])
+
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = CosineSimilarity.sameLength("dot_product", x, y)
     var dot = 0.0; var i = 0
     while (i < n) { dot += x.getDouble(i) * y.getDouble(i); i += 1 }
     dot
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -143,50 +123,27 @@ case class DotProduct(left: Expression, right: Expression)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("nearest_cells"),
-      new ExpressionInfo(classOf[NearestCells].getName, "nearest_cells"),
-      (exprs: Seq[Expression]) => NearestCells(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("hit_count"),
-      new ExpressionInfo(classOf[HitCount].getName, "hit_count"),
-      (exprs: Seq[Expression]) => HitCount(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("portable_hash60"),
-      new ExpressionInfo(classOf[PortableHash60].getName, "portable_hash60"),
-      (exprs: Seq[Expression]) => PortableHash60(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("repetition_stats"),
-      new ExpressionInfo(classOf[RepetitionStats].getName, "repetition_stats"),
-      (exprs: Seq[Expression]) => RepetitionStats(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[SimHashSig].getName, "simhash_sig"),
-      (exprs: Seq[Expression]) => SimHashSig(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSig(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(classOf[BloomContains].getName, "bloom_contains"),
-      (exprs: Seq[Expression]) => BloomContains(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("decayed_sum"),
-      new ExpressionInfo(classOf[DecayedSum].getName, "decayed_sum"),
-      (exprs: Seq[Expression]) => DecayedSum(exprs(0), exprs(1))))
+    GraftExtensions.Functions.foreach(f => ext.injectFunction(f))
     TableFunctions.register(ext)
   }
+}
+
+object GraftExtensions {
+  /** One row per native SQL function: its name and its builder. */
+  private def row[T <: Expression](name: String)(build: Seq[Expression] => T)(
+      implicit t: ClassTag[T]): (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (new FunctionIdentifier(name), new ExpressionInfo(t.runtimeClass.getName, name), build)
+
+  private val Functions = Seq(
+    row("cosine_sim")(e => CosineSimilarity(e(0), e(1))),
+    row("dot_product")(e => DotProduct(e(0), e(1))),
+    row("nearest_cells")(NearestCells(_)),
+    row("hit_count")(HitCount(_)),
+    row("portable_hash60")(PortableHash60(_)),
+    row("repetition_stats")(RepetitionStats(_)),
+    row("shingle_hashes")(ShingleHashes(_)),
+    row("simhash_sig")(SimHashSig(_)),
+    row("minhash_sig")(MinHashSig(_)),
+    row("bloom_contains")(BloomContains(_)),
+    row("decayed_sum")(e => DecayedSum(e(0), e(1))))
 }

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
@@ -16,49 +15,49 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * equivalent `transform`+`aggregate` higher-order pair is
   * CodegenFallback, and ONE interpreted expression ejects its whole
   * projection from whole-stage codegen (the library's round-2
-  * `VectorFunctions.toDouble` lesson) — this `doGenCode` loop keeps
-  * the EWMA projection fused. Pure integer shifts and adds: exact in
-  * any evaluation order, same bits as the HOF formulation
-  * (spec-pinned). Registered as SQL `decayed_sum` via
+  * `VectorFunctions.toDouble` lesson) — the Scala kernel `fold`, called
+  * through the [[NativeKernel]] stub, keeps the EWMA projection fused.
+  * Pure integer shifts and adds: exact in any evaluation order, same
+  * bits as the HOF formulation (spec-pinned).
+  *
+  * `depth` must be a literal in 1..32 (the range `ewmaDecayedSum`
+  * takes), so no shift count is negative or wraps; a frame longer than
+  * `depth` throws. Registered as SQL `decayed_sum` via
   * [[GraftExtensions]].
   */
 case class DecayedSum(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeKernel {
 
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), IntegerType) => TypeCheckResult.TypeCheckSuccess
+      case (ArrayType(LongType, _), IntegerType) =>
+        if (!right.foldable) TypeCheckResult.TypeCheckFailure("depth must be a literal")
+        else right.eval() match {
+          case d: Int if d >= 1 && d <= 32 => TypeCheckResult.TypeCheckSuccess
+          case d => TypeCheckResult.TypeCheckFailure(s"depth must be in 1..32, got $d")
+        }
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         s"decayed_sum expects (array<bigint>, int), " +
           s"got (${l.simpleString}, ${r.simpleString})")
     }
 
-  override def nullSafeEval(a: Any, d: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val depth = d.asInstanceOf[Int]
-    val n = arr.numElements()
+  @transient private lazy val depth: Int = right.eval().asInstanceOf[Int]
+
+  override protected def rowInputs: Seq[Expression] = Seq(left)
+  override protected def kernelName: String = "fold"
+  override protected def callKernel(in: Seq[Any]): Any = fold(in.head.asInstanceOf[ArrayData])
+
+  def fold(frame: ArrayData): Long = {
+    val n = frame.numElements()
+    if (n > depth) throw new IllegalArgumentException(
+      s"decayed_sum: frame holds $n elements, more than depth $depth")
     var acc = 0L; var i = 0
-    while (i < n) { acc += arr.getLong(i) << (i + depth - n); i += 1 }
+    while (i < n) { acc += frame.getLong(i) << (i + depth - n); i += 1 }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, d) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $a.numElements();
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $a.getLong($i) << ($i + $d - $n);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -3,8 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -23,12 +21,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   *
   * Registered as SQL `hit_count(tokens, words)` via [[GraftExtensions]].
   */
-case class HitCount(children: Seq[Expression]) extends Expression {
+case class HitCount(children: Seq[Expression]) extends NativeKernel {
 
   private def tkChild = children(0)
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = tkChild.nullable
   override def foldable: Boolean = children.forall(_.foldable)
 
   override def checkInputDataTypes(): TypeCheckResult = {
@@ -55,6 +52,10 @@ case class HitCount(children: Seq[Expression]) extends Expression {
     s
   }
 
+  override protected def rowInputs: Seq[Expression] = children.take(1)
+  override protected def kernelName: String = "count"
+  override protected def callKernel(in: Seq[Any]): Any = count(in.head.asInstanceOf[ArrayData])
+
   def count(a: ArrayData): Long = {
     var n = 0L
     var i = 0
@@ -64,27 +65,6 @@ case class HitCount(children: Seq[Expression]) extends Expression {
       i += 1
     }
     n
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val a = tkChild.eval(input)
-    if (a == null) null else count(a.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = org.apache.spark.sql.catalyst.expressions.codegen.JavaCode.global(
-      ctx.addReferenceObj("hitCount", this, classOf[HitCount].getName),
-      org.apache.spark.sql.types.ObjectType(classOf[HitCount]))
-    val child = tkChild.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${child.code}
-        boolean ${ev.isNull} = ${child.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          ${ev.value} = $self.count(${child.value});
-        }
-      """)
   }
 
   override protected def withNewChildrenInternal(

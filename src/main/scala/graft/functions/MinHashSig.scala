@@ -4,8 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
@@ -39,7 +37,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Registered as SQL `minhash_sig(tokens, n, numHashes)` via
   * [[GraftExtensions]].
   */
-case class MinHashSig(children: Seq[Expression]) extends Expression {
+case class MinHashSig(children: Seq[Expression]) extends NativeKernel {
 
   private def tkChild = children(0)
 
@@ -48,7 +46,7 @@ case class MinHashSig(children: Seq[Expression]) extends Expression {
     StructField("ss", ArrayType(LongType, containsNull = false), nullable = false)))
 
   // null when input is null OR the doc is shorter than one shingle
-  override def nullable: Boolean = true
+  override protected def kernelNulls: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def fail(msg: String) = TypeCheckResult.TypeCheckFailure(msg)
@@ -67,8 +65,12 @@ case class MinHashSig(children: Seq[Expression]) extends Expression {
   @transient private lazy val numHashes: Int = children(2).eval().asInstanceOf[Int]
   @transient private lazy val sep = UTF8String.fromString(" ")
 
-  /** One pass: shingle hashes → sort+dedupe → k seeded mins. Called from
-    * both eval and the codegen stub. Returns null for < n tokens. */
+  override protected def rowInputs: Seq[Expression] = children.take(1)
+  override protected def kernelName: String = "sign"
+  override protected def callKernel(in: Seq[Any]): Any = sign(in.head.asInstanceOf[ArrayData])
+
+  /** One pass: shingle hashes → sort+dedupe → k seeded mins. Returns
+    * null for < n tokens. */
   def sign(a: ArrayData): InternalRow = {
     val len = a.numElements()
     if (len < n) return null
@@ -108,30 +110,6 @@ case class MinHashSig(children: Seq[Expression]) extends Expression {
     }
     InternalRow(new GenericArrayData(mins),
       new GenericArrayData(java.util.Arrays.copyOf(bases, distinct)))
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val a = tkChild.eval(input)
-    if (a == null) null else sign(a.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // tiny generated stub calling into this (referenced) instance: the
-    // hot loop is compiled Scala, the row pipeline stays in codegen
-    val self = org.apache.spark.sql.catalyst.expressions.codegen.JavaCode.global(
-      ctx.addReferenceObj("minhashSig", this, classOf[MinHashSig].getName),
-      ObjectType(classOf[MinHashSig]))
-    val child = tkChild.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${child.code}
-        boolean ${ev.isNull} = ${child.isNull};
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $self.sign(${child.value});
-          ${ev.isNull} = ${ev.value} == null;
-        }
-      """)
   }
 
   override protected def withNewChildrenInternal(

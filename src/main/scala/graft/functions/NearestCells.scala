@@ -3,8 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{array, call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
@@ -27,12 +25,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * Registered as SQL `nearest_cells(v, centroids, ids, take)` via
   * [[GraftExtensions]].
   */
-case class NearestCells(children: Seq[Expression]) extends Expression {
+case class NearestCells(children: Seq[Expression]) extends NativeKernel {
 
   private def vChild = children(0)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = vChild.nullable
   override def foldable: Boolean = children.forall(_.foldable)
 
   override def checkInputDataTypes(): TypeCheckResult = {
@@ -63,8 +60,12 @@ case class NearestCells(children: Seq[Expression]) extends Expression {
     children(2).eval().asInstanceOf[ArrayData].toLongArray()
   @transient private lazy val take: Int = children(3).eval().asInstanceOf[Int]
 
+  override protected def rowInputs: Seq[Expression] = children.take(1)
+  override protected def kernelName: String = "pick"
+  override protected def callKernel(in: Seq[Any]): Any = pick(in.head.asInstanceOf[ArrayData])
+
   /** Top-`take` cells by (cosine desc, id asc) — bounded insertion over
-    * the constant centroid list. Called from both eval and codegen. */
+    * the constant centroid list. */
   def pick(a: ArrayData): ArrayData = {
     val v = a.toDoubleArray()
     var nv = 0.0
@@ -102,29 +103,6 @@ case class NearestCells(children: Seq[Expression]) extends Expression {
       c += 1
     }
     new GenericArrayData(idBuf)
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val a = vChild.eval(input)
-    if (a == null) null else pick(a.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // tiny generated stub calling into this (referenced) instance: the
-    // hot loop is compiled Scala, the row pipeline stays in codegen
-    val self = org.apache.spark.sql.catalyst.expressions.codegen.JavaCode.global(
-      ctx.addReferenceObj("nearestCells", this, classOf[NearestCells].getName),
-      org.apache.spark.sql.types.ObjectType(classOf[NearestCells]))
-    val child = vChild.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${child.code}
-        boolean ${ev.isNull} = ${child.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $self.pick(${child.value});
-        }
-      """)
   }
 
   override protected def withNewChildrenInternal(

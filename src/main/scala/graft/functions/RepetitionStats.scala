@@ -4,8 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
@@ -31,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Registered as SQL `repetition_stats(tokens)` via [[GraftExtensions]].
   */
-case class RepetitionStats(children: Seq[Expression]) extends Expression {
+case class RepetitionStats(children: Seq[Expression]) extends NativeKernel {
 
   private def tkChild = children(0)
 
@@ -41,7 +39,7 @@ case class RepetitionStats(children: Seq[Expression]) extends Expression {
     StructField("top_word_frac", DoubleType, nullable = false),
     StructField("top_2gram_frac", DoubleType, nullable = false)))
 
-  override def nullable: Boolean = true
+  override protected def kernelNulls: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def fail(msg: String) = TypeCheckResult.TypeCheckFailure(msg)
@@ -54,7 +52,11 @@ case class RepetitionStats(children: Seq[Expression]) extends Expression {
 
   private def round6(x: Double): Double = math.floor(x * 1000000.0 + 0.5) / 1000000.0
 
-  def stats(a: ArrayData): Any = {
+  override protected def rowInputs: Seq[Expression] = children.take(1)
+  override protected def kernelName: String = "stats"
+  override protected def callKernel(in: Seq[Any]): Any = stats(in.head.asInstanceOf[ArrayData])
+
+  def stats(a: ArrayData): InternalRow = {
     val n = a.numElements()
     if (n == 0) return null
     val words = new java.util.HashMap[UTF8String, Array[Int]](n * 2)
@@ -87,28 +89,6 @@ case class RepetitionStats(children: Seq[Expression]) extends Expression {
       round6(words.size().toDouble / nD),
       round6(topW.toDouble / nD),
       if (n >= 2) round6(top2.toDouble / (n - 1).toDouble) else 0.0)
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val a = tkChild.eval(input)
-    if (a == null) null else stats(a.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = org.apache.spark.sql.catalyst.expressions.codegen.JavaCode.global(
-      ctx.addReferenceObj("repetitionStats", this, classOf[RepetitionStats].getName),
-      ObjectType(classOf[RepetitionStats]))
-    val child = tkChild.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${child.code}
-        boolean ${ev.isNull} = ${child.isNull};
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $self.stats(${child.value});
-          ${ev.isNull} = ${ev.value} == null;
-        }
-      """)
   }
 
   override protected def withNewChildrenInternal(

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
@@ -32,12 +29,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Registered as SQL `shingle_hashes(tokens, n)` via [[GraftExtensions]].
   */
-case class ShingleHashes(children: Seq[Expression]) extends Expression {
+case class ShingleHashes(children: Seq[Expression]) extends NativeKernel {
 
   private def tkChild = children(0)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = tkChild.nullable
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def fail(msg: String) = TypeCheckResult.TypeCheckFailure(msg)
@@ -54,6 +50,10 @@ case class ShingleHashes(children: Seq[Expression]) extends Expression {
   @transient private lazy val n: Int = children(1).eval().asInstanceOf[Int]
   @transient private lazy val sep = UTF8String.fromString(" ")
 
+  override protected def rowInputs: Seq[Expression] = children.take(1)
+  override protected def kernelName: String = "hashAll"
+  override protected def callKernel(in: Seq[Any]): Any = hashAll(in.head.asInstanceOf[ArrayData])
+
   def hashAll(a: ArrayData): ArrayData = {
     val len = a.numElements()
     if (len < n) return new GenericArrayData(Array.emptyLongArray)
@@ -67,27 +67,6 @@ case class ShingleHashes(children: Seq[Expression]) extends Expression {
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val a = tkChild.eval(input)
-    if (a == null) null else hashAll(a.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = org.apache.spark.sql.catalyst.expressions.codegen.JavaCode.global(
-      ctx.addReferenceObj("shingleHashes", this, classOf[ShingleHashes].getName),
-      ObjectType(classOf[ShingleHashes]))
-    val child = tkChild.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${child.code}
-        boolean ${ev.isNull} = ${child.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $self.hashAll(${child.value});
-        }
-      """)
   }
 
   override protected def withNewChildrenInternal(

@@ -1,14 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, ObjectType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native row-local 60-bit SimHash: per-token portable hash (first 15
   * hex chars of md5, parsed base-16 — bit-identical to
@@ -25,12 +22,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, ObjectType, St
   *
   * Registered as SQL `simhash_sig(tokens)` via [[GraftExtensions]].
   */
-case class SimHashSig(children: Seq[Expression]) extends Expression {
+case class SimHashSig(children: Seq[Expression]) extends NativeKernel {
 
   private def tkChild = children(0)
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
+  override protected def kernelNulls: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = {
     def fail(msg: String) = TypeCheckResult.TypeCheckFailure(msg)
@@ -45,9 +42,15 @@ case class SimHashSig(children: Seq[Expression]) extends Expression {
     * `conv(substring(md5(x),1,15),16,10)` (shared digest kernel). */
   private def hash60(bytes: Array[Byte]): Long = PortableHash60.hash60(bytes)
 
-  def sign(a: ArrayData): Any = {
+  override protected def rowInputs: Seq[Expression] = children.take(1)
+  override protected def kernelName: String = "sign"
+  override protected def callKernel(in: Seq[Any]): Any = sign(in.head.asInstanceOf[ArrayData])
+
+  /** The 60-bit fingerprint, or [[NativeKernel.NullLong]] (null) for an
+    * empty token array. */
+  def sign(a: ArrayData): Long = {
     val n = a.numElements()
-    if (n == 0) return null
+    if (n == 0) return NativeKernel.NullLong
     val ones = new Array[Int](60)
     var i = 0
     while (i < n) {
@@ -73,30 +76,6 @@ case class SimHashSig(children: Seq[Expression]) extends Expression {
       j += 1
     }
     fp
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val a = tkChild.eval(input)
-    if (a == null) null else sign(a.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = org.apache.spark.sql.catalyst.expressions.codegen.JavaCode.global(
-      ctx.addReferenceObj("simhashSig", this, classOf[SimHashSig].getName),
-      ObjectType(classOf[SimHashSig]))
-    val child = tkChild.genCode(ctx)
-    val fp = ctx.freshName("fp")
-    ev.copy(code =
-      code"""
-        ${child.code}
-        boolean ${ev.isNull} = ${child.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          Object $fp = $self.sign(${child.value});
-          ${ev.isNull} = $fp == null;
-          if (!${ev.isNull}) ${ev.value} = ((Long) $fp).longValue();
-        }
-      """)
   }
 
   override protected def withNewChildrenInternal(

@@ -25,8 +25,8 @@ object VectorFunctions {
 
   /** Dot product of two double vectors (sequential fold). Works for any
     * dimension. In hot pair-joins prefer the native expressions
-    * (`CosineSimilarity.dotProduct` / `cosineSim`) — same arithmetic, a
-    * tight generated loop instead of a per-row array allocation or a
+    * (`CosineSimilarity.dotProduct` / `cosineSim`) — same arithmetic, one
+    * compiled kernel loop instead of a per-row array allocation or a
     * dim-sized expression tree. */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)

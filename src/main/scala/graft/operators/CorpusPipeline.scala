@@ -150,16 +150,8 @@ object CorpusPipeline {
       case Some(bench) =>
         // shared-shingle flags from the scan's distinct shingle sets —
         // the same values Dedup.contamination derives by re-shingling
-        val corpusShingles = deduped
-          .select(col("doc_id"), explode(col("s.ss")).as("sh"))
-        val benchShingles = Dedup.hashedShingles(bench, Dedup.ShingleN).distinct()
-          .select(col("h").as("sh"), col("doc_id").as("bench_id"))
-        // no distinct: left_anti below is duplicate-insensitive, and
-        // the extra exchange buys nothing
-        val flagged = corpusShingles.join(broadcast(benchShingles), "sh")
-          .groupBy(col("doc_id"), col("bench_id"))
-          .agg(count(lit(1)).as("n_shared"))
-          .where(col("n_shared") >= Dedup.MinShared)
+        val flagged = Dedup.sharedShingles(
+          deduped.select(col("doc_id"), explode(col("s.ss")).as("h")), bench)
           .select(col("doc_id"))
         (deduped.join(flagged, Seq("doc_id"), "left_anti"), Some(flagged))
       case None => (deduped, None)

@@ -533,11 +533,19 @@ object Dedup {
     * by nature, so its hashed shingle set broadcasts and the corpus
     * streams map-only past it; the only exchange is the per-(doc, bench)
     * overlap count. */
-  def contamination(corpus: DataFrame, benchmark: DataFrame): DataFrame = {
-    val c = hashedShingles(corpus, ShingleN).distinct()
+  def contamination(corpus: DataFrame, benchmark: DataFrame): DataFrame =
+    sharedShingles(hashedShingles(corpus, ShingleN).distinct(), benchmark)
+
+  /** The kernel of [[contamination]] over a (doc_id, h) frame of each
+    * corpus document's distinct shingle hashes: (doc_id, bench_id,
+    * n_shared) for every pair sharing at least [[MinShared]] of them.
+    * [[CorpusPipeline]] passes the signed scan's shingle sets here
+    * instead of re-shingling the corpus. */
+  private[operators] def sharedShingles(corpusShingles: DataFrame,
+      benchmark: DataFrame): DataFrame = {
     val b = hashedShingles(benchmark, ShingleN).distinct()
       .select(col("h"), col("doc_id").as("bench_id"))
-    c.join(broadcast(b), "h")
+    corpusShingles.join(broadcast(b), "h")
       .groupBy(col("doc_id"), col("bench_id"))
       .agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= MinShared)

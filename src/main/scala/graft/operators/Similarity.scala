@@ -14,7 +14,7 @@ import graft.functions.VectorFunctions.toDouble
   * a tiny broadcast literal.
   *
   * All scoring goes through the native `cosine_sim` / `dot_product`
-  * Catalyst expressions: a tight generated loop per pair keeps the plan
+  * Catalyst expressions: one compiled kernel loop per pair keeps the plan
   * and its generated code small (a dim-unrolled expression tree at
   * dim=64 made every scoring stage megabytes of Java — slow to compile,
   * hostile to JIT), while the arithmetic stays the same left-to-right

@@ -37,6 +37,23 @@ class CosineSimilaritySpec extends SparkSpec {
     // the "*(n)" prefix marks a WholeStageCodegen stage in compact form
     assert("""\*\(\d+\) Project \[cosinesimilarity""".r.findFirstIn(plan).isDefined)
   }
+
+  test("cosine_sim and dot_product refuse vectors of different lengths") {
+    def message(sql: String): String = {
+      val e = intercept[Exception](spark.sql(sql).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    }
+    val cos = message("SELECT cosine_sim(array(1.0D, 2.0D), array(1.0D, 2.0D, 3.0D))")
+    assert(cos.contains("cosine_sim") && cos.contains("(2 vs 3)"), cos)
+    val dot = message("SELECT dot_product(array(1.0D, 2.0D), array(1.0D, 2.0D, 99.0D))")
+    assert(dot.contains("dot_product") && dot.contains("(2 vs 3)"), dot)
+    // and per row, on columns
+    val df = Seq((Seq(1.0, 2.0), Seq(1.0))).toDF("a", "b")
+    val row = intercept[Exception](df.select(CosineSimilarity.cosineSim($"a", $"b")).collect())
+    assert(Iterator.iterate[Throwable](row)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("(2 vs 1)")))
+  }
 }
 
 class NearestCellsSpec extends SparkSpec {

@@ -277,6 +277,22 @@ class Round6OpsSpec extends SparkSpec {
     assert(n.isNullAt(0))
   }
 
+  test("decayed_sum takes a literal depth in 1..32 and no frame longer than it") {
+    // analysis: depth outside 1..32, or not a literal
+    Seq("decayed_sum(array(1L), 64)", "decayed_sum(array(1L), 0)",
+        "decayed_sum(array(1L), CAST(NULL AS INT))",
+        "decayed_sum(array(1L), CAST(rand() * 4 AS INT))").foreach { q =>
+      intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $q").collect())
+    }
+    // run time: a frame of 3 elements at depth 1 (Java would mask the
+    // negative shift counts and return 4611686018427387907)
+    val e = intercept[Exception](spark.sql("SELECT decayed_sum(array(1L, 2L, 3L), 1)").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("more than depth 1")))
+    // the full 32-deep range stays exact
+    assert(spark.sql("SELECT decayed_sum(array(1L), 32)").head().getLong(0) == 1L << 31)
+  }
+
   test("boolBitProfile bit identities hold") {
     val got = Analytics.boolBitProfile(Tables.orders(spark, sfDir))
     // and ⊆ or as bit sets

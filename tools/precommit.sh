@@ -23,7 +23,12 @@
 #      Events.scala, Similarity.scala, Sampling.scala, Cumulative.scala);
 #      the near-dup and vector-search kernels (operators/Dedup.scala,
 #      Multimodal.scala: the d_*, s_*, m_phash_dedup and p_leak_split
-#      entries); and the table loader every driver entry reads through
+#      entries); the native SQL expressions and their one codegen stub
+#      (functions/NativeKernel.scala and the ten expression files, with
+#      graft.NativeKernelSpec comparing generated and interpreted
+#      results; the re-driven entries between them call every
+#      expression, including those the benchmark runs); and the table
+#      loader every driver entry reads through
 #      (graft/Tables.scala: schema resolution, timestamp flavors; its row
 #      runs the plan audit and re-drives query_mix entries). Entry
 #      fields may be globs over the entry names in SparkEntry.scala.
@@ -110,6 +115,7 @@ RULES=(
   'graft/streaming/[^/]*\.scala|operators/AsOfJoin\.scala;graft.ReplaySpec graft.RocksDbStateSpec graft.StorageStreamingSpec graft.AsOfJoinSpec;e_asof,e_asof_tol,e_asof_fwd,e_asof_stream,sql_asof,e_session_stream,e_tumbling_stream,d_quality_stream,d_index_stream;streaming and as-of'
   'operators/(Graph|Events|Similarity|Sampling|Cumulative)\.scala;graft.Round6bOpsSpec graft.Round7bOpsSpec graft.Round9GraphSpec graft.Round9bOpsSpec graft.PcaSpec graft.PcaKSpec graft.Round12AdviceSpec graft.PcaProjectSpec graft.CumulativeSpec graft.CumulativePropertySpec graft.SqlFrontDoorSpec;g_pagerank,g_triangles,g_degree,g_bfs,g_harmonic,g_jaccard,g_kcore,g_cc,g_lpa,e_funnel,e_funnel_steps,e_funnel_rates,e_concurrency,e_sessionize,s_pca,s_pca_k,s_pca_project,p_epoch_plan,p_epoch_weighted;graph, event, PCA, sampling and cumulative'
   'operators/(Dedup|Multimodal)\.scala;graft.DedupAgainstSpec graft.AutoLadderRoutingSpec graft.MinhashRecallSpec graft.MinHashSigSpec graft.SimHashSigSpec graft.AttritionSpec graft.KeepBestSpec graft.PrepareIncrementSpec graft.BucketCapSpec graft.SemanticDedupSpec graft.ApplyDedupSpec graft.FuzzyDedupSpec graft.SilhouetteCentroidSpec graft.IvfQuantSpec graft.IvfAnnSpec graft.RerankHardNegSpec graft.MultimodalCodecSpec;d_*,s_*,m_phash_dedup,p_leak_split;dedup and vector'
+  'functions/(NativeKernel|CosineSimilarity|DecayedSum|HitCount|MinHashSig|NearestCells|PortableHash60|RepetitionStats|ShingleHashes|SimHashSig|BloomFilterBits)\.scala;graft.CosineSimilaritySpec graft.NearestCellsSpec graft.HitCountSpec graft.NativeExprPropertySpec graft.PortableHash60VarargsSpec graft.MinHashSigSpec graft.SimHashSigSpec graft.ShingleHashesSpec graft.RepetitionStatsSpec graft.PortableHash60Spec graft.BloomJoinSpec graft.Round6OpsSpec graft.NativeKernelSpec;t_quality,t_lang_id,t_repetition,d_dedup_ngram,d_dedup_minhash,d_dedup_simhash,d_corpus_prep,s_ann_brute,s_ann_ivf,s_ann_upsert,q_bloom_semi,q_bloom_anti,q_kmv,q_sketch,e_ewma;native expression'
   'graft/Tables\.scala;graft.TablesSchemaSpec graft.TimestampFlavorSpec graft.TestdataContractSpec graft.PlanAuditSpec;q_word_count,q_avg_by_key,q_grep,q1_agg,q3_join;table-loader'
 )
 
